@@ -407,9 +407,9 @@ object SparkEntry {
           ivf.assigned.cache().count()
         }),
         "serve" -> (() =>
-          HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
+          HybridSearch.search(index, stats, n, avgLen,
             "filter join scan vector", HybridSearch.Config(k = 5),
-            nProbe = 4).count()))
+            dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4)).count()))
     }),
     "q215_hybrid_hnsw" -> ((s, dir) => {
       GraftFunctions.register(s)
@@ -436,10 +436,10 @@ object SparkEntry {
           hs.hnsw.graph.count()
         }),
         "serve" -> (() =>
-          HybridSearch.searchHnsw(index, hs, stats, n, avgLen,
+          HybridSearch.search(index, stats, n, avgLen,
             "filter join scan vector",
-            HybridSearch.Config(k = 5, postings = Option(postings)))
-            .count()))
+            HybridSearch.Config(k = 5, postings = Option(postings)),
+            dense = HybridSearch.Dense.Hnsw(hs)).count()))
     }),
     "q356_bm25_postings" -> ((s, dir) => {
       GraftFunctions.register(s)
@@ -3859,8 +3859,8 @@ object SparkEntry {
       writeAux(ivf.assigned.select("id", "centroid"), dir, "q203_assign")
       writeAux(ivf.probeCells(qVec, 4).toDF("centroid"), dir, "q203_probes")
       writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q203_qvec")
-      HybridSearch.searchAnn(index, ivf, stats, n, avgLen, qText, cfg,
-          nProbe = 4)
+      HybridSearch.search(index, stats, n, avgLen, qText, cfg,
+          dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4))
         .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
     }),
 
@@ -4049,7 +4049,8 @@ object SparkEntry {
       writeAux(hs.hnsw.levels, dir, "q215_levels")
       writeAux(hs.hnsw.graph.select("layer", "id", "nbr"), dir, "q215_graph")
       writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q215_qvec")
-      HybridSearch.searchHnsw(index, hs, stats, n, avgLen, qText, cfg)
+      HybridSearch.search(index, stats, n, avgLen, qText, cfg,
+          dense = HybridSearch.Dense.Hnsw(hs))
         .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
     }),
 

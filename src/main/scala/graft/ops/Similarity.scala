@@ -1711,8 +1711,10 @@ object Similarity {
         // (h, id) struct ≡ the window's orderBy(md5, id) ranking), and
         // the ring pairs emit directly — O(B·deg) rows per bucket,
         // identical pair set. A degenerate vector distribution that
-        // floods one bucket hits this collect_list exactly as it hit
-        // the old single-task window partition — same hazard class.
+        // floods one bucket is a WORSE hazard here than it was for the
+        // old window: the window's sort could spill to disk, while
+        // collect_list buffers the whole bucket in one executor's
+        // memory.
         mem.withColumn("bucket", bUdf(col("vec")))
           .select(col("bucket"),
             struct(md5(col("id").cast("string")).as("h"),
@@ -1876,7 +1878,10 @@ object Similarity {
       * visited set. `hopsPerLayer` fixes how many greedy steps each
       * upper layer takes (classic HNSW iterates to a local optimum —
       * data-dependent; a fixed count keeps the plan static and the
-      * oracle unrollable, and acts as a recall dial like ef/hops). */
+      * oracle unrollable, and acts as a recall dial like ef/hops).
+      * Upper layers checkpoint once per layer, so the in-layer plan
+      * references the layer-entry frontier up to 2^`hopsPerLayer`
+      * times: plan size grows exponentially in `hopsPerLayer`. */
     def search(queryVec: Array[Float], k: Int, ef: Int = 16,
         hops: Int = 3, hopsPerLayer: Int = 2): DataFrame = {
       require(k >= 1 && ef >= 1 && hops >= 1 && hopsPerLayer >= 1,
@@ -1986,7 +1991,9 @@ object Similarity {
       * plan instead of a LIMIT. Hop/ef/descent parameters and
       * tie-breaks replicate [[search]] exactly, so a batch row equals
       * the single-query walk for the same vector (HnswSpec asserts
-      * it). Returns (queryIdCol, idCol, cos), top-k per query. */
+      * it). As in [[search]], the in-layer plan references the
+      * layer-entry frontier up to 2^`hopsPerLayer` times. Returns
+      * (queryIdCol, idCol, cos), top-k per query. */
     def searchBatch(queries: DataFrame, k: Int, ef: Int = 16,
         hops: Int = 3, hopsPerLayer: Int = 2,
         queryIdCol: String = "query_id",

@@ -19,16 +19,18 @@ object Skew {
     * [1, defaultParallelism]. The byte estimate is the optimizer's plan
     * statistic; a plan the optimizer cannot size reports "unknown =
     * huge", so the clamp lands on defaultParallelism — exactly the old
-    * fixed-count behavior. A constant partition count tuned for one
-    * machine wastes task launches on small inputs (the sf0.1 suite
-    * measured FASTER on 8 cores than 32 — pure per-task overhead on
-    * 32-way exchanges of kilobyte frames) and never exceeds the
+    * fixed-count behavior. A 0-byte statistic (an empty frame) is a
+    * real size, not the unknown sentinel: it gets one partition. A
+    * constant partition count tuned for one machine wastes task
+    * launches on small inputs (the sf0.1 suite measured FASTER on 8
+    * cores than 32 — pure per-task overhead on 32-way exchanges of
+    * kilobyte frames) and never exceeds the
     * cluster's parallelism on big ones; deriving from bytes scales both
     * directions without a config knob. */
   def sizedParallelism(df: DataFrame, bytesPerTask: Long = 2L << 20): Int = {
     val cap = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= 0 || bytes > BigInt(Long.MaxValue) / 2) cap
+    if (bytes > BigInt(Long.MaxValue) / 2) cap
     else math.max(1L, math.min(cap.toLong,
       (bytes.toLong + bytesPerTask - 1) / bytesPerTask)).toInt
   }

@@ -105,7 +105,6 @@ object HybridSearch {
       // null-typed literal: the non-empty branch's sum() is nullable,
       // so the empty frame must be too for schema equality
       .select(col(idCol), lit(null).cast("double").as("bm25_score")).limit(0)
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     index
       .select(col(idCol), size(col(tokensCol)).as("dl"),
         explode(col(tokensCol)).as("term"))
@@ -113,9 +112,8 @@ object HybridSearch {
       .groupBy(col(idCol), col("term"), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
       .groupBy(col(idCol))
       .agg(round(sum("term_score"), 6).as("bm25_score"))
       .orderBy(desc("bm25_score"), col(idCol))
@@ -140,14 +138,12 @@ object HybridSearch {
     if (terms.isEmpty) return postings
       .select(col("id").as(idCol),
         lit(null).cast("double").as("bm25_score")).limit(0)
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     postings
       .filter(col("term").isin(terms: _*))     // partition-prunable at scale
       .select(col("term"), col("id").as(idCol), col("tf"), col("dl"))
       .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
       .groupBy(col(idCol))
       .agg(round(sum("term_score"), 6).as("bm25_score"))
       .orderBy(desc("bm25_score"), col(idCol))
@@ -252,22 +248,19 @@ object HybridSearch {
     * lists as candidates while still scoring them for the handful of
     * docs the rare terms admit. Output is EXACTLY [[bm25TopKPostings]]
     * — the u6 bounds in [[maxScorePrune]] are conservative, so no
-    * true top-n doc (or boundary tie) is ever pruned. */
+    * true top-n doc (or boundary tie) is ever pruned.
+    *
+    * MaxScore is [[bm25TopKBlockMax]] with ONE block per term: the
+    * block bound equals the term bound, so an essential term's block
+    * survives iff `ub6 + (totalUb − ub6) = totalUb ≥ θ6`, which its
+    * essential flag already guarantees — the candidate set is exactly
+    * the essential terms' postings. */
   def bm25TopKMaxScore(postings: DataFrame, docStats: DataFrame,
       termBounds: DataFrame, corpusSize: Long, avgDocLen: Double,
-      queryTerms: Seq[String], n: Int, idCol: String = "id"): DataFrame = {
-    val terms = queryTerms.distinct
-    val (_, flags) = maxScorePrune(postings, docStats, termBounds,
-      corpusSize, avgDocLen, terms, n)
-    if (flags.isEmpty)
-      return bm25TopKPostings(postings, docStats, corpusSize, avgDocLen,
-        terms, n, idCol)
-    val essential = flags.collect { case (t, _, true) => t }
-    val candidates = postings.filter(col("term").isin(essential: _*))
-      .select(col("id")).distinct()
-    scoreCandidates(postings, docStats, corpusSize, avgDocLen, terms,
-      candidates, n, idCol)
-  }
+      queryTerms: Seq[String], n: Int, idCol: String = "id"): DataFrame =
+    bm25TopKBlockMax(postings, docStats,
+      termBounds.withColumn("block", lit(0L)), corpusSize, avgDocLen,
+      queryTerms, n, nBlocks = 1, idCol = idCol)
 
   /** The exact-scoring epilogue every pruned sparse path ends with:
     * full BM25 over all query terms, restricted to the admitted
@@ -275,15 +268,13 @@ object HybridSearch {
   private def scoreCandidates(postings: DataFrame, docStats: DataFrame,
       corpusSize: Long, avgDocLen: Double, terms: Seq[String],
       candidates: DataFrame, n: Int, idCol: String): DataFrame = {
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     postings
       .filter(col("term").isin(terms: _*))
       .join(candidates, Seq("id"), "left_semi")
       .select(col("term"), col("id").as(idCol), col("tf"), col("dl"))
       .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
       .groupBy(col(idCol))
       .agg(round(sum("term_score"), 6).as("bm25_score"))
       .orderBy(desc("bm25_score"), col(idCol))
@@ -617,8 +608,6 @@ object HybridSearch {
     // hoisted: the same distinct term set prunes both the corpus-token
     // explode and docStats — one aggregation, not two per plan
     val allTerms = qTerms.select("term").distinct()
-    val idfCol = log(lit(1.0) +
-      (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     // (term, id, tf, dl) rows for the union of all query terms: the
     // postings table serves them by term lookup (no corpus token scan);
     // the scan path explodes corpus tokens once
@@ -638,10 +627,8 @@ object HybridSearch {
       .join(broadcast(docStats.join(
         broadcast(allTerms), Seq("term"), "left_semi")),
         Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) +
-            lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
     val sparsePairs = termScores
       .join(broadcast(qTerms), Seq("term"))
       .groupBy(col("query_id"), col("id"))
@@ -671,72 +658,83 @@ object HybridSearch {
       .orderBy(col("query_id"), desc("rrf_score"), col("id"))
   }
 
+  /** Where the hybrid query's dense prefetch comes from — the one thing
+    * the serving tiers differ in. Each case returns the (id,
+    * dense_score) top-`n` for one query vector; the BM25 branch and
+    * RRF fusion in [[search]] are shared by all of them. */
+  sealed trait Dense {
+    def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame
+  }
+
+  object Dense {
+    /** Exact cosine scan of every vector ([[denseTopK]]). */
+    case object Exact extends Dense {
+      def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
+        denseTopK(index, qVec, n)
+    }
+
+    /** A prebuilt [[graft.ops.Similarity.IvfIndex]] over the chunk
+      * index's dense vectors — the 100 TB serving path: the exact scan
+      * reads every vector per request; this probes `nProbe` centroid
+      * cells and reranks exactly within them (nProbe/nCentroids of the
+      * corpus when the index is
+      * [[graft.ops.Similarity.IvfIndex.writePartitioned]]). Results
+      * differ from [[Exact]] only when a true dense neighbor lies
+      * outside the probed cells — the recall/cost dial
+      * [[graft.ops.Similarity.RandomHyperplaneIndex.recallAudit]]'s
+      * family of audits measures before a deployment trusts it. */
+    final case class Ivf(ivf: graft.ops.Similarity.IvfIndex, nProbe: Int = 4)
+        extends Dense {
+      def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
+        ivf.query(qVec, n, nProbe).select(col("id"), col("cos").as("dense_score"))
+    }
+
+    /** [[Ivf]] served from int8-QUANTIZED codes
+      * ([[graft.ops.Similarity.IvfIndex.queryQuantized]]) — the
+      * memory/bandwidth tier: stage A ranks the probed cells by
+      * pure-integer code dot products (4× less scan bandwidth than
+      * floats), stage B restores exact cosines for the top `rerankN`
+      * survivors only, so everything the fusion sees is an exact score.
+      * `rerankN` is the recall/bandwidth dial q374 measures; it is
+      * floored at the prefetch size so the branch can always fill its
+      * quota. */
+    final case class Int8(ivf: graft.ops.Similarity.IvfIndex,
+        nProbe: Int = 4, rerankN: Int = 50) extends Dense {
+      def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
+        ivf.queryQuantized(qVec, n, nProbe, rerank = math.max(rerankN, n))
+          .select(col("id"), col("cos").as("dense_score"))
+    }
+
+    /** A prebuilt HNSW graph walk ([[HnswServing]],
+      * [[graft.ops.Similarity.HnswIndex.search]]) — the graph member of
+      * the ANN tier next to [[Ivf]]: per request the walk touches
+      * O(ef · hops · deg) graph rows instead of scanning the corpus (or
+      * IVF's nProbe cells). `ef`/`hops` are the recall/cost dials; hits
+      * route back from the graph's surrogate keys through `idMap`. */
+    final case class Hnsw(hs: HnswServing, ef: Int = 16, hops: Int = 3)
+        extends Dense {
+      def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
+        hs.hnsw.search(qVec, n, ef = ef, hops = hops)
+          .join(hs.idMap, "hid")
+          .select(col("id"), col("cos").as("dense_score"))
+    }
+  }
+
   /** Full §3.2 query lifecycle: embed query (V2, with BGE-style prefix)
     * → dense ∪ sparse prefetch (5×k each) → RRF → top-k, joined back to
-    * payload columns. */
+    * payload columns. `dense` picks the dense prefetch's tier (exact
+    * scan by default); the sparse branch follows `cfg`'s routing. */
   def search(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, query: String, cfg: Config = Config(),
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
+      embedder: Embedder = HashingEmbedder.default,
+      dense: Dense = Dense.Exact): DataFrame = {
     val prefetch = cfg.k * cfg.prefetchMultiplier
     val qVec = embedder.embedQuery(query)
     val qTerms = Bm25.tokenize(query)
-    val dense = denseTopK(index, qVec, prefetch)
+    val denseHits = dense.prefetch(index, qVec, prefetch)
     val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
+    val fused = rrfFuse(denseHits, sparse, cfg)
     // payload projection (P9): hydrate the top-k ids only
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** [[search]] with the dense prefetch served by a prebuilt
-    * [[graft.ops.Similarity.IvfIndex]] over the chunk index's dense
-    * vectors — the 100 TB serving path: the exact dense branch scans
-    * every vector per request; this probes `nProbe` centroid cells and
-    * reranks exactly within them (nProbe/nCentroids of the corpus when
-    * the index is [[graft.ops.Similarity.IvfIndex.writePartitioned]]).
-    * BM25 branch and RRF fusion unchanged, so results differ from
-    * [[search]] only when a true dense neighbor lies outside the probed
-    * cells — the recall/cost dial [[graft.ops.Similarity
-    * .RandomHyperplaneIndex.recallAudit]]'s family of audits measures
-    * before a deployment trusts it. */
-  def searchAnn(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
-      docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      query: String, cfg: Config = Config(), nProbe: Int = 4,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = ivf.query(qVec, prefetch, nProbe)
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** [[searchAnn]] with the dense branch served from int8-QUANTIZED
-    * codes ([[graft.ops.Similarity.IvfIndex.queryQuantized]]) — the
-    * memory/bandwidth tier of the ANN serving matrix: stage A ranks
-    * the probed cells by pure-integer code dot products (4× less scan
-    * bandwidth than floats), stage B restores exact cosines for the
-    * top `rerankN` survivors only, so everything the fusion sees is an
-    * exact score. `rerankN` is the recall/bandwidth dial q374
-    * measures; it is floored at the prefetch size so the dense branch
-    * can always fill its quota. BM25 branch and RRF fusion
-    * unchanged. */
-  def searchAnnQuantized(index: DataFrame,
-      ivf: graft.ops.Similarity.IvfIndex, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, query: String,
-      cfg: Config = Config(), nProbe: Int = 4, rerankN: Int = 50,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = ivf.queryQuantized(qVec, prefetch, nProbe,
-        rerank = math.max(rerankN, prefetch))
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
     fused.join(index, Seq("id"), "left")
       .orderBy(desc("rrf_score"), col("id"))
   }
@@ -770,38 +768,15 @@ object HybridSearch {
     HnswServing(hnsw, mapped.select("hid", "id"))
   }
 
-  /** [[search]] with the dense prefetch served by a prebuilt HNSW
-    * graph walk ([[graft.ops.Similarity.HnswIndex.search]]) — the
-    * graph member of the ANN serving tier next to [[searchAnn]]'s IVF:
-    * per request the walk touches O(ef · hops · deg) graph rows
-    * instead of scanning the corpus (and instead of IVF's nProbe
-    * cells). `ef`/`hops` are the recall/cost dials; BM25 branch and
-    * RRF fusion unchanged. */
-  def searchHnsw(index: DataFrame, hs: HnswServing, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, query: String,
-      cfg: Config = Config(), ef: Int = 16, hops: Int = 3,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = hs.hnsw.search(qVec, prefetch, ef = ef, hops = hops)
-      .join(hs.idMap, "hid")
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** BATCHED [[searchHnsw]] — the multi-query graph walk
+  /** BATCHED [[search]] over [[Dense.Hnsw]] — the multi-query graph walk
     * ([[graft.ops.Similarity.HnswIndex.searchBatch]]: every hop one
     * (query_id, id)-keyed frontier⋈graph join for the whole query
     * table) feeding [[searchAll]]'s batched BM25 branch and per-query
     * RRF fusion. This closes the serving matrix: batched brute
     * ([[searchAll]]), batched IVF (searchAllAnn family), and now
     * batched HNSW — a thousand queries pay one plan's worth of Spark
-    * jobs instead of a thousand walks. Per-query results equal
-    * [[searchHnsw]] for the same query string (HybridSearchSpec
+    * jobs instead of a thousand walks. Per-query results equal the
+    * single [[Dense.Hnsw]] search for the same query string (HybridSearchSpec
     * asserts it); ordered (query_id, rrf_score desc, id). */
   def searchAllHnsw(index: DataFrame, hs: HnswServing,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,

@@ -177,6 +177,18 @@ object HttpApi {
       "court" -> r.court, "date_filed" -> r.dateFiled,
       "judges" -> r.judges, "snippet" -> r.snippet))
 
+  /** The response envelope every single-search mode shares. */
+  private def searchJson(resp: Serve.QueryResponse,
+      searchType: String): (Int, String) =
+    (200, s"""{"query":${str(resp.question)},"results":[${resultsJson(resp).mkString(",")}],""" +
+      s""""search_type":"$searchType","processing_time":${resp.processingTimeSec},""" +
+      s""""documents_found":${resp.results.size}}""")
+
+  /** A positional mode refused by an engine built without one. */
+  private def noPositionalIndex(mode: String): (Int, String) =
+    (400, err("this engine was built without a positional " +
+      s"index; start it with posPostings or posStore to serve \"$mode\""))
+
   private def searchEndpoint(engine: Engine, body: Option[JsonNode],
       queryField: String): (Int, String) = {
     // "phrase" mode on /search: positional-index phrase matching — a
@@ -187,16 +199,9 @@ object HttpApi {
         val k = intField(body, "limit").getOrElse(engine.defaultK)
         return (
           if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"phrase\""))
-          else {
-            val resp = Serve.queryPhrase(engine.index, engine.docStats,
-              p, k, engine.posPostings, engine.posStore)
-            (200, s"""{"query":${str(p)},"results":[${resultsJson(resp).mkString(",")}],""" +
-              s""""search_type":"phrase","processing_time":${resp.processingTimeSec},""" +
-              s""""documents_found":${resp.results.size}}""")
-          })
+            noPositionalIndex("phrase")
+          else searchJson(Serve.queryPhrase(engine.index, engine.docStats,
+            p, k, engine.posPostings, engine.posStore), "phrase"))
       case _ => ()
     }
     // "near" mode: ordered proximity over the positional index —
@@ -208,22 +213,15 @@ object HttpApi {
           .getOrElse(math.max(terms.length - 1, 0))
         return (
           if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"near\""))
+            noPositionalIndex("near")
           else if (terms.isEmpty)
             (400, err("'near' must be a non-empty array of terms"))
           else if (span < terms.length - 1)
             (400, err(s"max_span $span cannot fit ${terms.length} " +
               "ordered terms"))
-          else {
-            val resp = Serve.queryProximity(engine.index, engine.docStats,
-              terms, span, k, engine.posPostings, engine.posStore)
-            (200, s"""{"query":${str(resp.question)},""" +
-              s""""results":[${resultsJson(resp).mkString(",")}],""" +
-              s""""search_type":"proximity","processing_time":${resp.processingTimeSec},""" +
-              s""""documents_found":${resp.results.size}}""")
-          })
+          else searchJson(Serve.queryProximity(engine.index,
+            engine.docStats, terms, span, k, engine.posPostings,
+            engine.posStore), "proximity"))
       case _ => ()
     }
     field(body, queryField) match {
@@ -306,62 +304,42 @@ object HttpApi {
               else if (ann.contains("hnsw") && (ef < 1 || hops < 1))
                 (400, err(s"ef $ef and hops $hops must be >= 1"))
               else {
-                val resp = (ann, rerank) match {
+                val dense = (ann, rerank) match {
                   case (Some("ivf"), Some("int8")) =>
-                    Serve.queryAnnQuantized(engine.index, engine.ivf.get,
-                      engine.docStats, engine.corpusSize, engine.avgDocLen,
-                      q, k = k, nProbe = nProbe, rerankN = rerankN,
-                      rrfScoreThreshold = threshold,
-                      postings = engine.postings,
-                      termBounds = engine.termBounds,
-                      blockBounds = engine.blockBounds)
-                  case (Some("ivf"), _) => Serve.queryAnn(engine.index,
-                    engine.ivf.get, engine.docStats, engine.corpusSize,
-                    engine.avgDocLen, q, k = k, nProbe = nProbe,
-                    rrfScoreThreshold = threshold,
-                    postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                  case (Some("hnsw"), _) => Serve.queryHnsw(engine.index,
-                    engine.hnsw.get, engine.docStats, engine.corpusSize,
-                    engine.avgDocLen, q, k = k, ef = ef, hops = hops,
-                    rrfScoreThreshold = threshold,
-                    postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                  case (_, Some("maxsim")) =>
-                    Serve.queryReranked(engine.index, engine.docStats,
+                    HybridSearch.Dense.Int8(engine.ivf.get, nProbe, rerankN)
+                  case (Some("ivf"), _) => HybridSearch.Dense.Ivf(engine.ivf.get, nProbe)
+                  case (Some("hnsw"), _) => HybridSearch.Dense.Hnsw(engine.hnsw.get, ef, hops)
+                  case _ => HybridSearch.Dense.Exact
+                }
+                val (resp, searchType) =
+                  if (rerank.contains("maxsim"))
+                    (Serve.queryReranked(engine.index, engine.docStats,
                       engine.corpusSize, engine.avgDocLen, q, k = k,
                       rrfScoreThreshold = threshold,
                       postings = engine.postings,
                       termBounds = engine.termBounds,
-                      blockBounds = engine.blockBounds)
-                  case _ =>
-                    if (diversify) Serve.queryDiversified(engine.index,
-                      engine.docStats, engine.corpusSize, engine.avgDocLen,
-                      q, k = k, lambda = lambda,
-                      rrfScoreThreshold = threshold,
+                      blockBounds = engine.blockBounds), "hybrid_rrf_maxsim")
+                  else if (diversify)
+                    (Serve.queryDiversified(engine.index, engine.docStats,
+                      engine.corpusSize, engine.avgDocLen, q, k = k,
+                      lambda = lambda, rrfScoreThreshold = threshold,
                       postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                    else Serve.query(engine.index, engine.docStats,
+                      termBounds = engine.termBounds,
+                      blockBounds = engine.blockBounds), "hybrid_rrf_mmr")
+                  else
+                    (Serve.query(engine.index, engine.docStats,
                       engine.corpusSize, engine.avgDocLen, q, k = k,
                       rrfScoreThreshold = threshold,
                       postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                }
-                val searchType = (ann, rerank) match {
-                  case (Some("ivf"), Some("int8")) => "hybrid_rrf_ivf_int8"
-                  case (Some("ivf"), _) => "hybrid_rrf_ivf"
-                  case (Some("hnsw"), _) => "hybrid_rrf_hnsw"
-                  case (_, Some("maxsim")) => "hybrid_rrf_maxsim"
-                  case _ =>
-                    if (diversify) "hybrid_rrf_mmr" else "hybrid_rrf"
-                }
-                (200, s"""{"query":${str(q)},"results":[${resultsJson(resp).mkString(",")}],""" +
-                  s""""search_type":"$searchType","processing_time":${resp.processingTimeSec},""" +
-                  s""""documents_found":${resp.results.size}}""")
+                      termBounds = engine.termBounds,
+                      blockBounds = engine.blockBounds, dense = dense),
+                      dense match {
+                        case _: HybridSearch.Dense.Int8 => "hybrid_rrf_ivf_int8"
+                        case _: HybridSearch.Dense.Ivf => "hybrid_rrf_ivf"
+                        case _: HybridSearch.Dense.Hnsw => "hybrid_rrf_hnsw"
+                        case HybridSearch.Dense.Exact => "hybrid_rrf"
+                      })
+                searchJson(resp, searchType)
               }
           }
         }
@@ -400,9 +378,7 @@ object HttpApi {
             (400, err(s"'phrases' exceeds the batch cap of $maxBatch; " +
               "chunk the request"))
           else if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"phrases\""))
+            noPositionalIndex("phrases")
           else render(Serve.queryPhraseBatch(engine.index, ps, k,
             engine.posPostings, engine.posStore), "phrase"))
       case None => ()

@@ -117,97 +117,88 @@ object Serve {
     * (quirk Q6) collapse to one function. Payload columns present on the
     * index (`case_name`, `court`, `date_filed`, `judges` — e.g. from the
     * IngestMain pipeline) hydrate the response; absent ones take the
-    * reference's defaults (`app.py:345-358`). */
+    * reference's defaults (`app.py:345-358`). `dense` picks the dense
+    * prefetch's tier ([[HybridSearch.Dense]]: exact scan, IVF, int8 or
+    * HNSW); the response shape is the same for all of them. */
   def query(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, question: String, k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
+      blockBounds: Option[DataFrame] = None,
+      dense: HybridSearch.Dense = HybridSearch.Dense.Exact): QueryResponse = {
     val t0 = System.nanoTime()
     val hits = HybridSearch.search(index, docStats, corpusSize, avgDocLen,
       question, HybridSearch.Config(k = k,
         rrfScoreThreshold = rrfScoreThreshold, postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds))
+        blockBounds = blockBounds), dense = dense)
     collectResponse(hits, question, t0)                                 // F13
   }
 
-  /** Shared top-k → [[QueryResponse]] epilogue (payload hydration,
-    * result mapping, F13 timing) — ONE definition for the plain, IVF,
-    * and HNSW query paths, so the response projection cannot drift
-    * between search modes. */
-  private def collectResponse(hits: DataFrame, question: String,
-      t0: Long): QueryResponse = {
+  private val payloadCols = Seq("case_name", "court", "date_filed", "judges")
+
+  /** Payload hydration shared by every response path: collects the
+    * hits' `lead` columns, id, RRF score, text, `extra` columns and
+    * whichever payload columns the index carries, plus the column set
+    * [[toResult]] defaults against — ONE projection, so the response
+    * shape cannot drift between search modes. */
+  private def hydrate(hits: DataFrame, lead: Seq[String] = Nil,
+      extra: Seq[String] = Nil): (Array[Row], Set[String]) = {
     val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val results = hits.select(("id" +: "rrf_score" +: "chunk_text" +: payloadCols)
-        .map(col): _*).collect().toSeq.map(toResult(_, present))
-    QueryResponse(question, results, (System.nanoTime() - t0) / 1e9)
+    val cols = lead ++ Seq("id", "rrf_score", "chunk_text") ++ extra ++
+      payloadCols.filter(present)
+    (hits.select(cols.map(col): _*).collect(), present)
   }
 
-  /** [[query]] with the dense branch served by a prebuilt IVF index
-    * ([[graft.search.HybridSearch.searchAnn]]) — the per-request path
-    * that scans nProbe cells instead of the corpus. Same response
-    * shape; `search_type` surfaces the difference to the caller. */
+  /** Shared top-k → [[QueryResponse]] epilogue (payload hydration,
+    * result mapping, F13 timing). */
+  private def collectResponse(hits: DataFrame, question: String,
+      t0: Long): QueryResponse = {
+    val (rows, present) = hydrate(hits)
+    QueryResponse(question, rows.toSeq.map(toResult(_, present)),
+      (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** [[query]] over [[HybridSearch.Dense.Ivf]] — the per-request path
+    * that scans nProbe cells instead of the corpus. */
   def queryAnn(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
       question: String, k: Int = 3, nProbe: Int = 4,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchAnn(index, ivf, docStats, corpusSize,
-      avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      nProbe = nProbe)
-    collectResponse(hits, question, t0)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      HybridSearch.Dense.Ivf(ivf, nProbe))
 
-  /** [[query]] with the dense branch served by a prebuilt HNSW graph
-    * walk ([[graft.search.HybridSearch.searchHnsw]]) — the graph member
-    * of the ANN serving tier next to [[queryAnn]]'s IVF. Same response
-    * shape; `search_type` surfaces the difference to the caller. */
+  /** [[query]] over [[HybridSearch.Dense.Hnsw]] — the graph member of
+    * the ANN serving tier next to [[queryAnn]]'s IVF. */
   def queryHnsw(index: DataFrame, hs: HybridSearch.HnswServing,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
       question: String, k: Int = 3, ef: Int = 16, hops: Int = 3,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchHnsw(index, hs, docStats, corpusSize,
-      avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      ef = ef, hops = hops)
-    collectResponse(hits, question, t0)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      HybridSearch.Dense.Hnsw(hs, ef, hops))
 
-  /** [[queryAnn]] with the dense branch served from int8-quantized
-    * codes ([[HybridSearch.searchAnnQuantized]]) — the compression
-    * tier of the serving matrix. `rerankN` is the q374 recall/
-    * bandwidth dial: how many integer-dot survivors get their exact
-    * float cosine back before fusion. */
+  /** [[query]] over [[HybridSearch.Dense.Int8]] — the compression tier
+    * of the serving matrix. `rerankN` is the q374 recall/bandwidth
+    * dial: how many integer-dot survivors get their exact float cosine
+    * back before fusion. */
   def queryAnnQuantized(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
       question: String, k: Int = 3, nProbe: Int = 4, rerankN: Int = 50,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchAnnQuantized(index, ivf, docStats,
-      corpusSize, avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      nProbe = nProbe, rerankN = rerankN)
-    collectResponse(hits, question, t0)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      HybridSearch.Dense.Int8(ivf, nProbe, rerankN))
 
   /** [[query]] with a ColBERT-style MaxSim RERANK epilogue
     * ([[graft.search.LateInteraction.maxsimRerank]]): the hybrid
@@ -235,10 +226,7 @@ object Serve {
     val qTerms = graft.text.Bm25.tokenize(question)
       .distinct.filter(_.nonEmpty)
     if (qTerms.isEmpty) return collectResponse(hits.limit(k), question, t0)
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("id" +: "rrf_score" +: "chunk_text" +:
-        payloadCols).map(col): _*).collect().toSeq
+    val (rows, present) = hydrate(hits)
     if (rows.isEmpty)
       return QueryResponse(question, Seq.empty, (System.nanoTime() - t0) / 1e9)
     val order = graft.search.LateInteraction
@@ -265,19 +253,8 @@ object Serve {
       "queryPhrase needs a positional postings frame or a store path")
     val t0 = System.nanoTime()
     val terms = graft.text.Bm25.tokenize(phrase).filter(_.nonEmpty)
-    val spark = index.sparkSession
-    val pp = store match {
-      case Some(path) => graft.index.IndexWriter
-        .readPositionsForTerms(spark, path, terms)
-      case None => posPostings.get
-    }
-    val hits = HybridSearch.phraseMatches(pp, docStats, terms)
-      .groupBy("id").agg(count(lit(1)).cast("double").as("rrf_score"))
-      .orderBy(desc("rrf_score"), col("id"))
-      .limit(k)
-      .join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-    collectResponse(hits, phrase, t0)
+    positionalResponse(index, terms, k, posPostings, store, phrase, t0)(
+      HybridSearch.phraseMatches(_, docStats, terms))
   }
 
   /** ORDERED-PROXIMITY search served from the positional index
@@ -292,19 +269,31 @@ object Serve {
     require(posPostings.nonEmpty || store.nonEmpty,
       "queryProximity needs a positional postings frame or a store path")
     val t0 = System.nanoTime()
-    val spark = index.sparkSession
+    positionalResponse(index, terms, k, posPostings, store,
+      terms.mkString(" "), t0)(
+      HybridSearch.proximityMatches(_, docStats, terms, maxSpan))
+  }
+
+  /** The positional-index request body shared by [[queryPhrase]] and
+    * [[queryProximity]]: read the positional postings (the in-memory
+    * frame, or the store's buckets for `terms` only), rank documents by
+    * the count of `matches` rows (ties → id), top-k, hydrate. */
+  private def positionalResponse(index: DataFrame, terms: Seq[String],
+      k: Int, posPostings: Option[DataFrame], store: Option[String],
+      question: String, t0: Long)(
+      matches: DataFrame => DataFrame): QueryResponse = {
     val pp = store match {
       case Some(path) => graft.index.IndexWriter
-        .readPositionsForTerms(spark, path, terms)
+        .readPositionsForTerms(index.sparkSession, path, terms)
       case None => posPostings.get
     }
-    val hits = HybridSearch.proximityMatches(pp, docStats, terms, maxSpan)
+    val hits = matches(pp)
       .groupBy("id").agg(count(lit(1)).cast("double").as("rrf_score"))
       .orderBy(desc("rrf_score"), col("id"))
       .limit(k)
       .join(index, Seq("id"), "left")
       .orderBy(desc("rrf_score"), col("id"))
-    collectResponse(hits, terms.mkString(" "), t0)
+    collectResponse(hits, question, t0)
   }
 
   /** [[query]] with an MMR diversification pass (no reference analog —
@@ -329,14 +318,11 @@ object Serve {
       question, HybridSearch.Config(k = k * candMultiplier,
         rrfScoreThreshold = rrfScoreThreshold, postings = postings, termBounds = termBounds,
         blockBounds = blockBounds))
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("id" +: "rrf_score" +: "chunk_text" +: "dense_vec" +:
-        payloadCols).map(col): _*).collect().toSeq
+    val (rows, present) = hydrate(hits, extra = Seq("dense_vec"))
     if (rows.isEmpty)
       return QueryResponse(question, Seq.empty, (System.nanoTime() - t0) / 1e9)
     val maxRrf = rows.map(_.getAs[Double]("rrf_score")).max
-    val cands = rows.map { r =>
+    val cands = rows.toSeq.map { r =>
       (r.getAs[String]("id"), r.getAs[Double]("rrf_score") / maxRrf,
         Option(r.getAs[scala.collection.Seq[Float]]("dense_vec"))
           .map(_.toArray).getOrElse(Array.empty[Float]))
@@ -364,15 +350,30 @@ object Serve {
       snippet = if (text.length > 200) text.take(200) + "..." else text)
   }
 
+  /** The batched epilogue: hydrate a (query_id, …) hit frame in one
+    * collect and answer each question `i` with the rows `pick(i, rows of
+    * i)` selects, in encounter order. Every response carries the SHARED
+    * wall-clock (one plan ran; attributing slices per question would be
+    * fiction). */
+  private def batchResponses(hits: DataFrame, questions: Seq[String],
+      t0: Long)(pick: (Long, Seq[Row]) => Seq[Row]): Seq[QueryResponse] = {
+    val (rows, present) = hydrate(hits, lead = Seq("query_id"))
+    // groupBy on the collected rows preserves encounter order per group
+    val byQuery = rows.toSeq.groupBy(_.getAs[Long]("query_id"))
+    val sec = (System.nanoTime() - t0) / 1e9                           // F13
+    questions.zipWithIndex.map { case (q, i) =>
+      val mine = byQuery.getOrElse(i.toLong, Seq.empty)
+      QueryResponse(q, pick(i.toLong, mine).map(toResult(_, present)), sec)
+    }
+  }
+
   /** POST /search/batch — N questions through ONE Spark plan
     * ([[HybridSearch.searchAll]], the q154-verified shape) instead of N
     * sequential [[query]] calls. The corpus is scanned and scored once
     * for the whole batch (queries broadcast; one shuffle keyed by
     * query_id), so serving cost stops scaling with batch size. Result
-    * rows collect in one action — bounded at k × questions — and each
-    * response carries the SHARED wall-clock (one plan ran; attributing
-    * slices per question would be fiction). Per-question hydration is
-    * [[toResult]], identical to the single-query endpoint. */
+    * rows collect in one action — bounded at k × questions. Per-question
+    * hydration is [[toResult]], identical to the single-query endpoint. */
   def queryBatch(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, questions: Seq[String], k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
@@ -389,19 +390,8 @@ object Serve {
       qdf, HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
         postings = postings, termBounds = termBounds,
         blockBounds = blockBounds))
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +: "chunk_text" +:
-        payloadCols).map(col): _*).collect()
-    // searchAll orders (query_id, rrf_score desc, id); groupBy on the
-    // collected array preserves that encounter order within each group
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9                           // F13
-    questions.zipWithIndex.map { case (q, i) =>
-      val rs = byQuery.getOrElse(i.toLong, Array.empty[Row])
-        .toSeq.map(toResult(_, present))
-      QueryResponse(q, rs, sec)
-    }
+    // searchAll orders (query_id, rrf_score desc, id)
+    batchResponses(hits, questions, t0)((_, mine) => mine)
   }
 
   /** BATCHED [[queryPhrase]] — N phrases through ONE plan
@@ -439,19 +429,8 @@ object Serve {
         .agg(count(lit(1)).cast("double").as("rrf_score")),
       Seq("query_id"), Seq(("rrf_score", false), ("id", true)), k)
     val hits = ranked.join(index, Seq("id"), "left")
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges")
-      .filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +:
-        "chunk_text" +: payloadCols).map(col): _*).collect()
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9
-    phrases.zipWithIndex.map { case (p, qi) =>
-      val rs = byQuery.getOrElse(qi.toLong, Array.empty[Row]).toSeq
-        .sortBy(r => (-r.getAs[Double]("rrf_score"), r.getAs[String]("id")))
-        .map(toResult(_, present))
-      QueryResponse(p, rs, sec)
-    }
+    batchResponses(hits, phrases, t0)((_, mine) => mine
+      .sortBy(r => (-r.getAs[Double]("rrf_score"), r.getAs[String]("id"))))
   }
 
   /** BATCHED [[queryReranked]] — the whole batch's hybrid prefetch in
@@ -490,20 +469,12 @@ object Serve {
       .select("query_id", "id")
       .as[(Long, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges")
-      .filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +:
-        "chunk_text" +: payloadCols).map(col): _*).collect()
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9
-    questions.zipWithIndex.map { case (q, i) =>
-      val mine = byQuery.getOrElse(i.toLong, Array.empty[Row])
+    batchResponses(hits, questions, t0) { (i, mine) =>
       val byId = mine.map(r => r.getAs[String]("id") -> r).toMap
-      val ids = order.get(i.toLong).filter(_.nonEmpty)
+      order.get(i).filter(_.nonEmpty)
         // tokenless query (or no scored candidates): hybrid top-k order
-        .getOrElse(mine.toSeq.map(_.getAs[String]("id")).take(k))
-      QueryResponse(q, ids.flatMap(byId.get).map(toResult(_, present)), sec)
+        .getOrElse(mine.map(_.getAs[String]("id")).take(k))
+        .flatMap(byId.get)
     }
   }
 

@@ -31,6 +31,14 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
       plain.groupBy("grp").count().as[(String, Long)].collect().toMap)
   }
 
+  test("sizedParallelism: a 0-byte statistic gets one partition, not the " +
+      "unknown-size cap") {
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes == 0,
+      "precondition: the optimizer sizes an empty local relation at 0 bytes")
+    assert(Skew.sizedParallelism(empty) == 1)
+  }
+
   test("joinFanoutAudit: contributions, total, shares, one-sided keys") {
     // key 1: 3×2=6, key 2: 1×4=4, key 3 left-only: 0, key 4 right-only: 0
     val left = Seq(1L, 1L, 1L, 2L, 3L).toDF("k")

@@ -521,7 +521,8 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
     val batched = HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen,
       queries, cfg)
     val loop = queryTexts.zipWithIndex.map { case (q, i) =>
-      HybridSearch.searchHnsw(index, hs, stats, n, avgLen, q, cfg)
+      HybridSearch.search(index, stats, n, avgLen, q, cfg,
+          dense = HybridSearch.Dense.Hnsw(hs))
         .select(lit(i.toLong).as("query_id"), col("id"),
           col("rrf_score"), col("dense_score"), col("bm25_score"))
     }.reduce(_ unionByName _)
@@ -540,17 +541,70 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
     val exact = HybridSearch.search(index, stats, n, avgLen,
         "habeas corpus", cfg)
       .select("id", "rrf_score").as[(String, Double)].collect().toSeq
-    val allCells = HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
-        "habeas corpus", cfg, nProbe = 2)
+    val allCells = HybridSearch.search(index, stats, n, avgLen,
+        "habeas corpus", cfg, dense = HybridSearch.Dense.Ivf(ivf, nProbe = 2))
       .select("id", "rrf_score").as[(String, Double)].collect().toSeq
     assert(allCells == exact,
       "probing every cell makes the dense branch the exact scan")
-    val pruned = HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
-        "habeas corpus", cfg, nProbe = 1)
+    val pruned = HybridSearch.search(index, stats, n, avgLen,
+        "habeas corpus", cfg, dense = HybridSearch.Dense.Ivf(ivf, nProbe = 1))
       .select("id").as[String].collect()
     assert(pruned.nonEmpty && pruned.head == "d1",
       "the BM25 branch keeps the relevant doc on top even when the " +
         "dense probe misses cells")
+  }
+
+  // 24 docs: more than a k = 4 prefetch (20 rows), so the int8 dials
+  // bind instead of the corpus size
+  private lazy val wide = {
+    val words = Seq("habeas", "corpus", "contract", "grain", "patent",
+      "vehicle", "search")
+    (0 until 24).map { i =>
+      (s"w$i", s"${words(i % 7)} ${words(i * 3 % 7)} ${words(i / 3 % 7)} filler$i")
+    }.toDF("id", "chunk_text")
+      .withColumn("dense_vec", GraftFunctions.embedText($"chunk_text"))
+      .withColumn("tokens", GraftFunctions.bm25Tokenize($"chunk_text"))
+  }
+  private lazy val wideIvf = new graft.ops.Similarity.IvfIndex(wide,
+    nCentroids = 3, vecCol = "dense_vec", idCol = "id")
+  private lazy val wideStats = graft.index.IndexWriter.docFrequencies(wide)
+  private lazy val wideAvgLen =
+    wide.select(avg(size($"tokens"))).head().getDouble(0)
+
+  test("int8 dense tier with every cell probed and rerankN >= the corpus " +
+      "equals the exact-dense search row for row") {
+    val nn = wide.count()
+    val allCells = wideIvf.clusterCenters.length
+    val int8 = HybridSearch.Dense.Int8(wideIvf, nProbe = allCells,
+      rerankN = nn.toInt)
+    val q = "habeas corpus contract"
+    val qVec = HashingEmbedder.default.embedQuery(q)
+    def prows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "dense_score").as[(String, Double)].collect().toSeq
+    assert(prows(int8.prefetch(wide, qVec, 20)) ==
+      prows(HybridSearch.Dense.Exact.prefetch(wide, qVec, 20)))
+    val cols = Seq("id", "rrf_score", "dense_score", "bm25_score")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect()
+        .map(r => (r.getString(0), r.getDouble(1),
+          Option(r.get(2)), Option(r.get(3)))).toSeq
+    val cfg = HybridSearch.Config(k = 4)
+    val exact = rows(HybridSearch.search(wide, wideStats, nn, wideAvgLen, q, cfg))
+    assert(exact.size == 4)
+    assert(rows(HybridSearch.search(wide, wideStats, nn, wideAvgLen, q, cfg,
+      dense = int8)) == exact)
+  }
+
+  test("int8 rerankN = 1 is floored at the prefetch size: the dense " +
+      "branch still fills its prefetch") {
+    val nn = wide.count()
+    val int8 = HybridSearch.Dense.Int8(wideIvf,
+      nProbe = wideIvf.clusterCenters.length, rerankN = 1)
+    val q = "habeas corpus contract"
+    val pre = int8.prefetch(wide, HashingEmbedder.default.embedQuery(q), 20)
+    assert(pre.count() == 20)
+    assert(HybridSearch.search(wide, wideStats, nn, wideAvgLen, q,
+      HybridSearch.Config(k = 4), dense = int8).count() == 4)
   }
 
   test("rrf score threshold can empty the result (reference early-return path)") {
