@@ -63,81 +63,43 @@ object Bench {
     // window is billed to a query while keeping the suite one JSON line.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val baseline = loadBaseline()
-    val phased = SparkEntry.benchPhases
 
+    // Every query is timed on its checked body. A body that marks
+    // phases ([[Phase]]) also yields `name:phase` records, plus
+    // `name:output` for the rest of the run's wall time, so a
+    // regression in one eager step is not hidden by the headline.
     def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        runs: Int, tag: String = ""): (Double, Long, Boolean) = {
+        runs: Int, tag: String = "")
+        : (Double, Long, Boolean, Seq[(String, Double)]) = {
       val secs = (1 to math.max(runs, 1)).map { _ =>
         val t0 = System.nanoTime()
-        val n = try fn(spark, sfDir).count() catch {
+        val (n, marks) = try Phase.record(fn(spark, sfDir).count()) catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -1L
+            (-1L, Nil)
         }
         val sec = (System.nanoTime() - t0) / 1e9
         // queries are independent: drop any cache/persist the query built
         // so later queries aren't taxed by leaked storage + cleaner work
         spark.catalog.clearCache()
-        (sec, n)
+        (sec, n, phaseRecords(sec, marks))
       }
       // Prefer the fastest SUCCESSFUL sample: a crash can be fast (fail at
       // plan time) and min-over-all would let it mask a succeeding-but-slow
       // repeat, so an intermittent failure would never reach `failed`.
       val okSamples = secs.filter(_._2 >= 0)
-      val (best, rows) =
+      val (best, rows, _) =
         if (okSamples.nonEmpty) okSamples.minBy(_._1) else secs.minBy(_._1)
       val flaky = okSamples.nonEmpty && okSamples.size < secs.size
+      val phases = okSamples.flatMap(_._3)
       System.err.println(f"[bench] $name$tag: $best%.2f s ($rows rows, " +
         secs.map(s => f"${s._1}%.2f").mkString("/") +
+        phases.map { case (p, s) => f" $p=$s%.2f" }.mkString +
         (if (flaky) ", FLAKY" else "") + ")")
-      (best, rows, flaky)
+      (best, rows, flaky, phases)
     }
 
-    // Split-phase timing for the ANN-served queries (SparkEntry
-    // .benchPhases): each run constructs fresh phase thunks, times each
-    // phase, and the per-phase best across runs is taken independently
-    // (min-of-N per phase, like min-of-N per query). The query's
-    // headline time is the SUM of phase bests — same work as the old
-    // one-shot plan — while `name:build` / `name:serve` records let a
-    // serving regression surface even when buried under build noise.
-    def timePhases(name: String,
-        mk: (SparkSession, String) => Seq[(String, () => Long)],
-        runs: Int, tag: String = "")
-        : (Double, Long, Boolean, Seq[(String, Double)]) = {
-      val samples = (1 to math.max(runs, 1)).map { _ =>
-        val phases = mk(spark, sfDir)
-        val timed = phases.map { case (pname, thunk) =>
-          val t0 = System.nanoTime()
-          val rows = try thunk() catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name:$pname FAILED: ${e.getMessage}")
-              -1L
-          }
-          (pname, (System.nanoTime() - t0) / 1e9, rows)
-        }
-        spark.catalog.clearCache()
-        timed
-      }
-      // a run is healthy only if every phase succeeded — a failed build
-      // makes the serve timing meaningless
-      val okRuns = samples.filter(_.forall(_._3 >= 0))
-      val flaky = okRuns.nonEmpty && okRuns.size < samples.size
-      if (okRuns.isEmpty) {
-        System.err.println(s"[bench] $name$tag: all phase runs FAILED")
-        (samples.map(_.map(_._2).sum).min, -1L, false, Seq.empty)
-      } else {
-        val phaseBests = okRuns.head.map(_._1).map { pname =>
-          pname -> okRuns.map(_.find(_._1 == pname).get._2).min
-        }
-        val total = phaseBests.map(_._2).sum
-        val rows = okRuns.head.last._3
-        System.err.println(f"[bench] $name$tag: $total%.2f s ($rows rows, " +
-          phaseBests.map { case (p, s) => f"$p=$s%.2f" }.mkString(" ") +
-          (if (flaky) ", FLAKY" else "") + ")")
-        (total, rows, flaky, phaseBests)
-      }
-    }
-
+    // per-phase min across runs, like the min-of-N headline
     val phaseAcc = scala.collection.mutable.LinkedHashMap[String, Double]()
     def mergePhases(name: String, pb: Seq[(String, Double)]): Unit =
       pb.foreach { case (p, s) =>
@@ -194,15 +156,9 @@ object Bench {
       else {
         val runs =
           if (degraded) 1 else runsFor(baseline.get(name), repeats)
-        acc += (phased.get(name) match {
-          case Some(mk) =>
-            val (total, rows, flaky, pb) = timePhases(name, mk, runs)
-            mergePhases(name, pb)
-            (name, total, rows, flaky)
-          case None =>
-            val (best, rows, flaky) = timeQuery(name, fn, runs)
-            (name, best, rows, flaky)
-        })
+        val (best, rows, flaky, pb) = timeQuery(name, fn, runs)
+        mergePhases(name, pb)
+        acc += ((name, best, rows, flaky))
         if (!probed && baseline.get(name).exists(_ >= probeMinBaseline)) {
           probed = true
           val (_, sec, rows, _) = acc.last
@@ -233,7 +189,8 @@ object Bench {
       results.collect { case (n, b, r, _) if r >= 0 => n -> b }, baseline)
     // a PHASE over its thresholds also earns its query a standalone
     // rerun, even when the query's total sits under the flag bar (the
-    // whole point of the split record: serve can't hide under build)
+    // whole point of the phase record: one step can't hide under the
+    // rest of the run)
     val phaseFlagged = flaggedNames(phaseAcc.toSeq, baseline)
       .map(_.takeWhile(_ != ':')).distinct
       .filterNot(flaggedInSuite0.contains)
@@ -271,26 +228,10 @@ object Bench {
           rerunSkipped = rerunSkipped :+ name
           None
         } else {
-          // r14 driver advisory (medium): an sa-family rerun would hit
-          // the warm process-level frame memo, time its build phase at
-          // ~0 s, and auto-refute a REAL build regression — invalidate
-          // the memo first so the rerun re-times the build cold. The
-          // phase record keeps per-phase MINs, so a cold rebuild can
-          // only refute a flag, never create one.
-          if (SparkEntry.saMemoQueries.contains(name))
-            SparkEntry.invalidateSaMemo(spark)
-          phased.get(name) match {
-          case Some(mk) =>
-            val (b2, r2, _, pb2) = timePhases(name, mk, 2, " [rerun]")
-            if (r2 >= 0) mergePhases(name, pb2)
-            // keep the headline coherent with the merged phase mins
-            val merged = phaseAcc.collect {
-              case (k, v) if k.startsWith(name + ":") => v }.sum
-            Some(name -> (math.min(b2, merged), r2))
-          case None =>
-            val (best, rows, _) = timeQuery(name, fnByName(name), 2, " [rerun]")
-            Some(name -> (best, rows))
-          }
+          val (best, rows, _, pb) =
+            timeQuery(name, fnByName(name), 2, " [rerun]")
+          mergePhases(name, pb)
+          Some(name -> (best, rows))
         }
       }.toMap
       if (rerunSkipped.nonEmpty)
@@ -384,7 +325,7 @@ object Bench {
         // query that legitimately got slower, e.g. it does more work).
         // phase entries ride the same reseed policy; their keys carry a
         // ':' so headlineTotal can exclude them from the suite total
-        // (each phased query's headline already contains its phase sum)
+        // (each marked query's headline already covers its phases)
         val phaseOk = phaseAcc.toSeq.filter { case (k, _) =>
           val qn = k.takeWhile(_ != ':')
           !failed.contains(qn) && !flaky.contains(qn)
@@ -473,16 +414,24 @@ object Bench {
     }
 
   /** The suite total over HEADLINE entries only: `name:phase` records
-    * (the split build/serve timings) are excluded because each phased
-    * query's headline entry is already the sum of its phases — counting
-    * both would double-bill every phased query and quietly loosen the
+    * (the marked steps and `output`) are excluded because each marked
+    * query's headline run already covers its phases — counting
+    * both would double-bill every marked query and quietly loosen the
     * bar a future run is graded against. Pure, spec-ed. */
   private[graft] def headlineTotal(entries: Seq[(String, Double)]): Double =
     entries.filterNot(_._1.contains(":")).map(_._2).sum
 
+  /** One run's phase records: its marks plus `output`, the run's wall
+    * seconds outside every mark; none for a run that marked nothing.
+    * Pure, spec-ed. */
+  private[graft] def phaseRecords(wall: Double,
+      marks: Seq[(String, Double)]): Seq[(String, Double)] =
+    if (marks.isEmpty) Nil
+    else marks :+ ("output" -> (wall - marks.map(_._2).sum))
+
   /** `name:phase` records as the bench line's "phases" JSON object:
-    * {"q215":{"build_s":12.1,"serve_s":0.6}, ...} — one object per
-    * phased query, `_s`-suffixed keys, query-sorted. Pure, spec-ed. */
+    * {"q215":{"build_s":12.1,"output_s":0.6}, ...} — one object per
+    * marked query, `_s`-suffixed keys, query-sorted. Pure, spec-ed. */
   private[graft] def phaseJson(entries: Seq[(String, Double)]): String = {
     val byQ = entries.filter(_._1.contains(":"))
       .groupBy(_._1.takeWhile(_ != ':'))

@@ -175,613 +175,46 @@ object SparkEntry {
       .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
   }
 
-  // ---------------------------------------------------------------------
-  // Split build/serve bench phases for the ANN-served queries (r10
-  // judge ask #6): their one-shot timings are ~all index build, so a
-  // serving regression hides inside build noise and a build regression
-  // falsely flags serving. Bench times each phase separately (thunks
-  // share the constructed index through the closure; each returns a
-  // row count so laziness can't fake a timing), records the query's
-  // headline number as the phase SUM (comparable to the old one-shot
-  // plan, which also paid build+serve), and adjudicates `name:build` /
-  // `name:serve` against their own baseline entries.
-  // ---------------------------------------------------------------------
-  def benchPhases:
-      Map[String, (SparkSession, String) => Seq[(String, () => Long)]] = Map(
-    // q180's nine-gate composite, split per gate family (r11 ask #7):
-    // a one-gate regression must not hide inside the 15 s headline the
-    // way serve regressions hid under build noise before the r10 split.
-    // Each phase caches what later phases reuse; the headline is the
-    // phase sum (hand-reseeded baseline — the phased plan materializes
-    // intermediates the one-shot plan shared lazily).
-    "q180_curation_full" -> ((s, dir) => {
-      import graft.ops.Sampling
-      val base = t(s, dir, "documents")
-      val varied = base.select(col("doc_id"), col("n_chars"),
-        when(col("doc_id") % 17 === 3, reverse(col("text")))
-          .otherwise(col("text")).as("text"))
-      val planted = varied.unionByName(
-        varied.filter(col("doc_id") % 13 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"),
-            (col("n_chars") + 11).as("n_chars"),
-            concat(col("text"), lit(" zzappendix")).as("text")))
-      var dd: DataFrame = null
-      var lang: DataFrame = null
-      var ndKept: DataFrame = null
-      var flags: DataFrame = null
-      Seq(
-        "dedup" -> (() => {
-          val normed = planted
-            .select(col("doc_id"), col("n_chars"),
-              TextAnalysis.normalizeText(col("text")).as("norm_text"))
-            .filter(col("n_chars") >= 100)
-          val w = Window.partitionBy(md5(col("norm_text").cast("binary")))
-            .orderBy(col("doc_id"))
-          dd = normed.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn").cache()
-          dd.count()
-        }),
-        "langid" -> (() => {
-          val langLabel = when(col("doc_id") % 3 === 0, "en")
-            .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-          val langVariant = when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1,
-              translate(col("text"), "aeiou", "zzzzz"))
-            .otherwise(reverse(col("text")))
-          val profile = TextAnalysis.langIdTrain(
-            base.filter(col("doc_id") < 200)
-              .select(langLabel.as("lang"), langVariant.as("text")),
-            buckets = 1024)
-          lang = TextAnalysis.langIdClassify(
-              dd.select(col("doc_id"), col("norm_text").as("text")),
-              profile, buckets = 1024)
-            .select(col("doc_id"), col("pred_lang"), col("margin6"))
-            .cache()
-          lang.count()
-        }),
-        "neardup" -> (() => {
-          val ndInput = dd.select(col("doc_id"),
-            col("norm_text").as("text"),
-            length(col("norm_text")).cast("long").as("qlen"))
-          val ndPairs = Dedup.minHashNearDups(ndInput, numHashes = 16,
-            bands = 4, jaccardThreshold = 0.8,
-            signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-            bandHash = c => md5(concat_ws("|", c)),
-            persistShingles = true)
-          ndKept = Dedup.keepBest(ndInput, "doc_id", "qlen", ndPairs)
-            .select(col("doc_id"), lit(1L).as("pass_neardup")).cache()
-          ndKept.count()
-        }),
-        "gates" -> (() => {
-          val quality = graft.ops.Curation.linearQualityScore(
-              dd.select(col("doc_id"), col("norm_text")), "doc_id",
-              "norm_text", graft.ops.Curation.QualityWeights(
-                words = 2, chars = 1, exclaim = -50, digits = -10,
-                bias = -500))
-            .select(col("doc_id"), col("logit").cast("long").as("logit"))
-          val rep = TextAnalysis.topBigramStats(dd, "doc_id", "norm_text")
-          val flu = TextAnalysis.bigramFluency(dd, "doc_id", "norm_text")
-            .select(col("doc_id"), col("sum_cnt"))
-          flags = dd.select("doc_id", "n_chars")
-            .join(quality, Seq("doc_id"))
-            .join(rep, Seq("doc_id"), "left")
-            .join(flu, Seq("doc_id"), "left")
-            .join(lang, Seq("doc_id"), "left")
-            .join(ndKept, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("n_chars"), col("logit"),
-              coalesce(col("top_cnt"), lit(1L)).as("top_cnt"),
-              coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-              coalesce(col("sum_cnt"), lit(0L)).as("sum_cnt"),
-              coalesce(col("pred_lang"), lit("und")).as("pred_lang"),
-              coalesce(col("margin6"), lit(0L)).as("margin6"),
-              coalesce(col("pass_neardup"), lit(0L)).as("pass_neardup"))
-            .withColumn("pass_lang",
-              when(col("pred_lang") === "en" &&
-                col("margin6") >= 1000000L, 1L).otherwise(0L))
-            .withColumn("pass_quality",
-              when(col("logit") >= 0, 1L).otherwise(0L))
-            .withColumn("pass_rep",
-              when(col("top_cnt") * 10 <= col("n_pairs"), 1L).otherwise(0L))
-            .withColumn("pass_flu",
-              when(col("sum_cnt") >= col("n_pairs") * 28, 1L).otherwise(0L))
-            .cache()
-          flags.count()
-        }),
-        "admit" -> (() => {
-          val split = Sampling.hashSplit(flags, "doc_id",
-              Seq("train" -> 0.8, "holdout" -> 0.2))
-            .withColumn("split_train",
-              when(col("split") === "train", 1L).otherwise(0L))
-            .drop("split")
-          val survivors = split.filter(col("pass_lang") === 1 &&
-            col("pass_neardup") === 1 && col("pass_quality") === 1 &&
-            col("pass_rep") === 1 && col("pass_flu") === 1 &&
-            col("split_train") === 1)
-          val admitted = Sampling.tokenBudgetSample(
-              survivors.select("doc_id", "n_chars"), "doc_id", "n_chars",
-              budget = 50000L)
-            .select(col("doc_id"), col("cum_n_chars"))
-          split.join(admitted, Seq("doc_id"), "left").count()
-        }))
-    }),
-    // q344's streaming composite, split per micro-batch (r11 ask #7):
-    // each phase writes the next mtime-laddered file and drains an
-    // AvailableNow pass over the shared checkpoint, so a regression in
-    // ANY batch's admission (state growth, LSH join, snapshot commit)
-    // surfaces in its own record instead of the headline.
-    "q344_curation_stream" -> ((s, dir) => {
-      import graft.streaming.CurationStream
-      val base = t(s, dir, "documents")
-      val varied = base.select(col("doc_id"),
-        when(col("doc_id") % 17 === 3, reverse(col("text")))
-          .otherwise(col("text")).as("text"))
-      val planted = varied
-        .unionByName(varied.filter(col("doc_id") % 13 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-        .unionByName(varied.filter(col("doc_id") % 11 === 2)
-          .select((col("doc_id") + 20000).as("doc_id"),
-            concat(col("text"), lit(" zzappendix")).as("text")))
-        .localCheckpoint()
-      val langLabel = when(col("doc_id") % 3 === 0, "en")
-        .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-      val langVariant = when(col("doc_id") % 3 === 0, col("text"))
-        .when(col("doc_id") % 3 === 1,
-          translate(col("text"), "aeiou", "zzzzz"))
-        .otherwise(reverse(col("text")))
-      val profile = TextAnalysis.langIdTrain(
-        base.filter(col("doc_id") < 200)
-          .select(langLabel.as("lang"), langVariant.as("text")),
-        buckets = 1024).localCheckpoint()
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q344b").toString
-      val srcDir = s"$tmp/src"
-      val stamped = scala.collection.mutable.Set[String]()
-      val mtime0 = (System.currentTimeMillis() / 1000L) * 1000L
-      def admitOne(batchNo: Int, df: DataFrame): Long = {
-        df.coalesce(1).write.mode("append").parquet(srcDir)
-        new java.io.File(srcDir).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            !stamped.contains(f.getName))
-          .foreach { f =>
-            require(f.setLastModified(mtime0 + batchNo * 60000L),
-              s"bench q344: could not stamp ${f.getName}")
-            stamped += f.getName
-          }
-        val schema = s.read.parquet(srcDir).schema
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        val q = CurationStream.run(s, src, profile,
-          s"$tmp/out", s"$tmp/state", s"$tmp/cp")
-        q.processAllAvailable(); q.stop()
-        graft.index.Snapshots.readVersion(s, s"$tmp/out",
-          graft.index.Snapshots.versions(s, s"$tmp/out").last).count()
-      }
-      Seq(
-        "batch1" -> (() => admitOne(1,
-          planted.filter(col("doc_id") < 250))),
-        "batch2" -> (() => admitOne(2,
-          planted.filter(col("doc_id") >= 250 && col("doc_id") < 10000))),
-        "batch3" -> (() => {
-          val c = admitOne(3, planted.filter(col("doc_id") >= 10000))
-          // fresh fixture per run — reclaim or bench rounds leak disk
-          graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-          c
-        }))
-    }),
-    // q358 = q344's stream + the compaction epoch: the epoch's cost
-    // must not hide inside the stream's (or vice versa)
-    "q358_curation_reconcile" -> ((s, dir) => {
-      var tmp: String = null
-      Seq(
-        "stream" -> (() => {
-          tmp = curationStreamFixture(s, dir)
-          graft.index.Snapshots.readVersion(s, s"$tmp/out",
-            graft.index.Snapshots.versions(s, s"$tmp/out").last).count()
-        }),
-        "reconcile" -> (() => {
-          graft.streaming.CurationStream.reconcile(s, s"$tmp/out",
-            s"$tmp/state")
-          val c = graft.index.Snapshots.readVersion(s, s"$tmp/out",
-            graft.index.Snapshots.versions(s, s"$tmp/out").last).count()
-          graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-          c
-        }))
-    }),
-    "q203_hybrid_ann" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      var ivf: Similarity.IvfIndex = null
-      var stats: DataFrame = null
-      var n = 0L
-      var avgLen = 0.0
-      Seq(
-        "build" -> (() => {
-          stats = graft.index.IndexWriter.docFrequencies(index)
-          n = index.count()
-          avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-          ivf = new Similarity.IvfIndex(index, nCentroids = 8,
-            vecCol = "dense_vec", idCol = "id")
-          // cache so the serve phase's identical assignment plan hits
-          // the cache manager instead of re-assigning (the serving
-          // posture: assignments persist, queries only probe)
-          ivf.assigned.cache().count()
-        }),
-        "serve" -> (() =>
-          HybridSearch.search(index, stats, n, avgLen,
-            "filter join scan vector", HybridSearch.Config(k = 5),
-            dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4)).count()))
-    }),
-    "q215_hybrid_hnsw" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      var hs: HybridSearch.HnswServing = null
-      var stats: DataFrame = null
-      var postings: DataFrame = null
-      var n = 0L
-      var avgLen = 0.0
-      Seq(
-        "build" -> (() => {
-          stats = graft.index.IndexWriter.docFrequencies(index)
-          n = index.count()
-          avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-          // the serving posture holds BOTH indexes prebuilt: the graph
-          // for the dense branch and the postings for the sparse one
-          // (r11 judge: the q215/q342 serve cost was dominated by the
-          // sparse-branch corpus scan — postings are the serving fix)
-          postings = graft.index.IndexWriter.postings(index).cache()
-          postings.count()
-          hs = HybridSearch.buildHnswServing(index)
-          // forcing the lazy graph runs the NN-descent rounds (their
-          // localCheckpoints materialize eagerly) — the build cost
-          hs.hnsw.graph.count()
-        }),
-        "serve" -> (() =>
-          HybridSearch.search(index, stats, n, avgLen,
-            "filter join scan vector",
-            HybridSearch.Config(k = 5, postings = Option(postings)),
-            dense = HybridSearch.Dense.Hnsw(hs)).count()))
-    }),
-    "q356_bm25_postings" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-      val stats = s.read.parquet(s"$base/stats")
-      val p = s.read.parquet(s"$base/params").first()
-      val (n, avgLen) = (p.getLong(0), p.getDouble(1))
-      var postings: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          // the inverted-index build — paid once; serving then joins
-          // query terms against it instead of scanning the corpus
-          postings = graft.index.IndexWriter.postings(index).cache()
-          postings.count()
-        }),
-        "serve" -> (() =>
-          HybridSearch.search(index, stats, n, avgLen,
-            "filter predicate pushdown scan",
-            HybridSearch.Config(k = 5, postings = Option(postings)))
-            .count()))
-    }),
-    // same prebuilt index and query text as q356's phases, MaxScore
-    // route: q356:serve vs q367:serve is the direct postings-vs-pruned
-    // serving comparison (identical results by construction)
-    "q367_bm25_maxscore" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-      val stats = s.read.parquet(s"$base/stats")
-      val p = s.read.parquet(s"$base/params").first()
-      val (n, avgLen) = (p.getLong(0), p.getDouble(1))
-      var postings: DataFrame = null
-      var bounds: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          postings = graft.index.IndexWriter.postings(index).cache()
-          bounds = graft.index.IndexWriter.termBounds(postings).cache()
-          postings.count() + bounds.count()
-        }),
-        "serve" -> (() =>
-          HybridSearch.search(index, stats, n, avgLen,
-            "filter predicate pushdown scan",
-            HybridSearch.Config(k = 5, postings = Option(postings),
-              termBounds = Option(bounds)))
-            .count()))
-    }),
-    "q342_hybrid_hnsw_batch" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val sq = s
-      import sq.implicits._
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      var hs: HybridSearch.HnswServing = null
-      var stats: DataFrame = null
-      var postings: DataFrame = null
-      var n = 0L
-      var avgLen = 0.0
-      Seq(
-        "build" -> (() => {
-          stats = graft.index.IndexWriter.docFrequencies(index)
-          n = index.count()
-          avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-          postings = graft.index.IndexWriter.postings(index).cache()
-          postings.count()
-          hs = HybridSearch.buildHnswServing(index)
-          hs.hnsw.graph.count()
-        }),
-        "serve" -> (() => {
-          val queries = Seq((0L, "filter join scan vector"),
-            (1L, "court appeal motion record"),
-            (2L, "stream window aggregate state")).toDF("query_id", "query")
-          HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen,
-            queries, HybridSearch.Config(k = 5, postings = Option(postings)))
-            .count()
-        }))
-    }),
-    // the sa-incremental trio (r12 judge ask #8): three of the suite's
-    // five most expensive entries, each hiding a build-vs-apply split —
-    // the stored-segment artifact build (rank rounds over the sealed
-    // text) vs the batch admission join against the stored keys. A
-    // regression in one half must be attributable.
-    "q357_sa_incremental" -> ((s, dir) => {
-      val planted = saPlantedDocs(s, dir)
-      var keys: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          keys = saSharedKeyTable(s, dir)
-          keys.count()
-        }),
-        "apply" -> (() => {
-          val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
-            col("doc_id") < 250)
-          val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
-            col("doc_id") >= 250)
-          graft.ops.SuffixArray.exactSubstrContaminationIncremental(
-              b1, keys, "doc_id", "text", minLen = 12)
-            .unionByName(graft.ops.SuffixArray
-              .exactSubstrContaminationIncremental(
-                b2, keys, "doc_id", "text", minLen = 12))
-            .count()
-        }))
-    }),
-    "q362_sa_stats_incremental" -> ((s, dir) => {
-      val planted = saStatsPlantedDocs(s, dir)
-      var stats: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          stats = graft.ops.SuffixArray.substrKeyStats(
-            planted.filter(col("doc_id") < 250), "doc_id", "text",
-            minLen = 12).localCheckpoint()
-          stats.count()
-        }),
-        "apply" -> (() =>
-          graft.ops.SuffixArray.repeatedSpanStatsIncremental(
-              planted.filter(col("doc_id") >= 250), stats,
-              "doc_id", "text", minLen = 12)
-            .count()))
-    }),
-    "q366_sa_removal_incremental" -> ((s, dir) => {
-      val planted = saPlantedDocs(s, dir)
-      var keys: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          keys = saSharedKeyTable(s, dir)
-          keys.count()
-        }),
-        "apply" -> (() => {
-          val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
-            col("doc_id") < 250)
-          val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
-            col("doc_id") >= 250)
-          graft.ops.SuffixArray.removeContaminatedSpansIncremental(
-              b1, keys, "doc_id", "text", minLen = 12)
-            .unionByName(graft.ops.SuffixArray
-              .removeContaminatedSpansIncremental(
-                b2, keys, "doc_id", "text", minLen = 12))
-            .count()
-        }))
-    }),
-    // the SERVED phrase path (r12 judge ask #3): positional-index build
-    // vs the per-request position-intersection read — the phrase serve
-    // regression must not hide under the index build
-    "q371_phrase_search" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 5,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("phrase"),
-                lit("gap"), lit("probe"))))
-          .otherwise(col("tokens")))
-      var pp: DataFrame = null
-      var stats: DataFrame = null
-      Seq(
-        "build" -> (() => {
-          pp = graft.index.IndexWriter.positionalPostings(index).cache()
-          stats = graft.index.IndexWriter.docFrequencies(index).cache()
-          pp.count() + stats.count()
-        }),
-        "serve" -> (() =>
-          HybridSearch.phraseMatches(pp, stats,
-            Seq("graft", "phrase", "probe")).count()))
-    }),
-    // the key-table maintenance composite, split: per-segment artifact
-    // builds vs the store compaction vs the batch admission join
-    "q377_sa_keytable_compaction" -> ((s, dir) => {
-      val planted = saStatsPlantedDocs(s, dir)
-      val segs = Seq(
-        planted.filter(col("doc_id") < 80),
-        planted.filter(col("doc_id") >= 80 && col("doc_id") < 160),
-        planted.filter(col("doc_id") >= 160 && col("doc_id") < 250))
-      val store = auxPath(dir) + "/q377_bench_keys"
-      Seq(
-        "segments" -> (() => {
-          graft.ops.Joins.deleteRecursively(new java.io.File(store))
-          segs.foreach(seg => graft.ops.SuffixArray.substrKeyStats(
-              seg, "doc_id", "text", minLen = 12)
-            .coalesce(1).write.mode("append").parquet(store))
-          s.read.parquet(store).count()
-        }),
-        "compact" -> (() => {
-          val (_, ra, _, _) = graft.ops.SuffixArray.compactKeyTables(
-            s, store, hasCounts = true)
-          ra
-        }),
-        "apply" -> (() =>
-          graft.ops.SuffixArray.repeatedSpanStatsIncremental(
-              planted.filter(col("doc_id") >= 250),
-              s.read.parquet(store), "doc_id", "text", minLen = 12)
-            .count()))
-    }),
-    // store-level takedown, split: the streamed build vs the forget
-    // rewrite (partition-pruned postings/positions + stats fold) —
-    // a forget-cost regression must not hide under the stream's floor
-    "q380_forget_streamed" -> ((s, dir) => {
-      import graft.index.IndexWriter
-      val pts = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("id"),
-        split(col("text"), " ").as("tokens")).localCheckpoint()
-      var tmp: String = null
-      Seq(
-        "stream" -> (() => {
-          tmp = java.nio.file.Files
-            .createTempDirectory("graft_q380b").toString
-          val srcDir = s"$tmp/src"
-          pts.filter(col("id").cast("long") < 150)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          pts.filter(col("id").cast("long") >= 150 &&
-              col("id").cast("long") < 300)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          pts.filter(col("id").cast("long") >= 300)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val schema = s.read.parquet(srcDir).schema
-          val q = IndexWriter.streamPostings(s,
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(srcDir),
-            s"$tmp/idx", s"$tmp/cp", positional = true)
-          q.processAllAvailable(); q.stop()
-          IndexWriter.readPostings(s, s"$tmp/idx").count()
-        }),
-        "forget" -> (() => {
-          IndexWriter.forgetStreamedPostings(s, s"$tmp/idx",
-            pts.filter(col("id").cast("long") % 9 === 4).select("id"))
-          val c = IndexWriter.readPostings(s, s"$tmp/idx").count()
-          // each bench run mints a fresh tmp store — reclaim it or
-          // repeated rounds leak a full index copy per invocation
-          graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-          c
-        }))
-    }),
-    // the QUANTIZED IVF serve (r12 judge ask #6): centroid fit +
-    // assignment vs the int8 two-stage query
-    "q370_ivf_quantized" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      var idx: Similarity.IvfIndex = null
-      var q: Array[Float] = null
-      Seq(
-        "build" -> (() => {
-          q = e.filter(col("vec_id") === 1).select("embedding")
-            .first().getSeq[Float](0).toArray
-          idx = new Similarity.IvfIndex(e, nCentroids = 8)
-          idx.assigned.cache().count()
-        }),
-        "serve" -> (() =>
-          idx.queryQuantized(q, k = 10, nProbe = 4, rerank = 50)
-            .count()))
-    })
-  )
-
-  /** Process-level memo for the sa-family shared frames (r13 judge ask
-    * #3a/#3c): the planted corpora were re-derived per query and q357 /
-    * q366 rebuilt the IDENTICAL key table in their build phases — one
-    * process now pays each once. Keyed on the session REFERENCE (not
-    * its identity hash — r14 driver advisory: after a session is GC'd
-    * a new session can reuse the hash and be served a dead session's
-    * checkpointed frame) so a fresh session (tests, a second Verify)
-    * never sees another session's frames; entries of STOPPED sessions
-    * are evicted on every access, releasing their checkpoint blocks
-    * instead of pinning them for process lifetime. localCheckpoint
-    * pins the rows so later actions don't recompute (and survives the
-    * bench's per-query `catalog.clearCache()`, which only drops
-    * CacheManager entries). */
-  private val saFrameCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private def saMemo(s: SparkSession, dir: String, kind: String)
-      (mk: => DataFrame): DataFrame = {
-    saFrameCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(saFrameCache.remove)
-    saFrameCache.getOrElseUpdate((s, dir, kind), mk.localCheckpoint())
-  }
-
-  /** Queries whose bench build phases can be served by [[saMemo]] —
-    * the set the bench's adjudication rerun must invalidate first
-    * (r14 driver advisory, medium): without invalidation a rerun of a
-    * flagged build phase hits the warm memo, times ~0 s, and
-    * auto-refutes a REAL build regression. */
-  private[graft] val saMemoQueries: Set[String] = Set(
-    "q357_sa_incremental", "q362_sa_stats_incremental",
-    "q366_sa_removal_incremental", "q377_sa_keytable_compaction")
-
-  /** Drop every memoized sa frame of `s`, so the next build re-runs
-    * cold. Safe to call around any query: only the sa family consults
-    * the memo, and a later call simply rebuilds. The bench's phase
-    * record keeps per-phase MINs, so a post-invalidation cold rebuild
-    * can only refute a flag, never create one. */
-  private[graft] def invalidateSaMemo(s: SparkSession): Unit =
-    saFrameCache.keys.filter(_._1 eq s).foreach { k =>
-      saFrameCache.remove(k).foreach { df =>
-        try df.unpersist(false) catch { case _: Throwable => () }
-      }
-    }
-
-  /** Memoized sa frames held for `s` — the invalidation spec's probe. */
-  private[graft] def saMemoSize(s: SparkSession): Int =
-    saFrameCache.keys.count(_._1 eq s)
-
   /** q357/q366's shared planted corpus (the secret + boilerplate
-    * appendices) — one definition so the bench phases and the oracle
-    * queries can never drift. */
-  private def saPlantedDocs(s: SparkSession, dir: String): DataFrame =
-    saMemo(s, dir, "planted") {
-      val secret = " benchmark answer span leaks verbatim into web" +
-        " crawl training corpora every day"
-      val boiler = " shared internal navigation chrome repeats across" +
-        " many training documents without leaking ever"
-      t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 50 === 0 || col("doc_id") % 7 === 3,
-            lit(secret)).otherwise(lit("")),
-          when(col("doc_id") % 13 === 5 && col("doc_id") % 50 =!= 0,
-            lit(boiler)).otherwise(lit(""))).as("text"))
-    }
+    * appendices) — one definition so the two queries can never drift. */
+  private def saPlantedDocs(s: SparkSession, dir: String): DataFrame = {
+    val secret = " benchmark answer span leaks verbatim into web" +
+      " crawl training corpora every day"
+    val boiler = " shared internal navigation chrome repeats across" +
+      " many training documents without leaking ever"
+    t(s, dir, "documents").select(col("doc_id"),
+      concat(col("text"),
+        when(col("doc_id") % 50 === 0 || col("doc_id") % 7 === 3,
+          lit(secret)).otherwise(lit("")),
+        when(col("doc_id") % 13 === 5 && col("doc_id") % 50 =!= 0,
+          lit(boiler)).otherwise(lit(""))).as("text"))
+      .localCheckpoint()
+  }
 
   /** q362/q377's shared planted corpus. */
   private def saStatsPlantedDocs(s: SparkSession, dir: String): DataFrame =
-    saMemo(s, dir, "statsPlanted") {
-      t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit(" exact substr pass finds arbitrary length repeats" +
-              " beyond any fixed k grid")).otherwise(lit("")),
-          when(col("doc_id") % 9 === 5 && col("doc_id") >= 250,
-            lit(" batch local repeated filler sentence appears many" +
-              " times within this batch only")).otherwise(lit("")))
-          .as("text"))
-    }
+    t(s, dir, "documents").select(col("doc_id"),
+      concat(col("text"),
+        when(col("doc_id") % 7 === 0,
+          lit(" exact substr pass finds arbitrary length repeats" +
+            " beyond any fixed k grid")).otherwise(lit("")),
+        when(col("doc_id") % 9 === 5 && col("doc_id") >= 250,
+          lit(" batch local repeated filler sentence appears many" +
+            " times within this batch only")).otherwise(lit("")))
+        .as("text"))
+      .localCheckpoint()
 
-  /** q357/q366's IDENTICAL key-table build (seed docs, minLen 12),
-    * built once per (session, dir) — the second caller's build phase
-    * records the memo hit, which is exactly what a long-lived serving
-    * process would pay. The oracle `queries` entries keep their own
-    * in-query builds (correctness times nothing). */
-  private def saSharedKeyTable(s: SparkSession, dir: String): DataFrame =
-    saMemo(s, dir, "keyTable") {
-      graft.ops.SuffixArray.substrKeyTable(
-        saPlantedDocs(s, dir).filter(col("doc_id") % 50 === 0),
-        "doc_id", "text", minLen = 12)
-    }
+  /** The HNSW hybrid queries' build (q215/q342): corpus size, mean
+    * length and the serving graph, forced here rather than by the
+    * first walk hop so the `build` mark covers it. */
+  private def hnswBuild(index: DataFrame)
+      : (Long, Double, HybridSearch.HnswServing) = Phase("build") {
+    val n = index.count()
+    val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
+    val hs = HybridSearch.buildHnswServing(index)
+    hs.hnsw.graph
+    (n, avgLen, hs)
+  }
 
   // ---------------------------------------------------------------------
   // Operator queries (name -> (spark, sfDir) => DataFrame)
@@ -3847,11 +3280,13 @@ object SparkEntry {
       GraftFunctions.register(s)
       val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
       val stats = graft.index.IndexWriter.docFrequencies(index)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
+      val (n, avgLen, ivf) = Phase("build") {
+        (index.count(),
+          index.select(avg(size(col("tokens")))).first().getDouble(0),
+          new Similarity.IvfIndex(index, nCentroids = 8,
+            vecCol = "dense_vec", idCol = "id"))
+      }
       val cfg = HybridSearch.Config(k = 5)
-      val ivf = new Similarity.IvfIndex(index, nCentroids = 8,
-        vecCol = "dense_vec", idCol = "id")
       val qText = "filter join scan vector"
       val qVec = graft.embed.HashingEmbedder.default.embedQuery(qText)
       writeAux(index.select("id", "chunk_id", "tokens", "dense_vec"),
@@ -4037,10 +3472,8 @@ object SparkEntry {
       GraftFunctions.register(s)
       val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
       val stats = graft.index.IndexWriter.docFrequencies(index)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
+      val (n, avgLen, hs) = hnswBuild(index)
       val cfg = HybridSearch.Config(k = 5)
-      val hs = HybridSearch.buildHnswServing(index)
       val qText = "filter join scan vector"
       val qVec = graft.embed.HashingEmbedder.default.embedQuery(qText)
       writeAux(hs.idMap.join(index, "id")
@@ -6059,10 +5492,8 @@ object SparkEntry {
       GraftFunctions.register(s)
       val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
       val stats = graft.index.IndexWriter.docFrequencies(index)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
+      val (n, avgLen, hs) = hnswBuild(index)
       val cfg = HybridSearch.Config(k = 5)
-      val hs = HybridSearch.buildHnswServing(index)
       val queryTexts = Seq("filter join scan vector",
         "court appeal motion record", "stream window aggregate state")
       val queries = queryTexts.zipWithIndex
@@ -6116,7 +5547,7 @@ object SparkEntry {
     // profile training + classification, logit, top-bigram — straight
     // from the documents table; the batching must be invisible.
     "q344_curation_stream" -> ((s, dir) => {
-      val tmp = curationStreamFixture(s, dir)
+      val tmp = Phase("stream") { curationStreamFixture(s, dir) }
       val out = graft.index.Snapshots.readVersion(s, s"$tmp/out",
           graft.index.Snapshots.versions(s, s"$tmp/out").last)
         .select("id", "n_chars", "pass_exact", "pass_neardup",
@@ -6458,8 +5889,10 @@ object SparkEntry {
     "q357_sa_incremental" -> ((s, dir) => {
       val planted = saPlantedDocs(s, dir)
       val evalDocs = planted.filter(col("doc_id") % 50 === 0)
-      val keys = graft.ops.SuffixArray.substrKeyTable(
-        evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
+      val keys = Phase("build") {
+        graft.ops.SuffixArray.substrKeyTable(
+          evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
+      }
       val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
         col("doc_id") < 250)
       val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
@@ -6484,8 +5917,10 @@ object SparkEntry {
     // the whole chain: gates, banding + signature agreement, the
     // reachability closure, and the per-cluster argmax.
     "q358_curation_reconcile" -> ((s, dir) => {
-      val tmp = curationStreamFixture(s, dir)
-      graft.streaming.CurationStream.reconcile(s, s"$tmp/out", s"$tmp/state")
+      val tmp = Phase("stream") { curationStreamFixture(s, dir) }
+      Phase("reconcile") {
+        graft.streaming.CurationStream.reconcile(s, s"$tmp/out", s"$tmp/state")
+      }
       val out = graft.index.Snapshots.readVersion(s, s"$tmp/out",
           graft.index.Snapshots.versions(s, s"$tmp/out").last)
         .select("id", "n_chars", "pass_exact", "pass_neardup",
@@ -6610,8 +6045,10 @@ object SparkEntry {
       val planted = saStatsPlantedDocs(s, dir)
       val sealedSeg = planted.filter(col("doc_id") < 250)
       val batch = planted.filter(col("doc_id") >= 250)
-      val stats = graft.ops.SuffixArray.substrKeyStats(
-        sealedSeg, "doc_id", "text", minLen = 12).localCheckpoint()
+      val stats = Phase("build") {
+        graft.ops.SuffixArray.substrKeyStats(
+          sealedSeg, "doc_id", "text", minLen = 12).localCheckpoint()
+      }
       graft.ops.SuffixArray.repeatedSpanStatsIncremental(
           batch, stats, "doc_id", "text", minLen = 12)
         .orderBy("doc_id")
@@ -6732,8 +6169,10 @@ object SparkEntry {
     "q366_sa_removal_incremental" -> ((s, dir) => {
       val planted = saPlantedDocs(s, dir)
       val evalDocs = planted.filter(col("doc_id") % 50 === 0)
-      val keys = graft.ops.SuffixArray.substrKeyTable(
-        evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
+      val keys = Phase("build") {
+        graft.ops.SuffixArray.substrKeyTable(
+          evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
+      }
       val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
         col("doc_id") < 250)
       val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
@@ -6765,24 +6204,29 @@ object SparkEntry {
             concat(col("tokens"), array(lit("zqmaxscore"))))
             .otherwise(col("tokens")))
       writeAux(index.select("id", "tokens"), dir, "q367_index")
-      val postings = graft.index.IndexWriter.postings(index)
-        .localCheckpoint()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
-        .localCheckpoint()
-      val bounds = graft.index.IndexWriter.termBounds(postings)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
       val terms = Seq("zqmaxscore", "scan", "filter", "join")
-      val (theta6, flags) = HybridSearch.maxScorePrune(
-        postings, stats, bounds, n, avgLen, terms, 10)
-      val essential = flags.collect { case (t, _, true) => t }
-      val nCand = postings.filter(col("term").isin(essential: _*))
-        .select("id").distinct().count()
+      val (postings, stats, bounds, n, avgLen, theta6, flags, nCand) =
+        Phase("build") {
+          val postings = graft.index.IndexWriter.postings(index)
+            .localCheckpoint()
+          val stats = graft.index.IndexWriter.docFrequencies(index)
+            .localCheckpoint()
+          val bounds = graft.index.IndexWriter.termBounds(postings)
+          val n = index.count()
+          val avgLen =
+            index.select(avg(size(col("tokens")))).first().getDouble(0)
+          val (theta6, flags) = HybridSearch.maxScorePrune(
+            postings, stats, bounds, n, avgLen, terms, 10)
+          val essential = flags.collect { case (t, _, true) => t }
+          val nCand = postings.filter(col("term").isin(essential: _*))
+            .select("id").distinct().count()
+          (postings, stats, bounds, n, avgLen, theta6, flags, nCand)
+        }
       HybridSearch.bm25TopKMaxScore(
           postings, stats, bounds, n, avgLen, terms, 10)
         .withColumn("theta6", lit(theta6))
         .withColumn("n_terms", lit(flags.size.toLong))
-        .withColumn("n_essential", lit(essential.size.toLong))
+        .withColumn("n_essential", lit(flags.count(_._3).toLong))
         .withColumn("n_candidates", lit(nCand))
         .orderBy(desc("bm25_score"), col("id"))
     }),
@@ -6891,7 +6335,7 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 1).select("embedding")
         .first().getSeq[Float](0).toArray
-      val idx = new Similarity.IvfIndex(e, nCentroids = 8)
+      val idx = Phase("build") { new Similarity.IvfIndex(e, nCentroids = 8) }
       writeAux(idx.assigned.select("vec_id", "centroid"), dir,
         "q370_assigned")
       writeAux(idx.probeCells(q, nProbe = 4).toDF("centroid"), dir,
@@ -7123,11 +6567,14 @@ object SparkEntry {
         planted.filter(col("doc_id") >= 160 && col("doc_id") < 250))
       val store = auxPath(dir) + "/q377_keys"
       graft.ops.Joins.deleteRecursively(new java.io.File(store))
-      segs.foreach(seg => graft.ops.SuffixArray.substrKeyStats(
-          seg, "doc_id", "text", minLen = 12)
-        .coalesce(1).write.mode("append").parquet(store))
-      val (rb, ra, fb, fa) = graft.ops.SuffixArray.compactKeyTables(
-        s, store, hasCounts = true)
+      Phase("segments") {
+        segs.foreach(seg => graft.ops.SuffixArray.substrKeyStats(
+            seg, "doc_id", "text", minLen = 12)
+          .coalesce(1).write.mode("append").parquet(store))
+      }
+      val (rb, ra, fb, fa) = Phase("compact") {
+        graft.ops.SuffixArray.compactKeyTables(s, store, hasCounts = true)
+      }
       require(fa < fb && ra <= rb,
         s"compaction must shrink the store: files $fb->$fa rows $rb->$ra")
       val batch = planted.filter(col("doc_id") >= 250)
@@ -7255,21 +6702,25 @@ object SparkEntry {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_q380").toString
       val srcDir = s"$tmp/src"
-      pts.filter(col("id").cast("long") < 150)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      pts.filter(col("id").cast("long") >= 150 &&
-          col("id").cast("long") < 300)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      pts.filter(col("id").cast("long") >= 300)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      val q = IndexWriter.streamPostings(s,
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir),
-        s"$tmp/idx", s"$tmp/cp", positional = true)
-      q.processAllAvailable(); q.stop()
-      IndexWriter.forgetStreamedPostings(s, s"$tmp/idx",
-        pts.filter(col("id").cast("long") % 9 === 4).select("id"))
+      Phase("stream") {
+        pts.filter(col("id").cast("long") < 150)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        pts.filter(col("id").cast("long") >= 150 &&
+            col("id").cast("long") < 300)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        pts.filter(col("id").cast("long") >= 300)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        val schema = s.read.parquet(srcDir).schema
+        val q = IndexWriter.streamPostings(s,
+          s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(srcDir),
+          s"$tmp/idx", s"$tmp/cp", positional = true)
+        q.processAllAvailable(); q.stop()
+      }
+      Phase("forget") {
+        IndexWriter.forgetStreamedPostings(s, s"$tmp/idx",
+          pts.filter(col("id").cast("long") % 9 === 4).select("id"))
+      }
       val posCnt = s.read.parquet(s"$tmp/idx/positions")
         .groupBy("term", "id").agg(count(lit(1)).as("pos_cnt"))
       val out = IndexWriter.readPostings(s, s"$tmp/idx")

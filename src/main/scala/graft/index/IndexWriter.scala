@@ -405,11 +405,13 @@ object IndexWriter {
         if (!pts0.isEmpty) {
           val fs = fsFor(spark, s"$path/postings")
           val have = fs.exists(new org.apache.hadoop.fs.Path(s"$path/postings"))
+          // an exactly repeated row is one document delivered twice:
+          // index it once, or its tf and positions count it twice
           val pts = (if (have)
               pts0.join(spark.read.parquet(s"$path/postings")
                 .filter(col("batch_id") =!= batchId)
                 .select("id").distinct(), Seq("id"), "left_anti")
-            else pts0).localCheckpoint()
+            else pts0).distinct().localCheckpoint()
           if (!pts.isEmpty) {
             // ONE tokenize pass per batch (r16): the positional table
             // is the finest grain — the bag postings are its
@@ -419,10 +421,7 @@ object IndexWriter {
             // so the old separate postings() / docFrequencies() /
             // positionalPostings() explodes over the batch text
             // collapse into one posexplode (or one explode when the
-            // positional tier is off). df derived from the bag also
-            // counts a doc once per term even if a batch carries
-            // duplicate id rows, consistent with the postings rows it
-            // describes.
+            // positional tier is off).
             val posFrame =
               if (positional) Some(positionalPostings(pts).localCheckpoint())
               else None

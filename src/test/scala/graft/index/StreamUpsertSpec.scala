@@ -211,6 +211,28 @@ class StreamUpsertSpec extends AnyFunSuite with SparkTestBase {
     assert(canonD == wantD && canonB == wantB)
   }
 
+  test("streamPostings: a batch's exactly duplicated row is indexed once") {
+    val base = Files.createTempDirectory("graft_postings_dup").toString
+    val src = s"$base/src"
+    val pts = Seq(
+      ("d1", Seq("spark", "joins")),
+      ("d2", Seq("joins", "windows")))
+      .toDF("id", "tokens")
+    pts.unionByName(pts.filter($"id" === "d1"))
+      .coalesce(1).write.parquet(src)
+    val q = IndexWriter.streamPostings(spark,
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+      s"$base/idx", s"$base/cp", positional = true)
+    q.processAllAvailable(); q.stop()
+    assert(IndexWriter.readPostings(spark, s"$base/idx")
+      .as[(String, String, Long, Int)].collect().sorted.toSeq ==
+      IndexWriter.postings(pts)
+        .as[(String, String, Long, Int)].collect().sorted.toSeq)
+    assert(IndexWriter.readDocFrequencies(spark, s"$base/idx")
+      .as[(String, Long)].collect().sorted.toSeq ==
+      IndexWriter.docFrequencies(pts).as[(String, Long)].collect().sorted.toSeq)
+  }
+
   test("forgetStreamedPostings: store-level takedown — read-backs == " +
       "a streamed build over survivors, untouched partition files stay " +
       "byte-stable, purged phrases disappear") {
