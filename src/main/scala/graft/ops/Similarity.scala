@@ -5,18 +5,32 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.vecCosine
 
-/** Approximate-nearest-neighbor search over an embedding column.
-  *
-  * Two physical paths with one logical contract (top-k by cosine):
+/** Nearest-neighbor search over an embedding column: one exact scan
+  * and five Spark-native ANN indexes. Every score is rounded to 6
+  * decimals and every ranking breaks ties on the id, so the DuckDB
+  * oracle reproduces each result.
   *
   *  - [[bruteForceTopK]] — exact: codegen'd cosine scan +
   *    `TakeOrderedAndProject` (per-partition top-k, driver merge).
-  *    O(N·d) work but zero shuffle; the correctness baseline.
+  *    O(N·d) work but zero shuffle; the correctness baseline, and the
+  *    rerank the LSH and IVF indexes end in.
   *  - [[RandomHyperplaneIndex]] — LSH: `nBits` seeded hyperplanes give a
-  *    bucket id per vector; queries scan only matching buckets (with
-  *    multi-probe on Hamming-1 neighbors). At scale the bucketed table
-  *    is written bucketed/partitioned by `bucket`, so a query prunes to
-  *    a handful of partitions instead of the full corpus.
+  *    bucket per vector; queries scan the query's bucket plus Hamming-1
+  *    probes (bit order or confidence-ranked).
+  *  - [[IvfIndex]] — a k-means coarse quantizer; queries scan the
+  *    `nProbe` nearest cells.
+  *  - [[PqIndex]] / [[IvfPqResidualIndex]] — product quantization of the
+  *    vectors (or of their IVF residuals), scored through ADC lookup
+  *    tables.
+  *  - [[HnswIndex]] — a layered neighbor graph (broadcast or NN-descent
+  *    build) walked by a fixed-hop beam search.
+  *
+  * At scale the bucketed / assigned tables are written partitioned by
+  * bucket or cell, so a query prunes to a handful of partitions. Each
+  * index kernel (the Lloyd's fit, squared-L2 argmin and ranking, plane
+  * buckets, the HNSW top-deg heap, ADC tables) is written once below
+  * and shared by the driver form and the UDF form, so a single-query
+  * probe and a batched probe of the same vector agree by construction.
   */
 object Similarity {
 
@@ -97,7 +111,7 @@ object Similarity {
 
   /** Sequential-double-accumulation cosine rounded to 6 decimals — the
     * CosineSimilarity arithmetic (engine-reproducible), shared by the
-    * HNSW block passes. */
+    * HNSW block pass and the MMR similarity penalty. */
   private def cos6(qv: Array[Float], ov: Array[Float]): Double = {
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var j = 0
@@ -111,30 +125,206 @@ object Similarity {
     else round6(dot / (math.sqrt(nx) * math.sqrt(ny)))
   }
 
-  /** Deterministic pseudo-random hyperplanes (seeded FNV over (seed,i)). */
+  /** The HNSW block pass for one node: its top-`deg` neighbors by
+    * (cos6 desc, id asc) among the `mems` rows (id, vec, level) at
+    * level ≥ `minLevel`, self skipped, as the heap's (cos, id) pairs. */
+  private def topDeg(qid: Long, qv: Array[Float],
+      mems: Array[(Long, Array[Float], Int)], minLevel: Int,
+      deg: Int): Seq[(Double, Long)] = {
+    // bounded heap, worst-on-top: max of (-cos, id) = lowest cos,
+    // largest id among ties — eviction order mirrors the ranking
+    val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+      Ordering.by((t: (Double, Long)) => (-t._1, t._2)))
+    var i = 0
+    while (i < mems.length) {
+      val (oid, ov, olvl) = mems(i)
+      if (olvl >= minLevel && oid != qid) {
+        val c = cos6(qv, ov)
+        if (heap.size < deg) heap.enqueue((c, oid))
+        else {
+          val (wc, wid) = heap.head
+          if (c > wc || (c == wc && oid < wid)) {
+            heap.dequeue(); heap.enqueue((c, oid))
+          }
+        }
+      }
+      i += 1
+    }
+    heap.toSeq
+  }
+
+  /** Symmetric closure of a (layer, id, nbr, cos) edge table: every
+    * edge also reversed (the pair shares its cosine), deduplicated. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.unionByName(edges.select(col("layer"), col("nbr").as("id"),
+        col("id").as("nbr"), col("cos")))
+      .distinct()
+
+  /** Deterministic pseudo-random hyperplanes: `nBits` Gaussian planes
+    * drawn from a `java.util.Random` seeded with `seed`. */
   private[ops] def hyperplanes(nBits: Int, dim: Int, seed: Int = 42): Array[Array[Float]] = {
     val rng = new java.util.Random(seed.toLong)
     Array.fill(nBits)(Array.fill(dim)((rng.nextGaussian()).toFloat))
   }
 
-  /** Sign-random-projection bucket id as a UDF over a vector column —
-    * THE bucketing loop, shared by [[RandomHyperplaneIndex]] and the
-    * HNSW NN-descent/admission seeding (one definition, so the
-    * dim-vs-vector truncation rule cannot drift between the index's
-    * bucketed table and its queries). */
+  /** `plane`·`vec` over the first `dim` components: float·float
+    * products summed in double. */
+  private def planeDot(plane: Array[Float], dim: Int, vec: Seq[Float]): Double = {
+    var dot = 0.0
+    var j = 0
+    while (j < dim && j < vec.length) { dot += plane(j) * vec(j); j += 1 }
+    dot
+  }
+
+  /** Sign-random-projection bucket: bit i is set when plane i's
+    * [[planeDot]] is positive. */
+  private def planeBucket(planes: Array[Array[Float]], dim: Int,
+      vec: Seq[Float]): Long = {
+    var b = 0L
+    var i = 0
+    while (i < planes.length) {
+      if (planeDot(planes(i), dim, vec) > 0) b |= (1L << i)
+      i += 1
+    }
+    b
+  }
+
+  /** [[planeBucket]] as a UDF over a vector column — shared by
+    * [[RandomHyperplaneIndex]] and the HNSW NN-descent/admission
+    * seeding, so the dim-vs-vector truncation rule cannot drift between
+    * the index's bucketed table and its queries. */
   private def planeBucketUdf(planes: Array[Array[Float]], dim: Int) =
-    udf((vec: Seq[Float]) => {
-      var b = 0L
-      var i = 0
-      while (i < planes.length) {
-        var dot = 0.0
-        var j = 0
-        while (j < dim && j < vec.length) { dot += planes(i)(j) * vec(j); j += 1 }
-        if (dot > 0) b |= (1L << i)
-        i += 1
-      }
-      b
-    })
+    udf((vec: Seq[Float]) => planeBucket(planes, dim, vec))
+
+  /** The home bucket, then up to `probes` Hamming-1 neighbors flipping
+    * the least-confident planes first: smallest |dot| in micro-unit
+    * longs, ties to the lower plane index. */
+  private def rankedProbes(planes: Array[Array[Float]], dim: Int,
+      vec: Seq[Float], probes: Int): Seq[Long] = {
+    var home = 0L
+    val confs = new Array[(Long, Int)](planes.length)
+    var i = 0
+    while (i < planes.length) {
+      val dot = planeDot(planes(i), dim, vec)
+      if (dot > 0) home |= (1L << i)
+      confs(i) = (math.abs(math.round(dot * 1e6)), i)
+      i += 1
+    }
+    home +: confs.sorted.take(math.min(math.max(probes, 0), planes.length))
+      .map(c => home ^ (1L << c._2)).toSeq
+  }
+
+  /** Element access for the vector shapes the squared-L2 kernels read:
+    * a UDF's `Seq[Float]` or `Seq[Double]`, a query's `Array[Float]`, a
+    * fit sample's `Array[Double]`. A float widens to double exactly as
+    * it does in `c(j) - v(j)`; the instances are singletons, so a kernel
+    * call allocates nothing per row. */
+  private sealed trait Vec[V] {
+    def len(v: V): Int
+    def at(v: V, j: Int): Double
+  }
+  private implicit object SeqFloatVec extends Vec[Seq[Float]] {
+    def len(v: Seq[Float]): Int = v.length
+    def at(v: Seq[Float], j: Int): Double = v(j)
+  }
+  private implicit object SeqDoubleVec extends Vec[Seq[Double]] {
+    def len(v: Seq[Double]): Int = v.length
+    def at(v: Seq[Double], j: Int): Double = v(j)
+  }
+  private implicit object FloatsVec extends Vec[Array[Float]] {
+    def len(v: Array[Float]): Int = v.length
+    def at(v: Array[Float], j: Int): Double = v(j)
+  }
+  private implicit object DoublesVec extends Vec[Array[Double]] {
+    def len(v: Array[Double]): Int = v.length
+    def at(v: Array[Double], j: Int): Double = v(j)
+  }
+
+  /** Squared L2 distance from centroid `c` to the slice of `v` starting
+    * at `off` (a PQ subspace; 0 for the whole vector), over the
+    * components both have. */
+  private def sqDist[V](c: Array[Double], v: V, off: Int = 0)(
+      implicit vec: Vec[V]): Double = {
+    var d = 0.0
+    var j = 0
+    val n = math.min(c.length, vec.len(v) - off)
+    while (j < n) { val t = c(j) - vec.at(v, off + j); d += t * t; j += 1 }
+    d
+  }
+
+  /** Index of the nearest centroid in `cs` by [[sqDist]]; ties go to
+    * the lower index. */
+  private def nearest[V: Vec](cs: Array[Array[Double]], v: V,
+      off: Int = 0): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var i = 0
+    while (i < cs.length) {
+      val d = sqDist(cs(i), v, off)
+      if (d < bestD) { bestD = d; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** Every index of `cs`, nearest to `v` first by [[sqDist]], ties to
+    * the lower index (a stable sort) — the IVF probe order. */
+  private def cellOrder[V: Vec](cs: Array[Array[Double]], v: V): IndexedSeq[Int] = {
+    val ds = Array.tabulate(cs.length)(i => sqDist(cs(i), v))
+    cs.indices.sortBy(ds(_))
+  }
+
+  /** `nProbe`, checked: probing no cells would answer every query with
+    * no rows. */
+  private def probeWidth(nProbe: Int): Int = {
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    nProbe
+  }
+
+  /** The `xxhash64(id)`-smallest `n` rows of `vecCol`, as doubles — the
+    * bounded fit sample of every quantizer here. Content-derived
+    * (deterministic across runs and retries) and unbiased across the
+    * whole corpus, unlike a `limit` that reads only the scan's first
+    * files. Plans as TakeOrderedAndProject: per-partition top-N +
+    * driver merge, no shuffle. */
+  private def fitSample(df: DataFrame, vecCol: String, idCol: String,
+      n: Int): Array[Array[Double]] =
+    df.select(col(vecCol), xxhash64(col(idCol)).as("__h"))
+      .orderBy(col("__h"))
+      .limit(n)
+      .collect()
+      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+
+  /** `v` − centroid `cc`, in double: a query's residual against its
+    * coarse cell. */
+  private def minus[V](v: V, cc: Array[Double])(implicit vec: Vec[V]): Array[Double] =
+    Array.tabulate(vec.len(v))(j => vec.at(v, j) - cc(j))
+
+  /** ADC lookup table of `q` (a query, or its residual against one
+    * cell) against per-subspace codebooks, flat: entry `s·kk + c` is
+    * the squared L2 from centroid c of subspace s to q's subspace-s
+    * slice, rounded to 6 decimals so engines agree. */
+  private def adcTable[V: Vec](cbs: Array[Array[Array[Double]]], q: V): Array[Double] = {
+    val kk = cbs(0).length
+    val sd = cbs(0)(0).length
+    val out = new Array[Double](cbs.length * kk)
+    var s = 0
+    while (s < cbs.length) {
+      var c = 0
+      while (c < kk) { out(s * kk + c) = round6(sqDist(cbs(s)(c), q, s * sd)); c += 1 }
+      s += 1
+    }
+    out
+  }
+
+  /** A row's ADC distance: the [[adcTable]] entries of its per-subspace
+    * codes, summed in subspace order and rounded to 6 decimals. */
+  private def adcDist[L](lut: L, codes: Seq[Int])(implicit vec: Vec[L]): Double = {
+    val kk = vec.len(lut) / codes.length
+    var acc = 0.0
+    var s = 0
+    while (s < codes.length) { acc += vec.at(lut, s * kk + codes(s)); s += 1 }
+    round6(acc)
+  }
 
   /** Sign-random-projection LSH index over an embedding table. */
   final class RandomHyperplaneIndex(
@@ -142,19 +332,6 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id", seed: Int = 42) {
 
     private val planes = hyperplanes(nBits, dim, seed)
-
-    private def bucketOf(vec: Array[Float]): Long = {
-      var b = 0L
-      var i = 0
-      while (i < planes.length) {
-        var dot = 0.0
-        var j = 0
-        while (j < dim && j < vec.length) { dot += planes(i)(j) * vec(j); j += 1 }
-        if (dot > 0) b |= (1L << i)
-        i += 1
-      }
-      b
-    }
 
     private val bucketUdf = planeBucketUdf(planes, dim)
 
@@ -168,19 +345,16 @@ object Similarity {
       * probes = nBits → full Hamming-1 multiprobe). More probes = more
       * of the corpus scanned = higher recall; the parameter is the
       * recall/cost dial. */
-    def query(queryVec: Array[Float], k: Int, probes: Int = 1): DataFrame = {
-      val candidates = probeBuckets(queryVec, probes)
-      bucketed
-        .filter(col("bucket").isin(candidates: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
-    }
+    def query(queryVec: Array[Float], k: Int, probes: Int = 1): DataFrame =
+      bruteForceTopK(bucketed.filter(
+        col("bucket").isin(probeBuckets(queryVec, probes): _*)),
+        queryVec, k, vecCol, idCol)
 
     /** The bucket ids a query with this probe count scans — exposed so an
       * external oracle can verify the pruned scan independently. */
     def probeBuckets(queryVec: Array[Float], probes: Int = 1): Seq[Long] = {
-      val qb = bucketOf(queryVec)
+      val qb = planeBucket(planes, dim,
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(queryVec))
       qb +: (0 until math.min(math.max(probes, 0), nBits)).map(b => qb ^ (1L << b))
     }
 
@@ -193,50 +367,22 @@ object Similarity {
       * than [[probeBuckets]]'s bit-order walk. Deterministic: |dot| is
       * compared in micro-unit longs, ties break to the lower bit
       * index. */
-    def probeBucketsRanked(queryVec: Array[Float], probes: Int): Seq[Long] = {
-      val qb = bucketOf(queryVec)
-      val byConfidence = planes.indices.map { i =>
-        var dot = 0.0
-        var j = 0
-        while (j < dim && j < queryVec.length) {
-          dot += planes(i)(j) * queryVec(j); j += 1
-        }
-        (math.abs(math.round(dot * 1e6)), i)
-      }.sorted.map(_._2)
-      qb +: byConfidence.take(math.min(math.max(probes, 0), nBits))
-        .map(b => qb ^ (1L << b))
-    }
+    def probeBucketsRanked(queryVec: Array[Float], probes: Int): Seq[Long] =
+      rankedProbes(planes, dim,
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(queryVec), probes)
 
     /** [[query]] over [[probeBucketsRanked]] — the recall/cost dial with
       * the probe budget spent where it pays first. */
-    def queryRanked(queryVec: Array[Float], k: Int, probes: Int): DataFrame = {
-      val candidates = probeBucketsRanked(queryVec, probes)
-      bucketed
-        .filter(col("bucket").isin(candidates: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
-    }
+    def queryRanked(queryVec: Array[Float], k: Int, probes: Int): DataFrame =
+      bruteForceTopK(bucketed.filter(
+        col("bucket").isin(probeBucketsRanked(queryVec, probes): _*)),
+        queryVec, k, vecCol, idCol)
 
     /** Ranked probe set as a UDF over a vector column — the relational
       * form of [[probeBucketsRanked]] for whole query TABLES. */
     private val probeUdf = {
-      val p = planes; val d = dim; val n = nBits
-      udf((vec: Seq[Float], probes: Int) => {
-        var home = 0L
-        val confs = new Array[(Long, Int)](n)
-        var i = 0
-        while (i < n) {
-          var dot = 0.0
-          var j = 0
-          while (j < d && j < vec.length) { dot += p(i)(j) * vec(j); j += 1 }
-          if (dot > 0) home |= (1L << i)
-          confs(i) = (math.abs(math.round(dot * 1e6)), i)
-          i += 1
-        }
-        home +: confs.sorted.take(math.min(math.max(probes, 0), n))
-          .map(c => home ^ (1L << c._2)).toSeq
-      })
+      val p = planes; val d = dim
+      udf((vec: Seq[Float], probes: Int) => rankedProbes(p, d, vec, probes))
     }
 
     /** Recall@k audit vs the exact scan — the measurement behind
@@ -287,11 +433,8 @@ object Similarity {
     def queryPartitioned(spark: SparkSession, path: String,
         queryVec: Array[Float], k: Int, probes: Int = 1): DataFrame = {
       val candidates = probeBuckets(queryVec, probes)
-      spark.read.parquet(path)
-        .filter(col("bucket").isin(candidates: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
+      bruteForceTopK(spark.read.parquet(path)
+        .filter(col("bucket").isin(candidates: _*)), queryVec, k, vecCol, idCol)
     }
 
     /** Incremental admission, LSH flavor (the [[IvfIndex]] generation
@@ -313,6 +456,19 @@ object Similarity {
         .partitionBy("bucket").parquet(path)
   }
 
+  /** Inverse of [[IvfIndex.centroidRows]] — rebuild the frozen centroid
+    * array from its persisted (c, j, val) rows, for the warm-restart
+    * constructor path (`prebuiltCenters`). */
+  def centroidsFromRows(rows: DataFrame): Array[Array[Double]] = {
+    val triples = rows.select(col("c").cast("int"), col("j").cast("int"),
+        col("val").cast("double"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+    require(triples.nonEmpty, "centroidsFromRows: empty centroid table")
+    triples.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, cs) =>
+      cs.sortBy(_._2).map(_._3)
+    }.toArray
+  }
+
   /** IVF (inverted-file) ANN index: a k-means coarse quantizer assigns
     * every vector to its nearest centroid; queries probe only the
     * `nProbe` nearest centroid cells and rerank exactly with cosine.
@@ -329,19 +485,6 @@ object Similarity {
     * The scale path: persist `assigned` partitioned by `centroid` and a
     * query prunes to nProbe/nCentroids of the corpus. Centroids live on
     * the driver (tiny). */
-  /** Inverse of [[IvfIndex.centroidRows]] — rebuild the frozen centroid
-    * array from its persisted (c, j, val) rows, for the warm-restart
-    * constructor path (`prebuiltCenters`). */
-  def centroidsFromRows(rows: DataFrame): Array[Array[Double]] = {
-    val triples = rows.select(col("c").cast("int"), col("j").cast("int"),
-        col("val").cast("double"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-    require(triples.nonEmpty, "centroidsFromRows: empty centroid table")
-    triples.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, cs) =>
-      cs.sortBy(_._2).map(_._3)
-    }.toArray
-  }
-
   final class IvfIndex(
       df: DataFrame, nCentroids: Int = 16,
       vecCol: String = "embedding", idCol: String = "vec_id", seed: Long = 42L,
@@ -352,40 +495,18 @@ object Similarity {
       prebuiltCenters: Option[Array[Array[Double]]] = None,
       prebuiltAssigned: Option[DataFrame] = None) {
 
-    /** Centroids from seeded Lloyd's over a bounded sample. The sample
-      * is the `maxFitSample` rows with the smallest `xxhash64(id)` —
-      * content-derived (deterministic across runs/retries, the house
-      * rule) and UNBIASED across the whole corpus, unlike a `limit`
-      * that reads only the scan's first files. Plans as
-      * TakeOrderedAndProject: per-partition top-N + driver merge, no
-      * shuffle — one distributed pass, the same cost class as the
-      * assignment pass that follows. */
+    /** Centroids from seeded Lloyd's over the bounded [[fitSample]] —
+      * one distributed pass, the same cost class as the assignment pass
+      * that follows. */
     val clusterCenters: Array[Array[Double]] = prebuiltCenters.getOrElse {
-      val sample: Array[Array[Double]] = df
-        .select(col(vecCol), xxhash64(col(idCol)).as("__h"))
-        .orderBy(col("__h"))
-        .limit(maxFitSample)
-        .collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      val sample = fitSample(df, vecCol, idCol, maxFitSample)
       require(sample.nonEmpty, "IvfIndex: empty input")
       lloydFit(sample, math.min(nCentroids, sample.length), seed, maxIter)
     }
 
     private val assignUdf = {
       val cs = clusterCenters
-      udf((vec: Seq[Float]) => {
-        var best = 0; var bestD = Double.MaxValue
-        var i = 0
-        while (i < cs.length) {
-          val c = cs(i); var d = 0.0; var j = 0
-          while (j < c.length && j < vec.length) {
-            val t = c(j) - vec(j); d += t * t; j += 1
-          }
-          if (d < bestD) { bestD = d; best = i }
-          i += 1
-        }
-        best
-      })
+      udf((vec: Seq[Float]) => nearest(cs, vec))
     }
 
     /** The partitioned index table — ONE distributed pass; at scale,
@@ -402,22 +523,11 @@ object Similarity {
       }.toSeq.toDF("c", "j", "val")
     }
 
-    private def nearestCentroids(qv: Array[Float], n: Int): Seq[Int] = {
-      clusterCenters.indices.sortBy { i =>
-        val c = clusterCenters(i)
-        var d = 0.0
-        var j = 0
-        while (j < c.length && j < qv.length) {
-          val diff = c(j) - qv(j); d += diff * diff; j += 1
-        }
-        d
-      }.take(n)
-    }
-
-    /** The `nProbe` nearest centroid cells for a query — exposed so an
-      * external oracle can verify the pruned scan independently. */
+    /** The `nProbe` nearest centroid cells for a query (squared L2
+      * ascending, lower centroid index on ties; `nProbe` ≥ 1) — exposed
+      * so an external oracle can verify the pruned scan independently. */
     def probeCells(queryVec: Array[Float], nProbe: Int = 4): Seq[Int] =
-      nearestCentroids(queryVec, nProbe)
+      cellOrder(clusterCenters, queryVec).take(probeWidth(nProbe))
 
     /** Probe cells for a DISTRIBUTED query table — the corpus-scale
       * analog of [[probeCells]]: each row gains its `nProbe` nearest
@@ -432,28 +542,16 @@ object Similarity {
       * in the same cells. */
     def probeAssign(queries: DataFrame, nProbe: Int = 4): DataFrame = {
       val cs = clusterCenters
-      val np = math.max(nProbe, 1)
-      val probeUdf = udf((vec: Seq[Float]) => {
-        val ds = Array.tabulate(cs.length) { i =>
-          val c = cs(i); var d = 0.0; var j = 0
-          while (j < c.length && j < vec.length) {
-            val t = c(j) - vec(j); d += t * t; j += 1
-          }
-          d
-        }
-        cs.indices.sortBy(ds(_)).take(np).toArray
-      })
+      val np = probeWidth(nProbe)
+      val probeUdf = udf((vec: Seq[Float]) => cellOrder(cs, vec).take(np).toArray)
       queries.withColumn("centroid", explode(probeUdf(col(vecCol))))
     }
 
     /** Exact cosine top-k over the nProbe nearest cells only. */
     def query(queryVec: Array[Float], k: Int, nProbe: Int = 4): DataFrame = {
-      val cells = nearestCentroids(queryVec, nProbe)
-      assigned
-        .filter(col("centroid").isin(cells: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
+      val cells = probeCells(queryVec, nProbe)
+      bruteForceTopK(assigned.filter(col("centroid").isin(cells: _*)),
+        queryVec, k, vecCol, idCol)
     }
 
     /** QUANTIZED two-stage serve over the probed cells — the memory
@@ -475,7 +573,7 @@ object Similarity {
     def queryQuantized(queryVec: Array[Float], k: Int, nProbe: Int = 4,
         rerank: Int = 50): DataFrame = {
       require(k >= 1 && rerank >= k, s"need rerank >= k >= 1: $rerank/$k")
-      val cells = nearestCentroids(queryVec, nProbe)
+      val cells = probeCells(queryVec, nProbe)
       val qmax = if (queryVec.isEmpty) 0f else queryVec.map(math.abs).max
       val qCode: Array[Long] = queryVec.map(x =>
         if (qmax == 0f) 0L
@@ -510,15 +608,16 @@ object Similarity {
         .partitionBy("centroid").parquet(path)
 
     /** Query a [[writePartitioned]] table with partition pruning on the
-      * probed cells (centroids come from this index's fitted model). */
+      * probed cells (centroids come from this index's fitted model). The
+      * table may hold any number of appended generations
+      * ([[appendGeneration]]): `generation` is a data column inside each
+      * centroid directory, not a partition level, so the merged read
+      * stays pruned. */
     def queryPartitioned(spark: SparkSession, path: String,
         queryVec: Array[Float], k: Int, nProbe: Int = 4): DataFrame = {
-      val cells = nearestCentroids(queryVec, nProbe)
-      spark.read.parquet(path)
-        .filter(col("centroid").isin(cells: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
+      val cells = probeCells(queryVec, nProbe)
+      bruteForceTopK(spark.read.parquet(path)
+        .filter(col("centroid").isin(cells: _*)), queryVec, k, vecCol, idCol)
     }
 
     /** Filtered ANN with ADAPTIVE probe widening — the standard "vector
@@ -555,11 +654,8 @@ object Similarity {
       val cutoff = cellCum.agg(
         coalesce(min(when(col("cum") >= k, col("probe_rank"))),
           max(col("probe_rank"))).as("cut"))
-      f.join(broadcast(cutoff))
-        .filter(col("probe_rank") <= col("cut"))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
+      bruteForceTopK(f.join(broadcast(cutoff))
+          .filter(col("probe_rank") <= col("cut")), queryVec, k, vecCol, idCol)
         .select(col(idCol), col("centroid"), col("probe_rank"), col("cos"))
     }
 
@@ -567,8 +663,7 @@ object Similarity {
       * probe_rank) pairs, probe_rank 0-based — the probe order
       * [[queryFilteredAdaptive]] widens along. */
     def probeOrder(queryVec: Array[Float]): Seq[(Int, Int)] =
-      nearestCentroids(queryVec, clusterCenters.length)
-        .zipWithIndex.map { case (c, r) => (c, r) }
+      cellOrder(clusterCenters, queryVec).zipWithIndex
 
     // -----------------------------------------------------------------
     // Incremental maintenance (round-6 judge directive): a 100 TB corpus
@@ -589,7 +684,7 @@ object Similarity {
 
     /** Write `assigned` as generation `gen` of an on-disk index. Append
       * mode: generations coexist inside each centroid partition, so the
-      * probed-cell pruning of [[queryGenerations]] is untouched by how
+      * probed-cell pruning of [[queryPartitioned]] is untouched by how
       * many batches arrived. */
     def writeGeneration(path: String, gen: Int): Unit =
       assigned.withColumn("generation", lit(gen))
@@ -602,21 +697,6 @@ object Similarity {
       appendAssign(batch).withColumn("generation", lit(gen))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("centroid").parquet(path)
-
-    /** Exact cosine top-k over the probed cells of an on-disk index
-      * with ANY number of appended generations — identical contract to
-      * [[queryPartitioned]]; the merged read stays partition-pruned
-      * because `generation` is a data column inside each centroid
-      * directory, not a partition level above it. */
-    def queryGenerations(spark: SparkSession, path: String,
-        queryVec: Array[Float], k: Int, nProbe: Int = 4): DataFrame = {
-      val cells = nearestCentroids(queryVec, nProbe)
-      spark.read.parquet(path)
-        .filter(col("centroid").isin(cells: _*))
-        .withColumn("cos", round(vecCosine(col(vecCol), typedlit(queryVec)), 6))
-        .orderBy(desc("cos"), col(idCol))
-        .limit(k)
-    }
 
     /** Drift monitor: how stale are the frozen centroids for a newly
       * arrived batch? Refits fresh centroids on a bounded hash-ordered
@@ -637,12 +717,7 @@ object Similarity {
       *    data), so this reads high without real drift; the
       *    quantization-error ratio is the alignment-free signal. */
     def driftMonitor(batch: DataFrame, threshold: Double = 1.5): DriftReport = {
-      val sample: Array[Array[Double]] = batch
-        .select(col(vecCol), xxhash64(col(idCol)).as("__h"))
-        .orderBy(col("__h"))
-        .limit(maxFitSample)
-        .collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      val sample = fitSample(batch, vecCol, idCol, maxFitSample)
       require(sample.nonEmpty, "driftMonitor: empty batch")
       val frozen = clusterCenters
       // refit with the FROZEN center count, not the constructor param
@@ -653,16 +728,16 @@ object Similarity {
       val refit = lloydFit(sample,
         math.min(clusterCenters.length, sample.length), seed, maxIter)
       // map each refit cell to its nearest frozen cell
-      val refitToFrozen = refit.map(rc => nearestIdx(rc, frozen))
+      val refitToFrozen = refit.map(rc => nearest(frozen, rc))
       var reassigned = 0L
       var frozenErr = 0.0
       var refitErr = 0.0
       for (v <- sample) {
-        val fCell = nearestIdx(v, frozen)
-        val rCell = nearestIdx(v, refit)
+        val fCell = nearest(frozen, v)
+        val rCell = nearest(refit, v)
         if (refitToFrozen(rCell) != fCell) reassigned += 1
-        frozenErr += sqDist(v, frozen(fCell))
-        refitErr += sqDist(v, refit(rCell))
+        frozenErr += sqDist(frozen(fCell), v)
+        refitErr += sqDist(refit(rCell), v)
       }
       val frac = reassigned.toDouble / sample.length
       // refitErr == 0 means the refit quantizes the batch EXACTLY (e.g.
@@ -688,10 +763,10 @@ object Similarity {
       threshold: Double, stale: Boolean)
 
   /** Seeded Lloyd's iterations over a driver-side sample — the shared
-    * fit behind [[IvfIndex.clusterCenters]] and
-    * [[IvfIndex.driftMonitor]]'s refit. Deterministic: seeded init (k
-    * distinct sample points), fixed iteration order, empty cells keep
-    * their previous center. */
+    * fit behind [[IvfIndex.clusterCenters]], [[IvfIndex.driftMonitor]]'s
+    * refit and every [[PqIndex.codebooks]] subspace. Deterministic:
+    * seeded init (k distinct sample points), fixed iteration order,
+    * empty cells keep their previous center. */
   private[ops] def lloydFit(sample: Array[Array[Double]], k: Int,
       seed: Long, maxIter: Int): Array[Array[Double]] = {
     val dim = sample.head.length
@@ -705,15 +780,7 @@ object Similarity {
       moved = false
       var p = 0
       while (p < sample.length) {
-        val v = sample(p)
-        var best = 0; var bestD = Double.MaxValue
-        var i = 0
-        while (i < k) {
-          val c = centers(i); var d = 0.0; var j = 0
-          while (j < dim) { val t = c(j) - v(j); d += t * t; j += 1 }
-          if (d < bestD) { bestD = d; best = i }
-          i += 1
-        }
+        val best = nearest(centers, sample(p))
         if (assign(p) != best) { assign(p) = best; moved = true }
         p += 1
       }
@@ -737,23 +804,6 @@ object Similarity {
       it += 1
     }
     centers
-  }
-
-  private def sqDist(v: Array[Double], c: Array[Double]): Double = {
-    var d = 0.0; var j = 0
-    val n = math.min(v.length, c.length)
-    while (j < n) { val t = c(j) - v(j); d += t * t; j += 1 }
-    d
-  }
-
-  private def nearestIdx(v: Array[Double], cs: Array[Array[Double]]): Int = {
-    var best = 0; var bestD = Double.MaxValue; var i = 0
-    while (i < cs.length) {
-      val d = sqDist(v, cs(i))
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
   }
 
   /** Product quantization (PQ) — the compression tier of the ANN family
@@ -786,84 +836,24 @@ object Similarity {
       * subspace s. Same seeded Lloyd's as [[IvfIndex.clusterCenters]],
       * run independently per subspace over the same sample. */
     val codebooks: Array[Array[Array[Double]]] = {
-      val sample: Array[Array[Double]] = df
-        .select(col(vecCol), xxhash64(col(idCol)).as("__h"))
-        .orderBy(col("__h"))
-        .limit(maxFitSample)
-        .collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      val sample = fitSample(df, vecCol, idCol, maxFitSample)
       require(sample.nonEmpty, "PqIndex: empty input")
       val dim = sample.head.length
       require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
       val sub = dim / m
       Array.tabulate(m) { s =>
         val slice = sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-        val rng = new java.util.Random(seed + s)
-        val kk = math.min(k, slice.length)
-        val centers = rng.ints(0, slice.length).distinct().limit(kk.toLong)
-          .toArray.map(slice(_).clone())
-        val assign = new Array[Int](slice.length)
-        var it = 0; var moved = true
-        while (it < maxIter && moved) {
-          moved = false
-          var p = 0
-          while (p < slice.length) {
-            val v = slice(p); var best = 0; var bestD = Double.MaxValue
-            var i = 0
-            while (i < kk) {
-              val c = centers(i); var d = 0.0; var j = 0
-              while (j < sub) { val t = c(j) - v(j); d += t * t; j += 1 }
-              if (d < bestD) { bestD = d; best = i }
-              i += 1
-            }
-            if (assign(p) != best) { assign(p) = best; moved = true }
-            p += 1
-          }
-          val sums = Array.fill(kk)(new Array[Double](sub))
-          val counts = new Array[Int](kk)
-          var p2 = 0
-          while (p2 < slice.length) {
-            val v = slice(p2); val a = assign(p2); counts(a) += 1
-            var j = 0
-            while (j < sub) { sums(a)(j) += v(j); j += 1 }
-            p2 += 1
-          }
-          var i = 0
-          while (i < kk) {
-            if (counts(i) > 0) {
-              var j = 0
-              while (j < sub) { centers(i)(j) = sums(i)(j) / counts(i); j += 1 }
-            }
-            i += 1
-          }
-          it += 1
-        }
-        centers
+        lloydFit(slice, math.min(k, slice.length), seed + s, maxIter)
       }
     }
 
-    private val subDim = codebooks(0)(0).length
-
     private[ops] val encodeVecUdf = {
       val cbs = codebooks
-      val sd = subDim
+      val sd = cbs(0)(0).length
       udf((vec: Seq[Float]) => {
         val out = new Array[Int](cbs.length)
         var s = 0
-        while (s < cbs.length) {
-          val cb = cbs(s); var best = 0; var bestD = Double.MaxValue
-          var i = 0
-          while (i < cb.length) {
-            val c = cb(i); var d = 0.0; var j = 0
-            while (j < sd) {
-              val t = c(j) - vec(s * sd + j); d += t * t; j += 1
-            }
-            if (d < bestD) { bestD = d; best = i }
-            i += 1
-          }
-          out(s) = best
-          s += 1
-        }
+        while (s < cbs.length) { out(s) = nearest(cbs(s), vec, s * sd); s += 1 }
         out
       })
     }
@@ -905,20 +895,8 @@ object Similarity {
 
     private def scoreAndTake(base: DataFrame, queryVec: Array[Float],
         topK: Int): DataFrame = {
-      val lut: Array[Array[Double]] = Array.tabulate(m) { s =>
-        codebooks(s).map { c =>
-          var d = 0.0; var j = 0
-          while (j < subDim) {
-            val t = c(j) - queryVec(s * subDim + j); d += t * t; j += 1
-          }
-          round6(d)
-        }
-      }
-      val scoreUdf = udf((codes: Seq[Int]) => {
-        var acc = 0.0; var s = 0
-        while (s < lut.length) { acc += lut(s)(codes(s)); s += 1 }
-        round6(acc)
-      })
+      val lut = adcTable(codebooks, queryVec)
+      val scoreUdf = udf((codes: Seq[Int]) => adcDist(lut, codes))
       base
         .select(col(idCol), scoreUdf(col("codes")).as("adc_dist"))
         .orderBy(col("adc_dist").asc, col(idCol).asc)
@@ -943,47 +921,33 @@ object Similarity {
 
     val coarse = new IvfIndex(df, nCells, vecCol, idCol, seed, maxFitSample)
 
-    /** assigned + `__residual` (v − centroid), one distributed pass. */
-    val residuals: DataFrame = {
+    /** (vector, its cell) → the float residual v − centroid: one UDF
+      * for the stored corpus and for admitted batches. */
+    private val residualUdf = {
       val centers = coarse.clusterCenters
-      val resUdf = udf((v: Seq[Float], c: Int) => {
+      udf((v: Seq[Float], c: Int) => {
         val cc = centers(c)
         Array.tabulate(v.length)(j => (v(j) - cc(j)).toFloat)
       })
-      coarse.assigned
-        .withColumn("__residual", resUdf(col(vecCol), col("centroid")))
     }
+
+    /** assigned + `__residual` (v − centroid), one distributed pass. */
+    val residuals: DataFrame = coarse.assigned
+      .withColumn("__residual", residualUdf(col(vecCol), col("centroid")))
 
     val pq = new PqIndex(residuals, m, k, vecCol = "__residual",
       idCol = idCol, seed = seed, maxFitSample = maxFitSample)
-
-    private lazy val subDim = df.select(col(vecCol)).first()
-      .getSeq[Float](0).length / m
 
     /** Probe `nProbe` cells, ADC-score their members against per-cell
       * residual LUTs, ascending top-k with id tie-break. */
     def query(queryVec: Array[Float], topK: Int, nProbe: Int = 4): DataFrame = {
       val cells = coarse.probeCells(queryVec, nProbe)
-      val centers = coarse.clusterCenters
-      val cbs = pq.codebooks
-      val sd = subDim
-      val luts: Map[Int, Array[Array[Double]]] = cells.map { cell =>
-        val cc = centers(cell)
-        val rq = Array.tabulate(queryVec.length)(j => queryVec(j) - cc(j))
-        cell -> Array.tabulate(m) { s =>
-          cbs(s).map { c =>
-            var d = 0.0; var j = 0
-            while (j < sd) { val t = c(j) - rq(s * sd + j); d += t * t; j += 1 }
-            round6(d)
-          }
-        }
+      val luts: Map[Int, Array[Double]] = cells.map { cell =>
+        cell -> adcTable(pq.codebooks,
+          minus(queryVec, coarse.clusterCenters(cell)))
       }.toMap
-      val scoreUdf = udf((cell: Int, codes: Seq[Int]) => {
-        val lut = luts(cell)
-        var acc = 0.0; var s = 0
-        while (s < lut.length) { acc += lut(s)(codes(s)); s += 1 }
-        round6(acc)
-      })
+      val scoreUdf = udf((cell: Int, codes: Seq[Int]) =>
+        adcDist(luts(cell), codes))
       pq.encoded
         .join(coarse.assigned.select(col(idCol), col("centroid")), Seq(idCol))
         .filter(col("centroid").isin(cells.map(_.asInstanceOf[AnyRef]): _*))
@@ -1010,38 +974,15 @@ object Similarity {
       require(topK >= 1 && nProbe >= 1, s"bad shape k=$topK nProbe=$nProbe")
       val centers = coarse.clusterCenters
       val cbs = pq.codebooks
-      val sd = subDim
-      val mm = m
-      val kk = cbs(0).length
-      val lutUdf = udf((qv: Seq[Float], cell: Int) => {
-        val cc = centers(cell)
-        val rq = Array.tabulate(qv.length)(j => qv(j) - cc(j))
-        val out = new Array[Double](mm * kk)
-        var s = 0
-        while (s < mm) {
-          val cb = cbs(s); var ci = 0
-          while (ci < cb.length) {
-            var d = 0.0; var j = 0
-            while (j < sd) {
-              val t = cb(ci)(j) - rq(s * sd + j); d += t * t; j += 1
-            }
-            out(s * kk + ci) = round6(d)
-            ci += 1
-          }
-          s += 1
-        }
-        out
-      })
+      val lutUdf = udf((qv: Seq[Float], cell: Int) =>
+        adcTable(cbs, minus(qv, centers(cell))))
       val luts = coarse.probeAssign(
           queries.select(col(queryIdCol).as("qid"),
             col(queryVecCol).as(vecCol)), nProbe)
         .withColumn("__lut", lutUdf(col(vecCol), col("centroid")))
         .select("qid", "centroid", "__lut")
-      val scoreUdf = udf((codes: Seq[Int], lut: Seq[Double]) => {
-        var acc = 0.0; var s = 0
-        while (s < mm) { acc += lut(s * kk + codes(s)); s += 1 }
-        round6(acc)
-      })
+      val scoreUdf = udf((codes: Seq[Int], lut: Seq[Double]) =>
+        adcDist(lut, codes))
       val scored = pq.encoded
         .join(coarse.assigned.select(col(idCol), col("centroid")), Seq(idCol))
         .join(broadcast(luts), Seq("centroid"))
@@ -1061,18 +1002,11 @@ object Similarity {
       * bit-for-bit (q347 proves it against a one-pass rebuild), and a
       * 100 TB corpus admits batches without ever re-reading stored
       * codes. Returns (idCol, centroid, codes) — one map-side pass. */
-    def encodeAssign(batch: DataFrame): DataFrame = {
-      val assigned = coarse.appendAssign(batch)
-      val centers = coarse.clusterCenters
-      val resUdf = udf((v: Seq[Float], c: Int) => {
-        val cc = centers(c)
-        Array.tabulate(v.length)(j => (v(j) - cc(j)).toFloat)
-      })
-      assigned
-        .withColumn("__residual", resUdf(col(vecCol), col("centroid")))
+    def encodeAssign(batch: DataFrame): DataFrame =
+      coarse.appendAssign(batch)
+        .withColumn("__residual", residualUdf(col(vecCol), col("centroid")))
         .select(col(idCol), col("centroid"),
           pq.encodeVecUdf(col("__residual")).as("codes"))
-    }
 
     /** [[encodeAssign]] + Append-mode write as generation `gen`,
       * partitioned by `centroid` like [[IvfIndex.writeGeneration]] —
@@ -1105,7 +1039,7 @@ object Similarity {
     * each directory's files in place — re-runnable, a crash leaves
     * some partitions compacted and the rest untouched, all readable.
     *
-    * Query identity: `queryGenerations`/`queryPartitioned` never key on
+    * Query identity: the `queryPartitioned` reads never key on
     * `generation` (it is provenance, not pruning structure), so top-k
     * results are bit-identical pre/post — spec-asserted, and oracle
     * q153 is unaffected because it compacts nothing. */
@@ -1318,13 +1252,6 @@ object Similarity {
     * candidates are serving-sized by contract. */
   def mmrSelect[A](cands: Seq[(A, Double, Array[Float])], k: Int,
       lambda: Double)(implicit ord: Ordering[A]): Seq[(A, Double, Double, Long)] = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1 }
-      if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
     val selected = scala.collection.mutable.ArrayBuffer.empty[(A, Double, Double)]
     val chosen = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
     val remaining = scala.collection.mutable.LinkedHashMap(
@@ -1337,7 +1264,7 @@ object Similarity {
       // first pick has no selected set, so its penalty term is 0
       val best = remaining.values.map { case (id, rel, v) =>
         val maxSim = if (chosen.isEmpty) 0.0
-          else chosen.map(s => round6(cos(v, s))).max
+          else chosen.map(s => cos6(v, s)).max
         val mmr = round6(lambda * rel - (1 - lambda) * maxSim)
         (id, rel, mmr)
       }.minBy { case (id, _, mmr) => (-mmr, id) }(
@@ -1388,13 +1315,10 @@ object Similarity {
   final class HnswIndex(df: DataFrame, m: Int = 8, maxLevel: Int = 3,
       vecCol: String = "embedding", idCol: String = "vec_id",
       build: String = "broadcast", dim: Int = 64,
-      descentRounds: Int = 2, seedBits: Int = 16,
       prebuiltGraph: Option[DataFrame] = None) {
     require(m >= 2 && maxLevel >= 1, s"bad HNSW shape m=$m maxLevel=$maxLevel")
     require(build == "broadcast" || build == "nndescent",
       s"build must be 'broadcast' or 'nndescent', got '$build'")
-    require(descentRounds >= 1 && seedBits >= 2 && seedBits <= 62,
-      s"bad descent shape rounds=$descentRounds seedBits=$seedBits")
     import org.apache.spark.sql.expressions.Window
 
     private val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
@@ -1467,48 +1391,15 @@ object Similarity {
       import spark.implicits._
       val mm = m
       val bc = memberBc
-      val fwd = nodes.mapPartitions { it =>
+      symmetric(nodes.mapPartitions { it =>
         val mems = bc.value
         it.flatMap { case (qid, qv, qlvl) =>
           (0 to qlvl).iterator.flatMap { l =>
-            val deg = if (l == 0) 2 * mm else mm
-            // bounded heap, worst-on-top: max of (-cos, id) = lowest
-            // cos, largest id among ties — eviction order mirrors the
-            // (cos desc, id asc) neighbor ranking
-            val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-              Ordering.by((t: (Double, Long)) => (-t._1, t._2)))
-            var i = 0
-            while (i < mems.length) {
-              val (oid, ov, olvl) = mems(i)
-              if (olvl >= l && oid != qid) {
-                var dot = 0.0; var nx = 0.0; var ny = 0.0
-                var j = 0
-                val n = math.min(qv.length, ov.length)
-                while (j < n) {
-                  val xv = qv(j).toDouble; val yv = ov(j).toDouble
-                  dot += xv * yv; nx += xv * xv; ny += yv * yv
-                  j += 1
-                }
-                val cos =
-                  if (nx == 0.0 || ny == 0.0) 0.0
-                  else round6(dot / (math.sqrt(nx) * math.sqrt(ny)))
-                if (heap.size < deg) heap.enqueue((cos, oid))
-                else {
-                  val (wc, wid) = heap.head
-                  if (cos > wc || (cos == wc && oid < wid)) {
-                    heap.dequeue(); heap.enqueue((cos, oid))
-                  }
-                }
-              }
-              i += 1
-            }
-            heap.toSeq.map { case (cos, oid) => (l, qid, oid, cos) }
+            topDeg(qid, qv, mems, l, if (l == 0) 2 * mm else mm)
+              .map { case (cos, oid) => (l, qid, oid, cos) }
           }
         }
-      }.toDF("layer", "id", "nbr", "cos")
-      fwd.unionByName(fwd.select(col("layer"), col("nbr").as("id"),
-          col("id").as("nbr"), col("cos")))
-        .distinct()
+      }.toDF("layer", "id", "nbr", "cos"))
     }
 
     /** The neighbor graph, by build mode:
@@ -1534,6 +1425,40 @@ object Similarity {
     // localCheckpoint (not cache()) also truncates the build lineage,
     // so every per-hop action downstream analyzes a flat leaf instead
     // of re-stringifying the whole NN-descent plan per job.
+
+    /** Upper layers at or under this member count take the exact
+      * block pass scoped to that layer's members — a CONSTANT-bounded
+      * collect (never corpus-proportional: the cap, not the corpus,
+      * bounds it), saving the descent machinery's per-round jobs where
+      * a layer is 16^ℓ-shrunk into triviality. Layer 0 always runs
+      * NN-descent. */
+    private val smallLayerCap = 2048
+
+    /** NN-descent refinement rounds per layer, in the self-build and in
+      * distributed admission. */
+    private val descentRounds = 2
+
+    /** The most planes a fine seed-bucket table uses. */
+    private val seedBits = 16
+
+    /** Greedy steps the walk takes on each upper layer. Upper layers
+      * checkpoint once per layer, so the in-layer plan references the
+      * layer-entry frontier at most 2^hopsPerLayer = 4 times. */
+    private val hopsPerLayer = 2
+
+    /** Seed-bucket width for a layer of `n` members: ≈64 members per
+      * fine bucket, `seedBits` planes at most, 0 (one ring bucket —
+      * full connectivity) for tiny layers. ONE definition shared by
+      * the self-build and the admission path, so build-time and
+      * admission-time seeding cannot drift. */
+    private def seedWidthFor(n: Long): Int =
+      math.max(0, math.min(seedBits, math.ceil(
+        math.log(math.max(n, 1).toDouble / 64.0) / math.log(2.0)).toInt))
+
+    /** The two seed hash tables (fine + coarse-for-connectivity) as
+      * (bits, seed) pairs. */
+    private def seedTables(bitsF: Int): Seq[(Int, Int)] =
+      Seq((bitsF, 42), (math.max(bitsF - 2, 0), 101))
 
     /** Distributed kNN-graph build — LSH-seeded NN-descent (Dong,
       * Moses, Li, WWW 2011), the at-scale swap for the broadcast block
@@ -1564,28 +1489,6 @@ object Similarity {
       * hyperplanes, md5 ranks, round6 cosines, (cos desc, id asc)
       * tie-breaks — a rebuild is bit-identical, and the graph feeds the
       * same aux-dump oracle replay as the broadcast build (q211). */
-    /** Upper layers at or under this member count take the exact
-      * block pass scoped to that layer's members — a CONSTANT-bounded
-      * collect (never corpus-proportional: the cap, not the corpus,
-      * bounds it), saving the descent machinery's per-round jobs where
-      * a layer is 16^ℓ-shrunk into triviality. Layer 0 always runs
-      * NN-descent. */
-    private val smallLayerCap = 2048
-
-    /** Seed-bucket width for a layer of `n` members: ≈64 members per
-      * fine bucket, `seedBits` planes at most, 0 (one ring bucket —
-      * full connectivity) for tiny layers. ONE definition shared by
-      * the self-build and the admission path, so build-time and
-      * admission-time seeding cannot drift. */
-    private def seedWidthFor(n: Long): Int =
-      math.max(0, math.min(seedBits, math.ceil(
-        math.log(math.max(n, 1).toDouble / 64.0) / math.log(2.0)).toInt))
-
-    /** The two seed hash tables (fine + coarse-for-connectivity) as
-      * (bits, seed) pairs. */
-    private def seedTables(bitsF: Int): Seq[(Int, Int)] =
-      Seq((bitsF, 42), (math.max(bitsF - 2, 0), 101))
-
     private def nnDescentGraph(): DataFrame = {
       val members = withLevels(vecs, levels).toDF("id", "vec", "level")
         .localCheckpoint()
@@ -1609,11 +1512,8 @@ object Similarity {
           else nnDescentLayer(mem, deg, cnt)
         edges.withColumn("layer", lit(l))
       }
-      val all = layerEdges.reduce(_ unionByName _)
-        .select("layer", "id", "nbr", "cos")
-      all.unionByName(all.select(col("layer"), col("nbr").as("id"),
-          col("id").as("nbr"), col("cos")))
-        .distinct()
+      symmetric(layerEdges.reduce(_ unionByName _)
+        .select("layer", "id", "nbr", "cos"))
     }
 
     /** Per-layer member counts from ONE aggregation job: `counts(l)` =
@@ -1664,24 +1564,8 @@ object Similarity {
         .as[(Long, Array[Float])].mapPartitions { it =>
           val mems = bc.value
           it.flatMap { case (qid, qv) =>
-            val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-              Ordering.by((t: (Double, Long)) => (-t._1, t._2)))
-            var i = 0
-            while (i < mems.length) {
-              val (oid, ov, olvl) = mems(i)
-              if (olvl >= minLevel && oid != qid) {
-                val c = cos6(qv, ov)
-                if (heap.size < deg) heap.enqueue((c, oid))
-                else {
-                  val (wc, wid) = heap.head
-                  if (c > wc || (c == wc && oid < wid)) {
-                    heap.dequeue(); heap.enqueue((c, oid))
-                  }
-                }
-              }
-              i += 1
-            }
-            heap.toSeq.map { case (c, oid) => (qid, oid, c) }
+            topDeg(qid, qv, mems, minLevel, deg)
+              .map { case (c, oid) => (qid, oid, c) }
           }
         }.toDF("id", "nbr", "cos")
     }
@@ -1801,7 +1685,7 @@ object Similarity {
         .toDF("id", "vec", "level").localCheckpoint()
       val sm = withLevels(vecs, levels).toDF("id", "vec", "level")
         .localCheckpoint()
-      val g = cachedGraph
+      val g = graph
       // one-pass layer sizing for BOTH sides (two jobs replace the old
       // two count() jobs per layer) + one shared broadcast for every
       // small stored layer — the nnDescentGraph discipline
@@ -1856,18 +1740,9 @@ object Similarity {
         }
         edges.withColumn("layer", lit(l))
       }
-      val all = layerEdges.reduce(_ unionByName _)
-        .select("layer", "id", "nbr", "cos")
-      all.unionByName(all.select(col("layer"), col("nbr").as("id"),
-          col("id").as("nbr"), col("cos")))
-        .distinct()
+      symmetric(layerEdges.reduce(_ unionByName _)
+        .select("layer", "id", "nbr", "cos"))
     }
-
-    /** The graph materialized once per index instance — the walk joins
-      * it once per hop, and without a cache every hop would re-run the
-      * kNN construction. Alias of [[graph]] (which caches itself), so
-      * build-phase actions and the walk share one materialization. */
-    private lazy val cachedGraph = graph
 
     /** Entry node: max level, smallest id (one bounded driver read of
       * one row — the IVF probe-ranking cost class). */
@@ -1875,18 +1750,17 @@ object Similarity {
       levels.orderBy(desc("level"), col("id")).limit(1).head.getLong(0)
 
     /** Beam-search top-k: returns (vec_id, cos) for the best `k` of the
-      * visited set. `hopsPerLayer` fixes how many greedy steps each
-      * upper layer takes (classic HNSW iterates to a local optimum —
+      * visited set. Each upper layer takes a fixed `hopsPerLayer` = 2
+      * greedy steps (classic HNSW iterates to a local optimum —
       * data-dependent; a fixed count keeps the plan static and the
-      * oracle unrollable, and acts as a recall dial like ef/hops).
-      * Upper layers checkpoint once per layer, so the in-layer plan
-      * references the layer-entry frontier up to 2^`hopsPerLayer`
-      * times: plan size grows exponentially in `hopsPerLayer`. */
+      * oracle unrollable). Upper layers checkpoint once per layer, so
+      * the in-layer plan references the layer-entry frontier at most
+      * 2² = 4 times. */
     def search(queryVec: Array[Float], k: Int, ef: Int = 16,
-        hops: Int = 3, hopsPerLayer: Int = 2): DataFrame = {
-      require(k >= 1 && ef >= 1 && hops >= 1 && hopsPerLayer >= 1,
-        s"bad search shape k=$k ef=$ef hops=$hops hopsPerLayer=$hopsPerLayer")
-      visitedPool(queryVec, ef, hops, hopsPerLayer)
+        hops: Int = 3): DataFrame = {
+      require(k >= 1 && ef >= 1 && hops >= 1,
+        s"bad search shape k=$k ef=$ef hops=$hops")
+      visitedPool(queryVec, ef, hops)
         .orderBy(desc("cos"), col("id")).limit(k)
         .select(col("id").as(idCol), col("cos"))
     }
@@ -1902,12 +1776,11 @@ object Similarity {
       * `prebuiltGraph`) serves with no per-query tombstone cost.
       * `tombstones` carries this index's `idCol`. */
     def searchTombstoned(queryVec: Array[Float], k: Int,
-        tombstones: DataFrame, ef: Int = 16, hops: Int = 3,
-        hopsPerLayer: Int = 2): DataFrame = {
-      require(k >= 1 && ef >= 1 && hops >= 1 && hopsPerLayer >= 1,
-        s"bad search shape k=$k ef=$ef hops=$hops hopsPerLayer=$hopsPerLayer")
+        tombstones: DataFrame, ef: Int = 16, hops: Int = 3): DataFrame = {
+      require(k >= 1 && ef >= 1 && hops >= 1,
+        s"bad search shape k=$k ef=$ef hops=$hops")
       val t = tombstones.select(col(idCol).cast("long").as("id")).distinct()
-      visitedPool(queryVec, ef, hops, hopsPerLayer)
+      visitedPool(queryVec, ef, hops)
         .join(t, Seq("id"), "left_anti")
         .orderBy(desc("cos"), col("id")).limit(k)
         .select(col("id").as(idCol), col("cos"))
@@ -1926,12 +1799,12 @@ object Similarity {
       * rows, same round-6 cosines, same tie-breaks (only the point at
       * which the cosine expression evaluates moved). Upper layers
       * checkpoint once per LAYER, not per hop: the in-layer plan
-      * references the layer-entry frontier ≤ 2^hopsPerLayer times
+      * references the layer-entry frontier ≤ 2^hopsPerLayer = 4 times
       * (bounded — the lineage-doubling discipline holds), and the walk
       * pays maxLevel jobs instead of maxLevel·hopsPerLayer. */
     private def visitedPool(queryVec: Array[Float], ef: Int,
-        hops: Int, hopsPerLayer: Int): DataFrame = {
-      val g = cachedGraph
+        hops: Int): DataFrame = {
+      val g = graph
       val qv = typedlit(queryVec)
       def scoreIds(ids: DataFrame): DataFrame = ids
         .join(vecs, "id")
@@ -1992,16 +1865,16 @@ object Similarity {
       * tie-breaks replicate [[search]] exactly, so a batch row equals
       * the single-query walk for the same vector (HnswSpec asserts
       * it). As in [[search]], the in-layer plan references the
-      * layer-entry frontier up to 2^`hopsPerLayer` times. Returns
+      * layer-entry frontier at most 2² = 4 times. Returns
       * (queryIdCol, idCol, cos), top-k per query. */
     def searchBatch(queries: DataFrame, k: Int, ef: Int = 16,
-        hops: Int = 3, hopsPerLayer: Int = 2,
+        hops: Int = 3,
         queryIdCol: String = "query_id",
         queryVecCol: String = "qv",
         tombstones: Option[DataFrame] = None): DataFrame = {
-      require(k >= 1 && ef >= 1 && hops >= 1 && hopsPerLayer >= 1,
-        s"bad search shape k=$k ef=$ef hops=$hops hopsPerLayer=$hopsPerLayer")
-      val g = cachedGraph
+      require(k >= 1 && ef >= 1 && hops >= 1,
+        s"bad search shape k=$k ef=$ef hops=$hops")
+      val g = graph
       val qs = queries.select(col(queryIdCol).as("qid"),
         col(queryVecCol).as("__qv")).localCheckpoint()
       def scoreOf(cand: DataFrame): DataFrame = cand
@@ -2012,8 +1885,8 @@ object Similarity {
       var cur = scoreOf(qs.select(col("qid"), lit(entryId).as("id")))
         .localCheckpoint()
       // one checkpoint per LAYER (was per hop): the in-layer plan
-      // references the layer-entry frontier ≤ 2^hopsPerLayer times —
-      // bounded — and the descent pays maxLevel jobs, not
+      // references the layer-entry frontier ≤ 2^hopsPerLayer = 4 times
+      // — and the descent pays maxLevel jobs, not
       // maxLevel·hopsPerLayer (the visitedPool discipline)
       // no distinct() on candidate ids (the visitedPool rule): duplicate
       // (qid, id) candidate rows cannot change a per-qid top-1, and the
@@ -2125,10 +1998,7 @@ object Similarity {
       .filter(col("__rn") <= col("__k"))
       .select(col("layer"), col("u").as("id"), col("c").as("nbr"),
         col("cos"))
-    val rep = alive.unionByName(adds)
-    rep.unionByName(rep.select(col("layer"), col("nbr").as("id"),
-        col("id").as("nbr"), col("cos")))
-      .distinct()
+    symmetric(alive.unionByName(adds))
   }
 
   // --- Distributed k-means (full-data Lloyd's) ------------------------

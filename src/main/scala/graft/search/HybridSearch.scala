@@ -772,10 +772,9 @@ object HybridSearch {
     * ([[graft.ops.Similarity.HnswIndex.searchBatch]]: every hop one
     * (query_id, id)-keyed frontier⋈graph join for the whole query
     * table) feeding [[searchAll]]'s batched BM25 branch and per-query
-    * RRF fusion. This closes the serving matrix: batched brute
-    * ([[searchAll]]), batched IVF (searchAllAnn family), and now
-    * batched HNSW — a thousand queries pay one plan's worth of Spark
-    * jobs instead of a thousand walks. Per-query results equal the
+    * RRF fusion. With [[searchAll]] (batched brute) it is one of the
+    * two batched dense tiers: a thousand queries pay one plan's worth
+    * of Spark jobs instead of a thousand walks. Per-query results equal the
     * single [[Dense.Hnsw]] search for the same query string (HybridSearchSpec
     * asserts it); ordered (query_id, rrf_score desc, id). */
   def searchAllHnsw(index: DataFrame, hs: HnswServing,

@@ -1134,6 +1134,64 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(overlap >= 3, s"IVF(4/8 probes) should recover some of brute-force top-10, got $overlap")
   }
 
+  /** A seeded Gaussian corpus: 300 rows of 16-d float vectors. */
+  private lazy val gauss = {
+    val rng = new java.util.Random(7L)
+    (0 until 300).map(i => (i.toLong, Seq.fill(16)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+  }
+
+  test("every IVF probe path rejects nProbe < 1") {
+    val idx = new Similarity.IvfIndex(gauss, nCentroids = 8)
+    val q = gauss.filter($"vec_id" === 5).select("embedding")
+      .as[Seq[Float]].head().toArray
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_np").toString
+    idx.writePartitioned(s"$tmp/ivf")
+    val residual = new Similarity.IvfPqResidualIndex(gauss, nCells = 8, m = 4)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "probeCells" -> (() => idx.probeCells(q, 0)),
+      "query" -> (() => idx.query(q, k = 5, nProbe = 0)),
+      "queryQuantized" -> (() => idx.queryQuantized(q, k = 5, nProbe = 0)),
+      "queryPartitioned" -> (() =>
+        idx.queryPartitioned(spark, s"$tmp/ivf", q, k = 5, nProbe = 0)),
+      "IvfPqResidualIndex.query" -> (() =>
+        residual.query(q, topK = 5, nProbe = 0)),
+      "probeAssign" -> (() => idx.probeAssign(gauss, nProbe = 0)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("nProbe"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("driver and UDF twins agree: LSH buckets, IVF cells, batched probes") {
+    val rows = gauss.as[(Long, Seq[Float])].collect()
+    val lsh = new Similarity.RandomHyperplaneIndex(gauss, nBits = 8, dim = 16)
+    val buckets = lsh.bucketed.select("vec_id", "bucket").as[(Long, Long)]
+      .collect().toMap
+    rows.foreach { case (id, v) =>
+      assert(buckets(id) == lsh.probeBuckets(v.toArray, 0).head, s"bucket of $id")
+    }
+    val nCentroids = 8
+    val ivf = new Similarity.IvfIndex(gauss, nCentroids = nCentroids)
+    val cells = ivf.assigned.select("vec_id", "centroid").as[(Long, Int)]
+      .collect().toMap
+    rows.foreach { case (id, v) =>
+      assert(cells(id) == ivf.probeCells(v.toArray, 1).head, s"cell of $id")
+    }
+    val queries = gauss.filter($"vec_id" % 15 === 0)
+    val qv = rows.filter(_._1 % 15 == 0).toMap
+    (1 to nCentroids).foreach { n =>
+      val batched = ivf.probeAssign(queries, n).select("vec_id", "centroid")
+        .as[(Long, Int)].collect().toSeq.groupBy(_._1)
+        .map { case (id, ps) => id -> ps.map(_._2) }
+      assert(batched.keySet == qv.keySet)
+      qv.foreach { case (id, v) =>
+        assert(batched(id) == ivf.probeCells(v.toArray, n), s"query $id, nProbe $n")
+      }
+    }
+  }
+
   test("queryQuantized: generous rerank == exact probed query; tight " +
       "rerank returns exact cosines for every row it serves") {
     val idx = new Similarity.IvfIndex(emb, nCentroids = 8)
@@ -1210,7 +1268,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     idx.appendGeneration(s"$tmp/ivf", batch, gen = 1)
 
     val q = emb.filter($"vec_id" === 23).select("embedding").as[Seq[Float]].head().toArray
-    val merged = idx.queryGenerations(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
+    val merged = idx.queryPartitioned(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
     // reference: everything assigned under the same frozen centroids
     val mono = idx.appendAssign(emb)
       .filter(col("centroid").isin(idx.probeCells(q, 4): _*))
@@ -1260,14 +1318,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     for (g <- 1 to 3)
       idx.appendGeneration(s"$tmp/ivf", emb.filter($"vec_id" % 8 === g), gen = g)
     val q = emb.filter($"vec_id" === 23).select("embedding").as[Seq[Float]].head().toArray
-    val beforeRows = idx.queryGenerations(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
+    val beforeRows = idx.queryPartitioned(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
       .select("vec_id", "cos", "centroid").collect().toSeq
     val rep = Similarity.compactGenerations(spark, s"$tmp/ivf")
     assert(rep.generationsBefore == 4, rep.toString)
     assert(rep.filesAfter < rep.filesBefore,
       s"compaction must shrink the file count: $rep")
     // top-k bit-identical post-compaction; provenance collapsed to gen 0
-    val afterRows = idx.queryGenerations(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
+    val afterRows = idx.queryPartitioned(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
       .select("vec_id", "cos", "centroid").collect().toSeq
     assert(afterRows == beforeRows)
     assert(spark.read.parquet(s"$tmp/ivf").select("generation")
@@ -1276,7 +1334,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$tmp/ivf").count() ==
       base.count() + (1 to 3).map(g => emb.filter($"vec_id" % 8 === g).count()).sum)
     // the compacted table still partition-prunes
-    val plan = idx.queryGenerations(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
+    val plan = idx.queryPartitioned(spark, s"$tmp/ivf", q, k = 8, nProbe = 4)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("centroid"))
   }
