@@ -216,6 +216,103 @@ object SparkEntry {
     (n, avgLen, hs)
   }
 
+  /** The graph queries' 40-node ring: node n links to n + 1 and n + 7,
+    * and the first 20 nodes also to n + 13 (all mod 40). */
+  private def ringGraph(s: SparkSession, dir: String): DataFrame = {
+    val n = t(s, dir, "documents")
+      .select((col("doc_id") % 40).as("n")).distinct()
+    n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
+      .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
+      .unionByName(n.filter(col("n") < 20)
+        .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+  }
+
+  /** The ANN queries' query vector: the embedding of `vec_id` 0. */
+  private def queryVector(e: DataFrame): Array[Float] =
+    e.filter(col("vec_id") === 0).select("embedding")
+      .first().getSeq[Float](0).toArray
+
+  /** A fresh hybrid index over the documents (cached) and its document
+    * frequencies, with graft's functions registered. */
+  private def chunkIndex(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    GraftFunctions.register(s)
+    val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
+    (index, graft.index.IndexWriter.docFrequencies(index))
+  }
+
+  /** The prebuilt index's chunks with planted probe tokens: each
+    * `(condition, tokens)` plant appends its tokens to the chunks its
+    * condition selects, and the first matching plant wins. */
+  private def plantedTokenIndex(s: SparkSession, dir: String,
+      plants: (Column, Seq[String])*): DataFrame = {
+    val base = ensureHybridIndex(s, dir)
+    val appended = plants.map { case (cond, toks) =>
+      cond -> concat(col("tokens"), array(toks.map(lit(_)): _*))
+    }
+    val (c0, v0) = appended.head
+    s.read.parquet(s"$base/chunks").withColumn("tokens",
+      appended.tail.foldLeft(when(c0, v0)) { case (w, (c, v)) => w.when(c, v) }
+        .otherwise(col("tokens")))
+  }
+
+  /** The view-maintenance queries' lineitem rows (flag, status, ship
+    * month, price in cents), split at 1998-01-01 into the rows the
+    * views start from and the delta that follows. */
+  private def lineitemSplit(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val l = t(s, dir, "lineitem").select(
+      col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
+      month(col("l_shipdate")).as("mth"),
+      expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"),
+      col("l_shipdate").as("sd"))
+    (l.filter(col("sd") < "1998-01-01").drop("sd"),
+      l.filter(col("sd") >= "1998-01-01").drop("sd"))
+  }
+
+  /** q177/q185's quantile-gate check: each `(q_mille, cut)` row's exact
+    * rank `n_le` over the values `v`, the target rank, and whether the
+    * rank lies within the sketch bound of ±⌈6n/k⌉ ranks. */
+  private def quantileGateCheck(v: DataFrame, cutsDf: DataFrame, k: Int)
+      : DataFrame =
+    v.crossJoin(broadcast(cutsDf))
+      .groupBy("q_mille", "cut")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("v") <= col("cut"), 1L).otherwise(0L)).as("n_le"))
+      .withColumn("target_r", expr("(q_mille * n + 999) div 1000"))
+      .withColumn("slack", expr(s"(6 * n + ${k - 1}) div $k"))
+      .select(col("q_mille").cast("long").as("q_mille"), col("cut"),
+        col("n"), col("n_le"), col("target_r"),
+        (col("target_r") - col("slack")).as("lo"),
+        (col("target_r") + col("slack")).as("hi"),
+        when(col("n_le") >= col("target_r") - col("slack") &&
+          col("n_le") <= col("target_r") + col("slack"), 1L)
+          .otherwise(0L).as("in_bound"))
+      .orderBy("q_mille")
+
+  /** The retrieval-metric queries' run: each query's top 10 documents by
+    * dense score (itself excluded) and its relevant set, the documents
+    * that share its label. */
+  private def labelRetrieval(q: DataFrame, c: DataFrame)
+      : (DataFrame, DataFrame) = {
+    // batched dense branch (round-6 re-point): bounded per-query heaps
+    // via denseTopKAll replace the crossJoin + full window sort; the
+    // window now numbers <= 10 pre-pruned rows per query
+    val wr = Window.partitionBy("query_id")
+      .orderBy(col("dense_score").desc, col("doc_id"))
+    val ranked = graft.search.HybridSearch.denseTopKAll(
+        c, q, n = 10, idCol = "doc_id", vecCol = "cv",
+        pairFilter = col("doc_id") =!= col("query_id"))
+      .withColumn("rank", row_number().over(wr))
+      .select("query_id", "doc_id", "rank")
+    val relevant = q.select("query_id", "qlabel")
+      .join(c.select(col("doc_id"), col("clabel")),
+        col("qlabel") === col("clabel"))
+      .filter(col("doc_id") =!= col("query_id"))
+      .select("query_id", "doc_id")
+    (ranked, relevant)
+  }
+
   // ---------------------------------------------------------------------
   // Operator queries (name -> (spark, sfDir) => DataFrame)
   // ---------------------------------------------------------------------
@@ -477,8 +574,7 @@ object SparkEntry {
     // T2/V4 — exact cosine top-k (TakeOrderedAndProject; the ANN baseline).
     "q26_cosine_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).toArray
+      val q = queryVector(e)
       Similarity.bruteForceTopK(e, q, 20).select("vec_id", "cos")
     }),
 
@@ -576,9 +672,7 @@ object SparkEntry {
     // aux tables and the oracle re-derives the ENTIRE query side — BM25
     // branch, both ranks, RRF fusion, threshold, final top-k — in DuckDB.
     "q35_hybrid_search" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
+      val (index, stats) = chunkIndex(s, dir)
       val n = index.count()
       val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
       val cfg = HybridSearch.Config(k = 5)
@@ -617,8 +711,7 @@ object SparkEntry {
     "q36_lsh_ann" -> ((s, dir) => {
       import s.implicits._
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).toArray
+      val q = queryVector(e)
       val idx = new Similarity.RandomHyperplaneIndex(e, nBits = 8, dim = 64)
       writeAux(idx.bucketed.select("vec_id", "bucket"), dir, "q36_buckets")
       writeAux(idx.probeBuckets(q, probes = 8).toDF("bucket"), dir, "q36_probes")
@@ -852,8 +945,7 @@ object SparkEntry {
     "q39_ivf_ann" -> ((s, dir) => {
       import s.implicits._
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).toArray
+      val q = queryVector(e)
       val idx = new Similarity.IvfIndex(e, nCentroids = 16)
       writeAux(idx.assigned.select("vec_id", "centroid"), dir, "q39_assigned")
       writeAux(idx.probeCells(q, nProbe = 4).toDF("centroid"), dir, "q39_probes")
@@ -1502,21 +1594,7 @@ object SparkEntry {
           col("label").as("qlabel"))
       val c = emb.select(col("vec_id").as("doc_id"), col("embedding").as("cv"),
         col("label").as("clabel"))
-      // batched dense branch (round-6 re-point): bounded per-query heaps
-      // via denseTopKAll replace the crossJoin + full window sort; the
-      // window now numbers <= 10 pre-pruned rows per query
-      val wr = Window.partitionBy("query_id")
-        .orderBy(col("dense_score").desc, col("doc_id"))
-      val ranked = graft.search.HybridSearch.denseTopKAll(
-          c, q, n = 10, idCol = "doc_id", vecCol = "cv",
-          pairFilter = col("doc_id") =!= col("query_id"))
-        .withColumn("rank", row_number().over(wr))
-        .select("query_id", "doc_id", "rank")
-      val relevant = q.select("query_id", "qlabel")
-        .join(c.select(col("doc_id"), col("clabel")),
-          col("qlabel") === col("clabel"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select("query_id", "doc_id")
+      val (ranked, relevant) = labelRetrieval(q, c)
       graft.search.Metrics.perQuery(ranked, relevant, k = 10)
     }),
 
@@ -2156,10 +2234,8 @@ object SparkEntry {
     // [[HybridSearch.search]] loop — batched == loop, by construction
     // of both from the same branch semantics.
     "q154_hybrid_batch" -> ((s, dir) => {
-      GraftFunctions.register(s)
       import s.implicits._
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
+      val (index, stats) = chunkIndex(s, dir)
       val n = index.count()
       val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
       val cfg = HybridSearch.Config(k = 5)
@@ -2670,20 +2746,7 @@ object SparkEntry {
         .map(q => (q, sk.quantile(q / 1000.0).toLong))
       val cutsDf = cuts.toDF("q_mille", "cut")
       writeAux(cutsDf, dir, "q177_cuts")
-      li.select(price).crossJoin(broadcast(cutsDf))
-        .groupBy("q_mille", "cut")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("v") <= col("cut"), 1L).otherwise(0L)).as("n_le"))
-        .withColumn("target_r", expr("(q_mille * n + 999) div 1000"))
-        .withColumn("slack", expr(s"(6 * n + ${k - 1}) div $k"))
-        .select(col("q_mille").cast("long").as("q_mille"), col("cut"),
-          col("n"), col("n_le"), col("target_r"),
-          (col("target_r") - col("slack")).as("lo"),
-          (col("target_r") + col("slack")).as("hi"),
-          when(col("n_le") >= col("target_r") - col("slack") &&
-            col("n_le") <= col("target_r") + col("slack"), 1L)
-            .otherwise(0L).as("in_bound"))
-        .orderBy("q_mille")
+      quantileGateCheck(li.select(price), cutsDf, k)
     }),
 
     // Fuzzy eval-set decontamination vs the exact 5-gram gate, on a
@@ -2960,22 +3023,8 @@ object SparkEntry {
       import s.implicits._
       val cutsDf = cuts.toDF("q_mille", "cut")
       writeAux(cutsDf, dir, "q185_cuts")
-      t(s, dir, "events")
-        .select(round(col("value") * 100, 0).cast("long").as("v"))
-        .crossJoin(broadcast(cutsDf))
-        .groupBy("q_mille", "cut")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("v") <= col("cut"), 1L).otherwise(0L)).as("n_le"))
-        .withColumn("target_r", expr("(q_mille * n + 999) div 1000"))
-        .withColumn("slack", expr(s"(6 * n + ${k - 1}) div $k"))
-        .select(col("q_mille").cast("long").as("q_mille"), col("cut"),
-          col("n"), col("n_le"), col("target_r"),
-          (col("target_r") - col("slack")).as("lo"),
-          (col("target_r") + col("slack")).as("hi"),
-          when(col("n_le") >= col("target_r") - col("slack") &&
-            col("n_le") <= col("target_r") + col("slack"), 1L)
-            .otherwise(0L).as("in_bound"))
-        .orderBy("q_mille")
+      quantileGateCheck(t(s, dir, "events")
+        .select(round(col("value") * 100, 0).cast("long").as("v")), cutsDf, k)
     }),
 
     // Incremental HNSW insertion under the frozen-graph discipline:
@@ -3240,8 +3289,7 @@ object SparkEntry {
     "q201_multiprobe_lsh" -> ((s, dir) => {
       import s.implicits._
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .first().getSeq[Float](0).toArray
+      val q = queryVector(e)
       val idx = new Similarity.RandomHyperplaneIndex(e, nBits = 8, dim = 64)
       writeAux(idx.bucketed.select("vec_id", "bucket"), dir, "q201_buckets")
       writeAux(idx.probeBucketsRanked(q, probes = 4).toDF("bucket"),
@@ -3277,9 +3325,7 @@ object SparkEntry {
     // from the aux-dumped assignments/probes/query vector.
     "q203_hybrid_ann" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
+      val (index, stats) = chunkIndex(s, dir)
       val (n, avgLen, ivf) = Phase("build") {
         (index.count(),
           index.select(avg(size(col("tokens")))).first().getDouble(0),
@@ -3469,9 +3515,7 @@ object SparkEntry {
     // routes hits back to chunk ids, and re-derives BM25 + RRF fusion.
     "q215_hybrid_hnsw" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
+      val (index, stats) = chunkIndex(s, dir)
       val (n, avgLen, hs) = hnswBuild(index)
       val cfg = HybridSearch.Config(k = 5)
       val qText = "filter join scan vector"
@@ -4127,12 +4171,7 @@ object SparkEntry {
     // connected using strictly lighter edges (one recursive
     // reachability over the edge×node state).
     "q251_boruvka_mst" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       val canon = raw
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b")).distinct()
@@ -4150,12 +4189,7 @@ object SparkEntry {
     // distances are exact. DuckDB replays bounded-hop path expansion
     // and takes the same per-node minimum.
     "q252_shortest_paths" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       val canon = raw
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b")).distinct()
@@ -4172,12 +4206,7 @@ object SparkEntry {
     // pair generation + one close join, exact per-mille. DuckDB
     // re-derives adjacency, pairs, triangle closes, and ratios.
     "q253_clustering_coeff" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       graft.ops.GraphOps.clusteringCoefficient(raw).orderBy("id")
     }),
 
@@ -4185,12 +4214,7 @@ object SparkEntry {
     // pairs scored by common neighbors and exact neighborhood Jaccard.
     // DuckDB re-derives wedges, the anti-join, degrees, and scores.
     "q254_link_prediction" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       graft.ops.GraphOps.linkPrediction(raw).orderBy("u", "v")
     }),
 
@@ -4394,12 +4418,7 @@ object SparkEntry {
     // integer modularity-gain argmax (score diffs = 2m²·ΔQ), exact
     // final Q in micro units. DuckDB replays both rounds and Q.
     "q273_modularity_move" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       graft.ops.GraphOps.modularityLocalMove(raw, iters = 2)
         .orderBy("id")
     }),
@@ -4736,18 +4755,7 @@ object SparkEntry {
           col("label").as("qlabel"))
       val c = emb.select(col("vec_id").as("doc_id"),
         col("embedding").as("cv"), col("label").as("clabel"))
-      val wr = Window.partitionBy("query_id")
-        .orderBy(col("dense_score").desc, col("doc_id"))
-      val ranked = graft.search.HybridSearch.denseTopKAll(
-          c, q, n = 10, idCol = "doc_id", vecCol = "cv",
-          pairFilter = col("doc_id") =!= col("query_id"))
-        .withColumn("rank", row_number().over(wr))
-        .select("query_id", "doc_id", "rank")
-      val relevant = q.select("query_id", "qlabel")
-        .join(c.select(col("doc_id"), col("clabel")),
-          col("qlabel") === col("clabel"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select("query_id", "doc_id")
+      val (ranked, relevant) = labelRetrieval(q, c)
       graft.search.Metrics.ndcgAtK(ranked, relevant, k = 10)
         .orderBy("query_id")
     }),
@@ -5099,12 +5107,7 @@ object SparkEntry {
     // replays every round at both levels, the contraction, and both
     // Q quotients.
     "q322_louvain_two_level" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-        .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-        .unionByName(n.filter(col("n") < 20)
-          .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
+      val raw = ringGraph(s, dir)
       graft.ops.GraphOps.louvainTwoLevel(raw, iters = 2).orderBy("id")
     }),
 
@@ -5489,9 +5492,7 @@ object SparkEntry {
     // generalized to a query table.
     "q342_hybrid_hnsw_batch" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
-      val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-      val stats = graft.index.IndexWriter.docFrequencies(index)
+      val (index, stats) = chunkIndex(s, dir)
       val (n, avgLen, hs) = hnswBuild(index)
       val cfg = HybridSearch.Config(k = 5)
       val queryTexts = Seq("filter join scan vector",
@@ -5792,13 +5793,7 @@ object SparkEntry {
     // recompute, so the oracle is q352's full-table replay verbatim —
     // any drift in the delta merge shows up as a value mismatch.
     "q354_view_ivm_route" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem").select(
-        col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-        month(col("l_shipdate")).as("mth"),
-        expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"),
-        col("l_shipdate").as("sd"))
-      val pre = l.filter(col("sd") < "1998-01-01").drop("sd")
-      val post = l.filter(col("sd") >= "1998-01-01").drop("sd")
+      val (pre, post) = lineitemSplit(s, dir)
       def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
         .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
       val views = Map(
@@ -5985,13 +5980,7 @@ object SparkEntry {
     // a value mismatch.
     "q360_view_stats_route" -> ((s, dir) => {
       import s.implicits._
-      val l = t(s, dir, "lineitem").select(
-        col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-        month(col("l_shipdate")).as("mth"),
-        expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"),
-        col("l_shipdate").as("sd"))
-      val pre = l.filter(col("sd") < "1998-01-01").drop("sd")
-      val post = l.filter(col("sd") >= "1998-01-01").drop("sd")
+      val (pre, post) = lineitemSplit(s, dir)
       def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
         .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
       val lat0 = graft.ops.Views.materialize(Map(
@@ -6197,12 +6186,8 @@ object SparkEntry {
     // mismatch or an audit mismatch.
     "q367_bm25_maxscore" -> ((s, dir) => {
       GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 20 === 7,
-            concat(col("tokens"), array(lit("zqmaxscore"))))
-            .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 20 === 7, Seq("zqmaxscore")))
       writeAux(index.select("id", "tokens"), dir, "q367_index")
       val terms = Seq("zqmaxscore", "scan", "filter", "join")
       val (postings, stats, bounds, n, avgLen, theta6, flags, nCand) =
@@ -6284,14 +6269,9 @@ object SparkEntry {
       GraftFunctions.register(s)
       val sq = s
       import sq.implicits._
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 20 === 7,
-            concat(col("tokens"), array(lit("zqalpha"))))
-          .when(col("doc_id") % 20 === 13,
-            concat(col("tokens"), array(lit("zqbeta"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 20 === 7, Seq("zqalpha")),
+        (col("doc_id") % 20 === 13, Seq("zqbeta")))
       writeAux(index.select("id", "tokens"), dir, "q369_index")
       val W = graft.index.IndexWriter
       val postings = W.postings(index).localCheckpoint()
@@ -6353,17 +6333,10 @@ object SparkEntry {
     // token arrays, no postings replay.
     "q371_phrase_search" -> ((s, dir) => {
       GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 5,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("phrase"),
-                lit("gap"), lit("probe"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 5,
+          Seq("graft", "gap", "phrase", "gap", "probe")))
       writeAux(index.select("id", "tokens"), dir, "q371_index")
       val pp = graft.index.IndexWriter.positionalPostings(index)
       val stats = graft.index.IndexWriter.docFrequencies(index)
@@ -6381,22 +6354,13 @@ object SparkEntry {
     // step), not from the postings construction.
     "q372_proximity_search" -> ((s, dir) => {
       GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 5,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("phrase"),
-                lit("gap"), lit("probe"))))
-          .when(col("doc_id") % 11 === 7,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("gap"), lit("gap"),
-                lit("gap"), lit("gap"), lit("gap"), lit("phrase"),
-                lit("probe"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 5,
+          Seq("graft", "gap", "phrase", "gap", "probe")),
+        (col("doc_id") % 11 === 7,
+          Seq("graft", "gap", "gap", "gap", "gap", "gap", "gap", "phrase",
+            "probe")))
       writeAux(index.select("id", "tokens"), dir, "q372_index")
       val pp = graft.index.IndexWriter.positionalPostings(index)
       val stats = graft.index.IndexWriter.docFrequencies(index)
@@ -6487,20 +6451,11 @@ object SparkEntry {
       GraftFunctions.register(s)
       val sq = s
       import sq.implicits._
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 5,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("phrase"),
-                lit("gap"), lit("probe"))))
-          .when(col("doc_id") % 11 === 9,
-            concat(col("tokens"),
-              array(lit("graft"), lit("graft"), lit("phrase"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 5,
+          Seq("graft", "gap", "phrase", "gap", "probe")),
+        (col("doc_id") % 11 === 9, Seq("graft", "graft", "phrase")))
       writeAux(index.select("id", "tokens"), dir, "q375_index")
       val pp = graft.index.IndexWriter.positionalPostings(index)
       val qSlots = Seq(
@@ -6591,17 +6546,10 @@ object SparkEntry {
     // window-equality definition, never the postings chain.
     "q379_phrase_topdocs" -> ((s, dir) => {
       GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") === 3 && col("chunk_index") === 0,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"),
-                lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") === 3 && col("chunk_index") === 0,
+          Seq("graft", "phrase", "probe", "graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")))
       writeAux(index.select("id", "tokens"), dir, "q379_index")
       val pp = graft.index.IndexWriter.positionalPostings(index)
       val stats = graft.index.IndexWriter.docFrequencies(index)
@@ -6621,21 +6569,12 @@ object SparkEntry {
     // construction.
     "q381_proximity_topdocs" -> ((s, dir) => {
       GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 11 === 1,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"),
-                lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 3,
-            concat(col("tokens"),
-              array(lit("graft"), lit("phrase"), lit("probe"))))
-          .when(col("doc_id") % 11 === 5,
-            concat(col("tokens"),
-              array(lit("graft"), lit("gap"), lit("phrase"),
-                lit("gap"), lit("probe"))))
-          .otherwise(col("tokens")))
+      val index = plantedTokenIndex(s, dir,
+        (col("doc_id") % 11 === 1,
+          Seq("graft", "phrase", "probe", "graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
+        (col("doc_id") % 11 === 5,
+          Seq("graft", "gap", "phrase", "gap", "probe")))
       writeAux(index.select("id", "tokens"), dir, "q381_index")
       val pp = graft.index.IndexWriter.positionalPostings(index)
       val stats = graft.index.IndexWriter.docFrequencies(index)
@@ -6750,13 +6689,7 @@ object SparkEntry {
     // the routed rf aggregate.
     "q378_view_stats_persisted" -> ((s, dir) => {
       val V = graft.ops.Views
-      val l = t(s, dir, "lineitem").select(
-        col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-        month(col("l_shipdate")).as("mth"),
-        expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"),
-        col("l_shipdate").as("sd"))
-      val pre = l.filter(col("sd") < "1998-01-01").drop("sd")
-      val post = l.filter(col("sd") >= "1998-01-01").drop("sd")
+      val (pre, post) = lineitemSplit(s, dir)
       def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
         .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
       val lat0 = V.materialize(Map(
@@ -6788,6 +6721,65 @@ object SparkEntry {
   // ---------------------------------------------------------------------
   // DuckDB oracles (t2 gate) — same column names, deterministic values.
   // ---------------------------------------------------------------------
+
+  /** Island merge of the `hits(doc_id, s, e)` spans: a span opens a new
+    * island unless an earlier span of its doc reaches it, and
+    * `sp(doc_id, island, s, e)` is each island's union. */
+  private def islandSpanCtes(materializeSp: Boolean): String = {
+    val spAs = if (materializeSp) "sp AS MATERIALIZED (" else "sp AS ("
+    s"""flagged AS (SELECT doc_id, s, e,
+       |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
+       |      THEN 1 ELSE 0 END AS new_island
+       |  FROM hits
+       |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+       |isl AS (SELECT doc_id, s, e,
+       |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+       |  FROM flagged),
+       |${spAs}SELECT doc_id, island, min(s) AS s, max(e) AS e
+       |  FROM isl GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** Connected components of the undirected `edges(id1, id2)` table:
+    * `sym` holds both directions and the recursive `walk(id, comp)`
+    * spreads every node's id through its component. */
+  private def componentWalkCtes(edges: String, materialize: Boolean): String = {
+    val as = if (materialize) "AS MATERIALIZED" else "AS"
+    s"""sym $as (SELECT id1 AS src, id2 AS dst FROM $edges
+       |  UNION SELECT id2, id1 FROM $edges),
+       |nodes $as (SELECT DISTINCT src AS id FROM sym),
+       |walk(id, comp) AS (
+       |  SELECT id, id FROM nodes
+       |  UNION
+       |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id)""".stripMargin
+  }
+
+  /** BM25 (k1 = 1.2, b = 0.75) score `s` of one term of one chunk, from
+    * `tf t(tf, dl)`, `df f(df)` and `params p(n, avgdl)`. */
+  private def bm25TermScore: String =
+    """    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
+      |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s""".stripMargin
+
+  /** The RRF (k = 60) sum of the `dr` dense and `br` BM25 ranks. */
+  private def rrfScoreSum: String =
+    """    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
+      |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score""".stripMargin
+
+  /** The hybrid oracles' fusion tail: rank the `dense(id, dense_score)`
+    * and `bm(id, bm25_score)` branches, fuse them by RRF, and join the
+    * top 5 back to `idx` for their chunk ids. */
+  private def rrfTop5Sql: String =
+    s"""dr AS (SELECT id, dense_score,
+       |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
+       |br AS (SELECT id, bm25_score,
+       |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
+       |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
+       |$rrfScoreSum
+       |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
+       |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
+       |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
+       |FROM top JOIN idx ON idx.id = top.id""".stripMargin
 
   /** q33's full MinHash-LSH construction (planted doubled corpus →
     * shingles → 16 md5 minhashes → 4 bands → candidates → exact Jaccard)
@@ -6984,54 +6976,7 @@ object SparkEntry {
          |exr AS (SELECT DISTINCT a.doc_id FROM bd a
          |  JOIN bd b ON b.dg = a.dg AND b.doc_id < a.doc_id),
          |${minhashAgreementCtes("SELECT doc_id, norm_text AS text FROM nfil")},
-         |liv AS (SELECT
-         |    CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'zz'
-         |      ELSE 'qq' END AS lang,
-         |    CASE doc_id % 3 WHEN 0 THEN text
-         |      WHEN 1 THEN translate(text, 'aeiou', 'zzzzz')
-         |      ELSE reverse(text) END AS text
-         |  FROM documents WHERE doc_id < 200),
-         |litb AS (SELECT lang,
-         |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-         |  FROM (SELECT lang, unnest(flatten(list_transform(
-         |      list_filter(string_split(lower(trim(text)), ' '),
-         |        w -> w <> ''),
-         |      w -> list_transform(range(1, length(w) + 2),
-         |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-         |    FROM liv)),
-         |licnt AS (SELECT lang, bucket, count(*) AS c FROM litb GROUP BY 1, 2),
-         |litot AS (SELECT lang, sum(c) AS total FROM licnt GROUP BY 1),
-         |liwts AS (SELECT licnt.lang, bucket,
-         |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-         |      AS BIGINT) AS w6
-         |  FROM licnt JOIN litot USING (lang)),
-         |liflo AS (SELECT lang,
-         |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-         |      AS def6
-         |  FROM litot),
-         |ligb AS (SELECT doc_id,
-         |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-         |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-         |      list_filter(string_split(lower(trim(norm_text)), ' '),
-         |        w -> w <> ''),
-         |      w -> list_transform(range(1, length(w) + 2),
-         |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-         |    FROM nfil)),
-         |lisc AS (SELECT g.doc_id, l.lang,
-         |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6
-         |  FROM ligb g CROSS JOIN (SELECT DISTINCT lang FROM litot) l
-         |  LEFT JOIN liwts w ON w.lang = l.lang AND w.bucket = g.bucket
-         |  JOIN liflo f ON f.lang = l.lang
-         |  GROUP BY 1, 2),
-         |lirk AS (SELECT doc_id, lang, score6,
-         |    row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY score6 DESC, lang) AS rn,
-         |    lead(score6) OVER (PARTITION BY doc_id
-         |      ORDER BY score6 DESC, lang) AS next6
-         |  FROM lisc),
-         |lipred AS (SELECT doc_id, lang AS pred_lang,
-         |    score6 - COALESCE(next6, score6) AS margin6
-         |  FROM lirk WHERE rn = 1),
+         |${langIdPredictCtes("nfil")},
          |f AS (SELECT doc_id,
          |    CAST(len(regexp_extract_all(norm_text, '\\S+')) AS BIGINT)
          |      AS n_words,
@@ -7228,18 +7173,7 @@ object SparkEntry {
          |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e
          |  FROM wins JOIN cnt USING (w)
          |  WHERE doc_id >= 250 AND nd >= 2),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
+         |${islandSpanCtes(false)},
          |agg AS (SELECT doc_id,
          |    CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
          |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
@@ -7290,24 +7224,7 @@ object SparkEntry {
        |      w -> list_transform(range(1, length(w) + 2),
        |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
        |    FROM v WHERE doc_id < 200)),
-       |cnt AS (SELECT lang, bucket, count(*) AS c FROM tb GROUP BY 1, 2),
-       |tot AS (SELECT lang, sum(c) AS total FROM cnt GROUP BY 1),
-       |wts AS (SELECT cnt.lang, bucket,
-       |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-       |      AS BIGINT) AS w6
-       |  FROM cnt JOIN tot USING (lang)),
-       |flo AS (SELECT lang,
-       |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-       |      AS def6
-       |  FROM tot),
-       |gb AS (SELECT doc_id,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-       |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-       |      list_filter(string_split(lower(trim(text)), ' '),
-       |        w -> w <> ''),
-       |      w -> list_transform(range(1, length(w) + 2),
-       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-       |    FROM v WHERE doc_id BETWEEN 200 AND 299)),
+       |${langIdBucketScoreCtes("v WHERE doc_id BETWEEN 200 AND 299")},
        |sc AS (SELECT g.doc_id, l.lang,
        |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6,
        |    CAST(count(*) AS BIGINT) AS n_grams
@@ -7367,6 +7284,382 @@ object SparkEntry {
          |  JOIN m${r - 1} mm ON mm.id = p.id
          |  GROUP BY p.id, mm.mind)""".stripMargin
   }
+
+  /** The curation oracles' trained language-ID replay: the q213 bigram
+    * profile trained on the first 200 relabelled documents, then each
+    * `docs(doc_id, norm_text)` row's best language and margin, ending in
+    * `lipred(doc_id, pred_lang, margin6)`. */
+  private def langIdPredictCtes(docs: String): String =
+    s"""liv AS (SELECT
+       |    CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'zz'
+       |      ELSE 'qq' END AS lang,
+       |    CASE doc_id % 3 WHEN 0 THEN text
+       |      WHEN 1 THEN translate(text, 'aeiou', 'zzzzz')
+       |      ELSE reverse(text) END AS text
+       |  FROM documents WHERE doc_id < 200),
+       |litb AS (SELECT lang,
+       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
+       |  FROM (SELECT lang, unnest(flatten(list_transform(
+       |      list_filter(string_split(lower(trim(text)), ' '),
+       |        w -> w <> ''),
+       |      w -> list_transform(range(1, length(w) + 2),
+       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
+       |    FROM liv)),
+       |licnt AS (SELECT lang, bucket, count(*) AS c FROM litb GROUP BY 1, 2),
+       |litot AS (SELECT lang, sum(c) AS total FROM licnt GROUP BY 1),
+       |liwts AS (SELECT licnt.lang, bucket,
+       |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
+       |      AS BIGINT) AS w6
+       |  FROM licnt JOIN litot USING (lang)),
+       |liflo AS (SELECT lang,
+       |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
+       |      AS def6
+       |  FROM litot),
+       |ligb AS (SELECT doc_id,
+       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
+       |  FROM (SELECT doc_id, unnest(flatten(list_transform(
+       |      list_filter(string_split(lower(trim(norm_text)), ' '),
+       |        w -> w <> ''),
+       |      w -> list_transform(range(1, length(w) + 2),
+       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
+       |    FROM $docs)),
+       |lisc AS (SELECT g.doc_id, l.lang,
+       |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6
+       |  FROM ligb g CROSS JOIN (SELECT DISTINCT lang FROM litot) l
+       |  LEFT JOIN liwts w ON w.lang = l.lang AND w.bucket = g.bucket
+       |  JOIN liflo f ON f.lang = l.lang
+       |  GROUP BY 1, 2),
+       |lirk AS (SELECT doc_id, lang, score6,
+       |    row_number() OVER (PARTITION BY doc_id
+       |      ORDER BY score6 DESC, lang) AS rn,
+       |    lead(score6) OVER (PARTITION BY doc_id
+       |      ORDER BY score6 DESC, lang) AS next6
+       |  FROM lisc),
+       |lipred AS (SELECT doc_id, lang AS pred_lang,
+       |    score6 - COALESCE(next6, score6) AS margin6
+       |  FROM lirk WHERE rn = 1)""".stripMargin
+
+  /** q273/q322's modularity local moves on the 40-node ring graph: the
+    * symmetric edges, degrees, two rounds from singleton communities and
+    * the integer modularity numerator, ending in `qn(num, m)`. */
+  private def modularityTwoRoundCtes: String =
+    s"""raw AS (SELECT n AS src, (n + 1) % 40 AS dst FROM nn
+       |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
+       |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
+       |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
+       |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
+       |  WHERE src <> dst),
+       |deg AS MATERIALIZED (SELECT src AS id,
+       |    CAST(count(*) AS BIGINT) AS k FROM sym GROUP BY 1),
+       |mm AS MATERIALIZED (SELECT CAST(count(*) // 2 AS BIGINT) AS m
+       |  FROM sym),
+       |r0 AS (SELECT id, id AS comm FROM deg),
+       |${modularityRoundCtes("r0", 1)},
+       |${modularityRoundCtes("r1", 2)},
+       |ec AS (SELECT a.comm, CAST(count(*) // 2 AS BIGINT) AS ec
+       |  FROM sym s JOIN r2 a ON a.id = s.src
+       |  JOIN r2 b ON b.id = s.dst AND b.comm = a.comm GROUP BY 1),
+       |kct AS (SELECT r.comm, CAST(sum(d.k) AS BIGINT) AS kc
+       |  FROM r2 r JOIN deg d USING (id) GROUP BY 1),
+       |qn AS (SELECT CAST(sum(4 * mm.m * coalesce(ec.ec, 0)
+       |      - kct.kc * kct.kc) AS BIGINT) AS num,
+       |    max(mm.m) AS m
+       |  FROM kct LEFT JOIN ec ON ec.comm = kct.comm CROSS JOIN mm)""".stripMargin
+
+  /** q343/q359's HNSW tombstone repair of the graph
+    * `g(layer, id, nbr, cos)`: drop the edges that touch a tombstone in
+    * `t(tid)`, give each survivor one replacement per lost edge from its
+    * lost neighbours' lists, best cosine first, and end in the repaired
+    * edges `rep`. */
+  private def hnswTombstoneRepairCtes: String =
+    """alive AS MATERIALIZED (SELECT layer, id, nbr, cos FROM g
+      |  WHERE id NOT IN (SELECT tid FROM t)
+      |    AND nbr NOT IN (SELECT tid FROM t)),
+      |lost AS MATERIALIZED (SELECT layer, id AS u, nbr AS d FROM g
+      |  WHERE id NOT IN (SELECT tid FROM t)
+      |    AND nbr IN (SELECT tid FROM t)),
+      |kadd AS (SELECT layer, u, CAST(count(*) AS BIGINT) AS k
+      |  FROM lost GROUP BY 1, 2),
+      |cand AS MATERIALIZED (SELECT layer, u, c FROM (
+      |    SELECT DISTINCT l.layer, l.u, g2.nbr AS c
+      |    FROM lost l JOIN g g2 ON g2.layer = l.layer AND g2.id = l.d
+      |    WHERE g2.nbr NOT IN (SELECT tid FROM t) AND g2.nbr <> l.u) x
+      |  WHERE NOT EXISTS (SELECT 1 FROM alive a
+      |    WHERE a.layer = x.layer AND a.id = x.u AND a.nbr = x.c)),
+      |pairs AS (SELECT cd.layer, cd.u, cd.c,
+      |    unnest(vu.embedding)::DOUBLE AS x,
+      |    unnest(vc.embedding)::DOUBLE AS y
+      |  FROM cand cd JOIN embeddings vu ON vu.vec_id = cd.u
+      |  JOIN embeddings vc ON vc.vec_id = cd.c),
+      |scored AS (SELECT layer, u, c,
+      |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
+      |  FROM pairs GROUP BY 1, 2, 3),
+      |adds AS (SELECT layer, u AS id, c AS nbr, cos FROM (
+      |    SELECT s.*, row_number() OVER (PARTITION BY s.layer, s.u
+      |      ORDER BY s.cos DESC, s.c) AS rn, k.k
+      |    FROM scored s JOIN kadd k ON k.layer = s.layer AND k.u = s.u)
+      |  WHERE rn <= k),
+      |rep AS (SELECT layer, id, nbr, cos FROM alive
+      |  UNION ALL SELECT layer, id, nbr, cos FROM adds)""".stripMargin
+
+  /** q370/q374's int8 scan: the probed cells' vectors (`a` assignments,
+    * `p` probes) quantized per vector to `cd(vec_id, i, q)`, and query
+    * vector 1 quantized to `qv(i, qv)`. */
+  private def int8ProbedCodesCtes: String =
+    """cand AS (SELECT e.vec_id, e.embedding FROM embeddings e
+      |  JOIN a USING (vec_id)
+      |  WHERE a.centroid IN (SELECT centroid FROM p)),
+      |ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
+      |  FROM cand, UNNEST(range(1, len(embedding) + 1)) t(i)),
+      |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1),
+      |cd AS MATERIALIZED (SELECT ex.vec_id, i,
+      |    CASE WHEN maxabs = 0 THEN 0
+      |         ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)
+      |    END AS q
+      |  FROM ex JOIN mx USING (vec_id)),
+      |qx AS (SELECT i, embedding[i]::DOUBLE AS x
+      |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)
+      |  WHERE vec_id = 1),
+      |qm AS (SELECT max(abs(x)) AS maxabs FROM qx),
+      |qv AS (SELECT i, CASE WHEN qm.maxabs = 0 THEN 0
+      |    ELSE CAST(floor(qx.x * 127.0 / qm.maxabs + 0.5) AS BIGINT)
+      |    END AS qv FROM qx, qm)""".stripMargin
+
+  /** q213/q349's trained language-ID model over the labelled bigram
+    * buckets `tb(lang, bucket)`: per-language bucket weights `wts`, the
+    * unseen-bucket floor `flo`, and the bigram buckets `gb` of the
+    * `scored` rows to be classified. */
+  private def langIdBucketScoreCtes(scored: String): String =
+    s"""cnt AS (SELECT lang, bucket, count(*) AS c FROM tb GROUP BY 1, 2),
+       |tot AS (SELECT lang, sum(c) AS total FROM cnt GROUP BY 1),
+       |wts AS (SELECT cnt.lang, bucket,
+       |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
+       |      AS BIGINT) AS w6
+       |  FROM cnt JOIN tot USING (lang)),
+       |flo AS (SELECT lang,
+       |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
+       |      AS def6
+       |  FROM tot),
+       |gb AS (SELECT doc_id,
+       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
+       |  FROM (SELECT doc_id, unnest(flatten(list_transform(
+       |      list_filter(string_split(lower(trim(text)), ' '),
+       |        w -> w <> ''),
+       |      w -> list_transform(range(1, length(w) + 2),
+       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
+       |    FROM $scored))""".stripMargin
+
+  /** q88/q197's fixed-point integer PageRank over the edges `e(src, dst)`:
+    * ranks start at 1e9, self-loops keep sinks, and `iters` damped rounds
+    * fill `pr(id, rank, iter)`. */
+  private def pageRankCtes(iters: Int): String =
+    s"""nodes AS (SELECT DISTINCT id FROM (
+       |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
+       |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
+       |e0 AS (SELECT src, dst, 1 AS w FROM e
+       |  UNION ALL SELECT id, id, 0 FROM nodes),
+       |pr(id, rank, iter) AS (
+       |  SELECT id, CAST(1000000000 AS BIGINT), 0 FROM nodes
+       |  UNION ALL
+       |  SELECT e0.dst,
+       |    CAST(150000000 + SUM(e0.w * ((p.rank * 85) // (100 * COALESCE(o.outdeg, 1))))
+       |      AS BIGINT),
+       |    p.iter + 1
+       |  FROM pr p
+       |  JOIN e0 ON e0.src = p.id
+       |  LEFT JOIN outdeg o ON o.src = e0.src
+       |  WHERE p.iter < $iters
+       |  GROUP BY e0.dst, p.iter)""".stripMargin
+
+  /** q70/q71's SimHash radius join: a `32 + hiBits`-bit md5 SimHash of
+    * the documents plus a tail-marked near copy of each, banded by
+    * `layout` (offset, width), and every banded pair within `maxDist`
+    * bits. */
+  private def simhashRadiusOracle(hiBits: Int, layout: Seq[(Int, Int)],
+      maxDist: Int): String = {
+    val lo = (0 until 32).map(j =>
+      s"CASE WHEN 2*len(list_filter(mh1, h -> substr(h,${j + 1},1) >= '8')) > len(mh1) THEN ${1L << j} ELSE 0 END")
+    val hi = (0 until hiBits).map(j =>
+      s"CASE WHEN 2*len(list_filter(mh2, h -> substr(h,${j + 1},1) >= '8')) > len(mh2) THEN ${1L << (32 + j)} ELSE 0 END")
+    val bits = (lo ++ hi).mkString(" + ")
+    val bands = layout.zipWithIndex.map { case ((off, w), b) =>
+      s"SELECT doc_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
+      .mkString("\n  UNION ALL ")
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL SELECT doc_id + 10000, text || ' near duplicate tail marker'
+       |  FROM documents),
+       |sigs AS (SELECT doc_id, CAST($bits AS BIGINT) AS sig FROM (
+       |  SELECT doc_id,
+       |    [md5(x) for x in string_split(text, ' ')] AS mh1,
+       |    [md5('2' || x) for x in string_split(text, ' ')] AS mh2
+       |  FROM corpus)),
+       |banded AS (
+       |  $bands),
+       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
+       |    a.sig AS sig1, b.sig AS sig2
+       |  FROM banded a JOIN banded b
+       |    ON a.b = b.b AND a.v = b.v AND a.doc_id < b.doc_id)
+       |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
+       |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= $maxDist""".stripMargin
+  }
+
+  /** q72/q73's top-3 lineitems by price per return flag, ties broken
+    * by order and line number. */
+  private def topPricesPerFlagOracle: String =
+    """SELECT l_returnflag, l_orderkey, l_linenumber, price_cents FROM (
+      |  SELECT l_returnflag, l_orderkey, l_linenumber,
+      |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_cents,
+      |    row_number() OVER (PARTITION BY l_returnflag
+      |      ORDER BY CAST(ROUND(l_extendedprice*100) AS BIGINT) DESC,
+      |               l_orderkey ASC, l_linenumber ASC) AS rn
+      |  FROM lineitem) WHERE rn <= 3""".stripMargin
+
+  /** q157/q193's planted-boilerplate corpus (a newsletter sentence on every
+    * 7th document), its repeated 8-gram hits and their merged spans `sp`. */
+  private def plantedRepeatSpanCtes: String =
+    raw"""planted AS (SELECT doc_id,
+         |    CASE WHEN doc_id % 7 = 0
+         |      THEN text || ' Please subscribe to our newsletter for free updates today'
+         |      ELSE text END AS text
+         |  FROM documents),
+         |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
+         |  FROM planted),
+         |grams AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
+         |    array_to_string([lower(x) for x in ws[i+1:i+8]], ' ') AS gram
+         |  FROM toks, UNNEST(range(len(ws) - 7)) t(i)
+         |  WHERE len(ws) >= 8),
+         |rep AS (SELECT gram FROM (
+         |    SELECT gram, count(DISTINCT doc_id) AS nd FROM grams GROUP BY 1)
+         |  WHERE nd >= 2),
+         |hits AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM grams
+         |  WHERE gram IN (SELECT gram FROM rep)),
+         |${islandSpanCtes(false)}""".stripMargin
+
+  /** q344/q358's per-document curation verdict from the `gates` flags:
+    * each gate's pass flag and the admitted flag that ANDs them. */
+  private def curationVerdictSql(gates: String): String =
+    s"""SELECT id, n_chars,
+       |  CAST(pass_exact AS BIGINT) AS pass_exact,
+       |  CAST(pass_neardup AS BIGINT) AS pass_neardup,
+       |  pred_lang, margin6, logit, top_cnt, n_pairs,
+       |  CAST(CASE WHEN pred_lang = 'en' AND margin6 >= 1000000
+       |    THEN 1 ELSE 0 END AS BIGINT) AS pass_lang,
+       |  CAST(CASE WHEN logit >= 0 THEN 1 ELSE 0 END AS BIGINT)
+       |    AS pass_quality,
+       |  CAST(CASE WHEN top_cnt * 10 <= n_pairs THEN 1 ELSE 0 END
+       |    AS BIGINT) AS pass_rep,
+       |  CAST(CASE WHEN pass_exact = 1 AND pass_neardup = 1
+       |    AND pred_lang = 'en' AND margin6 >= 1000000
+       |    AND logit >= 0 AND top_cnt * 10 <= n_pairs
+       |    THEN 1 ELSE 0 END AS BIGINT) AS admitted
+       |FROM $gates ORDER BY id""".stripMargin
+
+  /** The hybrid oracles' BM25 branch over the chunk index `idx`: corpus
+    * `params`, the query `terms`' tf and df, and the top 25 chunks by
+    * score in `bm(id, bm25_score)`. */
+  private def bm25Top25Ctes(terms: String): String =
+    s"""params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
+       |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
+       |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
+       |  WHERE tok IN ($terms) GROUP BY id, tok),
+       |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
+       |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
+       |sc AS (SELECT t.id,
+       |${bm25TermScore}
+       |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
+       |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
+       |  ORDER BY bm25_score DESC, id LIMIT 25)""".stripMargin
+
+  /** q345/q366's span removal: merge the `hits` spans, drop the
+    * tokens they cover from `otoks(doc_id, ows)` and report each doc's
+    * kept text and token counts. */
+  private def spanRemovalSql: String =
+    s"""${islandSpanCtes(true)},
+       |pos2 AS (SELECT doc_id, CAST(i AS BIGINT) AS idx,
+       |    ows[CAST(i + 1 AS INT)] AS tok
+       |  FROM otoks, UNNEST(range(len(ows))) t(i)),
+       |keptk AS (SELECT p.doc_id, p.idx, p.tok FROM pos2 p
+       |  WHERE NOT EXISTS (SELECT 1 FROM sp s
+       |    WHERE s.doc_id = p.doc_id AND p.idx >= s.s AND p.idx < s.e)),
+       |res AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text,
+       |    CAST(count(*) AS BIGINT) AS kept FROM keptk GROUP BY 1)
+       |SELECT o.doc_id, COALESCE(r.text, '') AS text,
+       |  CAST(len(o.ows) AS BIGINT) AS n_tokens,
+       |  CAST(COALESCE(r.kept, 0) AS BIGINT) AS kept_tokens
+       |FROM otoks o LEFT JOIN res r USING (doc_id)
+       |ORDER BY o.doc_id""".stripMargin
+
+  /** q372/q381's ordered proximity search over `idx`: from each `graft`,
+    * the nearest later `phrase`, then the nearest `probe` after it, both
+    * within 6 positions of the `graft`, ending in `s2(id, s, e)`. */
+  private def proximitySpanCtes: String =
+    """px AS MATERIALIZED (SELECT id, CAST(i - 1 AS BIGINT) AS pos,
+      |    tokens[i] AS tok
+      |  FROM idx, UNNEST(range(1, len(tokens) + 1)) t(i)
+      |  WHERE tokens[i] IN ('graft', 'phrase', 'probe')),
+      |o0 AS (SELECT id, pos AS s, pos AS e FROM px WHERE tok = 'graft'),
+      |s1 AS (SELECT o.id, o.s, min(p.pos) AS e
+      |  FROM o0 o JOIN px p ON p.id = o.id AND p.tok = 'phrase'
+      |    AND p.pos > o.e AND p.pos - o.s <= 6
+      |  GROUP BY 1, 2),
+      |s2 AS (SELECT o.id, o.s, min(p.pos) AS e
+      |  FROM s1 o JOIN px p ON p.id = o.id AND p.tok = 'probe'
+      |    AND p.pos > o.e AND p.pos - o.s <= 6
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** q367/q373's MaxScore top term: per-term BM25 upper bounds `ub6`
+    * from the max tf and min length, the highest-bound term `tt`, and
+    * its scores `ts(s6, rn)` ranked over `sc`. */
+  private def maxScoreTopTermCtes: String =
+    """tb AS (SELECT tok, max(tf) AS max_tf, min(dl) AS min_dl
+      |  FROM tf GROUP BY tok),
+      |ub AS (SELECT tb.tok,
+      |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
+      |      tb.max_tf * 2.2 /
+      |      (tb.max_tf + 1.2 * (0.25 + 0.75 * tb.min_dl / p.avgdl)) *
+      |      1000000, 0) AS BIGINT) + 1 AS ub6
+      |  FROM tb, params p JOIN df f ON tb.tok = f.tok),
+      |tt AS (SELECT tok FROM ub ORDER BY ub6 DESC, tok LIMIT 1),
+      |ts AS (SELECT CAST(round(s * 1000000, 0) AS BIGINT) AS s6,
+      |    row_number() OVER (ORDER BY CAST(round(s * 1000000, 0)
+      |      AS BIGINT) DESC, id) AS rn
+      |  FROM sc WHERE tok = (SELECT tok FROM tt))""".stripMargin
+
+  /** q340/q345's suffix-rank replay over `planted`: each 12-token
+    * window keyed by the 8-token ranks at its start and 4 tokens in,
+    * kept where its key occurs in two or more documents, ending in
+    * `hits(doc_id, s, e)`. */
+  private def saRepeatHitsCtes: String =
+    s"""${saRankCtes(3, "SELECT doc_id, text FROM planted")},
+       |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
+       |keyed AS MATERIALIZED (SELECT a.doc_id, a.pos, a.rank AS ra,
+       |    b.rank AS rb
+       |  FROM r3 a JOIN r3 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 4
+       |  JOIN lens l ON l.doc_id = a.doc_id
+       |  WHERE a.pos + 12 <= l.len),
+       |rep AS (SELECT ra, rb FROM (SELECT ra, rb,
+       |    count(DISTINCT doc_id) AS nd FROM keyed GROUP BY 1, 2)
+       |  WHERE nd >= 2),
+       |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
+       |  FROM keyed k JOIN rep USING (ra, rb))""".stripMargin
+
+  /** q177/q185's quantile-gate oracle over `cuts(q_mille, cut)` and the
+    * values `v(v)`: each cut's exact rank, the target rank and whether
+    * the rank lies within ±⌈6n/256⌉ ranks of it. */
+  private def quantileGateSql: String =
+    """agg AS (SELECT c.q_mille, c.cut, count(*) AS n,
+      |    CAST(SUM(CASE WHEN v.v <= c.cut THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_le
+      |  FROM cuts c CROSS JOIN v GROUP BY 1, 2),
+      |b AS (SELECT q_mille, cut, n, n_le,
+      |    (q_mille * n + 999) // 1000 AS target_r,
+      |    (6 * n + 255) // 256 AS slack FROM agg)
+      |SELECT CAST(q_mille AS BIGINT) AS q_mille, cut, n, n_le, target_r,
+      |  target_r - slack AS lo, target_r + slack AS hi,
+      |  CAST(CASE WHEN n_le BETWEEN target_r - slack AND target_r + slack
+      |       THEN 1 ELSE 0 END AS BIGINT) AS in_bound
+      |FROM b ORDER BY q_mille""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q01_pricing_agg" ->
@@ -7490,7 +7783,7 @@ object SparkEntry {
         |FROM documents""".stripMargin,
 
     "q19_bm25_topk" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
         |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d) u
@@ -7498,8 +7791,7 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
         |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
         |sc AS (SELECT t.doc_id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok)
         |SELECT doc_id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY doc_id
         |ORDER BY bm25_score DESC, doc_id LIMIT 10""".stripMargin,
@@ -7764,58 +8056,16 @@ object SparkEntry {
     // math, BM25, rank windows, RRF fusion, top-k — is re-derived here.
 
     "q35_hybrid_search" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q35_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q35_index/*.parquet'),
         |dense AS (SELECT * FROM '__AUX__/q35_dense/*.parquet'),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('spark','join','merge','table','scan') GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
-        |  ORDER BY bm25_score DESC, id LIMIT 25),
-        |dr AS (SELECT id, dense_score,
-        |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
-        |br AS (SELECT id, bm25_score,
-        |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
-        |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-        |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-        |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
-        |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-        |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-        |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
-        |FROM top JOIN idx ON idx.id = top.id""".stripMargin,
+        |${bm25Top25Ctes("'spark','join','merge','table','scan'")},
+        |${rrfTop5Sql}""".stripMargin,
 
     "q54_hybrid_prebuilt" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q54_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q54_index/*.parquet'),
         |dense AS (SELECT * FROM '__AUX__/q54_dense/*.parquet'),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('filter','predicate','pushdown','scan') GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
-        |  ORDER BY bm25_score DESC, id LIMIT 25),
-        |dr AS (SELECT id, dense_score,
-        |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
-        |br AS (SELECT id, bm25_score,
-        |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
-        |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-        |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-        |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
-        |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-        |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-        |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
-        |FROM top JOIN idx ON idx.id = top.id""".stripMargin,
+        |${bm25Top25Ctes("'filter','predicate','pushdown','scan'")},
+        |${rrfTop5Sql}""".stripMargin,
 
     // thresholds = floor(rate·2^32) in hex: 0.1→19999999, 0.5→80000000,
     // 0.9→e6666666 (Sampling.rateThreshold)
@@ -7827,7 +8077,7 @@ object SparkEntry {
         |       ELSE 'e6666666' END""".stripMargin,
 
     "q56_dedup_components" ->
-      """WITH RECURSIVE tripled AS (
+      s"""WITH RECURSIVE tripled AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 10000, text FROM documents
         |  UNION ALL SELECT doc_id + 20000, text FROM documents),
@@ -7836,13 +8086,7 @@ object SparkEntry {
         |  FROM tripled),
         |edges AS (SELECT a.doc_id AS id1, b.doc_id AS id2 FROM ranked a
         |  JOIN ranked b ON a.dg = b.dg AND b.rn = a.rn + 1),
-        |sym AS (SELECT id1 AS src, id2 AS dst FROM edges
-        |  UNION SELECT id2, id1 FROM edges),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |walk(id, comp) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+        |${componentWalkCtes("edges", false)},
         |cc AS (SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id)
         |SELECT doc_id, comp, count(*) OVER (PARTITION BY comp) AS comp_size
         |FROM cc""".stripMargin,
@@ -8040,83 +8284,16 @@ object SparkEntry {
         |WHERE sigma > 0
         |  AND round(abs(CAST(l_extendedprice AS DOUBLE) - mu) / sigma, 6) > 1.5""".stripMargin,
 
-    "q70_simhash_radius" -> {
-      val lo = (0 until 32).map(j =>
-        s"CASE WHEN 2*len(list_filter(mh1, h -> substr(h,${j + 1},1) >= '8')) > len(mh1) THEN ${1L << j} ELSE 0 END")
-      val hi = (0 until 16).map(j =>
-        s"CASE WHEN 2*len(list_filter(mh2, h -> substr(h,${j + 1},1) >= '8')) > len(mh2) THEN ${1L << (32 + j)} ELSE 0 END")
-      val bits = (lo ++ hi).mkString(" + ")
-      // mirror of Dedup.bandLayout(48, 5): widths 10,10,10,9,9
-      val layout = Seq((0, 10), (10, 10), (20, 10), (30, 9), (39, 9))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT doc_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 10000, text || ' near duplicate tail marker'
-         |  FROM documents),
-         |sigs AS (SELECT doc_id, CAST($bits AS BIGINT) AS sig FROM (
-         |  SELECT doc_id,
-         |    [md5(x) for x in string_split(text, ' ')] AS mh1,
-         |    [md5('2' || x) for x in string_split(text, ' ')] AS mh2
-         |  FROM corpus)),
-         |banded AS (
-         |  $bands),
-         |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-         |    a.sig AS sig1, b.sig AS sig2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.doc_id < b.doc_id)
-         |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-         |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= 4""".stripMargin
-    },
+    // mirror of Dedup.bandLayout(48, 5): widths 10,10,10,9,9
+    "q70_simhash_radius" -> simhashRadiusOracle(hiBits = 16,
+      Seq((0, 10), (10, 10), (20, 10), (30, 9), (39, 9)), maxDist = 4),
 
-    "q71_simhash48_radius" -> {
-      val lo = (0 until 32).map(j =>
-        s"CASE WHEN 2*len(list_filter(mh1, h -> substr(h,${j + 1},1) >= '8')) > len(mh1) THEN ${1L << j} ELSE 0 END")
-      val hi = (0 until 31).map(j =>
-        s"CASE WHEN 2*len(list_filter(mh2, h -> substr(h,${j + 1},1) >= '8')) > len(mh2) THEN ${1L << (32 + j)} ELSE 0 END")
-      val bits = (lo ++ hi).mkString(" + ")
-      // mirror of Dedup.bandLayout(63, 7): seven 9-bit bands
-      val layout = (0 until 7).map(b => (9 * b, 9))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT doc_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 10000, text || ' near duplicate tail marker'
-         |  FROM documents),
-         |sigs AS (SELECT doc_id, CAST($bits AS BIGINT) AS sig FROM (
-         |  SELECT doc_id,
-         |    [md5(x) for x in string_split(text, ' ')] AS mh1,
-         |    [md5('2' || x) for x in string_split(text, ' ')] AS mh2
-         |  FROM corpus)),
-         |banded AS (
-         |  $bands),
-         |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-         |    a.sig AS sig1, b.sig AS sig2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.doc_id < b.doc_id)
-         |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-         |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= 6""".stripMargin
-    },
+    // mirror of Dedup.bandLayout(63, 7): seven 9-bit bands
+    "q71_simhash48_radius" -> simhashRadiusOracle(hiBits = 31,
+      (0 until 7).map(b => (9 * b, 9)), maxDist = 6),
 
-    "q72_topk_per_key" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, price_cents FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_cents,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY CAST(ROUND(l_extendedprice*100) AS BIGINT) DESC,
-        |               l_orderkey ASC, l_linenumber ASC) AS rn
-        |  FROM lineitem) WHERE rn <= 3""".stripMargin,
-
-    "q73_topk_spilled" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, price_cents FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_cents,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY CAST(ROUND(l_extendedprice*100) AS BIGINT) DESC,
-        |               l_orderkey ASC, l_linenumber ASC) AS rn
-        |  FROM lineitem) WHERE rn <= 3""".stripMargin,
+    "q72_topk_per_key" -> topPricesPerFlagOracle,
+    "q73_topk_spilled" -> topPricesPerFlagOracle,
 
     "q74_repeated_ngrams" ->
       """WITH planted AS (SELECT doc_id,
@@ -8154,13 +8331,7 @@ object SparkEntry {
     "q76_dedup_keep_canonical" ->
       s"""WITH RECURSIVE $minhashLshCtes,
          |pairs AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
-         |sym AS (SELECT id1 AS src, id2 AS dst FROM pairs
-         |  UNION SELECT id2, id1 FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS id FROM sym),
-         |walk(id, comp) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+         |${componentWalkCtes("pairs", false)},
          |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id)
          |SELECT doc_id FROM d
          |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> comp)""".stripMargin,
@@ -8336,30 +8507,14 @@ object SparkEntry {
     // each iteration (the recursive term may reference pr only once);
     // outdeg coalesces to 1 for them — w = 0 kills the term anyway.
     "q88_pagerank" ->
-      """WITH RECURSIVE e AS (
+      s"""WITH RECURSIVE e AS (
         |  SELECT DISTINCT src, dst FROM (
         |    SELECT doc_id % 50 AS src, ((doc_id % 50) * (doc_id % 50) + 3) % 50 AS dst
         |    FROM documents
         |    UNION ALL
         |    SELECT doc_id % 50 AS src, ((doc_id % 50) * 3 + 7) % 50 AS dst
         |    FROM documents) WHERE src <> dst),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-        |e0 AS (SELECT src, dst, 1 AS w FROM e
-        |  UNION ALL SELECT id, id, 0 FROM nodes),
-        |pr(id, rank, iter) AS (
-        |  SELECT id, CAST(1000000000 AS BIGINT), 0 FROM nodes
-        |  UNION ALL
-        |  SELECT e0.dst,
-        |    CAST(150000000 + SUM(e0.w * ((p.rank * 85) // (100 * COALESCE(o.outdeg, 1))))
-        |      AS BIGINT),
-        |    p.iter + 1
-        |  FROM pr p
-        |  JOIN e0 ON e0.src = p.id
-        |  LEFT JOIN outdeg o ON o.src = e0.src
-        |  WHERE p.iter < 5
-        |  GROUP BY e0.dst, p.iter)
+        |${pageRankCtes(5)}
         |SELECT id, rank FROM pr WHERE iter = 5""".stripMargin,
 
     "q92_temperature_sample" ->
@@ -8977,7 +9132,7 @@ object SparkEntry {
         |FROM l WHERE ns IS NOT NULL GROUP BY 1""".stripMargin,
 
     "q145_entity_resolution" ->
-      """WITH RECURSIVE base AS (
+      s"""WITH RECURSIVE base AS (
         |  SELECT DISTINCT c_custkey % 500 AS eid FROM customer),
         |sysA AS (SELECT eid AS rec_id,
         |    'entity_' || CAST(eid AS VARCHAR) AS name FROM base),
@@ -8988,13 +9143,7 @@ object SparkEntry {
         |links AS (SELECT a.rec_id AS id1, b.rec_id AS id2
         |  FROM sysA a JOIN sysB b ON right(a.name, 2) = right(b.name, 2)
         |  WHERE levenshtein(a.name, b.name) <= 1),
-        |sym AS (SELECT id1 AS src, id2 AS dst FROM links
-        |  UNION SELECT id2, id1 FROM links),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |walk(id, comp) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+        |${componentWalkCtes("links", false)},
         |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
         |allrec AS (SELECT * FROM sysA UNION ALL SELECT * FROM sysB)
         |SELECT r.rec_id, r.name, COALESCE(cc.comp, r.rec_id) AS entity_id
@@ -9152,34 +9301,7 @@ object SparkEntry {
         |WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.9""".stripMargin,
 
     "q157_substring_spans" ->
-      """WITH planted AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN text || ' Please subscribe to our newsletter for free updates today'
-        |      ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-        |  FROM planted),
-        |grams AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string([lower(x) for x in ws[i+1:i+8]], ' ') AS gram
-        |  FROM toks, UNNEST(range(len(ws) - 7)) t(i)
-        |  WHERE len(ws) >= 8),
-        |rep AS (SELECT gram FROM (
-        |    SELECT gram, count(DISTINCT doc_id) AS nd FROM grams GROUP BY 1)
-        |  WHERE nd >= 2),
-        |hits AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM grams
-        |  WHERE gram IN (SELECT gram FROM rep)),
-        |flagged AS (SELECT doc_id, s, e,
-        |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-        |      THEN 1 ELSE 0 END AS new_island
-        |  FROM hits
-        |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |isl AS (SELECT doc_id, s, e,
-        |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM flagged),
-        |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-        |  FROM isl GROUP BY 1, 2),
+      raw"""WITH ${plantedRepeatSpanCtes},
         |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
         |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
@@ -9260,18 +9382,7 @@ object SparkEntry {
          |${gramCtes(8)},
          |${gramCtes(16)},
          |hits AS (SELECT * FROM hits8 UNION ALL SELECT * FROM hits16),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
+         |${islandSpanCtes(false)},
          |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
          |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
          |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
@@ -9626,21 +9737,10 @@ object SparkEntry {
     // in integer math — the sketch's admission decisions are checked by
     // an engine that never saw the sketch.
     "q177_quantile_gate" ->
-      """WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q177_cuts/*.parquet'),
+      s"""WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q177_cuts/*.parquet'),
         |v AS (SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v
         |  FROM lineitem),
-        |agg AS (SELECT c.q_mille, c.cut, count(*) AS n,
-        |    CAST(SUM(CASE WHEN v.v <= c.cut THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_le
-        |  FROM cuts c CROSS JOIN v GROUP BY 1, 2),
-        |b AS (SELECT q_mille, cut, n, n_le,
-        |    (q_mille * n + 999) // 1000 AS target_r,
-        |    (6 * n + 255) // 256 AS slack FROM agg)
-        |SELECT CAST(q_mille AS BIGINT) AS q_mille, cut, n, n_le, target_r,
-        |  target_r - slack AS lo, target_r + slack AS hi,
-        |  CAST(CASE WHEN n_le BETWEEN target_r - slack AND target_r + slack
-        |       THEN 1 ELSE 0 END AS BIGINT) AS in_bound
-        |FROM b ORDER BY q_mille""".stripMargin,
+        |${quantileGateSql}""".stripMargin,
 
     // fuzzy + exact decontamination on the planted corpus: DuckDB
     // re-derives the word-swap, the 5-gram exact gate (q60's CTEs), and
@@ -9769,54 +9869,7 @@ object SparkEntry {
         |  FROM normed),
         |dd AS MATERIALIZED (SELECT doc_id, n_chars, norm_text
         |  FROM ranked WHERE rn = 1),
-        |liv AS (SELECT
-        |    CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'zz'
-        |      ELSE 'qq' END AS lang,
-        |    CASE doc_id % 3 WHEN 0 THEN text
-        |      WHEN 1 THEN translate(text, 'aeiou', 'zzzzz')
-        |      ELSE reverse(text) END AS text
-        |  FROM documents WHERE doc_id < 200),
-        |litb AS (SELECT lang,
-        |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-        |  FROM (SELECT lang, unnest(flatten(list_transform(
-        |      list_filter(string_split(lower(trim(text)), ' '),
-        |        w -> w <> ''),
-        |      w -> list_transform(range(1, length(w) + 2),
-        |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-        |    FROM liv)),
-        |licnt AS (SELECT lang, bucket, count(*) AS c FROM litb GROUP BY 1, 2),
-        |litot AS (SELECT lang, sum(c) AS total FROM licnt GROUP BY 1),
-        |liwts AS (SELECT licnt.lang, bucket,
-        |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-        |      AS BIGINT) AS w6
-        |  FROM licnt JOIN litot USING (lang)),
-        |liflo AS (SELECT lang,
-        |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-        |      AS def6
-        |  FROM litot),
-        |ligb AS (SELECT doc_id,
-        |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-        |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-        |      list_filter(string_split(lower(trim(norm_text)), ' '),
-        |        w -> w <> ''),
-        |      w -> list_transform(range(1, length(w) + 2),
-        |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-        |    FROM dd)),
-        |lisc AS (SELECT g.doc_id, l.lang,
-        |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6
-        |  FROM ligb g CROSS JOIN (SELECT DISTINCT lang FROM litot) l
-        |  LEFT JOIN liwts w ON w.lang = l.lang AND w.bucket = g.bucket
-        |  JOIN liflo f ON f.lang = l.lang
-        |  GROUP BY 1, 2),
-        |lirk AS (SELECT doc_id, lang, score6,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score6 DESC, lang) AS rn,
-        |    lead(score6) OVER (PARTITION BY doc_id
-        |      ORDER BY score6 DESC, lang) AS next6
-        |  FROM lisc),
-        |lipred AS (SELECT doc_id, lang AS pred_lang,
-        |    score6 - COALESCE(next6, score6) AS margin6
-        |  FROM lirk WHERE rn = 1),
+        |${langIdPredictCtes("dd")},
         |${minhashLshCtesOver("SELECT doc_id, norm_text AS text FROM dd")},
         |ndp AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
         |ndsym AS (SELECT id1 AS src, id2 AS dst FROM ndp
@@ -9944,13 +9997,7 @@ object SparkEntry {
           "FROM documents")
       s"""WITH RECURSIVE $ctes,
          |pairs AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
-         |sym AS (SELECT id1 AS src, id2 AS dst FROM pairs
-         |  UNION SELECT id2, id1 FROM pairs),
-         |nodes AS (SELECT DISTINCT src AS id FROM sym),
-         |walk(id, comp) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+         |${componentWalkCtes("pairs", false)},
          |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
          |rk AS (SELECT cc.id,
          |    row_number() OVER (PARTITION BY cc.comp
@@ -9977,20 +10024,9 @@ object SparkEntry {
         |FROM cells GROUP BY 1, 2 ORDER BY vec_id, out_dim""".stripMargin,
 
     "q185_stream_quantile" ->
-      """WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q185_cuts/*.parquet'),
+      s"""WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q185_cuts/*.parquet'),
         |v AS (SELECT CAST(ROUND(value * 100) AS BIGINT) AS v FROM events),
-        |agg AS (SELECT c.q_mille, c.cut, count(*) AS n,
-        |    CAST(SUM(CASE WHEN v.v <= c.cut THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_le
-        |  FROM cuts c CROSS JOIN v GROUP BY 1, 2),
-        |b AS (SELECT q_mille, cut, n, n_le,
-        |    (q_mille * n + 999) // 1000 AS target_r,
-        |    (6 * n + 255) // 256 AS slack FROM agg)
-        |SELECT CAST(q_mille AS BIGINT) AS q_mille, cut, n, n_le, target_r,
-        |  target_r - slack AS lo, target_r + slack AS hi,
-        |  CAST(CASE WHEN n_le BETWEEN target_r - slack AND target_r + slack
-        |       THEN 1 ELSE 0 END AS BIGINT) AS in_bound
-        |FROM b ORDER BY q_mille""".stripMargin,
+        |${quantileGateSql}""".stripMargin,
 
     "q186_hnsw_append" ->
       """WITH lv AS (SELECT vec_id AS id, embedding,
@@ -10114,34 +10150,7 @@ object SparkEntry {
         |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
 
     "q193_span_removal" ->
-      """WITH planted AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN text || ' Please subscribe to our newsletter for free updates today'
-        |      ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-        |  FROM planted),
-        |grams AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string([lower(x) for x in ws[i+1:i+8]], ' ') AS gram
-        |  FROM toks, UNNEST(range(len(ws) - 7)) t(i)
-        |  WHERE len(ws) >= 8),
-        |rep AS (SELECT gram FROM (
-        |    SELECT gram, count(DISTINCT doc_id) AS nd FROM grams GROUP BY 1)
-        |  WHERE nd >= 2),
-        |hits AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM grams
-        |  WHERE gram IN (SELECT gram FROM rep)),
-        |flagged AS (SELECT doc_id, s, e,
-        |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-        |      THEN 1 ELSE 0 END AS new_island
-        |  FROM hits
-        |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |isl AS (SELECT doc_id, s, e,
-        |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM flagged),
-        |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-        |  FROM isl GROUP BY 1, 2),
+      raw"""WITH ${plantedRepeatSpanCtes},
         |tokpos AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, ws[i+1] AS tok
         |  FROM toks, UNNEST(range(len(ws))) t(i)),
         |kept AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tokpos tp
@@ -10212,30 +10221,14 @@ object SparkEntry {
     },
 
     "q197_citation_authority" ->
-      """WITH RECURSIVE d AS (SELECT DISTINCT doc_id % 40 AS src
+      s"""WITH RECURSIVE d AS (SELECT DISTINCT doc_id % 40 AS src
         |  FROM documents),
         |e AS (SELECT DISTINCT src, dst FROM (
         |    SELECT src, (src * src + 13) % 40 AS dst FROM d
         |    UNION ALL
         |    SELECT src, (src * 7 + 3) % 40 AS dst FROM d)
         |  WHERE src <> dst),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-        |e0 AS (SELECT src, dst, 1 AS w FROM e
-        |  UNION ALL SELECT id, id, 0 FROM nodes),
-        |pr(id, rank, iter) AS (
-        |  SELECT id, CAST(1000000000 AS BIGINT), 0 FROM nodes
-        |  UNION ALL
-        |  SELECT e0.dst,
-        |    CAST(150000000 + SUM(e0.w * ((p.rank * 85) // (100 * COALESCE(o.outdeg, 1))))
-        |      AS BIGINT),
-        |    p.iter + 1
-        |  FROM pr p
-        |  JOIN e0 ON e0.src = p.id
-        |  LEFT JOIN outdeg o ON o.src = e0.src
-        |  WHERE p.iter < 3
-        |  GROUP BY e0.dst, p.iter)
+        |${pageRankCtes(3)}
         |SELECT id, rank FROM pr WHERE iter = 3""".stripMargin,
 
     "q198_source_overlap" ->
@@ -10359,7 +10352,7 @@ object SparkEntry {
         |FROM qs q LEFT JOIN hits h ON h.qid = q.qid ORDER BY query_id""".stripMargin,
 
     "q203_hybrid_ann" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q203_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q203_index/*.parquet'),
         |asg AS (SELECT * FROM '__AUX__/q203_assign/*.parquet'),
         |pr AS (SELECT * FROM '__AUX__/q203_probes/*.parquet'),
         |qv AS (SELECT qv FROM '__AUX__/q203_qvec/*.parquet'),
@@ -10372,29 +10365,8 @@ object SparkEntry {
         |  GROUP BY id),
         |dense AS (SELECT id, dense_score FROM dc
         |  ORDER BY dense_score DESC, id LIMIT 25),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('filter','join','scan','vector') GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
-        |  ORDER BY bm25_score DESC, id LIMIT 25),
-        |dr AS (SELECT id, dense_score,
-        |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
-        |br AS (SELECT id, bm25_score,
-        |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
-        |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-        |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-        |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
-        |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-        |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-        |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
-        |FROM top JOIN idx ON idx.id = top.id""".stripMargin,
+        |${bm25Top25Ctes("'filter','join','scan','vector'")},
+        |${rrfTop5Sql}""".stripMargin,
 
     "q204_wordpiece" ->
       """WITH RECURSIVE vp AS (SELECT piece,
@@ -11978,28 +11950,7 @@ object SparkEntry {
 
     "q273_modularity_move" ->
       s"""WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |raw AS (SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
-        |  WHERE src <> dst),
-        |deg AS MATERIALIZED (SELECT src AS id,
-        |    CAST(count(*) AS BIGINT) AS k FROM sym GROUP BY 1),
-        |mm AS MATERIALIZED (SELECT CAST(count(*) // 2 AS BIGINT) AS m
-        |  FROM sym),
-        |r0 AS (SELECT id, id AS comm FROM deg),
-        |${modularityRoundCtes("r0", 1)},
-        |${modularityRoundCtes("r1", 2)},
-        |ec AS (SELECT a.comm, CAST(count(*) // 2 AS BIGINT) AS ec
-        |  FROM sym s JOIN r2 a ON a.id = s.src
-        |  JOIN r2 b ON b.id = s.dst AND b.comm = a.comm GROUP BY 1),
-        |kct AS (SELECT r.comm, CAST(sum(d.k) AS BIGINT) AS kc
-        |  FROM r2 r JOIN deg d USING (id) GROUP BY 1),
-        |qn AS (SELECT CAST(sum(4 * mm.m * coalesce(ec.ec, 0)
-        |      - kct.kc * kct.kc) AS BIGINT) AS num,
-        |    max(mm.m) AS m
-        |  FROM kct LEFT JOIN ec ON ec.comm = kct.comm CROSS JOIN mm),
+        |${modularityTwoRoundCtes},
         |qq AS (SELECT CAST(num * 1000000 // (4 * m * m) AS BIGINT)
         |    AS q_u6 FROM qn)
         |SELECT r2.id, r2.comm, qq.q_u6 FROM r2, qq
@@ -12339,13 +12290,7 @@ object SparkEntry {
         |links AS MATERIALIZED (SELECT id1, id2 FROM p, w1, w2
         |  WHERE g1 * w1.wa + (1 - g1) * w1.wd
         |    + g2 * w2.wa + (1 - g2) * w2.wd >= 1),
-        |sym AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM links
-        |  UNION SELECT id2, id1 FROM links),
-        |nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM sym),
-        |walk(id, comp) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+        |${componentWalkCtes("links", true)},
         |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
         |sz AS (SELECT comp, CAST(count(*) AS BIGINT) AS n_members
         |  FROM cc GROUP BY 1)
@@ -12475,7 +12420,7 @@ object SparkEntry {
         |ORDER BY id""".stripMargin,
 
     "q295_prf_expansion" ->
-      """WITH d AS MATERIALIZED (SELECT doc_id,
+      s"""WITH d AS MATERIALIZED (SELECT doc_id,
         |    string_split(text, ' ') AS toks FROM documents),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
         |    avg(len(toks)) AS avgdl FROM d),
@@ -12489,8 +12434,7 @@ object SparkEntry {
         |    AS df FROM (
         |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
         |sc AS (SELECT t.doc_id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |top AS MATERIALIZED (SELECT doc_id,
         |    CAST(round(round(sum(s), 6) * 1000000, 0) AS BIGINT) AS w
@@ -13304,28 +13248,7 @@ object SparkEntry {
 
     "q322_louvain_two_level" ->
       s"""WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |raw AS (SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
-        |  WHERE src <> dst),
-        |deg AS MATERIALIZED (SELECT src AS id,
-        |    CAST(count(*) AS BIGINT) AS k FROM sym GROUP BY 1),
-        |mm AS MATERIALIZED (SELECT CAST(count(*) // 2 AS BIGINT) AS m
-        |  FROM sym),
-        |r0 AS (SELECT id, id AS comm FROM deg),
-        |${modularityRoundCtes("r0", 1)},
-        |${modularityRoundCtes("r1", 2)},
-        |ec AS (SELECT a.comm, CAST(count(*) // 2 AS BIGINT) AS ec
-        |  FROM sym s JOIN r2 a ON a.id = s.src
-        |  JOIN r2 b ON b.id = s.dst AND b.comm = a.comm GROUP BY 1),
-        |kct AS (SELECT r.comm, CAST(sum(d.k) AS BIGINT) AS kc
-        |  FROM r2 r JOIN deg d USING (id) GROUP BY 1),
-        |qn AS (SELECT CAST(sum(4 * mm.m * coalesce(ec.ec, 0)
-        |      - kct.kc * kct.kc) AS BIGINT) AS num,
-        |    max(mm.m) AS m
-        |  FROM kct LEFT JOIN ec ON ec.comm = kct.comm CROSS JOIN mm),
+        |${modularityTwoRoundCtes},
         |qq AS (SELECT CAST(num * 1000000 // (4 * m * m) AS BIGINT)
         |    AS q_l1_u6 FROM qn),
         |lab AS MATERIALIZED (SELECT a.comm AS ca, b.comm AS cb
@@ -13920,30 +13843,8 @@ object SparkEntry {
       s"""WITH planted AS (SELECT doc_id, text || CASE WHEN doc_id % 7 = 0
          |    THEN ' exact substr pass finds arbitrary length repeats beyond any fixed k grid'
          |    ELSE '' END AS text FROM documents),
-         |${saRankCtes(3, "SELECT doc_id, text FROM planted")},
-         |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-         |keyed AS MATERIALIZED (SELECT a.doc_id, a.pos, a.rank AS ra,
-         |    b.rank AS rb
-         |  FROM r3 a JOIN r3 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 4
-         |  JOIN lens l ON l.doc_id = a.doc_id
-         |  WHERE a.pos + 12 <= l.len),
-         |rep AS (SELECT ra, rb FROM (SELECT ra, rb,
-         |    count(DISTINCT doc_id) AS nd FROM keyed GROUP BY 1, 2)
-         |  WHERE nd >= 2),
-         |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
-         |  FROM keyed k JOIN rep USING (ra, rb)),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
+         |${saRepeatHitsCtes},
+         |${islandSpanCtes(false)},
          |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
          |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
          |SELECT l.doc_id, l.len AS n_tokens,
@@ -13959,43 +13860,8 @@ object SparkEntry {
          |    ELSE '' END AS text FROM documents),
          |otoks AS MATERIALIZED (SELECT doc_id,
          |    regexp_extract_all(text, '\\S+') AS ows FROM planted),
-         |${saRankCtes(3, "SELECT doc_id, text FROM planted")},
-         |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-         |keyed AS MATERIALIZED (SELECT a.doc_id, a.pos, a.rank AS ra,
-         |    b.rank AS rb
-         |  FROM r3 a JOIN r3 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 4
-         |  JOIN lens l ON l.doc_id = a.doc_id
-         |  WHERE a.pos + 12 <= l.len),
-         |rep AS (SELECT ra, rb FROM (SELECT ra, rb,
-         |    count(DISTINCT doc_id) AS nd FROM keyed GROUP BY 1, 2)
-         |  WHERE nd >= 2),
-         |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
-         |  FROM keyed k JOIN rep USING (ra, rb)),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS MATERIALIZED (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
-         |pos2 AS (SELECT doc_id, CAST(i AS BIGINT) AS idx,
-         |    ows[CAST(i + 1 AS INT)] AS tok
-         |  FROM otoks, UNNEST(range(len(ows))) t(i)),
-         |keptk AS (SELECT p.doc_id, p.idx, p.tok FROM pos2 p
-         |  WHERE NOT EXISTS (SELECT 1 FROM sp s
-         |    WHERE s.doc_id = p.doc_id AND p.idx >= s.s AND p.idx < s.e)),
-         |res AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text,
-         |    CAST(count(*) AS BIGINT) AS kept FROM keptk GROUP BY 1)
-         |SELECT o.doc_id, COALESCE(r.text, '') AS text,
-         |  CAST(len(o.ows) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(r.kept, 0) AS BIGINT) AS kept_tokens
-         |FROM otoks o LEFT JOIN res r USING (doc_id)
-         |ORDER BY o.doc_id""".stripMargin
+         |${saRepeatHitsCtes},
+         |${spanRemovalSql}""".stripMargin
     },
 
     "q346_ivfpq_batch" ->
@@ -14085,18 +13951,7 @@ object SparkEntry {
          |  HAVING max(ev) = 1 AND min(ev) = 0),
          |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
          |  FROM keyed k JOIN grp USING (ra, rb) WHERE k.ev = 0),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
+         |${islandSpanCtes(false)},
          |agg AS (SELECT doc_id,
          |    CAST(sum(e - s) AS BIGINT) AS contaminated_tokens,
          |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
@@ -14110,7 +13965,7 @@ object SparkEntry {
     },
 
     "q349_dsir_select" ->
-      """WITH rawd AS (SELECT doc_id,
+      s"""WITH rawd AS (SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 3
         |      THEN translate(text, 'aeiou', 'zzzzz') ELSE text END AS text
         |  FROM documents),
@@ -14125,24 +13980,7 @@ object SparkEntry {
         |      w -> list_transform(range(1, length(w) + 2),
         |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
         |    FROM lv)),
-        |cnt AS (SELECT lang, bucket, count(*) AS c FROM tb GROUP BY 1, 2),
-        |tot AS (SELECT lang, sum(c) AS total FROM cnt GROUP BY 1),
-        |wts AS (SELECT cnt.lang, bucket,
-        |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-        |      AS BIGINT) AS w6
-        |  FROM cnt JOIN tot USING (lang)),
-        |flo AS (SELECT lang,
-        |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-        |      AS def6
-        |  FROM tot),
-        |gb AS (SELECT doc_id,
-        |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-        |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-        |      list_filter(string_split(lower(trim(text)), ' '),
-        |        w -> w <> ''),
-        |      w -> list_transform(range(1, length(w) + 2),
-        |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-        |    FROM rawd)),
+        |${langIdBucketScoreCtes("rawd")},
         |sc AS (SELECT g.doc_id, l.lang,
         |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6,
         |    CAST(count(*) AS BIGINT) AS n_grams
@@ -14220,7 +14058,7 @@ object SparkEntry {
     // the MaxSim stage from the aux token vectors — max/sum over exact
     // ×10⁶ integers
     "q364_maxsim_rerank" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
         |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d) u
@@ -14228,8 +14066,7 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
         |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
         |sc AS (SELECT t.doc_id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |cand AS MATERIALIZED (SELECT doc_id FROM (
         |  SELECT doc_id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY doc_id
@@ -14253,7 +14090,7 @@ object SparkEntry {
         |ORDER BY maxsim_u6 DESC, doc_id LIMIT 10""".stripMargin,
 
     "q365_maxsim_batch" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
         |qt(query_id, tok) AS (VALUES (0,'table'),(0,'scan'),(0,'merge'),
         |  (0,'join'),(0,'vector'),(1,'window'),(1,'order'),(1,'sort'),
@@ -14264,8 +14101,7 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
         |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
         |sc AS (SELECT q.query_id, t.doc_id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t JOIN qt q ON q.tok = t.tok
         |  JOIN df f ON f.tok = t.tok CROSS JOIN params p),
         |bm AS (SELECT query_id, doc_id, round(sum(s), 6) AS b
@@ -14452,7 +14288,7 @@ object SparkEntry {
     // the pruning), the AUDIT columns from a u6 replay of the MaxScore
     // decision — a pruning bug fails one or the other
     "q367_bm25_maxscore" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q367_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q367_index/*.parquet'),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
         |    avg(len(tokens)) AS avgdl FROM idx),
         |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
@@ -14463,24 +14299,11 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
         |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
         |sc AS (SELECT t.id, t.tok,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc
         |  GROUP BY id ORDER BY bm25_score DESC, id LIMIT 10),
-        |tb AS (SELECT tok, max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf GROUP BY tok),
-        |ub AS (SELECT tb.tok,
-        |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
-        |      tb.max_tf * 2.2 /
-        |      (tb.max_tf + 1.2 * (0.25 + 0.75 * tb.min_dl / p.avgdl)) *
-        |      1000000, 0) AS BIGINT) + 1 AS ub6
-        |  FROM tb, params p JOIN df f ON tb.tok = f.tok),
-        |tt AS (SELECT tok FROM ub ORDER BY ub6 DESC, tok LIMIT 1),
-        |ts AS (SELECT CAST(round(s * 1000000, 0) AS BIGINT) AS s6,
-        |    row_number() OVER (ORDER BY CAST(round(s * 1000000, 0)
-        |      AS BIGINT) DESC, id) AS rn
-        |  FROM sc WHERE tok = (SELECT tok FROM tt)),
+        |${maxScoreTopTermCtes},
         |theta AS (SELECT CASE WHEN (SELECT count(*) FROM ts) < 10
         |    THEN CAST(-1 AS BIGINT)
         |    ELSE (SELECT s6 - 1 FROM ts WHERE rn = 10) END AS theta6),
@@ -14531,26 +14354,9 @@ object SparkEntry {
     // cos-rank <= 10 within the survivors, hits vs the exact probed
     // top-10
     "q374_quantized_dial" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q374_assigned/*.parquet'),
+      s"""WITH a AS (SELECT * FROM '__AUX__/q374_assigned/*.parquet'),
         |p AS (SELECT * FROM '__AUX__/q374_probes/*.parquet'),
-        |cand AS (SELECT e.vec_id, e.embedding FROM embeddings e
-        |  JOIN a USING (vec_id)
-        |  WHERE a.centroid IN (SELECT centroid FROM p)),
-        |ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
-        |  FROM cand, UNNEST(range(1, len(embedding) + 1)) t(i)),
-        |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1),
-        |cd AS MATERIALIZED (SELECT ex.vec_id, i,
-        |    CASE WHEN maxabs = 0 THEN 0
-        |         ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)
-        |    END AS q
-        |  FROM ex JOIN mx USING (vec_id)),
-        |qx AS (SELECT i, embedding[i]::DOUBLE AS x
-        |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)
-        |  WHERE vec_id = 1),
-        |qm AS (SELECT max(abs(x)) AS maxabs FROM qx),
-        |qv AS (SELECT i, CASE WHEN qm.maxabs = 0 THEN 0
-        |    ELSE CAST(floor(qx.x * 127.0 / qm.maxabs + 0.5) AS BIGINT)
-        |    END AS qv FROM qx, qm),
+        |${int8ProbedCodesCtes},
         |dr AS (SELECT cd.vec_id,
         |    row_number() OVER (ORDER BY CAST(sum(cd.q * qv.qv) AS BIGINT)
         |      DESC, cd.vec_id) AS drn
@@ -14578,7 +14384,7 @@ object SparkEntry {
     // bounds, the survive rule ub6b + (total − ub6(t)) ≥ θ6; result
     // rows from FULL unpruned scoring, independent of all of it
     "q373_bm25_blockmax" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q373_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q373_index/*.parquet'),
         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
         |    avg(len(tokens)) AS avgdl FROM idx),
         |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
@@ -14589,24 +14395,11 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
         |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
         |sc AS (SELECT t.id, t.tok,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc
         |  GROUP BY id ORDER BY bm25_score DESC, id LIMIT 5),
-        |tb AS (SELECT tok, max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf GROUP BY tok),
-        |ub AS (SELECT tb.tok,
-        |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
-        |      tb.max_tf * 2.2 /
-        |      (tb.max_tf + 1.2 * (0.25 + 0.75 * tb.min_dl / p.avgdl)) *
-        |      1000000, 0) AS BIGINT) + 1 AS ub6
-        |  FROM tb, params p JOIN df f ON tb.tok = f.tok),
-        |tt AS (SELECT tok FROM ub ORDER BY ub6 DESC, tok LIMIT 1),
-        |ts AS (SELECT CAST(round(s * 1000000, 0) AS BIGINT) AS s6,
-        |    row_number() OVER (ORDER BY CAST(round(s * 1000000, 0)
-        |      AS BIGINT) DESC, id) AS rn
-        |  FROM sc WHERE tok = (SELECT tok FROM tt)),
+        |${maxScoreTopTermCtes},
         |theta AS (SELECT CASE WHEN (SELECT count(*) FROM ts) < 5
         |    THEN CAST(-1 AS BIGINT)
         |    ELSE (SELECT s6 - 1 FROM ts WHERE rn = 5) END AS theta6),
@@ -14640,20 +14433,8 @@ object SparkEntry {
     // the greedy chain replayed from raw token arrays, then re-ranked
     // by span count (ties → id) — the served proximity ranking
     "q381_proximity_topdocs" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q381_index/*.parquet'),
-        |px AS MATERIALIZED (SELECT id, CAST(i - 1 AS BIGINT) AS pos,
-        |    tokens[i] AS tok
-        |  FROM idx, UNNEST(range(1, len(tokens) + 1)) t(i)
-        |  WHERE tokens[i] IN ('graft', 'phrase', 'probe')),
-        |o0 AS (SELECT id, pos AS s, pos AS e FROM px WHERE tok = 'graft'),
-        |s1 AS (SELECT o.id, o.s, min(p.pos) AS e
-        |  FROM o0 o JOIN px p ON p.id = o.id AND p.tok = 'phrase'
-        |    AND p.pos > o.e AND p.pos - o.s <= 6
-        |  GROUP BY 1, 2),
-        |s2 AS (SELECT o.id, o.s, min(p.pos) AS e
-        |  FROM s1 o JOIN px p ON p.id = o.id AND p.tok = 'probe'
-        |    AND p.pos > o.e AND p.pos - o.s <= 6
-        |  GROUP BY 1, 2)
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q381_index/*.parquet'),
+        |${proximitySpanCtes}
         |SELECT id, CAST(count(*) AS BIGINT) AS span_hits FROM s2
         |GROUP BY id ORDER BY span_hits DESC, id LIMIT 5""".stripMargin,
 
@@ -14732,46 +14513,17 @@ object SparkEntry {
     // the greedy proximity contract replayed from raw token arrays:
     // exploded positions, min-next-position per step, final span check
     "q372_proximity_search" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q372_index/*.parquet'),
-        |px AS MATERIALIZED (SELECT id, CAST(i - 1 AS BIGINT) AS pos,
-        |    tokens[i] AS tok
-        |  FROM idx, UNNEST(range(1, len(tokens) + 1)) t(i)
-        |  WHERE tokens[i] IN ('graft', 'phrase', 'probe')),
-        |o0 AS (SELECT id, pos AS s, pos AS e FROM px WHERE tok = 'graft'),
-        |s1 AS (SELECT o.id, o.s, min(p.pos) AS e
-        |  FROM o0 o JOIN px p ON p.id = o.id AND p.tok = 'phrase'
-        |    AND p.pos > o.e AND p.pos - o.s <= 6
-        |  GROUP BY 1, 2),
-        |s2 AS (SELECT o.id, o.s, min(p.pos) AS e
-        |  FROM s1 o JOIN px p ON p.id = o.id AND p.tok = 'probe'
-        |    AND p.pos > o.e AND p.pos - o.s <= 6
-        |  GROUP BY 1, 2)
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q372_index/*.parquet'),
+        |${proximitySpanCtes}
         |SELECT id, s, e FROM s2 ORDER BY id, s""".stripMargin,
 
     // the full quantized ladder replayed from raw embeddings: codes
     // (half-up symmetric int8), exact integer dots, the rerank-50 cut,
     // then exact cosines — probe cells and assignment from the aux
     "q370_ivf_quantized" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q370_assigned/*.parquet'),
+      s"""WITH a AS (SELECT * FROM '__AUX__/q370_assigned/*.parquet'),
         |p AS (SELECT * FROM '__AUX__/q370_probes/*.parquet'),
-        |cand AS (SELECT e.vec_id, e.embedding FROM embeddings e
-        |  JOIN a USING (vec_id)
-        |  WHERE a.centroid IN (SELECT centroid FROM p)),
-        |ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
-        |  FROM cand, UNNEST(range(1, len(embedding) + 1)) t(i)),
-        |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1),
-        |cd AS MATERIALIZED (SELECT ex.vec_id, i,
-        |    CASE WHEN maxabs = 0 THEN 0
-        |         ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)
-        |    END AS q
-        |  FROM ex JOIN mx USING (vec_id)),
-        |qx AS (SELECT i, embedding[i]::DOUBLE AS x
-        |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)
-        |  WHERE vec_id = 1),
-        |qm AS (SELECT max(abs(x)) AS maxabs FROM qx),
-        |qv AS (SELECT i, CASE WHEN qm.maxabs = 0 THEN 0
-        |    ELSE CAST(floor(qx.x * 127.0 / qm.maxabs + 0.5) AS BIGINT)
-        |    END AS qv FROM qx, qm),
+        |${int8ProbedCodesCtes},
         |dt AS (SELECT cd.vec_id, CAST(sum(cd.q * qv.qv) AS BIGINT)
         |    AS dot_q FROM cd JOIN qv USING (i) GROUP BY 1),
         |rr AS (SELECT vec_id, dot_q FROM dt
@@ -14790,7 +14542,7 @@ object SparkEntry {
     // per-query results from FULL unpruned scoring; per-query audit
     // columns from the u6 pruning replay, GROUPed BY query_id
     "q369_bm25_maxscore_batch" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q369_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q369_index/*.parquet'),
         |qt AS (SELECT CAST(query_id AS BIGINT) AS query_id, tok
         |  FROM (VALUES (0, 'zqalpha'), (0, 'scan'), (0, 'filter'),
         |    (1, 'zqbeta'), (1, 'join'), (1, 'merge'),
@@ -14804,8 +14556,7 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
         |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
         |sc AS (SELECT t.id, t.tok,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |bm0 AS (SELECT q.query_id, s.id, round(sum(s.s), 6) AS bm25_score
         |  FROM sc s JOIN qt q ON q.tok = s.tok GROUP BY 1, 2),
@@ -14873,31 +14624,10 @@ object SparkEntry {
         |ORDER BY term, id""".stripMargin,
 
     "q356_bm25_postings" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q356_index/*.parquet'),
+      s"""WITH idx AS (SELECT * FROM '__AUX__/q356_index/*.parquet'),
         |dense AS (SELECT * FROM '__AUX__/q356_dense/*.parquet'),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('filter','predicate','pushdown','scan') GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
-        |  ORDER BY bm25_score DESC, id LIMIT 25),
-        |dr AS (SELECT id, dense_score,
-        |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
-        |br AS (SELECT id, bm25_score,
-        |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
-        |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-        |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-        |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
-        |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-        |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-        |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
-        |FROM top JOIN idx ON idx.id = top.id""".stripMargin,
+        |${bm25Top25Ctes("'filter','predicate','pushdown','scan'")},
+        |${rrfTop5Sql}""".stripMargin,
 
     // independent of BOTH constructions: direct 12-token-window equality
     // (train window ∈ eval windows), no suffix-array replay
@@ -14921,18 +14651,7 @@ object SparkEntry {
          |ev AS MATERIALIZED (SELECT DISTINCT w FROM wins WHERE doc_id % 50 = 0),
          |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e FROM wins
          |  WHERE doc_id % 50 <> 0 AND w IN (SELECT w FROM ev)),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
+         |${islandSpanCtes(false)},
          |agg AS (SELECT doc_id,
          |    CAST(sum(e - s) AS BIGINT) AS contaminated_tokens,
          |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
@@ -14968,31 +14687,7 @@ object SparkEntry {
          |ev AS MATERIALIZED (SELECT DISTINCT w FROM wins WHERE doc_id % 50 = 0),
          |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e FROM wins
          |  WHERE doc_id % 50 <> 0 AND w IN (SELECT w FROM ev)),
-         |flagged AS (SELECT doc_id, s, e,
-         |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-         |      THEN 1 ELSE 0 END AS new_island
-         |  FROM hits
-         |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-         |isl AS (SELECT doc_id, s, e,
-         |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-         |  FROM flagged),
-         |sp AS MATERIALIZED (SELECT doc_id, island, min(s) AS s, max(e) AS e
-         |  FROM isl GROUP BY 1, 2),
-         |pos2 AS (SELECT doc_id, CAST(i AS BIGINT) AS idx,
-         |    ows[CAST(i + 1 AS INT)] AS tok
-         |  FROM otoks, UNNEST(range(len(ows))) t(i)),
-         |keptk AS (SELECT p.doc_id, p.idx, p.tok FROM pos2 p
-         |  WHERE NOT EXISTS (SELECT 1 FROM sp s
-         |    WHERE s.doc_id = p.doc_id AND p.idx >= s.s AND p.idx < s.e)),
-         |res AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text,
-         |    CAST(count(*) AS BIGINT) AS kept FROM keptk GROUP BY 1)
-         |SELECT o.doc_id, COALESCE(r.text, '') AS text,
-         |  CAST(len(o.ows) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(r.kept, 0) AS BIGINT) AS kept_tokens
-         |FROM otoks o LEFT JOIN res r USING (doc_id)
-         |ORDER BY o.doc_id""".stripMargin,
+         |${spanRemovalSql}""".stripMargin,
 
     "q341_sa_adjacent_lcp" -> {
       val levels = (7 to 0 by -1).map { k =>
@@ -15054,8 +14749,7 @@ object SparkEntry {
          |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
          |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
          |bsc AS (SELECT q.qid, t.id,
-         |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-         |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+         |${bm25TermScore}
          |  FROM qt q JOIN tf t ON t.tok = q.tok, params p
          |  JOIN df f ON t.tok = f.tok),
          |bm AS (SELECT qid, id, bm25_score FROM (SELECT qid, id,
@@ -15071,8 +14765,7 @@ object SparkEntry {
          |  FROM bm),
          |fused AS (SELECT COALESCE(dr.qid, br.qid) AS qid,
          |    COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-         |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-         |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
+         |${rrfScoreSum}
          |  FROM dr FULL OUTER JOIN br
          |    ON br.qid = dr.qid AND br.id = dr.id),
          |top AS (SELECT qid, id, dense_score, bm25_score, rrf_score
@@ -15085,37 +14778,9 @@ object SparkEntry {
     },
 
     "q343_hnsw_repair" ->
-      """WITH g AS (SELECT * FROM '__AUX__/q343_graph/*.parquet'),
+      s"""WITH g AS (SELECT * FROM '__AUX__/q343_graph/*.parquet'),
         |t AS (SELECT vec_id AS tid FROM embeddings WHERE vec_id % 5 = 0),
-        |alive AS MATERIALIZED (SELECT layer, id, nbr, cos FROM g
-        |  WHERE id NOT IN (SELECT tid FROM t)
-        |    AND nbr NOT IN (SELECT tid FROM t)),
-        |lost AS MATERIALIZED (SELECT layer, id AS u, nbr AS d FROM g
-        |  WHERE id NOT IN (SELECT tid FROM t)
-        |    AND nbr IN (SELECT tid FROM t)),
-        |kadd AS (SELECT layer, u, CAST(count(*) AS BIGINT) AS k
-        |  FROM lost GROUP BY 1, 2),
-        |cand AS MATERIALIZED (SELECT layer, u, c FROM (
-        |    SELECT DISTINCT l.layer, l.u, g2.nbr AS c
-        |    FROM lost l JOIN g g2 ON g2.layer = l.layer AND g2.id = l.d
-        |    WHERE g2.nbr NOT IN (SELECT tid FROM t) AND g2.nbr <> l.u) x
-        |  WHERE NOT EXISTS (SELECT 1 FROM alive a
-        |    WHERE a.layer = x.layer AND a.id = x.u AND a.nbr = x.c)),
-        |pairs AS (SELECT cd.layer, cd.u, cd.c,
-        |    unnest(vu.embedding)::DOUBLE AS x,
-        |    unnest(vc.embedding)::DOUBLE AS y
-        |  FROM cand cd JOIN embeddings vu ON vu.vec_id = cd.u
-        |  JOIN embeddings vc ON vc.vec_id = cd.c),
-        |scored AS (SELECT layer, u, c,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pairs GROUP BY 1, 2, 3),
-        |adds AS (SELECT layer, u AS id, c AS nbr, cos FROM (
-        |    SELECT s.*, row_number() OVER (PARTITION BY s.layer, s.u
-        |      ORDER BY s.cos DESC, s.c) AS rn, k.k
-        |    FROM scored s JOIN kadd k ON k.layer = s.layer AND k.u = s.u)
-        |  WHERE rn <= k),
-        |rep AS (SELECT layer, id, nbr, cos FROM alive
-        |  UNION ALL SELECT layer, id, nbr, cos FROM adds)
+        |${hnswTombstoneRepairCtes}
         |SELECT DISTINCT layer, id, nbr, cos FROM (
         |  SELECT * FROM rep
         |  UNION ALL SELECT layer, nbr AS id, id AS nbr, cos FROM rep)
@@ -15125,38 +14790,10 @@ object SparkEntry {
     // the repair rule replayed over the CUMULATIVE tombstone set
     // (both waves — wave 1 stayed below the bar and accumulated)
     "q359_hnsw_generations" ->
-      """WITH g AS (SELECT * FROM '__AUX__/q359_graph/*.parquet'),
+      s"""WITH g AS (SELECT * FROM '__AUX__/q359_graph/*.parquet'),
         |t AS (SELECT vec_id AS tid FROM embeddings
         |  WHERE vec_id % 20 = 3 OR vec_id % 5 = 0),
-        |alive AS MATERIALIZED (SELECT layer, id, nbr, cos FROM g
-        |  WHERE id NOT IN (SELECT tid FROM t)
-        |    AND nbr NOT IN (SELECT tid FROM t)),
-        |lost AS MATERIALIZED (SELECT layer, id AS u, nbr AS d FROM g
-        |  WHERE id NOT IN (SELECT tid FROM t)
-        |    AND nbr IN (SELECT tid FROM t)),
-        |kadd AS (SELECT layer, u, CAST(count(*) AS BIGINT) AS k
-        |  FROM lost GROUP BY 1, 2),
-        |cand AS MATERIALIZED (SELECT layer, u, c FROM (
-        |    SELECT DISTINCT l.layer, l.u, g2.nbr AS c
-        |    FROM lost l JOIN g g2 ON g2.layer = l.layer AND g2.id = l.d
-        |    WHERE g2.nbr NOT IN (SELECT tid FROM t) AND g2.nbr <> l.u) x
-        |  WHERE NOT EXISTS (SELECT 1 FROM alive a
-        |    WHERE a.layer = x.layer AND a.id = x.u AND a.nbr = x.c)),
-        |pairs AS (SELECT cd.layer, cd.u, cd.c,
-        |    unnest(vu.embedding)::DOUBLE AS x,
-        |    unnest(vc.embedding)::DOUBLE AS y
-        |  FROM cand cd JOIN embeddings vu ON vu.vec_id = cd.u
-        |  JOIN embeddings vc ON vc.vec_id = cd.c),
-        |scored AS (SELECT layer, u, c,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pairs GROUP BY 1, 2, 3),
-        |adds AS (SELECT layer, u AS id, c AS nbr, cos FROM (
-        |    SELECT s.*, row_number() OVER (PARTITION BY s.layer, s.u
-        |      ORDER BY s.cos DESC, s.c) AS rn, k.k
-        |    FROM scored s JOIN kadd k ON k.layer = s.layer AND k.u = s.u)
-        |  WHERE rn <= k),
-        |rep AS (SELECT layer, id, nbr, cos FROM alive
-        |  UNION ALL SELECT layer, id, nbr, cos FROM adds),
+        |${hnswTombstoneRepairCtes},
         |rep2 AS (SELECT DISTINCT layer, id, nbr, cos FROM (
         |  SELECT * FROM rep
         |  UNION ALL SELECT layer, nbr AS id, id AS nbr, cos FROM rep))
@@ -15174,13 +14811,7 @@ object SparkEntry {
          |  WHERE pass_exact = 1),
          |ndvx AS MATERIALIZED (SELECT v.id1, v.id2 FROM ndver v
          |  JOIN exo a ON a.id = v.id1 JOIN exo b ON b.id = v.id2),
-         |sym AS (SELECT id1 AS src, id2 AS dst FROM ndvx
-         |  UNION SELECT id2, id1 FROM ndvx),
-         |nodes AS (SELECT DISTINCT src AS id FROM sym),
-         |walk(id, comp) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
+         |${componentWalkCtes("ndvx", false)},
          |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
          |rkd AS (SELECT cc.id,
          |    row_number() OVER (PARTITION BY comp
@@ -15193,39 +14824,11 @@ object SparkEntry {
          |    ELSE f.pass_neardup END AS pass_neardup,
          |    f.pred_lang, f.margin6, f.logit, f.top_cnt, f.n_pairs
          |  FROM flags f LEFT JOIN losers l ON l.id = f.id)
-         |SELECT id, n_chars,
-         |  CAST(pass_exact AS BIGINT) AS pass_exact,
-         |  CAST(pass_neardup AS BIGINT) AS pass_neardup,
-         |  pred_lang, margin6, logit, top_cnt, n_pairs,
-         |  CAST(CASE WHEN pred_lang = 'en' AND margin6 >= 1000000
-         |    THEN 1 ELSE 0 END AS BIGINT) AS pass_lang,
-         |  CAST(CASE WHEN logit >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         |    AS pass_quality,
-         |  CAST(CASE WHEN top_cnt * 10 <= n_pairs THEN 1 ELSE 0 END
-         |    AS BIGINT) AS pass_rep,
-         |  CAST(CASE WHEN pass_exact = 1 AND pass_neardup = 1
-         |    AND pred_lang = 'en' AND margin6 >= 1000000
-         |    AND logit >= 0 AND top_cnt * 10 <= n_pairs
-         |    THEN 1 ELSE 0 END AS BIGINT) AS admitted
-         |FROM upg ORDER BY id""".stripMargin,
+         |${curationVerdictSql("upg")}""".stripMargin,
 
     "q344_curation_stream" ->
       s"""WITH $curationGateCtes
-         |SELECT id, n_chars,
-         |  CAST(pass_exact AS BIGINT) AS pass_exact,
-         |  CAST(pass_neardup AS BIGINT) AS pass_neardup,
-         |  pred_lang, margin6, logit, top_cnt, n_pairs,
-         |  CAST(CASE WHEN pred_lang = 'en' AND margin6 >= 1000000
-         |    THEN 1 ELSE 0 END AS BIGINT) AS pass_lang,
-         |  CAST(CASE WHEN logit >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         |    AS pass_quality,
-         |  CAST(CASE WHEN top_cnt * 10 <= n_pairs THEN 1 ELSE 0 END
-         |    AS BIGINT) AS pass_rep,
-         |  CAST(CASE WHEN pass_exact = 1 AND pass_neardup = 1
-         |    AND pred_lang = 'en' AND margin6 >= 1000000
-         |    AND logit >= 0 AND top_cnt * 10 <= n_pairs
-         |    THEN 1 ELSE 0 END AS BIGINT) AS admitted
-         |FROM flags ORDER BY id""".stripMargin
+         |${curationVerdictSql("flags")}""".stripMargin
   ) ++ Map(
     "q214_unigram_lm" ->
       """WITH RECURSIVE vp AS (SELECT piece, w6
@@ -15272,8 +14875,7 @@ object SparkEntry {
         |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
         |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
         |bsc AS (SELECT t.id,
-        |    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-        |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s
+        |${bm25TermScore}
         |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
         |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM bsc GROUP BY id
         |  ORDER BY bm25_score DESC, id LIMIT 25),
@@ -15285,8 +14887,7 @@ object SparkEntry {
         |  FROM bm),
         |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score,
         |    br.bm25_score,
-        |    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-        |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score
+        |${rrfScoreSum}
         |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
         |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
         |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score,

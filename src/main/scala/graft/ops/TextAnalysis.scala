@@ -19,8 +19,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "un", "une", "du", "en", "est", "que", "pour", "dans", "qui"),
     "de" -> Seq("der", "die", "und", "das", "in", "von", "zu", "den", "mit", "ist", "des", "auf", "für", "dem", "nicht"))
 
-  private def toks(textCol: Column): Column = split(lower(trim(textCol)), "\\s+")
-
   // Serializable word→language lookup shared by the compiled scorers.
   // (One token pass scores ALL languages; the old per-language `filter`
   // HOFs re-tokenized and re-scanned per language and never entered
@@ -269,35 +267,6 @@ object TextAnalysis {
       .select(col(idCol), col("h._1").as("term"), col("h._2").as("n_hits"))
   }
 
-  /** Quality-score struct: char length, word count, mean word length,
-    * punctuation ratio, uppercase ratio, stopword ratio (en), and a
-    * composite [0,1] quality heuristic. */
-  def qualityScore(textCol: Column): Column = {
-    val t = toks(textCol)
-    val nChars = length(textCol)
-    val nWords = when(length(trim(textCol)) === 0, 0).otherwise(size(t))
-    val nPunct = length(textCol) - length(regexp_replace(textCol, "[\\p{Punct}]", ""))
-    val nUpper = length(textCol) - length(regexp_replace(textCol, "[A-Z]", ""))
-    val nStop = stopwordHits(textCol, "en")
-    val meanWordLen = when(nWords > 0, (nChars - nWords + 1).cast("double") / nWords).otherwise(lit(0.0))
-    val punctRatio = when(nChars > 0, nPunct.cast("double") / nChars).otherwise(lit(0.0))
-    val upperRatio = when(nChars > 0, nUpper.cast("double") / nChars).otherwise(lit(0.0))
-    val stopRatio = when(nWords > 0, nStop.cast("double") / nWords).otherwise(lit(0.0))
-    // composite: long enough, not punctuation soup, some function words
-    val composite =
-      when(nWords < 5, lit(0.0)).otherwise(
-        least(lit(1.0), nWords.cast("double") / 100.0) * (lit(1.0) - punctRatio) *
-          (lit(0.5) + least(stopRatio * 2.0, lit(0.5))))
-    struct(
-      nChars.cast("long").as("n_chars"),
-      nWords.cast("long").as("n_words"),
-      meanWordLen.as("mean_word_len"),
-      punctRatio.as("punct_ratio"),
-      upperRatio.as("upper_ratio"),
-      stopRatio.as("stopword_ratio"),
-      composite.as("quality"))
-  }
-
   /** Whitespace token count (fast path). */
   def tokenCountWhitespace(textCol: Column): Column =
     when(length(trim(textCol)) === 0, 0L)
@@ -390,12 +359,6 @@ object TextAnalysis {
 
   private def rankOf(merges: Seq[(String, String)]): Map[(String, String), Int] =
     merges.zipWithIndex.toMap
-
-  /** Subword tokens per text as a compiled UDF (Seq[String] out). */
-  def bpeEncodeUdf(merges: Seq[(String, String)] = defaultBpeMerges) = {
-    val rank = rankOf(merges)
-    udf { text: String => bpeEncodeText(rank, text) }
-  }
 
   /** Subword token COUNT per text — the budget-accounting column. */
   def bpeTokenCountUdf(merges: Seq[(String, String)] = defaultBpeMerges) = {

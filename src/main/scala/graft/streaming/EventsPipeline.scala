@@ -56,13 +56,6 @@ object EventsPipeline {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Event-time tumbling-window aggregation (batch or stream — the same
-    * expression works on both). */
-  def windowedCounts(events: DataFrame, windowDur: String = "1 hour"): DataFrame =
-    events
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-
   /** Streaming variant with watermark + append mode, memory sink for
     * tests. Source: the same parquet dir read as a stream. */
   def streamWindowedCounts(spark: SparkSession, dir: String,

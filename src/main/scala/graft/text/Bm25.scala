@@ -24,10 +24,6 @@ object Bm25 {
     out.toSeq
   }
 
-  /** Term frequencies of one document. */
-  def termFreq(tokens: Seq[String]): Map[String, Int] =
-    tokens.groupBy(identity).map { case (t, xs) => (t, xs.size) }
-
   /** Robertson-style IDF with the +1 floor (Lucene/Qdrant variant):
     * `ln(1 + (N - df + 0.5) / (df + 0.5))`. */
   def idf(docFreq: Long, numDocs: Long): Double =

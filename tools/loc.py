@@ -18,7 +18,11 @@ EXTENSIONS = (".scala", ".java")
 
 def code_lines(text):
     """Number of lines in `text` that carry code outside comments."""
-    count = 0
+    return sum(code_line_flags(text))
+
+
+def code_line_flags(text):
+    """Yield, for each line of `text`, whether it carries code."""
     depth = 0          # nesting depth of /* */ comments
     in_triple = False  # inside a """ string, which may span lines
     for line in text.splitlines():
@@ -68,9 +72,7 @@ def code_lines(text):
                 i = end + 1 if end > 0 else i + 1  # escaped char literal
             else:
                 i += 1
-        if has_code:
-            count += 1
-    return count
+        yield has_code
 
 
 def source_files(paths):
