@@ -1,18 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.ingest.ChunkPipeline
-import graft.ops.{Dedup, Similarity, TextAnalysis}
+import graft.queries._
+import graft.queries.QuerySupport.t
 import graft.search.HybridSearch
-import graft.streaming.EventsPipeline
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with a DuckDB-equivalent `oracleSql` for everything
   * SQL-expressible (the t2 correctness gate).
+  *
+  * The entries live in per-family objects under `graft.queries`, each
+  * holding its query bodies next to their oracles:
+  * [[graft.queries.RelationalQueries]], [[graft.queries.EventQueries]],
+  * [[graft.queries.TextQueries]], [[graft.queries.DedupQueries]],
+  * [[graft.queries.SearchQueries]], [[graft.queries.VectorQueries]],
+  * [[graft.queries.GraphQueries]], [[graft.queries.StatsQueries]] and
+  * [[graft.queries.CurationQueries]]. [[graft.queries.QuerySupport]]
+  * holds the fixtures and oracle CTEs that several families use. This
+  * object merges the families and owns the oracle-aux and
+  * prebuilt-index paths.
   *
   * Numeric-determinism conventions used throughout (so Spark and DuckDB
   * hash-match bit-for-bit):
@@ -26,20 +36,6 @@ import graft.streaming.EventsPipeline
   *  - timestamps are emitted as formatted strings, never raw.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events.parquet has shipped as TIMESTAMP(NANOS) (unreadable natively
-    * by Spark → ns-as-long + integer divide) and as TIMESTAMP(MICROS)
-    * NTZ, depending on testdata generation; the shared normalizer in
-    * [[graft.streaming.EventsPipeline.tsToTimestamp]] handles both. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.streaming.EventsPipeline.tsToTimestamp(t(s, dir, "events"))
-  }
-
-  private def cents(c: Column): Column = round(c * 100, 0).cast("long")
 
   /** Aux tables for the ANN/hybrid oracles (q35/q36/q39): the query
     * materializes its *index-side* artifacts (bucket/centroid
@@ -59,10 +55,6 @@ object SparkEntry {
     * these `coalesce(1)` writes being timed inside the query body. */
   @volatile var auxEnabled: Boolean = false
 
-  private def writeAux(df: => DataFrame, sfDir: String, name: String): Unit =
-    if (auxEnabled)
-      df.coalesce(1).write.mode("overwrite").parquet(s"${auxPath(sfDir)}/$name")
-
   /** Prebuilt hybrid-index fixture (chunk index + df stats + corpus
     * params, one per sf dir). q35 pays the full build per query — that
     * number is the INDEXING cost; q54 queries this prebuilt fixture, so
@@ -74,67 +66,6 @@ object SparkEntry {
   private val PrebuiltVersion = "v1"
   def prebuiltPath(sfDir: String): String =
     "/tmp/graft_prebuilt/" + new java.io.File(sfDir).getName
-
-  /** The q344/q358 streaming-curation fixture: plant the varied corpus
-    * (%17≡3 reversed → lang fail; %13≡1 exact copies at +10000; %11≡2
-    * near-dup copies at +20000), train the frozen q213-style profile,
-    * write three ascending-id micro-batch files onto a strictly
-    * increasing mtime ladder (FileStreamSource orders by modification
-    * time with nondeterministic tie-break, and the online first-wins
-    * rule is order-dependent across batches — a collision could let a
-    * +10000 copy precede its original), and drain the stream. Returns
-    * the tmp base: snapshot under `<tmp>/out`, dedup state under
-    * `<tmp>/state`. */
-  private def curationStreamFixture(s: SparkSession, dir: String): String = {
-    import graft.streaming.CurationStream
-    val base = t(s, dir, "documents")
-    val varied = base.select(col("doc_id"),
-      when(col("doc_id") % 17 === 3, reverse(col("text")))
-        .otherwise(col("text")).as("text"))
-    val planted = varied
-      .unionByName(varied.filter(col("doc_id") % 13 === 1)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .unionByName(varied.filter(col("doc_id") % 11 === 2)
-        .select((col("doc_id") + 20000).as("doc_id"),
-          concat(col("text"), lit(" zzappendix")).as("text")))
-    val langLabel = when(col("doc_id") % 3 === 0, "en")
-      .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-    val langVariant = when(col("doc_id") % 3 === 0, col("text"))
-      .when(col("doc_id") % 3 === 1,
-        translate(col("text"), "aeiou", "zzzzz"))
-      .otherwise(reverse(col("text")))
-    val profile = TextAnalysis.langIdTrain(
-      base.filter(col("doc_id") < 200)
-        .select(langLabel.as("lang"), langVariant.as("text")),
-      buckets = 1024)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_q344").toString
-    val srcDir = s"$tmp/src"
-    val stamped = scala.collection.mutable.Set[String]()
-    val mtime0 = (System.currentTimeMillis() / 1000L) * 1000L
-    def writeBatch(batchNo: Int, df: DataFrame): Unit = {
-      df.coalesce(1).write.mode("append").parquet(srcDir)
-      new java.io.File(srcDir).listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          !stamped.contains(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(mtime0 + batchNo * 60000L),
-            s"curation fixture: could not stamp mtime on ${f.getName}")
-          stamped += f.getName
-        }
-    }
-    writeBatch(1, planted.filter(col("doc_id") < 250))
-    writeBatch(2,
-      planted.filter(col("doc_id") >= 250 && col("doc_id") < 10000))
-    writeBatch(3, planted.filter(col("doc_id") >= 10000))
-    val schema = s.read.parquet(srcDir).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = CurationStream.run(s, src, profile,
-      s"$tmp/out", s"$tmp/state", s"$tmp/cp")
-    q.processAllAvailable(); q.stop()
-    tmp
-  }
 
   def ensureHybridIndex(s: SparkSession, dir: String): String = {
     val base = prebuiltPath(dir)
@@ -175,15260 +106,18 @@ object SparkEntry {
       .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
   }
 
-  /** q357/q366's shared planted corpus (the secret + boilerplate
-    * appendices) — one definition so the two queries can never drift. */
-  private def saPlantedDocs(s: SparkSession, dir: String): DataFrame = {
-    val secret = " benchmark answer span leaks verbatim into web" +
-      " crawl training corpora every day"
-    val boiler = " shared internal navigation chrome repeats across" +
-      " many training documents without leaking ever"
-    t(s, dir, "documents").select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 50 === 0 || col("doc_id") % 7 === 3,
-          lit(secret)).otherwise(lit("")),
-        when(col("doc_id") % 13 === 5 && col("doc_id") % 50 =!= 0,
-          lit(boiler)).otherwise(lit(""))).as("text"))
-      .localCheckpoint()
-  }
-
-  /** q362/q377's shared planted corpus. */
-  private def saStatsPlantedDocs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 7 === 0,
-          lit(" exact substr pass finds arbitrary length repeats" +
-            " beyond any fixed k grid")).otherwise(lit("")),
-        when(col("doc_id") % 9 === 5 && col("doc_id") >= 250,
-          lit(" batch local repeated filler sentence appears many" +
-            " times within this batch only")).otherwise(lit("")))
-        .as("text"))
-      .localCheckpoint()
-
-  /** The HNSW hybrid queries' build (q215/q342): corpus size, mean
-    * length and the serving graph, forced here rather than by the
-    * first walk hop so the `build` mark covers it. */
-  private def hnswBuild(index: DataFrame)
-      : (Long, Double, HybridSearch.HnswServing) = Phase("build") {
-    val n = index.count()
-    val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-    val hs = HybridSearch.buildHnswServing(index)
-    hs.hnsw.graph
-    (n, avgLen, hs)
-  }
-
-  /** The graph queries' 40-node ring: node n links to n + 1 and n + 7,
-    * and the first 20 nodes also to n + 13 (all mod 40). */
-  private def ringGraph(s: SparkSession, dir: String): DataFrame = {
-    val n = t(s, dir, "documents")
-      .select((col("doc_id") % 40).as("n")).distinct()
-    n.selectExpr("n AS src", "(n + 1) % 40 AS dst")
-      .unionByName(n.selectExpr("n AS src", "(n + 7) % 40 AS dst"))
-      .unionByName(n.filter(col("n") < 20)
-        .selectExpr("n AS src", "(n + 13) % 40 AS dst"))
-  }
-
-  /** The ANN queries' query vector: the embedding of `vec_id` 0. */
-  private def queryVector(e: DataFrame): Array[Float] =
-    e.filter(col("vec_id") === 0).select("embedding")
-      .first().getSeq[Float](0).toArray
-
-  /** A fresh hybrid index over the documents (cached) and its document
-    * frequencies, with graft's functions registered. */
-  private def chunkIndex(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    GraftFunctions.register(s)
-    val index = ChunkPipeline.chunkPoints(s, t(s, dir, "documents")).cache()
-    (index, graft.index.IndexWriter.docFrequencies(index))
-  }
-
-  /** The prebuilt index's chunks with planted probe tokens: each
-    * `(condition, tokens)` plant appends its tokens to the chunks its
-    * condition selects, and the first matching plant wins. */
-  private def plantedTokenIndex(s: SparkSession, dir: String,
-      plants: (Column, Seq[String])*): DataFrame = {
-    val base = ensureHybridIndex(s, dir)
-    val appended = plants.map { case (cond, toks) =>
-      cond -> concat(col("tokens"), array(toks.map(lit(_)): _*))
-    }
-    val (c0, v0) = appended.head
-    s.read.parquet(s"$base/chunks").withColumn("tokens",
-      appended.tail.foldLeft(when(c0, v0)) { case (w, (c, v)) => w.when(c, v) }
-        .otherwise(col("tokens")))
-  }
-
-  /** The view-maintenance queries' lineitem rows (flag, status, ship
-    * month, price in cents), split at 1998-01-01 into the rows the
-    * views start from and the delta that follows. */
-  private def lineitemSplit(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val l = t(s, dir, "lineitem").select(
-      col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-      month(col("l_shipdate")).as("mth"),
-      expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"),
-      col("l_shipdate").as("sd"))
-    (l.filter(col("sd") < "1998-01-01").drop("sd"),
-      l.filter(col("sd") >= "1998-01-01").drop("sd"))
-  }
-
-  /** q177/q185's quantile-gate check: each `(q_mille, cut)` row's exact
-    * rank `n_le` over the values `v`, the target rank, and whether the
-    * rank lies within the sketch bound of ±⌈6n/k⌉ ranks. */
-  private def quantileGateCheck(v: DataFrame, cutsDf: DataFrame, k: Int)
-      : DataFrame =
-    v.crossJoin(broadcast(cutsDf))
-      .groupBy("q_mille", "cut")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("v") <= col("cut"), 1L).otherwise(0L)).as("n_le"))
-      .withColumn("target_r", expr("(q_mille * n + 999) div 1000"))
-      .withColumn("slack", expr(s"(6 * n + ${k - 1}) div $k"))
-      .select(col("q_mille").cast("long").as("q_mille"), col("cut"),
-        col("n"), col("n_le"), col("target_r"),
-        (col("target_r") - col("slack")).as("lo"),
-        (col("target_r") + col("slack")).as("hi"),
-        when(col("n_le") >= col("target_r") - col("slack") &&
-          col("n_le") <= col("target_r") + col("slack"), 1L)
-          .otherwise(0L).as("in_bound"))
-      .orderBy("q_mille")
-
-  /** The retrieval-metric queries' run: each query's top 10 documents by
-    * dense score (itself excluded) and its relevant set, the documents
-    * that share its label. */
-  private def labelRetrieval(q: DataFrame, c: DataFrame)
-      : (DataFrame, DataFrame) = {
-    // batched dense branch (round-6 re-point): bounded per-query heaps
-    // via denseTopKAll replace the crossJoin + full window sort; the
-    // window now numbers <= 10 pre-pruned rows per query
-    val wr = Window.partitionBy("query_id")
-      .orderBy(col("dense_score").desc, col("doc_id"))
-    val ranked = graft.search.HybridSearch.denseTopKAll(
-        c, q, n = 10, idCol = "doc_id", vecCol = "cv",
-        pairFilter = col("doc_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(wr))
-      .select("query_id", "doc_id", "rank")
-    val relevant = q.select("query_id", "qlabel")
-      .join(c.select(col("doc_id"), col("clabel")),
-        col("qlabel") === col("clabel"))
-      .filter(col("doc_id") =!= col("query_id"))
-      .select("query_id", "doc_id")
-    (ranked, relevant)
-  }
+  private def families: Seq[QueryFamily] = Seq(RelationalQueries,
+    EventQueries, TextQueries, DedupQueries, SearchQueries, VectorQueries,
+    GraphQueries, StatsQueries, CurationQueries)
 
   // ---------------------------------------------------------------------
   // Operator queries (name -> (spark, sfDir) => DataFrame)
   // ---------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A4/A1 — grouped aggregation with map-side partials (TPC-H Q1 shape).
-    "q01_pricing_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity")).cast("long").as("sum_qty"),
-          sum(cents(col("l_extendedprice"))).as("sum_price_cents"),
-          sum(cents(col("l_discount"))).as("sum_disc_cents"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // P1/P4/F14 — filter + projection, pushed to the parquet scan.
-    "q02_filter_project" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .filter(col("n_chars") >= 100 && col("lang") =!= "en")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          upper(col("source")).as("source_uc"))
-    }),
-
-    // J2/P2 — left anti join (the reference's existing-docket dedup).
-    "q03_anti_join" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    }),
-
-    // left semi join (EXISTS).
-    "q04_semi_join" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_nationkey")
-    }),
-
-    // J1 — star join with a broadcast dimension; revenue per nation.
-    "q05_star_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-          sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_cents"),
-          count(lit(1)).as("n_items"))
-    }),
-
-    // W1/W3 — ranking window: top-3 customers per nation by balance.
-    "q06_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy("c_nationkey")
-        .orderBy(desc("c_acctbal"), col("c_custkey"))
-      t(s, dir, "customer")
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("c_nationkey"), col("rnk"), col("c_custkey"),
-          cents(col("c_acctbal")).as("acctbal_cents"))
-    }),
-
-    // T4/T6-ish — global top-k with deterministic tie-break
-    // (TakeOrderedAndProject: no global sort at scale).
-    "q07_topk_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-        .limit(10)
-        .select(col("o_orderkey"), cents(col("o_totalprice")).as("totalprice_cents"))
-    }),
-
-    // A1 — distinct + count-distinct aggregates.
-    "q08_distinct_agg" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(countDistinct(col("o_custkey")).as("n_customers"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    // A2 — argmax-by-timestamp (deterministic window formulation).
-    "q09_latest_event" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))
-      events(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"))
-    }),
-
-    // json scalar fn — extract + aggregate over a JSON payload column.
-    "q10_json_extract" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy((col("k") % 10).as("k_mod"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
-    }),
-
-    // ST/event-time — tumbling-window aggregation (batch form of the
-    // streaming groupBy(window(...)) plan).
-    "q11_tumbling_window" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
-    }),
-
-    // sessionization — gap-based sessions per user (lag + running sum).
-    "q12_sessionize" -> ((s, dir) => {
-      EventsPipeline.sessionize(events(s, dir), gapMin = 30)
-        .groupBy("user_id")
-        .agg(max(col("session_seq")).as("n_sessions"), count(lit(1)).as("n_events"))
-    }),
-
-    // rollup — hierarchical aggregates with sentinel-filled nulls.
-    "q13_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("sum_qty"), col("n"))
-    }),
-
-    // set ops — (signup ∩ error) EXCEPT purchase at (user, day) grain:
-    // user-days that saw both a signup and an error but no purchase.
-    // (User grain is degenerate on this corpus: every user has every
-    // event type, so both branches must discriminate at day grain.)
-    "q14_set_ops" -> ((s, dir) => {
-      val ev = events(s, dir)
-      def userDays(t: String) = ev.filter(col("event_type") === t)
-        .select(col("user_id"),
-          date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-        .distinct()
-      userDays("signup").intersect(userDays("error")).except(userDays("purchase"))
-        .withColumn("cohort", lit("signup_error_no_purchase"))
-    }),
-
-    // P3 — text-field coalesce with source_field tracking.
-    "q15_coalesce_source" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val (value, source) = GraftFunctions.coalesceTextFields(Seq(
-        ("lang_zh", when(col("lang") === "zh", col("lang")).otherwise(lit(""))),
-        ("source", col("source")),
-        ("fallback", lit("unknown"))))
-      d.select(col("doc_id"), value.as("resolved"), source.as("source_field"))
-    }),
-
-    // T6 — substring truncation with conditional ellipsis.
-    "q16_truncate" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          when(length(col("text")) > 100, concat(substring(col("text"), 1, 100), lit("...")))
-            .otherwise(col("text")).as("preview"))
-    }),
-
-    // F11-ish — date bucketing + formatting.
-    "q17_orders_by_quarter" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).as("yr"), quarter(col("o_orderdate")).as("qtr"))
-        .agg(sum(cents(col("o_totalprice"))).as("revenue_cents"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    // F8 / token counting — char length, whitespace words, BPE-ish tokens.
-    "q18_text_stats" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("len_chars"),
-        TextAnalysis.tokenCountWhitespace(col("text")).as("n_words"),
-        TextAnalysis.tokenCountBpe(col("text")).as("n_bpe_tokens"))
-    }),
-
-    // T3/V3/A7 — BM25 top-k over the documents corpus (two-pass: corpus
-    // doc-frequency aggregate, then broadcast-joined scoring).
-    "q19_bm25_topk" -> ((s, dir) => {
-      // tokenize ONCE (localCheckpoint pins the split) — the corpus
-      // params, the stats build, and the scoring pass each consumed
-      // their own re-split of the text before (r14: 3 tokenize passes
-      // → 1, the q19 clean-window adjudication's fix)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("tokens"))
-        .localCheckpoint()
-      val n = docs.count()
-      val avgLen = docs.select(avg(size(col("tokens")))).first().getDouble(0)
-      val terms = Seq("table", "scan", "merge", "join", "vector")
-      // df rows for the query's terms only — value-identical to the
-      // full-vocabulary build for every term the scorer consults, and
-      // the grouping-key predicate pushes below the aggregate, so the
-      // vocabulary-wide shuffle disappears
-      val stats = graft.index.IndexWriter.docFrequencies(docs)
-        .filter(col("term").isin(terms: _*))
-      HybridSearch.bm25TopK(docs, stats, n, avgLen, terms, 10)
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    // MinHash signatures (md5-keyed variant whose hash is reproducible in
-    // the oracle; the library's hot path uses xxhash64 — Dedup.minHashSignature).
-    "q20_minhash_sig" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("sig", Dedup.md5MinHashSignatureUdf(6)(col("sh")))
-      d.select(col("doc_id") +: (0 until 6).map(i =>
-        element_at(col("sig"), i + 1).as(s"h$i")): _*)
-    }),
-
-    // exact dedup — group by content digest (shuffles 16-byte keys only).
-    "q21_exact_dedup" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(md5(col("text")).as("text_hash"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keep_id"))
-    }),
-
-    // quality scoring — stopword-hit rate (en) per document.
-    "q22_quality" -> ((s, dir) => {
-      val words = TextAnalysis.tokenCountWhitespace(col("text"))
-      val hits = TextAnalysis.stopwordHits(col("text"), "en")
-      t(s, dir, "documents").select(
-        col("doc_id"), words.as("n_words"), hits.cast("long").as("stop_hits"),
-        round(hits.cast("double") / words, 6).as("stop_ratio"))
-    }),
-
-    // W2 — posexplode (Generator) with positional index.
-    "q23_token_explode" -> ((s, dir) => {
-      t(s, dir, "documents").filter(col("doc_id") < 5)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("idx", "tok")))
-        .withColumn("idx", col("idx").cast("long"))
-    }),
-
-    // n-gram Jaccard near-dup — blocked self-join (lang, length bucket)
-    // so the pair count is bounded; top-20 most similar pairs.
-    "q24_jaccard_topk" -> ((s, dir) => {
-      // repartition on the block key: materializes the shingle arrays in
-      // one reused exchange and spreads the pair-verification work, which
-      // a single-split parquet source would otherwise serialize.
-      val base = t(s, dir, "documents").select(
-        col("doc_id"), col("lang"), expr("n_chars div 50").as("bucket"),
-        Dedup.shingles(col("text"), 3).as("sh"))
-        .repartition(s.sparkContext.defaultParallelism, col("lang"), col("bucket"))
-      val a = base.select(col("lang"), col("bucket"), col("doc_id").as("id1"), col("sh").as("sh1"))
-      val b = base.select(col("lang"), col("bucket"), col("doc_id").as("id2"), col("sh").as("sh2"))
-      a.join(b, Seq("lang", "bucket")).filter(col("id1") < col("id2"))
-        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-        .withColumn("jacc", round(col("inter").cast("double") /
-          (size(col("sh1")) + size(col("sh2")) - col("inter")), 6))
-        .orderBy(desc("jacc"), col("id1"), col("id2"))
-        .limit(20)
-        .select("id1", "id2", "jacc")
-    }),
-
-    // embedding-cosine near-dup — label-blocked pairs ≥ 0.3.
-    "q25_embed_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDups(t(s, dir, "embeddings"), threshold = 0.3)),
-
-    // T2/V4 — exact cosine top-k (TakeOrderedAndProject; the ANN baseline).
-    "q26_cosine_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = queryVector(e)
-      Similarity.bruteForceTopK(e, q, 20).select("vec_id", "cos")
-    }),
-
-    // KNN join — per-query top-3 neighbors (broadcast query side).
-    "q27_knn_join" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.knnJoin(e, e.filter(col("vec_id") < 5), 3)
-        .withColumn("rn", col("rn").cast("long"))
-    }),
-
-    // SimHash (16-bit, md5-nibble variant reproducible in the oracle;
-    // library hot path: Dedup.simHash on xxhash64). Compiled UDF — the
-    // transform/filter HOF form never entered codegen (19 s at sf0.1).
-    "q28_simhash" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        Dedup.md5SimHash16Udf(col("text")).as("simhash16"))),
-
-    // language-ID heuristic — stopword-hit argmax with deterministic ties.
-    "q29_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_guess"))),
-
-    // multimodal plumbing — binary column + per-partition stub decoder.
-    "q30_multimodal_meta" -> ((s, dir) => {
-      val bin = t(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("content"))
-      graft.ops.Multimodal.withMediaMeta(bin)
-        .select(col("doc_id"), col("media.byteLen").as("byte_len"),
-          col("media.format").as("format"), col("media.ok").as("ok"))
-    }),
-
-    // J4/A5/T1 — RRF fusion of two relational rankings (balance vs order
-    // count), full-outer joined.
-    "q31_rrf_fusion" -> ((s, dir) => {
-      // top-20 via orderBy().limit() → TakeOrderedAndProject (per-partition
-      // top-k + driver merge); the global row_number window — which would
-      // funnel an unbounded input through ONE task — ranks only the 20
-      // surviving rows. Same result, scale-safe plan.
-      val wBal = Window.orderBy(desc("c_acctbal"), col("c_custkey"))
-      val byBal = t(s, dir, "customer")
-        .orderBy(desc("c_acctbal"), col("c_custkey")).limit(20)
-        .withColumn("rank_bal", row_number().over(wBal))
-        .select(col("c_custkey"), col("rank_bal").cast("long").as("rank_bal"))
-      val wOrd = Window.orderBy(desc("n_orders"), col("o_custkey"))
-      val byOrd = t(s, dir, "orders")
-        .groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
-        .orderBy(desc("n_orders"), col("o_custkey")).limit(20)
-        .withColumn("rank_ord", row_number().over(wOrd))
-        .select(col("o_custkey").as("c_custkey"), col("rank_ord").cast("long").as("rank_ord"))
-      byBal.join(byOrd, Seq("c_custkey"), "full_outer")
-        .withColumn("rrf_score",
-          coalesce(lit(1.0) / (lit(60) + col("rank_bal")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rank_ord")), lit(0.0)))
-    }),
-
-    // C1-C6 + P4/P5 — chunk pipeline geometry (oracle-expressible on this
-    // corpus: punctuation-free texts < chunk_size yield exactly one chunk
-    // iff ≥ min_chunk_size; uuid5 ids are covered by unit tests).
-    "q32_chunk_pipeline" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      ChunkPipeline.chunkPoints(s, t(s, dir, "documents"))
-        .select(col("doc_id"), col("chunk_index").cast("long").as("chunk_index"),
-          length(col("chunk_text")).cast("long").as("chunk_len"))
-    }),
-
-    // MinHash-LSH near-dup, end-to-end with planted duplicates (every doc
-    // unioned with an exact copy at id+10000). The md5-keyed hash variant
-    // makes the *entire* LSH construction — signatures, banding, candidate
-    // pairs, jaccard verification — reproducible in the DuckDB oracle,
-    // including probabilistic recall on the corpus's organic near-dups.
-    // The library's hot path uses xxhash64 (same structure, faster hash).
-    "q33_minhash_lsh_planted" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
-      Dedup.minHashNearDups(planted, numHashes = 16, bands = 4, jaccardThreshold = 0.8,
-        signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-        bandHash = c => md5(concat_ws("|", c)),
-        persistShingles = true)
-    }),
-
-    // ST1 — true Structured Streaming run of the tumbling-window agg
-    // (memory sink, AvailableNow trigger, complete mode), then read back.
-    "q34_stream_window" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamWindowedCountsComplete(s, dir, "q34_sink")
-      }
-      s.table("q34_sink")
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
-          col("event_type"), col("n"))
-    }),
-
-    // hybrid search end-to-end (dense+BM25+RRF over a freshly built chunk
-    // index). The embedding model isn't SQL-expressible, so the dense
-    // branch scores + the index (id, chunk_id, tokens) are materialized as
-    // aux tables and the oracle re-derives the ENTIRE query side — BM25
-    // branch, both ranks, RRF fusion, threshold, final top-k — in DuckDB.
-    "q35_hybrid_search" -> ((s, dir) => {
-      val (index, stats) = chunkIndex(s, dir)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-      val cfg = HybridSearch.Config(k = 5)
-      writeAux(index.select("id", "chunk_id", "tokens"), dir, "q35_index")
-      val qVec = graft.embed.HashingEmbedder.default.embedQuery("spark join merge table scan")
-      writeAux(HybridSearch.denseTopK(index, qVec, cfg.k * cfg.prefetchMultiplier),
-        dir, "q35_dense")
-      HybridSearch.search(index, stats, n, avgLen,
-          "spark join merge table scan", cfg)
-        .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
-    }),
-
-    // Spark-native session_window aggregation (batch form of the
-    // streaming sessionization) — oracle is the µs-exact lag-based
-    // formulation, proving the two sessionization paths agree.
-    "q37_session_window" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_sessions"), sum("n").as("n_events"))
-    }),
-
-    // salted two-phase aggregation (skew mitigation) — must equal the
-    // naive GROUP BY, which is exactly what the oracle asserts.
-    "q38_salted_agg" -> ((s, dir) =>
-      graft.ops.Skew.saltedSum(t(s, dir, "lineitem"), "l_returnflag", "l_quantity")
-        .select(col("l_returnflag"),
-          col("sum_l_quantity").cast("long").as("sum_qty"), col("n_rows"))),
-
-    // ANN via random-hyperplane LSH with Hamming-1 multiprobe (bucket-
-    // pruned scan). The hyperplanes are JVM-seeded, so the bucket
-    // assignment + probed-bucket set are materialized as aux tables and
-    // the oracle re-derives the pruned scan, cosine math, and top-k in
-    // DuckDB (full 8-bucket multiprobe).
-    "q36_lsh_ann" -> ((s, dir) => {
-      import s.implicits._
-      val e = t(s, dir, "embeddings")
-      val q = queryVector(e)
-      val idx = new Similarity.RandomHyperplaneIndex(e, nBits = 8, dim = 64)
-      writeAux(idx.bucketed.select("vec_id", "bucket"), dir, "q36_buckets")
-      writeAux(idx.probeBuckets(q, probes = 8).toDF("bucket"), dir, "q36_probes")
-      idx.query(q, k = 10, probes = 8)
-        .select("vec_id", "bucket", "cos")
-    }),
-
-    // A2 — native max_by argmax (the deterministic window variant is
-    // q09; timestamps are tie-free in this corpus so max_by is exact).
-    "q40_argmax_native" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy("user_id")
-        .agg(max_by(col("event_type"), col("ts")).as("last_event_type"),
-          date_format(max(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("last_ts"))
-    }),
-
-    // exact interpolated percentiles per group (sort-based aggregate).
-    "q41_percentiles" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          round(expr("percentile(l_quantity, 0.25)"), 6).as("p25"),
-          round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
-          round(expr("percentile(l_quantity, 0.75)"), 6).as("p75"),
-          count(lit(1)).as("n"))
-    }),
-
-    // as-of join (operator Spark lacks; union+LOCF formulation, one
-    // shuffle) — each purchase gets the latest click at-or-before it per
-    // user. Oracle: DuckDB's native ASOF LEFT JOIN.
-    "q42_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy("user_id", "ts").agg(count(lit(1)).as("n_clicks_at"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id")
-      graft.ops.Joins.asofJoin(purchases, clicks, "user_id", "ts",
-          Seq(("ts", "click_ts"), ("n_clicks_at", "n_clicks_at")))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
-          date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("click_ts_str"),
-          col("n_clicks_at"))
-    }),
-
-    // range (interval containment) join via bin blocking — revenue per
-    // static price band; the equi-join on bins bounds the pair count
-    // (LSH-banding-shaped, no theta cross-product).
-    "q43_range_join" -> ((s, dir) => {
-      val bands = s.range(12).select(col("id").as("band_id"),
-        (col("id") * 50000.0).as("lo"), ((col("id") + 1) * 50000.0).as("hi"))
-      graft.ops.Joins.rangeJoin(
-          t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
-          bands, "o_totalprice", "lo", "hi", binSize = 10000.0)
-        .groupBy("band_id")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(cents(col("o_totalprice"))).as("revenue_cents"))
-    }),
-
-    // cube — all grouping-set combinations with sentinel-filled nulls.
-    "q44_cube" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("sum_qty"), col("n"))
-    }),
-
-    // pivot — order counts per priority × status (missing combos → 0 so
-    // the shape matches conditional aggregation exactly).
-    "q45_pivot" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .select(col("o_orderpriority"),
-          coalesce(col("F"), lit(0L)).as("n_f"),
-          coalesce(col("O"), lit(0L)).as("n_o"),
-          coalesce(col("P"), lit(0L)).as("n_p"))
-    }),
-
-    // ST — custom-state streaming (flatMapGroupsWithState): per-user
-    // running counts through the state store; the final state must equal
-    // the batch aggregate, which is exactly what the oracle asserts.
-    // (Counts are monotone, so max over emitted updates = final state.)
-    "q46_stream_stateful" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamStatefulUserCounts(s, dir, "q46_sink")
-      }
-      s.table("q46_sink")
-        .groupBy("user_id")
-        .agg(max(col("n_events")).as("n_events"),
-          max(col("n_purchases")).as("n_purchases"))
-    }),
-
-    // ANALYZE-style column profiling — one aggregation pass for every
-    // column's (count, distinct, nulls, min, max), unpivoted via stack.
-    "q47_column_stats" -> ((s, dir) =>
-      graft.ops.Profile.columnStats(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_discount", "l_extendedprice"))),
-
-    // ST — stream-static enrichment join (events stream ⋈ customer dim)
-    // aggregated per nation; must equal the batch join+aggregate.
-    "q48_stream_static_join" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamEnrichedCounts(s, dir, "q48_sink")
-      }
-      s.table("q48_sink")
-    }),
-
-    // GROUPING SETS with grouping() indicators — arbitrary grouping-set
-    // combinations beyond rollup/cube's fixed hierarchies.
-    "q49_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-          |  COALESCE(o_orderstatus, 'ALL') AS st,
-          |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_pri,
-          |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_st,
-          |  COUNT(*) AS n
-          |FROM orders_v
-          |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())""".stripMargin)
-    }),
-
-    // running total — frame-bounded window aggregate (cumulative revenue
-    // per customer in order-date order, unique tie-break).
-    "q50_running_total" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-        sum(cents(col("o_totalprice"))).over(w).as("running_cents"))
-    }),
-
-    // deterministic array aggregation — collect_list is unordered by
-    // contract, so sort_array pins the order; the result is emitted as a
-    // comma-joined string (the oracle harness can't sort/hash list cells).
-    "q51_array_agg" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .filter(col("o_orderkey") % 97 === 0)
-        .groupBy("o_orderpriority")
-        .agg(array_join(sort_array(collect_list(col("o_orderkey")))
-            .cast("array<string>"), ",").as("keys_sorted"),
-          count(lit(1)).as("n"))),
-
-    // null-safe equality join (<=>): NULL keys match each other, unlike
-    // plain equality — the dedup-on-nullable-key primitive.
-    "q52_nullsafe_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      def keys(t: String) = ev.filter(col("event_type") === t)
-        .select(when(col("user_id") % 10 === 0, lit(null))
-          .otherwise(col("user_id") % 10).as("k")).distinct()
-      val a = keys("signup").as("a")
-      val b = keys("error").as("b")
-      a.join(b, col("a.k") <=> col("b.k"))
-        .select(col("a.k").as("k"))
-        .withColumn("matched", lit(true))
-    }),
-
-    // ST — stream-stream inner join with event-time range condition:
-    // click→purchase attribution pairs; complete once drained, so the
-    // oracle is the equivalent batch self-join.
-    "q53_stream_stream_join" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamStreamJoin(s, dir, "q53_sink")
-      }
-      s.table("q53_sink")
-    }),
-
-    // T1 over a PREBUILT index — the per-request latency shape (q35 is
-    // the same operator paying full index build per query). Fixture
-    // built once per sf by ensureHybridIndex (Bench prebuilds untimed);
-    // same aux-table oracle scheme as q35.
-    "q54_hybrid_prebuilt" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-      val stats = s.read.parquet(s"$base/stats")
-      val p = s.read.parquet(s"$base/params").first()
-      val (n, avgLen) = (p.getLong(0), p.getDouble(1))
-      val cfg = HybridSearch.Config(k = 5)
-      val queryText = "filter predicate pushdown scan"
-      writeAux(index.select("id", "chunk_id", "tokens"), dir, "q54_index")
-      val qVec = graft.embed.HashingEmbedder.default.embedQuery(queryText)
-      writeAux(HybridSearch.denseTopK(index, qVec, cfg.k * cfg.prefetchMultiplier),
-        dir, "q54_dense")
-      HybridSearch.search(index, stats, n, avgLen, queryText, cfg)
-        .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
-    }),
-
-    // Deterministic stratified sampling (training-data curation): per-
-    // language keep-rates decided by an md5-of-id threshold — content-
-    // derived (retry-safe, SPARK-23207-proof) and reproducible in any
-    // engine with md5, which is exactly what the oracle does.
-    "q55_stratified_sample" -> ((s, dir) =>
-      graft.ops.Sampling.stratifiedHashSample(
-        t(s, dir, "documents").select("doc_id", "lang", "source"),
-        strataCol = "lang", idCol = "doc_id",
-        rates = Map("en" -> 0.1, "de" -> 0.5), defaultRate = 0.9)),
-
-    // Near-dup pairs → dedup GROUPS: connected components by min-label
-    // propagation over a planted chain graph (3 copies of every doc;
-    // edges link rank-adjacent copies per digest, so labels must travel
-    // 2 hops). Oracle: DuckDB recursive-CTE reachability closure.
-    "q56_dedup_components" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d
-        .unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
-        .unionByName(d.withColumn("doc_id", col("doc_id") + 20000))
-      val ranked = planted
-        .withColumn("dg", md5(col("text").cast("binary")))
-        .withColumn("rn",
-          row_number().over(Window.partitionBy("dg").orderBy("doc_id")))
-        .select("doc_id", "dg", "rn")
-      val e = ranked.as("a").join(ranked.as("b"),
-          col("a.dg") === col("b.dg") && col("b.rn") === col("a.rn") + 1)
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      Dedup.connectedComponents(e)
-        .select(col("id").as("doc_id"), col("comp"))
-        .withColumn("comp_size",
-          count(lit(1)).over(Window.partitionBy("comp")))
-    }),
-
-    // ANN via IVF (k-means coarse quantizer, nProbe cell pruning + exact
-    // rerank). The k-means assignment + probed-cell set are materialized
-    // as aux tables and the oracle re-derives the pruned scan, cosine
-    // math, and top-k in DuckDB.
-    "q39_ivf_ann" -> ((s, dir) => {
-      import s.implicits._
-      val e = t(s, dir, "embeddings")
-      val q = queryVector(e)
-      val idx = new Similarity.IvfIndex(e, nCentroids = 16)
-      writeAux(idx.assigned.select("vec_id", "centroid"), dir, "q39_assigned")
-      writeAux(idx.probeCells(q, nProbe = 4).toDF("centroid"), dir, "q39_probes")
-      idx.query(q, k = 10, nProbe = 4)
-        .select("vec_id", "centroid", "cos")
-    }),
-
-    // Per-domain cap: no source contributes more than 50 docs; biggest
-    // docs win, id tie-break. The CommonCrawl-style anti-spam cap.
-    "q57_domain_cap" -> ((s, dir) =>
-      graft.ops.Curation.domainCap(
-        t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        sourceCol = "source", idCol = "doc_id", sizeCol = "n_chars", cap = 50)),
-
-    // PII redaction over text with deterministic planted PII (the corpus
-    // itself is synthetic and PII-free, so both engines append the same
-    // email/phone/SSN suffix and must then find and redact it).
-    "q58_pii_redact" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit(" Contact user"), col("doc_id"), lit("@example.com or 415-555-"),
-          lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
-          lit(" ssn 123-45-6789.")).as("text"))
-      graft.ops.Curation.piiRedact(planted, "text")
-        .select("doc_id", "emails_found", "ssns_found", "phones_found", "redacted")
-    }),
-
-    // Gopher-style repetition/quality stats: one narrow projection/row.
-    "q59_rep_quality" -> ((s, dir) =>
-      graft.ops.Curation.repetitionQuality(
-        t(s, dir, "documents"), "text")),
-
-    // Eval-set decontamination: 5-gram overlap of every train doc
-    // against the eval split (doc_id % 50 == 0); eval grams broadcast.
-    "q60_contamination" -> ((s, dir) =>
-      graft.ops.Curation.contamination(
-        t(s, dir, "documents"), "doc_id", "text",
-        isEval = col("doc_id") % 50 === 0, n = 5)),
-
-    // TF-IDF top-3 keywords per doc (terms ≥ 4 letters).
-    "q61_tfidf_topk" -> ((s, dir) =>
-      graft.ops.Curation.tfidfKeywords(
-        t(s, dir, "documents"), "doc_id", "text", k = 3, minLen = 4)),
-
-    // Bloom-filtered join: lineitem pre-filtered by a Bloom filter over
-    // high-priority urgent orders, exact join discards false positives —
-    // result identical to the plain join (which is the oracle).
-    "q62_bloom_join" -> ((s, dir) => {
-      val ordersSel = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey", "o_custkey")
-      graft.ops.Joins.bloomFilteredJoin(
-          t(s, dir, "lineitem").select("l_orderkey", "l_returnflag", "l_extendedprice"),
-          ordersSel, "l_orderkey", "o_orderkey", expectedKeys = 20000L)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_items"),
-          sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
-    }),
-
-    // Context-window sequence packing: shard-local streaming fill into
-    // 2048-token bins — the training-batch assembly shape.
-    "q63_seq_pack" -> ((s, dir) =>
-      graft.ops.Curation.packSequences(
-        t(s, dir, "documents"), "doc_id", "text", windowTokens = 2048, shards = 8)),
-
-    // Mean-pool embeddings into group ("document") vectors, row form —
-    // (grp, dim) keys shuffle narrow triples, no array compares needed.
-    "q64_embed_pool" -> ((s, dir) =>
-      graft.ops.VectorOps.poolEmbeddings(
-        t(s, dir, "embeddings").withColumn("grp", col("vec_id") % 100), "grp")),
-
-    // Int8 scalar quantization of every embedding (storage form of the
-    // vector index; floor(x+0.5) half-up so every engine rounds alike).
-    "q65_scalar_quant" -> ((s, dir) =>
-      graft.ops.VectorOps.scalarQuantize(t(s, dir, "embeddings"))),
-
-    // Deterministic weighted sampling (A-ES): quality-weighted top-100
-    // by hash-derandomized priority — plans as TakeOrderedAndProject.
-    "q66_weighted_sample" -> ((s, dir) =>
-      graft.ops.Sampling.weightedHashSample(
-        t(s, dir, "documents").select("doc_id", "n_chars"),
-        idCol = "doc_id", weightCol = "n_chars", k = 100)),
-
-    // Equi-width histogram over a fact column — one tiny bounds
-    // aggregate broadcast back over the streaming scan.
-    "q67_histogram" -> ((s, dir) =>
-      graft.ops.Cleaning.equiWidthHistogram(
-        t(s, dir, "lineitem"), "l_extendedprice", bins = 20)),
-
-    // Group-mean imputation over planted nulls (the corpus has none, so
-    // both engines null the same deterministic subset first).
-    "q68_impute" -> ((s, dir) => {
-      val planted = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-        when(col("l_orderkey") % 97 === 0, lit(null).cast("double"))
-          .otherwise(col("l_discount")).as("disc"))
-      graft.ops.Cleaning.groupMeanImpute(planted, "disc", "l_returnflag")
-        .select("l_orderkey", "l_linenumber", "l_returnflag",
-          "imputed", "disc_filled")
-    }),
-
-    // Z-score outliers per group (1.5σ — the synthetic prices are
-    // near-uniform, so 3σ would be empty by construction).
-    "q69_outliers" -> ((s, dir) =>
-      graft.ops.Cleaning.zscoreOutliers(
-        t(s, dir, "lineitem").select("l_orderkey", "l_linenumber",
-          "l_returnflag", "l_extendedprice"),
-        "l_extendedprice", "l_returnflag", threshold = 1.5)
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "z")),
-
-    // SimHash radius join over a planted near-dup corpus (each doc gets
-    // a perturbed twin), at scale-sane parameters: 48-bit signatures,
-    // bands = maxDist + 1 = 5 (~10-bit bands), so recall at the
-    // advertised radius is pigeonhole-COMPLETE and candidate volume per
-    // band bucket is ~n²/1024 — not the quadratic-by-construction shape
-    // a 2×8-bit banding has. The oracle reproduces the banding itself.
-    "q70_simhash_radius" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val corpus = d.unionByName(d.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        concat(col("text"), lit(" near duplicate tail marker")).as("text")))
-      val sigs = corpus.select(col("doc_id"),
-        Dedup.md5SimHash48Udf(col("text")).as("sig"))
-      Dedup.simHashRadiusPairsBanded(sigs, "doc_id", "sig", maxDist = 4,
-        sigBits = 48, bands = 5)
-    }),
-
-    // Same radius join at a wider radius: maxDist = 6 needs bands =
-    // maxDist + 1 = 7 for pigeonhole-complete recall — the round-6
-    // review re-gate replacing the legacy 6×8-bit banding, whose recall
-    // beyond the pigeonhole radius was probabilistic. The signature is
-    // the full 63 usable bits of a long so each of the 7 bands carries
-    // 9 bits (512 values): candidate volume per band bucket is 4× lower
-    // than a 48-bit signature's ~7-bit bands at the same guaranteed
-    // radius. q70 (maxDist 4, 5 bands) and this query honor the same
-    // contract at different radius/selectivity points.
-    "q71_simhash48_radius" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val corpus = d.unionByName(d.select(
-        (col("doc_id") + 10000).as("doc_id"),
-        concat(col("text"), lit(" near duplicate tail marker")).as("text")))
-      val sigs = corpus.select(col("doc_id"),
-        Dedup.md5SimHash63Udf(col("text")).as("sig"))
-      Dedup.simHashRadiusPairsBanded(sigs, "doc_id", "sig", maxDist = 6,
-        sigBits = 63, bands = 7)
-    }),
-
-    // Custom whole-operator tier: per-key top-k via the TopKPerKey
-    // LogicalPlan + SparkStrategy + bounded-heap SparkPlan — same result
-    // as the row_number window (the oracle), no full per-partition sort.
-    "q72_topk_per_key" -> ((s, dir) =>
-      graft.plans.TopK.perKey(
-        t(s, dir, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
-          col("l_linenumber"), cents(col("l_extendedprice")).as("price_cents")),
-        keyCols = Seq("l_returnflag"),
-        orderBy = Seq(("price_cents", false), ("l_orderkey", true),
-          ("l_linenumber", true)),
-        k = 3)),
-
-    // Boilerplate detection: 5-grams repeated across >= 10 distinct docs
-    // (every 7th doc gets the same planted "subscribe" tail — the
-    // cross-crawl chrome the CC-net/C4 pipelines hunt). The original
-    // word-salad corpus contributes no repeated grams, so the output is
-    // exactly the planted boilerplate's grams.
-    "q74_repeated_ngrams" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" Please subscribe to our newsletter for free updates today")))
-          .otherwise(col("text")).as("text"))
-      graft.ops.Curation.repeatedNgrams(planted, "doc_id", "text",
-        n = 5, minDocs = 10)
-    }),
-
-    // C4-style line cleaning over planted multi-line docs: keep lines
-    // ending in terminal punctuation with >= 5 words; drop brace docs
-    // whole. Both engines build the same planted lines.
-    "q75_c4_line_filter" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n",
-          lit("This line has enough words to survive the filter."),
-          lit("Too short."),
-          col("text"),
-          lit("Lines without terminal punctuation get removed entirely"),
-          when(col("doc_id") % 11 === 0, lit("function() { return }"))
-            .otherwise(lit("Another good sentence appears right here."))).as("text"))
-      graft.ops.Curation.c4LineFilter(planted, "doc_id", "text", minWords = 5)
-    }),
-
-    // Same operator forced through its SPILL path: a tiny retained-rows
-    // budget makes every partition write key-sorted runs and merge them
-    // — the oracle (identical to q72's) proves the external path is
-    // value-exact, not just the in-memory heaps.
-    "q73_topk_spilled" -> ((s, dir) => {
-      s.conf.set("graft.topk.maxRetainedRows", "64")
-      try graft.plans.TopK.perKey(
-        t(s, dir, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
-          col("l_linenumber"), cents(col("l_extendedprice")).as("price_cents")),
-        keyCols = Seq("l_returnflag"),
-        orderBy = Seq(("price_cents", false), ("l_orderkey", true),
-          ("l_linenumber", true)),
-        k = 3)
-      finally s.conf.unset("graft.topk.maxRetainedRows")
-    }),
-
-    // End-to-end near-dup REMOVAL over q33's planted corpus: MinHash-LSH
-    // pairs → connected components → keep min-id per cluster. The output
-    // is the deduped corpus (the thing a curation run actually ships),
-    // so the oracle must re-derive banding, Jaccard verification, the
-    // reachability closure, AND the anti-join — every stage of the
-    // pipeline in one gate.
-    "q76_dedup_keep_canonical" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
-      val pairs = Dedup.minHashNearDups(planted, numHashes = 16, bands = 4,
-        jaccardThreshold = 0.8,
-        signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-        bandHash = c => md5(concat_ws("|", c)),
-        persistShingles = true)
-      Dedup.keepCanonical(planted, "doc_id", pairs).select("doc_id")
-    }),
-
-    // Streaming dedup under planted at-least-once delivery: two source
-    // legs over the same file unioned (every event arrives twice), state-
-    // store dedup on event_id, counts per type. Without the dedup every
-    // count doubles, so the batch oracle discriminates.
-    "q77_stream_dedup" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamDedupPlantedCounts(s, dir, "q77_sink")
-      }
-      s.table("q77_sink").select(col("event_type"), col("n"))
-    }),
-
-    // Deterministic train/val/test split: 80/10/10 by md5-of-id interval.
-    // Pure function of the id — re-runs, appends, and other engines
-    // re-derive identical membership (the oracle recomputes it from
-    // scratch in DuckDB).
-    "q78_hash_split" -> ((s, dir) =>
-      graft.ops.Sampling.hashSplit(
-        t(s, dir, "documents").select("doc_id", "lang"),
-        idCol = "doc_id",
-        splits = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))),
-
-    // Paragraph-level exact dedup over planted multi-line docs: shared
-    // header/footer lines appear in every doc and must survive only at
-    // their single globally-first (doc_id, idx) slot; each doc's own text
-    // line is unique and survives everywhere.
-    "q79_paragraph_dedup" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n",
-          lit("Shared header boilerplate line."),
-          col("text"),
-          lit("Shared footer boilerplate line.")).as("text"))
-      Dedup.paragraphDedup(planted, "doc_id", "text")
-    }),
-
-    // CCNet-style unigram corpus-frequency profile: per-doc token count,
-    // summed corpus counts, and rare-token count — the integer core the
-    // perplexity-proxy quality score derives from (integers so the gate
-    // is exact; the float view is spec-gated).
-    "q80_token_rarity" -> ((s, dir) =>
-      TextAnalysis.tokenRarity(
-        t(s, dir, "documents").select("doc_id", "text"),
-        idCol = "doc_id", textCol = "text", rareMax = 2)),
-
-    // Incremental admission: a "new crawl batch" (all docs) dedups
-    // against the standing corpus's digest set (every third doc) without
-    // re-reading corpus text — the arriving-batch half of exact dedup.
-    "q81_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val known = Dedup.digests(docs.filter(col("doc_id") % 3 === 0))
-      Dedup.exactAgainst(docs, known).select("doc_id")
-    }),
-
-    // Unicode normalization over planted composed/accented text: NFD,
-    // strip combining marks, lowercase, collapse whitespace. Both
-    // engines build the same planted suffix and must agree on the
-    // canonical form.
-    "q82_normalize_text" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit("  Café   déjà vu NAÏVE ÉCOLE ça  ")).as("text"))
-      planted.select(col("doc_id"),
-        TextAnalysis.normalizeText(col("text")).as("norm_text"))
-    }),
-
-    // Dead-letter validation over planted corruption: null text every
-    // 13th doc, negative n_chars every 17th, unknown lang every 19th.
-    // Output = the quarantine side with sorted violation lists.
-    "q83_quarantine" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 13 === 0, lit(null: String))
-          .otherwise(col("text")).as("text"),
-        when(col("doc_id") % 17 === 0, -col("n_chars"))
-          .otherwise(col("n_chars")).as("n_chars"),
-        when(col("doc_id") % 19 === 0, lit("??"))
-          .otherwise(col("lang")).as("lang"))
-      graft.ops.Cleaning.quarantined(planted, Seq(
-        "text_missing" -> (col("text").isNotNull && length(col("text")) > 0),
-        "n_chars_negative" -> (col("n_chars") >= 0),
-        "lang_unknown" -> col("lang").isin("en", "de", "fr", "es", "zh")))
-        // comma-joined: the oracle harness can't sort/hash list cells (q51 rule)
-        .select(col("doc_id"), array_join(col("violations"), ",").as("violations"))
-    }),
-
-    // Global row numbering without the single-partition window funnel:
-    // range-partition + per-partition offsets + within-partition ranks.
-    // Must equal the naive ROW_NUMBER() OVER (ORDER BY doc_id) exactly.
-    "q84_global_rownum" -> ((s, dir) =>
-      graft.ops.Layout.globalRowNumber(
-        t(s, dir, "documents").select("doc_id", "lang"), "doc_id")),
-
-    // Deterministic contrastive negatives: 3 hash-drawn other docs per
-    // row; the oracle re-derives index assignment, the md5 draw, and the
-    // self-collision shift.
-    "q85_negative_sample" -> ((s, dir) =>
-      graft.ops.Sampling.negativeSample(
-        t(s, dir, "documents").select("doc_id"), idCol = "doc_id", k = 3)),
-
-    // Corpus → training-shard encoding: frequency-ranked vocab (top 500,
-    // count desc / token asc), documents tokenized to dense id arrays in
-    // exact position order, OOV = -1. Both vocab construction and the
-    // ordered array are re-derived in DuckDB.
-    "q86_tokenize_ids" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val vocab = TextAnalysis.buildVocab(docs, "text", size = 500)
-      TextAnalysis.tokenizeIds(docs, vocab)
-        // comma-joined: the oracle harness can't sort/hash list cells (q51 rule)
-        .select(col("doc_id"),
-          array_join(col("ids").cast("array<string>"), ",").as("ids"))
-    }),
-
-    // Interval-RANGE trailing window: per-user 1-hour trailing event
-    // value sum at each event (the time-decayed-feature shape). RANGE
-    // frame on exact micros, inclusive both ends in both engines; value
-    // sums in integer cents so accumulation order cannot ulp-drift.
-    "q87_trailing_window" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us"))
-        .rangeBetween(-3600L * 1000000L, 0L)
-      events(s, dir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .withColumn("value_cents", cents(col("value")))
-        .withColumn("trail_cents", sum("value_cents").over(w))
-        .select(col("event_id"), col("user_id"), col("trail_cents"))
-    }),
-
-    // Incremental NEAR-dup admission: a new batch (odd docs + exact
-    // copies of stored evens) checks against the standing corpus's
-    // signature table only — banding for candidates, signature-agreement
-    // (estimated Jaccard) for verification; no corpus text re-read.
-    "q91_incremental_neardup" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      def sigs(df: DataFrame) = df
-        .withColumn("sh", Dedup.shingles(col("text"), 3))
-        .filter(size(col("sh")) > 0)
-        .select(col("doc_id"), Dedup.md5MinHashSignatureUdf(16)(col("sh")).as("sig"))
-      val stored = sigs(d.filter(col("doc_id") % 2 === 0))
-      val fresh = sigs(d.filter(col("doc_id") % 2 === 1)
-        .unionByName(d.filter(col("doc_id") % 2 === 0)
-          .withColumn("doc_id", col("doc_id") + 10000)))
-      Dedup.minHashAgainst(fresh, stored, numHashes = 16)
-    }),
-
-    // Sliding event-time windows (1 h length, 15 min slide): every event
-    // lands in exactly 4 overlapping windows. Spark's window() slides are
-    // epoch-aligned; the oracle rebuilds them from 15-minute buckets.
-    "q89_sliding_window" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n"))),
-
-    // Replica diff (anti-entropy): two index replicas with planted drift
-    // — deletions, content mutation, extra rows — reconciled by a digest
-    // full-outer join; output is the repair worklist.
-    "q90_replica_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val a = docs
-      val b = docs.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 11 === 0, concat(col("text"), lit(" [drifted]")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") < 5)
-          .select((col("doc_id") + 9000).as("doc_id"), col("text")))
-      graft.index.IndexWriter.replicaDiff(a, b, "doc_id", Seq("text"))
-    }),
-
-    // Fixed-point PageRank (crawl-source authority scoring) over a
-    // deterministic synthetic link graph derived from doc ids. Integer
-    // recurrence — both engines compute bit-identical ranks; the oracle
-    // runs the same recursion as a recursive CTE.
-    "q88_pagerank" -> ((s, dir) => {
-      // quadratic + linear residue maps: outdeg ∈ {1,2}, indeg 1..6 —
-      // enough degree variance that ranks genuinely differentiate
-      val base = t(s, dir, "documents").select((col("doc_id") % 50).as("src"))
-      val e = base.select(col("src"), ((col("src") * col("src") + 3) % 50).as("dst"))
-        .unionByName(base.select(col("src"), ((col("src") * 3 + 7) % 50).as("dst")))
-        .filter(col("src") =!= col("dst"))
-      graft.ops.GraphOps.pageRankFixedPoint(e, iters = 5)
-    }),
-
-    // Temperature-flattened mixture resampling (alpha = 0.5): kept counts
-    // per domain follow sqrt(c_d) — the smallest domain is kept whole,
-    // larger ones down-sampled by sqrt(c_min/c_d). The synthetic `source`
-    // column is uniform (rates would all be 1), so the query derives a
-    // skewed domain — 'd' || floor(sqrt(doc_id % 100)) gives counts
-    // 1:3:…:19 per hundred ids — and flattens that. Per-row fate is the
-    // md5-threshold predicate with a per-domain threshold; sqrt is IEEE
-    // correctly-rounded, so both engines compute the identical cutoff.
-    "q92_temperature_sample" -> ((s, dir) =>
-      graft.ops.Sampling.temperatureSample(
-        t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("d"), floor(sqrt((col("doc_id") % 100).cast("double")))
-            .cast("long").cast("string")).as("dom")),
-        domainCol = "dom", idCol = "doc_id", alpha = 0.5)
-        .select("doc_id", "dom")),
-
-    // Linear quality-classifier inference (fastText-filter shape) in
-    // fixed point: integer features × integer weights → integer logit,
-    // thresholded at 0 (sigmoid is monotone, so the probability cut IS
-    // the logit cut). No shuffle, no UDF — four codegen'd extractions.
-    "q95_quality_classifier" -> ((s, dir) =>
-      graft.ops.Curation.linearQualityFilter(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text",
-        graft.ops.Curation.QualityWeights(
-          words = 2, chars = 1, exclaim = -50, digits = -10, bias = -500),
-        threshold = 0)),
-
-    // CDC changelog apply (merge-on-read): fold ordered I/U/D ops onto a
-    // snapshot — superseded versions (seq 1 under seq 2), deletes beating
-    // earlier updates (ids ≡ 0 mod 15 get U@2 then D@3 → gone), and
-    // fresh inserts all exercised. Latest-wins is re-derived in DuckDB
-    // with an independent window formulation.
-    "q96_cdc_apply" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      def ch(f: Column, seq: Long, op: String, text: Column, shift: Long = 0) =
-        d.filter(f).select((col("doc_id") + shift).as("doc_id"),
-          lit(seq).as("seq"), lit(op).as("op"), text.as("text"))
-      val changes = ch(col("doc_id") % 3 === 0, 1, "U", concat(col("text"), lit(" [v1]")))
-        .unionByName(ch(col("doc_id") % 3 === 0, 2, "U", concat(col("text"), lit(" [v2]"))))
-        .unionByName(ch(col("doc_id") % 5 === 0, 3, "D", lit(null).cast("string")))
-        .unionByName(ch(col("doc_id") < 10, 1, "I", col("text"), shift = 20000))
-      graft.index.IndexWriter.applyChangelog(d, changes, "doc_id", "seq", "op")
-    }),
-
-    // URL canonicalization + latest-crawl-wins: three cosmetic variants
-    // of each page URL (case-shifted host, default port, tracking
-    // params, trailing slash, fragment) canonicalize to one key; the
-    // newest crawl (max ts, id tie-break) survives per key. The regex
-    // chain sits in the RE2 ∩ Java subset so DuckDB re-derives it
-    // byte-identically.
-    "q93_url_canonical" -> ((s, dir) => {
-      val p = (col("doc_id") % 120).cast("string")
-      val url = when(col("doc_id") % 3 === 0,
-          concat(lit("https://Example.COM/p/"), p, lit("/?utm_source=x")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("https://example.com:443/p/"), p, lit("/")))
-        .otherwise(concat(lit("https://EXAMPLE.com/p/"), p, lit("?fbclid=abc#frag")))
-      val crawls = t(s, dir, "documents")
-        .select(col("doc_id"), col("doc_id").as("crawl_ts"), url.as("url"))
-      graft.ops.Curation.latestByCanonicalUrl(crawls, "url", "crawl_ts", "doc_id")
-        .select("canonical_url", "doc_id", "crawl_ts")
-    }),
-
-    // Stream-stream LEFT OUTER join: click→purchase attribution that
-    // also emits never-converted clicks (null p_id) once the watermark
-    // proves no match can arrive. Sentinel flush rows drain the tail
-    // state; they are filtered HERE, outside the streaming query —
-    // inside it the predicate would push below the watermark operator
-    // and defeat the flush (see streamStreamLeftJoin). Result must
-    // equal the batch left join (the oracle).
-    "q94_stream_left_join" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamStreamLeftJoin(s, dir, "q94_sink")
-      }
-      s.table("q94_sink").filter(col("user_id") >= 0)
-    }),
-
-    // SemDeDup-style semantic dedup: k-means cells fence the all-pairs
-    // cosine work; rows with an earlier near-duplicate in their cell are
-    // dropped. The oracle re-derives pairs, cosine (independent double
-    // math), and the anchor rule from the dumped assignment table.
-    "q97_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val assigned = new Similarity.IvfIndex(emb, nCentroids = 8)
-        .assigned.select(col("vec_id"), col("embedding"), col("centroid"))
-      writeAux(assigned.select("vec_id", "centroid"), dir, "q97_assigned")
-      Dedup.semanticDedupAssigned(assigned, "embedding", "vec_id", threshold = 0.3)
-    }),
-
-    // Exact heavy hitters THROUGH the MG sketch: candidates are a
-    // guaranteed superset of every token covering ≥ 3.4% of the corpus,
-    // the semi-joined recount confirms exact counts — so the result is
-    // layout-independent and equals the plain GROUP BY/HAVING oracle,
-    // while the only full-width shuffle is over candidate tokens.
-    "q98_heavy_hitters" -> ((s, dir) =>
-      graft.ops.Profile.heavyHittersExactFrac(
-        t(s, dir, "documents").select(explode(split(col("text"), " ")).as("tok")),
-        "tok", phi = 0.034, sketchSize = 64)),
-
-    // Streaming per-key quota admission (streaming domainCap): at most 5
-    // events per user admitted through one long of state per key; the
-    // single-batch drain is ordered by (ts, id) within each group, so it
-    // equals the batch rank-by-event-time oracle exactly.
-    "q99_stream_quota" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamQuotaAdmission(s, dir, "q99_sink", cap = 5)
-      }
-      s.table("q99_sink")
-    }),
-
-    // Domain blocklist filtering at dot boundaries: "site7.com" blocks
-    // its cdn. subdomain but NOT "xsite7.com"; a cdn-specific entry
-    // blocks only that subdomain. Suffix-explode + broadcast semi-join
-    // + ids-only anti-join — the corpus never shuffles.
-    "q100_blocklist_filter" -> ((s, dir) => {
-      val base = concat(lit("site"), (col("doc_id") % 50).cast("string"), lit(".com"))
-      val host = when(col("doc_id") % 2 === 0, concat(lit("cdn."), base))
-        .otherwise(when(col("doc_id") % 7 === 0, concat(lit("x"), base)).otherwise(base))
-      val docs = t(s, dir, "documents").select(col("doc_id"), host.as("host"))
-      val blocklist = s.createDataFrame(java.util.List.of(
-          org.apache.spark.sql.Row("site7.com"), org.apache.spark.sql.Row("site13.com"),
-          org.apache.spark.sql.Row("cdn.site2.com")),
-        new org.apache.spark.sql.types.StructType().add("blocked", "string"))
-      graft.ops.Curation.blocklistFilter(docs, "doc_id", "host", blocklist, "blocked")
-    }),
-
-    // Consecutive-duplicate suppression (heartbeat debounce): an event
-    // whose type equals the previous event's type for the same user is
-    // dropped — only state CHANGES survive. One lag window per user.
-    "q101_consecutive_dedup" -> ((s, dir) =>
-      EventsPipeline.dropConsecutiveDuplicates(
-        events(s, dir), "user_id", Seq("event_type"))
-        .select(col("user_id"), col("event_id"), col("event_type"))),
-
-    // Per-group winsorization: extended prices clamp to their return-
-    // flag group's exact [p05, p95] — heavy tails bounded, rows kept.
-    // Bounds from one tiny per-group aggregate joined back (broadcast).
-    "q102_winsorize" -> ((s, dir) =>
-      graft.ops.Cleaning.winsorize(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-            col("l_extendedprice")),
-        "l_returnflag", "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          col("l_extendedprice_wins"))),
-
-    // Ordered funnel: users reaching signup → click → purchase with each
-    // step strictly after the previous (one user-keyed walk vs the
-    // oracle's chained min-after-stage joins).
-    "q103_funnel" -> ((s, dir) =>
-      EventsPipeline.funnelCounts(events(s, dir),
-        Seq("signup", "click", "purchase"))),
-
-    // JSONL ingestion with dead-letter handling: docs round-trip through
-    // newline-delimited JSON with every 7th line truncated mid-record;
-    // PERMISSIVE parse + corrupt-record column quarantines exactly those,
-    // admits the rest typed. Oracle derives the expected admitted set
-    // straight from the documents table.
-    "q104_jsonl_deadletter" -> ((s, dir) => {
-      val staging = "/tmp/graft_jsonl/" + new java.io.File(dir).getName
-      val line = to_json(struct(col("doc_id"), col("n_chars")))
-      t(s, dir, "documents")
-        .select(when(col("doc_id") % 7 === 0, substring(line, 1, 9))
-          .otherwise(line).as("value"))
-        .write.mode("overwrite").text(staging)
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("n_chars", "long")
-      graft.sources.JsonlSource.admitted(
-        graft.sources.JsonlSource.read(s, staging, schema))
-    }),
-
-    // Group-atomic split (leakage guard): all documents of a source land
-    // in the same split — the hash is keyed on the GROUP, so eval
-    // membership can't straddle near-identical content.
-    "q105_group_split" -> ((s, dir) =>
-      graft.ops.Sampling.groupHashSplit(
-        t(s, dir, "documents").select("doc_id", "source"), "source",
-        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))),
-
-    // Next-chunk training pairs: fixed 50-token chunks per doc, one lead
-    // window per document, pairs carried as digests not text.
-    "q106_adjacent_pairs" -> ((s, dir) =>
-      graft.ops.Curation.adjacentChunkPairs(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text", 50)),
-
-    // CSV ingestion with dead-letter handling: every 9th line carries a
-    // non-numeric value in a LONG column; PERMISSIVE from_csv
-    // quarantines exactly those, admits the rest typed.
-    "q107_csv_deadletter" -> ((s, dir) => {
-      val staging = "/tmp/graft_csv/" + new java.io.File(dir).getName
-      val good = concat_ws(",", col("doc_id"), col("lang"), col("n_chars"))
-      val bad = concat_ws(",", col("doc_id"), col("lang"), lit("notanumber"))
-      t(s, dir, "documents")
-        .select(when(col("doc_id") % 9 === 0, bad).otherwise(good).as("value"))
-        .write.mode("overwrite").text(staging)
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
-      graft.sources.CsvSource.admitted(
-        graft.sources.CsvSource.read(s, staging, schema))
-    }),
-
-    // TPC-H Q5 shape: 6-table snowflake (region→nation→customer→orders→
-    // lineitem→supplier, local-supplier condition) with a region filter
-    // and a date window — the multi-join planning stress: tiny dims
-    // broadcast, the two fact joins shuffle on their keys, AQE reorders.
-    // Revenue in integer cents so accumulation order can't drift.
-    "q108_local_supplier_revenue" -> ((s, dir) => {
-      val rev = cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-      t(s, dir, "region").filter(col("r_name") === "ASIA")
-        .join(t(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
-        .join(t(s, dir, "customer"), col("n_nationkey") === col("c_nationkey"))
-        .join(t(s, dir, "orders").filter(
-            col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01")),
-          col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(rev).as("revenue_cents"), count(lit(1)).as("n_items"))
-    }),
-
-    // NTILE decile features: which price decile a lineitem falls in
-    // within its return-flag group (feature bucketing for training).
-    "q109_ntile_deciles" -> ((s, dir) => {
-      val w = Window.partitionBy("l_returnflag")
-        .orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          ntile(10).over(w).cast("long").as("price_decile"))
-    }),
-
-    // Retrieval evaluation: recall@10 and reciprocal rank per query over
-    // a cosine ranking (self excluded), relevance = shared label. The
-    // oracle re-derives ranking, relevance, and both metrics end to end.
-    "q110_retrieval_metrics" -> ((s, dir) => {
-      import graft.functions.GraftFunctions.vecCosine
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("qlabel"))
-      val c = emb.select(col("vec_id").as("doc_id"), col("embedding").as("cv"),
-        col("label").as("clabel"))
-      val (ranked, relevant) = labelRetrieval(q, c)
-      graft.search.Metrics.perQuery(ranked, relevant, k = 10)
-    }),
-
-    // Deterministic k-fold assignment (cross-validation): fold = md5 mod
-    // 5, auditable from ids alone, no shuffle.
-    "q111_kfold" -> ((s, dir) =>
-      graft.ops.Sampling.kFold(
-        t(s, dir, "documents").select("doc_id", "lang"), "doc_id", k = 5)),
-
-    // Rolling 7-day distinct users per day: (day, user) pairs collapse
-    // FIRST (the big reduction), then a tiny day-grid range join fans
-    // each pair into its ≤ 7 windows and a distinct count per day
-    // finishes. The corpus never joins at event grain.
-    "q112_rolling_distinct" -> ((s, dir) => {
-      val pairs = events(s, dir)
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      val days = pairs.select("day").distinct()
-      days.join(pairs.select(col("day").as("pday"), col("user_id")),
-          col("pday").between(date_sub(col("day"), 6), col("day")))
-        .groupBy("day")
-        .agg(countDistinct(col("user_id")).as("users_7d"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("users_7d"))
-    }),
-
-    // Robust outliers (modified z-score, median/MAD): a 50× price spike
-    // planted on ~1/997 of rows; mean/stddev drift with the spikes, the
-    // median doesn't — the planted rows flag at 3.5 with no masking.
-    "q113_mad_outliers" -> ((s, dir) =>
-      graft.ops.Cleaning.madOutliers(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-            when(col("l_orderkey") % 997 === 0, col("l_extendedprice") * 50)
-              .otherwise(col("l_extendedprice")).as("price")),
-        "price", "l_returnflag", cutoff = 3.5)
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "robust_z"))
-,
-    // Token co-occurrence lift (the PMI family, emitted as the raw
-    // lift ratio — exp(PMI) — so no libm ln enters the compare): pairs
-    // come from per-doc DISTINCT token sets (bounded by per-doc vocab,
-    // never corpus²); lift = N·c_ab / (c_a·c_b) from exact integer
-    // counts, one correctly-rounded double division at the end.
-    "q114_token_lift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val n = docs.count()
-      val dt = docs.select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
-      val pairs = dt.select(col("doc_id"), col("tok").as("a"))
-        .join(dt.select(col("doc_id"), col("tok").as("b")), Seq("doc_id"))
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-      val cnt = dt.groupBy("tok").agg(count(lit(1)).as("c"))
-      pairs
-        .join(cnt.select(col("tok").as("a"), col("c").as("c_a")), Seq("a"))
-        .join(cnt.select(col("tok").as("b"), col("c").as("c_b")), Seq("b"))
-        .filter(col("c_ab") >= 5)
-        .withColumn("lift",
-          round((lit(n) * col("c_ab")).cast("double") /
-            (col("c_a") * col("c_b")).cast("double"), 6))
-        .select("a", "b", "c_ab", "lift")
-        .orderBy(col("lift").desc, col("a"), col("b"))
-        .limit(50)
-    }),
-
-    // Inverted-index posting lists: token → sorted doc-id array + df —
-    // the IR index artifact as a table (token-keyed shuffle only).
-    "q115_posting_lists" -> ((s, dir) => {
-      val dt = t(s, dir, "documents").select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
-      dt.groupBy("tok")
-        // comma-joined: the oracle harness can't sort/hash list cells (q51 rule)
-        .agg(array_join(sort_array(collect_list(col("doc_id")))
-            .cast("array<string>"), ",").as("postings"),
-          count(lit(1)).as("df"))
-    }),
-
-    // Exponentially-decayed activity feature (EWMA, alpha = 1/2) over
-    // each user's last 8 events, in EXACT integer arithmetic: weight
-    // 2^(7-k) on lag k means the weighted sum is a plain bigint — no
-    // libm pow, no float accumulation order, bit-identical everywhere.
-    // The decayed numerator is the feature (fixed-point; dividing by
-    // the weight total is a constant scale both engines could apply).
-    "q116_ewma_feature" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val decayed = (0 until 8).map(k =>
-          coalesce(lag(cents(col("value")), k).over(w), lit(0L)) *
-            lit(1L << (7 - k)))
-        .reduce(_ + _)
-      events(s, dir)
-        .withColumn("decayed_cents", decayed)
-        .select(col("user_id"), col("event_id"), col("decayed_cents"))
-    }),
-
-    // percent_rank + cume_dist: relative-position features, exact
-    // integer-ratio math over a fully deterministic order.
-    "q117_percent_rank" -> ((s, dir) => {
-      val w = Window.partitionBy("l_returnflag")
-        .orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          round(percent_rank().over(w), 6).as("pr"),
-          round(cume_dist().over(w), 6).as("cd"))
-    }),
-
-    // Blocked fuzzy record linkage: two systems carry the same entities,
-    // one with '-' typos on a quarter of names; candidates only from
-    // shared right-2-chars blocks, Levenshtein ≤ 1 verifies. Exact
-    // integer edit distances — both engines agree bit-for-bit.
-    "q118_fuzzy_linkage" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select((col("c_custkey") % 500).as("eid")).distinct()
-      val sysA = base.select(col("eid").as("id_a"),
-        concat(lit("entity_"), col("eid")).as("name_a"))
-      val sysB = base.select((col("eid") + 1000).as("id_b"),
-        when(col("eid") % 4 === 0, concat(lit("entity-"), col("eid")))
-          .otherwise(concat(lit("entity_"), col("eid"))).as("name_b"))
-      Dedup.fuzzyLinkage(sysA, sysB,
-          expr("right(name_a, 2)"), expr("right(name_b, 2)"),
-          "name_a", "name_b", maxDist = 1)
-        .select("id_a", "id_b", "name_a", "name_b", "dist")
-    }),
-
-    // Forward fill over a dense time grid (LOCF): per-user hourly value
-    // sums land on a generated hour grid from the user's first to last
-    // event; grid hours with no events carry the last observed sum
-    // forward. Money through cents; hours emitted as strings.
-    "q119_gap_fill" -> ((s, dir) => {
-      val hourly = events(s, dir)
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(cents(col("value"))).as("c"))
-      val grid = graft.ops.Cleaning.timeGrid(hourly, Seq("user_id"), "h",
-        step = "1 hour", gridCol = "h")
-      graft.ops.Cleaning.forwardFill(
-          grid.join(hourly, Seq("user_id", "h"), "left"),
-          Seq("user_id"), "h", Seq("c"))
-        .select(col("user_id"),
-          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("c").as("filled_cents"))
-    }),
-
-    // Exact triangle count over a deterministic synthetic graph (60
-    // nodes, edges derived from doc ids): canonical orientation, each
-    // triangle a<b<c found exactly once by a two-hop equi-join. The
-    // oracle reproduces orientation, dedup, and the 3-way join.
-    "q120_triangle_count" -> ((s, dir) => {
-      val edges = t(s, dir, "documents").select(
-        (col("doc_id") % 60).as("src"),
-        expr("(doc_id div 60) % 60").as("dst"))
-      graft.ops.GraphOps.triangleCount(edges)
-    }),
-
-    // Bigram next-token statistics: adjacent-pair counts in exact
-    // position order, then top-3 continuations per prev token (count
-    // desc, token asc) THROUGH the custom TopKPerKey plan — the custom
-    // operator serving a real LM-stats pipeline, gated against the
-    // window-formulation oracle.
-    "q121_bigram_topk" -> ((s, dir) => {
-      val counts = TextAnalysis.bigramCounts(
-        t(s, dir, "documents").select("text"))
-      graft.plans.TopK.perKey(counts, Seq("prev"),
-        Seq(("cnt", false), ("next", true)), k = 3)
-        .select("prev", "next", "cnt")
-    }),
-
-    // Count-Min sketch: build the 4x64 counter grid over the token
-    // stream, then point-estimate every distinct token's frequency from
-    // it, alongside the exact count. The oracle re-derives the md5
-    // bucket placement, the grid, the min-over-rows estimate, and the
-    // exact counts — and the CM overestimate-only invariant (est >=
-    // true, never under) is part of what the hash check locks in.
-    "q122_countmin" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
-      // One corpus scan: the exact frequency table feeds the weighted
-      // sketch build (cell sums are additive — identical to the raw
-      // stream build), the estimate's query set, AND the comparison.
-      val exact = toks.groupBy("tok").agg(count(lit(1)).as("true_cnt"))
-      val sketch = graft.ops.Profile.countMinBuildCounts(exact, "tok",
-        "true_cnt", depth = 4, width = 64)
-      graft.ops.Profile.countMinEstimate(sketch, exact, "tok",
-          depth = 4, width = 64)
-        .join(exact, Seq("tok"))
-        .select(col("tok"), col("est"), col("true_cnt"))
-    }),
-
-    // Schema-evolution read: two parquet generations (v1 without
-    // n_chars, v2 with it) come back as ONE union-by-name frame, old
-    // rows null-filled — no backfill rewrite. The generations are
-    // written once per sf dir (marker-guarded) so bench re-runs don't
-    // pay the fixture; the oracle reads the same files with DuckDB's
-    // union_by_name.
-    "q123_schema_evolution" -> ((s, dir) => {
-      val base = auxPath(dir) + "/schema_evo"
-      val marker = java.nio.file.Paths.get(base, "_BUILT")
-      if (!java.nio.file.Files.exists(marker)) {
-        val d = t(s, dir, "documents")
-        d.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
-          .write.mode("overwrite").parquet(s"$base/g1")
-        d.filter(col("doc_id") % 2 =!= 0).select("doc_id", "lang", "n_chars")
-          .write.mode("overwrite").parquet(s"$base/g2")
-        java.nio.file.Files.write(marker, "v1".getBytes)
-      }
-      graft.sources.EvolvingParquet.readMerged(s, Seq(s"$base/g1", s"$base/g2"))
-        .select("doc_id", "lang", "n_chars")
-    }),
-
-    // Z-order (Morton) codes: the clustering key behind zorderWrite's
-    // two-dimensional data skipping, oracle-checked bit for bit — the
-    // DuckDB side re-interleaves with shift/mask arithmetic.
-    "q124_zorder" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.Layout.zValue(col("doc_id") % 1024, col("n_chars") % 1024,
-          bits = 10).as("z"))),
-
-    // ORC round-trip: the corpus written once (marker-guarded) as ORC —
-    // Spark's second first-class columnar format — and read back; the
-    // oracle is the original parquet table, so the gate proves the
-    // format conversion is lossless for ids, strings, and ints.
-    "q125_orc_roundtrip" -> ((s, dir) => {
-      val base = auxPath(dir) + "/orc_docs"
-      val marker = java.nio.file.Paths.get(base, "_BUILT")
-      if (!java.nio.file.Files.exists(marker)) {
-        t(s, dir, "documents").select("doc_id", "lang", "n_chars")
-          .write.mode("overwrite").orc(s"$base/data")
-        java.nio.file.Files.write(marker, "v1".getBytes)
-      }
-      s.read.orc(s"$base/data").select("doc_id", "lang", "n_chars")
-    }),
-
-    // Integer LM-fluency scores: per doc, (sum, n) of corpus bigram
-    // frequencies over its own transitions — the KenLM-style fluency
-    // filter with the float division left to the caller.
-    "q126_bigram_fluency" -> ((s, dir) =>
-      TextAnalysis.bigramFluency(
-        t(s, dir, "documents").select("doc_id", "text"))),
-
-    // TPC-H Q3 shape (shipping priority): segment-filtered customers ⋈
-    // pre-cutoff orders ⋈ post-cutoff lineitems, top-10 open orders by
-    // revenue. The optimizer test: both dimension filters must reach
-    // their scans, customer broadcasts, and the top-10 is a
-    // TakeOrdered, never a global sort.
-    "q127_shipping_priority" -> ((s, dir) => {
-      val rev = cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-      t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .join(t(s, dir, "orders").filter(col("o_orderdate") < lit("1998-06-01")),
-          col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem").filter(col("l_shipdate") > lit("1998-06-01")),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
-          col("o_orderpriority"))
-        .agg(sum(rev).as("revenue_cents"))
-        .orderBy(desc("revenue_cents"), asc("l_orderkey"))
-        .limit(10)
-    }),
-
-    // TPC-H Q10 shape (returned-item reporting): customers ranked by
-    // revenue lost to returns in one quarter — a 4-table star with two
-    // scan-pushed date bounds and a returnflag filter.
-    "q128_returned_customers" -> ((s, dir) => {
-      val rev = cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(
-            col("o_orderdate") >= lit("1997-01-01") &&
-            col("o_orderdate") < lit("1997-04-01")),
-          col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem").filter(col("l_returnflag") === "R"),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sum(rev).as("lost_cents"), count(lit(1)).as("n_items"))
-        .orderBy(desc("lost_cents"), asc("c_custkey"))
-        .limit(20)
-    }),
-
-    // k-anonymity risk audit: rows whose (lang, source, size-bucket)
-    // combination isolates fewer than 5 docs — the re-identification
-    // worklist a governance pass must clear before metadata ships.
-    "q129_k_anonymity" -> ((s, dir) =>
-      graft.ops.Curation.kAnonymityRisk(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          col("source"), expr("CAST(n_chars div 500 AS BIGINT)").as("size_bin")),
-        Seq("lang", "source", "size_bin"), k = 5)),
-
-    // EXACTLY-n-per-stratum sampling (md5-priority rank within each
-    // language) through the custom TopKPerKey plan — guaranteed
-    // per-class counts for balanced eval pools, still a pure function
-    // of the ids.
-    "q130_fixed_stratified" -> ((s, dir) =>
-      graft.ops.Sampling.fixedSizeStratified(
-        t(s, dir, "documents").select("doc_id", "lang"),
-        Seq("lang"), "doc_id", n = 20)
-        .select("doc_id", "lang")),
-
-    // Gaps-and-islands interval coalescing: each event spans 10 minutes;
-    // overlapping/touching spans merge per user into islands with
-    // (start, end, count) in exact epoch micros. The running-max
-    // construction (not lag) is what lets one long span swallow short
-    // contained ones — the oracle re-derives the identical islands.
-    "q131_interval_merge" -> ((s, dir) =>
-      graft.ops.Cleaning.mergeIntervals(
-        events(s, dir).select(col("user_id"),
-          unix_micros(col("ts")).as("start_us"),
-          (unix_micros(col("ts")) + 600000000L).as("end_us")),
-        "user_id", "start_us", "end_us")),
-
-    // Functional-dependency audit: sources whose docs span >1 language
-    // (source → lang violators with their distinct-language counts) —
-    // the dirty-dimension probe before keying anything on source.
-    "q132_fd_violations" -> ((s, dir) =>
-      graft.ops.Profile.fdViolations(
-        t(s, dir, "documents"), "source", "lang")),
-
-    // Bucketed co-located fact join: orders and lineitem pre-bucketed on
-    // the order key join with NO exchange on either side (hint("merge")
-    // pins the SMJ the 100 TB large-large case needs; the bucketing
-    // makes the shuffle vanish — PlanSpec asserts exactly that; bucket-
-    // local sorts remain, as Spark trusts sortBy ordering only at one
-    // file per bucket). Tables materialize once per session; re-runs
-    // pay only the join.
-    "q133_bucketed_join" -> ((s, dir) => {
-      val sfx = new java.io.File(dir).getName.replace('.', '_')
-      graft.ops.Joins.ensureBucketedTable(
-        t(s, dir, "orders").select(col("o_orderkey"),
-          cents(col("o_totalprice")).as("total_cents")),
-        s"bk_orders_$sfx", "o_orderkey", buckets = 8,
-        fingerprint = graft.ops.Joins.dataFingerprint(s"$dir/orders.parquet"))
-      graft.ops.Joins.ensureBucketedTable(
-        t(s, dir, "lineitem").select(col("l_orderkey"),
-          cents(col("l_extendedprice")).as("price_cents")),
-        s"bk_lineitem_$sfx", "l_orderkey", buckets = 8,
-        fingerprint = graft.ops.Joins.dataFingerprint(s"$dir/lineitem.parquet"))
-      s.table(s"bk_orders_$sfx").hint("merge")
-        .join(s.table(s"bk_lineitem_$sfx"),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderkey", "total_cents")
-        .agg(count(lit(1)).as("n_items"), sum("price_cents").as("items_cents"))
-    }),
-
-    // Salted skew JOIN (completes q38's salted-agg story): lineitem's
-    // return-flag key is 3-valued — the textbook hot-key join — so the
-    // fact side salts into 16 content-derived sub-keys and the tiny dim
-    // replicates per salt. Result must equal the plain join + aggregate
-    // exactly (the oracle IS the unsalted formulation).
-    "q134_salted_join" -> ((s, dir) => {
-      val dimDf = {
-        import s.implicits._
-        Seq(("A", "returned"), ("N", "kept"), ("R", "refunded"))
-          .toDF("l_returnflag", "flag_desc")
-      }
-      graft.ops.Skew.saltedJoin(
-          t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-            col("l_returnflag"), cents(col("l_extendedprice")).as("price_cents")),
-          dimDf, "l_returnflag", saltBuckets = 16)
-        .groupBy("l_returnflag", "flag_desc")
-        .agg(count(lit(1)).as("n_items"), sum("price_cents").as("sum_cents"))
-    }),
-
-    // Sharded JSONL export round-trip: the corpus ships as capped
-    // one-object-per-line shards (the LLM training-data delivery
-    // format) and reads back losslessly — text, unicode and all; the
-    // oracle is the original table.
-    "q135_jsonl_export" -> ((s, dir) => {
-      val base = auxPath(dir) + "/jsonl_export"
-      val marker = java.nio.file.Paths.get(base, "_BUILT")
-      if (!java.nio.file.Files.exists(marker)) {
-        graft.sources.JsonlSource.writeSharded(
-          t(s, dir, "documents").select("doc_id", "text", "lang", "n_chars"),
-          s"$base/data", maxRecordsPerFile = 100)
-        java.nio.file.Files.write(marker, "v1".getBytes)
-      }
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("text", "string")
-        .add("lang", "string").add("n_chars", "int")
-      s.read.schema(schema).json(s"$base/data")
-        .select("doc_id", "text", "lang", "n_chars")
-    }),
-
-    // Token-budget selection: keep docs in md5-priority order until the
-    // cumulative char count reaches the budget ("~75k chars of this
-    // corpus, deterministically"). The running sum is the two-pass
-    // range-partitioned prefix sum — no single-partition window — and
-    // the oracle re-derives order, sum, and cutoff.
-    "q136_token_budget" -> ((s, dir) =>
-      graft.ops.Sampling.tokenBudgetSample(
-        t(s, dir, "documents").select("doc_id", "n_chars"),
-        "doc_id", "n_chars", budget = 75000L)
-        .select(col("doc_id"), col("cum_n_chars"))),
-
-    // Gopher top-bigram repetition: per doc, (count of most frequent
-    // bigram, total bigrams) in exact integers — templated text
-    // concentrates, prose spreads; the float ratio is the caller's.
-    "q137_top_bigram" -> ((s, dir) =>
-      TextAnalysis.topBigramStats(
-        t(s, dir, "documents").select("doc_id", "text"))),
-
-    // Matryoshka truncation: first 16 of 64 dims, L2-renormalized —
-    // the MRL storage/latency dial; row-form output, 6-dp values.
-    "q138_mrl_truncate" -> ((s, dir) =>
-      graft.ops.VectorOps.truncateRenorm(
-        t(s, dir, "embeddings"), dims = 16)),
-
-    // Cohort retention: users cohort by first-activity day; integer
-    // active/size counts per day offset (rates are the caller's
-    // division). Activity collapses to (user, day) before any join.
-    "q139_cohort_retention" -> ((s, dir) =>
-      EventsPipeline.cohortRetention(events(s, dir))),
-
-    // Event-type transition counts — the Markov view of user behavior
-    // (the event-stream sibling of q121's token bigrams).
-    "q140_event_transitions" -> ((s, dir) =>
-      EventsPipeline.eventTransitions(events(s, dir))),
-
-    // Rare-label collapse: 37 planted labels split 13/14 rows each;
-    // minCount 14 sends the 13-row tail to OTHER — the "other"
-    // bucketing run before one-hot/target encoding.
-    "q141_rare_label" -> ((s, dir) =>
-      graft.ops.Cleaning.rareLabelCollapse(
-        t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("s"), (col("doc_id") % 37).cast("string")).as("label")),
-        "label", minCount = 14L)
-        .select("doc_id", "label", "label_collapsed")),
-
-    // Leave-one-out target encoding in exact integers: each lineitem
-    // gets its return-flag group's (sum - own, n - 1) price cents —
-    // leak-free category priors, division and smoothing deferred.
-    "q142_target_encode_loo" -> ((s, dir) =>
-      graft.ops.Cleaning.targetEncodeLoo(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-          col("l_returnflag"), cents(col("l_extendedprice")).as("price_cents")),
-        "l_returnflag", "price_cents")
-        .select("l_orderkey", "l_linenumber", "l_returnflag",
-          "loo_sum", "loo_n")),
-
-    // l-diversity audit (q129's complement): groups that are big enough
-    // to pass k-anonymity can still leak when everyone shares the same
-    // sensitive value — rows whose (source, size-bin) group spans < 3
-    // distinct languages are the disclosure worklist.
-    "q143_l_diversity" -> ((s, dir) =>
-      graft.ops.Curation.lDiversityRisk(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          col("source"), expr("CAST(n_chars div 500 AS BIGINT)").as("size_bin")),
-        Seq("source", "size_bin"), "lang", l = 3)),
-
-    // Time-weighted value integral (TWAP numerator): cents x hold-
-    // seconds summed per user, last observation open-ended — exact
-    // integers, the average is the caller's division.
-    "q144_twap" -> ((s, dir) =>
-      EventsPipeline.timeWeightedSum(
-        events(s, dir).withColumn("value_cents", cents(col("value"))))),
-
-    // End-to-end ENTITY RESOLUTION (the record-tier sibling of q76's
-    // document dedup): fuzzy-linked records across two systems →
-    // connected components over the link graph → every record labeled
-    // with its canonical (min-id) entity; unlinked records are their
-    // own entity. The oracle re-derives blocking, edit-distance links,
-    // the reachability closure, AND the fallback — the whole pipeline
-    // in one gate.
-    "q145_entity_resolution" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select((col("c_custkey") % 500).as("eid")).distinct()
-      val sysA = base.select(col("eid").as("rec_id"),
-        concat(lit("entity_"), col("eid")).as("name"))
-      val sysB = base.select((col("eid") + 1000).as("rec_id"),
-        when(col("eid") % 4 === 0, concat(lit("entity-"), col("eid")))
-          .otherwise(concat(lit("entity_"), col("eid"))).as("name"))
-      val links = Dedup.fuzzyLinkage(
-        sysA.withColumnRenamed("rec_id", "id_a")
-          .withColumnRenamed("name", "name_a"),
-        sysB.withColumnRenamed("rec_id", "id_b")
-          .withColumnRenamed("name", "name_b"),
-        expr("right(name_a, 2)"), expr("right(name_b, 2)"),
-        "name_a", "name_b", maxDist = 1)
-      val comp = Dedup.connectedComponents(
-        links.select(col("id_a").as("id1"), col("id_b").as("id2")))
-      sysA.unionByName(sysB)
-        .join(comp.withColumnRenamed("id", "rec_id"), Seq("rec_id"), "left")
-        .select(col("rec_id"), col("name"),
-          coalesce(col("comp"), col("rec_id")).as("entity_id"))
-    }),
-
-    // Streaming Count-Min maintenance: per-batch sketches merge
-    // cell-wise into the running grid (bounded at depth x width rows by
-    // construction); the drained stream equals the batch sketch — which
-    // the oracle re-derives from scratch, md5 buckets and all.
-    "q146_stream_countmin" -> ((s, dir) => {
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamCountMinMaintain(s, dir, "q146_sink",
-          "event_type", depth = 4, width = 32)
-      }
-      s.table("q146_sink")
-    }),
-
-    // Running-max drawdown: per user, peak value so far minus current
-    // (the decline-from-peak feature) in exact cents.
-    "q147_drawdown" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, dir)
-        .withColumn("value_cents", cents(col("value")))
-        .select(col("user_id"), col("event_id"),
-          (max("value_cents").over(w) - col("value_cents")).as("drawdown_cents"))
-    }),
-
-    // Distribution drift between the first and second half of the
-    // event stream: fixed-width value bins, per-period counts, abs
-    // diff — the integer core of PSI monitoring, ln left out.
-    "q148_drift_bins" -> ((s, dir) =>
-      graft.ops.Cleaning.binnedDrift(
-        events(s, dir)
-          .withColumn("value_cents", cents(col("value")))
-          .withColumn("period",
-            when(col("ts") < lit("2024-01-16"), "a").otherwise("b")),
-        "value_cents", "period", binWidth = 2000L)),
-
-    // THE CURATION RUN, end to end in one gate: Unicode-normalize →
-    // length gate → exact dedup on the normalized text (min-id wins) →
-    // deterministic train split → token budget over the training slice.
-    // Every stage is an already-verified primitive (q82/q21/q78/q136);
-    // this query proves they COMPOSE — the oracle chains the same five
-    // derivations and must match hash-for-hash at the end.
-    "q149_curation_pipeline" -> ((s, dir) => {
-      import graft.ops.{Dedup, Sampling}
-      val normed = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"),
-          TextAnalysis.normalizeText(col("text")).as("norm_text"))
-        .filter(col("n_chars") >= 100)
-      val w = Window.partitionBy(md5(col("norm_text").cast("binary")))
-        .orderBy(col("doc_id"))
-      val deduped = normed
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val train = Sampling.hashSplit(deduped, "doc_id",
-          Seq("train" -> 0.8, "holdout" -> 0.2))
-        .filter(col("split") === "train")
-      Sampling.tokenBudgetSample(
-          train.select("doc_id", "n_chars"), "doc_id", "n_chars",
-          budget = 50000L)
-        .select(col("doc_id"), col("cum_n_chars"))
-    }),
-
-    // Product quantization + asymmetric distance: 64-d vectors compress
-    // to 4 codebook bytes; the query scores the whole corpus through a
-    // 4x16 lookup table. Codebooks and codes dump as aux tables and
-    // the oracle re-derives the LUT and every ADC distance from them —
-    // the quantizer's output is judged, not trusted.
-    "q150_pq_adc" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new Similarity.PqIndex(emb, m = 4, k = 16,
-        maxFitSample = 2000)
-      writeAux(idx.codebookRows(s), dir, "q150_codebooks")
-      writeAux(idx.encodedRows, dir, "q150_codes")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select("embedding").first().getSeq[Float](0).toArray
-      idx.adcTopK(qv, 10)
-    }),
-
-    // IVF + PQ composed (the FAISS IVF-PQ architecture, sans residual
-    // refinement — documented as the production upgrade): the coarse
-    // quantizer prunes to 4 of 16 cells, ADC scores only the
-    // survivors. Assignments, probed cells, codebooks, and codes all
-    // dump as aux; the oracle re-derives candidate pruning, the LUT,
-    // and every distance.
-    "q151_ivfpq" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val ivf = new Similarity.IvfIndex(emb, nCentroids = 16,
-        maxFitSample = 2000)
-      val pq = new Similarity.PqIndex(emb, m = 4, k = 16,
-        maxFitSample = 2000)
-      val qv = emb.filter(col("vec_id") === 1)
-        .select("embedding").first().getSeq[Float](0).toArray
-      val cells = ivf.probeCells(qv, nProbe = 4)
-      writeAux(ivf.assigned.select("vec_id", "centroid"), dir, "q151_assigned")
-      writeAux(cells.toDF("centroid"), dir, "q151_probes")
-      writeAux(pq.codebookRows(s), dir, "q151_codebooks")
-      writeAux(pq.encodedRows, dir, "q151_codes")
-      val cand = ivf.assigned
-        .filter(col("centroid").isin(cells.map(_.asInstanceOf[AnyRef]): _*))
-        .select("vec_id")
-      pq.adcTopKAmong(cand, qv, 10)
-    }),
-
-    // Residual IVF-PQ (the full FAISS construction): PQ codes the
-    // residual v - centroid, and the query scores each probed cell
-    // through its own residual LUT. Five aux dumps let the oracle
-    // re-derive residual arithmetic, per-cell LUTs, pruning, and every
-    // distance from scratch.
-    "q152_ivfpq_residual" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val idx = new Similarity.IvfPqResidualIndex(emb, nCells = 16,
-        m = 4, k = 16, maxFitSample = 2000)
-      val qv = emb.filter(col("vec_id") === 2)
-        .select("embedding").first().getSeq[Float](0).toArray
-      val cells = idx.coarse.probeCells(qv, nProbe = 4)
-      writeAux(idx.coarse.assigned.select("vec_id", "centroid"),
-        dir, "q152_assigned")
-      writeAux(cells.toDF("centroid"), dir, "q152_probes")
-      writeAux(idx.coarse.centroidRows(s), dir, "q152_centroids")
-      writeAux(idx.pq.codebookRows(s), dir, "q152_codebooks")
-      writeAux(idx.pq.encodedRows, dir, "q152_codes")
-      idx.query(qv, topK = 10, nProbe = 4)
-    }),
-
-    // Incremental IVF maintenance: the corpus arrives in two batches.
-    // Centroids fit on the FIRST batch only, then freeze; the second
-    // batch is admitted via appendAssign (one assignment pass, no
-    // refit) into a second on-disk generation alongside the first.
-    // Output = the merged generations read back from disk; oracle = a
-    // one-pass full "rebuild" assignment of everything under the same
-    // frozen centroids (aux). Equality proves the append path loses,
-    // duplicates, and reassigns nothing — the contract that makes
-    // batch-wise admission valid at 100 TB (pointwise assignment under
-    // frozen centroids commutes with batching).
-    "q153_ivf_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") % 2 === 0)
-      val batch = emb.filter(col("vec_id") % 2 === 1)
-      val idx = new Similarity.IvfIndex(base, nCentroids = 16)
-      val path = auxPath(dir) + "/q153_index"
-      // fresh generations each run (Append mode would stack re-runs)
-      graft.ops.Joins.deleteRecursively(new java.io.File(path))
-      idx.writeGeneration(path, gen = 0)
-      idx.appendGeneration(path, batch, gen = 1)
-      writeAux(idx.appendAssign(emb).select("vec_id", "centroid"),
-        dir, "q153_rebuild")
-      s.read.parquet(path)
-        .select(col("vec_id"), col("generation").cast("int").as("generation"),
-          col("centroid").cast("int").as("centroid"))
-    }),
-
-    // Batched multi-query hybrid search: five queries ride ONE plan
-    // (queries broadcast; dense pairs heap-pruned per query via
-    // TopKPerKey; corpus tokens exploded once with (doc, term) scores
-    // fanned out by term; per-query_id rank windows over the pruned
-    // prefetch; same RRF arithmetic). The oracle is the per-query
-    // [[HybridSearch.search]] loop — batched == loop, by construction
-    // of both from the same branch semantics.
-    "q154_hybrid_batch" -> ((s, dir) => {
-      import s.implicits._
-      val (index, stats) = chunkIndex(s, dir)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-      val cfg = HybridSearch.Config(k = 5)
-      val queryTexts = Seq(
-        "spark join merge table scan",
-        "court appeal judgment opinion",
-        "contract breach damages remedy",
-        "evidence witness testimony trial",
-        "statute limitation federal claim")
-      val queries = queryTexts.zipWithIndex
-        .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
-      writeAux(queryTexts.zipWithIndex.map { case (q, i) =>
-        HybridSearch.search(index, stats, n, avgLen, q, cfg)
-          .select(lit(i.toLong).as("query_id"), col("id"), col("chunk_id"),
-            col("rrf_score"), col("dense_score"), col("bm25_score"))
-      }.reduce(_ unionByName _), dir, "q154_loop")
-      HybridSearch.searchAll(index, stats, n, avgLen, queries, cfg)
-        .select("query_id", "id", "chunk_id", "rrf_score",
-          "dense_score", "bm25_score")
-    }),
-
-    // Large-star/small-star components on a pathological topology:
-    // consecutive doc_ids chained WITHIN each language make one long
-    // chain per lang (hundreds of links at sf0.01) — the diameter that
-    // breaks plain label propagation. Components must come out as one
-    // per lang, labeled by the lang's min doc_id; the oracle derives
-    // that directly from the grouping that generated the chains (a
-    // window min — no recursion needed, which is the point: the oracle
-    // knows the topology, the engine must DISCOVER it in O(log n)
-    // star rounds).
-    "q155_components_logn" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "lang")
-      val w = Window.partitionBy("lang").orderBy("doc_id")
-      val edges = d.withColumn("prev", lag("doc_id", 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("id1"), col("doc_id").as("id2"))
-      val labels = Dedup.connectedComponentsLogN(edges)
-      d.select(col("doc_id").as("id"))
-        .join(labels, Seq("id"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    }),
-
-    // Jaro-Winkler linkage — q118's fixture verified by the second
-    // metric (published Winkler 1990 semantics; DuckDB implements the
-    // same variant, checked on the literature vectors, so the oracle
-    // re-derives every score): blocked candidates, JW >= 0.9 after a
-    // 6dp round keeps the one-substitution twins and drops unrelated
-    // same-block pairs.
-    "q156_jaro_linkage" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select((col("c_custkey") % 500).as("eid")).distinct()
-      val sysA = base.select(col("eid").as("id_a"),
-        concat(lit("entity_"), col("eid")).as("name_a"))
-      val sysB = base.select((col("eid") + 1000).as("id_b"),
-        when(col("eid") % 4 === 0, concat(lit("entity-"), col("eid")))
-          .otherwise(concat(lit("entity_"), col("eid"))).as("name_b"))
-      // Block on a separator-insensitive key: a bare right(name, 2) puts
-      // single-digit '-' twins ("entity_0" vs "entity-0") in DIFFERENT
-      // blocks ("_0" vs "-0"), so the JW-verification path was only
-      // exercised for eid >= 10 (round-7 advice).
-      Dedup.fuzzyLinkageJaroWinkler(sysA, sysB,
-          expr("right(regexp_replace(name_a, '[-_]', ''), 2)"),
-          expr("right(regexp_replace(name_b, '[-_]', ''), 2)"),
-          "name_a", "name_b", minSim = 0.9)
-        .select("id_a", "id_b", "name_a", "name_b", "jw")
-    }),
-
-    // Exact repeated-substring accounting (Lee et al. 2022's
-    // exact-substring dedup pass, relational form): every 7th doc gets
-    // the q74 boilerplate tail, whose 8-token windows repeat across
-    // ~1/7 of the corpus; repeated positions expand to [pos, pos+k)
-    // intervals and merge per doc (gaps-and-islands), emitting exact
-    // integer coverage — the removal worklist without materializing
-    // cleaned text. The oracle re-derives grams, repetition, the
-    // running-max island merge, and every count.
-    "q157_substring_spans" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"),
-            lit(" Please subscribe to our newsletter for free updates today")))
-          .otherwise(col("text")).as("text"))
-      graft.ops.Curation.repeatedSpanStats(planted, "doc_id", "text",
-        k = 8, minDocs = 2)
-    }),
-
-    // Water-filling mixture allocation: split 60% of the corpus's
-    // total chars across sources max-min-fairly — small sources keep
-    // everything, big ones share the remainder evenly (the "cap every
-    // domain at its fair share" data-mixing policy). Exact integer
-    // allocations summing to the budget; the distributed pass is the
-    // per-source aggregate, the waterfill itself runs over the
-    // dimension-scale source table.
-    "q158_waterfill" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
-        .groupBy("source").agg(sum("n_chars").as("total_chars"))
-        .cache()
-      // budget from the per-source aggregate (sum of sums == corpus
-      // sum) — deriving it from `documents` again would pay a second
-      // full corpus scan for a number the dimension table already holds
-      val budget = counts.agg(sum("total_chars")).head().getLong(0) * 6 / 10
-      graft.ops.Sampling.waterfillAllocation(
-        counts, "source", "total_chars", budget)
-    }),
-
-    // Image near-dup over REAL pixel decode (JDK ImageIO): a synthetic
-    // PNG per selected doc (the container ships no image corpus) — twin
-    // pairs share a render seed, odd twins carry a 2-block perturbation,
-    // a controlled near-duplicate within dHash radius 4. The per-image
-    // 64-bit dHashes are aux-dumped so DuckDB re-derives the ENTIRE
-    // relational tier (pigeonhole banding, candidate join, Hamming
-    // verify); the pixel tier itself is spec-gated by known answers
-    // (MultimodalSpec). Scale shape: decode+hash is map-side, once per
-    // image; only (id, 8-byte sig) rides the banded exchange.
-    "q159_image_neardup" -> ((s, dir) => {
-      val imgs = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("img_id"),
-          graft.ops.Multimodal.renderTestImageUdf(
-            expr("CAST(doc_id div 10 AS BIGINT)"),
-            when(col("doc_id") % 10 === 5, 2).otherwise(0)).as("content"))
-      writeAux(imgs.select(col("img_id"),
-          graft.ops.Multimodal.imageDHashUdf(col("content")).as("sig"))
-        .filter(col("sig").isNotNull), dir, "q159_hashes")
-      graft.ops.Multimodal.imageNearDupPairs(imgs, "img_id", "content",
-        maxDist = 4)
-    }),
-
-    // Multi-k repeated-span composition (q157's operator, one step
-    // closer to Lee et al.'s arbitrary-length construction): two window
-    // sizes mined independently — short plant (9 tokens, k=8 only) and
-    // long plant (18 tokens, found at BOTH k=8 and k=16) — with every
-    // hit interval merged through the one gaps-and-islands primitive,
-    // so the long repeat flagged by ~14 overlapping windows across two
-    // sizes is accounted exactly once.
-    "q160_multik_spans" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit(" Please subscribe to our newsletter for free updates today"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit(" This opinion is subject to formal revision before" +
-              " publication in the preliminary print of the United" +
-              " States Reports")).otherwise(lit(""))).as("text"))
-      graft.ops.Curation.repeatedSpanStatsMultiK(planted, "doc_id", "text",
-        ks = Seq(8, 16))
-    }),
-
-    // Token-budget selection under REAL subword accounting: greedy BPE
-    // (committed merges fixture, compiled UDF — known-answer spec-gated)
-    // counts each document's subword tokens; the budget cut is the same
-    // hash-ordered prefix-sum as q136 (which stays the whitespace-proxy
-    // variant). DuckDB can't BPE, so the counts are aux-dumped and the
-    // oracle independently re-derives the ENTIRE budget arithmetic over
-    // them (the q51-rule pattern). Scale: encode is one map-side pass;
-    // the prefix sum runs over (doc_id, count) pairs only.
-    "q161_bpe_budget" -> ((s, dir) => {
-      val counts = t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.bpeTokenCountUdf()(col("text")).as("n_bpe"))
-      writeAux(counts, dir, "q161_bpe_counts")
-      graft.ops.Sampling.tokenBudgetSample(counts, "doc_id", "n_bpe",
-        budget = 50000L)
-        .select(col("doc_id"), col("cum_n_bpe"))
-    }),
-
-    // REAL audio decode end-to-end under the exact-match oracle: WAVs
-    // synthesized from doc_id arithmetic (small-int amplitudes a SQL
-    // engine can re-derive), encoded through the real AudioSystem WAV
-    // writer, decoded back through the real JDK codec, and reduced to
-    // integer features — which the oracle computes ANALYTICALLY from
-    // doc_id alone. Any bit the codec path got wrong would break the
-    // match; nothing is echoed through aux. Decode+feature is one
-    // map-side pass; audio bytes never cross an exchange.
-    "q162_audio_features" -> ((s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.renderTestWavUdf(
-            expr("CAST(doc_id div 10 AS BIGINT)"),
-            (lit(4) * (lit(1) + col("doc_id") % 3)).cast("int"),
-            lit(0)).as("content"))
-      clips.select(col("doc_id"),
-          graft.ops.Multimodal.audioFeaturesUdf(col("content")).as("f"))
-        .select(col("doc_id"), col("f._1").as("n_samples"),
-          col("f._2").as("duration_ms"), col("f._3").as("rms"),
-          col("f._4").as("zero_crossings"))
-    }),
-
-    // Audio near-dup: energy-envelope fingerprints through the SAME
-    // pigeonhole-banded Hamming join as image near-dup (q159) — twins
-    // planted by amplitude-doubling the first 2 blocks of every x5 clip
-    // land within radius 4 of their x0 sibling. Oracle re-derives the
-    // banded candidate/verify join over the aux-dumped signatures.
-    "q163_audio_neardup" -> ((s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("aud_id"),
-          graft.ops.Multimodal.renderTestWavUdf(
-            expr("CAST(doc_id div 10 AS BIGINT)"), lit(4),
-            when(col("doc_id") % 10 === 5, 2).otherwise(0).cast("int"))
-            .as("content"))
-      writeAux(clips.select(col("aud_id"),
-          graft.ops.Multimodal.audioHashUdf(col("content")).as("sig"))
-        .filter(col("sig").isNotNull), dir, "q163_hashes")
-      graft.ops.Multimodal.audioNearDupPairs(clips, "aud_id", "content",
-        maxDist = 4)
-    }),
-
-    // MMR re-ranking (Carbonell & Goldstein 1998): the diversification
-    // pass between retrieval and serving. Relevance scan + top-50 is
-    // the distributed part; the greedy k-step selection is driver-side
-    // over the serving-sized candidate set (like the IVF probe rank).
-    // The oracle re-derives EVERYTHING — candidates, pairwise cosines,
-    // and all eight greedy argmax steps as unrolled SQL — zero aux.
-    "q164_mmr_rerank" -> ((s, dir) => {
-      val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0).toArray
-      graft.ops.Similarity.mmrRerank(t(s, dir, "embeddings"), qv,
-        k = 8, candidates = 50, lambda = 0.7)
-    }),
-
-    // Stupid-backoff trigram LM scoring (Brants et al. 2007 — the
-    // CCNet/Gopher perplexity-filter signal): counts train on even
-    // doc_ids only, every doc is scored, so odd docs exercise the
-    // backoff tiers on their held-out trigrams. Fully SQL-re-derivable:
-    // the oracle rebuilds counts, backoff decisions, and the micro-unit
-    // integer log-prob sums from the raw table — nothing aux-echoed.
-    "q165_backoff_lm" -> ((s, dir) =>
-      TextAnalysis.stupidBackoffScores(
-        t(s, dir, "documents"), col("doc_id") % 2 === 0)
-        .orderBy("doc_id")),
-
-    // Filtered ANN with adaptive probe widening: metadata predicate
-    // (label % 3 = 1) thins every IVF cell, so the probe prefix widens
-    // until ≥ k passing rows are in scope — in ONE plan (the cumulative
-    // window runs over the 16-row cell dimension, not corpus rows).
-    // Oracle re-derives the filter, per-cell cumulative counts, cutoff
-    // rule, and cosine top-k from the aux-dumped assignments + probe
-    // ranking.
-    "q166_ann_filtered" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0).toArray
-      val idx = new Similarity.IvfIndex(emb, nCentroids = 16)
-      writeAux(idx.assigned.select(col("vec_id"), col("centroid")),
-        dir, "q166_assign")
-      writeAux(idx.probeOrder(qv).toDF("centroid", "probe_rank"),
-        dir, "q166_probe")
-      idx.queryFilteredAdaptive(col("label") % 3 === 1, qv, k = 25)
-    }),
-
-    // Cluster–label purity audit: the clustering-quality check before
-    // trusting IVF cells as domain proxies (mixtures, curricula,
-    // SemDeDup). Exact integers; the oracle re-derives per-cell counts
-    // and the majority argmax from aux assignments + the label column.
-    "q167_cluster_purity" -> ((s, dir) => {
-      val idx = new Similarity.IvfIndex(t(s, dir, "embeddings"),
-        nCentroids = 16)
-      writeAux(idx.assigned.select(col("vec_id"), col("centroid")),
-        dir, "q167_assign")
-      graft.ops.Profile.clusterLabelPurity(idx.assigned)
-        .orderBy("centroid")
-    }),
-
-    // HTML boilerplate removal (jusText/readability family as exact
-    // integer rules): chrome blocks, short blocks, and link-dense
-    // blocks drop; parsing is spec-gated, and the keep rule +
-    // aggregation re-derive in DuckDB from aux-dumped per-block
-    // integer features (the q161 pattern — floats never cross).
-    "q168_html_extract" -> ((s, dir) => {
-      val html = t(s, dir, "documents").select(col("doc_id"), concat(
-        lit("<html><head><title>Doc</title><style>p{color:red}</style>" +
-          "</head><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About" +
-          "</a> <a href=\"/c\">Contact</a></nav><div>"),
-        col("text"),
-        lit("</div><aside>Sponsored <a href=\"/buy\">buy now</a> deal" +
-          "</aside><footer><a href=\"/t\">Terms</a> | <a href=\"/p\">" +
-          "Privacy</a></footer></body></html>")).as("html"))
-      val feats = html.select(col("doc_id"),
-        explode(graft.text.HtmlExtract.blockFeaturesUdf(col("html")))
-          .as("b"))
-        .select(col("doc_id"), col("b._1").as("block_idx"),
-          col("b._2").as("text_len"), col("b._3").as("link_len"),
-          col("b._4").as("chrome"))
-      writeAux(feats, dir, "q168_blocks")
-      feats.withColumn("kept",
-          when(col("chrome") === 0 && col("text_len") >= 25 &&
-            lit(2) * col("link_len") < col("text_len"), 1L).otherwise(0L))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_blocks"), sum("kept").as("n_kept"),
-          sum(when(col("kept") === 1, col("text_len")).otherwise(0L))
-            .as("kept_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // Bradley–Terry preference aggregation (RLHF pipelines): synthetic
-    // pairwise judgments from doc_id arithmetic reduce to the canonical
-    // win matrix in one distributed pass; five MM iterations run in
-    // exact fixed-point integers (q88's pagerank discipline), so the
-    // oracle replays them as unrolled integer-division CTEs.
-    "q169_bradley_terry" -> ((s, dir) => {
-      val prefs = t(s, dir, "documents").select(
-        (col("doc_id") % 8).as("a"), ((col("doc_id") * 5 + 3) % 8).as("b"),
-        when(col("doc_id") % 3 === 0, 0L).otherwise(1L).as("wa"),
-        when(col("doc_id") % 3 === 0, 1L).otherwise(0L).as("wb"))
-        .filter(col("a") =!= col("b"))
-      graft.ops.Curation.bradleyTerryScores(prefs, "a", "b", "wa", "wb",
-          iters = 5)
-        .orderBy("model")
-    }),
-
-    // OOV-rate audit: vocabulary trained on the doc_id-even split,
-    // applied to EVERY doc — the coverage check a pipeline runs before
-    // committing to a fixed vocab (vocab size 16 < the corpus's 31
-    // distinct tokens, so the tail is genuinely out-of-vocabulary).
-    // One explode + broadcast vocab join; fully SQL-re-derivable
-    // (buildVocab's count-desc/token-asc tie-break is deterministic).
-    "q170_oov_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val vocab = TextAnalysis.buildVocab(
-        docs.filter(col("doc_id") % 2 === 0), "text", size = 16)
-      docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .join(vocab, Seq("tok"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tok"),
-          sum(when(col("tok_id").isNull, 1L).otherwise(0L)).as("n_oov"))
-        .orderBy("doc_id")
-    }),
-
-    // Length-bucketed inference batching: docs bucket by length/16,
-    // order long-first within bucket, cut into batches of 8; per batch
-    // the padding waste (n·max − Σlen) quantifies what length-aware
-    // batching saves. Exact integers; the per-bucket window is the only
-    // shuffle and it is partitioned by bucket (never a global sort).
-    "q171_length_batching" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val lens = t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("len"))
-        .withColumn("bucket", expr("len div 16"))
-      val w = Window.partitionBy("bucket").orderBy(desc("len"), col("doc_id"))
-      lens.withColumn("rn", row_number().over(w).cast("long") - 1)
-        .withColumn("batch_idx", expr("rn div 8"))
-        .groupBy("bucket", "batch_idx")
-        .agg(count(lit(1)).as("n_docs"), max("len").as("max_len"),
-          sum("len").as("sum_len"))
-        .select(col("bucket"), col("batch_idx"), col("n_docs"),
-          col("max_len"),
-          (col("n_docs") * col("max_len") - col("sum_len")).as("waste"))
-        .orderBy("bucket", "batch_idx")
-    }),
-
-    // EXACT-threshold near-dup join by prefix filtering (PPJoin's core
-    // pruning; the zero-false-negative counterpart to MinHash-LSH q33):
-    // planted twins (every x25 doc duplicated under id+100000) must all
-    // surface at shingle-Jaccard >= 3/5. The oracle re-derives rarity
-    // ordering, prefix arithmetic, candidates, and the exact integer
-    // verify — no probabilistic banding anywhere.
-    "q172_prefix_filter_join" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val planted = docs.unionByName(
-        docs.filter(col("doc_id") % 25 === 0).select(
-          (col("doc_id") + 100000).as("doc_id"), col("text")))
-      Dedup.prefixFilterJoin(planted, "doc_id", "text",
-          shingleK = 5, tNum = 3, tDen = 5)
-        .orderBy("id1", "id2")
-    }),
-
-    // Incremental exact-threshold admission: even docs are the stored
-    // corpus, the batch is the odd docs PLUS re-submitted copies of the
-    // evens (id+100000) — every replant must match its stored original
-    // at J >= 3/5 with stored-only (frozen) shingle statistics. Oracle
-    // re-derives the stale-consistent ordering, both prefixes, and the
-    // exact verify.
-    "q173_prefix_admit" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val stored = d.filter(col("doc_id") % 2 === 0)
-      val batch = d.filter(col("doc_id") % 2 === 1).unionByName(
-        stored.filter(col("doc_id") % 50 === 0).select(
-          (col("doc_id") + 100000).as("doc_id"), col("text")))
-      Dedup.prefixFilterAdmit(batch, stored, "doc_id", "text",
-          shingleK = 5, tNum = 3, tDen = 5)
-        .orderBy("new_id", "old_id")
-    }),
-
-    // Normalized linear hybrid fusion (the alpha-blend alternative to
-    // q31's RRF — Weaviate/Vespa-style `alpha` hybrids): each branch's
-    // top-20 scores min-max normalize into [0,1], then blend at
-    // α = 0.6. Missing-branch sides contribute 0; a degenerate branch
-    // (max == min) normalizes to 0 on BOTH engines rather than NaN.
-    // Expression shapes mirror the oracle exactly (same left-assoc
-    // double math before each round-6).
-    "q174_blend_fusion" -> ((s, dir) => {
-      val bal20 = t(s, dir, "customer")
-        .orderBy(desc("c_acctbal"), col("c_custkey")).limit(20)
-        .select("c_custkey", "c_acctbal")
-      val balx = bal20.agg(min("c_acctbal").as("mnb"), max("c_acctbal").as("mxb"))
-      val nb = bal20.crossJoin(broadcast(balx))
-        .select(col("c_custkey"),
-          when(col("mxb") === col("mnb"), lit(0.0)).otherwise(
-            round((col("c_acctbal") - col("mnb")) / (col("mxb") - col("mnb")), 6))
-            .as("norm_bal"))
-      val ord20 = t(s, dir, "orders")
-        .groupBy("o_custkey").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("o_custkey")).limit(20)
-      val ordx = ord20.agg(min("n").as("mno"), max("n").as("mxo"))
-      val no = ord20.crossJoin(broadcast(ordx))
-        .select(col("o_custkey").as("c_custkey"),
-          when(col("mxo") === col("mno"), lit(0.0)).otherwise(
-            round((col("n") - col("mno")) / (col("mxo") - col("mno")), 6))
-            .as("norm_ord"))
-      nb.join(no, Seq("c_custkey"), "full_outer")
-        .select(col("c_custkey"),
-          coalesce(col("norm_bal"), lit(0.0)).as("norm_bal"),
-          coalesce(col("norm_ord"), lit(0.0)).as("norm_ord"),
-          round(lit(0.6) * coalesce(col("norm_bal"), lit(0.0)) +
-            lit(0.4) * coalesce(col("norm_ord"), lit(0.0)), 6).as("blend"))
-        .orderBy(desc("blend"), col("c_custkey")).limit(10)
-    }),
-
-    // PDF → embedded-image near-dup, end-to-end through REAL codecs:
-    // fixture PDFs embed real JDK-encoded JPEGs as /DCTDecode XObjects,
-    // PdfText.images extracts the raw JPEG streams back (the DCT
-    // boundary closed for the image tier — DCT never held text, it
-    // holds pixels), ImageIO decodes them, and the q159 banded Hamming
-    // join pairs the planted twins. Oracle re-derives the banded
-    // candidate/verify join over the aux-dumped signatures.
-    "q175_pdf_image_neardup" -> ((s, dir) => {
-      val pdfs = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("pdf_id"),
-          graft.ops.Multimodal.renderTestPdfJpegUdf(
-            expr("CAST(doc_id div 10 AS BIGINT)"),
-            when(col("doc_id") % 10 === 5, 2).otherwise(0)).as("pdf"))
-      val imgs = pdfs.select(col("pdf_id"),
-          graft.ops.Multimodal.pdfFirstImageUdf(col("pdf")).as("content"))
-        .filter(col("content").isNotNull)
-      writeAux(imgs.select(col("pdf_id"),
-          graft.ops.Multimodal.imageDHashUdf(col("content")).as("sig"))
-        .filter(col("sig").isNotNull), dir, "q175_sigs")
-      graft.ops.Multimodal.imageNearDupPairs(imgs, "pdf_id", "content",
-        maxDist = 4)
-    }),
-
-    // Clustering-depth audit (Delta OPTIMIZE's effectiveness metric for
-    // plain parquet): the same table written range-partitioned and
-    // hash-partitioned; per file, how many files' [min,max] intervals
-    // overlap its own. Range → depth 1 everywhere (stats prune to one
-    // file); hash → depth = n_files (stats prune nothing). The oracle
-    // re-derives the interval self-join + counts from the aux-dumped
-    // manifest; the join runs on the file DIMENSION, never data rows.
-    "q176_clustering_depth" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = auxPath(dir) + "/layouts"
-      val marker = java.nio.file.Paths.get(base, "_BUILT")
-      if (!java.nio.file.Files.exists(marker)) {
-        val d = t(s, dir, "documents").select("doc_id", "n_chars")
-        d.repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$base/range")
-        d.repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$base/hash")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, "v1".getBytes)
-      }
-      val man = Seq("range", "hash").map { lay =>
-        graft.ops.Layout.fileStats(s, s"$base/$lay", Seq("doc_id"))
-          .select(lit(lay).as("layout"), col("doc_id_min").as("mn"),
-            col("doc_id_max").as("mx"), col("n_rows"))
-      }.reduce(_ unionByName _)
-      // parquet part names are run-dependent; a rank under the total
-      // (mn, mx, n_rows) order is the deterministic file identity
-      val w = Window.partitionBy("layout").orderBy("mn", "mx", "n_rows")
-      val manIdx = man
-        .withColumn("file_idx", row_number().over(w).cast("long"))
-      writeAux(manIdx, dir, "q176_manifest")
-      val b = manIdx.select(col("layout"), col("mn").as("bmn"),
-        col("mx").as("bmx"))
-      manIdx.join(b, Seq("layout"))
-        .filter(col("mn") <= col("bmx") && col("bmn") <= col("mx"))
-        .groupBy("layout", "file_idx", "mn", "mx", "n_rows")
-        .agg(count(lit(1)).as("depth"))
-        .orderBy("layout", "file_idx")
-    }),
-
-    // Mergeable quantile sketch driving a corpus-wide percentile gate
-    // (the KLL pattern — the sketch-tier member HLL/Count-Min/MG lacked):
-    // four PER-BATCH sketches over lineitem price cents union via their
-    // rows form and merge into one O(k) summary, whose quantile cuts
-    // become admission thresholds. The cuts are aux-dumped; the oracle
-    // re-derives the EXACT rank of every cut in DuckDB and checks it
-    // lands within the documented bound (±⌈6n/k⌉ ranks) of the target —
-    // integer rank comparisons only, the q168 discipline. n_le makes the
-    // admitted-set size itself part of the hash-matched record.
-    "q177_quantile_gate" -> ((s, dir) => {
-      import s.implicits._
-      val k = 256
-      val li = t(s, dir, "lineitem")
-      val price = cents(col("l_extendedprice")).as("v")
-      // per-batch rows tables (the distinctSketch/countMinMerge
-      // incremental pattern), union, one merged driver-side read
-      val rows = (0 until 4).map { b =>
-        graft.ops.Profile.quantileSketch(
-          li.filter(col("l_orderkey") % 4 === b).select(price), "v", k)
-      }.reduce(_ union _)
-      val sk = graft.ops.Profile.quantileSketchMerge(rows, k)
-      val cuts = Seq(250, 500, 750, 900)
-        .map(q => (q, sk.quantile(q / 1000.0).toLong))
-      val cutsDf = cuts.toDF("q_mille", "cut")
-      writeAux(cutsDf, dir, "q177_cuts")
-      quantileGateCheck(li.select(price), cutsDf, k)
-    }),
-
-    // Fuzzy eval-set decontamination vs the exact 5-gram gate, on a
-    // corpus with BOTH leak shapes planted: verbatim eval copies
-    // (id+200000) and word-swapped copies (id+300000, every 25th token
-    // replaced — drops exact 5-gram overlap to ~0.8, keeps 3-shingle
-    // Jaccard ~0.79). The exact gate (integer 10·matched ≥ 9·total —
-    // the verbatim-inclusion rule) fires only on verbatim; the MinHash
-    // gate (eval split as the stored side, 8 bands × 2 rows so
-    // candidate recall at J≈0.8 is ~1) fires on both. Oracle re-derives
-    // grams, md5 signatures, banding, and agreement end to end.
-    "q178_fuzzy_decontam" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val ev = d.filter(col("doc_id") % 50 === 0)
-      val verbatim = ev.select((col("doc_id") + 200000).as("doc_id"),
-        col("text"))
-      val swapped = ev.select((col("doc_id") + 300000).as("doc_id"),
-        concat_ws(" ", expr(
-          "transform(split(text, ' '), (w, i) -> IF(i % 25 = 3, 'zzq', w))"))
-          .as("text"))
-      val corpus = d.unionByName(verbatim).unionByName(swapped)
-      val isEval = col("doc_id") % 50 === 0 && col("doc_id") < 200000
-      val exact = graft.ops.Curation.contamination(
-        corpus, "doc_id", "text", isEval, n = 5)
-      val fuzzy = graft.ops.Curation.fuzzyContamination(
-        corpus, "doc_id", "text", isEval, shingleK = 3, numHashes = 16,
-        bands = 8, minAgree = 0.5)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_fuzzy"), max("agree").as("best_agree"))
-      exact.join(fuzzy, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("total_grams"), col("matched_grams"),
-          when(col("total_grams") > 0 &&
-            col("matched_grams") * 10 >= col("total_grams") * 9, 1L)
-            .otherwise(0L).as("exact_flag"),
-          coalesce(col("n_fuzzy"), lit(0L)).as("n_fuzzy"),
-          coalesce(col("best_agree"), lit(0.0)).as("best_agree"))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental media-near-dup ADMISSION (the q91 stored-signature
-    // discipline applied to pixels): the standing corpus is q159's
-    // image set reduced to its (id, dHash) table; a new batch of
-    // identical resubmits (+500000), one-block-perturbed re-encodes
-    // (+600000), and novel images (+700000, unseen seeds) hashes
-    // map-side and joins that table through the pigeonhole-banded
-    // Hamming join. Resubmits and perturbs flag, novels admit. Oracle
-    // re-derives banding, XOR popcount, and the admission flags from
-    // the two aux signature tables.
-    "q179_media_admit" -> ((s, dir) => {
-      val mm = graft.ops.Multimodal
-      val d = t(s, dir, "documents").select("doc_id")
-      val stored = d.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("img_id"),
-          mm.renderTestImageUdf(expr("CAST(doc_id div 10 AS BIGINT)"),
-            when(col("doc_id") % 10 === 5, 2).otherwise(0)).as("content"))
-      val storedSigs = stored.select(col("img_id"),
-        mm.imageDHashUdf(col("content")).as("sig"))
-        .filter(col("sig").isNotNull)
-      val batch =
-        d.filter(col("doc_id") % 20 === 0)
-          .select((col("doc_id") + 500000).as("img_id"),
-            mm.renderTestImageUdf(expr("CAST(doc_id div 10 AS BIGINT)"),
-              lit(0)).as("content"))
-        .unionByName(d.filter(col("doc_id") % 20 === 10)
-          .select((col("doc_id") + 600000).as("img_id"),
-            mm.renderTestImageUdf(expr("CAST(doc_id div 10 AS BIGINT)"),
-              lit(1)).as("content")))
-        .unionByName(d.filter(col("doc_id") % 20 === 5)
-          .select((col("doc_id") + 700000).as("img_id"),
-            mm.renderTestImageUdf(expr("CAST(doc_id div 10 + 90000 AS BIGINT)"),
-              lit(0)).as("content")))
-      val batchSigs = batch.select(col("img_id"),
-        mm.imageDHashUdf(col("content")).as("sig"))
-        .filter(col("sig").isNotNull)
-      writeAux(storedSigs, dir, "q179_stored")
-      writeAux(batchSigs, dir, "q179_batch")
-      val matches = mm.imageNearDupAdmit(batch, storedSigs,
-        "img_id", "content", maxDist = 4)
-      val agg = matches.groupBy(col("new_id").as("img_id"))
-        .agg(count(lit(1)).as("n_matches"),
-          min("dist").cast("long").as("best_dist"))
-      batchSigs.select("img_id").join(agg, Seq("img_id"), "left")
-        .select(col("img_id"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          coalesce(col("best_dist"), lit(99L)).as("best_dist"),
-          when(col("n_matches").isNull, 1L).otherwise(0L).as("admitted"))
-        .orderBy("img_id")
-    }),
-
-    // The FULL pretraining-curation composite (q149 plus the scoring
-    // gates it skipped; round 10 adds the two production stages the
-    // r9 judge called out): normalize → length → exact-dedup →
-    // TRAINED language-ID gate (q213's model; en + margin ≥ 1e6) →
-    // MinHash near-dup + keep-best (q183's rule) → linear quality
-    // classifier (q95's weights) → Gopher top-bigram repetition
-    // (top_cnt/pairs ≤ 1/10) → LM bigram fluency (mean transition
-    // frequency ≥ 28) → hash split → token-budget sample. The corpus
-    // is PLANTED so every gate visibly rejects: docs ≡ 3 mod 17
-    // arrive reversed ('foreign' — fail the lang gate) and docs ≡ 1
-    // mod 13 gain a +10000 near-dup copy with one extra token (the
-    // copy outranks its original under keep-best, a NON-exact
-    // rejection). Bigram statistics are FROZEN on the deduped corpus
-    // (the stored-stats discipline), gates are exact-integer rules,
-    // and the output keeps every post-dedup doc with its per-gate
-    // flags.
-    "q180_curation_full" -> ((s, dir) => {
-      import graft.ops.Sampling
-      val base = t(s, dir, "documents")
-      val varied = base.select(col("doc_id"), col("n_chars"),
-        when(col("doc_id") % 17 === 3, reverse(col("text")))
-          .otherwise(col("text")).as("text"))
-      val planted = varied.unionByName(
-        varied.filter(col("doc_id") % 13 === 1)
-          .select((col("doc_id") + 10000).as("doc_id"),
-            (col("n_chars") + 11).as("n_chars"),
-            concat(col("text"), lit(" zzappendix")).as("text")))
-      val normed = planted
-        .select(col("doc_id"), col("n_chars"),
-          TextAnalysis.normalizeText(col("text")).as("norm_text"))
-        .filter(col("n_chars") >= 100)
-      val w = Window.partitionBy(md5(col("norm_text").cast("binary")))
-        .orderBy(col("doc_id"))
-      val dd = normed.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      // language gate: q213's trained fixture (labeled variants of the
-      // UNPLANTED corpus, doc_id < 200), en-with-confidence required
-      val langLabel = when(col("doc_id") % 3 === 0, "en")
-        .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-      val langVariant = when(col("doc_id") % 3 === 0, col("text"))
-        .when(col("doc_id") % 3 === 1,
-          translate(col("text"), "aeiou", "zzzzz"))
-        .otherwise(reverse(col("text")))
-      val profile = TextAnalysis.langIdTrain(
-        base.filter(col("doc_id") < 200)
-          .select(langLabel.as("lang"), langVariant.as("text")),
-        buckets = 1024)
-      val lang = TextAnalysis.langIdClassify(
-          dd.select(col("doc_id"), col("norm_text").as("text")), profile,
-          buckets = 1024)
-        .select(col("doc_id"), col("pred_lang"), col("margin6"))
-      // near-dup gate: LSH pairs over the deduped corpus, keep-best
-      // (longest norm_text, tie → min id)
-      val ndInput = dd.select(col("doc_id"),
-        col("norm_text").as("text"),
-        length(col("norm_text")).cast("long").as("qlen"))
-      val ndPairs = Dedup.minHashNearDups(ndInput, numHashes = 16,
-        bands = 4, jaccardThreshold = 0.8,
-        signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-        bandHash = c => md5(concat_ws("|", c)),
-        persistShingles = true)
-      val ndKept = Dedup.keepBest(ndInput, "doc_id", "qlen", ndPairs)
-        .select(col("doc_id"), lit(1L).as("pass_neardup"))
-      val quality = graft.ops.Curation.linearQualityScore(
-          dd.select(col("doc_id"), col("norm_text")), "doc_id", "norm_text",
-          graft.ops.Curation.QualityWeights(
-            words = 2, chars = 1, exclaim = -50, digits = -10, bias = -500))
-        .select(col("doc_id"), col("logit").cast("long").as("logit"))
-      val rep = TextAnalysis.topBigramStats(dd, "doc_id", "norm_text")
-      val flu = TextAnalysis.bigramFluency(dd, "doc_id", "norm_text")
-        .select(col("doc_id"), col("sum_cnt"))
-      val flags = dd.select("doc_id", "n_chars")
-        .join(quality, Seq("doc_id"))
-        .join(rep, Seq("doc_id"), "left")
-        .join(flu, Seq("doc_id"), "left")
-        .join(lang, Seq("doc_id"), "left")
-        .join(ndKept, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chars"), col("logit"),
-          coalesce(col("top_cnt"), lit(1L)).as("top_cnt"),
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("sum_cnt"), lit(0L)).as("sum_cnt"),
-          coalesce(col("pred_lang"), lit("und")).as("pred_lang"),
-          coalesce(col("margin6"), lit(0L)).as("margin6"),
-          coalesce(col("pass_neardup"), lit(0L)).as("pass_neardup"))
-        .withColumn("pass_lang",
-          when(col("pred_lang") === "en" && col("margin6") >= 1000000L, 1L)
-            .otherwise(0L))
-        .withColumn("pass_quality",
-          when(col("logit") >= 0, 1L).otherwise(0L))
-        .withColumn("pass_rep",
-          when(col("top_cnt") * 10 <= col("n_pairs"), 1L).otherwise(0L))
-        .withColumn("pass_flu",
-          when(col("sum_cnt") >= col("n_pairs") * 28, 1L).otherwise(0L))
-      val split = Sampling.hashSplit(flags, "doc_id",
-          Seq("train" -> 0.8, "holdout" -> 0.2))
-        .withColumn("split_train",
-          when(col("split") === "train", 1L).otherwise(0L))
-        .drop("split")
-      val survivors = split.filter(col("pass_lang") === 1 &&
-        col("pass_neardup") === 1 && col("pass_quality") === 1 &&
-        col("pass_rep") === 1 && col("pass_flu") === 1 &&
-        col("split_train") === 1)
-      val admitted = Sampling.tokenBudgetSample(
-          survivors.select("doc_id", "n_chars"), "doc_id", "n_chars",
-          budget = 50000L)
-        .select(col("doc_id"), col("cum_n_chars"))
-      split.join(admitted, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chars"), col("logit"), col("top_cnt"),
-          col("n_pairs"), col("sum_cnt"), col("pred_lang"), col("margin6"),
-          col("pass_lang"), col("pass_neardup"), col("pass_quality"),
-          col("pass_rep"), col("pass_flu"), col("split_train"),
-          coalesce(col("cum_n_chars"), lit(0L)).as("cum_n_chars"),
-          when(col("cum_n_chars").isNotNull, 1L).otherwise(0L).as("admitted"))
-        .orderBy("doc_id")
-    }),
-
-    // HNSW graph ANN (the index tier's graph member): deterministic
-    // md5 levels, per-layer exact-kNN neighbor graph, fixed-hop beam
-    // walk composed as one lazy plan. The graph and levels dump as aux
-    // and DuckDB REPLAYS THE ENTIRE WALK — entry selection, three
-    // greedy descent hops, three beam rounds with the top-16 frontier,
-    // visited-set top-10 — with its own cosine arithmetic (the
-    // q169-style unrolled-iteration oracle applied to graph search).
-    "q181_hnsw" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select("embedding").head.getSeq[Float](0).toArray
-      val idx = new Similarity.HnswIndex(emb, m = 8, maxLevel = 3)
-      writeAux(idx.levels, dir, "q181_levels")
-      writeAux(idx.graph.select("layer", "id", "nbr"), dir, "q181_graph")
-      idx.search(qv, k = 10, ef = 16, hops = 3)
-    }),
-
-    // Sequence packing: docs → fixed-capacity training sequences
-    // (shard by md5, next-fit-decreasing within shard). The oracle
-    // replays the ENTIRE per-shard next-fit fold as a recursive CTE —
-    // every (seq_idx, pos) assignment is integer-re-derived.
-    "q182_seq_packing" -> ((s, dir) =>
-      graft.ops.Sampling.packSequences(
-          t(s, dir, "documents"), "doc_id", "n_chars",
-          capacity = 1024L, nShards = 8)
-        .orderBy("doc_id")),
-
-    // Quality-aware near-dup dedup: the planted +10000 copies carry ONE
-    // extra token, so each near-dup cluster holds a short and a long
-    // member — keepBest (keep longest, tie → min id) must pick the
-    // LONGER planted copy where min-id (q76) would keep the original.
-    // The oracle replays LSH + closure + the per-cluster argmax.
-    "q183_dedup_keep_best" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d.unionByName(
-          d.select((col("doc_id") + 10000).as("doc_id"),
-            concat(col("text"), lit(" zzappendix")).as("text")))
-        .withColumn("qlen", length(col("text")).cast("long"))
-      val pairs = Dedup.minHashNearDups(planted, numHashes = 16, bands = 4,
-        jaccardThreshold = 0.8,
-        signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-        bandHash = c => md5(concat_ws("|", c)),
-        persistShingles = true)
-      Dedup.keepBest(planted, "doc_id", "qlen", pairs)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // JL random projection 64-d → 16-d: deterministic md5-Rademacher
-    // matrix, exact integer sums after one round step — the oracle
-    // rebuilds the matrix from ITS md5 and re-sums every cell.
-    "q184_random_project" -> ((s, dir) =>
-      graft.ops.VectorOps.randomProject(
-          t(s, dir, "embeddings"), dim = 64, outDims = 16)
-        .orderBy("vec_id", "out_dim")),
-
-    // Streaming KLL maintenance: drained stream → merged sketch →
-    // quantile cuts aux-dumped; DuckDB recounts EXACT ranks of every
-    // cut over the events table and re-derives the ε-bound verdict
-    // (the q177 integer-rank pattern on the streaming path).
-    "q185_stream_quantile" -> ((s, dir) => {
-      val k = 256
-      EventsPipeline.drained(s) {
-        EventsPipeline.streamQuantileMaintain(s, dir, "q185_sketch", k = k)
-      }
-      val sk = graft.ops.Profile.quantileSketchMerge(s.table("q185_sketch"), k)
-      val cuts = Seq(250, 500, 900)
-        .map(q => (q, sk.quantile(q / 1000.0).toLong))
-      import s.implicits._
-      val cutsDf = cuts.toDF("q_mille", "cut")
-      writeAux(cutsDf, dir, "q185_cuts")
-      quantileGateCheck(t(s, dir, "events")
-        .select(round(col("value") * 100, 0).cast("long").as("v")), cutsDf, k)
-    }),
-
-    // Incremental HNSW insertion under the frozen-graph discipline:
-    // batch nodes (vec_id % 5 == 0) link into the stored graph (the
-    // other 80%) both directions; stored↔stored untouched, batch↔batch
-    // absent. DuckDB re-derives levels from ITS md5, every batch↔stored
-    // cosine, the per-(layer, node) top-M ranking, and the symmetric
-    // closure — the whole admission, no aux.
-    "q186_hnsw_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val stored = emb.filter(col("vec_id") % 5 =!= 0)
-      val batch = emb.filter(col("vec_id") % 5 === 0)
-      val idx = new Similarity.HnswIndex(stored, m = 8, maxLevel = 3)
-      idx.appendEdges(batch)
-        .orderBy("layer", "id", "nbr")
-    }),
-
-    // Hard-negative mining (contrastive training): top-5 below the
-    // 0.35 paraphrase ceiling per query — the ceiling BITES on this
-    // corpus (most queries' best hit exceeds it). DuckDB re-derives
-    // every cosine, the ceiling cut, and the per-query ranking.
-    "q187_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb,
-          emb.filter(col("vec_id") % 50 === 0),
-          k = 5, posCeiling = 0.35)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Deterministic weighted interleave (WFQ virtual time) at 5:3:1 —
-    // the RNG-free "mix these sources" training order. DuckDB replays
-    // the per-source md5 ranks, the integer virtual times, and the
-    // global (vt, source, id) numbering.
-    "q188_source_interleave" -> ((s, dir) =>
-      graft.ops.Sampling.interleaveBySource(
-          t(s, dir, "documents"), "doc_id", "source",
-          weights = Map("src0" -> 5L, "src1" -> 3L))
-        .orderBy("pos")),
-
-    // Winnowing (MOSS) fingerprint selection: per-window min hash,
-    // rightmost on ties. DuckDB re-derives grams, md5 hashes, every
-    // window's argmin, and the full-window gate.
-    "q189_winnowing" -> ((s, dir) =>
-      TextAnalysis.winnowingFingerprints(
-          t(s, dir, "documents"), "doc_id", "text", k = 3, w = 4)
-        .orderBy("doc_id", "pos", "fp")),
-
-    // Copy-span detection: planted partial copies (words 6-25 behind a
-    // 2-word salt, id+20000) must surface as ONE diagonal with >= 3
-    // shared winnowing fingerprints. DuckDB winnows BOTH corpora and
-    // re-derives the join, the diagonals, and the evidence extents.
-    "q190_copy_spans" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d.select((col("doc_id") + 20000).as("doc_id"),
-        concat_ws(" ", concat(array(lit("zq1"), lit("zq2")),
-          slice(split(col("text"), " "), 6, 20))).as("text"))
-      TextAnalysis.copySpans(d, planted, "doc_id", "text",
-          k = 3, w = 4, minShared = 3)
-        .orderBy("id_left", "id_right", "diag")
-    }),
-
-    // KMV set-overlap sketch: distinct-shingle overlap between two
-    // overlapping corpus halves (docs <300 vs >=200) from two O(k)
-    // sketches — the set-INTERSECTION estimate HLL can't give. DuckDB
-    // re-derives the md5 shingle hashes, both k-smallest sketches, the
-    // union sketch, the matched count, and every integer estimate.
-    "q191_kmv_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def sh(f: Column) = d.filter(f)
-        .select(explode(Dedup.shingles(col("text"), 3)).as("sh"))
-      val ka = graft.ops.Profile.kmvSketch(sh(col("doc_id") < 300), "sh", 128)
-      val kb = graft.ops.Profile.kmvSketch(sh(col("doc_id") >= 200), "sh", 128)
-      graft.ops.Profile.kmvOverlap(ka, kb, 128)
-    }),
-
-    // Distributed full-data k-means (Lloyd's) in exact fixed point —
-    // the scale-out counterpart to the IVF driver-sample fit. DuckDB
-    // replays the md5 init, BOTH unrolled iterations (every distance,
-    // every argmin, every floor-division centroid update), and the
-    // final assignment pass.
-    "q192_kmeans" -> ((s, dir) =>
-      Similarity.kMeans(t(s, dir, "embeddings"), k = 4, iters = 2)._1
-        .orderBy("vec_id")),
-
-    // ExactSubstr REMOVAL (Lee et al. 2022): q157's planted boilerplate
-    // corpus, with the merged repeated-8-gram spans actually excised
-    // from every doc. DuckDB re-derives grams, repeats, merged islands,
-    // the per-token coverage anti-join, and the rebuilt text.
-    "q193_span_removal" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"),
-            lit(" Please subscribe to our newsletter for free updates today")))
-          .otherwise(col("text")).as("text"))
-      graft.ops.Curation.removeRepeatedSpans(planted, "doc_id", "text",
-        k = 8, minDocs = 2).orderBy("doc_id")
-    }),
-
-    // Versioned-index takedown story end-to-end: two upserts, a
-    // forward-looking delete (new snapshot), then a HARD purge of one
-    // id across history. The per-version row counts and membership
-    // probes are all DuckDB re-derivable from `documents` alone —
-    // every input to the snapshot chain is a deterministic filter of it.
-    "q194_snapshot_takedown" -> ((s, dir) => {
-      import s.implicits._
-      // run-unique scratch root (ADVICE r9): two concurrent harness runs
-      // over the same dataset dir must not race on a shared /tmp path.
-      // The per-version probes below are eager counts over a local Seq,
-      // so the tree is removable before the (local) result DF returns.
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_snapshots_demo_").toString
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(base), s.sparkContext.hadoopConfiguration)
-      try {
-        val docs = t(s, dir, "documents")
-          .select(col("doc_id").as("id"), col("text"), col("source"))
-        graft.index.Snapshots.upsertVersioned(s,
-          docs.filter(col("id") < 100), base)
-        graft.index.Snapshots.upsertVersioned(s,
-          docs.filter(col("id").between(50, 149))
-            .withColumn("text", concat(col("text"), lit(" v2"))), base)
-        graft.index.Snapshots.deleteIdsVersioned(s,
-          docs.filter(col("id") % 10 === 0).select("id"), base)
-        graft.index.Snapshots.purgeIds(s,
-          docs.filter(col("id") === 7).select("id"), base)
-        graft.index.Snapshots.versions(s, base).map { v =>
-          val d = graft.index.Snapshots.readVersion(s, base, v)
-          (v, d.count(),
-            d.filter(col("id") % 10 === 0).count(),
-            d.filter(col("id") === 7).count(),
-            d.filter(col("text").endsWith(" v2")).count())
-        }.toDF("version", "n_rows", "n_mod10", "n_id7", "n_v2")
-          .orderBy("version")
-      } finally fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    }),
-
-    // Sketch-derived balanced range sharding: the repartitionByRange
-    // boundary-sampling step made deterministic via the KLL sketch.
-    // Cuts are aux-dumped; DuckDB re-derives every row's shard from
-    // them exactly and recomputes the per-shard profile.
-    "q195_range_shards" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val bounds = graft.ops.Layout.rangeShardBounds(d, "n_chars",
-        nShards = 8, k = 256)
-      writeAux(bounds.zipWithIndex
-        .map { case (c, i) => (i.toLong + 1, c) }.toSeq.toDF("idx", "cut"),
-        dir, "q195_cuts")
-      graft.ops.Layout.assignRangeShards(d, "n_chars", bounds)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_rows"), min("n_chars").as("min_v"),
-          max("n_chars").as("max_v"))
-        .orderBy("shard")
-    }),
-
-    // Video near-dup with the q190 seed-diagonal trick on REAL decoded
-    // frame hashes: twins (id+30000) carry ONE junk lead-in frame (a
-    // time shift) and a perturbed middle frame — the pair must surface
-    // on diagonal +1 with all 5 frames matched. Per-frame dHashes are
-    // aux-dumped; DuckDB re-derives banding, XOR popcount, and the
-    // diagonal grouping.
-    "q196_video_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id") % 25 === 0)
-      val vids = base.select(col("doc_id").as("vid_id"),
-          graft.ops.Multimodal.renderTestVideoUdf(
-            expr("CAST(doc_id div 25 AS BIGINT)"), lit(5), lit(0), lit(-1))
-            .as("content"))
-        .unionByName(base.filter(col("doc_id") % 50 === 0)
-          .select((col("doc_id") + 30000).as("vid_id"),
-            graft.ops.Multimodal.renderTestVideoUdf(
-              expr("CAST(doc_id div 25 AS BIGINT)"), lit(5), lit(1), lit(2))
-              .as("content")))
-      writeAux(graft.ops.Multimodal.videoFrameSigs(vids, "vid_id",
-        "content", 1), dir, "q196_frame_sigs")
-      graft.ops.Multimodal.videoNearDupPairs(vids, "vid_id", "content",
-          every = 1, maxDist = 4, minMatch = 2)
-        .orderBy("id_left", "id_right", "diag")
-    }),
-
-    // Citation-authority composite — the lawlm-thematic end-to-end:
-    // citations planted by doc arithmetic, extracted by the REAL
-    // LegalExtract regex tier (the oracle derives the same edges from
-    // the arithmetic alone, so any extraction miss/extra breaks the
-    // hash), volume numbers resolve to target docs, and the citation
-    // graph ranks through the integer-exact PageRank. One narrow
-    // extraction pass; the graph lives on the 40-node dimension.
-    "q197_citation_authority" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val d = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("src"), col("text"))
-      val planted = d.withColumn("text", concat(col("text"),
-        lit(" See "),
-        (lit(100) + (col("src") * col("src") + 13) % 40).cast("string"),
-        lit(" U.S. "),
-        (lit(200) + (col("src") * col("src") + 13) % 40).cast("string"),
-        lit(" (1990). Accord "),
-        (lit(100) + (col("src") * 7 + 3) % 40).cast("string"),
-        lit(" U.S. "),
-        (lit(200) + (col("src") * 7 + 3) % 40).cast("string"),
-        lit(" (1991).")))
-      val edges = planted
-        .select(col("src"),
-          explode(call_function("extract_citations", col("text"))).as("cite"))
-        .select(col("src"),
-          (regexp_extract(col("cite"), "^(\\d+)", 1).cast("long") - 100)
-            .as("dst"))
-        .filter(col("dst") >= 0 && col("dst") < 40 &&
-          col("src") =!= col("dst"))
-        .distinct()
-      graft.ops.GraphOps.pageRankFixedPoint(edges, iters = 3)
-    }),
-
-    // Per-source vocabulary-overlap matrix from per-group KMV sketches
-    // (built through the bounded-heap TopKPerKey plan): one row per
-    // source pair with union/intersection/Jaccard estimates. DuckDB
-    // re-derives tokens, hashes, every per-group top-64, each pair's
-    // union sketch, and all the integer estimates.
-    "q198_source_overlap" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.ops.Curation.tokens(col("text"))).as("tok"))
-      graft.ops.Profile.kmvOverlapMatrix(
-        graft.ops.Profile.kmvSketchGrouped(toks, "tok", "source", 64), 64)
-        .orderBy("g1", "g2")
-    }),
-
-    // LSH banding efficiency audit on the q33 planted corpus: per band,
-    // buckets formed, candidate pairs proposed, exact-Jaccard survivors,
-    // integer precision — the measurement behind choosing (numHashes,
-    // bands). DuckDB re-derives everything from the shared MinHash CTEs.
-    "q199_lsh_band_audit" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val planted = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
-      Dedup.lshBandAudit(planted, numHashes = 16, bands = 4,
-        jaccardThreshold = 0.8,
-        signature = (sh, n) => Dedup.md5MinHashSignatureUdf(n)(sh),
-        bandHash = c => md5(concat_ws("|", c)))
-        .orderBy("band_id")
-    }),
-
-    // Deterministic synchronous label propagation (communities, not
-    // just connectivity) on four 10-node ring+chord blocks joined by
-    // single bridges — DuckDB replays both synchronous rounds: every
-    // neighbor-label count and every (count desc, label asc) argmax.
-    "q200_label_propagation" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val edges = n
-        .selectExpr("n AS src", "(n div 10) * 10 + (n % 10 + 1) % 10 AS dst")
-        .unionByName(n.selectExpr("n AS src",
-          "(n div 10) * 10 + (n % 10 + 2) % 10 AS dst"))
-        .unionByName(n.filter(col("n") % 10 === 9)
-          .selectExpr("n AS src", "(n + 1) % 40 AS dst"))
-      graft.ops.GraphOps.labelPropagation(edges, iters = 2).orderBy("id")
-    }),
-
-    // Confidence-ranked multi-probe LSH (Lv et al. 2007): a probe
-    // budget of 4 spent on the LEAST-confident hyperplanes first. The
-    // probe list and bucket assignments are aux-dumped; DuckDB verifies
-    // the pruned scan's exact top-k independently.
-    "q201_multiprobe_lsh" -> ((s, dir) => {
-      import s.implicits._
-      val e = t(s, dir, "embeddings")
-      val q = queryVector(e)
-      val idx = new Similarity.RandomHyperplaneIndex(e, nBits = 8, dim = 64)
-      writeAux(idx.bucketed.select("vec_id", "bucket"), dir, "q201_buckets")
-      writeAux(idx.probeBucketsRanked(q, probes = 4).toDF("bucket"),
-        dir, "q201_probes")
-      idx.queryRanked(q, k = 10, probes = 4)
-        .select("vec_id", "bucket", "cos")
-    }),
-
-    // Distributed recall@10 audit of the multi-probe LSH index over a
-    // 20-query table: ANN and brute top-k both through TopKPerKey,
-    // probe sets exploded relationally. Bucket assignments and the
-    // per-query probe sets are aux-dumped; DuckDB recomputes EVERY
-    // cosine, both top-k rankings, and each query's recall.
-    "q202_ann_recall_audit" -> ((s, dir) => {
-      import s.implicits._
-      val e = t(s, dir, "embeddings")
-      val idx = new Similarity.RandomHyperplaneIndex(e, nBits = 8, dim = 64)
-      val queries = e.filter(col("vec_id") % 25 === 0)
-      val probeRows = queries.select("vec_id", "embedding").collect().flatMap { r =>
-        idx.probeBucketsRanked(r.getSeq[Float](1).toArray, 4)
-          .map(b => (r.getLong(0), b))
-      }.toSeq
-      writeAux(idx.bucketed.select("vec_id", "bucket"), dir, "q202_buckets")
-      writeAux(probeRows.toDF("qid", "bucket"), dir, "q202_probes")
-      idx.recallAudit(queries, k = 10, probes = 4).orderBy("query_id")
-    }),
-
-    // Hybrid search with the dense branch served by a prebuilt IVF
-    // index (the 100 TB serving path: nProbe cells scanned, not the
-    // corpus). Unlike q35 (dense branch taken as given), the ORACLE
-    // re-derives the dense branch too — cell membership, every cosine
-    // in the probed cells, the pruned top-25 — plus BM25 and fusion,
-    // from the aux-dumped assignments/probes/query vector.
-    "q203_hybrid_ann" -> ((s, dir) => {
-      import s.implicits._
-      val (index, stats) = chunkIndex(s, dir)
-      val (n, avgLen, ivf) = Phase("build") {
-        (index.count(),
-          index.select(avg(size(col("tokens")))).first().getDouble(0),
-          new Similarity.IvfIndex(index, nCentroids = 8,
-            vecCol = "dense_vec", idCol = "id"))
-      }
-      val cfg = HybridSearch.Config(k = 5)
-      val qText = "filter join scan vector"
-      val qVec = graft.embed.HashingEmbedder.default.embedQuery(qText)
-      writeAux(index.select("id", "chunk_id", "tokens", "dense_vec"),
-        dir, "q203_index")
-      writeAux(ivf.assigned.select("id", "centroid"), dir, "q203_assign")
-      writeAux(ivf.probeCells(qVec, 4).toDF("centroid"), dir, "q203_probes")
-      writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q203_qvec")
-      HybridSearch.search(index, stats, n, avgLen, qText, cfg,
-          dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4))
-        .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
-    }),
-
-    // WordPiece (BERT-family) greedy longest-match segmentation over a
-    // frequency-ranked piece vocab; a planted 'q~z' word (the '~' never
-    // occurs in the corpus) exercises the whole-word [UNK] rule. The
-    // vocab is aux-dumped; DuckDB replays EVERY word's greedy walk as a
-    // recursive CTE.
-    "q204_wordpiece" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val vocab = TextAnalysis.buildWordPieceVocab(d, "text", 300, 400)
-      writeAux(vocab, dir, "q204_vocab")
-      val pieces = vocab.select("piece").collect().map(_.getString(0)).toSeq
-      val words = d.filter(col("doc_id") < 50)
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
-        .filter(length(col("word")) > 0).distinct()
-        .unionByName(Seq("q~z").toDF("word"))
-      words.withColumn("pieces", concat_ws(" ",
-          TextAnalysis.wordPieceEncodeUdf(pieces)(col("word"))))
-        .orderBy("word")
-    }),
-
-    // ROUGE-2 with clipped multiset counts (Lin 2004) between two
-    // overlapping slices of every doc — exact integer match counts and
-    // per-mille precision/recall, fully re-derived by DuckDB.
-    "q205_rouge" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = d.select(col("doc_id"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 20)).as("cand"),
-        concat_ws(" ", slice(split(col("text"), " "), 5, 26)).as("ref"))
-      TextAnalysis.rougeN(pairs, "doc_id", "cand", "ref", n = 2)
-        .orderBy("id")
-    }),
-
-    // Deterministic T5-style span corruption: md5-gated length-3 spans
-    // collapse to numbered sentinels, targets carry the masked tokens.
-    // DuckDB re-derives every masking decision, both rebuilt strings,
-    // and the sentinel numbering.
-    "q206_span_corrupt" -> ((s, dir) =>
-      graft.ops.Curation.spanCorrupt(t(s, dir, "documents"), "doc_id",
-        "text", spanLen = 3, maskPm = 250).orderBy("doc_id")),
-
-    // Semantic decontamination: the eval split (vec_id % 50 == 0)
-    // broadcasts into one codegen cosine pass over the train side;
-    // pairs at cos >= 0.35 flag. DuckDB recomputes every train x eval
-    // cosine and the threshold cut.
-    "q207_semantic_decontam" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.ops.Curation.semanticContamination(
-          e.filter(col("vec_id") % 50 =!= 0), e.filter(col("vec_id") % 50 === 0),
-          "vec_id", "embedding", minCos = 0.35)
-        .orderBy("doc_id", "eval_id")
-    }),
-
-    // Embedding-space outlier audit on the q192 k-means fit: a point
-    // flags when dist2 · n_cluster > 4 · sum_cluster — exact integer
-    // cross-multiplication, no mean ever materialized. DuckDB replays
-    // the whole fit (the shared q192 CTE chain) plus the flag rule.
-    "q208_embedding_outliers" -> ((s, dir) =>
-      Similarity.embeddingOutliers(t(s, dir, "embeddings"), k = 4,
-          iters = 2, factor = 4)
-        .orderBy("vec_id")),
-
-    // TPC-H Q18 shape (large-quantity orders): HAVING-gated aggregate
-    // feeding a semi-join back into the customer⋈orders star — the
-    // third classic optimizer shape next to q127 (Q3) and q128 (Q10).
-    // Declarative; Catalyst plans the semi-join and the partial aggs.
-    "q209_large_orders" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val big = li.groupBy("l_orderkey")
-        .agg(sum("l_quantity").as("sum_qty"))
-        .filter(col("sum_qty") > 300)
-      t(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("o_orderkey"),
-          cents(col("o_totalprice")).as("total_cents"),
-          col("sum_qty").cast("long").as("sum_qty"))
-        .orderBy(desc("total_cents"), col("o_orderkey"))
-        .limit(20)
-    }),
-
-    // Release datasheet: the per-language + corpus-wide numbers a
-    // dataset card ships with (docs, tokens, chars, exact-unique
-    // digests, char bounds) in ONE rollup pass — exact integers only.
-    "q210_release_datasheet" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("n_toks",
-          size(split(trim(col("text")), "\\s+")).cast("long"))
-        .withColumn("dig", md5(col("text")))
-        .rollup("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
-          sum("n_chars").as("sum_chars"),
-          countDistinct(col("dig")).as("n_unique"),
-          min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
-        .select(coalesce(col("lang"), lit("__all__")).as("lang"),
-          col("n_docs"), col("n_tokens"), col("sum_chars"),
-          col("n_unique"), col("min_chars"), col("max_chars"))
-        .orderBy("lang")),
-
-    // Distributed HNSW build: LSH-seeded NN-descent — the at-scale swap
-    // for q181's broadcast block pass; NO corpus-sized collect or
-    // broadcast anywhere on the path (asserted by SimilaritySpec).
-    // Graph + levels aux-dumped; DuckDB replays the SAME beam walk over
-    // the descent-built graph and re-derives the brute-force top-10 to
-    // grade every hit — the recall evidence rides in the hash-matched
-    // `in_brute` column.
-    "q211_hnsw_nndescent" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select("embedding").head.getSeq[Float](0).toArray
-      val idx = new Similarity.HnswIndex(emb, m = 8, maxLevel = 3,
-        build = "nndescent")
-      writeAux(idx.levels, dir, "q211_levels")
-      writeAux(idx.graph.select("layer", "id", "nbr"), dir, "q211_graph")
-      val brute = Similarity.bruteForceTopK(emb, qv, 10)
-        .select(col("vec_id"), lit(1L).as("in_brute"))
-      idx.search(qv, k = 10, ef = 16, hops = 3)
-        .join(brute, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cos"),
-          coalesce(col("in_brute"), lit(0L)).as("in_brute"))
-        .orderBy(desc("cos"), col("vec_id"))
-    }),
-
-    // Batched BPE training (round-9 scale fix: top-B symbol-disjoint
-    // merges per aggregate round instead of one driver round-trip per
-    // merge). NOTHING is aux-echoed: DuckDB replays the ENTIRE training
-    // — per-round pair counts, the ranked 8·B candidate window, the
-    // greedy non-conflicting selection (a recursive walk over ranks),
-    // and the one-pass merge application (a recursive fold per word) —
-    // and must land on the identical ranked vocabulary.
-    "q212_bpe_batched" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 40)
-      TextAnalysis.bpeTrain(docs, "text", numMerges = 4, batch = 2)
-        .zipWithIndex.map { case ((a, b), i) => ((i + 1).toLong, a, b) }
-        .toDF("merge_rank", "lhs", "rhs")
-    }),
-
-    // TRAINED language-ID (fastText-style hashed char-bigram profiles —
-    // the CCNet/RefinedWeb first gate as a model, not the q29 stopword
-    // heuristic): three planted 'languages' derived deterministically
-    // from documents (as-is / vowels→z / reversed), profiles trained on
-    // doc_id < 200, docs 200-299 classified with argmax + margin.
-    // DuckDB re-derives the ENTIRE model — padded bigrams, md5 buckets,
-    // per-cell micro-log weights, floors, additive scores, argmax and
-    // margin. No aux.
-    "q213_langid_trained" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val lang = when(col("doc_id") % 3 === 0, "en")
-        .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-      val variant = when(col("doc_id") % 3 === 0, col("text"))
-        .when(col("doc_id") % 3 === 1,
-          translate(col("text"), "aeiou", "zzzzz"))
-        .otherwise(reverse(col("text")))
-      val labeled = d.filter(col("doc_id") < 200)
-        .select(lang.as("lang"), variant.as("text"))
-      val profile = TextAnalysis.langIdTrain(labeled, buckets = 1024)
-      val test = d.filter(col("doc_id").between(200, 299))
-        .select(col("doc_id"), variant.as("text"))
-      TextAnalysis.langIdClassify(test, profile, buckets = 1024)
-        .orderBy("doc_id")
-    }),
-
-    // Hybrid search with the dense branch served by the prebuilt HNSW
-    // graph walk (q203's IVF sibling — the graph member of the ANN
-    // serving tier, built DISTRIBUTED by q211's NN-descent). The
-    // oracle replays the walk over the aux graph (surrogate hid keys),
-    // routes hits back to chunk ids, and re-derives BM25 + RRF fusion.
-    "q215_hybrid_hnsw" -> ((s, dir) => {
-      import s.implicits._
-      val (index, stats) = chunkIndex(s, dir)
-      val (n, avgLen, hs) = hnswBuild(index)
-      val cfg = HybridSearch.Config(k = 5)
-      val qText = "filter join scan vector"
-      val qVec = graft.embed.HashingEmbedder.default.embedQuery(qText)
-      writeAux(hs.idMap.join(index, "id")
-        .select("hid", "id", "chunk_id", "tokens", "dense_vec"),
-        dir, "q215_index")
-      writeAux(hs.hnsw.levels, dir, "q215_levels")
-      writeAux(hs.hnsw.graph.select("layer", "id", "nbr"), dir, "q215_graph")
-      writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q215_qvec")
-      HybridSearch.search(index, stats, n, avgLen, qText, cfg,
-          dense = HybridSearch.Dense.Hnsw(hs))
-        .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
-    }),
-
-    // Unigram-LM (SentencePiece-style) tokenizer — the third tokenizer
-    // family (BPE q161/q212, WordPiece q204): hard-EM-trained piece
-    // vocab (spec-gated monotone), Viterbi max-likelihood encode with
-    // lexicographic tie-break. The vocab dumps as aux; DuckDB replays
-    // the Viterbi WALK per word by enumerating every segmentation path
-    // (recursive CTE) and taking the identical argmax.
-    "q214_unigram_lm" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val vocab = TextAnalysis.unigramTrain(d, "text", vocabSize = 30,
-        iters = 2, maxPieceLen = 4)
-      writeAux(vocab.select("piece", "w6"), dir, "q214_vocab")
-      TextAnalysis.unigramEncodeWords(d, "text", vocab).orderBy("word")
-    }),
-
-    // Corpus-wide winsorization with KLL-sketch bounds (q177's sketch
-    // as the bounds provider — the q195 sketch-driven move applied to
-    // cleaning; exact per-group percentiles can't sort a 100 TB
-    // corpus). The cuts dump as aux; DuckDB replays EVERY clamp
-    // decision from them and independently verifies each cut sits
-    // within the sketch's rank-error contract (±⌈6N/k⌉ ranks of its
-    // target — the q185 in_bound pattern).
-    "q216_winsorize_sketched" -> ((s, dir) => {
-      import s.implicits._
-      val k = 64
-      val d = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
-      val w = graft.ops.Cleaning.winsorizeSketched(d, "n_chars",
-        lo = 0.05, hi = 0.95, k = k)
-      val cuts = w.select("n_chars_lo_cut", "n_chars_hi_cut").head
-      val (loCut, hiCut) = (cuts.getDouble(0), cuts.getDouble(1))
-      writeAux(Seq((loCut, hiCut)).toDF("lo_cut", "hi_cut"), dir, "q216_cuts")
-      val n = d.count()
-      val nLeLo = d.filter(col("n_chars") <= loCut).count()
-      val nLeHi = d.filter(col("n_chars") <= hiCut).count()
-      val slack = (6 * n + k - 1) / k
-      def inBound(nLe: Long, qMille: Long): Long = {
-        val target = (qMille * n + 999) / 1000
-        if (nLe >= target - slack && nLe <= target + slack) 1L else 0L
-      }
-      w.select(col("doc_id"), col("n_chars"),
-          col("n_chars_wins"),
-          when(col("n_chars") < loCut, -1L)
-            .when(col("n_chars") > hiCut, 1L).otherwise(0L).as("clamped"),
-          lit(inBound(nLeLo, 50)).as("in_bound_lo"),
-          lit(inBound(nLeHi, 950)).as("in_bound_hi"))
-        .orderBy("doc_id")
-    }),
-
-    // DISTRIBUTED frozen-graph admission (q186 without the stored-
-    // corpus broadcast): batch nodes link into an NN-descent-built
-    // stored graph via LSH candidates + graph-expansion rounds —
-    // batch↔batch links impossible by construction, nothing
-    // corpus-sized collected. The q202-style audit: admitted edges
-    // dump as aux, DuckDB re-derives the EXACT brute-force stored
-    // top-16 per batch node from raw vectors and grades the admission
-    // — per-node recall is the hash-matched record.
-    "q217_hnsw_admit_dist" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val stored = emb.filter(col("vec_id") % 5 =!= 0)
-      val batch = emb.filter(col("vec_id") % 5 === 0)
-      val idx = new Similarity.HnswIndex(stored, m = 8, maxLevel = 3,
-        build = "nndescent")
-      val added = idx.appendEdgesDistributed(batch).localCheckpoint()
-      writeAux(added.select("layer", "id", "nbr"), dir, "q217_edges")
-      val fwd = added.filter(col("layer") === 0)
-        .join(batch.select(col("vec_id").as("id")), Seq("id"), "left_semi")
-        .select("id", "nbr")
-      val brute = stored.select(col("vec_id").as("cid"),
-          col("embedding").as("cv"))
-        .crossJoin(broadcast(batch.select(col("vec_id").as("qid"),
-          col("embedding").as("qv"))))
-        .withColumn("cos",
-          round(GraftFunctions.vecCosine(col("cv"), col("qv")), 6))
-        .select("qid", "cid", "cos")
-      val bruteK = graft.plans.TopK.perKey(brute, Seq("qid"),
-        Seq(("cos", false), ("cid", true)), 16).select("qid", "cid")
-      val hits = fwd.join(bruteK,
-          col("id") === col("qid") && col("nbr") === col("cid"))
-        .groupBy("id").agg(count(lit(1)).as("n_hit"))
-      val nAdmit = fwd.groupBy("id").agg(count(lit(1)).as("n_admit"))
-      batch.select(col("vec_id"))
-        .join(nAdmit.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-        .join(hits.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("n_admit"), lit(0L)).as("n_admit"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          expr("coalesce(n_hit, 0L) * 1000 div 16").as("recall_pm"))
-        .orderBy("vec_id")
-    }),
-
-    // Incremental language-ID maintenance: per-batch (lang, bucket, c)
-    // counts are ADDITIVE, so a profile derived from UNIONED batch
-    // counts is bit-identical to full-corpus training — no sketch, no
-    // error term. Proven by classifying with the incrementally-built
-    // profile and hash-matching q213's FULL-training oracle verbatim.
-    "q218_langid_incremental" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val lang = when(col("doc_id") % 3 === 0, "en")
-        .when(col("doc_id") % 3 === 1, "zz").otherwise("qq")
-      val variant = when(col("doc_id") % 3 === 0, col("text"))
-        .when(col("doc_id") % 3 === 1,
-          translate(col("text"), "aeiou", "zzzzz"))
-        .otherwise(reverse(col("text")))
-      val labeled = d.filter(col("doc_id") < 200)
-        .select(col("doc_id"), lang.as("lang"), variant.as("text"))
-      val c1 = TextAnalysis.langIdCounts(
-        labeled.filter(col("doc_id") < 100), buckets = 1024)
-      val c2 = TextAnalysis.langIdCounts(
-        labeled.filter(col("doc_id") >= 100), buckets = 1024)
-      val profile = TextAnalysis.langIdProfileFromCounts(
-        c1.unionByName(c2), buckets = 1024)
-      val test = d.filter(col("doc_id").between(200, 299))
-        .select(col("doc_id"), variant.as("text"))
-      TextAnalysis.langIdClassify(test, profile, buckets = 1024)
-        .orderBy("doc_id")
-    }),
-
-    // Batch-perceptron TRAINING of the linear quality gate (the q95
-    // fixed weights, now fit on labeled seeds) — every iteration is
-    // one integer aggregate, and DuckDB replays the full weight
-    // history: per-iteration misclassified sets, Σ y·x updates, and
-    // counts, all exact integers (the kmeans unrolled-iteration
-    // discipline applied to a trained filter).
-    "q219_perceptron" -> ((s, dir) =>
-      graft.ops.Curation.perceptronTrain(
-        t(s, dir, "documents").select(col("text"),
-          when(col("n_chars") >= 250, 1L).otherwise(-1L).as("label")),
-        "label", "text", iters = 3)
-        .orderBy("iter")),
-
-    // One-pass multi-term scan (Aho–Corasick): occurrence counts of a
-    // derived term list (top-5 corpus words + a 2-char prefix term that
-    // hits INSIDE words — overlap semantics) in ONE automaton pass per
-    // doc, vs one corpus scan per term for contains/LIKE. DuckDB
-    // re-derives the term list and counts every position-level match
-    // independently — overlapping occurrences included.
-    "q220_multi_term_scan" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val top = d.select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        .orderBy(desc("c"), asc("w")).limit(5)
-        .select("w").collect().map(_.getString(0)).toSeq
-      // take(2) degrades to the 1-char word itself (dedup'd) exactly
-      // like the oracle's substr(w, 1, 2) — substring(0, 2) would throw
-      val terms = (top :+ top.head.take(2)).distinct
-      TextAnalysis.ahoCorasickScan(
-          d.select(col("doc_id"), lower(col("text")).as("text")),
-          "doc_id", "text", terms)
-        .orderBy("doc_id", "term")
-    }),
-
-    // Generation-diversity eval: distinct-1/distinct-2 per doc (unique
-    // vs total word n-grams, per-mille) — the degenerate-repetition
-    // signature metric. Fully re-derived by DuckDB.
-    "q221_distinct_n" -> ((s, dir) =>
-      TextAnalysis.distinctN(t(s, dir, "documents"), "doc_id", "text",
-          ns = Seq(1, 2))
-        .orderBy("doc_id", "n")),
-
-    // CCNet-style perplexity bucketing: the q165 LM scores folded into
-    // head/middle/tail terciles by mean micro-log-prob (higher mean =
-    // lower perplexity = head). ntile's input is the narrow
-    // (doc_id, mean) frame — never the corpus; at extreme scale the
-    // cuts come from the KLL sketch instead (the q216 move). DuckDB
-    // replays scoring, means, and the tercile assignment.
-    "q222_ppl_buckets" -> ((s, dir) => {
-      val scored = TextAnalysis.stupidBackoffScores(
-        t(s, dir, "documents"), trainPred = col("doc_id") % 2 === 0)
-      scored.select(col("doc_id"), col("n_tri"), col("sum_lp6"),
-          round(col("sum_lp6").cast("double") / col("n_tri"), 6)
-            .as("mean_lp6"))
-        .withColumn("bucket",
-          ntile(3).over(Window.orderBy(desc("mean_lp6"), col("doc_id")))
-            .cast("long"))
-        .orderBy("doc_id")
-    }),
-
-    // Asymmetric CONTAINMENT join (excerpt/quotation detection): docs
-    // ≡ 5 mod 11 get a planted 12-word excerpt (+20000) — near-zero
-    // Jaccard against the source (q172's symmetric join is blind to
-    // it), containment 1000‰. DuckDB re-derives shingles, rarity
-    // order, the contained-side-only prefix, candidates, and every
-    // exact containment verification.
-    "q223_containment_join" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = d.select(col("doc_id"), col("text")).unionByName(
-        d.filter(col("doc_id") % 11 === 5)
-          .select((col("doc_id") + 20000).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), 1, 12)).as("text")))
-      Dedup.containmentJoin(planted, "doc_id", "text",
-          shingleK = 5, tNum = 4, tDen = 5)
-        .orderBy("id_small", "id_big")
-    }),
-
-    // Type-2 SCD dimension build: orders as a per-customer status
-    // change log → effective intervals. One window pass partitioned by
-    // the dimension key; DuckDB replays the change-collapse, interval
-    // close, and versioning with the same window functions.
-    "q224_scd2_dim" -> ((s, dir) => {
-      val log = t(s, dir, "orders").select(
-        col("o_custkey").as("custkey"), col("o_orderdate").as("ts"),
-        col("o_orderkey").as("seq"), col("o_orderstatus").as("status"))
-      graft.ops.Scd.scd2Build(log, "custkey", "ts", "seq", Seq("status"))
-        .select(col("custkey"), col("status"),
-          date_format(col("effective_from"), "yyyy-MM-dd HH:mm:ss")
-            .as("eff_from"),
-          date_format(col("effective_to"), "yyyy-MM-dd HH:mm:ss")
-            .as("eff_to"),
-          col("version"), col("is_current"))
-        .orderBy("custkey", "version")
-    }),
-
-    // Point-in-time join against the q224 dimension: every lineitem
-    // picks the status its customer's latest order-status change held
-    // AT SHIP TIME (not today's value — the leakage-free feature
-    // lookup). Equi-join on custkey with the interval residual; a
-    // key's intervals are disjoint, so no post-dedup. DuckDB replays
-    // dimension build and interval lookup.
-    "q225_pit_join" -> ((s, dir) => {
-      val log = t(s, dir, "orders").select(
-        col("o_custkey").as("custkey"), col("o_orderdate").as("ts"),
-        col("o_orderkey").as("seq"), col("o_orderstatus").as("status"))
-      val dim = graft.ops.Scd.scd2Build(log, "custkey", "ts", "seq",
-        Seq("status"))
-      val fact = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").select(col("o_orderkey"),
-          col("o_custkey")), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("o_custkey").as("custkey"), col("l_shipdate").as("ship_ts"))
-      graft.ops.Scd.pitJoin(fact, dim, "custkey", "ship_ts", Seq("status"))
-        .select(col("l_orderkey"), col("l_linenumber").cast("long"),
-          col("custkey"),
-          date_format(col("ship_ts"), "yyyy-MM-dd HH:mm:ss").as("ship_ts"),
-          col("status").as("status_at_ship"))
-        // (orderkey, linenumber) is not unique in the synthetic
-        // lineitem — ship_ts completes the total order
-        .orderBy("l_orderkey", "l_linenumber", "ship_ts")
-    }),
-
-    // Snapshot version diff — the takedown-audit primitive: build the
-    // q194-style chain (create, overlapping upsert, forward delete),
-    // then prove exactly what each version bump changed. The diff is
-    // one full-outer join per version pair; every input to the chain is
-    // a deterministic filter of `documents`, so DuckDB derives the
-    // added/changed/removed sets from the table alone. The tiny audit
-    // result is collected locally so the scratch chain can be removed
-    // before the result DF is consumed.
-    "q226_snapshot_diff" -> ((s, dir) => {
-      import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_snapdiff_").toString
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(base), s.sparkContext.hadoopConfiguration)
-      try {
-        val docs = t(s, dir, "documents")
-          .select(col("doc_id").as("id"), col("text"), col("source"))
-        graft.index.Snapshots.upsertVersioned(s,
-          docs.filter(col("id") < 100), base)
-        graft.index.Snapshots.upsertVersioned(s,
-          docs.filter(col("id").between(50, 149))
-            .withColumn("text", concat(col("text"), lit(" v2"))), base)
-        graft.index.Snapshots.deleteIdsVersioned(s,
-          docs.filter(col("id") % 10 === 0).select("id"), base)
-        def tagged(a: Long, b: Long) =
-          graft.index.Snapshots.snapshotDiff(s, base, a, b)
-            .select(lit(a).as("from_v"), lit(b).as("to_v"), col("id"),
-              col("change"))
-        tagged(1, 2).unionByName(tagged(2, 3))
-          .orderBy("from_v", "id")
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getString(3)))
-          .toDF("from_v", "to_v", "id", "change")
-      } finally fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    }),
-
-    // k-core decomposition (iterative peeling) on a planted graph that
-    // exercises the iteration: a chorded ring (degree 4, survives
-    // k = 2 untouched), a pendant chain hanging off it (unravels ONE
-    // node per round — 7 rounds to strip), and an isolated triangle
-    // (degree 2, survives). DuckDB replays all 9 unrolled peel rounds.
-    "q227_kcore" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 40).as("n")).distinct()
-      val edges = n.filter(col("n") < 10)
-          .selectExpr("n AS src", "(n + 1) % 10 AS dst")
-        .unionByName(n.filter(col("n") < 10)
-          .selectExpr("n AS src", "(n + 2) % 10 AS dst"))
-        .unionByName(n.filter(col("n").between(10, 15))
-          .selectExpr("n AS src", "n + 1 AS dst"))
-        .unionByName(n.filter(col("n") === 10)
-          .selectExpr("n AS src", "CAST(0 AS BIGINT) AS dst"))
-        .unionByName(n.filter(col("n").between(30, 32))
-          .selectExpr("n AS src", "30 + (n + 1 - 30) % 3 AS dst"))
-      graft.ops.GraphOps.kCore(edges, k = 2, iters = 9).orderBy("id")
-    }),
-
-    // Purged time-series k-fold with embargo (leakage-free CV): folds
-    // are contiguous time blocks over (o_orderdate, o_orderkey); for
-    // each test fold, train rows within 30 days of the fold's span are
-    // purged. Full k×n audit grid; DuckDB re-derives fold assignment
-    // (ntile ≡ the two-pass rank formula), spans, and every role.
-    "q228_purged_folds" -> ((s, dir) => {
-      graft.ops.Sampling.purgedTimeFolds(
-          t(s, dir, "orders").select("o_orderkey", "o_orderdate"),
-          "o_orderkey", "o_orderdate", k = 3,
-          embargoExpr = "INTERVAL 30 DAYS")
-        .select(col("test_fold"), col("o_orderkey"), col("role"))
-        .orderBy("test_fold", "o_orderkey")
-    }),
-
-    // Annotation-conflict audit: near-identical embeddings (cos ≥ 0.3,
-    // the corpus' planted near-dup tier) carrying DIFFERENT labels —
-    // the contradiction dedup alone never surfaces. DuckDB re-derives
-    // pairs, the symmetric neighbor graph, per-neighbor label counts,
-    // the majority vote with its tie-break, and the flag rule.
-    "q229_label_conflict" -> ((s, dir) => {
-      graft.ops.Similarity.labelConflictAudit(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "label", threshold = 0.3)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          col("n_nbrs"), col("n_conflict"),
-          col("suggested_label").cast("long").as("suggested_label"))
-        .orderBy("vec_id")
-    }),
-
-    // t-closeness — the third privacy rung after q129 (k-anonymity)
-    // and q143 (l-diversity): rows whose quasi-group's sensitive-value
-    // distribution sits > t = 1/4 total-variation from the corpus-wide
-    // one. All-integer cross-multiplication; DuckDB re-derives counts,
-    // the folded absent-value term, the flag rule, and tv_pm.
-    "q230_t_closeness" -> ((s, dir) =>
-      graft.ops.Curation.tClosenessRisk(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          col("source"),
-          expr("CAST(n_chars div 500 AS BIGINT)").as("size_bin")),
-        Seq("source", "size_bin"), "lang", tNum = 1, tDen = 4)
-        .select("doc_id", "lang", "source", "size_bin", "group_n", "tv_pm")
-        .orderBy("doc_id")),
-
-    // Join-fanout pre-flight: the audit you run BEFORE a 100 TB equi-
-    // join — per-key counts both sides, output contribution, estimated
-    // total cardinality, per-mille shares, top-20 hot keys. Key-count
-    // tables only; the payload never moves. DuckDB re-derives it all.
-    "q231_join_fanout" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Skew.joinFanoutAudit(
-        t(s, dir, "lineitem"), "l_suppkey",
-        t(s, dir, "supplier"), "s_suppkey", topN = 20)),
-
-    // Per-key watermark lateness audit: events ≡ 3 mod 7 get their
-    // EVENT time shifted 1 h earlier (arrival order untouched) — the
-    // out-of-order tail every real ingest has; the audit measures each
-    // late event's lag behind its user's running high-water mark and
-    // grades two candidate watermark delays. DuckDB replays the
-    // running max, the exact micro lags, and both drop verdicts.
-    "q232_lateness_audit" -> ((s: SparkSession, dir: String) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts")
-        .withColumn("ts", when(col("event_id") % 7 === 3,
-          col("ts") - expr("INTERVAL 1 HOUR")).otherwise(col("ts")))
-      graft.streaming.EventsPipeline.latenessAudit(ev, "user_id",
-          "event_id", "ts", Seq(1800L, 7200L))
-        .select(col("user_id"), col("event_id"), col("late_us"),
-          col("dropped_1800s"), col("dropped_7200s"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // DoReMi-shaped domain mixture reweighting in exact multiplicative-
-    // weights integers: per-source excess score (n_chars proxy) →
-    // bucketed exponent → 3 rounds of 11/10-per-bucket updates with
-    // renormalization to Σ = 1e6. DuckDB replays aggregation,
-    // bucketing, every round's HUGEINT update, and the renorm floors.
-    "q233_domain_mixture" -> ((s, dir) =>
-      graft.ops.Sampling.domainMixtureWeights(
-        t(s, dir, "documents"), "source", "n_chars",
-        bucket = 20L, kMax = 4, rounds = 3)
-        .orderBy("domain")),
-
-    // Cohen's kappa inter-annotator agreement: annotator A = label,
-    // annotator B = A with every 5th item flipped (planted 20%
-    // disagreement). Chance-corrected in exact per-mille; DuckDB
-    // re-derives the confusion matrix, margins, and the
-    // cross-multiplied kappa.
-    "q234_cohen_kappa" -> ((s, dir) => {
-      val ann = t(s, dir, "embeddings").select(
-        col("label").cast("long").as("ann_a"),
-        when(col("vec_id") % 5 === 0, (col("label") + 1) % 10)
-          .otherwise(col("label")).cast("long").as("ann_b"))
-      graft.ops.Curation.cohenKappa(ann, "ann_a", "ann_b")
-        .orderBy("label_a", "label_b")
-    }),
-
-    // Ordered (EMD) t-closeness — q230's companion for NUMERIC
-    // sensitive attributes (Li et al.'s recommendation): groups whose
-    // length-band distribution must MOVE > 70‰ of ordered mass to
-    // match the corpus. DuckDB re-derives cumulative counts over the
-    // full domain grid, the cross-multiplied EMD, flag rule, emd_pm.
-    "q235_t_closeness_ordered" -> ((s, dir) =>
-      graft.ops.Curation.tClosenessOrderedRisk(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          expr("CAST(n_chars div 100 AS BIGINT)").as("band")),
-        Seq("source"), "band", tNum = 7, tDen = 100)
-        .select("doc_id", "source", "band", "group_n", "emd_pm")
-        .orderBy("doc_id")),
-
-    // Chi-square independence audit (A/B sanity test): is event_type
-    // independent of the user's hash bucket? Full grid with margins +
-    // the exact-integer statistic (per-cell micro-floored — the floor
-    // is part of the contract DuckDB replays in HUGEINT).
-    "q236_chi_square" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type"),
-        (col("user_id") % 2).cast("string").as("bucket"))
-      graft.ops.Profile.chiSquareAudit(ev, "event_type", "bucket")
-        .orderBy("a", "b")
-    }),
-
-    // Subject-access export (the GDPR READ side next to q194's
-    // takedown WRITE side): for every 100th customer, each table's row
-    // count + a sorted-repr md5 digest — the access-request manifest.
-    // DuckDB rebuilds every repr, sorts within subject, re-hashes.
-    "q237_subject_export" -> ((s, dir) => {
-      val subjects = t(s, dir, "customer")
-        .filter(col("c_custkey") % 100 === 7)
-        .select(col("c_custkey").as("subject_id"))
-      val cust = t(s, dir, "customer").select(
-        col("c_custkey").as("subject_id"),
-        concat_ws("|", col("c_custkey"), col("c_name"),
-          col("c_mktsegment")).as("repr"))
-      val ord = t(s, dir, "orders").select(
-        col("o_custkey").as("subject_id"),
-        concat_ws("|", col("o_orderkey"), col("o_orderstatus"),
-          cents(col("o_totalprice"))).as("repr"))
-      val li = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("subject_id"),
-          concat_ws("|", col("l_orderkey"), col("l_linenumber"),
-            cents(col("l_extendedprice"))).as("repr"))
-      graft.ops.Curation.subjectExport(Seq(("customer", cust),
-          ("orders", ord), ("lineitem", li)), subjects)
-        .orderBy("subject_id", "table_name")
-    }),
-
-    // Merkle-style bucket-digest reconciliation: replica b drops every
-    // 101st doc and edits every 97th — only the buckets holding
-    // affected ids may mismatch, and the row-level q90 diff drills
-    // down. DuckDB re-derives buckets, 32-bit signatures, sums, flags.
-    "q238_bucket_digest" -> ((s, dir) => {
-      val a = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val b = t(s, dir, "documents").filter(col("doc_id") % 101 =!= 5)
-        .select(col("doc_id"),
-          when(col("doc_id") % 97 === 13, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-      graft.index.IndexWriter.bucketDigestDiff(a, b, "doc_id",
-          Seq("text"), buckets = 32)
-        .orderBy("bucket")
-    }),
-
-    // c-TF-IDF topic-term labeling (the BERTopic step): each source
-    // treated as one concatenated document, terms ranked by
-    // tf · log10(1 + A/f_w) — frequent HERE, not everywhere. Through
-    // the bounded-heap TopKPerKey plan; DuckDB re-derives counts, the
-    // micro-rounded log, scores, and the per-class top-5.
-    "q239_ctfidf_topics" -> ((s, dir) =>
-      graft.ops.TextAnalysis.classTfIdfTopTerms(
-        t(s, dir, "documents"), "source", "text", k = 5)
-        .orderBy("cls", "rank")),
-
-    // Item-item co-occurrence similarity (market-basket CF): customers
-    // as baskets, parts as items, squared-cosine in exact micro units
-    // (no sqrt in the compare), top-3 neighbors per part through the
-    // bounded-heap plan. DuckDB re-derives baskets, pair counts,
-    // scores, and the per-item ranking.
-    "q240_item_cooccurrence" -> ((s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("basket"), col("l_partkey").as("part"))
-      graft.ops.GraphOps.itemCooccurrence(baskets, "basket", "part", k = 3)
-        .orderBy("item", "rank")
-    }),
-
-    // Directed association rules over the same baskets: confidence is
-    // asymmetric (i→j strong while j→i weak when c_i ≪ c_j), lift
-    // symmetric, both exact integers; min-support 3 shared customers.
-    // DuckDB re-derives baskets, supports, and both measures.
-    "q241_association_rules" -> ((s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("basket"), col("l_partkey").as("part"))
-      graft.ops.GraphOps.associationRules(baskets, "basket", "part",
-          minSupport = 3)
-        .orderBy("antecedent", "consequent")
-    }),
-
-    // Score-calibration audit: a per-mille "model probability" from
-    // length, labels drawn by a deterministic Bernoulli(score) hash —
-    // reliability buckets + ECE in exact integers (the sum-form
-    // identity needs no per-bucket division). DuckDB replays buckets,
-    // sums, and the ECE fold.
-    "q242_calibration" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          least(greatest((col("n_chars") - 100) * 2, lit(0)), lit(1000))
-            .cast("long").as("score_pm"))
-        .withColumn("label",
-          ((col("doc_id") * 7919) % 1000 < col("score_pm")).cast("long"))
-      graft.ops.Profile.calibrationAudit(d, "score_pm", "label",
-          buckets = 10)
-        .orderBy("bucket")
-    }),
-
-    // Disparate-impact (4/5-rule) audit of a curation gate: a length
-    // filter whose threshold is implicitly harder on one language —
-    // 'de' admits at 285‰ vs the reference 656‰ → di 434‰, flagged.
-    // DuckDB re-derives rates, the exact cross-multiplied reference
-    // choice, ratios, and flags.
-    "q243_disparate_impact" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("lang"),
-        (col("n_chars") >=
-          when(col("lang") === "de", 350).otherwise(280)).as("selected"))
-      graft.ops.Curation.disparateImpact(d, "lang", "selected")
-        .orderBy("grp")
-    }),
-
-    // Corpus-concentration audit: Gini over per-source character
-    // contributions with the full Lorenz curve — the datasheet
-    // companion to q210's counts. Exact sorted-cumulative identity;
-    // DuckDB replays the (weight, name) ordering and every fold.
-    "q244_concentration" -> ((s, dir) =>
-      graft.ops.Profile.concentrationAudit(
-        t(s, dir, "documents"), "source", "n_chars")
-        .orderBy("lorenz_rank")),
-
-    // Benford first-digit audit over order amounts in cents: observed
-    // digit shares vs log10(1 + 1/d) expectations in exact micro
-    // units; synthetic uniform prices deviate hard — exactly what the
-    // audit exists to flag. DuckDB re-derives digits, shares, the nine
-    // expectations, and the max deviation.
-    "q245_benford" -> ((s, dir) =>
-      graft.ops.Profile.benfordAudit(
-        t(s, dir, "orders").select(
-          cents(col("o_totalprice")).as("amount")), "amount")
-        .orderBy("digit")),
-
-    // Posting-list delta+varint size model: per-term exact byte costs
-    // vs raw 8-byte ids — the index-layout planning audit. DuckDB
-    // replays dedupe, gaps, the LEB128 threshold cases, and ratios.
-    "q246_postings_varint" -> ((s, dir) => {
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-          explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-        .filter(col("term") =!= "")
-      graft.ops.Layout.postingsCompressionAudit(toks, "term", "doc_id")
-        .orderBy("term")
-    }),
-
-    // Exact two-sample KS: does English doc length distribute like the
-    // rest of the corpus? Full ECDF evidence table with the cross-
-    // multiplied statistic and its attaining value. DuckDB replays
-    // counts, cumulative walks, gaps, and the argmax.
-    "q247_ks_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.Profile.ksStatistic(
-          d.filter(col("lang") === "en").select("n_chars"),
-          d.filter(col("lang") =!= "en").select("n_chars"), "n_chars")
-        .orderBy("value")
-    }),
-
-    // Exact AUC over the q242 score/label pair: tie-safe Mann-Whitney
-    // fold on the per-mille score dimension, no ranks materialized.
-    // DuckDB replays per-score counts, the cumulative-negatives walk,
-    // the doubled-U fold, and the final division.
-    "q248_auc" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          least(greatest((col("n_chars") - 100) * 2, lit(0)), lit(1000))
-            .cast("long").as("score_pm"))
-        .withColumn("label",
-          ((col("doc_id") * 7919) % 1000 < col("score_pm")).cast("long"))
-      graft.ops.Profile.aucStatistic(d, "score_pm", "label")
-        .orderBy("score")
-    }),
-
-    // One-call release QA report — the governance composite bookending
-    // the audit tier (q210 datasheet + q244 concentration + q245
-    // Benford + q247 KS + q243 fairness) as one tall (section, key,
-    // value) table. Every number re-derived independently by DuckDB.
-    "q249_quality_report" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val vol = docs.groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum("n_chars").as("ch"))
-        .collect().flatMap(r => Seq(
-          ("volume_docs", r.getString(0), r.getLong(1)),
-          ("volume_chars", r.getString(0), r.getLong(2))))
-      val gini = graft.ops.Profile.concentrationAudit(docs, "source",
-        "n_chars").select("gini_pm").first().getLong(0)
-      val ben = graft.ops.Profile.benfordAudit(
-        t(s, dir, "orders").select(cents(col("o_totalprice")).as("amt")),
-        "amt").select("max_dev_u6").first().getLong(0)
-      // the composite's drift gate routes through the BINNED KS (r14
-      // judge ask #5): n_chars is unbounded-cardinality at corpus
-      // scale, and the exact form's cumulative walk is one task over
-      // every distinct length — the 4096-bin form caps that walk while
-      // the per-bin counting stays distributed (q247 keeps the exact
-      // form as its own oracle for bounded domains)
-      val ks = graft.ops.Profile.ksStatisticBinned(
-        docs.filter(col("lang") === "en").select("n_chars"),
-        docs.filter(col("lang") =!= "en").select("n_chars"), "n_chars",
-        lo = 0L, hi = 65536L, nBins = 4096)
-        .select("ks_pm").first().getLong(0)
-      val fair = graft.ops.Curation.disparateImpact(
-        docs.select(col("lang"), (col("n_chars") >=
-          when(col("lang") === "de", 350).otherwise(280)).as("sel")),
-        "lang", "sel").filter(col("flagged")).count()
-      (vol.toSeq ++ Seq(
-        ("concentration", "gini_pm", gini),
-        ("benford", "max_dev_u6", ben),
-        ("drift", "ks_en_vs_rest_pm", ks),
-        ("fairness", "n_flagged_langs", fair)))
-        .toDF("section", "key", "value")
-        .orderBy("section", "key")
-    }),
-
-    // Exact signed Spearman: does length track token count (it must,
-    // near-perfectly) — tie-averaged doubled ranks from the two-pass
-    // numbering, Pearson-on-ranks sums as exact longs, signed squared
-    // rho in micro. DuckDB replays ranks, tie groups, sums, BigInt
-    // formula.
-    "q250_spearman" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        col("n_chars"),
-        size(split(lower(trim(col("text"))), "\\s+")).cast("long")
-          .as("n_tokens"))
-      graft.ops.Profile.spearmanSigned(d, "doc_id", "n_chars", "n_tokens")
-    }),
-
-    // Distributed Borůvka MST on a planted 40-node chorded graph with
-    // DISTINCT composite weights (unique MST). DuckDB proves each edge
-    // by the cut property — in the MST iff its endpoints are NOT
-    // connected using strictly lighter edges (one recursive
-    // reachability over the edge×node state).
-    "q251_boruvka_mst" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      val canon = raw
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct()
-        .withColumn("w",
-          ((col("a") * 73 + col("b") * 31) % 997) * 1000 +
-            col("a") * 40 + col("b"))
-      graft.ops.GraphOps.boruvkaMst(
-          canon.select(col("a").as("src"), col("b").as("dst"), col("w")),
-          iters = 8)
-        .orderBy("a", "b")
-    }),
-
-    // Single-source shortest paths (Bellman-Ford rounds) from node 0
-    // over the q251 weighted graph — 12 rounds ≥ diameter, so the
-    // distances are exact. DuckDB replays bounded-hop path expansion
-    // and takes the same per-node minimum.
-    "q252_shortest_paths" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      val canon = raw
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct()
-        .withColumn("w",
-          ((col("a") * 73 + col("b") * 31) % 997) * 1000 +
-            col("a") * 40 + col("b"))
-      graft.ops.GraphOps.shortestPaths(
-          canon.select(col("a").as("src"), col("b").as("dst"), col("w")),
-          source = 0L, rounds = 12)
-        .orderBy("id")
-    }),
-
-    // Per-node clustering coefficient over the q251 graph: neighbor-
-    // pair generation + one close join, exact per-mille. DuckDB
-    // re-derives adjacency, pairs, triangle closes, and ratios.
-    "q253_clustering_coeff" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      graft.ops.GraphOps.clusteringCoefficient(raw).orderBy("id")
-    }),
-
-    // Structural link prediction over the q251 graph: non-adjacent
-    // pairs scored by common neighbors and exact neighborhood Jaccard.
-    // DuckDB re-derives wedges, the anti-join, degrees, and scores.
-    "q254_link_prediction" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      graft.ops.GraphOps.linkPrediction(raw).orderBy("u", "v")
-    }),
-
-    // Two-sided CUSUM drift alarms: value blocks ≡ 2 mod 3 (by
-    // arrival id) carry a planted +100.00 level shift — small per
-    // event, unmistakable accumulated. Per-user sorted fold with
-    // crossing-reset; DuckDB replays the recurrence row-by-row through
-    // a recursive CTE and emits the identical alarm rows.
-    "q255_cusum" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_id"),
-        (cents(col("value")) +
-          when(expr("(event_id div 1000) % 3") === 2, 10000L)
-            .otherwise(0L)).as("v"))
-      graft.streaming.EventsPipeline.cusumFlags(ev, "user_id",
-          "event_id", "v", ref = 5000L, slack = 2000L, h = 30000L)
-        .orderBy("user_id", "event_id", "side")
-    }),
-
-    // First/last-touch conversion attribution with a 24 h lookback:
-    // one range-framed window pass per user (no events×events
-    // self-join). DuckDB re-derives both credits per purchase with an
-    // explicit in-window argmax/argmin.
-    "q256_attribution" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.attributeConversions(
-          events(s, dir), "user_id", "ts", "event_id", "event_type",
-          touchType = "click", convType = "purchase",
-          lookbackSec = 86400L)
-        .orderBy("user_id", "conversion_id")),
-
-    // Isotonic (PAV) calibration over the q242 score/label fixture,
-    // scores bucketed to 50 levels: the monotone fix for the
-    // calibration audit. DuckDB reaches the identical 1e-12-unit
-    // probabilities through the minimax identity (max over k≤i of min
-    // over j≥i of the segment mean) — no sequential pooling replayed.
-    "q257_isotonic" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          expr("CAST(least(greatest((n_chars - 100) * 2, 0), 1000) " +
-            "div 20 AS BIGINT)").as("score_b"))
-        .withColumn("label",
-          ((col("doc_id") * 7919) % 50 < col("score_b")).cast("long"))
-      graft.ops.Profile.isotonicCalibration(d, "score_b", "label")
-        .orderBy("score")
-    }),
-
-    // Cross-source quantile normalization of doc lengths: every row
-    // maps to the pooled distribution's value at its within-source
-    // quantile (nearest-rank), so a percentile means the same thing in
-    // every source. DuckDB replays both rank ladders and the mapping.
-    "q258_quantile_norm" -> ((s, dir) =>
-      graft.ops.Cleaning.quantileNormalize(
-        t(s, dir, "documents"), "source", "doc_id", "n_chars")
-        .orderBy("grp", "id")),
-
-    // RFM segmentation of customers over orders: recency / frequency /
-    // monetary quintiles, each ranked through the distributed two-pass
-    // global numbering (never an ntile window over one partition);
-    // segment = r·100 + f·10 + m. DuckDB replays the three rank
-    // ladders with the identical (rn-1)·5 // n + 1 formula.
-    "q259_rfm_segments" -> ((s, dir) =>
-      graft.ops.Profile.rfmSegments(
-        t(s, dir, "orders"), "o_custkey", "o_orderdate", "o_totalprice")
-        .orderBy("entity")),
-
-    // Corpus keyness (Dunning log-likelihood, micro units): which
-    // terms the English slice over-uses vs everything else. Zero
-    // observations contribute 0; direction is an exact integer
-    // cross-multiply. DuckDB re-derives both count tables and the
-    // micro-rounded per-side logs.
-    "q260_keyness" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.TextAnalysis.keyness(
-        d.filter(col("lang") === "en"), d.filter(col("lang") =!= "en"),
-        "text", minTotal = 5L)
-        .orderBy("term")
-    }),
-
-    // Additive seasonal decomposition of per-user event values:
-    // centered 7-wide moving-average trend (full windows only),
-    // per-(user, phase) seasonal means of the detrended series,
-    // residual remainder — all exact truncating micro arithmetic.
-    // DuckDB replays the windows, the phase means, and the remainder.
-    "q261_seasonal_decompose" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.seasonalDecompose(
-        t(s, dir, "events")
-          .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-          .select("user_id", "us", "event_id", "value"),
-        "user_id", Seq("us", "event_id"), "value", period = 7)
-        .orderBy("user_id", "idx")),
-
-    // HITS hubs & authorities over the q88 residue-map graph: three
-    // synchronous mutual-recursion rounds in exact max-normalized
-    // fixed point (argmax pinned at 1e6, truncating divisions).
-    // DuckDB replays all six half-steps on the identical graph.
-    "q262_hits" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select((col("doc_id") % 50).as("src"))
-      val e = base.select(col("src"),
-          ((col("src") * col("src") + 3) % 50).as("dst"))
-        .unionByName(base.select(col("src"),
-          ((col("src") * 3 + 7) % 50).as("dst")))
-        .filter(col("src") =!= col("dst"))
-      graft.ops.GraphOps.hits(e, iters = 3).orderBy("id")
-    }),
-
-    // Greedy k-center coreset (Gonzalez farthest-point) over the
-    // embeddings: 5 diversity-maximizing picks, micro cosine distance,
-    // min-id seed, id tie-breaks. DuckDB replays every selection round
-    // (distance pass, running min, argmax) on the same vectors.
-    "q263_kcenter_coreset" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      graft.ops.Similarity.kCenterCoreset(t(s, dir, "embeddings"), k = 5)
-        .orderBy("pick")
-    }),
-
-    // Interpolated Kneser-Ney bigram LM over the corpus: absolute
-    // discount 3/4, continuation-unigram back-off, one exact rational
-    // per observed bigram micro-rounded by truncating division.
-    // DuckDB re-derives every count table and the identical rational.
-    "q264_kneser_ney" -> ((s, dir) =>
-      graft.ops.TextAnalysis.kneserNeyBigram(t(s, dir, "documents"))
-        .orderBy("prev", "next")),
-
-    // TextRank keyword extraction: PageRank over the window-2 token
-    // co-occurrence graph (linear shifted-stream equi-join, never the
-    // per-doc quadratic range join), exact fixed-point ranks, top-15.
-    // DuckDB re-derives the graph and replays the rank recursion.
-    "q265_textrank" -> ((s, dir) =>
-      graft.ops.TextAnalysis.textRankKeywords(
-        t(s, dir, "documents"), window = 2, iters = 5, k = 15)
-        .orderBy(desc("rank"), asc("token"))),
-
-    // Declarative expectation-suite audit over orders: four row rules
-    // + key uniqueness, all evaluated in ONE aggregate pass (null
-    // predicate = violation). DuckDB re-derives every rule's counts.
-    "q266_expectations" -> ((s, dir) =>
-      graft.ops.Profile.expectationsAudit(t(s, dir, "orders"), Seq(
-        ("orderkey_not_null", col("o_orderkey").isNotNull),
-        ("totalprice_positive", col("o_totalprice") > 0),
-        ("status_known", col("o_orderstatus").isin("O", "F", "P")),
-        ("priority_nonempty", length(col("o_orderpriority")) > 0)),
-        uniqueCols = Seq("o_orderkey"))
-        .orderBy("rule")),
-
-    // Per-document token Shannon entropy (micro log10 units): the
-    // information-density quality gate — exact count ratios, one
-    // micro-rounded surprisal per type, truncating division. DuckDB
-    // re-derives every distribution.
-    "q267_token_entropy" -> ((s, dir) =>
-      graft.ops.TextAnalysis.tokenEntropy(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // Per-language unigram KL divergence from the pooled corpus: the
-    // source-drift audit in exact micro log10 units (observed terms
-    // only, one micro-rounded log-ratio per (class, term), truncating
-    // class division). DuckDB re-derives all four count tables.
-    "q268_source_divergence" -> ((s, dir) =>
-      graft.ops.TextAnalysis.sourceDivergence(
-        t(s, dir, "documents"), classCol = "lang")
-        .orderBy("cls")),
-
-    // Weight-of-evidence / information value over the q257 score/label
-    // fixture binned to 5 levels: Laplace-smoothed exact cross-ratio
-    // logs, micro shares by truncating division, per-bin IV terms.
-    // DuckDB re-derives bins, counts, and both micro quantities.
-    "q269_woe_iv" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-          expr("CAST(least(greatest((n_chars - 100) * 2, 0), 1000) " +
-            "div 20 AS BIGINT)").as("score_b"))
-        .withColumn("label",
-          ((col("doc_id") * 7919) % 50 < col("score_b")).cast("long"))
-        .withColumn("bin", expr("CAST(score_b div 10 AS BIGINT)"))
-      graft.ops.Profile.woeIv(d, "bin", "label").orderBy("bin")
-    }),
-
-    // Skip-gram pair generation with word2vec occurrence subsampling
-    // (hash-derandomized md5 thresholds, window-2 symmetric pairs over
-    // the compressed stream). DuckDB replays the thresholds, every
-    // keep decision, the re-index, and the pair counts.
-    "q270_skipgram_pairs" -> ((s, dir) =>
-      graft.ops.TextAnalysis.skipGramPairs(
-        t(s, dir, "documents"), window = 2, tPpm = 1000L)
-        .orderBy("center", "context")),
-
-    // Flesch reading-ease + FK grade in exact milli-units: vowel-run
-    // syllables (floored at 1/word), [.!?]+ sentence runs (floored at
-    // 1/doc), truncating-division score formulas. DuckDB re-counts
-    // every run and replays both formulas integer-for-integer.
-    "q271_flesch" -> ((s, dir) =>
-      graft.ops.TextAnalysis.fleschReadability(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // Kaplan-Meier retention over user lifetimes (right-censored in
-    // the final 24 h of the window): integer risk sets, one micro-
-    // rounded ln step per lifetime, integer cumulative log-survival.
-    // DuckDB re-derives lifetimes, censoring, risk sets, and the curve.
-    "q272_kaplan_meier" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.kaplanMeier(
-        t(s, dir, "events"), "user_id", "ts", censorHours = 24L)
-        .orderBy("t_h")),
-
-    // Two synchronous Louvain local-move rounds over the q251 graph:
-    // integer modularity-gain argmax (score diffs = 2m²·ΔQ), exact
-    // final Q in micro units. DuckDB replays both rounds and Q.
-    "q273_modularity_move" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      graft.ops.GraphOps.modularityLocalMove(raw, iters = 2)
-        .orderBy("id")
-    }),
-
-    // Phonetic blocking: soundex code per vocabulary word + block
-    // size (n_block > 1 = sound-alike collision a fuzzy-linkage pass
-    // should verify). DuckDB re-derives every code positionally
-    // (translate + lag run-collapse) and the block sizes.
-    "q274_soundex_blocking" -> ((s, dir) => {
-      val w = t(s, dir, "documents").select(col("text"))
-        .unionByName(t(s, dir, "part").select(col("p_name").as("text")))
-        .select(explode(split(lower(trim(col("text"))), "\\s+"))
-          .as("word"))
-        .filter(col("word") =!= "").distinct()
-        .withColumn("code", graft.ops.Dedup.soundex4(col("word")))
-        .filter(col("code").isNotNull)
-      val blocks = w.groupBy("code").agg(count(lit(1)).as("n_block"))
-      w.join(blocks, "code")
-        .select(col("word"), col("code"), col("n_block"))
-        .orderBy("word")
-    }),
-
-    // Multinomial Naive Bayes language classifier: train on id%5!=0,
-    // score the held-out fifth; Laplace-smoothed micro-log model,
-    // integer score sums, argmax with lexicographic ties. DuckDB
-    // re-trains the whole model and re-scores every test doc.
-    "q275_naive_bayes" -> ((s, dir) =>
-      graft.ops.TextAnalysis.naiveBayes(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // Heaps'-law vocabulary growth: 50-doc checkpoints of cumulative
-    // (tokens, types) + the integer log-log OLS slope/intercept.
-    // DuckDB re-derives first occurrences, both curves, and the fit.
-    "q276_heaps_law" -> ((s, dir) =>
-      graft.ops.Profile.heapsLaw(t(s, dir, "documents"))
-        .orderBy("b")),
-
-    // Fellegi-Sunter linkage over the customer file: frequency-
-    // estimated u per compare field, fixed m, micro-log weights folded
-    // to literals, (segment, nation)-blocked pairs, integer scores.
-    // DuckDB re-estimates u, re-derives both weights, and re-scores
-    // every blocked pair.
-    "q277_fellegi_sunter" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("bal_b",
-          expr("CAST(floor(c_acctbal / 1000) AS BIGINT)"))
-        .withColumn("name_d", expr("right(c_name, 1)"))
-      graft.ops.Dedup.fellegiSunterPairs(c, "c_custkey",
-          blockCols = Seq("c_mktsegment", "c_nationkey"),
-          compareCols = Seq("bal_b", "name_d"),
-          lowerU6 = -400000L)
-        .orderBy("id1", "id2")
-    }),
-
-    // Top principal component by exact-integer power iteration: micro
-    // int components, integer second-moment matrix, BigInt covariance
-    // numerators, 8 max-normalized mat-vec rounds. DuckDB re-derives
-    // the matrix and replays every round in HUGEINT.
-    "q278_pca_power" -> ((s, dir) =>
-      graft.ops.VectorOps.pcaPowerIteration(
-        t(s, dir, "embeddings"), dim = 64, iters = 8)
-        .orderBy("dim_i")),
-
-    // Int8 serving-recall audit: the quantized-code integer-dot top-10
-    // for query 0, flagged against the exact float-cosine top-10.
-    // DuckDB re-quantizes, re-ranks by integer dot, and re-derives
-    // the exact list.
-    "q279_int8_recall" -> ((s, dir) =>
-      graft.ops.VectorOps.int8RecallAudit(
-        t(s, dir, "embeddings"), queryId = 0L, k = 10)
-        .orderBy("rn")),
-
-    // Split-conformal coverage audit: per-lang mean predictor (train
-    // third), count-based ceil-index residual quantile (calibration
-    // third), per-group coverage (test third). DuckDB re-derives the
-    // means, the order statistic, and every coverage flag.
-    "q280_conformal" -> ((s, dir) =>
-      graft.ops.Profile.splitConformal(
-        t(s, dir, "documents"), "doc_id", "lang", "n_chars")
-        .orderBy("grp")),
-
-    // UCB1 off-policy replay over 32 cohort streams (256-step
-    // horizon): deterministic policy walk (unpulled-first init,
-    // micro-rounded exploration bonus, replay-matched updates only).
-    // DuckDB replays every decision in a recursive CTE with per-arm
-    // state columns.
-    "q281_ucb1_replay" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.ucb1Replay(
-        t(s, dir, "events").withColumn("k32", col("user_id") % 32),
-        "k32", "ts", "event_id", "event_type", "value",
-        rewardThreshold = 100.0, maxSteps = 256)
-        .orderBy("key", "arm")),
-
-    // Theil-Sen robust trend per language: micro pairwise slopes,
-    // count-based lower-median order statistic, equal-x pairs
-    // excluded. DuckDB re-derives every pair slope and the median.
-    "q282_theil_sen" -> ((s, dir) =>
-      graft.ops.Profile.theilSenSlope(
-        t(s, dir, "documents"), "lang", "doc_id", "n_chars")
-        .orderBy("grp")),
-
-    // Incremental PCA maintenance: additive moment tables built on
-    // two corpus halves, UNIONED, then the same BigInt power loop —
-    // must hash-match q278's full-corpus oracle verbatim (the q218
-    // incremental ≡ batch proof shape).
-    "q283_pca_incremental" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val m1 = graft.ops.VectorOps.momentCounts(
-        e.filter(col("vec_id") % 2 === 0))
-      val m2 = graft.ops.VectorOps.momentCounts(
-        e.filter(col("vec_id") % 2 === 1))
-      graft.ops.VectorOps.pcaFromMoments(
-        m1.unionByName(m2), dim = 64, iters = 8)
-        .orderBy("dim_i")
-    }),
-
-    // Difference-in-differences over the event stream (treatment =
-    // user parity, periods split at the stream midpoint): micro cell
-    // means, integer DiD. DuckDB re-derives the cut, all four cells,
-    // and the estimator.
-    "q284_diff_in_diff" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.diffInDiff(
-        t(s, dir, "events")
-          .withColumn("treated", (col("user_id") % 2).cast("long")),
-        "treated", "ts", "value")
-        .orderBy("treated", "post")),
-
-    // CUPED variance reduction: per-unit pre/post milli means, integer
-    // covariance-ratio theta, adjusted post means per arm. DuckDB
-    // re-derives units, the HUGEINT fit, and both arm means.
-    "q285_cuped" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.cuped(
-        t(s, dir, "events")
-          .withColumn("treated", (col("user_id") % 2).cast("long")),
-        "user_id", "treated", "ts", "value")
-        .orderBy("treated")),
-
-    // Entity-resolution composite: F-S link pairs (q277's model at the
-    // link threshold) → connected components → canonical min-id +
-    // cluster sizes. DuckDB re-derives the model, the link set, and
-    // the reachability closure.
-    "q286_er_composite" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("bal_b",
-          expr("CAST(floor(c_acctbal / 1000) AS BIGINT)"))
-        .withColumn("name_d", expr("right(c_name, 1)"))
-      val links = graft.ops.Dedup.fellegiSunterPairs(c, "c_custkey",
-          blockCols = Seq("c_mktsegment", "c_nationkey"),
-          compareCols = Seq("bal_b", "name_d"), lowerU6 = 1L)
-        .select("id1", "id2")
-      val cc = graft.ops.Dedup.connectedComponents(links)
-      val sizes = cc.groupBy("comp").agg(count(lit(1)).as("n_members"))
-      cc.join(sizes, "comp")
-        .select(col("id"), col("comp").as("canon"), col("n_members"))
-        .orderBy("id")
-    }),
-
-    // Deterministic half-sample bootstrap CI for the corpus mean
-    // n_chars: 200 hash-derandomized resamples, milli means, count-
-    // based percentile order statistics. DuckDB replays every resample
-    // membership decision and both order statistics.
-    "q287_bootstrap_ci" -> ((s, dir) =>
-      graft.ops.Sampling.bootstrapCi(
-        t(s, dir, "documents"), "doc_id", "n_chars")),
-
-    // Markov next-event baseline: transition argmaxes trained on even
-    // users, per-state held-out accuracy on odd users. DuckDB
-    // re-derives transitions, the model, and every prediction.
-    "q288_markov_accuracy" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.markovAccuracy(t(s, dir, "events"))
-        .orderBy("prev_type")),
-
-    // Hilbert-curve layout key (q124's Z-order with the locality
-    // upgrade — consecutive indices are always grid-adjacent): the
-    // xy2d walk as pure codegen'd column algebra. DuckDB replays all
-    // ten levels of the walk per row.
-    "q289_hilbert" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.Layout.hilbertValue(col("doc_id") % 1024,
-          col("n_chars") % 1024, bits = 10).as("h"))),
-
-    // WARC round-trip: each partition serializes its documents as a
-    // .warc.gz stream (one gzip member per record, the Common Crawl
-    // convention) and parses it back — the oracle is the ORIGINAL
-    // table, so the gate proves byte-exact container framing.
-    "q290_warc_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents").select("doc_id", "text")
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val rows = it.toArray
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val members = rows.map { case (id, text) =>
-              graft.sources.Warc.gzipRecord(
-                graft.sources.Warc.buildRecord("resource",
-                  s"urn:doc:$id", s"graft-$id",
-                  text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            }
-            graft.sources.Warc.parseGzipMembers(Array.concat(members: _*))
-              .iterator.map { r =>
-                (r.headers("WARC-Target-URI").stripPrefix("urn:doc:")
-                  .toLong,
-                  new String(r.body,
-                    java.nio.charset.StandardCharsets.UTF_8))
-              }
-          }
-        }
-        .toDF("doc_id", "text").orderBy("doc_id")
-    }),
-
-    // robots.txt crawl-policy gate (RFC 9309): a robots file derived
-    // from a BOUNDED rule subset (p_partkey < 40 — robots are KB-sized
-    // by contract), longest-prefix decisions with Allow winning ties,
-    // evaluated for every part path. DuckDB re-derives the rules and
-    // every longest-match decision.
-    "q291_robots_policy" -> ((s, dir) => {
-      val ruleParts = t(s, dir, "part")
-        .filter(col("p_partkey") < 40)
-        .select("p_partkey", "p_name").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val robots = "User-agent: *\n" + ruleParts.map { case (k, n) =>
-        val ws = n.split(" ")
-        if (k % 2 == 0) s"Disallow: /${ws(0)}"
-        else s"Allow: /${ws(0)}/${ws(1)}"
-      }.mkString("\n")
-      val rules = graft.sources.RobotsTxt.rulesFor(robots, "graft")
-      val allowedUdf = udf((p: String) =>
-        graft.sources.RobotsTxt.isAllowed(rules, p))
-      t(s, dir, "part").select(col("p_partkey"),
-          concat(lit("/"), regexp_replace(col("p_name"), " ", "/"))
-            .as("path"))
-        .withColumn("allowed", allowedUdf(col("path")).cast("long"))
-        .orderBy("p_partkey")
-    }),
-
-    // COEC position-normalized engagement: ppm position priors from
-    // the whole log (position = event_id % 10, click = value >= 100),
-    // per-item expected-click sums, one truncating ratio. DuckDB
-    // re-derives priors, sums, and every ratio.
-    "q292_coec" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.coec(
-        t(s, dir, "events")
-          .withColumn("pos", col("event_id") % 10)
-          .withColumn("clk", (col("value") >= 100.0).cast("long")),
-        "event_type", "pos", "clk")
-        .orderBy("item")),
-
-    // Mondrian k-anonymization over (n_chars, doc_id%512): four
-    // deterministic median-split rounds, k=25, release map of
-    // generalized cells. DuckDB replays every round's stats, medians,
-    // and split decisions.
-    "q293_mondrian" -> ((s, dir) =>
-      graft.ops.Curation.mondrian(
-        t(s, dir, "documents")
-          .withColumn("qb", col("doc_id") % 512),
-        "doc_id", "n_chars", "qb", k = 25, rounds = 4)
-        .orderBy("pid")),
-
-    // 2-D skyline over per-user (activity, milli value): the Pareto
-    // frontier via the a-value-dimension running-max window — no
-    // self-join. DuckDB re-derives the frontier and every survivor.
-    "q294_skyline" -> ((s, dir) => {
-      val u = t(s, dir, "events").groupBy(col("user_id").as("uid"))
-        .agg(count(lit(1)).as("n_ev"),
-          sum(round(col("value") * 1000, 0).cast("long")).as("v_u3"))
-      graft.ops.Joins.skyline2d(u, "uid", "n_ev", "v_u3").orderBy("id")
-    }),
-
-    // Pseudo-relevance-feedback expansion: BM25 top-10 feedback set
-    // for ('table','scan','merge'), score-weighted-tf term weights,
-    // top-20 expansion terms. DuckDB re-runs the retrieval and
-    // re-derives every term weight.
-    "q295_prf_expansion" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").as("id"),
-          split(col("text"), " ").as("tokens"))
-      val n = docs.count()
-      val avgLen = docs.select(avg(size(col("tokens"))))
-        .first().getDouble(0)
-      val stats = graft.index.IndexWriter.docFrequencies(docs)
-      HybridSearch.prfExpansion(docs, stats, n, avgLen,
-        Seq("table", "scan", "merge"), fb = 10, topTerms = 20)
-        .orderBy(desc("w_sum"), col("term"))
-    }),
-
-    // Holt double exponential smoothing over 16 cohort streams
-    // (256-step horizon, alpha 0.3 / beta 0.1 in ppm): exact integer
-    // level/trend recurrences + in-sample SAE. DuckDB replays every
-    // step of every walk in a recursive CTE.
-    "q296_holt_smoothing" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.holtSmoothing(
-        t(s, dir, "events").withColumn("k16", col("user_id") % 16),
-        "k16", "ts", "event_id", "value",
-        alphaPpm = 300000L, betaPpm = 100000L, maxSteps = 256)
-        .orderBy("key")),
-
-    // Sorted-neighborhood blocking over customers keyed by cent
-    // balances (window 3): every record pairs with its two sort
-    // successors. DuckDB re-derives the global rank and both shifts.
-    "q297_sorted_neighborhood" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("cents",
-          expr("CAST(floor(c_acctbal * 100) AS BIGINT)"))
-      graft.ops.Dedup.sortedNeighborhoodPairs(
-          c, "c_custkey", "cents", window = 3)
-        .withColumn("d_cents", col("key2") - col("key1"))
-        .select("id1", "id2", "d_cents")
-        .orderBy("id1", "id2")
-    }),
-
-    // Instance-based schema matching: customer vs supplier integral
-    // projections, exact value-set Jaccard per cross-table column
-    // pair. DuckDB re-melts both schemas and re-derives every score.
-    "q298_schema_match" -> ((s, dir) => {
-      val a = t(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey"), col("c_mktsegment"),
-        expr("CAST(floor(c_acctbal) AS BIGINT)").as("c_bal"))
-      val b = t(s, dir, "supplier").select(col("s_suppkey"),
-        col("s_nationkey"),
-        expr("CAST(floor(s_acctbal) AS BIGINT)").as("s_bal"))
-      graft.ops.Profile.schemaMatch(a, b).orderBy("col_a", "col_b")
-    }),
-
-    // NDCG@10 over the q110 label-relevance fixture: literal micro
-    // position weights, integer DCG, prefix-sum IDCG, truncating
-    // ratio. DuckDB re-derives the ranking, the weight table, and
-    // every quotient.
-    "q299_ndcg" -> ((s, dir) => {
-      import graft.functions.GraftFunctions.vecCosine
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("qlabel"))
-      val c = emb.select(col("vec_id").as("doc_id"),
-        col("embedding").as("cv"), col("label").as("clabel"))
-      val (ranked, relevant) = labelRetrieval(q, c)
-      graft.search.Metrics.ndcgAtK(ranked, relevant, k = 10)
-        .orderBy("query_id")
-    }),
-
-    // Release funnel composite over this round's gates: length →
-    // Flesch readability → token entropy → exact-dedup canonical,
-    // with per-language funnel counts and the survivors' milli mean
-    // length. Every gate rejects documents on this corpus. DuckDB
-    // re-derives all four gates and the funnel.
-    "q300_release_funnel" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val fl = graft.ops.TextAnalysis.fleschReadability(d)
-        .select(col("doc_id"), col("flesch_u3"))
-      val en = graft.ops.TextAnalysis.tokenEntropy(d)
-        .select(col("doc_id"), col("entropy_u6"))
-      val keep = d.groupBy(md5(col("text").cast("binary")).as("h"))
-        .agg(min("doc_id").as("doc_id"))
-        .select(col("doc_id"), lit(1L).as("g_dedup"))
-      d.join(fl, Seq("doc_id"), "left")
-        .join(en, Seq("doc_id"), "left")
-        .join(keep, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("g_dedup"))
-        .withColumn("g_len", (col("n_chars") >= 100).cast("long"))
-        .withColumn("g_read",
-          (coalesce(col("flesch_u3"), lit(-1L)) >= 0L).cast("long"))
-        .withColumn("g_ent", (coalesce(col("entropy_u6"), lit(-1L))
-          >= 1200000L).cast("long"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n0"),
-          sum("g_len").as("n_len"),
-          sum(expr("g_len * g_read")).as("n_read"),
-          sum(expr("g_len * g_read * g_ent")).as("n_ent"),
-          sum(expr("g_len * g_read * g_ent * g_dedup")).as("n_final"),
-          expr("CAST(sum(g_len * g_read * g_ent * g_dedup * n_chars) " +
-            "* 1000 div greatest(sum(g_len * g_read * g_ent " +
-            "* g_dedup), 1) AS BIGINT)").as("mean_chars_u3"))
-        .orderBy("lang")
-    }),
-
-    // Leave-one-group-out data valuation: the NB classifier retrained
-    // without each source bucket, held-out accuracy deltas against the
-    // full model. DuckDB retrains all five models from scratch.
-    "q301_logo_valuation" -> ((s, dir) =>
-      graft.ops.TextAnalysis.naiveBayesLogo(
-        t(s, dir, "documents").withColumn("grp",
-          expr("CAST(CAST(substring(source, 4) AS INT) % 4 AS STRING)")),
-        groupCol = "grp")
-        .orderBy("left_out")),
-
-    // BERT-style MLM corruption: 15% hash-derandomized selection,
-    // 80/10/10 mask/random/keep by coin residue, vocabulary-rank
-    // replacements. DuckDB replays every coin, branch, and
-    // replacement lookup.
-    "q302_mlm_masking" -> ((s, dir) =>
-      graft.ops.Curation.mlmMasking(t(s, dir, "documents"))
-        .orderBy("id", "pos")),
-
-    // Fleiss' kappa over three synthetic raters (lang + two
-    // hash-perturbed copies): exact rational agreement, one BigInt
-    // fraction, micro kappa. DuckDB re-derives raters, cells, and
-    // the HUGEINT quotient.
-    "q303_fleiss_kappa" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      def flip(salt: String, thr: Long) =
-        conv(substring(md5(concat(lit(salt),
-          col("doc_id").cast("string")).cast("binary")), 1, 8), 16, 10)
-          .cast("long") * 1000000L < lit(thr)
-      val r1 = d.select(col("doc_id"), lit("r1").as("rater"),
-        col("lang").as("lbl"))
-      val r2 = d.select(col("doc_id"), lit("r2").as("rater"),
-        when(flip("a:", 200000L * 4294967296L), lit("xx"))
-          .otherwise(col("lang")).as("lbl"))
-      val r3 = d.select(col("doc_id"), lit("r3").as("rater"),
-        when(flip("b:", 300000L * 4294967296L), lit("xx"))
-          .otherwise(col("lang")).as("lbl"))
-      graft.ops.Profile.fleissKappa(
-        r1.unionByName(r2).unionByName(r3), "doc_id", "rater", "lbl")
-    }),
-
-    // Consistent-hash ring rebalance audit: the 4-node vs 5-node
-    // assignment matrix (64 vnodes each) — keys only ever move TO the
-    // new node, ~1/5 of them. DuckDB re-derives both rings, every
-    // assignment incl. the wrap, and the movement counts.
-    "q304_consistent_hashing" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val n4 = (0 until 4).map(i => s"node$i")
-      val before = graft.ops.Layout
-        .consistentHashAssign(d, "doc_id", n4)
-        .select(col("id"), col("node").as("node_before"))
-      val after = graft.ops.Layout
-        .consistentHashAssign(d, "doc_id", n4 :+ "node4")
-        .select(col("id"), col("node").as("node_after"))
-      before.join(after, "id")
-        .groupBy("node_before", "node_after")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("node_before", "node_after")
-    }),
-
-    // Active-learning labeling queue: the 20 held-out docs with the
-    // smallest NB top1-top2 score margin. DuckDB re-trains the model,
-    // re-scores every (doc, class), and re-derives the queue.
-    "q305_uncertainty_queue" -> ((s, dir) =>
-      graft.ops.TextAnalysis.uncertaintySamples(t(s, dir, "documents"))
-        .orderBy("margin_u6", "doc_id")),
-
-    // df-pruned TF-IDF cosine join over a corpus with planted rare
-    // markers (one per 7-doc group): candidates only from rare-token
-    // postings, exact integer dots over ALL shared tokens, top-20 by
-    // 6dp cosine. DuckDB re-derives weights, candidates, and scores.
-    "q306_tfidf_cosine" -> ((s, dir) =>
-      graft.ops.Dedup.tfidfCosinePairs(
-        t(s, dir, "documents").withColumn("text",
-          expr("concat(text, ' rare', CAST(doc_id div 7 AS STRING))")),
-        maxDf = 20L, k = 20)),
-
-    // Haar wavelet sketch of the hourly event-count series: 256-hour
-    // zero-filled grid, 8 unnormalized integer levels, the
-    // approximation plus the 16 largest details. DuckDB replays every
-    // level fold and the top-K selection.
-    "q307_haar_sketch" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.haarSketch(
-        t(s, dir, "events"), "ts", gridLen = 256, topK = 16)),
-
-    // Derandomized RANSAC line fit over (doc_id, n_chars): 32 md5-
-    // drawn candidate pairs, integer residual consensus at tol=60,
-    // argmax inliers. DuckDB re-draws every candidate and re-counts
-    // every inlier.
-    "q308_ransac_line" -> ((s, dir) =>
-      graft.ops.Profile.ransacLine(
-        t(s, dir, "documents"), "doc_id", "doc_id", "n_chars",
-        b = 32, tol = 60L)),
-
-    // Rendezvous-hash removal audit (q304's complement): dropping
-    // node4 from the 5-node HRW assignment reassigns EXACTLY its
-    // keys, spread over the survivors. DuckDB re-derives every argmax
-    // and the movement matrix.
-    "q309_rendezvous_hashing" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val n5 = (0 until 5).map(i => s"node$i")
-      val before = graft.ops.Layout.rendezvousAssign(d, "doc_id", n5)
-        .select(col("id"), col("node").as("node_before"))
-      val after = graft.ops.Layout
-        .rendezvousAssign(d, "doc_id", n5.take(4))
-        .select(col("id"), col("node").as("node_after"))
-      before.join(after, "id")
-        .groupBy("node_before", "node_after")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("node_before", "node_after")
-    }),
-
-    // TPC-H Q22 shape: customers above the GLOBAL mean balance (exact
-    // integer cents threshold — no float-mean boundary flake) with no
-    // order in the final 90 days, rolled up per nation. Two broadcast
-    // scalars + anti-join + nation-dimension aggregate — the
-    // optimizer shape the plan should pick for free.
-    "q310_dormant_accounts" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .withColumn("cents",
-          expr("CAST(floor(c_acctbal * 100) AS BIGINT)"))
-      val thr = c.agg(
-        expr("CAST(sum(cents) div count(1) AS BIGINT)").as("thr"))
-      val o = t(s, dir, "orders")
-      val cut = o.agg(date_sub(max(col("o_orderdate")), 90).as("cut"))
-      val recent = o.crossJoin(broadcast(cut))
-        .filter(col("o_orderdate") > col("cut"))
-        .select(col("o_custkey").as("c_custkey"))
-      c.crossJoin(broadcast(thr))
-        .filter(col("cents") > col("thr"))
-        .join(recent, Seq("c_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cust"), sum("cents").as("sum_cents"))
-        .orderBy("c_nationkey")
-    }),
-
-    // LSH (b, r) parameter sweep for 64 minhashes at threshold 0.8:
-    // every banding's S-curve at t and t±0.1, discrimination-argmax
-    // recommendation. DuckDB re-enumerates and re-scores every row.
-    "q311_lsh_param_sweep" -> ((s, dir) =>
-      graft.ops.Dedup.lshParamSweep(s, totalHashes = 64, tPpm = 800000L)
-        .orderBy("b", "r")),
-
-    // Personalized PageRank over the q88 residue graph, teleporting
-    // only to the seed whitelist {0,10,20,30,40} — proximity-to-seeds
-    // scores, not global authority. Same exact-integer recurrence;
-    // DuckDB replays all 5 rounds with the seed-conditional base.
-    "q312_personalized_pagerank" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select((col("doc_id") % 50).as("src"))
-      val e = base.select(col("src"),
-          ((col("src") * col("src") + 3) % 50).as("dst"))
-        .unionByName(base.select(col("src"),
-          ((col("src") * 3 + 7) % 50).as("dst")))
-        .filter(col("src") =!= col("dst"))
-      graft.ops.GraphOps.personalizedPageRank(e,
-        seeds = Seq(0L, 10L, 20L, 30L, 40L), iters = 5).orderBy("id")
-    }),
-
-    // Lag-k autocorrelation of each event type's hourly count series
-    // (lags 1, 2, 24 over a 256-hour grid): exact centered products
-    // with the n² factors cancelled, one DECIMAL(38) widening for the
-    // ppm scale, constant series null. DuckDB re-derives the grid,
-    // centering, and every quotient.
-    "q313_acf" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.acf(t(s, dir, "events"), "ts",
-        "event_type", gridLen = 256, lags = Seq(1, 2, 24))
-        .orderBy("event_type", "lag")),
-
-    // Wald SPRT replay per event type: H0 p=0.4 vs H1 p=0.6 on
-    // P(value >= 100), alpha = beta = 0.05. The four log constants
-    // arrive as pre-fixed micro literals (ln 1.5 = 0.405465,
-    // ln 19 = 2.944439), so the whole walk is exact integer
-    // arithmetic both engines replay identically.
-    "q314_sprt" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.sprtReplay(t(s, dir, "events"),
-        "event_type", "ts", "event_id", col("value") >= 100.0,
-        lnSuccU6 = 405465L, lnFailU6 = -405465L,
-        upperU6 = 2944439L, lowerU6 = -2944439L)
-        .orderBy("event_type")),
-
-    // AMS/Count-Min join-size estimation on the lineitem l_partkey
-    // self-join (Σ cnt² — the second frequency moment a planner wants
-    // before picking broadcast vs shuffle vs salt): per-row cell inner
-    // products, min estimate, exact size, overestimate ppm, all through
-    // DECIMAL(38) widening. DuckDB re-derives the md5 buckets, both
-    // inner products, and the ppm quotient.
-    "q315_join_size_est" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      graft.ops.Profile.joinSizeEstimate(li, "l_partkey", li, "l_partkey",
-        depth = 4, width = 64).orderBy("hash_row")
-    }),
-
-    // Workload-level zone-map pruning audit on orders: linear-by-custkey
-    // vs Z-order(custkey, price) range-sharded into 16 files, scored
-    // against a 4-predicate box workload — files read, rows scanned,
-    // exact matches, prune/amplification ppm. DuckDB re-derives the
-    // Morton keys, the global ranks, every zone, and both quotients.
-    "q316_pruning_audit" -> ((s, dir) => {
-      import s.implicits._
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice) AS BIGINT)").as("price_d"))
-      val preds = Seq(
-        (0L, 10L, 25L, 0L, 1000000L),
-        (1L, 0L, 10000000L, 50000L, 100000L),
-        (2L, 10L, 100L, 50000L, 150000L),
-        (3L, 0L, 400L, 0L, 200000L)
-      ).toDF("pred_id", "x_lo", "x_hi", "y_lo", "y_hi")
-      graft.ops.Layout.pruningAudit(o, "o_custkey", "price_d",
-        "o_orderkey",
-        Seq("linear_x" -> col("o_custkey"),
-          "zorder" -> graft.ops.Layout.zValue(col("o_custkey"),
-            col("price_d"), bits = 21)),
-        preds, nFiles = 16)
-        .orderBy("layout", "pred_id")
-    }),
-
-    // Salting planner simulation on the events stream: per-key salt
-    // factors bounding any sub-key at 500 rows, then per-partition
-    // loads before/after over a 16-partition md5-bucketed shuffle —
-    // empty partitions report 0 (they ARE the skew signal). DuckDB
-    // re-derives the histogram, factors, exact share splits, and both
-    // load tables.
-    "q317_salt_plan" -> ((s, dir) =>
-      graft.ops.Skew.saltPlanLoads(t(s, dir, "events"), "event_type",
-        partitions = 16, maxRows = 500L)
-        .orderBy("partition")),
-
-    // High-entropy secret scan over documents, each doc carrying one
-    // planted md5-hex "credential" (32 chars over 16 symbols, entropy
-    // straddling the 2.6-nat threshold — some flag, some don't: the
-    // discrimination is the point). Per doc: candidate/flagged counts
-    // + top flagged token. DuckDB replays the identical lnU6 literals,
-    // every entropy quotient, and the tie-broken top pick.
-    "q318_secret_scan" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        concat_ws(" ", col("text"),
-          md5(col("doc_id").cast("string"))).as("t"))
-      graft.ops.TextAnalysis.secretScan(docs, "doc_id", "t",
-        minLen = 16, maxLen = 256, thresholdU6 = 2600000L)
-        .orderBy("doc_id")
-    }),
-
-    // Grid-DBSCAN over four planted md5-jittered blobs (+ a sparse
-    // shifted stray strip) derived from part keys: density clustering
-    // with explicit noise, the arbitrary-shape complement of k-means.
-    // Every role and min-label cluster id is re-derived by DuckDB from
-    // the identical point construction.
-    "q319_grid_dbscan" -> ((s, dir) => {
-      def j(tag: String) =
-        conv(substring(md5(concat_ws("#", lit(tag),
-          col("p_partkey").cast("string")).cast("binary")), 1, 8), 16, 10)
-          .cast("long") % 400
-      val pts = t(s, dir, "part").select(col("p_partkey").as("pid"),
-        (expr("(p_partkey % 4) % 2 * 1000") + j("x") +
-          when(col("p_partkey") % 97 === 0, 460L).otherwise(0L)).as("x"),
-        (expr("(p_partkey % 4) div 2 * 1000") + j("y")).as("y"))
-      graft.ops.Similarity.gridDbscan(pts, "pid", "x", "y",
-        eps = 25L, minPts = 4).orderBy("pid")
-    }),
-
-    // TPC-H Q21 shape (suppliers who kept orders waiting), adapted to
-    // this schema's columns: the sole-blame pattern — a supplier's
-    // line was LATE (shipped > 90 days after the order date) on a
-    // finished multi-supplier order where NO other supplier was late.
-    // The optimizer shape is the point: one fact⋈dim enrichment, then
-    // a semi AND an anti against the SAME enriched fact with different
-    // correlated predicates, then a dim-sized rollup. Exchange reuse
-    // shares the enriched scan across all three branches.
-    "q320_waiting_suppliers" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").select(col("o_orderkey"),
-          col("o_orderstatus"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
-          (col("l_shipdate") >
-            col("o_orderdate") + expr("INTERVAL 90 DAYS")).as("late"),
-          col("o_orderstatus").as("st"))
-      val l1 = l.filter(col("late") && col("st") === "F")
-      val l2 = l.select(col("ok").as("ok2"), col("sk").as("sk2"))
-      val l3 = l.filter(col("late"))
-        .select(col("ok").as("ok3"), col("sk").as("sk3"))
-      l1.join(l2, col("ok2") === col("ok") && col("sk2") =!= col("sk"),
-          "left_semi")
-        .join(l3, col("ok3") === col("ok") && col("sk3") =!= col("sk"),
-          "left_anti")
-        .join(t(s, dir, "supplier"), col("sk") === col("s_suppkey"))
-        .join(t(s, dir, "nation"),
-          col("s_nationkey") === col("n_nationkey") &&
-          col("n_nationkey") % 5 === 3, "left_semi")
-        .groupBy("s_name").agg(count(lit(1)).as("numwait"))
-        .orderBy(desc("numwait"), col("s_name")).limit(25)
-    }),
-
-    // Kleinberg burst detection per event type (first 600 events per
-    // key, s = 2, ln 2 and γ as pre-fixed micro literals): maximal
-    // state-1 intervals of the 2-state gap automaton with Kleinberg
-    // weights. DuckDB replays the d-recurrence forward, the backward
-    // state walk, and the gaps-and-islands rollup.
-    "q321_kleinberg_bursts" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.kleinbergBursts(t(s, dir, "events"),
-        "event_type", "ts", "event_id", sFactor = 2,
-        lnSU6 = 693147L, gammaU6 = 1000000L, maxSteps = 600)
-        .orderBy("event_type", "start_n")),
-
-    // Full two-level Louvain on the q273 ring-and-chords graph:
-    // phase-1 moves, contraction to the weighted community graph
-    // (self-loops = 2·E_c, the Q-preserving convention), phase-1
-    // again on the coarse graph, nodes relabeled through their
-    // super-node — with the exact modularity at BOTH levels. DuckDB
-    // replays every round at both levels, the contraction, and both
-    // Q quotients.
-    "q322_louvain_two_level" -> ((s, dir) => {
-      val raw = ringGraph(s, dir)
-      graft.ops.GraphOps.louvainTwoLevel(raw, iters = 2).orderBy("id")
-    }),
-
-    // Markov removal-effect attribution over user event journeys
-    // (conversion = purchase, paths truncated at first conversion):
-    // every channel's credit = conversion probability lost when its
-    // visits redirect to NULL — all scenarios share one ppm transition
-    // matrix, removal is just a clamp. DuckDB replays journey
-    // construction, the matrix, and all 12 value-iteration rounds.
-    "q323_markov_attribution" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.markovAttribution(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
-        convType = "purchase", iters = 12)
-        .orderBy("channel")),
-
-    // HRU greedy materialized-view selection over the (customer-group,
-    // quarter, priority) cube lattice on orders: all 8 view sizes from
-    // ONE cube() scan, then 3 greedy picks maximizing
-    // Σ max(0, cost(w) − |v|). DuckDB re-derives every lattice size
-    // and replays each greedy round's benefit table and tie-broken
-    // argmax.
-    "q324_view_selection" -> ((s, dir) => {
-      val base = t(s, dir, "orders").select(
-        (col("o_custkey") % 10).as("c"),
-        quarter(col("o_orderdate")).as("d"),
-        col("o_orderpriority").as("p"))
-      graft.ops.Layout.viewLatticeGreedy(base, Seq("c", "d", "p"), k = 3)
-        .orderBy("step")
-    }),
-
-    // Incremental view maintenance: a (customer-group, priority)
-    // COUNT/SUM-cents rollup of orders absorbs a synthetic CDC batch
-    // (deletes = orderkey % 7 rows, inserts = shifted % 11 rows)
-    // through delta propagation alone — the base is never re-read.
-    // The oracle RECOMPUTES the view over (base − deletes + inserts),
-    // so the gate is the IVM ≡ recompute contract itself.
-    "q325_ivm_agg_delta" -> ((s, dir) => {
-      val base = t(s, dir, "orders").select(col("o_orderkey"),
-        (col("o_custkey") % 10).as("g1"), col("o_orderpriority").as("g2"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v"))
-      val view = base.groupBy("g1", "g2")
-        .agg(count(lit(1)).as("cnt"), sum("v").as("sum_v"))
-      val dels = base.filter(col("o_orderkey") % 7 === 0)
-        .select(lit("D").as("op"), col("g1"), col("g2"), col("v"))
-      val ins = base.filter(col("o_orderkey") % 11 === 0)
-        .select(lit("I").as("op"), ((col("g1") + 1) % 10).as("g1"),
-          col("g2"), (col("v") + 500L).as("v"))
-      graft.ops.Scd.ivmAggDelta(view, dels.unionByName(ins),
-        Seq("g1", "g2")).orderBy("g1", "g2")
-    }),
-
-    // Selinger DP join ordering over the 5-table TPC-H-ish join graph
-    // (L–O, O–C, L–S, L–P): System-R cardinalities from exact NDVs,
-    // C_out cost, connected subsets only, fixed-order truncating
-    // divisions so both engines derive identical integers. DuckDB
-    // re-gathers every stat and replays the subset DP round by round.
-    "q326_selinger_join_order" -> ((s, dir) =>
-      graft.ops.Joins.selingerJoinOrder(
-        Seq("L" -> t(s, dir, "lineitem"), "O" -> t(s, dir, "orders"),
-          "C" -> t(s, dir, "customer"), "S" -> t(s, dir, "supplier"),
-          "P" -> t(s, dir, "part")),
-        Seq((0, "l_orderkey", 1, "o_orderkey"),
-          (1, "o_custkey", 2, "c_custkey"),
-          (0, "l_suppkey", 3, "s_suppkey"),
-          (0, "l_partkey", 4, "p_partkey")))
-        .orderBy("mask")),
-
-    // Optimizer-statistics quality audit on order totals (cents):
-    // equi-width vs equi-depth 16-bucket histograms scored on a
-    // 4-predicate range workload via the textbook per-bucket integer
-    // interpolation — the ANALYZE decision in numbers. Boundaries are
-    // exact dyadic percentiles, so DuckDB's quantile_cont re-derives
-    // them bit-equal; every estimate and err_ppm is replayed.
-    "q327_histogram_audit" -> ((s, dir) => {
-      import s.implicits._
-      val preds = Seq((0L, 0L, 5000000L), (1L, 10000000L, 20000000L),
-        (2L, 40000000L, 60000000L), (3L, 0L, 100000000L))
-        .toDF("pred_id", "q_lo", "q_hi")
-      val o = t(s, dir, "orders")
-        .select(expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-          .as("cents"))
-      graft.ops.Cleaning.histogramSelectivityAudit(o, "cents", preds,
-        bins = 16).orderBy("hist", "pred_id")
-    }),
-
-    // Roaring container planning over event postings (per-type doc-id
-    // sets + a '__all__' list that is fully consecutive): each 2¹⁶
-    // chunk picks array / bitmap / run from exact cardinality and run
-    // counts — the dense list plans a 6-byte run container while the
-    // scattered ones go bitmap/array. DuckDB re-derives every chunk's
-    // stats and the tie-broken container choice.
-    "q328_roaring_plan" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val posts = ev.select(col("event_type").as("term"),
-          col("event_id").as("doc"))
-        .unionByName(ev.select(lit("__all__").as("term"),
-          col("event_id").as("doc")))
-      graft.ops.Layout.roaringPlan(posts, "term", "doc")
-        .orderBy("term", "chunk")
-    }),
-
-    // Pettitt change-point localization per event type over the
-    // 256-hour grid: tie-broken integer ranks, U_m = 2W_m − m(L+1),
-    // earliest argmax |U| — where the level shifted, rank-robustly.
-    // DuckDB re-derives the grid, every rank, and the tie-broken pick.
-    "q329_pettitt_change" -> ((s, dir) =>
-      graft.streaming.EventsPipeline.pettittChangePoint(
-        t(s, dir, "events"), "ts", "event_type", gridLen = 256)
-        .orderBy("event_type")),
-
-    // Gale–Shapley stable matching: 6 suppliers (proposers) × 6
-    // nations (acceptors) with md5-derived two-sided preferences —
-    // the proposer-optimal stable assignment, synchronously (a pure
-    // function of the inputs where classic GS's visit order isn't).
-    // DuckDB re-derives both preference tables and replays 36
-    // deferred-acceptance rounds (the 6×6 worst-case bound; rounds
-    // past the fixpoint are no-ops).
-    "q330_stable_matching" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      def h(tag: String, x: Column, y: Column) =
-        conv(substring(md5(concat_ws("#", lit(tag), x.cast("string"),
-          y.cast("string")).cast("binary")), 1, 8), 16, 10)
-          .cast("long") % 1000000
-      val sup = t(s, dir, "supplier")
-        .filter(col("s_suppkey").between(1, 6))
-        .select(col("s_suppkey").as("p"))
-      val nat = t(s, dir, "nation")
-        .filter(col("n_nationkey").between(0, 5))
-        .select(col("n_nationkey").as("a"))
-      val cross = sup.crossJoin(nat)
-      val pp = cross
-        .withColumn("sc", h("p", col("p"), col("a")))
-        .withColumn("rank", row_number().over(Window.partitionBy("p")
-          .orderBy(desc("sc"), col("a"))).cast("long") - 1)
-        .select("p", "a", "rank")
-      val pa = cross.select(col("a"), col("p"),
-        h("a", col("a"), col("p")).as("score"))
-      graft.ops.Matching.stableMatching(pp, pa, maxRounds = 36)
-        .orderBy("p")
-    }),
-
-    // FD discovery over four orders columns: one exact
-    // multi-count-distinct pass finds every A → B dependency (and the
-    // o_orderkey candidate key pops out — it determines everything).
-    // DuckDB re-derives all 16 distinct counts and every verdict.
-    "q331_fd_discovery" -> ((s, dir) =>
-      graft.ops.Profile.fdDiscover(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_orderpriority"))
-        .orderBy("a", "b")),
-
-    // Zipf rank-frequency slope of the vocabulary: Theil-Sen median
-    // slope (outlier-robust, exact integer medians via count-based
-    // order statistics) over the top-64 tokens' (log10 rank, log10
-    // freq) micro points — the corpus-health profile next to Heaps'
-    // law (natural text sits near −1; templated/boilerplate corpora
-    // flatten). Top-64 via the TopKPerKey plan, never a global sort.
-    // The window over the 64 survivors ranks them; DuckDB re-derives
-    // ranks, both logs, and the median slope.
-    "q332_zipf_slope" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val freqs = t(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+"))
-          .as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("freq"))
-      val top = graft.plans.TopK.perKey(
-        freqs.withColumn("__k", lit(1L)), Seq("__k"),
-        Seq(("freq", false), ("tok", true)), k = 64)
-      val w = Window.partitionBy("__k")
-        .orderBy(desc("freq"), col("tok"))
-      val pts = top.withColumn("rank", row_number().over(w))
-        .select(lit(1L).as("grp"),
-          round(log10(col("rank").cast("double")) * 1000000, 0)
-            .cast("long").as("x_u6"),
-          round(log10(col("freq").cast("double")) * 1000000, 0)
-            .cast("long").as("y_u6"))
-      graft.ops.Profile.theilSenSlope(pts, "grp", "x_u6", "y_u6")
-        .orderBy("grp")
-    }),
-
-    // Binary-quantization recall: sign bits packed into 32-bit words
-    // (overflow-free bit_or — a SUM of shifted bits wraps differently
-    // per engine), XOR+popcount Hamming top-10 scored against the
-    // exact float-cosine top-10 — the 1-bit end of the int8 dial.
-    // DuckDB re-packs every code and replays both rankings.
-    "q333_binary_recall" -> ((s, dir) =>
-      graft.ops.VectorOps.binaryRecallAudit(
-        t(s, dir, "embeddings"), queryId = 0L, k = 10)
-        .orderBy("rn")),
-
-    // TPC-H Q16 shape (supplier-count by part attributes), adapted:
-    // brand/type/size predicate pushdown on the dim, a NOT-IN-style
-    // anti join against the "complaints" supplier list (negative
-    // balance), then COUNT DISTINCT suppliers per attribute triple —
-    // the distinct-agg-after-anti optimizer pattern.
-    "q334_parts_supplier_cnt" -> ((s, dir) => {
-      val excl = t(s, dir, "supplier").filter(col("s_acctbal") < 0)
-        .select(col("s_suppkey"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part")
-          .filter(col("p_brand") =!= "Brand#13" &&
-            !col("p_type").startsWith("ECONOMY") &&
-            col("p_size").isin(5, 10, 24, 30)),
-          col("l_partkey") === col("p_partkey"))
-        .join(excl, col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"),
-          col("p_size").cast("long").as("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(desc("supplier_cnt"), col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-
-    // Densitometric boilerplate classification (Kohlschütter WSDM'10,
-    // boilerpipe's NumWordsRules stumps in integer-exact form): each
-    // block judged in (prev, curr, next) CONTEXT — a short block
-    // sandwiched between real paragraphs survives where q168's
-    // per-block threshold kills it. Features aux-dumped; DuckDB
-    // replays the lag/lead context and every stump.
-    "q335_boilerplate_density" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val html = t(s, dir, "documents").select(col("doc_id"), concat(
-        lit("<html><body><nav><a href=\"/\">Home</a> <a href=\"/a\">" +
-          "About</a></nav><div>"),
-        col("text"),
-        lit("</div><p>Share this now</p><aside>Sponsored <a " +
-          "href=\"/buy\">buy</a></aside><footer><a href=\"/t\">Terms" +
-          "</a></footer></body></html>")).as("html"))
-      val feats = html.select(col("doc_id"),
-          explode(graft.text.HtmlExtract.blockDensityUdf(col("html")))
-            .as("b"))
-        .select(col("doc_id"), col("b._1").cast("long").as("block_idx"),
-          col("b._2").cast("long").as("words"),
-          col("b._3").cast("long").as("text_len"),
-          col("b._4").cast("long").as("link_len"),
-          col("b._5").cast("long").as("chrome"))
-      writeAux(feats, dir, "q335_blocks")
-      val w = Window.partitionBy("doc_id").orderBy("block_idx")
-      val ctx = feats
-        .withColumn("pw", coalesce(lag("words", 1).over(w), lit(0L)))
-        .withColumn("pt", coalesce(lag("text_len", 1).over(w), lit(0L)))
-        .withColumn("pl", coalesce(lag("link_len", 1).over(w), lit(0L)))
-        .withColumn("nw", coalesce(lead("words", 1).over(w), lit(0L)))
-        .withColumn("content",
-          graft.text.HtmlExtract.densitometricContent(col("words"),
-            col("text_len"), col("link_len"), col("pw"), col("pt"),
-            col("pl"), col("nw"), col("chrome")))
-      ctx.groupBy("doc_id").agg(count(lit(1)).as("n_blocks"),
-          sum(when(col("content"), 1L).otherwise(0L)).as("n_content"),
-          sum(when(col("content"), col("words")).otherwise(0L))
-            .as("content_words"))
-        .orderBy("doc_id")
-    }),
-
-    // SimRank over a planted citation graph (papers 0..5 cite targets
-    // 6..8, targets cite hub 9): "similar because cited by similar" —
-    // the global structural-similarity complement to q254's local
-    // neighbor overlap; 3 truncated-series rounds in exact ppm.
-    // DuckDB replays the in-degree table and every round.
-    "q336_simrank" -> ((s, dir) => {
-      val n = t(s, dir, "documents")
-        .select((col("doc_id") % 6).as("n")).distinct()
-      val raw = n.selectExpr("n AS src", "6 + n % 3 AS dst")
-        .unionByName(n.selectExpr("n AS src", "6 + (n + 1) % 3 AS dst"))
-        .unionByName(n.filter(col("n") < 3)
-          .selectExpr("6 + n AS src", "9 AS dst"))
-      graft.ops.GraphOps.simRank(raw, iters = 3, cPpm = 800000L)
-        .orderBy("a", "b")
-    }),
-
-    // Dictionary-encoding advisor over part attribute columns and the
-    // unique customer name: the Parquet writer decision from exact
-    // column statistics — low-cardinality brands/types go dict, the
-    // key-like name goes plain. DuckDB re-derives every moment, the
-    // integer bit width, and each verdict.
-    "q337_encoding_advisor" -> ((s, dir) =>
-      graft.ops.Layout.encodingAdvisor(t(s, dir, "part"),
-          Seq("p_name", "p_brand", "p_type"))
-        .unionByName(graft.ops.Layout.encodingAdvisor(
-          t(s, dir, "customer"), Seq("c_name")))
-        .orderBy("column_name")),
-
-    // PSI drift of event values (cents), first time-half = reference,
-    // second = current, over 8 reference-decile-style dyadic bins —
-    // the industry drift score with its 0.1/0.25 rule of thumb, in
-    // exact 10⁻¹² units (one micro-rounded ln per bin). DuckDB
-    // re-derives the midpoint split, the dyadic cuts, every share,
-    // and both PSI columns.
-    "q338_psi_drift" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        unix_timestamp(col("ts")).as("ts_s"))
-      val mid = ev.agg(
-        expr("CAST((min(ts_s) + max(ts_s)) div 2 AS BIGINT)").as("mid"))
-      val flagged = ev.crossJoin(broadcast(mid))
-        .select(col("cents"),
-          when(col("ts_s") > col("mid"), 1L).otherwise(0L).as("period"))
-      graft.ops.Cleaning.psiDrift(flagged, "cents", "period", bins = 8)
-        .orderBy("bin")
-    }),
-
-    // ANN-pruned corpus×corpus semantic contamination (the r10 judge's
-    // top ask): semanticContamination(mode="ivf") streams eval probes
-    // against IVF candidate cells — an equi-join on centroid, no
-    // data-proportional broadcast, no cross join — and this query
-    // GRADES it against the brute broadcast contract per eval row (the
-    // q202 recall-audit pattern). The IVF fit is deterministic (seeded
-    // Lloyd's over the smallest-xxhash64 sample), so the in-query index
-    // rebuilt for the aux dump is bit-identical to the one inside the
-    // pruned path; DuckDB recomputes EVERY cosine, both flag sets, and
-    // each eval's candidate recall from the dumped assignments/probes.
-    "q339_contamination_pruned" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val ev = emb.filter(col("vec_id") % 20 === 0)
-      val ivf = new Similarity.IvfIndex(emb, nCentroids = 8)
-      writeAux(ivf.assigned.select("vec_id", "centroid"), dir, "q339_assign")
-      writeAux(ivf.probeAssign(ev, nProbe = 2)
-        .select(col("vec_id").as("eval_id"), col("centroid")),
-        dir, "q339_probes")
-      val pruned = graft.ops.Curation.semanticContamination(
-          emb, ev, "vec_id", "embedding", minCos = 0.3,
-          mode = "ivf", nCentroids = 8, nProbe = 2)
-        .groupBy("eval_id").agg(count(lit(1)).as("n_pruned"))
-      val brute = graft.ops.Curation.semanticContamination(
-          emb, ev, "vec_id", "embedding", minCos = 0.3)
-        .groupBy("eval_id").agg(count(lit(1)).as("n_brute"))
-      brute.join(pruned, Seq("eval_id"), "left")
-        .withColumn("n_pruned", coalesce(col("n_pruned"), lit(0L)))
-        .withColumn("recall_pm", expr("n_pruned * 1000 div n_brute"))
-        .select("eval_id", "n_brute", "n_pruned", "recall_pm")
-        .orderBy("eval_id")
-    }),
-
-    // Suffix-array ExactSubstr (Lee et al. 2022), the arbitrary-length
-    // replacement for the fixed-k window ladder (r10 judge ask #3): a
-    // 12-token boilerplate is planted on docs ≡ 0 mod 7 — a length the
-    // k ∈ {8, 16} grid cannot certify — and repeatedSpanStatsExact
-    // finds it via 3 prefix-doubling rounds plus the two-window
-    // (rank_3(pos), rank_3(pos+4)) sparse-table test. DuckDB replays
-    // the ENTIRE construction: positions + sentinels, every doubling
-    // round's exact integer dense ranks, the pair-key grouping, and
-    // the gaps-and-islands span merge.
-    "q340_exactsubstr_sa" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), when(col("doc_id") % 7 === 0,
-          lit(" exact substr pass finds arbitrary length repeats" +
-            " beyond any fixed k grid")).otherwise(lit(""))).as("text"))
-      graft.ops.SuffixArray.repeatedSpanStatsExact(
-          planted, "doc_id", "text", minLen = 12)
-        .orderBy("doc_id")
-    }),
-
-    // The suffix-array read-out proper: adjacent-rank LCP over the
-    // fully-resolved order (7 doubling rounds cover the ≤ 128-position
-    // docs), surfacing maximal cross-doc repeats with their EXACT
-    // lengths — two planted boilerplates (9 and 18 tokens) on a
-    // 60-doc slice. DuckDB replays the total order, the rank-adjacency
-    // pairing, all 8 sparse-table LCP descent levels, and the
-    // left-maximality check.
-    "q341_sa_adjacent_lcp" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").filter(col("doc_id") < 60)
-        .select(col("doc_id"), concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit(" please subscribe to our newsletter for free updates" +
-              " today")).otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit(" this opinion is subject to formal revision before" +
-              " publication in the preliminary print of the united" +
-              " states reports")).otherwise(lit(""))).as("text"))
-      graft.ops.SuffixArray.adjacentLcpRepeats(
-          planted, "doc_id", "text", minLen = 8, rounds = 7)
-        .orderBy("doc_a", "pos_a", "doc_b", "pos_b")
-    }),
-
-    // BATCHED hybrid-HNSW serving (r10 judge ask #5): three queries
-    // walk the prebuilt graph in ONE plan — every hop a (qid, id)-keyed
-    // frontier⋈graph join (HnswIndex.searchBatch), BM25 batched per
-    // searchAll's shared tail, per-query RRF fusion. DuckDB replays
-    // ALL THREE walks simultaneously through qid-partitioned CTEs
-    // (entry, 6 descent steps, 3 beam hops at ef = 16), every BM25
-    // term score per query, and the per-query fusion — the q215 oracle
-    // generalized to a query table.
-    "q342_hybrid_hnsw_batch" -> ((s, dir) => {
-      import s.implicits._
-      val (index, stats) = chunkIndex(s, dir)
-      val (n, avgLen, hs) = hnswBuild(index)
-      val cfg = HybridSearch.Config(k = 5)
-      val queryTexts = Seq("filter join scan vector",
-        "court appeal motion record", "stream window aggregate state")
-      val queries = queryTexts.zipWithIndex
-        .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
-      writeAux(hs.idMap.join(index, "id")
-        .select("hid", "id", "chunk_id", "tokens", "dense_vec"),
-        dir, "q342_index")
-      writeAux(hs.hnsw.levels, dir, "q342_levels")
-      writeAux(hs.hnsw.graph.select("layer", "id", "nbr"), dir, "q342_graph")
-      val emb = graft.embed.HashingEmbedder.default
-      writeAux(queryTexts.zipWithIndex.map { case (q, i) =>
-        (i.toLong, emb.embedQuery(q).toSeq, graft.text.Bm25.tokenize(q))
-      }.toDF("qid", "qv", "terms"), dir, "q342_queries")
-      HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen, queries, cfg)
-        .select("query_id", "id", "chunk_id", "rrf_score",
-          "dense_score", "bm25_score")
-        .orderBy("query_id", "id")
-    }),
-
-    // HNSW tombstone repair (r10 judge ask #4): 20% of the corpus is
-    // deleted, and repairHnswGraph sweeps the dangling edges while
-    // re-linking each bereaved survivor to its deleted neighbors'
-    // OTHER neighbors (union-of-neighbors), top-lost(u) by cosine,
-    // closed symmetrically. The original graph dumps as aux; DuckDB
-    // replays the ENTIRE repair — alive split, loss counts, candidate
-    // generation, every replacement cosine, the per-(layer, u)
-    // ranking, and the symmetric closure — and must reproduce the
-    // repaired edge table bit-for-bit.
-    "q343_hnsw_repair" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val idx = new Similarity.HnswIndex(emb, m = 8, maxLevel = 3)
-      val tomb = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
-      writeAux(idx.graph.select("layer", "id", "nbr", "cos"),
-        dir, "q343_graph")
-      Similarity.repairHnswGraph(idx.graph, tomb, emb)
-        .orderBy("layer", "id", "nbr")
-    }),
-
-    // STREAMING curation composite (r10 judge ask #2): the q180 gate
-    // chain as continuous admission — three ascending-id micro-batches
-    // flow through foreachBatch, each admitted against STORED
-    // digest/signature state under the online first-wins rule (reject
-    // iff a matching smaller id exists in state ∪ batch — batching-
-    // invariant and replay-idempotent, see CurationStream), language
-    // gated by a FROZEN q213-fixture profile, quality/repetition
-    // stateless, output a versioned snapshot. Plants: %17≡3 reversed
-    // (lang fail), %13≡1 exact copies at +10000 (exact fail), %11≡2
-    // near-dup copies at +20000 (agreement fail). DuckDB re-derives
-    // every gate — normalization, smaller-id digest rule, the full
-    // 16-hash/4-band LSH with SIGNATURE-AGREEMENT verification,
-    // profile training + classification, logit, top-bigram — straight
-    // from the documents table; the batching must be invisible.
-    "q344_curation_stream" -> ((s, dir) => {
-      val tmp = Phase("stream") { curationStreamFixture(s, dir) }
-      val out = graft.index.Snapshots.readVersion(s, s"$tmp/out",
-          graft.index.Snapshots.versions(s, s"$tmp/out").last)
-        .select("id", "n_chars", "pass_exact", "pass_neardup",
-          "pred_lang", "margin6", "logit", "top_cnt", "n_pairs",
-          "pass_lang", "pass_quality", "pass_rep", "admitted")
-        .orderBy("id")
-        .localCheckpoint() // pin rows, then reclaim the tmp fixture
-      graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-      out
-    }),
-
-    // ExactSubstr REMOVAL via the suffix array — q193's excision with
-    // q340's arbitrary-length guarantee: the planted 12-token
-    // boilerplate (invisible to any k ∈ {8,16}-grid certificate at
-    // L = 12) is excised from EVERY copy; matching is case-folded,
-    // editing preserves the original tokens. DuckDB replays the
-    // doubling rounds, the two-window grouping, the span merge, and
-    // every per-token keep/drop decision, then rebuilds each cleaned
-    // document in position order.
-    "q345_exactsubstr_removal" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), when(col("doc_id") % 7 === 0,
-          lit(" exact substr pass finds arbitrary length repeats" +
-            " beyond any fixed k grid")).otherwise(lit(""))).as("text"))
-      graft.ops.SuffixArray.removeRepeatedSpansExact(
-          planted, "doc_id", "text", minLen = 12)
-        .orderBy("doc_id")
-    }),
-
-    // BATCHED residual IVF-PQ (the serving-matrix rule applied to the
-    // PQ tier, completing the r10 stretch ask): three queries probe
-    // their nProbe cells map-side, every (query, cell) pair carries a
-    // flattened per-cell residual LUT (broadcast-tiny), candidates
-    // score via array lookups through per-query bounded heaps — ONE
-    // plan, no driver loop. DuckDB re-derives every residual, every
-    // per-(query, cell) LUT entry, and each query's merged top-10 —
-    // the q152 oracle generalized to a query table.
-    "q346_ivfpq_batch" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val idx = new Similarity.IvfPqResidualIndex(emb, nCells = 16,
-        m = 4, k = 16, maxFitSample = 2000)
-      val queries = emb.filter(col("vec_id").isin(2L, 31L, 77L))
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      writeAux(idx.coarse.assigned.select("vec_id", "centroid"),
-        dir, "q346_assigned")
-      writeAux(idx.coarse.probeAssign(
-          queries.select(col("query_id").as("vec_id"),
-            col("qv").as("embedding")), nProbe = 4)
-        .select(col("vec_id").as("qid"), col("centroid")),
-        dir, "q346_probes")
-      writeAux(idx.coarse.centroidRows(s), dir, "q346_centroids")
-      writeAux(idx.pq.codebookRows(s), dir, "q346_codebooks")
-      writeAux(idx.pq.encodedRows, dir, "q346_codes")
-      idx.queryBatch(queries, topK = 10, nProbe = 4)
-        .orderBy("query_id", "adc_dist", "vec_id")
-    }),
-
-    // Incremental IVF-PQ maintenance (the q153 generations discipline
-    // extended through the PQ stage): coarse centroids AND residual
-    // codebooks fit on the first half, then FREEZE; the second half
-    // admits via one pointwise encode pass into generation 1. Output =
-    // the merged on-disk generations; oracle = a one-pass re-encode of
-    // everything under the same frozen quantizers (aux). Equality
-    // proves the whole encode path — assignment, residual, code
-    // argmin — commutes with batching, the property that lets a
-    // 100 TB code table grow without ever being re-read.
-    "q347_ivfpq_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") % 2 === 0)
-      val batch = emb.filter(col("vec_id") % 2 === 1)
-      val idx = new Similarity.IvfPqResidualIndex(base, nCells = 16,
-        m = 4, k = 16, maxFitSample = 2000)
-      val path = auxPath(dir) + "/q347_index"
-      graft.ops.Joins.deleteRecursively(new java.io.File(path))
-      idx.appendGeneration(path, base, gen = 0)
-      idx.appendGeneration(path, batch, gen = 1)
-      // dump the FROZEN quantizers, not a Spark-side re-encode: the
-      // oracle re-derives every assignment, residual, and code argmin
-      // from these in SQL, so a bug shared by encodeAssign and
-      // appendGeneration cannot self-certify (r11 advice)
-      writeAux(idx.coarse.centroidRows(s), dir, "q347_centroids")
-      writeAux(idx.pq.codebookRows(s), dir, "q347_codebooks")
-      s.read.parquet(path)
-        .select(col("vec_id"),
-          col("generation").cast("int").as("generation"),
-          col("centroid").cast("int").as("centroid"),
-          posexplode(col("codes")).as(Seq("s", "code")))
-        .select(col("vec_id"), col("generation"), col("centroid"),
-          col("s").cast("int").as("s"), col("code").cast("int").as("code"))
-        .orderBy("vec_id", "s")
-    }),
-
-    // Exact-substring eval contamination via the suffix array — the
-    // fourth decontamination member (exact 5-gram q60, MinHash q178,
-    // embedding q207/q339): eval docs (≡ 0 mod 50) and train docs
-    // ≡ 3 mod 7 share a planted 12-token answer span (off the
-    // {8,16} k-grid); train docs ≡ 5 mod 13 share a DIFFERENT
-    // 12-token train-only boilerplate that must NOT flag — a rank-pair
-    // group contaminates only when it holds BOTH sides. DuckDB replays
-    // the doubling rounds, the eval-marked grouping, and the span
-    // merge per train doc.
-    "q348_exactsubstr_contam" -> ((s, dir) => {
-      val secret = " benchmark answer span leaks verbatim into web" +
-        " crawl training corpora every day"
-      val boiler = " shared internal navigation chrome repeats across" +
-        " many training documents without leaking ever"
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 50 === 0 || col("doc_id") % 7 === 3,
-            lit(secret)).otherwise(lit("")),
-          when(col("doc_id") % 13 === 5 && col("doc_id") % 50 =!= 0,
-            lit(boiler)).otherwise(lit(""))).as("text"))
-      graft.ops.SuffixArray.exactSubstrContamination(planted,
-          "doc_id", "text", isEval = col("doc_id") % 50 === 0,
-          minLen = 12)
-        .orderBy("doc_id")
-    }),
-
-    // DSIR importance selection (Xie et al. 2023): raw docs ≡ 3 mod 7
-    // arrive vowel-mangled (off the target distribution), the target
-    // exemplars are the clean ≡ 0 mod 10 slice, and the budget keeps
-    // the 200 raw docs whose hashed-bigram likelihood ratio
-    // log p̂_target − log p̂_raw ranks highest. DuckDB retrains BOTH
-    // hashed profiles, recomputes every doc's exact micro-log weight,
-    // and replays the rank cut.
-    "q349_dsir_select" -> ((s, dir) => {
-      val base = t(s, dir, "documents")
-      val raw = base.select(col("doc_id"),
-        when(col("doc_id") % 7 === 3,
-          translate(col("text"), "aeiou", "zzzzz"))
-          .otherwise(col("text")).as("text"))
-      val target = base.filter(col("doc_id") % 10 === 0)
-        .select("doc_id", "text")
-      graft.ops.Curation.dsirSelect(raw, target, "doc_id", "text",
-          budgetDocs = 200)
-        .orderBy("doc_id")
-    }),
-
-    // Batched + tombstoned HNSW serving — the last cell of the
-    // delete × batching matrix: three queries walk the pre-delete
-    // graph in one plan, deleted nodes (≡ 0 mod 5) stay walkable as
-    // routes but are filtered from every query's top-k (the
-    // takedown-latency window before a repair sweep lands). DuckDB
-    // replays all three walks through the qid-keyed CTEs and applies
-    // the same final anti-filter.
-    "q350_hnsw_batch_tombstoned" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val idx = new Similarity.HnswIndex(emb, m = 8, maxLevel = 3)
-      val tomb = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
-      val queries = emb.filter(col("vec_id").isin(1L, 26L, 52L))
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      writeAux(idx.levels, dir, "q350_levels")
-      writeAux(idx.graph.select("layer", "id", "nbr"), dir, "q350_graph")
-      idx.searchBatch(queries, k = 10, tombstones = Some(tomb))
-        .orderBy(col("query_id"), desc("cos"), col("vec_id"))
-    }),
-
-    // TPC-H Q17 shape — the correlated scalar-aggregate predicate
-    // (revenue lost to small-quantity orders): rows qualify when their
-    // quantity undercuts 20% of their OWN part's average. The
-    // decorrelated plan: the dim predicate broadcasts into a semi
-    // pruning of the fact table FIRST (per-part stats aggregate only
-    // the filtered slice, never the full fact table), then the exact
-    // integer form of qty < 0.2·avg — 5·qty·cnt < sumq — avoids the
-    // float threshold both engines would have to agree on. Money rides
-    // the cents trick; the yearly average is a truncating div.
-    "q351_small_qty_revenue" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#4" && col("p_size") < 20)
-        .select("p_partkey")
-      val lp = l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"),
-          col("l_quantity").cast("long").as("qty"),
-          expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"))
-      val stats = lp.groupBy("l_partkey")
-        .agg(sum("qty").as("sumq"), count(lit(1)).as("cnt"))
-      lp.join(stats, "l_partkey")
-        .filter(col("qty") * col("cnt") * 5 < col("sumq"))
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(sum("cents"), lit(0L)).as("sum_cents"))
-        .select(col("n_rows"), col("sum_cents"),
-          expr("sum_cents div 7").as("avg_yearly_cents"))
-    }),
-
-    // Materialized-view rewrite routing — the read-side complement of
-    // q324's HRU view SELECTION: three grouping views materialize over
-    // lineitem, and a groupBy(rf) aggregate routes to the CHEAPEST
-    // subsuming one (fewest rows, tie → name) and re-aggregates its
-    // rows instead of the fact table. DuckDB rebuilds every view,
-    // replays the size-based routing decision, and re-derives the
-    // answer from the SAME chosen view.
-    "q352_view_rewrite" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem").select(
-        col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-        month(col("l_shipdate")).as("mth"),
-        expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"))
-      def view(cols: String*) = cols.toSeq -> l.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
-      val views = Map(
-        "v_rf_ls" -> view("rf", "ls"),
-        "v_rf_mth" -> view("rf", "mth"),
-        "v_ls_mth" -> view("ls", "mth"))
-      graft.ops.Views.routeAndAnswer(views, Seq("rf"),
-          Seq("cnt", "sum_cents"))
-        .orderBy("rf")
-    }),
-
-    // Per-document provenance hash chain — the governance record
-    // (takedown audits, "which pipeline produced this example?"):
-    // genesis → normalize → truncate200 → mask_digits, each entry's
-    // chain committing to the whole history, then the self-verifier's
-    // ok bit. DuckDB recomputes EVERY content digest and chain link
-    // from documents alone — an honest run verifies everywhere, and
-    // any divergence between the engines' transforms would surface as
-    // a hash mismatch rather than a silent drift.
-    "q353_provenance_chain" -> ((s, dir) => {
-      import graft.ops.Provenance
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      val normed = d.select(col("doc_id"),
-        TextAnalysis.normalizeText(col("text")).as("text"))
-      val trunc = normed.select(col("doc_id"),
-        substring(col("text"), 1, 200).as("text"))
-      val masked = trunc.select(col("doc_id"),
-        regexp_replace(col("text"), "[0-9]+", "#").as("text"))
-      val ledger = Provenance.appendStage(
-        Provenance.appendStage(
-          Provenance.appendStage(Provenance.genesis(d), normed,
-            "normalize"),
-          trunc, "truncate200"),
-        masked, "mask_digits")
-      Provenance.verify(ledger).orderBy("doc_id", "seq")
-    }),
-
-    // Lattice IVM + routing end-to-end: the views materialize on the
-    // pre-1998 slice only, the post-1998 rows arrive as ONE insert
-    // batch applied through Views.applyDelta (per-view pre-aggregated
-    // deltas — the base table is never rescanned), and the query
-    // routes over the REFRESHED lattice. Additivity makes refresh ≡
-    // recompute, so the oracle is q352's full-table replay verbatim —
-    // any drift in the delta merge shows up as a value mismatch.
-    "q354_view_ivm_route" -> ((s, dir) => {
-      val (pre, post) = lineitemSplit(s, dir)
-      def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
-      val views = Map(
-        "v_rf_ls" -> view("rf", "ls"),
-        "v_rf_mth" -> view("rf", "mth"),
-        "v_ls_mth" -> view("ls", "mth"))
-      val refreshed = graft.ops.Views.applyDelta(views, post,
-        Seq(count(lit(1)).as("cnt"), sum("cents").as("sum_cents")))
-      graft.ops.Views.routeAndAnswer(refreshed, Seq("rf"),
-          Seq("cnt", "sum_cents"))
-        .orderBy("rf")
-    }),
-
-    // BITEMPORAL lookup — valid time × transaction time, the two-axis
-    // question lakehouse history must answer ("what did we BELIEVE at
-    // commit T about the state at time V?"): the SCD2 dimension
-    // commits TWICE into a versioned snapshot — tx 1 from pre-1998
-    // observations only, tx 2 after the remaining orders arrive — and
-    // every probe customer asks for its status as of valid-time
-    // 2000-06-15 under BOTH transaction versions. Where late data
-    // changed the answer, `revised` = 1 — the audit view a governance
-    // review needs when features were trained against tx 1. DuckDB
-    // rebuilds both dimension states and replays both as-of lookups.
-    "q355_bitemporal" -> ((s, dir) => {
-      val log = t(s, dir, "orders").select(
-        col("o_custkey").as("custkey"), col("o_orderdate").as("ts"),
-        col("o_orderkey").as("seq"), col("o_orderstatus").as("status"))
-      def dim(l: DataFrame) = graft.ops.Scd
-        .scd2Build(l, "custkey", "ts", "seq", Seq("status"))
-        .withColumn("id", concat_ws("|", col("custkey"), col("version")))
-      val path = auxPath(dir) + "/q355_dim"
-      graft.ops.Joins.deleteRecursively(new java.io.File(path))
-      graft.index.Snapshots.replaceVersioned(s,
-        dim(log.filter(col("ts") < "1998-01-01")), path)
-      graft.index.Snapshots.replaceVersioned(s, dim(log), path)
-      val probes = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"))
-        .filter(col("custkey") % 10 === 7)
-        .withColumn("asof", to_timestamp(lit("2000-06-15 00:00:00")))
-      def lookup(v: Long, out: String) = graft.ops.Scd.pitJoin(probes,
-          graft.index.Snapshots.readVersion(s, path, v),
-          "custkey", "asof", Seq("status"))
-        .select(col("custkey"), col("status").as(out))
-      lookup(1, "status_tx1").join(lookup(2, "status_tx2"), Seq("custkey"))
-        .select(col("custkey"),
-          coalesce(col("status_tx1"), lit("none")).as("status_tx1"),
-          coalesce(col("status_tx2"), lit("none")).as("status_tx2"),
-          when(!(col("status_tx1") <=> col("status_tx2")), 1L)
-            .otherwise(0L).as("revised"))
-        .orderBy("custkey")
-    }),
-
-    // Postings-served BM25 (r11 judge ask #1): the same hybrid request
-    // as q54, but the sparse branch routes through the INVERTED INDEX
-    // (IndexWriter.postings → Config.postings → bm25TopKPostings) —
-    // per-request sparse work proportional to the query terms' postings,
-    // never a corpus token scan (PlanSpec guards the plan). The oracle
-    // is the SCAN-PATH arithmetic re-derived by DuckDB from the dumped
-    // index, so a hash match IS postings-path ≡ scan-path bit-for-bit.
-    "q356_bm25_postings" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-      val stats = s.read.parquet(s"$base/stats")
-      val p = s.read.parquet(s"$base/params").first()
-      val (n, avgLen) = (p.getLong(0), p.getDouble(1))
-      val postings = graft.index.IndexWriter.postings(index)
-      val cfg = HybridSearch.Config(k = 5, postings = Some(postings))
-      val queryText = "filter predicate pushdown scan"
-      writeAux(index.select("id", "chunk_id", "tokens"), dir, "q356_index")
-      val qVec = graft.embed.HashingEmbedder.default.embedQuery(queryText)
-      writeAux(HybridSearch.denseTopK(index, qVec,
-        cfg.k * cfg.prefetchMultiplier), dir, "q356_dense")
-      HybridSearch.search(index, stats, n, avgLen, queryText, cfg)
-        .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
-    }),
-
-    // SEGMENT-INCREMENTAL ExactSubstr contamination (r11 judge ask #3):
-    // q348's corpus split into a FROZEN eval segment (its substring key
-    // table built once — content digests, since rank classes don't
-    // compare across segments) and two train batches admitted
-    // independently, each building suffix ranks over the batch alone
-    // and joining its per-group digests against the stored keys — the
-    // eval text is never re-read, batch cost is batch-sized. Output
-    // must equal the full-rebuild q348 semantics on the same corpus;
-    // DuckDB verifies INDEPENDENTLY by direct window equality (train
-    // window ∈ eval windows), not by replaying either construction.
-    "q357_sa_incremental" -> ((s, dir) => {
-      val planted = saPlantedDocs(s, dir)
-      val evalDocs = planted.filter(col("doc_id") % 50 === 0)
-      val keys = Phase("build") {
-        graft.ops.SuffixArray.substrKeyTable(
-          evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
-      }
-      val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
-        col("doc_id") < 250)
-      val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
-        col("doc_id") >= 250)
-      graft.ops.SuffixArray.exactSubstrContaminationIncremental(
-          b1, keys, "doc_id", "text", minLen = 12)
-        .unionByName(graft.ops.SuffixArray
-          .exactSubstrContaminationIncremental(
-            b2, keys, "doc_id", "text", minLen = 12))
-        .orderBy("doc_id")
-    }),
-
-    // Streaming curation + COMPACTION EPOCH (r11 judge ask #4): the
-    // q344 stream admits first-wins (the only batching-invariant online
-    // near-dup rule), then CurationStream.reconcile closes the corpus —
-    // clusters rebuild from the accumulated SIGNATURE state (text never
-    // re-read), survivors upgrade to keep-best (longest n_chars, tie →
-    // min id — the q180/q183 rule), and the result commits as the next
-    // snapshot version. The +20000 near-dup plants carry one EXTRA
-    // token, so keep-best must flip each cluster's survivor from the
-    // original (first-wins' choice) to the longer copy. DuckDB replays
-    // the whole chain: gates, banding + signature agreement, the
-    // reachability closure, and the per-cluster argmax.
-    "q358_curation_reconcile" -> ((s, dir) => {
-      val tmp = Phase("stream") { curationStreamFixture(s, dir) }
-      Phase("reconcile") {
-        graft.streaming.CurationStream.reconcile(s, s"$tmp/out", s"$tmp/state")
-      }
-      val out = graft.index.Snapshots.readVersion(s, s"$tmp/out",
-          graft.index.Snapshots.versions(s, s"$tmp/out").last)
-        .select("id", "n_chars", "pass_exact", "pass_neardup",
-          "pred_lang", "margin6", "logit", "top_cnt", "n_pairs",
-          "pass_lang", "pass_quality", "pass_rep", "admitted")
-        .orderBy("id")
-        .localCheckpoint() // pin rows, then reclaim the tmp fixture
-      graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-      out
-    }),
-
-    // HNSW generation-versioned delete lifecycle (r11 judge ask #5):
-    // the piece tying q343's repair to q350's tombstoned serving —
-    // takedowns RECORD into a versioned tombstone list while serving
-    // pins generation 1 and filters per query; the sweep policy
-    // (integer permille threshold) refuses the 5% wave, then the
-    // cumulative ~24% wave triggers repairHnswGraph into generation 2
-    // and clears the consumed tombstones. Output = BOTH edge
-    // generations (a wrong trigger decision changes the version set);
-    // DuckDB re-derives generation 2 from the dumped generation-1
-    // graph by replaying the full repair rule (q343's oracle shape).
-    "q359_hnsw_generations" -> ((s, dir) => {
-      import graft.index.{GraphStream, Snapshots}
-      val pts = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val base = auxPath(dir) + "/q359_idx"
-      graft.ops.Joins.deleteRecursively(new java.io.File(base))
-      Snapshots.upsertVersioned(s, pts, s"$base/points")
-      GraphStream.compact(s, s"$base/points", s"$base/edges",
-        m = 8, maxLevel = 3, dim = 64)
-      writeAux(GraphStream.decodeEdges(
-        Snapshots.readVersion(s, s"$base/edges", 1)), dir, "q359_graph")
-      GraphStream.tombstone(s, pts.filter(col("id") % 20 === 3)
-        .select("id"), s"$base/tombs")
-      val r1 = GraphStream.sweepIfDue(s, s"$base/points",
-        s"$base/edges", s"$base/tombs", thresholdPermille = 100)
-      require(r1.isEmpty, "wave 1 (5%) must stay below the sweep bar")
-      GraphStream.tombstone(s, pts.filter(col("id") % 5 === 0)
-        .select("id"), s"$base/tombs")
-      val r2 = GraphStream.sweepIfDue(s, s"$base/points",
-        s"$base/edges", s"$base/tombs", thresholdPermille = 100)
-      require(r2.nonEmpty, "wave 2 (~24%) must trigger the sweep")
-      Snapshots.versions(s, s"$base/edges").map { v =>
-        GraphStream.decodeEdges(Snapshots.readVersion(s, s"$base/edges", v))
-          .withColumn("version", lit(v))
-      }.reduce(_ unionByName _)
-        .select("version", "layer", "id", "nbr", "cos")
-        .orderBy("version", "layer", "id", "nbr")
-    }),
-
-    // Stats-maintained view routing (r11 judge ask #6, closing the
-    // routeAndAnswer count-per-call advice): the lattice materializes
-    // on the pre-1998 slice with row stats taken ONCE, the post-1998
-    // batch refreshes views AND stats incrementally (rows_after =
-    // rows_before + |new delta groups| — one view-key anti-join, never
-    // a recount), and the routing decision reads the STATS alone
-    // (ViewsSpec proves the losers' data is untouched by poisoning
-    // them). Output = the maintained (view, rows) table + the choice;
-    // DuckDB recounts every view's true grouping cardinality over the
-    // full table and replays the (rows, name) pick among the rf-
-    // subsuming views — a drifted maintained stat or a wrong choice is
-    // a value mismatch.
-    "q360_view_stats_route" -> ((s, dir) => {
-      import s.implicits._
-      val (pre, post) = lineitemSplit(s, dir)
-      def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
-      val lat0 = graft.ops.Views.materialize(Map(
-        "v_rf_ls" -> view("rf", "ls"),
-        "v_rf_mth" -> view("rf", "mth"),
-        "v_ls_mth" -> view("ls", "mth")))
-      val lat = graft.ops.Views.applyDeltaMaintained(lat0, post,
-        Seq(count(lit(1)).as("cnt"), sum("cents").as("sum_cents")))
-      val chosen = graft.ops.Views.chooseView(lat, Seq("rf"))
-      lat.stats.toSeq.sortBy(_._1).toDF("view", "view_rows")
-        .withColumn("chosen",
-          when(col("view") === chosen, 1L).otherwise(0L))
-        .orderBy("view")
-    }),
-
-    // Incremental inverted-index maintenance: the postings table and
-    // the df stats BOTH admit a disjoint batch without re-reading the
-    // standing corpus (mergePostings = append, mergeDocFrequencies =
-    // per-term re-sum) — the maintenance story behind the q356 serving
-    // path. Two halves build independently and merge; DuckDB derives
-    // both structures from the FULL corpus in one pass, so any merge
-    // drift (lost rows, double-counted df) is a value mismatch.
-    "q361_postings_merge" -> ((s, dir) => {
-      import graft.index.IndexWriter
-      val pts = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("id"),
-        split(col("text"), " ").as("tokens"))
-      val a = pts.filter(col("id").cast("long") < 250)
-      val b = pts.filter(col("id").cast("long") >= 250)
-      val mergedPostings = IndexWriter.mergePostings(
-        IndexWriter.postings(a), IndexWriter.postings(b))
-      val mergedDf = IndexWriter.mergeDocFrequencies(
-        IndexWriter.docFrequencies(a), IndexWriter.docFrequencies(b))
-      mergedPostings.join(mergedDf, Seq("term"))
-        .select(col("term"), col("id"), col("tf").cast("long").as("tf"),
-          col("dl").cast("long").as("dl"), col("df").cast("long").as("df"))
-        .orderBy("term", "id")
-    }),
-
-    // Segment-incremental repeated-span STATS (the q357 discipline's
-    // stats form): the sealed half ships only its (key, n_docs)
-    // substring statistics — doc-disjoint segments make the counts
-    // ADDITIVE — and the new batch decides "≥ 2 distinct docs
-    // corpus-wide" as batch-count + stored-sum without re-reading the
-    // sealed text. Plants: the %7≡0 boilerplate spans both halves
-    // (cross-segment repeats must flag from the stored counts alone);
-    // %9≡5 batch docs share a batch-only sentence (flags with zero
-    // stored support). DuckDB verifies by direct corpus-wide window
-    // counting — independent of the construction and of the split.
-    "q362_sa_stats_incremental" -> ((s, dir) => {
-      val planted = saStatsPlantedDocs(s, dir)
-      val sealedSeg = planted.filter(col("doc_id") < 250)
-      val batch = planted.filter(col("doc_id") >= 250)
-      val stats = Phase("build") {
-        graft.ops.SuffixArray.substrKeyStats(
-          sealedSeg, "doc_id", "text", minLen = 12).localCheckpoint()
-      }
-      graft.ops.SuffixArray.repeatedSpanStatsIncremental(
-          batch, stats, "doc_id", "text", minLen = 12)
-        .orderBy("doc_id")
-    }),
-
-    // STREAMING inverted-index maintenance: the q361 merge law run as a
-    // micro-batch stream — each batch APPENDS its postings rows
-    // (term-bucket partitioned) and its partial (term, df) rows;
-    // read-time re-sum is the mergeDocFrequencies fold. Disjoint-id
-    // batches never interact, so stream == one-shot build; the oracle
-    // is q361's full-corpus derivation verbatim (the q218 shared-oracle
-    // pattern) — any append/replay drift is a value mismatch.
-    "q363_postings_stream" -> ((s, dir) => {
-      import graft.index.IndexWriter
-      val pts = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("id"),
-        split(col("text"), " ").as("tokens"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q363").toString
-      val srcDir = s"$tmp/src"
-      pts.filter(col("id").cast("long") < 150)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      pts.filter(col("id").cast("long") >= 150 &&
-          col("id").cast("long") < 300)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      pts.filter(col("id").cast("long") >= 300)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = IndexWriter.streamPostings(s, src, s"$tmp/idx", s"$tmp/cp")
-      q.processAllAvailable(); q.stop()
-      val out = IndexWriter.readPostings(s, s"$tmp/idx")
-        .join(IndexWriter.readDocFrequencies(s, s"$tmp/idx"), Seq("term"))
-        .select(col("term"), col("id"), col("tf").cast("long").as("tf"),
-          col("dl").cast("long").as("dl"), col("df").cast("long").as("df"))
-        .orderBy("term", "id")
-        .localCheckpoint() // pin rows, then reclaim the tmp store
-      graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-      out
-    }),
-
-    // ColBERT-style MaxSim late-interaction rerank: BM25 prefetches 50
-    // candidates (the cheap first stage), then each one rescores as
-    // Σ_qt max_dt cos(qt, dt) over PER-TOKEN embeddings — term-level
-    // alignment a pooled vector loses. Token-level embeddings exist
-    // only for the candidate slice's vocabulary (never the corpus);
-    // cosines micro-fix to ×10⁶ integers before max/sum, so the
-    // aggregation is exact. DuckDB re-derives the BM25 prefetch from
-    // scratch and the full MaxSim from the aux-dumped token vectors.
-    "q364_maxsim_rerank" -> ((s, dir) => {
-      import s.implicits._
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("tokens"))
-      val n = docs.count()
-      val avgLen = docs.select(avg(size(col("tokens")))).first().getDouble(0)
-      val stats = graft.index.IndexWriter.docFrequencies(docs)
-      val qTerms = Seq("table", "scan", "merge", "join", "vector")
-      val cands = HybridSearch.bm25TopK(docs, stats, n, avgLen, qTerms, 50)
-        .select("id").join(docs, Seq("id")).localCheckpoint()
-      val emb = new graft.embed.HashingEmbedder(64)
-      val embUdf = udf((tk: String) => emb.embedBatch(Seq(tk)).head)
-      writeAux(cands
-        .select(explode(array_distinct(col("tokens"))).as("dtok"))
-        .filter(col("dtok") =!= "").distinct()
-        .withColumn("dvec", embUdf(col("dtok"))), dir, "q364_dvecs")
-      writeAux(qTerms.map(tk => (tk, emb.embedBatch(Seq(tk)).head.toSeq))
-        .toDF("qtok", "qvec"), dir, "q364_qvecs")
-      graft.search.LateInteraction.maxsimRerank(cands, qTerms, emb, k = 10)
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    // BATCHED MaxSim — the serving-matrix rule applied to the rerank
-    // tier: three queries rescore their own BM25 prefetches in ONE
-    // plan (shared candidate vocabulary embeds once, query tokens
-    // broadcast, per-query bounded heaps). DuckDB replays every
-    // query's BM25 top-50 and the per-(query, doc, term) max/sum from
-    // the aux token vectors.
-    "q365_maxsim_batch" -> ((s, dir) => {
-      import s.implicits._
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("tokens"))
-      val n = docs.count()
-      val avgLen = docs.select(avg(size(col("tokens")))).first().getDouble(0)
-      val stats = graft.index.IndexWriter.docFrequencies(docs)
-      val qsets = Seq(
-        0L -> Seq("table", "scan", "merge", "join", "vector"),
-        1L -> Seq("window", "order", "sort"),
-        2L -> Seq("group", "key", "value"))
-      val cands = qsets.map { case (qid, ts) =>
-        HybridSearch.bm25TopK(docs, stats, n, avgLen, ts, 50)
-          .select(lit(qid).as("query_id"), col("id"))
-      }.reduce(_ unionByName _).join(docs, Seq("id")).localCheckpoint()
-      val emb = new graft.embed.HashingEmbedder(64)
-      val embUdf = udf((tk: String) => emb.embedBatch(Seq(tk)).head)
-      writeAux(cands
-        .select(explode(array_distinct(col("tokens"))).as("dtok"))
-        .filter(col("dtok") =!= "").distinct()
-        .withColumn("dvec", embUdf(col("dtok"))), dir, "q365_dvecs")
-      writeAux(qsets.flatMap(_._2).distinct
-        .map(tk => (tk, emb.embedBatch(Seq(tk)).head.toSeq))
-        .toDF("qtok", "qvec"), dir, "q365_qvecs")
-      graft.search.LateInteraction.maxsimRerankAll(cands,
-          qsets.toDF("query_id", "terms"), emb, k = 10)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("query_id"), desc("maxsim_u6"), col("doc_id"))
-    }),
-
-    // Segment-incremental contamination REMOVAL — q357's admission
-    // decision applied as an EDIT: each batch excises every token span
-    // whose 12-token substring appears in the frozen eval segment's
-    // key table (benchmark decontamination at admission time), the
-    // eval text never re-read. DuckDB derives hits by direct window
-    // equality and replays every per-token keep/drop and the
-    // position-order rebuild of each cleaned batch doc.
-    "q366_sa_removal_incremental" -> ((s, dir) => {
-      val planted = saPlantedDocs(s, dir)
-      val evalDocs = planted.filter(col("doc_id") % 50 === 0)
-      val keys = Phase("build") {
-        graft.ops.SuffixArray.substrKeyTable(
-          evalDocs, "doc_id", "text", minLen = 12).localCheckpoint()
-      }
-      val b1 = planted.filter(col("doc_id") % 50 =!= 0 &&
-        col("doc_id") < 250)
-      val b2 = planted.filter(col("doc_id") % 50 =!= 0 &&
-        col("doc_id") >= 250)
-      graft.ops.SuffixArray.removeContaminatedSpansIncremental(
-          b1, keys, "doc_id", "text", minLen = 12)
-        .unionByName(graft.ops.SuffixArray
-          .removeContaminatedSpansIncremental(
-            b2, keys, "doc_id", "text", minLen = 12))
-        .orderBy("doc_id")
-    }),
-
-    // MAXSCORE-pruned BM25 serving (Turtle & Flood): a rare planted
-    // term makes θ (the 10th-best single-term score of the highest-
-    // bound term) tower over the stopword-grade natural vocabulary's
-    // summed upper bounds, so candidate generation enumerates ONLY the
-    // rare term's postings — n_essential < n_terms, n_candidates ≪
-    // corpus — while results stay EXACTLY the unpruned top-k. DuckDB
-    // verifies the result set INDEPENDENTLY (full unpruned scoring
-    // over all matching docs) and replays the u6 pruning decision for
-    // the audit columns, so a bound bug shows up as either a result
-    // mismatch or an audit mismatch.
-    "q367_bm25_maxscore" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 20 === 7, Seq("zqmaxscore")))
-      writeAux(index.select("id", "tokens"), dir, "q367_index")
-      val terms = Seq("zqmaxscore", "scan", "filter", "join")
-      val (postings, stats, bounds, n, avgLen, theta6, flags, nCand) =
-        Phase("build") {
-          val postings = graft.index.IndexWriter.postings(index)
-            .localCheckpoint()
-          val stats = graft.index.IndexWriter.docFrequencies(index)
-            .localCheckpoint()
-          val bounds = graft.index.IndexWriter.termBounds(postings)
-          val n = index.count()
-          val avgLen =
-            index.select(avg(size(col("tokens")))).first().getDouble(0)
-          val (theta6, flags) = HybridSearch.maxScorePrune(
-            postings, stats, bounds, n, avgLen, terms, 10)
-          val essential = flags.collect { case (t, _, true) => t }
-          val nCand = postings.filter(col("term").isin(essential: _*))
-            .select("id").distinct().count()
-          (postings, stats, bounds, n, avgLen, theta6, flags, nCand)
-        }
-      HybridSearch.bm25TopKMaxScore(
-          postings, stats, bounds, n, avgLen, terms, 10)
-        .withColumn("theta6", lit(theta6))
-        .withColumn("n_terms", lit(flags.size.toLong))
-        .withColumn("n_essential", lit(flags.count(_._3).toLong))
-        .withColumn("n_candidates", lit(nCand))
-        .orderBy(desc("bm25_score"), col("id"))
-    }),
-
-    // FORGET propagated through the sparse serving artifacts: a purge
-    // list (doc_id % 9 = 4's chunks) is removed from postings (anti-
-    // join), df (per-term decrement from the purged rows, zero-df terms
-    // leave), termBounds (retighten ONLY the affected vocabulary from
-    // surviving postings — stale bounds would still be SOUND for
-    // MaxScore, this is the eager path), and the (n_docs, total_dl)
-    // scorer stats (subtractable because the SUM is stored, not the
-    // average). Every delta derives from the purged docs' own postings
-    // — cost ∝ purge, never a corpus rescan. DuckDB rebuilds all four
-    // artifacts FROM SCRATCH on the surviving corpus: maintained ≡
-    // rebuilt, bit for bit.
-    "q368_forget_index" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-      writeAux(index.select("id", "doc_id", "tokens"), dir, "q368_index")
-      val W = graft.index.IndexWriter
-      val postings = W.postings(index).localCheckpoint()
-      val df0 = W.docFrequencies(index)
-      val bounds0 = W.termBounds(postings)
-      val n0 = index.count()
-      val totalDl0 = index.agg(sum(size(col("tokens")))).first().getLong(0)
-      val ids = index.filter(col("doc_id") % 9 === 4).select("id")
-      val purged = W.purgedPostings(postings, ids).localCheckpoint()
-      val survivors = W.forgetPostings(postings, ids)
-      // (id, dl) from the CORPUS, not the purged postings: a token-less
-      // purged doc has no postings rows but must still decrement n_docs
-      val cs = W.forgetCorpusStats(n0, totalDl0,
-        W.purgedDocLengths(index, ids)).first()
-      survivors
-        .join(W.forgetDocFrequencies(df0, purged), Seq("term"))
-        .join(W.forgetTermBounds(bounds0, survivors, purged), Seq("term"))
-        .select(col("term"), col("id"), col("tf").cast("long").as("tf"),
-          col("dl").cast("long").as("dl"), col("df").cast("long").as("df"),
-          col("max_tf").cast("long").as("max_tf"),
-          col("min_dl").cast("long").as("min_dl"),
-          lit(cs.getLong(0)).as("n_docs"), lit(cs.getLong(1)).as("total_dl"))
-        .orderBy("term", "id")
-    }),
-
-    // BATCHED MaxScore: three queries — two rare+stopword mixes that
-    // must prune (per-query essential set collapses to the planted
-    // term) and one all-common query that cannot (its θ comes from the
-    // common vocabulary itself) — served in ONE plan: per-query θ-terms
-    // by rank window, θs via bounded heaps, essential flags via
-    // per-query cumsum windows, candidates only from essential (query,
-    // term) postings. DuckDB re-derives every query's top-10 by FULL
-    // unpruned scoring (independent of the pruning) and replays the
-    // per-query u6 decisions for the audit columns.
-    "q369_bm25_maxscore_batch" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val sq = s
-      import sq.implicits._
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 20 === 7, Seq("zqalpha")),
-        (col("doc_id") % 20 === 13, Seq("zqbeta")))
-      writeAux(index.select("id", "tokens"), dir, "q369_index")
-      val W = graft.index.IndexWriter
-      val postings = W.postings(index).localCheckpoint()
-      val stats = W.docFrequencies(index).localCheckpoint()
-      val bounds = W.termBounds(postings)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-      val qt = Seq((0L, "zqalpha"), (0L, "scan"), (0L, "filter"),
-        (1L, "zqbeta"), (1L, "join"), (1L, "merge"),
-        (2L, "scan"), (2L, "filter"), (2L, "join"))
-        .toDF("query_id", "term")
-      val flags = HybridSearch.maxScorePruneAll(
-        postings, stats, bounds, n, avgLen, qt, 10).localCheckpoint()
-      val audit = flags.groupBy("query_id")
-        .agg(count(lit(1)).as("n_terms"),
-          sum(when(col("essential"), 1L).otherwise(0L)).as("n_essential"))
-      val cand = postings
-        .join(broadcast(flags.filter(col("essential"))
-          .select("query_id", "term")), Seq("term"))
-        .select("query_id", "id").distinct()
-        .groupBy("query_id").agg(count(lit(1)).as("n_candidates"))
-      HybridSearch.bm25TopKMaxScoreAll(
-          postings, stats, bounds, n, avgLen, qt, 10)
-        .join(audit, Seq("query_id"))
-        .join(cand, Seq("query_id"))
-        .select(col("query_id"), col("id"), col("bm25_score"),
-          col("n_terms"), col("n_essential"), col("n_candidates"))
-        .orderBy(col("query_id"), desc("bm25_score"), col("id"))
-    }),
-
-    // QUANTIZED IVF serve: integer-dot candidate ranking over int8
-    // codes within the probed cells, exact float-cosine rerank of the
-    // top-50 survivors — the memory tier of the dense serving path
-    // (the sparse side's postings/MaxScore move, for vectors). DuckDB
-    // replays the whole ladder from raw embeddings: per-vector
-    // symmetric quantization (half-up), the integer dot (exact), the
-    // rerank cut, and the final cosines.
-    "q370_ivf_quantized" -> ((s, dir) => {
-      val sq = s
-      import sq.implicits._
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 1).select("embedding")
-        .first().getSeq[Float](0).toArray
-      val idx = Phase("build") { new Similarity.IvfIndex(e, nCentroids = 8) }
-      writeAux(idx.assigned.select("vec_id", "centroid"), dir,
-        "q370_assigned")
-      writeAux(idx.probeCells(q, nProbe = 4).toDF("centroid"), dir,
-        "q370_probes")
-      idx.queryQuantized(q, k = 10, nProbe = 4, rerank = 50)
-        .select("vec_id", "dot_q", "cos")
-    }),
-
-    // PHRASE search from the positional inverted index: consecutive-
-    // token matching as position intersection anchored on the phrase's
-    // rarest term — never a text rescan. Planted: the true phrase on
-    // doc_id % 11 = 3's chunks, a same-words-with-gaps decoy on
-    // doc_id % 11 = 5's (must NOT match). DuckDB verifies with the
-    // INDEPENDENT definition — a direct window-equality scan over the
-    // token arrays, no postings replay.
-    "q371_phrase_search" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 5,
-          Seq("graft", "gap", "phrase", "gap", "probe")))
-      writeAux(index.select("id", "tokens"), dir, "q371_index")
-      val pp = graft.index.IndexWriter.positionalPostings(index)
-      val stats = graft.index.IndexWriter.docFrequencies(index)
-      HybridSearch.phraseMatches(pp, stats,
-          Seq("graft", "phrase", "probe"))
-        .select(col("id"), col("pos").cast("long").as("pos"))
-        .orderBy("id", "pos")
-    }),
-
-    // ORDERED-PROXIMITY search (SpanNear): three plants — consecutive
-    // (span 2), gapped within the budget (span 4), gapped beyond it
-    // (span 8, must NOT match at maxSpan 6) — served by the greedy
-    // position-chain joins; DuckDB replays the greedy contract from
-    // the raw token arrays (exploded positions, min-next-position per
-    // step), not from the postings construction.
-    "q372_proximity_search" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 5,
-          Seq("graft", "gap", "phrase", "gap", "probe")),
-        (col("doc_id") % 11 === 7,
-          Seq("graft", "gap", "gap", "gap", "gap", "gap", "gap", "phrase",
-            "probe")))
-      writeAux(index.select("id", "tokens"), dir, "q372_index")
-      val pp = graft.index.IndexWriter.positionalPostings(index)
-      val stats = graft.index.IndexWriter.docFrequencies(index)
-      HybridSearch.proximityMatches(pp, stats,
-          Seq("graft", "phrase", "probe"), maxSpan = 6)
-        .select(col("id"), col("s").cast("long").as("s"),
-          col("e").cast("long").as("e"))
-        .orderBy("id", "s")
-    }),
-
-    // BLOCK-MAX pruning (Ding & Suel BMW): "zqblock" planted in SHORT
-    // chunks (doc_id % 16 = 7, high term score — θ's home) and in
-    // LONG padded chunks (doc_id % 8 = 3, +280 pad tokens dilute the
-    // score), so whole md5-hash blocks of the essential term's
-    // postings holding only diluted residents must prune (8 of 22
-    // survive at sf0.01). Results are
-    // independently re-derived by FULL unpruned DuckDB scoring; the
-    // audit replays term bounds, θ, block bounds, and the surviving-
-    // block rule — md5-derived blocks make the whole ladder
-    // engine-portable.
-    "q373_bm25_blockmax" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val base = ensureHybridIndex(s, dir)
-      val index = s.read.parquet(s"$base/chunks")
-        .withColumn("tokens",
-          when(col("doc_id") % 16 === 7,
-            concat(col("tokens"), array(lit("zqblock"))))
-          .when(col("doc_id") % 8 === 3,
-            concat(col("tokens"), array(lit("zqblock")),
-              array_repeat(lit("zqpad"), 280)))
-          .otherwise(col("tokens")))
-      writeAux(index.select("id", "tokens"), dir, "q373_index")
-      val W = graft.index.IndexWriter
-      val postings = W.postings(index).localCheckpoint()
-      val stats = W.docFrequencies(index).localCheckpoint()
-      val blocks = W.blockBounds(postings, nBlocks = 64)
-      val n = index.count()
-      val avgLen = index.select(avg(size(col("tokens")))).first().getDouble(0)
-      val terms = Seq("zqblock", "scan", "filter")
-      val (theta6, flags, surviving) = HybridSearch.blockMaxPrune(
-        postings, stats, blocks, n, avgLen, terms, 5)
-      val essential = flags.collect { case (t, _, true) => t }
-      val nBlocksTotal = blocks
-        .filter(col("term").isin(essential: _*)).count()
-      val nSurviving = surviving.count()
-      HybridSearch.bm25TopKBlockMax(
-          postings, stats, blocks, n, avgLen, terms, 5, nBlocks = 64)
-        .withColumn("theta6", lit(theta6))
-        .withColumn("n_essential", lit(essential.size.toLong))
-        .withColumn("n_blocks", lit(nBlocksTotal))
-        .withColumn("n_blocks_surviving", lit(nSurviving))
-        .orderBy(desc("bm25_score"), col("id"))
-    }),
-
-    // the quantized serve's recall/bandwidth DIAL measured in-oracle
-    // (the q311/q202 param-sweep discipline): recall@10 of
-    // queryQuantized vs the exact probed query at rerank 10/25/50 —
-    // isolating the int8 distortion from IVF probe recall (same
-    // cells both sides). DuckDB replays every dial from one ranked
-    // dot table.
-    "q374_quantized_dial" -> ((s, dir) => {
-      val sq = s
-      import sq.implicits._
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 1).select("embedding")
-        .first().getSeq[Float](0).toArray
-      val idx = new Similarity.IvfIndex(e, nCentroids = 8)
-      writeAux(idx.assigned.select("vec_id", "centroid"), dir,
-        "q374_assigned")
-      writeAux(idx.probeCells(q, nProbe = 4).toDF("centroid"), dir,
-        "q374_probes")
-      val exact = idx.query(q, 10, 4)
-        .select("vec_id").as[Long].collect().toSet
-      Seq(10, 25, 50).map { rr =>
-        val served = idx.queryQuantized(q, 10, 4, rerank = rr)
-          .select("vec_id").as[Long].collect()
-        (rr.toLong, served.count(exact.contains).toLong)
-      }.toDF("rerank", "hits_in_exact").orderBy("rerank")
-    }),
-
-    // BATCHED phrase search: three phrases of different lengths — the
-    // q371 3-gram, its 2-gram prefix, and a REPEATED-WORD phrase
-    // (planted "graft graft phrase") — matched in ONE plan via the
-    // slot-count form (a start matches iff all m slots hit). The
-    // gapped decoy must match none. DuckDB verifies each query with
-    // the independent window-equality definition.
-    "q375_phrase_batch" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val sq = s
-      import sq.implicits._
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 5,
-          Seq("graft", "gap", "phrase", "gap", "probe")),
-        (col("doc_id") % 11 === 9, Seq("graft", "graft", "phrase")))
-      writeAux(index.select("id", "tokens"), dir, "q375_index")
-      val pp = graft.index.IndexWriter.positionalPostings(index)
-      val qSlots = Seq(
-        (0L, 0, "graft"), (0L, 1, "phrase"), (0L, 2, "probe"),
-        (1L, 0, "graft"), (1L, 1, "phrase"),
-        (2L, 0, "graft"), (2L, 1, "graft"), (2L, 2, "phrase"))
-        .toDF("query_id", "slot", "term")
-      HybridSearch.phraseMatchesAll(pp, qSlots)
-        .select(col("query_id"), col("id"),
-          col("pos").cast("long").as("pos"))
-        .orderBy("query_id", "id", "pos")
-    }),
-
-    // FORGET propagated through the POSITIONAL tier (closing the q368
-    // family's takedown hole: without it a purged doc's token
-    // positions stayed discoverable via phrase/proximity search) —
-    // plus the corpus-stats fix: a TOKEN-LESS purged doc has no
-    // postings rows, so its n_docs decrement must come from the
-    // corpus-derived (id, dl) delta, never from purged postings.
-    // DuckDB rebuilds the positional index AND (n_docs, total_dl)
-    // from scratch on the survivors: maintained ≡ rebuilt bit-for-bit.
-    "q376_forget_positional" -> ((s, dir) => {
-      val W = graft.index.IndexWriter
-      val base = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("id"),
-        split(col("text"), " ").as("tokens"))
-      val pts = base.unionByName(s.range(1).select(
-        lit("zzempty").as("id"),
-        array().cast("array<string>").as("tokens")))
-      val purgeCond = col("id") === "zzempty" ||
-        col("id").cast("long") % 9 === 4
-      writeAux(pts.withColumn("keep",
-        when(purgeCond, 0L).otherwise(1L)), dir, "q376_index")
-      val pos = W.positionalPostings(pts).localCheckpoint()
-      val ids = pts.filter(purgeCond).select("id")
-      val n0 = pts.count()
-      val dl0 = pts.agg(coalesce(sum(size(col("tokens"))), lit(0L)))
-        .first().getLong(0)
-      val cs = W.forgetCorpusStats(n0, dl0,
-        W.purgedDocLengths(pts, ids)).first()
-      W.forgetPositionalPostings(pos, ids)
-        .select(col("term"), col("id"), col("pos").cast("long").as("pos"),
-          col("dl").cast("long").as("dl"))
-        .withColumn("n_docs", lit(cs.getLong(0)))
-        .withColumn("total_dl", lit(cs.getLong(1)))
-        .orderBy("term", "id", "pos")
-    }),
-
-    // Segment key-table COMPACTION for the suffix-array admission tier
-    // (the compactPostingsStats discipline applied to substrKeyStats):
-    // three sealed segments append three small partials; the compactor
-    // folds them to one row per key (counts additive over doc-disjoint
-    // segments) behind a crash-safe staged swap, and the incremental
-    // stats decision over the COMPACTED store must equal the decision
-    // over the raw partials — verified here by running the q362 batch
-    // against the compacted store, with DuckDB's INDEPENDENT
-    // corpus-wide window count as the oracle (any compaction drift is
-    // a value mismatch). Audit columns pin the fold itself.
-    "q377_sa_keytable_compaction" -> ((s, dir) => {
-      val planted = saStatsPlantedDocs(s, dir)
-      val segs = Seq(
-        planted.filter(col("doc_id") < 80),
-        planted.filter(col("doc_id") >= 80 && col("doc_id") < 160),
-        planted.filter(col("doc_id") >= 160 && col("doc_id") < 250))
-      val store = auxPath(dir) + "/q377_keys"
-      graft.ops.Joins.deleteRecursively(new java.io.File(store))
-      Phase("segments") {
-        segs.foreach(seg => graft.ops.SuffixArray.substrKeyStats(
-            seg, "doc_id", "text", minLen = 12)
-          .coalesce(1).write.mode("append").parquet(store))
-      }
-      val (rb, ra, fb, fa) = Phase("compact") {
-        graft.ops.SuffixArray.compactKeyTables(s, store, hasCounts = true)
-      }
-      require(fa < fb && ra <= rb,
-        s"compaction must shrink the store: files $fb->$fa rows $rb->$ra")
-      val batch = planted.filter(col("doc_id") >= 250)
-      graft.ops.SuffixArray.repeatedSpanStatsIncremental(
-          batch, s.read.parquet(store), "doc_id", "text", minLen = 12)
-        .orderBy("doc_id")
-    }),
-
-    // The SERVED phrase ranking (Serve.queryPhrase's contract): docs
-    // rank by phrase OCCURRENCE COUNT (ties → id), top-k. Plants: the
-    // %11≡3 docs carry the true phrase once, ONE doc (doc_id = 3's
-    // first chunk) carries it twice — the double-hit doc must rank
-    // first. DuckDB re-derives counts from the independent
-    // window-equality definition, never the postings chain.
-    "q379_phrase_topdocs" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") === 3 && col("chunk_index") === 0,
-          Seq("graft", "phrase", "probe", "graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")))
-      writeAux(index.select("id", "tokens"), dir, "q379_index")
-      val pp = graft.index.IndexWriter.positionalPostings(index)
-      val stats = graft.index.IndexWriter.docFrequencies(index)
-      HybridSearch.phraseMatches(pp, stats,
-          Seq("graft", "phrase", "probe"))
-        .groupBy("id").agg(count(lit(1)).as("phrase_hits"))
-        .orderBy(desc("phrase_hits"), col("id"))
-        .limit(5)
-    }),
-
-    // The SERVED proximity ranking (Serve.queryProximity's contract):
-    // docs rank by GREEDY-SPAN COUNT (ties → id), top-k. Plants: the
-    // %11≡1 docs carry the triple twice (two spans — must rank first),
-    // %11≡3 once consecutively, %11≡5 once gapped-within-budget (span
-    // 4 ≤ 6 — still one span). DuckDB replays the greedy chain from
-    // raw token arrays and re-ranks independently of the postings
-    // construction.
-    "q381_proximity_topdocs" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val index = plantedTokenIndex(s, dir,
-        (col("doc_id") % 11 === 1,
-          Seq("graft", "phrase", "probe", "graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 3, Seq("graft", "phrase", "probe")),
-        (col("doc_id") % 11 === 5,
-          Seq("graft", "gap", "phrase", "gap", "probe")))
-      writeAux(index.select("id", "tokens"), dir, "q381_index")
-      val pp = graft.index.IndexWriter.positionalPostings(index)
-      val stats = graft.index.IndexWriter.docFrequencies(index)
-      HybridSearch.proximityMatches(pp, stats,
-          Seq("graft", "phrase", "probe"), maxSpan = 6)
-        .groupBy("id").agg(count(lit(1)).as("span_hits"))
-        .orderBy(desc("span_hits"), col("id"))
-        .limit(5)
-    }),
-
-    // BIN-FIRST KS (r13 judge "what's wrong" #4): the exact q247 form
-    // walks one unpartitioned window over EVERY distinct value — over
-    // a high-cardinality column (prices in cents here) that one task
-    // is the whole job. The binned form caps the walk at 256 rows
-    // while the per-bin counting stays distributed; the statistic is
-    // the exact KS of the binned ECDFs. Drift question: do early-
-    // shipped line items price like late ones? DuckDB replays the
-    // integer binning, the walks, the gaps, and the argmax.
-    "q382_ks_binned" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        cents(col("l_extendedprice")).as("v"), col("l_shipdate"))
-      val mm = li.agg(min("v"), max("v")).first()
-      graft.ops.Profile.ksStatisticBinned(
-          li.filter(col("l_shipdate") < "1996-01-01").select("v"),
-          li.filter(col("l_shipdate") >= "1996-01-01").select("v"),
-          "v", lo = mm.getLong(0), hi = mm.getLong(1), nBins = 256)
-        .withColumnRenamed("value", "bin")
-        .withColumnRenamed("ks_at_value", "ks_at_bin")
-        .orderBy("bin")
-    }),
-
-    // BIN-FIRST AUC — q248's Mann-Whitney fold with the score
-    // dimension bucketed to 512 fixed-width integer bins (tie
-    // correction makes it the exact AUC of the binned scores): the
-    // cumulative-negatives walk is bounded regardless of score
-    // cardinality. Score = order value in cents, label = finalized.
-    "q383_auc_binned" -> ((s, dir) => {
-      val d = t(s, dir, "orders").select(
-        cents(col("o_totalprice")).as("score"),
-        (col("o_orderstatus") === "F").cast("long").as("label"))
-      val mm = d.agg(min("score"), max("score")).first()
-      graft.ops.Profile.aucStatisticBinned(d, "score", "label",
-          lo = mm.getLong(0), hi = mm.getLong(1), nBins = 512)
-        .withColumnRenamed("score", "bin")
-        .orderBy("bin")
-    }),
-
-    // STORE-LEVEL takedown through a streamed postings store: the q363
-    // stream (3 micro-batches, positional tier on) followed by
-    // forgetStreamedPostings — only the (batch_id, term_bucket)
-    // partitions holding a purged doc's rows rewrite (fully-purged
-    // partitions delete outright), while the vocabulary-sized stats
-    // fold-rewrite with eager retightening. Every read-back joined into
-    // one row per surviving (term, id): postings tf/dl, summed df,
-    // retightened bounds, and the positional occurrence count (which
-    // must equal tf — a positional row the takedown missed, or one it
-    // over-deleted, breaks the equality). DuckDB rebuilds everything
-    // from the surviving corpus.
-    "q380_forget_streamed" -> ((s, dir) => {
-      import graft.index.IndexWriter
-      val pts = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("id"),
-        split(col("text"), " ").as("tokens"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q380").toString
-      val srcDir = s"$tmp/src"
-      Phase("stream") {
-        pts.filter(col("id").cast("long") < 150)
-          .coalesce(1).write.mode("append").parquet(srcDir)
-        pts.filter(col("id").cast("long") >= 150 &&
-            col("id").cast("long") < 300)
-          .coalesce(1).write.mode("append").parquet(srcDir)
-        pts.filter(col("id").cast("long") >= 300)
-          .coalesce(1).write.mode("append").parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        val q = IndexWriter.streamPostings(s,
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir),
-          s"$tmp/idx", s"$tmp/cp", positional = true)
-        q.processAllAvailable(); q.stop()
-      }
-      Phase("forget") {
-        IndexWriter.forgetStreamedPostings(s, s"$tmp/idx",
-          pts.filter(col("id").cast("long") % 9 === 4).select("id"))
-      }
-      val posCnt = s.read.parquet(s"$tmp/idx/positions")
-        .groupBy("term", "id").agg(count(lit(1)).as("pos_cnt"))
-      val out = IndexWriter.readPostings(s, s"$tmp/idx")
-        .join(IndexWriter.readDocFrequencies(s, s"$tmp/idx"), Seq("term"))
-        .join(IndexWriter.readTermBounds(s, s"$tmp/idx"), Seq("term"))
-        .join(posCnt, Seq("term", "id"))
-        .select(col("term"), col("id"), col("tf").cast("long").as("tf"),
-          col("dl").cast("long").as("dl"), col("df").cast("long").as("df"),
-          col("max_tf").cast("long").as("max_tf"),
-          col("min_dl").cast("long").as("min_dl"),
-          col("pos_cnt").cast("long").as("pos_cnt"))
-        .orderBy("term", "id")
-        // pin the rows BEFORE reclaiming the tmp store (the caller
-        // materializes the frame after we return); unpinned, the leak
-        // was a full streamed-index copy per invocation
-        .localCheckpoint()
-      graft.ops.Joins.deleteRecursively(new java.io.File(tmp))
-      out
-    }),
-
-    // PERSISTED lattice stats (closing q360's restart gap: stats lived
-    // in session memory, so a serving restart recounted every view) —
-    // the maintained lattice saves (view, grouping cols, rows) as a
-    // tiny table, a RELOADED lattice routes from the stored stats
-    // alone, and the routed answer must equal DuckDB's recomputation
-    // over the full table. Output = the post-restart stats + choice +
-    // the routed rf aggregate.
-    "q378_view_stats_persisted" -> ((s, dir) => {
-      val V = graft.ops.Views
-      val (pre, post) = lineitemSplit(s, dir)
-      def view(cols: String*) = cols.toSeq -> pre.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
-      val lat0 = V.materialize(Map(
-        "v_rf_ls" -> view("rf", "ls"),
-        "v_rf_mth" -> view("rf", "mth"),
-        "v_ls_mth" -> view("ls", "mth")))
-      val lat = V.applyDeltaMaintained(lat0, post,
-        Seq(count(lit(1)).as("cnt"), sum("cents").as("sum_cents")))
-      val store = auxPath(dir) + "/q378_lattice"
-      graft.ops.Joins.deleteRecursively(new java.io.File(store))
-      V.saveLattice(lat, store)
-      // simulated restart: everything below reads ONLY the store
-      val reloaded = V.loadLattice(s, store)
-      val chosen = V.chooseView(reloaded, Seq("rf"))
-      val answer = V.routeFromStats(reloaded, Seq("rf"),
-        Seq("cnt", "sum_cents"))
-      val statsDf = {
-        import s.implicits._
-        reloaded.stats.toSeq.sortBy(_._1).toDF("view", "view_rows")
-      }
-      answer.select(col("rf"), col("cnt"), col("sum_cents"),
-          col("served_from"))
-        .crossJoin(statsDf.withColumn("chosen",
-          when(col("view") === chosen, 1L).otherwise(0L)))
-        .orderBy("rf", "view")
-    })
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    families.flatMap(_.queries).toMap
 
   // ---------------------------------------------------------------------
   // DuckDB oracles (t2 gate) — same column names, deterministic values.
   // ---------------------------------------------------------------------
-
-  /** Island merge of the `hits(doc_id, s, e)` spans: a span opens a new
-    * island unless an earlier span of its doc reaches it, and
-    * `sp(doc_id, island, s, e)` is each island's union. */
-  private def islandSpanCtes(materializeSp: Boolean): String = {
-    val spAs = if (materializeSp) "sp AS MATERIALIZED (" else "sp AS ("
-    s"""flagged AS (SELECT doc_id, s, e,
-       |    CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-       |      THEN 1 ELSE 0 END AS new_island
-       |  FROM hits
-       |  WINDOW w AS (PARTITION BY doc_id ORDER BY s, e
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-       |isl AS (SELECT doc_id, s, e,
-       |    SUM(new_island) OVER (PARTITION BY doc_id ORDER BY s, e
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-       |  FROM flagged),
-       |${spAs}SELECT doc_id, island, min(s) AS s, max(e) AS e
-       |  FROM isl GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** Connected components of the undirected `edges(id1, id2)` table:
-    * `sym` holds both directions and the recursive `walk(id, comp)`
-    * spreads every node's id through its component. */
-  private def componentWalkCtes(edges: String, materialize: Boolean): String = {
-    val as = if (materialize) "AS MATERIALIZED" else "AS"
-    s"""sym $as (SELECT id1 AS src, id2 AS dst FROM $edges
-       |  UNION SELECT id2, id1 FROM $edges),
-       |nodes $as (SELECT DISTINCT src AS id FROM sym),
-       |walk(id, comp) AS (
-       |  SELECT id, id FROM nodes
-       |  UNION
-       |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id)""".stripMargin
-  }
-
-  /** BM25 (k1 = 1.2, b = 0.75) score `s` of one term of one chunk, from
-    * `tf t(tf, dl)`, `df f(df)` and `params p(n, avgdl)`. */
-  private def bm25TermScore: String =
-    """    ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) * t.tf * 2.2 /
-      |      (t.tf + 1.2 * (0.25 + 0.75 * t.dl / p.avgdl)) AS s""".stripMargin
-
-  /** The RRF (k = 60) sum of the `dr` dense and `br` BM25 ranks. */
-  private def rrfScoreSum: String =
-    """    COALESCE(1.0 / (60 + dr.dense_rank), 0.0)
-      |      + COALESCE(1.0 / (60 + br.bm25_rank), 0.0) AS rrf_score""".stripMargin
-
-  /** The hybrid oracles' fusion tail: rank the `dense(id, dense_score)`
-    * and `bm(id, bm25_score)` branches, fuse them by RRF, and join the
-    * top 5 back to `idx` for their chunk ids. */
-  private def rrfTop5Sql: String =
-    s"""dr AS (SELECT id, dense_score,
-       |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank FROM dense),
-       |br AS (SELECT id, bm25_score,
-       |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank FROM bm),
-       |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-       |$rrfScoreSum
-       |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-       |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-       |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score, top.bm25_score
-       |FROM top JOIN idx ON idx.id = top.id""".stripMargin
-
-  /** q33's full MinHash-LSH construction (planted doubled corpus →
-    * shingles → 16 md5 minhashes → 4 bands → candidates → exact Jaccard)
-    * as a DuckDB CTE body ending in `verified(id1, id2, jaccard)` —
-    * shared by the q33 pair-list oracle and q76's end-to-end dedup
-    * oracle, which appends the reachability closure and anti-join. */
-  private def minhashLshCtes: String = minhashLshCtesWith(
-    "SELECT doc_id + 10000 AS doc_id, text FROM documents")
-
-  /** q224/q225's SCD2 dimension (orders as a per-customer status change
-    * log) as a DuckDB CTE body ending in
-    * `sv(custkey, status, f, t, version)` — the change-collapse, the
-    * lead() interval close, and the per-key versioning, mirroring
-    * [[graft.ops.Scd.scd2Build]]'s single window pass. */
-  private def scd2DimCtes: String =
-    """log AS (SELECT o_custkey AS custkey, o_orderdate AS ts,
-      |    o_orderkey AS seq, o_orderstatus AS status FROM orders),
-      |d AS (SELECT *, lag(status) OVER (PARTITION BY custkey
-      |    ORDER BY ts, seq) AS pv FROM log),
-      |c AS (SELECT custkey, ts, seq, status FROM d
-      |  WHERE pv IS NULL OR status <> pv),
-      |sv AS (SELECT custkey, status, ts AS f,
-      |    lead(ts) OVER (PARTITION BY custkey ORDER BY ts, seq) AS t,
-      |    CAST(row_number() OVER (PARTITION BY custkey
-      |      ORDER BY ts, seq) AS BIGINT) AS version
-      |  FROM c)""".stripMargin
-
-  /** q181/q211's HNSW beam-walk replay (greedy descent, 2 steps per
-    * upper layer, then 3 beam hops at ef = 16, query = vec_id 0) as a
-    * DuckDB CTE body ending in `v3(id, cos)` — parameterized by the aux
-    * prefix so the broadcast-built (q181) and NN-descent-built (q211)
-    * graphs replay through identical SQL; `sc` holds every corpus
-    * vector's round-6 cosine to the query, reusable for a brute-force
-    * comparison CTE. */
-  private def hnswWalkCtes(aux: String): String = hnswWalkCtesWith(aux,
-    s"""pp AS (SELECT e.vec_id AS id, unnest(e.embedding)::DOUBLE AS x,
-       |    unnest(q.embedding)::DOUBLE AS y
-       |  FROM embeddings e,
-       |       (SELECT embedding FROM embeddings WHERE vec_id = 0) q)""".stripMargin)
-
-  /** q340/q341's prefix-doubling suffix-rank replay (SuffixArray): a
-    * CTE body from a caller-supplied `docsSel` (doc_id, text) through
-    * lowercased \S+ tokens, the per-doc " "||doc_id sentinel, and
-    * `rounds` dense_rank doubling rounds — ends with `toks(doc_id, ws)`,
-    * `posr(doc_id, pos, tok)` and `r0..r{rounds}(doc_id, pos, rank)`
-    * available. Every round is MATERIALIZED: DuckDB re-inlines chained
-    * CTEs and a doubling chain re-read k times would blow up
-    * exponentially (the q212 lesson). */
-  private def saRankCtes(rounds: Int, docsSel: String): String = {
-    val head =
-      s"""toks AS MATERIALIZED (SELECT doc_id,
-         |    [lower(x) for x in regexp_extract_all(text, '\\S+')] AS ws
-         |  FROM ($docsSel)),
-         |posr AS MATERIALIZED (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |      ws[CAST(i + 1 AS INT)] AS tok
-         |    FROM toks, UNNEST(range(len(ws))) t(i)
-         |  UNION ALL
-         |  SELECT doc_id, CAST(len(ws) AS BIGINT) AS pos,
-         |      ' ' || doc_id AS tok FROM toks),
-         |r0 AS MATERIALIZED (SELECT doc_id, pos,
-         |    CAST(dense_rank() OVER (ORDER BY tok) AS BIGINT) AS rank
-         |  FROM posr)""".stripMargin
-    val doubling = (1 to rounds).map { i =>
-      val h = 1L << (i - 1)
-      s"""r$i AS MATERIALIZED (SELECT a.doc_id, a.pos,
-         |    CAST(dense_rank() OVER (ORDER BY a.rank, COALESCE(b.rank, 0))
-         |      AS BIGINT) AS rank
-         |  FROM r${i - 1} a LEFT JOIN r${i - 1} b
-         |    ON b.doc_id = a.doc_id AND b.pos = a.pos + $h)""".stripMargin
-    }
-    (head +: doubling).mkString(",\n")
-  }
-
-  /** [[hnswWalkCtes]] with a caller-supplied `pp(id, x, y)` CTE pairing
-    * every corpus vector's components with the query's — q215 pairs the
-    * aux-dumped chunk index (surrogate hid as id) with its aux-dumped
-    * query vector instead of the embeddings table. */
-  private def hnswWalkCtesWith(aux: String, ppCte: String): String = {
-    def descend(prev: String, l: Int, name: String) =
-      s"""$name AS (SELECT s.id, s.cos FROM sc s WHERE s.id IN
-         |    (SELECT id FROM $prev UNION
-         |     SELECT g.nbr FROM g JOIN $prev f ON g.id = f.id
-         |     WHERE g.layer = $l)
-         |  ORDER BY s.cos DESC, s.id LIMIT 1)""".stripMargin
-    def hop(prev: String, t: Int) =
-      s"""n$t AS (SELECT DISTINCT g.nbr AS id FROM g
-         |  JOIN $prev f ON g.id = f.id WHERE g.layer = 0),
-         |p$t AS (SELECT s.id, s.cos FROM sc s WHERE s.id IN
-         |    (SELECT id FROM $prev UNION SELECT id FROM n$t)),
-         |f$t AS (SELECT id, cos FROM p$t ORDER BY cos DESC, id LIMIT 16),
-         |v$t AS (SELECT id, cos FROM v${t - 1}
-         |  UNION SELECT id, cos FROM p$t)""".stripMargin
-    s"""g AS (SELECT layer, id, nbr FROM '__AUX__/${aux}_graph/*.parquet'),
-       |lv AS (SELECT id, level FROM '__AUX__/${aux}_levels/*.parquet'),
-       |$ppCte,
-       |sc AS (SELECT id,
-       |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-       |  FROM pp GROUP BY id),
-       |e0 AS (SELECT id FROM lv ORDER BY level DESC, id LIMIT 1),
-       |${descend("e0", 3, "d3a")},
-       |${descend("d3a", 3, "d3")},
-       |${descend("d3", 2, "d2a")},
-       |${descend("d2a", 2, "d2")},
-       |${descend("d2", 1, "d1a")},
-       |${descend("d1a", 1, "d1")},
-       |v0 AS (SELECT id, cos FROM d1),
-       |${hop("d1", 1)},
-       |${hop("f1", 2)},
-       |${hop("f2", 3)}""".stripMargin
-  }
-
-  /** q342's BATCHED HNSW walk replay — [[hnswWalkCtesWith]] with every
-    * stage keyed by `qid`: the same greedy descent (2 steps per upper
-    * layer), 3 beam hops at ef = 16, and visited-set accounting, but
-    * PARTITION BY qid row_numbers replace the single-query LIMITs and
-    * the caller-supplied `ppCte` pairs EVERY query's components with
-    * every corpus vector (pp(qid, id, x, y)). Ends with
-    * `v3(qid, id, cos)`. */
-  private def hnswBatchWalkCtes(aux: String, ppCte: String): String = {
-    def descend(prev: String, l: Int, name: String) =
-      s"""$name AS MATERIALIZED (SELECT qid, id, cos FROM (
-         |    SELECT s.qid, s.id, s.cos, row_number() OVER (
-         |      PARTITION BY s.qid ORDER BY s.cos DESC, s.id) AS rn
-         |    FROM sc s JOIN (
-         |      SELECT qid, id FROM $prev UNION
-         |      SELECT f.qid, g.nbr AS id FROM g JOIN $prev f ON g.id = f.id
-         |      WHERE g.layer = $l) c ON c.qid = s.qid AND c.id = s.id)
-         |  WHERE rn = 1)""".stripMargin
-    def hop(prev: String, t: Int) =
-      s"""n$t AS (SELECT DISTINCT f.qid, g.nbr AS id FROM g
-         |  JOIN $prev f ON g.id = f.id WHERE g.layer = 0),
-         |p$t AS MATERIALIZED (SELECT s.qid, s.id, s.cos FROM sc s
-         |  JOIN (SELECT qid, id FROM $prev UNION SELECT qid, id FROM n$t) c
-         |    ON c.qid = s.qid AND c.id = s.id),
-         |f$t AS (SELECT qid, id, cos FROM (SELECT qid, id, cos,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
-         |      AS rn FROM p$t) WHERE rn <= 16),
-         |v$t AS (SELECT qid, id, cos FROM v${t - 1}
-         |  UNION SELECT qid, id, cos FROM p$t)""".stripMargin
-    s"""g AS (SELECT layer, id, nbr FROM '__AUX__/${aux}_graph/*.parquet'),
-       |lv AS (SELECT id, level FROM '__AUX__/${aux}_levels/*.parquet'),
-       |$ppCte,
-       |sc AS MATERIALIZED (SELECT qid, id,
-       |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-       |  FROM pp GROUP BY qid, id),
-       |e0 AS (SELECT id FROM lv ORDER BY level DESC, id LIMIT 1),
-       |c0 AS (SELECT s.qid, s.id, s.cos FROM sc s, e0 WHERE s.id = e0.id),
-       |${descend("c0", 3, "d3a")},
-       |${descend("d3a", 3, "d3")},
-       |${descend("d3", 2, "d2a")},
-       |${descend("d2a", 2, "d2")},
-       |${descend("d2", 1, "d1a")},
-       |${descend("d1a", 1, "d1")},
-       |v0 AS (SELECT qid, id, cos FROM d1),
-       |${hop("d1", 1)},
-       |${hop("f1", 2)},
-       |${hop("f2", 3)}""".stripMargin
-  }
-
-  /** q344's signature-agreement near-dup replay over an arbitrary
-    * (doc_id, text) SELECT — [[minhashLshCtesOver]]'s construction up
-    * to bands (same 16 md5 minhashes, same 4-band md5 hashing), then
-    * SIGNATURE AGREEMENT verification (≥ 13 of 16 equal components ⟺
-    * round-6 fraction ≥ 0.8 — exact, 16 divides a power of two)
-    * instead of exact Jaccard, ending in `ndrej(doc_id)`: the ids the
-    * online first-wins rule rejects (a qualifying partner with a
-    * smaller id exists among band-collision candidates). */
-  /** The q344 gate-chain replay (plants, normalization, smaller-id
-    * digest rule, LSH + signature agreement, frozen-profile language
-    * gate, logit, top-bigram) as CTEs ending in
-    * `flags(id, n_chars, pass_exact, pass_neardup, pred_lang,
-    * margin6, logit, top_cnt, n_pairs)` - shared by the q344 stream
-    * oracle and q358 reconciliation tail (which also reads the
-    * exposed `ndver(id1, id2)` verified pairs). */
-  private def curationGateCtes: String =
-    s"""vbase AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 17 = 3 THEN reverse(text) ELSE text END
-         |      AS text
-         |  FROM documents),
-         |pl AS (SELECT doc_id, text FROM vbase
-         |  UNION ALL
-         |  SELECT doc_id + 10000, text FROM vbase WHERE doc_id % 13 = 1
-         |  UNION ALL
-         |  SELECT doc_id + 20000, text || ' zzappendix' FROM vbase
-         |  WHERE doc_id % 11 = 2),
-         |nfil AS MATERIALIZED (SELECT doc_id, norm_text FROM (
-         |    SELECT doc_id,
-         |      trim(regexp_replace(lower(strip_accents(text)),
-         |        '\\s+', ' ', 'g')) AS norm_text
-         |    FROM pl)
-         |  WHERE length(norm_text) >= 100),
-         |bd AS (SELECT doc_id, md5(norm_text) AS dg FROM nfil),
-         |exr AS (SELECT DISTINCT a.doc_id FROM bd a
-         |  JOIN bd b ON b.dg = a.dg AND b.doc_id < a.doc_id),
-         |${minhashAgreementCtes("SELECT doc_id, norm_text AS text FROM nfil")},
-         |${langIdPredictCtes("nfil")},
-         |f AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(norm_text, '\\S+')) AS BIGINT)
-         |      AS n_words,
-         |    CAST(length(norm_text) AS BIGINT) AS nc,
-         |    CAST(len(regexp_extract_all(norm_text, '!')) AS BIGINT)
-         |      AS n_exclaim,
-         |    CAST(len(regexp_extract_all(norm_text, '[0-9]')) AS BIGINT)
-         |      AS n_digits
-         |  FROM nfil),
-         |lg AS (SELECT doc_id,
-         |    2*n_words + 1*nc - 50*n_exclaim - 10*n_digits - 500 AS logit
-         |  FROM f),
-         |toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-         |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-         |      SELECT doc_id, string_split(norm_text, ' ') AS parts
-         |      FROM nfil))),
-         |prs AS (SELECT a.doc_id, a.tok AS prev, b.tok AS next
-         |  FROM toks a JOIN toks b
-         |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-         |pc AS (SELECT doc_id, prev, next, CAST(count(*) AS BIGINT) AS c
-         |  FROM prs GROUP BY 1, 2, 3),
-         |rep AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_cnt,
-         |    CAST(sum(c) AS BIGINT) AS n_pairs FROM pc GROUP BY 1),
-         |flags AS (SELECT n.doc_id AS id,
-         |    CAST(length(n.norm_text) AS BIGINT) AS n_chars,
-         |    CASE WHEN ex.doc_id IS NULL THEN 1 ELSE 0 END AS pass_exact,
-         |    CASE WHEN nd.doc_id IS NULL THEN 1 ELSE 0 END AS pass_neardup,
-         |    COALESCE(lp.pred_lang, 'und') AS pred_lang,
-         |    CAST(COALESCE(lp.margin6, 0) AS BIGINT) AS margin6,
-         |    CAST(l.logit AS BIGINT) AS logit,
-         |    COALESCE(r.top_cnt, 1) AS top_cnt,
-         |    COALESCE(r.n_pairs, 0) AS n_pairs
-         |  FROM nfil n JOIN lg l ON l.doc_id = n.doc_id
-         |  LEFT JOIN exr ex ON ex.doc_id = n.doc_id
-         |  LEFT JOIN ndrej nd ON nd.doc_id = n.doc_id
-         |  LEFT JOIN lipred lp ON lp.doc_id = n.doc_id
-         |  LEFT JOIN rep r ON r.doc_id = n.doc_id)""".stripMargin
-
-  private def minhashAgreementCtes(corpusSelect: String): String = {
-    val hs = (0 until 16).map(i =>
-      s"list_min([md5('${i}_' || x) for x in sh]) AS h$i").mkString(",\n    ")
-    val bandRows = (0 until 4).map { b =>
-      val cat = (0 until 4).map(r => s"h${b * 4 + r}").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, md5($cat) AS bh FROM ndsigs"
-    }.mkString("\n  UNION ALL ")
-    val eq = (0 until 16).map(i =>
-      s"CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""ndd AS ($corpusSelect),
-       |ndshnz AS (SELECT doc_id, sh FROM (
-       |    SELECT doc_id, list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-       |        for i in range(len(parts)-2)]) AS sh
-       |    FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM ndd)
-       |    WHERE len(parts) >= 3)
-       |  WHERE len(sh) > 0),
-       |ndsigs AS MATERIALIZED (SELECT doc_id,
-       |    $hs
-       |  FROM ndshnz),
-       |ndbands AS (
-       |  $bandRows),
-       |ndcand AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-       |  FROM ndbands a JOIN ndbands b ON a.band = b.band AND a.bh = b.bh
-       |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-       |ndver AS MATERIALIZED (SELECT c.id1, c.id2 FROM ndcand c
-       |  JOIN ndsigs a ON a.doc_id = c.id1
-       |  JOIN ndsigs b ON b.doc_id = c.id2
-       |  WHERE $eq >= 13),
-       |ndrej AS (SELECT DISTINCT id2 AS doc_id FROM ndver)""".stripMargin
-  }
-
-  /** [[minhashLshCtes]] with a caller-chosen planted-copy SELECT (the
-    * q183 variant appends a token to the copies so near-dup clusters
-    * hold members of DIFFERENT quality). */
-  private def minhashLshCtesWith(plantedSelect: String): String =
-    minhashLshCtesOver(
-      s"""SELECT doc_id, text FROM documents
-         |  UNION ALL $plantedSelect""".stripMargin)
-
-  /** The full MinHash-LSH replay (shingles → 16 md5 minhashes → 4 bands
-    * → candidates → exact Jaccard) over an arbitrary (doc_id, text)
-    * corpus SELECT, ending in `verified(id1, id2, jaccard)` — the q180
-    * composite runs it over its deduped normalized corpus. */
-  private def minhashLshCtesOver(corpusSelect: String): String = {
-    val hs = (0 until 16).map(i =>
-      s"list_min([md5('${i}_' || x) for x in sh]) AS h$i").mkString(",\n    ")
-    val bandRows = (0 until 4).map { b =>
-      val cat = (0 until 4).map(r => s"h${b * 4 + r}").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, md5($cat) AS bh FROM sigs"
-    }.mkString("\n  UNION ALL ")
-    s"""d AS (
-       |  $corpusSelect),
-       |shnz AS (SELECT doc_id, sh FROM (
-       |    SELECT doc_id, list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-       |        for i in range(len(parts)-2)]) AS sh
-       |    FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM d)
-       |    WHERE len(parts) >= 3)
-       |  WHERE len(sh) > 0),
-       |sigs AS (SELECT doc_id,
-       |    $hs
-       |  FROM shnz),
-       |bands AS (
-       |  $bandRows),
-       |cand AS (SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
-       |  FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-       |verified AS (
-       |  SELECT c.id1, c.id2,
-       |    CAST(len(list_intersect(s1.sh, s2.sh)) AS DOUBLE)
-       |      / (len(s1.sh) + len(s2.sh) - len(list_intersect(s1.sh, s2.sh))) AS jaccard
-       |  FROM cand c JOIN shnz s1 ON s1.doc_id = c.id1 JOIN shnz s2 ON s2.doc_id = c.id2)""".stripMargin
-  }
-
-  /** q165/q222's stupid-backoff trigram LM replay, ending in
-    * `sc(doc_id, tier, p)` — every scored position with its backoff
-    * tier and probability; q165 aggregates it per doc, q222 folds the
-    * per-doc means into CCNet-style perplexity terciles. */
-  private val backoffLmDocCtes: String =
-    """parts AS (SELECT doc_id, string_split(text, ' ') AS parts FROM documents),
-      |toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-      |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM parts)),
-      |tri AS (SELECT a.doc_id, a.tok AS w2, b.tok AS w1, c.tok AS w0
-      |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.idx = a.idx + 1
-      |              JOIN toks c ON a.doc_id = c.doc_id AND c.idx = a.idx + 2),
-      |bi AS (SELECT a.doc_id, a.tok AS w1, b.tok AS w0
-      |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-      |tc3 AS (SELECT w2, w1, w0, count(*) AS c3 FROM tri
-      |  WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
-      |tc2 AS (SELECT w1, w0, count(*) AS c2 FROM bi
-      |  WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-      |tc1 AS (SELECT tok AS w0, count(*) AS c1 FROM toks
-      |  WHERE doc_id % 2 = 0 GROUP BY 1),
-      |nv AS (SELECT CAST(sum(c1) AS BIGINT) + count(*) AS nv FROM tc1),
-      |sc AS (SELECT t.doc_id,
-      |    CASE WHEN h3.c3 IS NOT NULL THEN 3
-      |         WHEN hb.c2 IS NOT NULL THEN 2 ELSE 1 END AS tier,
-      |    CASE WHEN h3.c3 IS NOT NULL THEN h3.c3 / hp.c2
-      |         WHEN hb.c2 IS NOT NULL THEN CAST(0.4 AS DOUBLE) * hb.c2 / u1.c1
-      |         ELSE CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
-      |              * (COALESCE(u0.c1, 0) + 1) / (SELECT nv FROM nv) END AS p
-      |  FROM tri t
-      |  LEFT JOIN tc3 h3 ON h3.w2 = t.w2 AND h3.w1 = t.w1 AND h3.w0 = t.w0
-      |  LEFT JOIN tc2 hp ON hp.w1 = t.w2 AND hp.w0 = t.w1
-      |  LEFT JOIN tc2 hb ON hb.w1 = t.w1 AND hb.w0 = t.w0
-      |  LEFT JOIN tc1 u1 ON u1.w0 = t.w1
-      |  LEFT JOIN tc1 u0 ON u0.w0 = t.w0)""".stripMargin
-
-  /** q213's trained language-ID replay — the ENTIRE model re-derived
-    * (bigrams, md5 buckets, micro-log weights, floors, additive scores,
-    * argmax + margin). q218 reuses it VERBATIM: incremental per-batch
-    * count maintenance must be bit-identical to full-corpus training
-    * (counts are additive), so the same full replay gates both. */
-  /** q352/q354's shared replay: rebuild the grouping views over the
-    * FULL lineitem table, replay the size-based routing decision, and
-    * re-derive the answer from the same chosen view — shared because
-    * additive IVM refresh (q354) must equal full recompute (q352's
-    * base case) verbatim. */
-  /** q361/q363's shared oracle: both inverted-index structures derived
-    * from the FULL corpus in one DuckDB pass — merged halves (q361) and
-    * the streamed build (q363) must both match it exactly. */
-  private val postingsFullOracle: String =
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS parts
-        |  FROM documents),
-        |pos AS MATERIALIZED (SELECT CAST(doc_id AS VARCHAR) AS id,
-        |    unnest(parts) AS term, len(parts) AS dl FROM toks),
-        |tf AS (SELECT term, id, CAST(count(*) AS BIGINT) AS tf,
-        |    CAST(any_value(dl) AS BIGINT) AS dl FROM pos GROUP BY 1, 2),
-        |df AS (SELECT term, CAST(count(DISTINCT id) AS BIGINT) AS df
-        |  FROM pos GROUP BY 1)
-        |SELECT t.term, t.id, t.tf, t.dl, d.df
-        |FROM tf t JOIN df d USING (term)
-        |ORDER BY term, id""".stripMargin
-
-  /** q362/q377's shared oracle: corpus-wide 12-token window counting,
-    * independent of the segment split AND of any key-table compaction
-    * (counts are additive over doc-disjoint segments, so merged and
-    * unmerged stores must decide identically). */
-  private val saStatsIncrementalOracle: String =
-      s"""WITH planted AS (SELECT doc_id, text
-         |    || CASE WHEN doc_id % 7 = 0
-         |      THEN ' exact substr pass finds arbitrary length repeats beyond any fixed k grid'
-         |      ELSE '' END
-         |    || CASE WHEN doc_id % 9 = 5 AND doc_id >= 250
-         |      THEN ' batch local repeated filler sentence appears many times within this batch only'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |toks AS MATERIALIZED (SELECT doc_id,
-         |    [lower(x) for x in regexp_extract_all(text, '\\S+')] AS ws
-         |  FROM planted),
-         |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-         |wins AS MATERIALIZED (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    array_to_string(ws[CAST(i + 1 AS INT):CAST(i + 12 AS INT)], ' ') AS w
-         |  FROM toks, UNNEST(range(len(ws) - 11)) t(i)
-         |  WHERE len(ws) >= 12),
-         |cnt AS MATERIALIZED (SELECT w, count(DISTINCT doc_id) AS nd
-         |  FROM wins GROUP BY w),
-         |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e
-         |  FROM wins JOIN cnt USING (w)
-         |  WHERE doc_id >= 250 AND nd >= 2),
-         |${islandSpanCtes(false)},
-         |agg AS (SELECT doc_id,
-         |    CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-         |SELECT l.doc_id, l.len AS n_tokens,
-         |  CAST(COALESCE(a.repeated_tokens, 0) AS BIGINT)
-         |    AS repeated_tokens,
-         |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-         |FROM lens l LEFT JOIN agg a USING (doc_id)
-         |WHERE l.doc_id >= 250
-         |ORDER BY l.doc_id""".stripMargin
-
-  private val viewLatticeOracle: String =
-      """WITH l AS (SELECT l_returnflag AS rf, l_linestatus AS ls,
-        |    month(l_shipdate) AS mth,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |v1 AS MATERIALIZED (SELECT rf, ls, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents FROM l GROUP BY 1, 2),
-        |v2 AS MATERIALIZED (SELECT rf, mth, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents FROM l GROUP BY 1, 2),
-        |sz AS (SELECT 'v_rf_ls' AS name, count(*) AS n FROM v1
-        |  UNION ALL SELECT 'v_rf_mth', count(*) FROM v2),
-        |pick AS (SELECT name FROM sz ORDER BY n, name LIMIT 1),
-        |a1 AS (SELECT rf, CAST(sum(cnt) AS BIGINT) AS cnt,
-        |    CAST(sum(sum_cents) AS BIGINT) AS sum_cents,
-        |    'v_rf_ls' AS served_from FROM v1 GROUP BY 1),
-        |a2 AS (SELECT rf, CAST(sum(cnt) AS BIGINT) AS cnt,
-        |    CAST(sum(sum_cents) AS BIGINT) AS sum_cents,
-        |    'v_rf_mth' AS served_from FROM v2 GROUP BY 1)
-        |SELECT a.rf, a.cnt, a.sum_cents, a.served_from
-        |FROM (SELECT * FROM a1 UNION ALL SELECT * FROM a2) a
-        |JOIN pick ON pick.name = a.served_from
-        |ORDER BY a.rf""".stripMargin
-
-  private val langIdTrainedOracle: String =
-    s"""WITH v AS (SELECT doc_id,
-       |    CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'zz'
-       |      ELSE 'qq' END AS lang,
-       |    CASE doc_id % 3 WHEN 0 THEN text
-       |      WHEN 1 THEN translate(text, 'aeiou', 'zzzzz')
-       |      ELSE reverse(text) END AS text
-       |  FROM documents),
-       |tb AS (SELECT lang,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-       |  FROM (SELECT lang, unnest(flatten(list_transform(
-       |      list_filter(string_split(lower(trim(text)), ' '),
-       |        w -> w <> ''),
-       |      w -> list_transform(range(1, length(w) + 2),
-       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-       |    FROM v WHERE doc_id < 200)),
-       |${langIdBucketScoreCtes("v WHERE doc_id BETWEEN 200 AND 299")},
-       |sc AS (SELECT g.doc_id, l.lang,
-       |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6,
-       |    CAST(count(*) AS BIGINT) AS n_grams
-       |  FROM gb g CROSS JOIN (SELECT DISTINCT lang FROM tot) l
-       |  LEFT JOIN wts w ON w.lang = l.lang AND w.bucket = g.bucket
-       |  JOIN flo f ON f.lang = l.lang
-       |  GROUP BY 1, 2),
-       |rk AS (SELECT doc_id, lang, score6, n_grams,
-       |    row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY score6 DESC, lang) AS rn,
-       |    lead(score6) OVER (PARTITION BY doc_id
-       |      ORDER BY score6 DESC, lang) AS next6
-       |  FROM sc)
-       |SELECT doc_id, lang AS pred_lang, score6,
-       |  score6 - COALESCE(next6, score6) AS margin6, n_grams
-       |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  /** One unrolled batch-perceptron iteration per round: `u<t>` is the
-    * misclassified-set aggregate under `w<t-1>` (count + Σ y·x per
-    * feature), `w<t>` the updated weights — q219's all-integer replay
-    * (the kmeansIterCtes pattern). */
-  private def perceptronIterCtes(iters: Int): String =
-    (1 to iters).map { t =>
-      s"""u$t AS (SELECT count(*) AS n,
-         |    COALESCE(SUM(y * fw), 0) AS dw, COALESCE(SUM(y * fc), 0) AS dc,
-         |    COALESCE(SUM(y * fe), 0) AS de, COALESCE(SUM(y * fd), 0) AS dd,
-         |    COALESCE(SUM(y), 0) AS db
-         |  FROM f, w${t - 1}
-         |  WHERE y * (ww*fw + wc*fc + we*fe + wd*fd + wb) <= 0),
-         |w$t AS (SELECT w${t - 1}.ww + u$t.dw AS ww,
-         |    w${t - 1}.wc + u$t.dc AS wc, w${t - 1}.we + u$t.de AS we,
-         |    w${t - 1}.wd + u$t.dd AS wd, w${t - 1}.wb + u$t.db AS wb
-         |  FROM w${t - 1}, u$t)""".stripMargin
-    }.mkString(",\n")
-
-  /** q263's greedy k-center replay: selection round `r` as two CTEs —
-    * the argmax pick over the running min-distance table `m(r-1)`
-    * (excluding earlier picks, id tie-break) and, unless it's the last
-    * round, the updated min-distance table `m(r)` against the new
-    * center (micro cosine distance, the q26 arithmetic). */
-  private def kcRoundCtes(r: Int, last: Boolean): String = {
-    val prevSel = (1 until r).map(i => s"SELECT id FROM c$i")
-      .mkString(" UNION ALL ")
-    val pick =
-      s"""c$r AS MATERIALIZED (SELECT id, mind FROM m${r - 1}
-         |  WHERE id NOT IN ($prevSel)
-         |  ORDER BY mind DESC, id LIMIT 1)""".stripMargin
-    if (last) pick else pick + ",\n" +
-      s"""m$r AS MATERIALIZED (
-         |  SELECT p.id, least(mm.mind, 1000000 - CAST(round(sum(p.x*p.y)
-         |    / (sqrt(sum(p.x*p.x)) * sqrt(sum(p.y*p.y))) * 1000000, 0)
-         |    AS BIGINT)) AS mind
-         |  FROM (SELECT a.vec_id AS id, unnest(a.embedding)::DOUBLE AS x,
-         |      unnest(e.embedding)::DOUBLE AS y
-         |    FROM embeddings a CROSS JOIN (SELECT embedding
-         |      FROM embeddings JOIN c$r ON vec_id = c$r.id) e) p
-         |  JOIN m${r - 1} mm ON mm.id = p.id
-         |  GROUP BY p.id, mm.mind)""".stripMargin
-  }
-
-  /** The curation oracles' trained language-ID replay: the q213 bigram
-    * profile trained on the first 200 relabelled documents, then each
-    * `docs(doc_id, norm_text)` row's best language and margin, ending in
-    * `lipred(doc_id, pred_lang, margin6)`. */
-  private def langIdPredictCtes(docs: String): String =
-    s"""liv AS (SELECT
-       |    CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'zz'
-       |      ELSE 'qq' END AS lang,
-       |    CASE doc_id % 3 WHEN 0 THEN text
-       |      WHEN 1 THEN translate(text, 'aeiou', 'zzzzz')
-       |      ELSE reverse(text) END AS text
-       |  FROM documents WHERE doc_id < 200),
-       |litb AS (SELECT lang,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-       |  FROM (SELECT lang, unnest(flatten(list_transform(
-       |      list_filter(string_split(lower(trim(text)), ' '),
-       |        w -> w <> ''),
-       |      w -> list_transform(range(1, length(w) + 2),
-       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-       |    FROM liv)),
-       |licnt AS (SELECT lang, bucket, count(*) AS c FROM litb GROUP BY 1, 2),
-       |litot AS (SELECT lang, sum(c) AS total FROM licnt GROUP BY 1),
-       |liwts AS (SELECT licnt.lang, bucket,
-       |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-       |      AS BIGINT) AS w6
-       |  FROM licnt JOIN litot USING (lang)),
-       |liflo AS (SELECT lang,
-       |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-       |      AS def6
-       |  FROM litot),
-       |ligb AS (SELECT doc_id,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-       |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-       |      list_filter(string_split(lower(trim(norm_text)), ' '),
-       |        w -> w <> ''),
-       |      w -> list_transform(range(1, length(w) + 2),
-       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-       |    FROM $docs)),
-       |lisc AS (SELECT g.doc_id, l.lang,
-       |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6
-       |  FROM ligb g CROSS JOIN (SELECT DISTINCT lang FROM litot) l
-       |  LEFT JOIN liwts w ON w.lang = l.lang AND w.bucket = g.bucket
-       |  JOIN liflo f ON f.lang = l.lang
-       |  GROUP BY 1, 2),
-       |lirk AS (SELECT doc_id, lang, score6,
-       |    row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY score6 DESC, lang) AS rn,
-       |    lead(score6) OVER (PARTITION BY doc_id
-       |      ORDER BY score6 DESC, lang) AS next6
-       |  FROM lisc),
-       |lipred AS (SELECT doc_id, lang AS pred_lang,
-       |    score6 - COALESCE(next6, score6) AS margin6
-       |  FROM lirk WHERE rn = 1)""".stripMargin
-
-  /** q273/q322's modularity local moves on the 40-node ring graph: the
-    * symmetric edges, degrees, two rounds from singleton communities and
-    * the integer modularity numerator, ending in `qn(num, m)`. */
-  private def modularityTwoRoundCtes: String =
-    s"""raw AS (SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-       |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-       |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-       |sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
-       |  WHERE src <> dst),
-       |deg AS MATERIALIZED (SELECT src AS id,
-       |    CAST(count(*) AS BIGINT) AS k FROM sym GROUP BY 1),
-       |mm AS MATERIALIZED (SELECT CAST(count(*) // 2 AS BIGINT) AS m
-       |  FROM sym),
-       |r0 AS (SELECT id, id AS comm FROM deg),
-       |${modularityRoundCtes("r0", 1)},
-       |${modularityRoundCtes("r1", 2)},
-       |ec AS (SELECT a.comm, CAST(count(*) // 2 AS BIGINT) AS ec
-       |  FROM sym s JOIN r2 a ON a.id = s.src
-       |  JOIN r2 b ON b.id = s.dst AND b.comm = a.comm GROUP BY 1),
-       |kct AS (SELECT r.comm, CAST(sum(d.k) AS BIGINT) AS kc
-       |  FROM r2 r JOIN deg d USING (id) GROUP BY 1),
-       |qn AS (SELECT CAST(sum(4 * mm.m * coalesce(ec.ec, 0)
-       |      - kct.kc * kct.kc) AS BIGINT) AS num,
-       |    max(mm.m) AS m
-       |  FROM kct LEFT JOIN ec ON ec.comm = kct.comm CROSS JOIN mm)""".stripMargin
-
-  /** q343/q359's HNSW tombstone repair of the graph
-    * `g(layer, id, nbr, cos)`: drop the edges that touch a tombstone in
-    * `t(tid)`, give each survivor one replacement per lost edge from its
-    * lost neighbours' lists, best cosine first, and end in the repaired
-    * edges `rep`. */
-  private def hnswTombstoneRepairCtes: String =
-    """alive AS MATERIALIZED (SELECT layer, id, nbr, cos FROM g
-      |  WHERE id NOT IN (SELECT tid FROM t)
-      |    AND nbr NOT IN (SELECT tid FROM t)),
-      |lost AS MATERIALIZED (SELECT layer, id AS u, nbr AS d FROM g
-      |  WHERE id NOT IN (SELECT tid FROM t)
-      |    AND nbr IN (SELECT tid FROM t)),
-      |kadd AS (SELECT layer, u, CAST(count(*) AS BIGINT) AS k
-      |  FROM lost GROUP BY 1, 2),
-      |cand AS MATERIALIZED (SELECT layer, u, c FROM (
-      |    SELECT DISTINCT l.layer, l.u, g2.nbr AS c
-      |    FROM lost l JOIN g g2 ON g2.layer = l.layer AND g2.id = l.d
-      |    WHERE g2.nbr NOT IN (SELECT tid FROM t) AND g2.nbr <> l.u) x
-      |  WHERE NOT EXISTS (SELECT 1 FROM alive a
-      |    WHERE a.layer = x.layer AND a.id = x.u AND a.nbr = x.c)),
-      |pairs AS (SELECT cd.layer, cd.u, cd.c,
-      |    unnest(vu.embedding)::DOUBLE AS x,
-      |    unnest(vc.embedding)::DOUBLE AS y
-      |  FROM cand cd JOIN embeddings vu ON vu.vec_id = cd.u
-      |  JOIN embeddings vc ON vc.vec_id = cd.c),
-      |scored AS (SELECT layer, u, c,
-      |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-      |  FROM pairs GROUP BY 1, 2, 3),
-      |adds AS (SELECT layer, u AS id, c AS nbr, cos FROM (
-      |    SELECT s.*, row_number() OVER (PARTITION BY s.layer, s.u
-      |      ORDER BY s.cos DESC, s.c) AS rn, k.k
-      |    FROM scored s JOIN kadd k ON k.layer = s.layer AND k.u = s.u)
-      |  WHERE rn <= k),
-      |rep AS (SELECT layer, id, nbr, cos FROM alive
-      |  UNION ALL SELECT layer, id, nbr, cos FROM adds)""".stripMargin
-
-  /** q370/q374's int8 scan: the probed cells' vectors (`a` assignments,
-    * `p` probes) quantized per vector to `cd(vec_id, i, q)`, and query
-    * vector 1 quantized to `qv(i, qv)`. */
-  private def int8ProbedCodesCtes: String =
-    """cand AS (SELECT e.vec_id, e.embedding FROM embeddings e
-      |  JOIN a USING (vec_id)
-      |  WHERE a.centroid IN (SELECT centroid FROM p)),
-      |ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
-      |  FROM cand, UNNEST(range(1, len(embedding) + 1)) t(i)),
-      |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1),
-      |cd AS MATERIALIZED (SELECT ex.vec_id, i,
-      |    CASE WHEN maxabs = 0 THEN 0
-      |         ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)
-      |    END AS q
-      |  FROM ex JOIN mx USING (vec_id)),
-      |qx AS (SELECT i, embedding[i]::DOUBLE AS x
-      |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)
-      |  WHERE vec_id = 1),
-      |qm AS (SELECT max(abs(x)) AS maxabs FROM qx),
-      |qv AS (SELECT i, CASE WHEN qm.maxabs = 0 THEN 0
-      |    ELSE CAST(floor(qx.x * 127.0 / qm.maxabs + 0.5) AS BIGINT)
-      |    END AS qv FROM qx, qm)""".stripMargin
-
-  /** q213/q349's trained language-ID model over the labelled bigram
-    * buckets `tb(lang, bucket)`: per-language bucket weights `wts`, the
-    * unseen-bucket floor `flo`, and the bigram buckets `gb` of the
-    * `scored` rows to be classified. */
-  private def langIdBucketScoreCtes(scored: String): String =
-    s"""cnt AS (SELECT lang, bucket, count(*) AS c FROM tb GROUP BY 1, 2),
-       |tot AS (SELECT lang, sum(c) AS total FROM cnt GROUP BY 1),
-       |wts AS (SELECT cnt.lang, bucket,
-       |    CAST(round(log10((c + 1) / (total + 1024)) * 1000000, 0)
-       |      AS BIGINT) AS w6
-       |  FROM cnt JOIN tot USING (lang)),
-       |flo AS (SELECT lang,
-       |    CAST(round(log10(1 / (total + 1024)) * 1000000, 0) AS BIGINT)
-       |      AS def6
-       |  FROM tot),
-       |gb AS (SELECT doc_id,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-       |  FROM (SELECT doc_id, unnest(flatten(list_transform(
-       |      list_filter(string_split(lower(trim(text)), ' '),
-       |        w -> w <> ''),
-       |      w -> list_transform(range(1, length(w) + 2),
-       |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-       |    FROM $scored))""".stripMargin
-
-  /** q88/q197's fixed-point integer PageRank over the edges `e(src, dst)`:
-    * ranks start at 1e9, self-loops keep sinks, and `iters` damped rounds
-    * fill `pr(id, rank, iter)`. */
-  private def pageRankCtes(iters: Int): String =
-    s"""nodes AS (SELECT DISTINCT id FROM (
-       |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-       |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-       |e0 AS (SELECT src, dst, 1 AS w FROM e
-       |  UNION ALL SELECT id, id, 0 FROM nodes),
-       |pr(id, rank, iter) AS (
-       |  SELECT id, CAST(1000000000 AS BIGINT), 0 FROM nodes
-       |  UNION ALL
-       |  SELECT e0.dst,
-       |    CAST(150000000 + SUM(e0.w * ((p.rank * 85) // (100 * COALESCE(o.outdeg, 1))))
-       |      AS BIGINT),
-       |    p.iter + 1
-       |  FROM pr p
-       |  JOIN e0 ON e0.src = p.id
-       |  LEFT JOIN outdeg o ON o.src = e0.src
-       |  WHERE p.iter < $iters
-       |  GROUP BY e0.dst, p.iter)""".stripMargin
-
-  /** q70/q71's SimHash radius join: a `32 + hiBits`-bit md5 SimHash of
-    * the documents plus a tail-marked near copy of each, banded by
-    * `layout` (offset, width), and every banded pair within `maxDist`
-    * bits. */
-  private def simhashRadiusOracle(hiBits: Int, layout: Seq[(Int, Int)],
-      maxDist: Int): String = {
-    val lo = (0 until 32).map(j =>
-      s"CASE WHEN 2*len(list_filter(mh1, h -> substr(h,${j + 1},1) >= '8')) > len(mh1) THEN ${1L << j} ELSE 0 END")
-    val hi = (0 until hiBits).map(j =>
-      s"CASE WHEN 2*len(list_filter(mh2, h -> substr(h,${j + 1},1) >= '8')) > len(mh2) THEN ${1L << (32 + j)} ELSE 0 END")
-    val bits = (lo ++ hi).mkString(" + ")
-    val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-      s"SELECT doc_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-      .mkString("\n  UNION ALL ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 10000, text || ' near duplicate tail marker'
-       |  FROM documents),
-       |sigs AS (SELECT doc_id, CAST($bits AS BIGINT) AS sig FROM (
-       |  SELECT doc_id,
-       |    [md5(x) for x in string_split(text, ' ')] AS mh1,
-       |    [md5('2' || x) for x in string_split(text, ' ')] AS mh2
-       |  FROM corpus)),
-       |banded AS (
-       |  $bands),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-       |    a.sig AS sig1, b.sig AS sig2
-       |  FROM banded a JOIN banded b
-       |    ON a.b = b.b AND a.v = b.v AND a.doc_id < b.doc_id)
-       |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-       |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= $maxDist""".stripMargin
-  }
-
-  /** q72/q73's top-3 lineitems by price per return flag, ties broken
-    * by order and line number. */
-  private def topPricesPerFlagOracle: String =
-    """SELECT l_returnflag, l_orderkey, l_linenumber, price_cents FROM (
-      |  SELECT l_returnflag, l_orderkey, l_linenumber,
-      |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_cents,
-      |    row_number() OVER (PARTITION BY l_returnflag
-      |      ORDER BY CAST(ROUND(l_extendedprice*100) AS BIGINT) DESC,
-      |               l_orderkey ASC, l_linenumber ASC) AS rn
-      |  FROM lineitem) WHERE rn <= 3""".stripMargin
-
-  /** q157/q193's planted-boilerplate corpus (a newsletter sentence on every
-    * 7th document), its repeated 8-gram hits and their merged spans `sp`. */
-  private def plantedRepeatSpanCtes: String =
-    raw"""planted AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 7 = 0
-         |      THEN text || ' Please subscribe to our newsletter for free updates today'
-         |      ELSE text END AS text
-         |  FROM documents),
-         |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-         |  FROM planted),
-         |grams AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    array_to_string([lower(x) for x in ws[i+1:i+8]], ' ') AS gram
-         |  FROM toks, UNNEST(range(len(ws) - 7)) t(i)
-         |  WHERE len(ws) >= 8),
-         |rep AS (SELECT gram FROM (
-         |    SELECT gram, count(DISTINCT doc_id) AS nd FROM grams GROUP BY 1)
-         |  WHERE nd >= 2),
-         |hits AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM grams
-         |  WHERE gram IN (SELECT gram FROM rep)),
-         |${islandSpanCtes(false)}""".stripMargin
-
-  /** q344/q358's per-document curation verdict from the `gates` flags:
-    * each gate's pass flag and the admitted flag that ANDs them. */
-  private def curationVerdictSql(gates: String): String =
-    s"""SELECT id, n_chars,
-       |  CAST(pass_exact AS BIGINT) AS pass_exact,
-       |  CAST(pass_neardup AS BIGINT) AS pass_neardup,
-       |  pred_lang, margin6, logit, top_cnt, n_pairs,
-       |  CAST(CASE WHEN pred_lang = 'en' AND margin6 >= 1000000
-       |    THEN 1 ELSE 0 END AS BIGINT) AS pass_lang,
-       |  CAST(CASE WHEN logit >= 0 THEN 1 ELSE 0 END AS BIGINT)
-       |    AS pass_quality,
-       |  CAST(CASE WHEN top_cnt * 10 <= n_pairs THEN 1 ELSE 0 END
-       |    AS BIGINT) AS pass_rep,
-       |  CAST(CASE WHEN pass_exact = 1 AND pass_neardup = 1
-       |    AND pred_lang = 'en' AND margin6 >= 1000000
-       |    AND logit >= 0 AND top_cnt * 10 <= n_pairs
-       |    THEN 1 ELSE 0 END AS BIGINT) AS admitted
-       |FROM $gates ORDER BY id""".stripMargin
-
-  /** The hybrid oracles' BM25 branch over the chunk index `idx`: corpus
-    * `params`, the query `terms`' tf and df, and the top 25 chunks by
-    * score in `bm(id, bm25_score)`. */
-  private def bm25Top25Ctes(terms: String): String =
-    s"""params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(tokens)) AS avgdl FROM idx),
-       |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-       |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-       |  WHERE tok IN ($terms) GROUP BY id, tok),
-       |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-       |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-       |sc AS (SELECT t.id,
-       |${bm25TermScore}
-       |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-       |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY id
-       |  ORDER BY bm25_score DESC, id LIMIT 25)""".stripMargin
-
-  /** q345/q366's span removal: merge the `hits` spans, drop the
-    * tokens they cover from `otoks(doc_id, ows)` and report each doc's
-    * kept text and token counts. */
-  private def spanRemovalSql: String =
-    s"""${islandSpanCtes(true)},
-       |pos2 AS (SELECT doc_id, CAST(i AS BIGINT) AS idx,
-       |    ows[CAST(i + 1 AS INT)] AS tok
-       |  FROM otoks, UNNEST(range(len(ows))) t(i)),
-       |keptk AS (SELECT p.doc_id, p.idx, p.tok FROM pos2 p
-       |  WHERE NOT EXISTS (SELECT 1 FROM sp s
-       |    WHERE s.doc_id = p.doc_id AND p.idx >= s.s AND p.idx < s.e)),
-       |res AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text,
-       |    CAST(count(*) AS BIGINT) AS kept FROM keptk GROUP BY 1)
-       |SELECT o.doc_id, COALESCE(r.text, '') AS text,
-       |  CAST(len(o.ows) AS BIGINT) AS n_tokens,
-       |  CAST(COALESCE(r.kept, 0) AS BIGINT) AS kept_tokens
-       |FROM otoks o LEFT JOIN res r USING (doc_id)
-       |ORDER BY o.doc_id""".stripMargin
-
-  /** q372/q381's ordered proximity search over `idx`: from each `graft`,
-    * the nearest later `phrase`, then the nearest `probe` after it, both
-    * within 6 positions of the `graft`, ending in `s2(id, s, e)`. */
-  private def proximitySpanCtes: String =
-    """px AS MATERIALIZED (SELECT id, CAST(i - 1 AS BIGINT) AS pos,
-      |    tokens[i] AS tok
-      |  FROM idx, UNNEST(range(1, len(tokens) + 1)) t(i)
-      |  WHERE tokens[i] IN ('graft', 'phrase', 'probe')),
-      |o0 AS (SELECT id, pos AS s, pos AS e FROM px WHERE tok = 'graft'),
-      |s1 AS (SELECT o.id, o.s, min(p.pos) AS e
-      |  FROM o0 o JOIN px p ON p.id = o.id AND p.tok = 'phrase'
-      |    AND p.pos > o.e AND p.pos - o.s <= 6
-      |  GROUP BY 1, 2),
-      |s2 AS (SELECT o.id, o.s, min(p.pos) AS e
-      |  FROM s1 o JOIN px p ON p.id = o.id AND p.tok = 'probe'
-      |    AND p.pos > o.e AND p.pos - o.s <= 6
-      |  GROUP BY 1, 2)""".stripMargin
-
-  /** q367/q373's MaxScore top term: per-term BM25 upper bounds `ub6`
-    * from the max tf and min length, the highest-bound term `tt`, and
-    * its scores `ts(s6, rn)` ranked over `sc`. */
-  private def maxScoreTopTermCtes: String =
-    """tb AS (SELECT tok, max(tf) AS max_tf, min(dl) AS min_dl
-      |  FROM tf GROUP BY tok),
-      |ub AS (SELECT tb.tok,
-      |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
-      |      tb.max_tf * 2.2 /
-      |      (tb.max_tf + 1.2 * (0.25 + 0.75 * tb.min_dl / p.avgdl)) *
-      |      1000000, 0) AS BIGINT) + 1 AS ub6
-      |  FROM tb, params p JOIN df f ON tb.tok = f.tok),
-      |tt AS (SELECT tok FROM ub ORDER BY ub6 DESC, tok LIMIT 1),
-      |ts AS (SELECT CAST(round(s * 1000000, 0) AS BIGINT) AS s6,
-      |    row_number() OVER (ORDER BY CAST(round(s * 1000000, 0)
-      |      AS BIGINT) DESC, id) AS rn
-      |  FROM sc WHERE tok = (SELECT tok FROM tt))""".stripMargin
-
-  /** q340/q345's suffix-rank replay over `planted`: each 12-token
-    * window keyed by the 8-token ranks at its start and 4 tokens in,
-    * kept where its key occurs in two or more documents, ending in
-    * `hits(doc_id, s, e)`. */
-  private def saRepeatHitsCtes: String =
-    s"""${saRankCtes(3, "SELECT doc_id, text FROM planted")},
-       |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-       |keyed AS MATERIALIZED (SELECT a.doc_id, a.pos, a.rank AS ra,
-       |    b.rank AS rb
-       |  FROM r3 a JOIN r3 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 4
-       |  JOIN lens l ON l.doc_id = a.doc_id
-       |  WHERE a.pos + 12 <= l.len),
-       |rep AS (SELECT ra, rb FROM (SELECT ra, rb,
-       |    count(DISTINCT doc_id) AS nd FROM keyed GROUP BY 1, 2)
-       |  WHERE nd >= 2),
-       |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
-       |  FROM keyed k JOIN rep USING (ra, rb))""".stripMargin
-
-  /** q177/q185's quantile-gate oracle over `cuts(q_mille, cut)` and the
-    * values `v(v)`: each cut's exact rank, the target rank and whether
-    * the rank lies within ±⌈6n/256⌉ ranks of it. */
-  private def quantileGateSql: String =
-    """agg AS (SELECT c.q_mille, c.cut, count(*) AS n,
-      |    CAST(SUM(CASE WHEN v.v <= c.cut THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_le
-      |  FROM cuts c CROSS JOIN v GROUP BY 1, 2),
-      |b AS (SELECT q_mille, cut, n, n_le,
-      |    (q_mille * n + 999) // 1000 AS target_r,
-      |    (6 * n + 255) // 256 AS slack FROM agg)
-      |SELECT CAST(q_mille AS BIGINT) AS q_mille, cut, n, n_le, target_r,
-      |  target_r - slack AS lo, target_r + slack AS hi,
-      |  CAST(CASE WHEN n_le BETWEEN target_r - slack AND target_r + slack
-      |       THEN 1 ELSE 0 END AS BIGINT) AS in_bound
-      |FROM b ORDER BY q_mille""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |  CAST(SUM(CAST(ROUND(l_discount*100) AS BIGINT)) AS BIGINT) AS sum_disc_cents,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT doc_id, lang, n_chars, UPPER(source) AS source_uc
-        |FROM documents WHERE n_chars >= 100 AND lang <> 'en'""".stripMargin,
-
-    "q03_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-
-    "q04_semi_join" ->
-      """SELECT c_custkey, c_nationkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-
-    "q05_star_join" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-
-    "q06_window_rank" ->
-      """SELECT c_nationkey, rnk, c_custkey, CAST(ROUND(c_acctbal*100) AS BIGINT) AS acctbal_cents
-        |FROM (
-        |  SELECT c_nationkey, c_custkey, c_acctbal,
-        |    ROW_NUMBER() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rnk
-        |  FROM customer) WHERE rnk <= 3""".stripMargin,
-
-    "q07_topk_orders" ->
-      """SELECT o_orderkey, CAST(ROUND(o_totalprice*100) AS BIGINT) AS totalprice_cents
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q08_distinct_agg" ->
-      """SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_customers, COUNT(*) AS n_orders
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q09_latest_event" ->
-      """SELECT user_id, event_type, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
-        |FROM (
-        |  SELECT user_id, event_type, ts,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-
-    "q10_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q11_tumbling_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q12_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN prev_ts IS NULL
-        |              OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(prev_ts) AS BIGINT) > 1800
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, ts,
-        |          LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |        FROM events))
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
-        |FROM g GROUP BY 1""".stripMargin,
-
-    "q13_rollup" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-        |  CAST(SUM(l_quantity) AS BIGINT) AS sum_qty, COUNT(*) AS n
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-
-    "q14_set_ops" ->
-      """SELECT user_id, day, 'signup_error_no_purchase' AS cohort FROM (
-        |  SELECT user_id, day FROM (
-        |    SELECT DISTINCT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
-        |    FROM events WHERE event_type = 'signup'
-        |    INTERSECT
-        |    SELECT DISTINCT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
-        |    FROM events WHERE event_type = 'error')
-        |  EXCEPT
-        |  SELECT DISTINCT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
-        |  FROM events WHERE event_type = 'purchase')""".stripMargin,
-
-    "q15_coalesce_source" ->
-      """SELECT doc_id,
-        |  COALESCE(CASE WHEN lang = 'zh' THEN lang END, source, 'unknown') AS resolved,
-        |  CASE WHEN lang = 'zh' THEN 'lang_zh'
-        |       WHEN TRIM(source) <> '' THEN 'source'
-        |       ELSE 'fallback' END AS source_field
-        |FROM documents""".stripMargin,
-
-    "q16_truncate" ->
-      """SELECT doc_id,
-        |  CASE WHEN LENGTH(text) > 100 THEN SUBSTRING(text, 1, 100) || '...' ELSE text END AS preview
-        |FROM documents""".stripMargin,
-
-    "q17_orders_by_quarter" ->
-      """SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
-        |  CAST(EXTRACT(quarter FROM o_orderdate) AS BIGINT) AS qtr,
-        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n_orders
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-
-    "q18_text_stats" ->
-      """SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS len_chars,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe_tokens
-        |FROM documents""".stripMargin,
-
-    "q19_bm25_topk" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d) u
-        |  WHERE tok IN ('table','scan','merge','join','vector') GROUP BY doc_id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
-        |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
-        |sc AS (SELECT t.doc_id,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok)
-        |SELECT doc_id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY doc_id
-        |ORDER BY bm25_score DESC, doc_id LIMIT 10""".stripMargin,
-
-    "q20_minhash_sig" -> {
-      val hs = (0 until 6).map(i =>
-        s"list_min([md5('${i}_' || x) for x in sh]) AS h$i").mkString(",\n  ")
-      s"""WITH d AS (SELECT doc_id,
-         |    list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-         |                   for i in range(len(parts)-2)]) AS sh
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM documents)
-         |  WHERE len(parts) >= 3)
-         |SELECT doc_id,
-         |  $hs
-         |FROM d WHERE len(sh) > 0""".stripMargin
-    },
-
-    "q21_exact_dedup" ->
-      """SELECT md5(text) AS text_hash, COUNT(*) AS n, MIN(doc_id) AS keep_id
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q22_quality" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
-        |  CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        t -> t IN ('the','and','of','to','a','in','is','that','for','it','with','as','was','on','be'))) AS BIGINT) AS stop_hits,
-        |  round(CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |        t -> t IN ('the','and','of','to','a','in','is','that','for','it','with','as','was','on','be'))) AS DOUBLE)
-        |    / len(string_split_regex(trim(text), '\s+')), 6) AS stop_ratio
-        |FROM documents""".stripMargin,
-
-    "q23_token_explode" ->
-      """SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |  SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |    SELECT doc_id, string_split(text, ' ') AS parts FROM documents WHERE doc_id < 5))""".stripMargin,
-
-    "q24_jaccard_topk" ->
-      """WITH base AS (SELECT doc_id, lang, n_chars // 50 AS bucket,
-        |    list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-        |                   for i in range(len(parts)-2)]) AS sh
-        |  FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS parts FROM documents)
-        |  WHERE len(parts) >= 3)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jacc
-        |FROM base a JOIN base b ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |ORDER BY jacc DESC, id1, id2 LIMIT 20""".stripMargin,
-
-    "q25_embed_neardup" ->
-      """WITH p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    unnest(a.embedding)::DOUBLE AS x, unnest(b.embedding)::DOUBLE AS y
-        |  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |SELECT id1, id2, cos FROM (
-        |  SELECT id1, id2, round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1, 2)
-        |WHERE cos >= 0.3""".stripMargin,
-
-    "q26_cosine_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |p AS (SELECT a.vec_id, unnest(a.embedding)::DOUBLE AS x, unnest(q.embedding)::DOUBLE AS y
-        |  FROM embeddings a, q)
-        |SELECT vec_id, cos FROM (
-        |  SELECT vec_id, round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1)
-        |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
-
-    "q27_knn_join" ->
-      """WITH p AS (SELECT b.vec_id AS query_id, a.vec_id AS corpus_id,
-        |    unnest(a.embedding)::DOUBLE AS x, unnest(b.embedding)::DOUBLE AS y
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id < 5),
-        |c AS (SELECT query_id, corpus_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1, 2)
-        |SELECT query_id, corpus_id, cos, rn FROM (
-        |  SELECT query_id, corpus_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rn
-        |  FROM c) WHERE rn <= 3""".stripMargin,
-
-    "q28_simhash" -> {
-      val bits = (0 until 16).map(j =>
-        s"CASE WHEN 2*len(list_filter(mh, h -> substr(h,${j + 1},1) >= '8')) > len(mh) THEN ${1L << j} ELSE 0 END")
-        .mkString(" + ")
-      s"""SELECT doc_id, CAST($bits AS BIGINT) AS simhash16 FROM (
-         |  SELECT doc_id, [md5(x) for x in string_split(text, ' ')] AS mh FROM documents)""".stripMargin
-    },
-
-    "q29_langid" -> {
-      val lists = Map(
-        "de" -> "'der','die','und','das','in','von','zu','den','mit','ist','des','auf','für','dem','nicht'",
-        "en" -> "'the','and','of','to','a','in','is','that','for','it','with','as','was','on','be'",
-        "es" -> "'el','la','de','que','y','en','un','los','se','del','las','por','con','una','es'",
-        "fr" -> "'le','la','de','et','les','des','un','une','du','en','est','que','pour','dans','qui'")
-      val scores = lists.toSeq.sortBy(_._1).map { case (l, words) =>
-        s"len(list_filter(toks, t -> t IN ($words))) AS s_$l"
-      }.mkString(",\n  ")
-      val cases = lists.keys.toSeq.sorted.map(l =>
-        s"WHEN s_$l > 0 AND s_$l = best THEN '$l'").mkString(" ")
-      s"""WITH sc AS (SELECT doc_id,
-         |  $scores
-         |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents))
-         |SELECT doc_id, CASE $cases ELSE 'und' END AS lang_guess FROM (
-         |  SELECT doc_id, s_de, s_en, s_es, s_fr,
-         |    greatest(s_de, s_en, s_es, s_fr) AS best FROM sc)""".stripMargin
-    },
-
-    "q30_multimodal_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |  'bin' AS format, true AS ok FROM documents""".stripMargin,
-
-    "q31_rrf_fusion" ->
-      """WITH bal AS (SELECT c_custkey, rank_bal FROM (
-        |    SELECT c_custkey, ROW_NUMBER() OVER (ORDER BY c_acctbal DESC, c_custkey) AS rank_bal
-        |    FROM customer) WHERE rank_bal <= 20),
-        |ord AS (SELECT c_custkey, rank_ord FROM (
-        |    SELECT o_custkey AS c_custkey,
-        |      ROW_NUMBER() OVER (ORDER BY n_orders DESC, o_custkey) AS rank_ord
-        |    FROM (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1)) WHERE rank_ord <= 20)
-        |SELECT COALESCE(bal.c_custkey, ord.c_custkey) AS c_custkey, rank_bal, rank_ord,
-        |  COALESCE(1.0 / (60 + rank_bal), 0.0) + COALESCE(1.0 / (60 + rank_ord), 0.0) AS rrf_score
-        |FROM bal FULL OUTER JOIN ord ON bal.c_custkey = ord.c_custkey""".stripMargin,
-
-    "q32_chunk_pipeline" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS chunk_index, CAST(LENGTH(text) AS BIGINT) AS chunk_len
-        |FROM documents WHERE LENGTH(TRIM(text)) >= 400""".stripMargin,
-
-    "q33_minhash_lsh_planted" ->
-      s"""WITH $minhashLshCtes
-         |SELECT id1, id2, jaccard FROM verified WHERE jaccard >= 0.8""".stripMargin,
-
-    "q34_stream_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start, event_type,
-        |  COUNT(*) AS n FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q37_session_window" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN prev_ts IS NULL
-        |              OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, ts,
-        |          LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |        FROM events))
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-        |  COUNT(*) AS n_events
-        |FROM g GROUP BY 1""".stripMargin,
-
-    "q38_salted_agg" ->
-      """SELECT l_returnflag, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q40_argmax_native" ->
-      """SELECT user_id, arg_max(event_type, ts) AS last_event_type,
-        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_ts
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q41_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.25), 6) AS p25,
-        |  round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-        |  round(quantile_cont(l_quantity, 0.75), 6) AS p75,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q42_asof_join" ->
-      """WITH clicks AS (
-        |  SELECT user_id, ts, COUNT(*) AS n_clicks_at FROM events
-        |  WHERE event_type = 'click' GROUP BY 1, 2),
-        |p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id,
-        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts_str,
-        |  c.n_clicks_at
-        |FROM p ASOF LEFT JOIN clicks c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-
-    "q43_range_join" ->
-      """WITH bands AS (
-        |  SELECT i AS band_id, i*50000.0 AS lo, (i+1)*50000.0 AS hi
-        |  FROM range(12) t(i))
-        |SELECT band_id, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM orders o JOIN bands b ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
-        |GROUP BY 1""".stripMargin,
-
-    "q44_cube" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-        |  CAST(SUM(l_quantity) AS BIGINT) AS sum_qty, COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-
-    "q45_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q46_stream_stateful" ->
-      """SELECT user_id, COUNT(*) AS n_events,
-        |  COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchases
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q47_column_stats" -> {
-      val per = Seq("l_quantity", "l_discount", "l_extendedprice").map { c =>
-        s"""SELECT '$c' AS col_name, COUNT($c) AS n,
-           |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  round(CAST(MIN($c) AS DOUBLE), 6) AS min_v,
-           |  round(CAST(MAX($c) AS DOUBLE), 6) AS max_v
-           |FROM lineitem""".stripMargin
-      }
-      per.mkString("\nUNION ALL\n")
-    },
-
-    "q48_stream_static_join" ->
-      """SELECT c_nationkey, COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1""".stripMargin,
-
-    "q49_grouping_sets" ->
-      """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-        |  COALESCE(o_orderstatus, 'ALL') AS st,
-        |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_pri,
-        |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_st,
-        |  COUNT(*) AS n
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())""".stripMargin,
-
-    "q50_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_cents
-        |FROM orders""".stripMargin,
-
-    "q51_array_agg" ->
-      """SELECT o_orderpriority,
-        |  string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey) AS keys_sorted,
-        |  COUNT(*) AS n
-        |FROM orders WHERE o_orderkey % 97 = 0 GROUP BY 1""".stripMargin,
-
-    "q52_nullsafe_join" ->
-      """WITH a AS (SELECT DISTINCT CASE WHEN user_id % 10 = 0 THEN NULL
-        |    ELSE user_id % 10 END AS k FROM events WHERE event_type = 'signup'),
-        |b AS (SELECT DISTINCT CASE WHEN user_id % 10 = 0 THEN NULL
-        |    ELSE user_id % 10 END AS k FROM events WHERE event_type = 'error')
-        |SELECT a.k, true AS matched FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k""".stripMargin,
-
-    "q53_stream_stream_join" ->
-      """SELECT c.user_id, c.event_id AS c_id, p.event_id AS p_id
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        |  AND c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE""".stripMargin,
-
-    // --- ANN/hybrid gates (aux-table oracles; __AUX__ → Verify's dump
-    // path). The Spark side materializes only the *index* artifacts;
-    // everything the QUERY does — candidate pruning, cosine in double
-    // math, BM25, rank windows, RRF fusion, top-k — is re-derived here.
-
-    "q35_hybrid_search" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q35_index/*.parquet'),
-        |dense AS (SELECT * FROM '__AUX__/q35_dense/*.parquet'),
-        |${bm25Top25Ctes("'spark','join','merge','table','scan'")},
-        |${rrfTop5Sql}""".stripMargin,
-
-    "q54_hybrid_prebuilt" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q54_index/*.parquet'),
-        |dense AS (SELECT * FROM '__AUX__/q54_dense/*.parquet'),
-        |${bm25Top25Ctes("'filter','predicate','pushdown','scan'")},
-        |${rrfTop5Sql}""".stripMargin,
-
-    // thresholds = floor(rate·2^32) in hex: 0.1→19999999, 0.5→80000000,
-    // 0.9→e6666666 (Sampling.rateThreshold)
-    "q55_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |  CASE WHEN lang = 'en' THEN '19999999'
-        |       WHEN lang = 'de' THEN '80000000'
-        |       ELSE 'e6666666' END""".stripMargin,
-
-    "q56_dedup_components" ->
-      s"""WITH RECURSIVE tripled AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000, text FROM documents
-        |  UNION ALL SELECT doc_id + 20000, text FROM documents),
-        |ranked AS (SELECT doc_id, md5(text) AS dg,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |  FROM tripled),
-        |edges AS (SELECT a.doc_id AS id1, b.doc_id AS id2 FROM ranked a
-        |  JOIN ranked b ON a.dg = b.dg AND b.rn = a.rn + 1),
-        |${componentWalkCtes("edges", false)},
-        |cc AS (SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id)
-        |SELECT doc_id, comp, count(*) OVER (PARTITION BY comp) AS comp_size
-        |FROM cc""".stripMargin,
-
-    "q36_lsh_ann" ->
-      """WITH b AS (SELECT * FROM '__AUX__/q36_buckets/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q36_probes/*.parquet'),
-        |q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |cand AS (SELECT e.vec_id, b.bucket, e.embedding
-        |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id
-        |  WHERE b.bucket IN (SELECT bucket FROM p)),
-        |c AS (SELECT vec_id, bucket,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM (SELECT cand.vec_id, cand.bucket, unnest(cand.embedding)::DOUBLE AS x,
-        |               unnest(q.embedding)::DOUBLE AS y FROM cand, q)
-        |  GROUP BY 1, 2)
-        |SELECT vec_id, bucket, cos FROM c ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q39_ivf_ann" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q39_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q39_probes/*.parquet'),
-        |q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |cand AS (SELECT e.vec_id, a.centroid, e.embedding
-        |  FROM embeddings e JOIN a ON e.vec_id = a.vec_id
-        |  WHERE a.centroid IN (SELECT centroid FROM p)),
-        |c AS (SELECT vec_id, centroid,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM (SELECT cand.vec_id, cand.centroid, unnest(cand.embedding)::DOUBLE AS x,
-        |               unnest(q.embedding)::DOUBLE AS y FROM cand, q)
-        |  GROUP BY 1, 2)
-        |SELECT vec_id, centroid, cos FROM c ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q57_domain_cap" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rn
-        |  FROM documents) WHERE rn <= 50""".stripMargin,
-
-    "q58_pii_redact" ->
-      """WITH planted AS (SELECT doc_id,
-        |  text || ' Contact user' || doc_id || '@example.com or 415-555-' ||
-        |  lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' ssn 123-45-6789.'
-        |  AS text FROM documents)
-        |, staged AS (SELECT doc_id, text,
-        |  regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g')
-        |    AS after_email,
-        |  regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '\b\d{3}-\d{2}-\d{4}\b', '[SSN]', 'g') AS after_ssn
-        |  FROM planted)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS emails_found,
-        |  len(regexp_extract_all(after_email, '\b\d{3}-\d{2}-\d{4}\b')) AS ssns_found,
-        |  len(regexp_extract_all(after_ssn, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS phones_found,
-        |  regexp_replace(after_ssn,
-        |    '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g') AS redacted
-        |FROM staged""".stripMargin,
-
-    "q59_rep_quality" ->
-      """WITH base AS (SELECT doc_id, text,
-        |    len(regexp_extract_all(text, '\S+')) AS n_words,
-        |    length(regexp_replace(text, '\s', '', 'g')) AS word_chars,
-        |    length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS symbols,
-        |    list_filter(string_split(text, chr(10)), l -> trim(l) <> '') AS lines
-        |  FROM documents)
-        |SELECT doc_id, n_words,
-        |  CASE WHEN n_words > 0
-        |       THEN round(word_chars / CAST(n_words AS DOUBLE), 6)
-        |       ELSE 0.0 END AS mean_word_len,
-        |  CASE WHEN len(lines) > 0
-        |       THEN round(1.0 - len(list_distinct(lines)) / CAST(len(lines) AS DOUBLE), 6)
-        |       ELSE 0.0 END AS dup_line_frac,
-        |  CASE WHEN length(text) > 0
-        |       THEN round(symbols / CAST(length(text) AS DOUBLE), 6)
-        |       ELSE 0.0 END AS symbol_ratio
-        |FROM base""".stripMargin,
-
-    "q60_contamination" ->
-      """WITH toks AS (SELECT doc_id, doc_id % 50 = 0 AS is_eval,
-        |    list_transform(regexp_extract_all(text, '\S+'), w -> lower(w)) AS w
-        |  FROM documents),
-        |grams AS (SELECT DISTINCT doc_id, is_eval,
-        |    array_to_string(w[i:i+4], ' ') AS gram
-        |  FROM toks, UNNEST(range(1, len(w) - 3)) AS t(i)),
-        |ev AS (SELECT DISTINCT gram FROM grams WHERE is_eval),
-        |tr AS (SELECT doc_id, gram FROM grams WHERE NOT is_eval),
-        |totals AS (SELECT doc_id, count(*) AS total_grams FROM tr GROUP BY 1),
-        |matched AS (SELECT doc_id, count(*) AS matched_grams FROM tr
-        |  WHERE gram IN (SELECT gram FROM ev) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  COALESCE(t.total_grams, 0) AS total_grams,
-        |  COALESCE(m.matched_grams, 0) AS matched_grams,
-        |  CASE WHEN COALESCE(t.total_grams, 0) > 0
-        |       THEN round(COALESCE(m.matched_grams, 0) /
-        |                  CAST(t.total_grams AS DOUBLE), 6)
-        |       ELSE 0.0 END AS contamination
-        |FROM documents d
-        |LEFT JOIN totals t ON d.doc_id = t.doc_id
-        |LEFT JOIN matched m ON d.doc_id = m.doc_id
-        |WHERE d.doc_id % 50 <> 0""".stripMargin,
-
-    "q61_tfidf_topk" ->
-      """WITH terms AS (SELECT doc_id, unnest(regexp_extract_all(lower(text),
-        |    '[a-z]{4,}')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |scored AS (SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-        |    round(tf.tf * ln(n.n_docs / CAST(dfreq.df AS DOUBLE)), 6) AS score
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-        |ranked AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term ASC) AS rank FROM scored)
-        |SELECT doc_id, term, tf, df, score, rank FROM ranked WHERE rank <= 3""".stripMargin,
-
-    "q62_bloom_join" ->
-      """SELECT l_returnflag, count(*) AS n_items,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-        |    AS sum_price_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1""".stripMargin,
-
-    "q63_seq_pack" ->
-      """WITH toks AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |run AS (SELECT doc_id, shard, n_tokens,
-        |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM toks)
-        |SELECT doc_id, shard, n_tokens, cum_tokens,
-        |  CAST(FLOOR((cum_tokens - n_tokens) / 2048.0) AS BIGINT) AS bin
-        |FROM run""".stripMargin,
-
-    "q64_embed_pool" ->
-      """SELECT vec_id % 100 AS grp, i,
-        |  round(avg(embedding[i]::DOUBLE), 6) AS avg_val
-        |FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q65_scalar_quant" ->
-      """WITH ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
-        |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)),
-        |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1)
-        |SELECT ex.vec_id, i,
-        |  CASE WHEN maxabs = 0 THEN 0
-        |       ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) END AS q
-        |FROM ex JOIN mx USING (vec_id)""".stripMargin,
-
-    "q66_weighted_sample" ->
-      """SELECT doc_id, n_chars,
-        |  round(ln((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |                 AS BIGINT) + 1.0) / 4294967296.0)
-        |        / CAST(n_chars AS DOUBLE), 6) AS priority
-        |FROM documents
-        |WHERE n_chars IS NOT NULL AND n_chars > 0
-        |ORDER BY priority DESC, doc_id ASC LIMIT 100""".stripMargin,
-
-    "q67_histogram" ->
-      """WITH b AS (SELECT min(CAST(l_extendedprice AS DOUBLE)) AS mn,
-        |    max(CAST(l_extendedprice AS DOUBLE)) AS mx FROM lineitem),
-        |binned AS (SELECT
-        |    CASE WHEN (mx - mn) / 20 = 0 THEN 0
-        |         ELSE CAST(least(floor((CAST(l_extendedprice AS DOUBLE) - mn)
-        |                               / ((mx - mn) / 20)), 19) AS BIGINT)
-        |    END AS bin, mn, mx
-        |  FROM lineitem, b)
-        |SELECT bin, round(mn + bin * ((mx - mn) / 20), 6) AS lo,
-        |  round(mn + (bin + 1) * ((mx - mn) / 20), 6) AS hi,
-        |  count(*) AS cnt
-        |FROM binned GROUP BY bin, mn, mx""".stripMargin,
-
-    "q68_impute" ->
-      """WITH planted AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CASE WHEN l_orderkey % 97 = 0 THEN NULL
-        |         ELSE CAST(l_discount AS DOUBLE) END AS disc
-        |  FROM lineitem),
-        |means AS (SELECT l_returnflag, round(avg(disc), 6) AS m
-        |  FROM planted GROUP BY 1)
-        |SELECT l_orderkey, l_linenumber, l_returnflag,
-        |  disc IS NULL AS imputed, COALESCE(disc, m) AS disc_filled
-        |FROM planted JOIN means USING (l_returnflag)""".stripMargin,
-
-    "q69_outliers" ->
-      """WITH stats AS (SELECT l_returnflag,
-        |    avg(CAST(l_extendedprice AS DOUBLE)) AS mu,
-        |    stddev_pop(CAST(l_extendedprice AS DOUBLE)) AS sigma
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_orderkey, l_linenumber, l_returnflag,
-        |  round(abs(CAST(l_extendedprice AS DOUBLE) - mu) / sigma, 6) AS z
-        |FROM lineitem JOIN stats USING (l_returnflag)
-        |WHERE sigma > 0
-        |  AND round(abs(CAST(l_extendedprice AS DOUBLE) - mu) / sigma, 6) > 1.5""".stripMargin,
-
-    // mirror of Dedup.bandLayout(48, 5): widths 10,10,10,9,9
-    "q70_simhash_radius" -> simhashRadiusOracle(hiBits = 16,
-      Seq((0, 10), (10, 10), (20, 10), (30, 9), (39, 9)), maxDist = 4),
-
-    // mirror of Dedup.bandLayout(63, 7): seven 9-bit bands
-    "q71_simhash48_radius" -> simhashRadiusOracle(hiBits = 31,
-      (0 until 7).map(b => (9 * b, 9)), maxDist = 6),
-
-    "q72_topk_per_key" -> topPricesPerFlagOracle,
-    "q73_topk_spilled" -> topPricesPerFlagOracle,
-
-    "q74_repeated_ngrams" ->
-      """WITH planted AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0
-        |       THEN text || ' Please subscribe to our newsletter for free updates today'
-        |       ELSE text END AS text FROM documents),
-        |toks AS (SELECT doc_id,
-        |    list_transform(regexp_extract_all(text, '\S+'), w -> lower(w)) AS w
-        |  FROM planted),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS gram
-        |  FROM toks, UNNEST(range(1, len(w) - 3)) AS t(i))
-        |SELECT gram, count(*) AS n_docs FROM grams
-        |GROUP BY gram HAVING count(*) >= 10""".stripMargin,
-
-    "q75_c4_line_filter" ->
-      """WITH planted AS (SELECT doc_id,
-        |  'This line has enough words to survive the filter.' || chr(10) ||
-        |  'Too short.' || chr(10) || text || chr(10) ||
-        |  'Lines without terminal punctuation get removed entirely' || chr(10) ||
-        |  CASE WHEN doc_id % 11 = 0 THEN 'function() { return }'
-        |       ELSE 'Another good sentence appears right here.' END AS text
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |  list_filter(string_split(text, chr(10)), l ->
-        |    trim(l) <> ''
-        |    AND len(list_filter(string_split(trim(l), ' '), w -> w <> '')) >= 5
-        |    AND right(trim(l), 1) IN ('.', '!', '?', '"')) AS kept_lines,
-        |  len(list_filter(string_split(text, chr(10)), l -> trim(l) <> '')) AS n_lines
-        |  FROM planted
-        |  WHERE NOT contains(text, '{') AND NOT contains(text, '}'))
-        |SELECT doc_id, array_to_string(kept_lines, chr(10)) AS kept_text,
-        |  len(kept_lines) AS n_kept, n_lines - len(kept_lines) AS n_dropped
-        |FROM f WHERE len(kept_lines) > 0""".stripMargin,
-
-    "q76_dedup_keep_canonical" ->
-      s"""WITH RECURSIVE $minhashLshCtes,
-         |pairs AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
-         |${componentWalkCtes("pairs", false)},
-         |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id)
-         |SELECT doc_id FROM d
-         |WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> comp)""".stripMargin,
-
-    "q77_stream_dedup" ->
-      """SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1""",
-
-    "q78_hash_split" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q79_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id,
-        |  'Shared header boilerplate line.' || chr(10) || text || chr(10) ||
-        |  'Shared footer boilerplate line.' AS text FROM documents),
-        |p AS (SELECT doc_id, idx, parts[idx+1] AS para FROM (
-        |  SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |    SELECT doc_id, string_split(text, chr(10)) AS parts FROM d))),
-        |f AS (SELECT doc_id, idx, para FROM p WHERE len(trim(para)) > 0),
-        |r AS (SELECT doc_id, idx, para,
-        |  row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, idx) AS rn FROM f)
-        |SELECT doc_id, idx, para FROM r WHERE rn = 1""".stripMargin,
-
-    "q80_token_rarity" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |counts AS (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY 1)
-        |SELECT doc_id, COUNT(*) AS n_tok, CAST(SUM(cnt) AS BIGINT) AS sum_cnt,
-        |  CAST(SUM(CASE WHEN cnt <= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
-        |FROM toks JOIN counts USING (tok) GROUP BY 1""".stripMargin,
-
-    "q81_incremental_dedup" ->
-      """WITH known AS (SELECT DISTINCT md5(text) AS digest FROM documents
-        |  WHERE doc_id % 3 = 0),
-        |batch_kept AS (SELECT doc_id, text FROM (
-        |  SELECT doc_id, text,
-        |    min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
-        |  FROM documents) WHERE doc_id = keep_id)
-        |SELECT doc_id FROM batch_kept
-        |WHERE md5(text) NOT IN (SELECT digest FROM known)""".stripMargin,
-
-    "q82_normalize_text" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(
-        |    lower(strip_accents(text || '  Café   déjà vu NAÏVE ÉCOLE ça  ')),
-        |    '\s+', ' ', 'g')) AS norm_text
-        |FROM documents""".stripMargin,
-
-    "q83_quarantine" ->
-      """WITH planted AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text END AS text,
-        |  CASE WHEN doc_id % 17 = 0 THEN -n_chars ELSE n_chars END AS n_chars,
-        |  CASE WHEN doc_id % 19 = 0 THEN '??' ELSE lang END AS lang
-        |  FROM documents),
-        |v AS (SELECT doc_id,
-        |  list_sort(list_filter([
-        |    CASE WHEN NOT coalesce(text IS NOT NULL AND len(text) > 0, FALSE)
-        |         THEN 'text_missing' END,
-        |    CASE WHEN NOT coalesce(n_chars >= 0, FALSE)
-        |         THEN 'n_chars_negative' END,
-        |    CASE WHEN NOT coalesce(lang IN ('en','de','fr','es','zh'), FALSE)
-        |         THEN 'lang_unknown' END],
-        |    x -> x IS NOT NULL)) AS violations
-        |  FROM planted)
-        |SELECT doc_id, array_to_string(violations, ',') AS violations
-        |FROM v WHERE len(violations) > 0""".stripMargin,
-
-    "q84_global_rownum" ->
-      """SELECT doc_id, lang, ROW_NUMBER() OVER (ORDER BY doc_id) AS rn
-        |FROM documents""".stripMargin,
-
-    "q85_negative_sample" ->
-      """WITH idx AS (SELECT doc_id,
-        |    ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS i,
-        |    COUNT(*) OVER () AS n
-        |  FROM documents),
-        |drawn AS (SELECT doc_id, i, n, unnest(range(3)) AS j FROM idx),
-        |h AS (SELECT doc_id, j, i, n,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_' ||
-        |                            CAST(j AS VARCHAR)), 1, 8) AS BIGINT) % n AS raw
-        |  FROM drawn),
-        |nn AS (SELECT doc_id, j,
-        |    CASE WHEN raw = i THEN (raw + 1) % n ELSE raw END AS nidx FROM h)
-        |SELECT nn.doc_id, nn.j, idx.doc_id AS neg_id
-        |FROM nn JOIN idx ON idx.i = nn.nidx""".stripMargin,
-
-    "q86_tokenize_ids" ->
-      """WITH toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts FROM documents))),
-        |vocab AS (SELECT tok, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok ASC) - 1 AS tok_id
-        |  FROM (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY 1)
-        |  ORDER BY cnt DESC, tok ASC LIMIT 500)
-        |SELECT doc_id,
-        |  string_agg(CAST(COALESCE(tok_id, -1) AS VARCHAR), ',' ORDER BY idx) AS ids
-        |FROM toks LEFT JOIN vocab USING (tok)
-        |GROUP BY doc_id""".stripMargin,
-
-    "q87_trailing_window" ->
-      """SELECT event_id, user_id,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) OVER (
-        |    PARTITION BY user_id ORDER BY ts
-        |    RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS trail_cents
-        |FROM events""".stripMargin,
-
-    "q91_incremental_neardup" -> {
-      val hs = (0 until 16).map(i =>
-        s"list_min([md5('${i}_' || x) for x in sh]) AS h$i").mkString(",\n    ")
-      def bandRows(tbl: String) = (0 until 4).map { b =>
-        val cat = (0 until 4).map(r => s"h${b * 4 + r}").mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cat) AS bh FROM $tbl"
-      }.mkString("\n  UNION ALL ")
-      def shingleCte(src: String) =
-        s"""(SELECT doc_id, sh FROM (
-           |    SELECT doc_id, list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-           |        for i in range(len(parts)-2)]) AS sh
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM $src)
-           |    WHERE len(parts) >= 3)
-           |  WHERE len(sh) > 0)""".stripMargin
-      val eq = (0 until 16).map(i =>
-        s"CASE WHEN n.h$i = o.h$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH d AS (SELECT doc_id, text FROM documents),
-         |newd AS (SELECT doc_id, text FROM d WHERE doc_id % 2 = 1
-         |  UNION ALL SELECT doc_id + 10000, text FROM d WHERE doc_id % 2 = 0),
-         |oldd AS (SELECT doc_id, text FROM d WHERE doc_id % 2 = 0),
-         |shn AS ${shingleCte("newd")},
-         |sho AS ${shingleCte("oldd")},
-         |sign AS (SELECT doc_id, $hs FROM shn),
-         |sigo AS (SELECT doc_id, $hs FROM sho),
-         |bn AS (${bandRows("sign")}),
-         |bo AS (${bandRows("sigo")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
-         |  FROM bn x JOIN bo y ON x.band = y.band AND x.bh = y.bh)
-         |SELECT new_id, old_id, agree FROM (
-         |  SELECT c.new_id, c.old_id, round(($eq) / 16.0, 6) AS agree
-         |  FROM cand c JOIN sign n ON n.doc_id = c.new_id
-         |              JOIN sigo o ON o.doc_id = c.old_id)
-         |WHERE agree >= 0.8""".stripMargin
-    },
-
-    "q89_sliding_window" ->
-      """SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, COUNT(*) AS n
-        |FROM (SELECT time_bucket(INTERVAL 15 MINUTE, ts)
-        |             - TO_MICROSECONDS(j * 900000000) AS ws, event_type
-        |      FROM events, UNNEST(range(4)) AS t(j))
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q90_replica_diff" ->
-      """WITH a AS (SELECT doc_id, md5(text) AS dig_a FROM documents),
-        |b0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 11 = 0 THEN text || ' [drifted]' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 9000, text FROM documents WHERE doc_id < 5),
-        |b AS (SELECT doc_id, md5(text) AS dig_b FROM b0),
-        |j AS (SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id, dig_a, dig_b
-        |  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-        |SELECT doc_id,
-        |  CASE WHEN dig_b IS NULL THEN 'missing_right'
-        |       WHEN dig_a IS NULL THEN 'missing_left'
-        |       WHEN dig_a <> dig_b THEN 'content_mismatch' END AS status
-        |FROM j
-        |WHERE dig_b IS NULL OR dig_a IS NULL OR dig_a <> dig_b""".stripMargin,
-
-    // Same integer recurrence as GraphOps.pageRankFixedPoint: base +
-    // floor-div contributions. Zero-weight self-edges keep every node in
-    // each iteration (the recursive term may reference pr only once);
-    // outdeg coalesces to 1 for them — w = 0 kills the term anyway.
-    "q88_pagerank" ->
-      s"""WITH RECURSIVE e AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT doc_id % 50 AS src, ((doc_id % 50) * (doc_id % 50) + 3) % 50 AS dst
-        |    FROM documents
-        |    UNION ALL
-        |    SELECT doc_id % 50 AS src, ((doc_id % 50) * 3 + 7) % 50 AS dst
-        |    FROM documents) WHERE src <> dst),
-        |${pageRankCtes(5)}
-        |SELECT id, rank FROM pr WHERE iter = 5""".stripMargin,
-
-    "q92_temperature_sample" ->
-      """WITH d AS (SELECT doc_id,
-        |    'd' || CAST(CAST(floor(sqrt(CAST(doc_id % 100 AS DOUBLE))) AS BIGINT)
-        |                AS VARCHAR) AS dom
-        |  FROM documents),
-        |c AS (SELECT dom, COUNT(*) AS c FROM d GROUP BY 1),
-        |m AS (SELECT min(c) AS cmin FROM c),
-        |t AS (SELECT dom,
-        |    CAST(floor(sqrt(CAST(cmin AS DOUBLE) / CAST(c AS DOUBLE))
-        |               * 4294967296) AS BIGINT) AS thr
-        |  FROM c, m)
-        |SELECT d.doc_id, d.dom
-        |FROM d JOIN t USING (dom)
-        |WHERE CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)
-        |           AS BIGINT) < thr""".stripMargin,
-
-    "q95_quality_classifier" ->
-      """WITH f AS (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_words,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(regexp_extract_all(text, '!')) AS BIGINT) AS n_exclaim,
-        |    CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digits
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_chars, n_exclaim, n_digits,
-        |  2 * n_words + 1 * n_chars - 50 * n_exclaim - 10 * n_digits - 500 AS logit
-        |FROM f
-        |WHERE 2 * n_words + 1 * n_chars - 50 * n_exclaim - 10 * n_digits - 500 >= 0""".stripMargin,
-
-    "q96_cdc_apply" ->
-      """WITH d AS (SELECT doc_id, text FROM documents),
-        |ch AS (
-        |  SELECT doc_id, 1 AS seq, 'U' AS op, text || ' [v1]' AS text
-        |  FROM d WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 2, 'U', text || ' [v2]' FROM d WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 3, 'D', NULL FROM d WHERE doc_id % 5 = 0
-        |  UNION ALL SELECT doc_id + 20000, 1, 'I', text FROM d WHERE doc_id < 10),
-        |w AS (SELECT doc_id, op, text,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC, op DESC) AS rn
-        |  FROM ch),
-        |win AS (SELECT doc_id, op, text FROM w WHERE rn = 1)
-        |SELECT d.doc_id, d.text FROM d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM win)
-        |UNION ALL
-        |SELECT doc_id, text FROM win WHERE op <> 'D'""".stripMargin,
-
-    "q93_url_canonical" ->
-      """WITH crawls AS (SELECT doc_id, doc_id AS crawl_ts,
-        |  CASE WHEN doc_id % 3 = 0 THEN
-        |         'https://Example.COM/p/' || CAST(doc_id % 120 AS VARCHAR) || '/?utm_source=x'
-        |       WHEN doc_id % 3 = 1 THEN
-        |         'https://example.com:443/p/' || CAST(doc_id % 120 AS VARCHAR) || '/'
-        |       ELSE
-        |         'https://EXAMPLE.com/p/' || CAST(doc_id % 120 AS VARCHAR) || '?fbclid=abc#frag'
-        |  END AS url FROM documents),
-        |parts AS (SELECT doc_id, crawl_ts,
-        |    regexp_replace(
-        |      lower(regexp_extract(regexp_replace(url, '#.*', '', 'g'),
-        |                           '^(https?://[^/?]+)', 1)),
-        |      ':(80|443)$', '', 'g') AS host,
-        |    regexp_replace(regexp_replace(url, '#.*', '', 'g'),
-        |                   '^https?://[^/?]+', '', 'g') AS rest
-        |  FROM crawls),
-        |strip AS (SELECT doc_id, crawl_ts, host, rest,
-        |    regexp_replace(rest, '[?&](utm_[a-z]+|fbclid|gclid)=[^&#]*', '', 'g')
-        |      AS stripped
-        |  FROM parts),
-        |canon AS (SELECT doc_id, crawl_ts,
-        |    host || regexp_replace(
-        |      CASE WHEN instr(rest, '?') > 0 AND instr(stripped, '?') = 0
-        |           THEN regexp_replace(stripped, '^([^&]*)&', '\1?')
-        |           ELSE stripped END,
-        |      '/$', '', 'g') AS canonical_url
-        |  FROM strip),
-        |r AS (SELECT canonical_url, doc_id, crawl_ts,
-        |    row_number() OVER (PARTITION BY canonical_url
-        |                       ORDER BY crawl_ts DESC, doc_id ASC) AS rn
-        |  FROM canon)
-        |SELECT canonical_url, doc_id, crawl_ts FROM r WHERE rn = 1""".stripMargin,
-
-    "q94_stream_left_join" ->
-      """SELECT c.user_id, c.event_id AS c_id, p.event_id AS p_id
-        |FROM events c LEFT JOIN events p
-        |  ON c.user_id = p.user_id
-        |  AND p.event_type = 'purchase'
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
-        |WHERE c.event_type = 'click'""".stripMargin,
-
-    "q97_semantic_dedup" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q97_assigned/*.parquet'),
-        |e AS (SELECT a.vec_id, a.centroid, emb.embedding
-        |  FROM embeddings emb JOIN a ON emb.vec_id = a.vec_id),
-        |p AS (SELECT x.vec_id AS id1, y.vec_id AS id2,
-        |    unnest(x.embedding)::DOUBLE AS vx, unnest(y.embedding)::DOUBLE AS vy
-        |  FROM e x JOIN e y ON x.centroid = y.centroid AND x.vec_id < y.vec_id),
-        |c AS (SELECT id1, id2,
-        |    round(sum(vx*vy) / (sqrt(sum(vx*vx)) * sqrt(sum(vy*vy))), 6) AS cos
-        |  FROM p GROUP BY 1, 2),
-        |losers AS (SELECT DISTINCT id2 FROM c WHERE cos >= 0.3)
-        |SELECT vec_id, centroid FROM a
-        |WHERE vec_id NOT IN (SELECT id2 FROM losers)""".stripMargin,
-
-    "q98_heavy_hitters" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM t)
-        |SELECT tok, count(*) AS cnt FROM t, n GROUP BY tok, n.n
-        |HAVING count(*) >= CAST(ceil(0.034 * n.n) AS BIGINT)""".stripMargin,
-
-    "q99_stream_quota" ->
-      """SELECT user_id, event_id FROM (
-        |  SELECT user_id, event_id,
-        |    row_number() OVER (PARTITION BY user_id
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events) WHERE rn <= 5""".stripMargin,
-
-    "q100_blocklist_filter" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'cdn.site' || CAST(doc_id % 50 AS VARCHAR) || '.com'
-        |         WHEN doc_id % 7 = 0 THEN 'xsite' || CAST(doc_id % 50 AS VARCHAR) || '.com'
-        |         ELSE 'site' || CAST(doc_id % 50 AS VARCHAR) || '.com' END AS host
-        |  FROM documents),
-        |b(blocked) AS (VALUES ('site7.com'), ('site13.com'), ('cdn.site2.com')),
-        |sfx AS (SELECT doc_id,
-        |    unnest([array_to_string(parts[i:], '.') for i in range(1, len(parts) + 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(host, '.') AS parts FROM d)),
-        |bad AS (SELECT DISTINCT doc_id FROM sfx JOIN b ON sfx.s = b.blocked)
-        |SELECT doc_id, host FROM d
-        |WHERE doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin,
-
-    "q101_consecutive_dedup" ->
-      """SELECT user_id, event_id, event_type FROM (
-        |  SELECT user_id, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS prev_type
-        |  FROM events)
-        |WHERE prev_type IS NULL OR event_type <> prev_type""".stripMargin,
-
-    "q102_winsorize" ->
-      """WITH b AS (SELECT l_returnflag,
-        |    round(quantile_cont(l_extendedprice, 0.05), 6) AS lo,
-        |    round(quantile_cont(l_extendedprice, 0.95), 6) AS hi
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-        |  round(least(greatest(CAST(l.l_extendedprice AS DOUBLE), b.lo), b.hi), 6)
-        |    AS l_extendedprice_wins
-        |FROM lineitem l JOIN b USING (l_returnflag)""".stripMargin,
-
-    "q103_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1)
-        |SELECT 1 AS step_index, 'signup' AS step,
-        |  (SELECT count(*) FROM s1) AS users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)""".stripMargin,
-
-    "q104_jsonl_deadletter" ->
-      """SELECT doc_id, n_chars FROM documents WHERE doc_id % 7 <> 0""".stripMargin,
-
-    "q105_group_split" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN substr(md5(source), 1, 8) < 'cccccccc' THEN 'train'
-        |       WHEN substr(md5(source), 1, 8) < 'e6666666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q106_adjacent_pairs" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |ch AS (SELECT doc_id, i AS idx,
-        |    array_to_string(tk[i * 50 + 1 : i * 50 + 50], ' ') AS chunk
-        |  FROM toks,
-        |    UNNEST(range(0, CAST(floor((len(tk) - 1) / 50) AS BIGINT) + 1)) t(i)),
-        |p AS (SELECT doc_id, idx, chunk,
-        |    lead(chunk) OVER (PARTITION BY doc_id ORDER BY idx) AS nxt
-        |  FROM ch)
-        |SELECT doc_id, idx, md5(chunk) AS chunk_digest, md5(nxt) AS next_digest
-        |FROM p WHERE nxt IS NOT NULL""".stripMargin,
-
-    "q107_csv_deadletter" ->
-      """SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 9 <> 0""".stripMargin,
-
-    "q108_local_supplier_revenue" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT))
-        |    AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_items
-        |FROM region
-        |JOIN nation ON r_regionkey = n_regionkey
-        |JOIN customer ON n_nationkey = c_nationkey
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin,
-
-    "q109_ntile_deciles" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag,
-        |  CAST(ntile(10) OVER (PARTITION BY l_returnflag
-        |    ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS BIGINT)
-        |    AS price_decile
-        |FROM lineitem""".stripMargin,
-
-    "q110_retrieval_metrics" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
-        |  FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS doc_id, embedding AS cv, label AS clabel
-        |  FROM embeddings),
-        |p AS (SELECT query_id, doc_id,
-        |    unnest(cv)::DOUBLE AS x, unnest(qv)::DOUBLE AS y
-        |  FROM q, c WHERE doc_id <> query_id),
-        |cs AS (SELECT query_id, doc_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1, 2),
-        |rk AS (SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY cos DESC, doc_id) AS rank
-        |  FROM cs),
-        |ranked AS (SELECT query_id, doc_id, rank FROM rk WHERE rank <= 10),
-        |rel AS (SELECT q.query_id, c.doc_id FROM q
-        |  JOIN c ON q.qlabel = c.clabel AND c.doc_id <> q.query_id),
-        |relc AS (SELECT query_id, count(*) AS n_relevant FROM rel GROUP BY 1),
-        |h AS (SELECT r.query_id,
-        |    CAST(sum(CASE WHEN rel.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS hits,
-        |    min(CASE WHEN rel.doc_id IS NOT NULL THEN r.rank END) AS frr
-        |  FROM ranked r LEFT JOIN rel
-        |    ON r.query_id = rel.query_id AND r.doc_id = rel.doc_id
-        |  GROUP BY 1)
-        |SELECT relc.query_id, CAST(relc.n_relevant AS BIGINT) AS n_relevant,
-        |  coalesce(h.hits, 0) AS hits,
-        |  round(CAST(coalesce(h.hits, 0) AS DOUBLE) / relc.n_relevant, 6)
-        |    AS recall_at_k,
-        |  coalesce(round(1.0 / h.frr, 6), 0.0) AS reciprocal_rank
-        |FROM relc LEFT JOIN h USING (query_id)""".stripMargin,
-
-    "q111_kfold" ->
-      """SELECT doc_id, lang,
-        |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 5
-        |    AS fold
-        |FROM documents""".stripMargin,
-
-    "q112_rolling_distinct" ->
-      """WITH pairs AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
-        |  FROM events),
-        |days AS (SELECT DISTINCT day FROM pairs)
-        |SELECT strftime(d.day, '%Y-%m-%d') AS day,
-        |  CAST(count(DISTINCT p.user_id) AS BIGINT) AS users_7d
-        |FROM days d JOIN pairs p
-        |  ON p.day BETWEEN d.day - INTERVAL 6 DAY AND d.day
-        |GROUP BY d.day""".stripMargin,
-
-    "q113_mad_outliers" ->
-      """WITH v AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CASE WHEN l_orderkey % 997 = 0 THEN l_extendedprice * 50
-        |         ELSE l_extendedprice END AS price
-        |  FROM lineitem),
-        |med AS (SELECT l_returnflag, quantile_cont(price, 0.5) AS med
-        |  FROM v GROUP BY 1),
-        |mad AS (SELECT v.l_returnflag,
-        |    quantile_cont(abs(v.price - med.med), 0.5) AS mad
-        |  FROM v JOIN med USING (l_returnflag) GROUP BY 1)
-        |SELECT v.l_orderkey, v.l_linenumber, v.l_returnflag,
-        |  round(0.6745 * abs(v.price - med.med) / mad.mad, 6) AS robust_z
-        |FROM v JOIN med USING (l_returnflag) JOIN mad USING (l_returnflag)
-        |WHERE mad.mad > 0
-        |  AND round(0.6745 * abs(v.price - med.med) / mad.mad, 6) > 3.5""".stripMargin,
-
-    "q114_token_lift" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-        |  FROM documents),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |pairs AS (SELECT x.tok AS a, y.tok AS b, count(*) AS c_ab
-        |  FROM dt x JOIN dt y ON x.doc_id = y.doc_id AND x.tok < y.tok
-        |  GROUP BY 1, 2),
-        |cnt AS (SELECT tok, count(*) AS c FROM dt GROUP BY 1)
-        |SELECT p.a, p.b, CAST(p.c_ab AS BIGINT) AS c_ab,
-        |  round(CAST(n.n * p.c_ab AS DOUBLE) / CAST(ca.c * cb.c AS DOUBLE), 6)
-        |    AS lift
-        |FROM pairs p
-        |JOIN cnt ca ON ca.tok = p.a
-        |JOIN cnt cb ON cb.tok = p.b
-        |CROSS JOIN n
-        |WHERE p.c_ab >= 5
-        |ORDER BY lift DESC, p.a, p.b LIMIT 50""".stripMargin,
-
-    "q115_posting_lists" ->
-      """SELECT tok,
-        |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings,
-        |  CAST(count(*) AS BIGINT) AS df
-        |FROM (SELECT DISTINCT doc_id,
-        |    unnest(list_distinct(string_split(text, ' '))) AS tok
-        |  FROM documents)
-        |GROUP BY tok""".stripMargin,
-
-    "q116_ewma_feature" -> {
-      val terms = (0 until 8).map(k =>
-        s"coalesce(lag(CAST(round(value * 100) AS BIGINT), $k) OVER " +
-          s"(PARTITION BY user_id ORDER BY ts, event_id), 0) * ${1L << (7 - k)}")
-        .mkString(" + ")
-      s"""SELECT user_id, event_id, $terms AS decayed_cents
-         |FROM events""".stripMargin
-    },
-
-    "q117_percent_rank" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag,
-        |  round(percent_rank() OVER w, 6) AS pr,
-        |  round(cume_dist() OVER w, 6) AS cd
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_returnflag
-        |             ORDER BY l_extendedprice, l_orderkey, l_linenumber)""".stripMargin,
-
-    "q118_fuzzy_linkage" ->
-      """WITH base AS (SELECT DISTINCT c_custkey % 500 AS eid FROM customer),
-        |sysA AS (SELECT eid AS id_a, 'entity_' || CAST(eid AS VARCHAR) AS name_a
-        |  FROM base),
-        |sysB AS (SELECT eid + 1000 AS id_b,
-        |    CASE WHEN eid % 4 = 0 THEN 'entity-' || CAST(eid AS VARCHAR)
-        |         ELSE 'entity_' || CAST(eid AS VARCHAR) END AS name_b
-        |  FROM base)
-        |SELECT id_a, id_b, name_a, name_b,
-        |  CAST(levenshtein(name_a, name_b) AS INT) AS dist
-        |FROM sysA JOIN sysB ON right(name_a, 2) = right(name_b, 2)
-        |WHERE levenshtein(name_a, name_b) <= 1""".stripMargin,
-
-    "q119_gap_fill" ->
-      """WITH hourly AS (SELECT user_id, date_trunc('hour', ts) AS h,
-        |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |grid AS (SELECT user_id,
-        |    unnest(generate_series(min(h), max(h), INTERVAL 1 HOUR)) AS h
-        |  FROM hourly GROUP BY user_id),
-        |j AS (SELECT g.user_id, g.h, hourly.c
-        |  FROM grid g LEFT JOIN hourly USING (user_id, h))
-        |SELECT user_id, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  CAST(last_value(c IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS filled_cents
-        |FROM j""".stripMargin,
-
-    "q120_triangle_count" ->
-      """WITH raw AS (SELECT doc_id % 60 AS src, (doc_id // 60) % 60 AS dst
-        |  FROM documents),
-        |e AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |  FROM raw WHERE least(src, dst) < greatest(src, dst))
-        |SELECT CAST(count(*) AS BIGINT) AS triangles
-        |FROM e ab JOIN e bc ON ab.v = bc.u
-        |JOIN e ac ON ac.u = ab.u AND ac.v = bc.v""".stripMargin,
-
-    "q121_bigram_topk" ->
-      """WITH toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts FROM documents))),
-        |pairs AS (SELECT a.tok AS prev, b.tok AS next
-        |  FROM toks a JOIN toks b
-        |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-        |cnts AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM pairs GROUP BY 1, 2)
-        |SELECT prev, next, cnt FROM (
-        |  SELECT prev, next, cnt,
-        |    row_number() OVER (PARTITION BY prev
-        |                       ORDER BY cnt DESC, next ASC) AS rn
-        |  FROM cnts) WHERE rn <= 3""".stripMargin,
-
-    "q122_countmin" ->
-      """WITH toks AS (SELECT unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |cells AS (SELECT row, tok,
-        |    CAST('0x' || substr(md5(CAST(row AS VARCHAR) || '#' || tok), 1, 8)
-        |      AS BIGINT) % 64 AS bucket
-        |  FROM toks CROSS JOIN (SELECT unnest(range(4)) AS row)),
-        |sketch AS (SELECT row, bucket, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM cells GROUP BY 1, 2),
-        |q AS (SELECT DISTINCT tok,
-        |    CAST('0x' || substr(md5(CAST(row AS VARCHAR) || '#' || tok), 1, 8)
-        |      AS BIGINT) % 64 AS bucket, row
-        |  FROM (SELECT DISTINCT tok FROM toks)
-        |    CROSS JOIN (SELECT unnest(range(4)) AS row)),
-        |est AS (SELECT q.tok, CAST(min(COALESCE(s.cnt, 0)) AS BIGINT) AS est
-        |  FROM q LEFT JOIN sketch s ON s.row = q.row AND s.bucket = q.bucket
-        |  GROUP BY q.tok),
-        |exact AS (SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt
-        |  FROM toks GROUP BY 1)
-        |SELECT tok, est, true_cnt FROM est JOIN exact USING (tok)""".stripMargin,
-
-    "q123_schema_evolution" ->
-      """SELECT doc_id, lang, n_chars
-        |FROM read_parquet(['__AUX__/schema_evo/g1/*.parquet',
-        |                   '__AUX__/schema_evo/g2/*.parquet'],
-        |                  union_by_name=true)""".stripMargin,
-
-    "q124_zorder" ->
-      """SELECT doc_id,
-        |  (SELECT CAST(SUM((((a >> i) & 1) << (2*i)) +
-        |                   (((b >> i) & 1) << (2*i + 1))) AS BIGINT)
-        |   FROM range(10) t(i)) AS z
-        |FROM (SELECT doc_id, doc_id % 1024 AS a, n_chars % 1024 AS b
-        |      FROM documents)""".stripMargin,
-
-    "q125_orc_roundtrip" ->
-      """SELECT doc_id, lang, n_chars FROM documents""".stripMargin,
-
-    "q126_bigram_fluency" ->
-      """WITH toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts FROM documents))),
-        |pairs AS (SELECT a.doc_id, a.tok AS prev, b.tok AS next
-        |  FROM toks a JOIN toks b
-        |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-        |cnts AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM pairs GROUP BY 1, 2)
-        |SELECT p.doc_id, CAST(SUM(c.cnt) AS BIGINT) AS sum_cnt,
-        |  CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM pairs p JOIN cnts c ON c.prev = p.prev AND c.next = p.next
-        |GROUP BY p.doc_id""".stripMargin,
-
-    "q127_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  o_orderpriority,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue_cents DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q128_returned_customers" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS BIGINT) AS lost_cents,
-        |  count(*) AS n_items
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-04-01'
-        |  AND l_returnflag = 'R'
-        |GROUP BY 1, 2, 3
-        |ORDER BY lost_cents DESC, c_custkey ASC
-        |LIMIT 20""".stripMargin,
-
-    "q129_k_anonymity" ->
-      """WITH d AS (SELECT doc_id, lang, source,
-        |    CAST(n_chars // 500 AS BIGINT) AS size_bin FROM documents),
-        |g AS (SELECT lang, source, size_bin, CAST(count(*) AS BIGINT) AS group_n
-        |  FROM d GROUP BY 1, 2, 3)
-        |SELECT d.doc_id, d.lang, d.source, d.size_bin, g.group_n
-        |FROM d JOIN g USING (lang, source, size_bin)
-        |WHERE g.group_n < 5""".stripMargin,
-
-    "q130_fixed_stratified" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) AS rn
-        |  FROM documents) WHERE rn <= 20""".stripMargin,
-
-    "q131_interval_merge" ->
-      """WITH iv AS (SELECT user_id,
-        |    CAST(epoch_us(ts) AS BIGINT) AS start_us,
-        |    CAST(epoch_us(ts) + 600000000 AS BIGINT) AS end_us
-        |  FROM events),
-        |flagged AS (SELECT user_id, start_us, end_us,
-        |    CASE WHEN max(end_us) OVER (PARTITION BY user_id
-        |        ORDER BY start_us, end_us
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |      OR start_us > max(end_us) OVER (PARTITION BY user_id
-        |        ORDER BY start_us, end_us
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    THEN 1 ELSE 0 END AS new_island
-        |  FROM iv),
-        |isl AS (SELECT user_id, start_us, end_us,
-        |    CAST(SUM(new_island) OVER (PARTITION BY user_id
-        |      ORDER BY start_us, end_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS island
-        |  FROM flagged)
-        |SELECT user_id, island, min(start_us) AS start_us,
-        |  max(end_us) AS end_us, count(*) AS n_rows
-        |FROM isl GROUP BY 1, 2""".stripMargin,
-
-    "q132_fd_violations" ->
-      """SELECT source, CAST(count(DISTINCT lang) AS BIGINT) AS n_rhs
-        |FROM documents GROUP BY 1 HAVING count(DISTINCT lang) > 1""".stripMargin,
-
-    "q133_bucketed_join" ->
-      """SELECT o_orderkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents,
-        |  count(*) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS items_cents
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q134_salted_join" ->
-      """WITH dim(l_returnflag, flag_desc) AS (
-        |  VALUES ('A', 'returned'), ('N', 'kept'), ('R', 'refunded'))
-        |SELECT l.l_returnflag, d.flag_desc,
-        |  count(*) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents
-        |FROM lineitem l JOIN dim d ON l.l_returnflag = d.l_returnflag
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q135_jsonl_export" ->
-      """SELECT doc_id, text, lang, n_chars FROM documents""".stripMargin,
-
-    "q136_token_budget" ->
-      """WITH k AS (SELECT doc_id, n_chars,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hk FROM documents),
-        |c AS (SELECT doc_id,
-        |    CAST(SUM(n_chars) OVER (ORDER BY hk, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum_n_chars
-        |  FROM k)
-        |SELECT doc_id, cum_n_chars FROM c WHERE cum_n_chars <= 75000""".stripMargin,
-
-    "q137_top_bigram" ->
-      """WITH toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts FROM documents))),
-        |pairs AS (SELECT a.doc_id, a.tok AS prev, b.tok AS next
-        |  FROM toks a JOIN toks b
-        |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-        |pc AS (SELECT doc_id, prev, next, CAST(count(*) AS BIGINT) AS c
-        |  FROM pairs GROUP BY 1, 2, 3)
-        |SELECT doc_id, CAST(max(c) AS BIGINT) AS top_cnt,
-        |  CAST(sum(c) AS BIGINT) AS n_pairs
-        |FROM pc GROUP BY doc_id""".stripMargin,
-
-    "q138_mrl_truncate" ->
-      """WITH ex AS (SELECT vec_id, CAST(i AS BIGINT) AS i,
-        |    embedding[i]::DOUBLE AS x
-        |  FROM embeddings, UNNEST(range(1, 17)) t(i)),
-        |n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY 1)
-        |SELECT ex.vec_id, ex.i,
-        |  CASE WHEN n.nrm = 0 THEN 0.0 ELSE round(ex.x / n.nrm, 6) END AS xn
-        |FROM ex JOIN n USING (vec_id)""".stripMargin,
-
-    "q139_cohort_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS d
-        |  FROM events),
-        |f AS (SELECT user_id, min(d) AS d0 FROM e GROUP BY 1),
-        |s AS (SELECT d0, CAST(count(*) AS BIGINT) AS cohort_size
-        |  FROM f GROUP BY 1)
-        |SELECT strftime(f.d0, '%Y-%m-%d') AS cohort_day,
-        |  CAST(date_diff('day', f.d0, e.d) AS BIGINT) AS day_offset,
-        |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS active_users,
-        |  s.cohort_size
-        |FROM e JOIN f USING (user_id) JOIN s ON s.d0 = f.d0
-        |GROUP BY 1, 2, 4""".stripMargin,
-
-    "q140_event_transitions" ->
-      """SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS cnt
-        |FROM (SELECT event_type AS next_type,
-        |        lag(event_type) OVER (PARTITION BY user_id
-        |          ORDER BY ts, event_id) AS prev_type
-        |      FROM events)
-        |WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q141_rare_label" ->
-      """WITH d AS (SELECT doc_id,
-        |    's' || CAST(doc_id % 37 AS VARCHAR) AS label FROM documents),
-        |c AS (SELECT label, count(*) AS n FROM d GROUP BY 1)
-        |SELECT d.doc_id, d.label,
-        |  CASE WHEN c.n >= 14 THEN d.label ELSE 'OTHER' END AS label_collapsed
-        |FROM d JOIN c USING (label)""".stripMargin,
-
-    "q142_target_encode_loo" ->
-      """WITH l AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents
-        |  FROM lineitem),
-        |g AS (SELECT l_returnflag,
-        |    CAST(sum(price_cents) AS BIGINT) AS s,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM l GROUP BY 1)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-        |  g.s - l.price_cents AS loo_sum, g.n - 1 AS loo_n
-        |FROM l JOIN g USING (l_returnflag)""".stripMargin,
-
-    "q143_l_diversity" ->
-      """WITH d AS (SELECT doc_id, lang, source,
-        |    CAST(n_chars // 500 AS BIGINT) AS size_bin FROM documents),
-        |g AS (SELECT source, size_bin,
-        |    CAST(count(DISTINCT lang) AS BIGINT) AS distinct_sensitive
-        |  FROM d GROUP BY 1, 2)
-        |SELECT d.doc_id, d.lang, d.source, d.size_bin, g.distinct_sensitive
-        |FROM d JOIN g USING (source, size_bin)
-        |WHERE g.distinct_sensitive < 3""".stripMargin,
-
-    "q144_twap" ->
-      """WITH e AS (SELECT user_id, event_id, ts,
-        |    CAST(epoch_us(ts) // 1000000 AS BIGINT) AS s,
-        |    CAST(round(value * 100) AS BIGINT) AS value_cents FROM events),
-        |l AS (SELECT user_id, value_cents, s,
-        |    lead(s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ns
-        |  FROM e)
-        |SELECT user_id,
-        |  CAST(sum(value_cents * (ns - s)) AS BIGINT) AS weighted_cents_s,
-        |  CAST(sum(ns - s) AS BIGINT) AS span_s
-        |FROM l WHERE ns IS NOT NULL GROUP BY 1""".stripMargin,
-
-    "q145_entity_resolution" ->
-      s"""WITH RECURSIVE base AS (
-        |  SELECT DISTINCT c_custkey % 500 AS eid FROM customer),
-        |sysA AS (SELECT eid AS rec_id,
-        |    'entity_' || CAST(eid AS VARCHAR) AS name FROM base),
-        |sysB AS (SELECT eid + 1000 AS rec_id,
-        |    CASE WHEN eid % 4 = 0 THEN 'entity-' || CAST(eid AS VARCHAR)
-        |         ELSE 'entity_' || CAST(eid AS VARCHAR) END AS name
-        |  FROM base),
-        |links AS (SELECT a.rec_id AS id1, b.rec_id AS id2
-        |  FROM sysA a JOIN sysB b ON right(a.name, 2) = right(b.name, 2)
-        |  WHERE levenshtein(a.name, b.name) <= 1),
-        |${componentWalkCtes("links", false)},
-        |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-        |allrec AS (SELECT * FROM sysA UNION ALL SELECT * FROM sysB)
-        |SELECT r.rec_id, r.name, COALESCE(cc.comp, r.rec_id) AS entity_id
-        |FROM allrec r LEFT JOIN cc ON cc.id = r.rec_id""".stripMargin,
-
-    "q146_stream_countmin" ->
-      """WITH counts AS (SELECT CAST(event_type AS VARCHAR) AS v,
-        |    count(*) AS n FROM events GROUP BY 1),
-        |cells AS (SELECT row, v, n,
-        |    CAST('0x' || substr(md5(CAST(row AS VARCHAR) || '#' || v), 1, 8)
-        |      AS BIGINT) % 32 AS bucket
-        |  FROM counts CROSS JOIN (SELECT unnest(range(4)) AS row))
-        |SELECT CAST(row AS INT) AS row, bucket,
-        |  CAST(sum(n) AS BIGINT) AS cnt
-        |FROM cells GROUP BY 1, 2""".stripMargin,
-
-    "q147_drawdown" ->
-      """SELECT user_id, event_id,
-        |  CAST(max(CAST(round(value * 100) AS BIGINT)) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    - CAST(round(value * 100) AS BIGINT) AS BIGINT) AS drawdown_cents
-        |FROM events""".stripMargin,
-
-    "q148_drift_bins" ->
-      """WITH e AS (SELECT
-        |    CAST(round(value * 100) AS BIGINT) // 2000 AS bin,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'a' ELSE 'b' END
-        |      AS period
-        |  FROM events)
-        |SELECT bin,
-        |  CAST(count(*) FILTER (period = 'a') AS BIGINT) AS n_a,
-        |  CAST(count(*) FILTER (period = 'b') AS BIGINT) AS n_b,
-        |  CAST(abs(count(*) FILTER (period = 'a')
-        |         - count(*) FILTER (period = 'b')) AS BIGINT) AS abs_diff
-        |FROM e GROUP BY 1""".stripMargin,
-
-    "q149_curation_pipeline" ->
-      """WITH normed AS (SELECT doc_id, n_chars,
-        |    trim(regexp_replace(lower(strip_accents(text)), '\s+', ' ', 'g'))
-        |      AS norm_text
-        |  FROM documents WHERE n_chars >= 100),
-        |ranked AS (SELECT doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY md5(norm_text)
-        |                       ORDER BY doc_id) AS rn
-        |  FROM normed),
-        |dd AS (SELECT doc_id, n_chars FROM ranked WHERE rn = 1),
-        |train AS (SELECT doc_id, n_chars FROM dd
-        |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc'),
-        |k AS (SELECT doc_id, n_chars,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hk FROM train),
-        |c AS (SELECT doc_id,
-        |    CAST(SUM(n_chars) OVER (ORDER BY hk, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum_n_chars
-        |  FROM k)
-        |SELECT doc_id, cum_n_chars FROM c WHERE cum_n_chars <= 50000""".stripMargin,
-
-    "q150_pq_adc" ->
-      """WITH cb AS (SELECT * FROM '__AUX__/q150_codebooks/*.parquet'),
-        |codes AS (SELECT * FROM '__AUX__/q150_codes/*.parquet'),
-        |q AS (SELECT CAST((i - 1) // 16 AS INT) AS s,
-        |    CAST((i - 1) % 16 AS INT) AS j, embedding[i]::DOUBLE AS qv
-        |  FROM embeddings, UNNEST(range(1, 65)) t(i) WHERE vec_id = 0),
-        |lut AS (SELECT cb.s, cb.c,
-        |    round(sum((q.qv - cb.val) * (q.qv - cb.val)), 6) AS d2
-        |  FROM cb JOIN q ON q.s = cb.s AND q.j = cb.j GROUP BY 1, 2),
-        |dist AS (SELECT codes.vec_id, round(sum(lut.d2), 6) AS adc_dist
-        |  FROM codes JOIN lut ON lut.s = codes.s AND lut.c = codes.code
-        |  GROUP BY 1)
-        |SELECT vec_id, adc_dist FROM dist
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
-
-    "q151_ivfpq" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q151_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q151_probes/*.parquet'),
-        |cb AS (SELECT * FROM '__AUX__/q151_codebooks/*.parquet'),
-        |codes AS (SELECT * FROM '__AUX__/q151_codes/*.parquet'),
-        |q AS (SELECT CAST((i - 1) // 16 AS INT) AS s,
-        |    CAST((i - 1) % 16 AS INT) AS j, embedding[i]::DOUBLE AS qv
-        |  FROM embeddings, UNNEST(range(1, 65)) t(i) WHERE vec_id = 1),
-        |lut AS (SELECT cb.s, cb.c,
-        |    round(sum((q.qv - cb.val) * (q.qv - cb.val)), 6) AS d2
-        |  FROM cb JOIN q ON q.s = cb.s AND q.j = cb.j GROUP BY 1, 2),
-        |cand AS (SELECT vec_id FROM a
-        |  WHERE centroid IN (SELECT centroid FROM p)),
-        |dist AS (SELECT codes.vec_id, round(sum(lut.d2), 6) AS adc_dist
-        |  FROM codes JOIN cand USING (vec_id)
-        |  JOIN lut ON lut.s = codes.s AND lut.c = codes.code
-        |  GROUP BY 1)
-        |SELECT vec_id, adc_dist FROM dist
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
-
-    "q152_ivfpq_residual" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q152_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q152_probes/*.parquet'),
-        |cent AS (SELECT * FROM '__AUX__/q152_centroids/*.parquet'),
-        |cb AS (SELECT * FROM '__AUX__/q152_codebooks/*.parquet'),
-        |codes AS (SELECT * FROM '__AUX__/q152_codes/*.parquet'),
-        |qf AS (SELECT CAST(i - 1 AS INT) AS j, embedding[i]::DOUBLE AS qv
-        |  FROM embeddings, UNNEST(range(1, 65)) t(i) WHERE vec_id = 2),
-        |rq AS (SELECT p.centroid AS cell, CAST(qf.j // 16 AS INT) AS s,
-        |    CAST(qf.j % 16 AS INT) AS jj, qf.qv - cent.val AS rv
-        |  FROM p JOIN cent ON cent.c = p.centroid JOIN qf ON qf.j = cent.j),
-        |lut AS (SELECT rq.cell, rq.s, cb.c,
-        |    round(sum((rq.rv - cb.val) * (rq.rv - cb.val)), 6) AS d2
-        |  FROM rq JOIN cb ON cb.s = rq.s AND cb.j = rq.jj GROUP BY 1, 2, 3),
-        |cand AS (SELECT a.vec_id, a.centroid FROM a
-        |  WHERE a.centroid IN (SELECT centroid FROM p)),
-        |dist AS (SELECT cand.vec_id, cand.centroid,
-        |    round(sum(lut.d2), 6) AS adc_dist
-        |  FROM cand JOIN codes USING (vec_id)
-        |  JOIN lut ON lut.cell = cand.centroid
-        |    AND lut.s = codes.s AND lut.c = codes.code
-        |  GROUP BY 1, 2)
-        |SELECT vec_id, centroid, adc_dist FROM dist
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
-
-    // Incremental admission == one-pass rebuild under frozen centroids:
-    // the aux IS the rebuild (one assignment pass over everything), the
-    // engine output is the generation-merged on-disk index; generation
-    // is recomputable from the batch split.
-    "q153_ivf_append" ->
-      """SELECT vec_id,
-        |  CAST(CASE WHEN vec_id % 2 = 0 THEN 0 ELSE 1 END AS INTEGER)
-        |    AS generation,
-        |  centroid
-        |FROM '__AUX__/q153_rebuild/*.parquet'""".stripMargin,
-
-    // batched == per-query loop: the aux IS the loop (search() invoked
-    // once per query by the engine, gated to Verify); the engine output
-    // is the one-plan batched path over the same five queries.
-    "q154_hybrid_batch" ->
-      """SELECT query_id, id, chunk_id, rrf_score, dense_score, bm25_score
-        |FROM '__AUX__/q154_loop/*.parquet'""".stripMargin,
-
-    "q155_components_logn" ->
-      """SELECT doc_id AS id,
-        |  MIN(doc_id) OVER (PARTITION BY lang) AS comp
-        |FROM documents""".stripMargin,
-
-    "q156_jaro_linkage" ->
-      """WITH base AS (SELECT DISTINCT c_custkey % 500 AS eid FROM customer),
-        |sysA AS (SELECT eid AS id_a, 'entity_' || CAST(eid AS VARCHAR) AS name_a
-        |  FROM base),
-        |sysB AS (SELECT eid + 1000 AS id_b,
-        |    CASE WHEN eid % 4 = 0 THEN 'entity-' || CAST(eid AS VARCHAR)
-        |         ELSE 'entity_' || CAST(eid AS VARCHAR) END AS name_b
-        |  FROM base)
-        |SELECT id_a, id_b, name_a, name_b,
-        |  round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
-        |FROM sysA JOIN sysB
-        |  ON right(regexp_replace(name_a, '[-_]', '', 'g'), 2)
-        |   = right(regexp_replace(name_b, '[-_]', '', 'g'), 2)
-        |WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.9""".stripMargin,
-
-    "q157_substring_spans" ->
-      raw"""WITH ${plantedRepeatSpanCtes},
-        |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
-        |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-        |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(a.repeated_tokens, 0) AS BIGINT) AS repeated_tokens,
-        |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-        |FROM toks t LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-    "q158_waterfill" ->
-      """WITH s AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1),
-        |b AS (SELECT (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents)
-        |    * 6 // 10 AS budget),
-        |r AS (SELECT source, c,
-        |    CAST(row_number() OVER (ORDER BY c, source) AS BIGINT) AS i,
-        |    CAST(sum(c) OVER (ORDER BY c, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS prefix,
-        |    CAST(count(*) OVER () AS BIGINT) AS n
-        |  FROM s),
-        |f AS (SELECT r.*, b.budget,
-        |    (c * (n - i + 1) + prefix - c <= budget) AS sat
-        |  FROM r, b),
-        |g AS (SELECT f.*,
-        |    CAST(sum(CASE WHEN sat THEN 1 ELSE 0 END) OVER () AS BIGINT) AS k,
-        |    CAST(sum(CASE WHEN sat THEN c ELSE 0 END) OVER () AS BIGINT)
-        |      AS prefix_k
-        |  FROM f)
-        |SELECT source, c AS total_chars,
-        |  CAST(CASE WHEN sat THEN c
-        |    ELSE (budget - prefix_k) // (n - k) +
-        |      CASE WHEN i - k <= (budget - prefix_k) % (n - k)
-        |        THEN 1 ELSE 0 END
-        |  END AS BIGINT) AS alloc
-        |FROM g""".stripMargin,
-
-    "q159_image_neardup" -> {
-      // mirror of Dedup.bandLayout(64, 5): widths 13,13,13,13,12.
-      // Arithmetic-vs-logical >> on negative sigs is immaterial: the
-      // mask keeps only original bits [off, off+width), which both
-      // shifts preserve identically.
-      val layout = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT img_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH sigs AS (SELECT img_id, sig FROM '__AUX__/q159_hashes/*.parquet'),
-         |banded AS (
-         |  $bands),
-         |pairs AS (SELECT DISTINCT a.img_id AS id1, b.img_id AS id2,
-         |    a.sig AS sig1, b.sig AS sig2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.img_id < b.img_id)
-         |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-         |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= 4""".stripMargin
-    },
-
-    "q160_multik_spans" -> {
-      def gramCtes(k: Int) =
-        s"""grams$k AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-           |    array_to_string([lower(x) for x in ws[i+1:i+$k]], ' ') AS gram
-           |  FROM toks, UNNEST(range(len(ws) - ${k - 1})) t(i)
-           |  WHERE len(ws) >= $k),
-           |rep$k AS (SELECT gram FROM (
-           |    SELECT gram, count(DISTINCT doc_id) AS nd FROM grams$k GROUP BY 1)
-           |  WHERE nd >= 2),
-           |hits$k AS (SELECT doc_id, pos AS s, pos + $k AS e FROM grams$k
-           |  WHERE gram IN (SELECT gram FROM rep$k))""".stripMargin
-      s"""WITH planted AS (SELECT doc_id,
-         |    text
-         |    || CASE WHEN doc_id % 7 = 0
-         |         THEN ' Please subscribe to our newsletter for free updates today'
-         |         ELSE '' END
-         |    || CASE WHEN doc_id % 11 = 0
-         |         THEN ' This opinion is subject to formal revision before publication in the preliminary print of the United States Reports'
-         |         ELSE '' END AS text
-         |  FROM documents),
-         |toks AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS ws
-         |  FROM planted),
-         |${gramCtes(8)},
-         |${gramCtes(16)},
-         |hits AS (SELECT * FROM hits8 UNION ALL SELECT * FROM hits16),
-         |${islandSpanCtes(false)},
-         |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-         |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(a.repeated_tokens, 0) AS BIGINT) AS repeated_tokens,
-         |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-         |FROM toks t LEFT JOIN agg a USING (doc_id)""".stripMargin
-    },
-
-    // DuckDB can't BPE, but it CAN independently re-derive the entire
-    // budget arithmetic (hash order, prefix sum, cutoff) over the
-    // Spark-dumped per-doc subword counts — the q51-rule pattern. The
-    // counts themselves are spec-gated by known-answer tokenizations.
-    "q161_bpe_budget" ->
-      """WITH k AS (SELECT doc_id, n_bpe,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hk
-        |  FROM '__AUX__/q161_bpe_counts/*.parquet'),
-        |c AS (SELECT doc_id,
-        |    CAST(SUM(n_bpe) OVER (ORDER BY hk, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum_n_bpe
-        |  FROM k)
-        |SELECT doc_id, cum_n_bpe FROM c WHERE cum_n_bpe <= 50000""".stripMargin,
-
-    // Analytic ground truth for the real-codec decode path: block
-    // amplitudes re-derived from doc_id arithmetic, rms/crossings in
-    // closed form (square wave: sumSq = 64·Σ a_b²; sign flips every
-    // halfPeriod samples → floor(4095/h) crossings). /4096.0 is a
-    // power-of-two division — exact in binary FP on both engines.
-    "q162_audio_features" ->
-      """WITH docs AS (SELECT doc_id, doc_id // 10 AS seed,
-        |    4 * (1 + doc_id % 3) AS h
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |blocks AS (SELECT doc_id, h,
-        |    512 * (1 + (((seed * 73 + b * 17 + 5) * (seed * 73 + b * 17 + 5))
-        |      // 64) % 8) AS a
-        |  FROM docs, UNNEST(range(64)) t(b)),
-        |agg AS (SELECT doc_id, h,
-        |    CAST(SUM(a * a * 64) AS BIGINT) AS sum_sq
-        |  FROM blocks GROUP BY 1, 2)
-        |SELECT doc_id, CAST(4096 AS BIGINT) AS n_samples,
-        |  CAST(512 AS BIGINT) AS duration_ms,
-        |  CAST(FLOOR(SQRT(sum_sq / 4096.0)) AS BIGINT) AS rms,
-        |  CAST(4095 // h AS BIGINT) AS zero_crossings
-        |FROM agg""".stripMargin,
-
-    "q163_audio_neardup" -> {
-      // mirror of Dedup.bandLayout(64, 5): widths 13,13,13,13,12 (the
-      // q159 construction over audio signatures)
-      val layout = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT aud_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH sigs AS (SELECT aud_id, sig FROM '__AUX__/q163_hashes/*.parquet'),
-         |banded AS (
-         |  $bands),
-         |pairs AS (SELECT DISTINCT a.aud_id AS id1, b.aud_id AS id2,
-         |    a.sig AS sig1, b.sig AS sig2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.aud_id < b.aud_id)
-         |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-         |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= 4""".stripMargin
-    },
-
-    "q164_mmr_rerank" -> {
-      // Unrolled greedy MMR: one CTE per selection step (k=8), each an
-      // argmax of round(λ·rel − (1−λ)·max-sim-to-selected, 6) with id
-      // tie-break — the recursive loop a SQL engine can't express is
-      // generated as SQL it can. λ is CAST to DOUBLE so (1 − λ) is the
-      // same IEEE value the Scala driver loop computes.
-      val lam = "CAST(0.7 AS DOUBLE)"
-      val k = 8
-      val steps = (2 to k).map { i =>
-        val prev = (1 until i).map(j => s"SELECT id FROM s$j").mkString(" UNION ALL ")
-        s"""s$i AS MATERIALIZED (SELECT id, rel, mmr FROM (
-           |  SELECT c.id, c.rel,
-           |    round($lam * c.rel - (1 - $lam) * COALESCE(
-           |      (SELECT max(s.sim) FROM sims s WHERE s.id1 = c.id
-           |        AND s.id2 IN ($prev)), 0), 6) AS mmr
-           |  FROM cand c WHERE c.id NOT IN ($prev)
-           |  ORDER BY mmr DESC, c.id LIMIT 1))""".stripMargin
-      }.mkString(",\n")
-      val rows = (1 to k).map(i =>
-        s"SELECT id AS vec_id, rel, mmr, CAST($i AS BIGINT) AS rank FROM s$i")
-        .mkString("\n  UNION ALL ")
-      s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-         |relp AS (SELECT a.vec_id, unnest(a.embedding)::DOUBLE AS x,
-         |    unnest(q.embedding)::DOUBLE AS y FROM embeddings a, q),
-         |cand AS MATERIALIZED (SELECT vec_id AS id, rel FROM (
-         |    SELECT vec_id, round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS rel
-         |    FROM relp GROUP BY 1)
-         |  ORDER BY rel DESC, vec_id LIMIT 50),
-         |simp AS (SELECT a.id AS id1, b.id AS id2,
-         |    unnest(ea.embedding)::DOUBLE AS x, unnest(eb.embedding)::DOUBLE AS y
-         |  FROM cand a JOIN cand b ON a.id <> b.id
-         |  JOIN embeddings ea ON ea.vec_id = a.id
-         |  JOIN embeddings eb ON eb.vec_id = b.id),
-         |sims AS MATERIALIZED (SELECT id1, id2,
-         |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS sim
-         |  FROM simp GROUP BY 1, 2),
-         |s1 AS MATERIALIZED (SELECT id, rel, round($lam * rel - (1 - $lam) * 0, 6) AS mmr
-         |  FROM cand ORDER BY mmr DESC, id LIMIT 1),
-         |$steps
-         |SELECT vec_id, rel, mmr, rank FROM (
-         |  $rows) ORDER BY rank""".stripMargin
-    },
-
-    "q165_backoff_lm" ->
-      s"""WITH $backoffLmDocCtes
-        |SELECT doc_id, count(*) AS n_tri,
-        |  CAST(SUM(CAST(round(log10(p) * 1e6) AS BIGINT)) AS BIGINT) AS sum_lp6,
-        |  CAST(SUM(CASE WHEN tier = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_t3,
-        |  CAST(SUM(CASE WHEN tier = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_t2,
-        |  CAST(SUM(CASE WHEN tier = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t1
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q166_ann_filtered" ->
-      """WITH asg AS (SELECT vec_id, centroid FROM '__AUX__/q166_assign/*.parquet'),
-        |rk AS (SELECT centroid, probe_rank FROM '__AUX__/q166_probe/*.parquet'),
-        |f AS (SELECT e.vec_id, a.centroid, r.probe_rank, e.embedding
-        |  FROM embeddings e JOIN asg a ON a.vec_id = e.vec_id
-        |  JOIN rk r ON r.centroid = a.centroid WHERE e.label % 3 = 1),
-        |cellc AS (SELECT probe_rank, count(*) AS c FROM f GROUP BY 1),
-        |cum AS (SELECT probe_rank,
-        |    sum(c) OVER (ORDER BY probe_rank ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM cellc),
-        |cut AS (SELECT COALESCE(min(CASE WHEN cum >= 25 THEN probe_rank END),
-        |    max(probe_rank)) AS cut FROM cum),
-        |p AS (SELECT f.vec_id, f.centroid, f.probe_rank,
-        |    unnest(f.embedding)::DOUBLE AS x, unnest(q.embedding)::DOUBLE AS y
-        |  FROM f, (SELECT embedding FROM embeddings WHERE vec_id = 0) q, cut
-        |  WHERE f.probe_rank <= cut.cut),
-        |c AS (SELECT vec_id, centroid, probe_rank,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1, 2, 3)
-        |SELECT vec_id, centroid, probe_rank, cos FROM c
-        |ORDER BY cos DESC, vec_id LIMIT 25""".stripMargin,
-
-    "q167_cluster_purity" ->
-      """WITH asg AS (SELECT vec_id, centroid FROM '__AUX__/q167_assign/*.parquet'),
-        |j AS (SELECT a.centroid, e.label FROM asg a
-        |  JOIN embeddings e ON e.vec_id = a.vec_id),
-        |c AS (SELECT centroid, label, count(*) AS cnt FROM j GROUP BY 1, 2),
-        |m AS (SELECT centroid, label AS maj_label, cnt AS maj_n,
-        |    row_number() OVER (PARTITION BY centroid
-        |                       ORDER BY cnt DESC, label) AS rn FROM c),
-        |t AS (SELECT centroid, CAST(sum(cnt) AS BIGINT) AS n
-        |  FROM c GROUP BY 1)
-        |SELECT t.centroid, t.n, m.maj_label, m.maj_n
-        |FROM t JOIN m ON m.centroid = t.centroid AND m.rn = 1
-        |ORDER BY t.centroid""".stripMargin,
-
-    "q168_html_extract" ->
-      """WITH b AS (SELECT doc_id, block_idx, text_len, link_len, chrome
-        |  FROM '__AUX__/q168_blocks/*.parquet'),
-        |k AS (SELECT doc_id, text_len,
-        |    CASE WHEN chrome = 0 AND text_len >= 25
-        |         AND 2 * link_len < text_len THEN 1 ELSE 0 END AS kept
-        |  FROM b)
-        |SELECT doc_id, count(*) AS n_blocks,
-        |  CAST(sum(kept) AS BIGINT) AS n_kept,
-        |  CAST(sum(CASE WHEN kept = 1 THEN text_len ELSE 0 END) AS BIGINT)
-        |    AS kept_chars
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q169_bradley_terry" -> {
-      // five MM iterations unrolled as MATERIALIZED integer-division
-      // CTEs (scale² = 1e12; `//` floors = Long `/` truncation on the
-      // all-positive operands)
-      val s2 = "1000000000000"
-      val steps = (1 to 5).map { k =>
-        s"""bt$k AS MATERIALIZED (
-           |  SELECT d.m, CAST(w.wtot * $s2 // d.den AS BIGINT) AS s FROM (
-           |    SELECT e.m, SUM(e.n * $s2 // (a.s + b.s)) AS den
-           |    FROM edges e JOIN bt${k - 1} a ON a.m = e.m
-           |                 JOIN bt${k - 1} b ON b.m = e.o GROUP BY e.m) d
-           |  JOIN wins w ON w.m = d.m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH prefs AS (SELECT doc_id % 8 AS a, (doc_id * 5 + 3) % 8 AS b,
-         |    CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 1 END AS wa,
-         |    CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS wb
-         |  FROM documents WHERE doc_id % 8 <> (doc_id * 5 + 3) % 8),
-         |canon AS (SELECT CASE WHEN a < b THEN a ELSE b END AS i,
-         |    CASE WHEN a < b THEN b ELSE a END AS j,
-         |    CAST(SUM(CASE WHEN a < b THEN wa ELSE wb END) AS BIGINT) AS wi,
-         |    CAST(SUM(CASE WHEN a < b THEN wb ELSE wa END) AS BIGINT) AS wj
-         |  FROM prefs GROUP BY 1, 2),
-         |edges AS (SELECT i AS m, j AS o, wi + wj AS n FROM canon
-         |  UNION ALL SELECT j, i, wi + wj FROM canon),
-         |wins AS (SELECT m, CAST(SUM(w) AS BIGINT) AS wtot FROM (
-         |    SELECT i AS m, wi AS w FROM canon
-         |    UNION ALL SELECT j, wj FROM canon) GROUP BY 1),
-         |bt0 AS MATERIALIZED (
-         |  SELECT DISTINCT m, CAST(1000000 AS BIGINT) AS s FROM edges),
-         |$steps
-         |SELECT m AS model, s AS score FROM bt5 ORDER BY model""".stripMargin
-    },
-
-    "q170_oov_audit" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |vc AS (SELECT tok, count(*) AS cnt FROM toks
-        |  WHERE doc_id % 2 = 0 GROUP BY 1),
-        |vocab AS (SELECT tok FROM vc ORDER BY cnt DESC, tok LIMIT 16)
-        |SELECT t.doc_id, count(*) AS n_tok,
-        |  CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_oov
-        |FROM toks t LEFT JOIN vocab v ON v.tok = t.tok
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q171_length_batching" ->
-      """WITH lens AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS len
-        |  FROM documents),
-        |b AS (SELECT doc_id, len, len // 16 AS bucket FROM lens),
-        |r AS (SELECT bucket, len,
-        |    row_number() OVER (PARTITION BY bucket
-        |                       ORDER BY len DESC, doc_id) - 1 AS rn
-        |  FROM b),
-        |g AS (SELECT bucket, rn // 8 AS batch_idx, count(*) AS n_docs,
-        |    max(len) AS max_len, CAST(sum(len) AS BIGINT) AS sum_len
-        |  FROM r GROUP BY 1, 2)
-        |SELECT bucket, batch_idx, n_docs, max_len,
-        |  CAST(n_docs * max_len - sum_len AS BIGINT) AS waste
-        |FROM g ORDER BY bucket, batch_idx""".stripMargin,
-
-    "q172_prefix_filter_join" ->
-      """WITH planted AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 100000, text FROM documents
-        |    WHERE doc_id % 25 = 0),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM planted),
-        |pos AS (SELECT doc_id, w, unnest(range(len(w) - 4)) AS i
-        |  FROM toks WHERE len(w) >= 5),
-        |shs AS (SELECT DISTINCT doc_id,
-        |    array_to_string(w[i+1:i+5], ' ') AS sh FROM pos),
-        |cnts AS (SELECT sh, count(*) AS cnt FROM shs GROUP BY 1),
-        |ranked AS (SELECT s.doc_id, s.sh,
-        |    row_number() OVER (PARTITION BY s.doc_id
-        |                       ORDER BY c.cnt, s.sh) AS rk,
-        |    count(*) OVER (PARTITION BY s.doc_id) AS n
-        |  FROM shs s JOIN cnts c ON c.sh = s.sh),
-        |pref AS (SELECT doc_id, sh FROM ranked
-        |  WHERE rk <= n - (n * 3 + 4) // 5 + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM pref a JOIN pref b ON a.sh = b.sh AND a.doc_id < b.doc_id),
-        |inter AS (SELECT c.id1, c.id2, count(*) AS inter
-        |  FROM cand c JOIN shs x ON x.doc_id = c.id1
-        |              JOIN shs y ON y.doc_id = c.id2 AND y.sh = x.sh
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM shs GROUP BY 1)
-        |SELECT i.id1, i.id2, CAST(i.inter AS BIGINT) AS inter,
-        |  CAST(sa.n + sb.n - i.inter AS BIGINT) AS uni
-        |FROM inter i JOIN sizes sa ON sa.doc_id = i.id1
-        |             JOIN sizes sb ON sb.doc_id = i.id2
-        |WHERE i.inter * 5 >= (sa.n + sb.n - i.inter) * 3
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q173_prefix_admit" ->
-      """WITH stored AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        |  UNION ALL SELECT doc_id + 100000, text FROM stored
-        |    WHERE doc_id % 50 = 0),
-        |tn AS (SELECT doc_id, string_split(text, ' ') AS w FROM batch),
-        |to_ AS (SELECT doc_id, string_split(text, ' ') AS w FROM stored),
-        |shn AS (SELECT DISTINCT doc_id, array_to_string(w[i+1:i+5], ' ') AS sh
-        |  FROM (SELECT doc_id, w, unnest(range(len(w) - 4)) AS i
-        |        FROM tn WHERE len(w) >= 5)),
-        |sho AS (SELECT DISTINCT doc_id, array_to_string(w[i+1:i+5], ' ') AS sh
-        |  FROM (SELECT doc_id, w, unnest(range(len(w) - 4)) AS i
-        |        FROM to_ WHERE len(w) >= 5)),
-        |cnts AS (SELECT sh, count(*) AS cnt FROM sho GROUP BY 1),
-        |pn AS (SELECT doc_id, sh FROM (
-        |  SELECT s.doc_id, s.sh,
-        |    row_number() OVER (PARTITION BY s.doc_id
-        |      ORDER BY COALESCE(c.cnt, 0), s.sh) AS rk,
-        |    count(*) OVER (PARTITION BY s.doc_id) AS n
-        |  FROM shn s LEFT JOIN cnts c ON c.sh = s.sh)
-        |  WHERE rk <= n - (n * 3 + 4) // 5 + 1),
-        |po AS (SELECT doc_id, sh FROM (
-        |  SELECT s.doc_id, s.sh,
-        |    row_number() OVER (PARTITION BY s.doc_id
-        |      ORDER BY COALESCE(c.cnt, 0), s.sh) AS rk,
-        |    count(*) OVER (PARTITION BY s.doc_id) AS n
-        |  FROM sho s LEFT JOIN cnts c ON c.sh = s.sh)
-        |  WHERE rk <= n - (n * 3 + 4) // 5 + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
-        |  FROM pn a JOIN po b ON a.sh = b.sh),
-        |inter AS (SELECT c.new_id, c.old_id, count(*) AS inter
-        |  FROM cand c JOIN shn x ON x.doc_id = c.new_id
-        |              JOIN sho y ON y.doc_id = c.old_id AND y.sh = x.sh
-        |  GROUP BY 1, 2),
-        |szn AS (SELECT doc_id, count(*) AS n FROM shn GROUP BY 1),
-        |szo AS (SELECT doc_id, count(*) AS n FROM sho GROUP BY 1)
-        |SELECT i.new_id, i.old_id, CAST(i.inter AS BIGINT) AS inter,
-        |  CAST(sa.n + sb.n - i.inter AS BIGINT) AS uni
-        |FROM inter i JOIN szn sa ON sa.doc_id = i.new_id
-        |             JOIN szo sb ON sb.doc_id = i.old_id
-        |WHERE i.inter * 5 >= (sa.n + sb.n - i.inter) * 3
-        |ORDER BY new_id, old_id""".stripMargin,
-
-    "q174_blend_fusion" ->
-      """WITH bal AS (SELECT c_custkey, c_acctbal FROM customer
-        |  ORDER BY c_acctbal DESC, c_custkey LIMIT 20),
-        |balx AS (SELECT min(c_acctbal) AS mnb, max(c_acctbal) AS mxb FROM bal),
-        |nb AS (SELECT c_custkey,
-        |    CASE WHEN mxb = mnb THEN 0.0
-        |         ELSE round((c_acctbal - mnb) / (mxb - mnb), 6) END AS norm_bal
-        |  FROM bal, balx),
-        |ords AS (SELECT o_custkey, count(*) AS n FROM orders GROUP BY 1
-        |  ORDER BY n DESC, o_custkey LIMIT 20),
-        |ordx AS (SELECT min(n) AS mno, max(n) AS mxo FROM ords),
-        |no_ AS (SELECT o_custkey AS c_custkey,
-        |    CASE WHEN mxo = mno THEN 0.0
-        |         ELSE round((n - mno) / (mxo - mno), 6) END AS norm_ord
-        |  FROM ords, ordx),
-        |j AS (SELECT COALESCE(nb.c_custkey, no_.c_custkey) AS c_custkey,
-        |    nb.norm_bal, no_.norm_ord
-        |  FROM nb FULL OUTER JOIN no_ ON nb.c_custkey = no_.c_custkey)
-        |SELECT c_custkey, COALESCE(norm_bal, 0.0) AS norm_bal,
-        |  COALESCE(norm_ord, 0.0) AS norm_ord,
-        |  round(CAST(0.6 AS DOUBLE) * COALESCE(norm_bal, 0.0)
-        |    + CAST(0.4 AS DOUBLE) * COALESCE(norm_ord, 0.0), 6) AS blend
-        |FROM j ORDER BY blend DESC, c_custkey LIMIT 10""".stripMargin,
-
-    "q175_pdf_image_neardup" -> {
-      // the q159 banded layout over the PDF-extracted image signatures
-      val layout = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT pdf_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH sigs AS (SELECT pdf_id, sig FROM '__AUX__/q175_sigs/*.parquet'),
-         |banded AS (
-         |  $bands),
-         |pairs AS (SELECT DISTINCT a.pdf_id AS id1, b.pdf_id AS id2,
-         |    a.sig AS sig1, b.sig AS sig2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.pdf_id < b.pdf_id)
-         |SELECT id1, id2, bit_count(xor(sig1, sig2)) AS dist
-         |FROM pairs WHERE bit_count(xor(sig1, sig2)) <= 4""".stripMargin
-    },
-
-    "q176_clustering_depth" ->
-      """WITH st AS (SELECT layout, file_idx, mn, mx, n_rows
-        |  FROM '__AUX__/q176_manifest/*.parquet')
-        |SELECT a.layout, a.file_idx, a.mn, a.mx, a.n_rows,
-        |  CAST(count(*) AS BIGINT) AS depth
-        |FROM st a JOIN st b
-        |  ON a.layout = b.layout AND a.mn <= b.mx AND b.mn <= a.mx
-        |GROUP BY 1, 2, 3, 4, 5 ORDER BY a.layout, a.file_idx""".stripMargin,
-
-    // quantile-sketch cuts verified against EXACT ranks: DuckDB recounts
-    // |{v <= cut}| from the raw table and re-derives target/slack/bounds
-    // in integer math — the sketch's admission decisions are checked by
-    // an engine that never saw the sketch.
-    "q177_quantile_gate" ->
-      s"""WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q177_cuts/*.parquet'),
-        |v AS (SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v
-        |  FROM lineitem),
-        |${quantileGateSql}""".stripMargin,
-
-    // fuzzy + exact decontamination on the planted corpus: DuckDB
-    // re-derives the word-swap, the 5-gram exact gate (q60's CTEs), and
-    // the full md5 MinHash/banding/agreement pipeline (q91's CTEs).
-    "q178_fuzzy_decontam" -> {
-      val hs = (0 until 16).map(i =>
-        s"list_min([md5('${i}_' || x) for x in sh]) AS h$i").mkString(",\n    ")
-      // 8 bands x 2 rows (vs q91's 4x4): recall at the fuzzy-leak J
-      def bandRows(tbl: String) = (0 until 8).map { b =>
-        val cat = (0 until 2).map(r => s"h${b * 2 + r}").mkString(" || '|' || ")
-        s"SELECT doc_id, $b AS band, md5($cat) AS bh FROM $tbl"
-      }.mkString("\n  UNION ALL ")
-      def shingleCte(src: String) =
-        s"""(SELECT doc_id, sh FROM (
-           |    SELECT doc_id, list_distinct([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-           |        for i in range(len(parts)-2)]) AS sh
-           |    FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM $src)
-           |    WHERE len(parts) >= 3)
-           |  WHERE len(sh) > 0)""".stripMargin
-      val eq = (0 until 16).map(i =>
-        s"CASE WHEN n.h$i = o.h$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH d AS (SELECT doc_id, text FROM documents),
-         |ev0 AS (SELECT doc_id, text FROM d WHERE doc_id % 50 = 0),
-         |sw AS (SELECT doc_id + 300000 AS doc_id,
-         |    array_to_string([CASE WHEN (i-1) % 25 = 3 THEN 'zzq' ELSE parts[i] END
-         |      for i in range(1, len(parts) + 1)], ' ') AS text
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM ev0)),
-         |corpus AS (SELECT doc_id, text FROM d
-         |  UNION ALL SELECT doc_id + 200000, text FROM ev0
-         |  UNION ALL SELECT doc_id, text FROM sw),
-         |train AS (SELECT doc_id, text FROM corpus
-         |  WHERE NOT (doc_id % 50 = 0 AND doc_id < 200000)),
-         |evs AS (SELECT doc_id, text FROM corpus
-         |  WHERE doc_id % 50 = 0 AND doc_id < 200000),
-         |toks AS (SELECT doc_id,
-         |    list_transform(regexp_extract_all(text, '\\S+'), w -> lower(w)) AS w
-         |  FROM train),
-         |tokse AS (SELECT doc_id,
-         |    list_transform(regexp_extract_all(text, '\\S+'), w -> lower(w)) AS w
-         |  FROM evs),
-         |tr AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS gram
-         |  FROM toks, UNNEST(range(1, len(w) - 3)) AS t(i)),
-         |evg AS (SELECT DISTINCT array_to_string(w[i:i+4], ' ') AS gram
-         |  FROM tokse, UNNEST(range(1, len(w) - 3)) AS t(i)),
-         |totals AS (SELECT doc_id, count(*) AS total_grams FROM tr GROUP BY 1),
-         |matched AS (SELECT doc_id, count(*) AS matched_grams FROM tr
-         |  WHERE gram IN (SELECT gram FROM evg) GROUP BY 1),
-         |shn AS ${shingleCte("train")},
-         |sho AS ${shingleCte("evs")},
-         |sign AS (SELECT doc_id, $hs FROM shn),
-         |sigo AS (SELECT doc_id, $hs FROM sho),
-         |bn AS (${bandRows("sign")}),
-         |bo AS (${bandRows("sigo")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
-         |  FROM bn x JOIN bo y ON x.band = y.band AND x.bh = y.bh),
-         |agr AS (SELECT new_id, old_id, agree FROM (
-         |    SELECT c.new_id, c.old_id, round(($eq) / 16.0, 6) AS agree
-         |    FROM cand c JOIN sign n ON n.doc_id = c.new_id
-         |                JOIN sigo o ON o.doc_id = c.old_id)
-         |  WHERE agree >= 0.5),
-         |fz AS (SELECT new_id AS doc_id, CAST(count(*) AS BIGINT) AS n_fuzzy,
-         |    max(agree) AS best_agree FROM agr GROUP BY 1)
-         |SELECT tdoc.doc_id,
-         |  CAST(COALESCE(t.total_grams, 0) AS BIGINT) AS total_grams,
-         |  CAST(COALESCE(m.matched_grams, 0) AS BIGINT) AS matched_grams,
-         |  CAST(CASE WHEN COALESCE(t.total_grams, 0) > 0
-         |       AND COALESCE(m.matched_grams, 0) * 10 >= t.total_grams * 9
-         |       THEN 1 ELSE 0 END AS BIGINT) AS exact_flag,
-         |  CAST(COALESCE(f.n_fuzzy, 0) AS BIGINT) AS n_fuzzy,
-         |  COALESCE(f.best_agree, 0.0) AS best_agree
-         |FROM train tdoc
-         |LEFT JOIN totals t ON t.doc_id = tdoc.doc_id
-         |LEFT JOIN matched m ON m.doc_id = tdoc.doc_id
-         |LEFT JOIN fz f ON f.doc_id = tdoc.doc_id
-         |ORDER BY tdoc.doc_id""".stripMargin
-    },
-
-    // media admission re-derived from the two aux signature tables:
-    // banding (the bandLayout(64,5) mirror), XOR popcount radius
-    // verify, and the left-join admission flags.
-    "q179_media_admit" -> {
-      val layout = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
-      def bandSel(tbl: String) = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT img_id, sig, $b AS b, (sig >> $off) & ${(1L << w) - 1} AS v FROM $tbl" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH st AS (SELECT img_id, sig FROM '__AUX__/q179_stored/*.parquet'),
-         |bt AS (SELECT img_id, sig FROM '__AUX__/q179_batch/*.parquet'),
-         |bs AS (
-         |  ${bandSel("bt")}),
-         |os AS (
-         |  ${bandSel("st")}),
-         |m AS (SELECT DISTINCT n.img_id AS img_id, o.img_id AS old_id,
-         |    bit_count(xor(n.sig, o.sig)) AS dist
-         |  FROM bs n JOIN os o ON n.b = o.b AND n.v = o.v
-         |  WHERE bit_count(xor(n.sig, o.sig)) <= 4),
-         |agg AS (SELECT img_id, CAST(count(*) AS BIGINT) AS n_matches,
-         |    CAST(min(dist) AS BIGINT) AS best_dist FROM m GROUP BY 1)
-         |SELECT b.img_id,
-         |  CAST(COALESCE(a.n_matches, 0) AS BIGINT) AS n_matches,
-         |  CAST(COALESCE(a.best_dist, 99) AS BIGINT) AS best_dist,
-         |  CAST(CASE WHEN a.img_id IS NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS admitted
-         |FROM bt b LEFT JOIN agg a ON a.img_id = b.img_id
-         |ORDER BY b.img_id""".stripMargin
-    },
-
-    // full composite: q149's normalize/dedup/split/budget CTEs plus the
-    // q95/q137/q126 gate CTEs, all over norm_text with frozen post-dedup
-    // statistics; every gate decision re-derived in integer math.
-    "q180_curation_full" ->
-      s"""WITH RECURSIVE vbase AS (SELECT doc_id, n_chars,
-        |    CASE WHEN doc_id % 17 = 3 THEN reverse(text) ELSE text END
-        |      AS text
-        |  FROM documents),
-        |pl AS (SELECT doc_id, n_chars, text FROM vbase
-        |  UNION ALL
-        |  SELECT doc_id + 10000, n_chars + 11, text || ' zzappendix'
-        |  FROM vbase WHERE doc_id % 13 = 1),
-        |normed AS (SELECT doc_id, n_chars,
-        |    trim(regexp_replace(lower(strip_accents(text)), '\\s+', ' ', 'g'))
-        |      AS norm_text
-        |  FROM pl WHERE n_chars >= 100),
-        |ranked AS (SELECT doc_id, n_chars, norm_text,
-        |    row_number() OVER (PARTITION BY md5(norm_text)
-        |                       ORDER BY doc_id) AS rn
-        |  FROM normed),
-        |dd AS MATERIALIZED (SELECT doc_id, n_chars, norm_text
-        |  FROM ranked WHERE rn = 1),
-        |${langIdPredictCtes("dd")},
-        |${minhashLshCtesOver("SELECT doc_id, norm_text AS text FROM dd")},
-        |ndp AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
-        |ndsym AS (SELECT id1 AS src, id2 AS dst FROM ndp
-        |  UNION SELECT id2, id1 FROM ndp),
-        |ndnodes AS (SELECT DISTINCT src AS id FROM ndsym),
-        |ndwalk(id, comp) AS (
-        |  SELECT id, id FROM ndnodes
-        |  UNION
-        |  SELECT s.src, w.comp FROM ndsym s JOIN ndwalk w ON s.dst = w.id),
-        |ndcc AS (SELECT id, min(comp) AS comp FROM ndwalk GROUP BY id),
-        |ndrk AS (SELECT ndcc.id,
-        |    row_number() OVER (PARTITION BY comp
-        |      ORDER BY length(d2.norm_text) DESC, ndcc.id) AS rn
-        |  FROM ndcc JOIN dd d2 ON d2.doc_id = ndcc.id),
-        |f AS (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(norm_text, '\\S+')) AS BIGINT) AS n_words,
-        |    CAST(length(norm_text) AS BIGINT) AS nc,
-        |    CAST(len(regexp_extract_all(norm_text, '!')) AS BIGINT) AS n_exclaim,
-        |    CAST(len(regexp_extract_all(norm_text, '[0-9]')) AS BIGINT) AS n_digits
-        |  FROM dd),
-        |lg AS (SELECT doc_id,
-        |    2*n_words + 1*nc - 50*n_exclaim - 10*n_digits - 500 AS logit FROM f),
-        |toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(norm_text, ' ') AS parts FROM dd))),
-        |pairs AS (SELECT a.doc_id, a.tok AS prev, b.tok AS next
-        |  FROM toks a JOIN toks b
-        |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-        |pc AS (SELECT doc_id, prev, next, CAST(count(*) AS BIGINT) AS c
-        |  FROM pairs GROUP BY 1, 2, 3),
-        |rep AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_cnt,
-        |    CAST(sum(c) AS BIGINT) AS n_pairs FROM pc GROUP BY 1),
-        |cnts AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM pairs GROUP BY 1, 2),
-        |flu AS (SELECT p.doc_id, CAST(SUM(c.cnt) AS BIGINT) AS sum_cnt
-        |  FROM pairs p JOIN cnts c ON c.prev = p.prev AND c.next = p.next
-        |  GROUP BY 1),
-        |flags AS (SELECT d.doc_id, d.n_chars, CAST(l.logit AS BIGINT) AS logit,
-        |    COALESCE(r.top_cnt, 1) AS top_cnt,
-        |    COALESCE(r.n_pairs, 0) AS n_pairs,
-        |    COALESCE(fl.sum_cnt, 0) AS sum_cnt,
-        |    COALESCE(lp.pred_lang, 'und') AS pred_lang,
-        |    CAST(COALESCE(lp.margin6, 0) AS BIGINT) AS margin6,
-        |    CASE WHEN COALESCE(lp.pred_lang, 'und') = 'en'
-        |         AND COALESCE(lp.margin6, 0) >= 1000000
-        |         THEN 1 ELSE 0 END AS pass_lang,
-        |    CASE WHEN ndl.id IS NULL THEN 1 ELSE 0 END AS pass_neardup,
-        |    CASE WHEN l.logit >= 0 THEN 1 ELSE 0 END AS pass_quality,
-        |    CASE WHEN COALESCE(r.top_cnt, 1) * 10 <= COALESCE(r.n_pairs, 0)
-        |         THEN 1 ELSE 0 END AS pass_rep,
-        |    CASE WHEN COALESCE(fl.sum_cnt, 0) >= COALESCE(r.n_pairs, 0) * 28
-        |         THEN 1 ELSE 0 END AS pass_flu,
-        |    CASE WHEN substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < 'cccccccc'
-        |         THEN 1 ELSE 0 END AS split_train
-        |  FROM dd d JOIN lg l ON l.doc_id = d.doc_id
-        |  LEFT JOIN rep r ON r.doc_id = d.doc_id
-        |  LEFT JOIN flu fl ON fl.doc_id = d.doc_id
-        |  LEFT JOIN lipred lp ON lp.doc_id = d.doc_id
-        |  LEFT JOIN (SELECT id FROM ndrk WHERE rn > 1) ndl
-        |    ON ndl.id = d.doc_id),
-        |surv AS (SELECT doc_id, n_chars FROM flags
-        |  WHERE pass_lang = 1 AND pass_neardup = 1
-        |    AND pass_quality = 1 AND pass_rep = 1 AND pass_flu = 1
-        |    AND split_train = 1),
-        |c AS (SELECT doc_id,
-        |    CAST(SUM(n_chars) OVER (
-        |      ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cum_n_chars
-        |  FROM surv),
-        |adm AS (SELECT doc_id, cum_n_chars FROM c WHERE cum_n_chars <= 50000)
-        |SELECT g.doc_id, g.n_chars, g.logit, g.top_cnt, g.n_pairs, g.sum_cnt,
-        |  g.pred_lang, g.margin6,
-        |  CAST(g.pass_lang AS BIGINT) AS pass_lang,
-        |  CAST(g.pass_neardup AS BIGINT) AS pass_neardup,
-        |  CAST(g.pass_quality AS BIGINT) AS pass_quality,
-        |  CAST(g.pass_rep AS BIGINT) AS pass_rep,
-        |  CAST(g.pass_flu AS BIGINT) AS pass_flu,
-        |  CAST(g.split_train AS BIGINT) AS split_train,
-        |  CAST(COALESCE(a.cum_n_chars, 0) AS BIGINT) AS cum_n_chars,
-        |  CAST(CASE WHEN a.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT)
-        |    AS admitted
-        |FROM flags g LEFT JOIN adm a ON a.doc_id = g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    // HNSW beam walk replayed hop by hop from the aux graph + levels:
-    // greedy descent d3→d2→d1 (one hop per upper layer, statically
-    // unrolled — a layer without edges for the current node is a
-    // no-op, matching the Spark walk), then three beam rounds (pool =
-    // frontier ∪ layer-0 neighbors, frontier = top-16, visited
-    // accumulates), finally visited top-10. Cosines are DuckDB's own.
-    "q181_hnsw" ->
-      s"""WITH ${hnswWalkCtes("q181")}
-         |SELECT id AS vec_id, cos FROM (SELECT DISTINCT id, cos FROM v3)
-         |ORDER BY cos DESC, id LIMIT 10""".stripMargin,
-
-    "q182_seq_packing" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, n_chars,
-        |    CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) % 8 AS INT) AS shard
-        |  FROM documents),
-        |o AS (SELECT doc_id, n_chars, shard,
-        |    row_number() OVER (PARTITION BY shard
-        |      ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM d),
-        |pack AS (
-        |  SELECT shard, rn, doc_id,
-        |    CAST(0 AS BIGINT) AS seq_idx, CAST(0 AS BIGINT) AS pos,
-        |    n_chars AS cum
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.shard, o.rn, o.doc_id,
-        |    CASE WHEN p.cum > 0 AND p.cum + o.n_chars > 1024
-        |      THEN p.seq_idx + 1 ELSE p.seq_idx END,
-        |    CASE WHEN p.cum > 0 AND p.cum + o.n_chars > 1024
-        |      THEN 0 ELSE p.cum END,
-        |    CASE WHEN p.cum > 0 AND p.cum + o.n_chars > 1024
-        |      THEN o.n_chars ELSE p.cum + o.n_chars END
-        |  FROM pack p JOIN o ON o.shard = p.shard AND o.rn = p.rn + 1)
-        |SELECT doc_id, shard, seq_idx, pos FROM pack ORDER BY doc_id""".stripMargin,
-
-    "q183_dedup_keep_best" -> {
-      val ctes = minhashLshCtesWith(
-        "SELECT doc_id + 10000 AS doc_id, text || ' zzappendix' AS text " +
-          "FROM documents")
-      s"""WITH RECURSIVE $ctes,
-         |pairs AS (SELECT id1, id2 FROM verified WHERE jaccard >= 0.8),
-         |${componentWalkCtes("pairs", false)},
-         |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-         |rk AS (SELECT cc.id,
-         |    row_number() OVER (PARTITION BY cc.comp
-         |      ORDER BY length(d.text) DESC, cc.id) AS rn
-         |  FROM cc JOIN d ON d.doc_id = cc.id)
-         |SELECT doc_id FROM d
-         |WHERE doc_id NOT IN (SELECT id FROM rk WHERE rn > 1)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q184_random_project" ->
-      """WITH dims AS (SELECT vec_id, i,
-        |    CAST(round(embedding[i + 1]::DOUBLE * 1000000) AS BIGINT) AS xi
-        |  FROM (SELECT vec_id, embedding,
-        |      unnest(range(len(embedding))) AS i FROM embeddings)),
-        |js AS (SELECT unnest(range(16)) AS j),
-        |cells AS (SELECT d.vec_id, js.j, d.xi,
-        |    CASE WHEN substr(md5(CAST(d.i AS VARCHAR) || '_' ||
-        |        CAST(js.j AS VARCHAR)), 1, 1) < '8'
-        |      THEN 1 ELSE -1 END AS sgn
-        |  FROM dims d CROSS JOIN js)
-        |SELECT vec_id, CAST(j AS BIGINT) AS out_dim,
-        |  CAST(sum(sgn * xi) AS BIGINT) AS proj
-        |FROM cells GROUP BY 1, 2 ORDER BY vec_id, out_dim""".stripMargin,
-
-    "q185_stream_quantile" ->
-      s"""WITH cuts AS (SELECT q_mille, cut FROM '__AUX__/q185_cuts/*.parquet'),
-        |v AS (SELECT CAST(ROUND(value * 100) AS BIGINT) AS v FROM events),
-        |${quantileGateSql}""".stripMargin,
-
-    "q186_hnsw_append" ->
-      """WITH lv AS (SELECT vec_id AS id, embedding,
-        |    CASE WHEN hv % 4096 = 0 THEN 3 WHEN hv % 256 = 0 THEN 2
-        |         WHEN hv % 16 = 0 THEN 1 ELSE 0 END AS level
-        |  FROM (SELECT vec_id, embedding,
-        |      CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)
-        |        AS BIGINT) AS hv FROM embeddings)),
-        |st AS (SELECT * FROM lv WHERE id % 5 <> 0),
-        |bt AS (SELECT * FROM lv WHERE id % 5 = 0),
-        |pp AS (SELECT b.id AS bid, s.id AS sid,
-        |    b.level AS blvl, s.level AS slvl,
-        |    unnest(b.embedding)::DOUBLE AS x, unnest(s.embedding)::DOUBLE AS y
-        |  FROM bt b CROSS JOIN st s),
-        |cosb AS (SELECT bid, sid, any_value(blvl) AS blvl,
-        |    any_value(slvl) AS slvl,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pp GROUP BY bid, sid),
-        |lay AS (SELECT unnest(range(4)) AS l),
-        |rk AS (SELECT l.l, c.bid, c.sid, c.cos,
-        |    row_number() OVER (PARTITION BY l.l, c.bid
-        |      ORDER BY c.cos DESC, c.sid) AS rn
-        |  FROM cosb c JOIN lay l ON l.l <= c.blvl AND c.slvl >= l.l),
-        |fwd AS (SELECT l AS layer, bid AS id, sid AS nbr, cos FROM rk
-        |  WHERE rn <= CASE WHEN l = 0 THEN 16 ELSE 8 END)
-        |SELECT DISTINCT CAST(layer AS INT) AS layer, id, nbr, cos FROM (
-        |  SELECT layer, id, nbr, cos FROM fwd
-        |  UNION ALL SELECT layer, nbr AS id, id AS nbr, cos FROM fwd)
-        |ORDER BY layer, id, nbr""".stripMargin,
-
-    "q187_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id, embedding FROM e WHERE vec_id % 50 = 0),
-        |pp AS (SELECT q.vec_id AS query_id, e.vec_id AS neg_id,
-        |    unnest(q.embedding)::DOUBLE AS x, unnest(e.embedding)::DOUBLE AS y
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q.vec_id),
-        |c AS (SELECT query_id, neg_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pp GROUP BY 1, 2),
-        |rk AS (SELECT query_id, neg_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, neg_id) AS BIGINT) AS rank
-        |  FROM c WHERE cos < 0.35)
-        |SELECT query_id, neg_id, cos, rank FROM rk WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q188_source_interleave" ->
-      """WITH w AS (SELECT doc_id, source,
-        |    CASE WHEN source = 'src0' THEN 5
-        |         WHEN source = 'src1' THEN 3 ELSE 1 END AS wt,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id)
-        |      AS r
-        |  FROM documents),
-        |v AS (SELECT doc_id, source, (r * 10000) // wt AS vt FROM w)
-        |SELECT doc_id, source, CAST(vt AS BIGINT) AS vt,
-        |  CAST(row_number() OVER (ORDER BY vt, source, doc_id) AS BIGINT)
-        |    AS pos
-        |FROM v ORDER BY pos""".stripMargin,
-
-    "q189_winnowing" ->
-      s"""WITH ${winnowingCtes("documents", "")}
-        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, fp FROM keep
-        |ORDER BY doc_id, pos, fp""".stripMargin,
-
-    "q190_copy_spans" ->
-      s"""WITH dr AS (SELECT doc_id + 20000 AS doc_id,
-        |    'zq1 zq2 ' ||
-        |      array_to_string(string_split(text, ' ')[6:25], ' ') AS text
-        |  FROM documents),
-        |${winnowingCtes("documents", "l")},
-        |${winnowingCtes("dr", "r")},
-        |j AS (SELECT l.doc_id AS id_left, r.doc_id AS id_right,
-        |    r.pos - l.pos AS diag, l.pos
-        |  FROM lkeep l JOIN rkeep r ON r.fp = l.fp)
-        |SELECT id_left, id_right, CAST(diag AS BIGINT) AS diag,
-        |  CAST(count(*) AS BIGINT) AS n_shared,
-        |  CAST(min(pos) AS BIGINT) AS lo_left,
-        |  CAST(max(pos) AS BIGINT) AS hi_left
-        |FROM j GROUP BY 1, 2, 3 HAVING count(*) >= 3
-        |ORDER BY id_left, id_right, diag""".stripMargin,
-
-    "q191_kmv_overlap" ->
-      s"""WITH ${kmvSketchCtes("doc_id < 300", "ka")},
-        |${kmvSketchCtes("doc_id >= 200", "kb")},
-        |u AS (SELECT h FROM (SELECT h FROM ka UNION SELECT h FROM kb)
-        |  ORDER BY h LIMIT 128),
-        |ea AS (SELECT ${kmvEstSql("ka")} AS est FROM ka),
-        |eb AS (SELECT ${kmvEstSql("kb")} AS est FROM kb),
-        |eu AS (SELECT ${kmvEstSql("u")} AS est FROM u),
-        |m AS (SELECT count(*) AS matched FROM u
-        |  WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb))
-        |SELECT CAST((SELECT count(*) FROM ka) AS BIGINT) AS n_a,
-        |  CAST((SELECT count(*) FROM kb) AS BIGINT) AS n_b,
-        |  CAST(ea.est AS BIGINT) AS est_a, CAST(eb.est AS BIGINT) AS est_b,
-        |  CAST(eu.est AS BIGINT) AS est_union,
-        |  CAST(m.matched AS BIGINT) AS matched,
-        |  CAST(m.matched * eu.est // 128 AS BIGINT) AS est_intersection,
-        |  CAST(m.matched * 1000 // 128 AS BIGINT) AS jaccard_pm
-        |FROM ea, eb, eu, m""".stripMargin,
-
-    "q192_kmeans" ->
-      s"""WITH dims AS (SELECT vec_id, i,
-        |    CAST(round(embedding[i + 1]::DOUBLE * 1000000) AS BIGINT)
-        |      + 2097152 AS xi
-        |  FROM (SELECT vec_id, embedding,
-        |      unnest(range(len(embedding))) AS i FROM embeddings)),
-        |ord AS (SELECT vec_id, row_number() OVER (
-        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), CAST(vec_id AS VARCHAR))
-        |    - 1 AS j FROM embeddings),
-        |c0 AS (SELECT o.j, d.i, d.xi AS c
-        |  FROM ord o JOIN dims d USING (vec_id) WHERE o.j < 4),
-        |${kmeansIterCtes(2)}
-        |df AS (SELECT d.vec_id, c.j,
-        |    sum((d.xi - c.c) * (d.xi - c.c)) AS dist
-        |  FROM dims d JOIN c2 c ON c.i = d.i GROUP BY 1, 2)
-        |SELECT vec_id, CAST(j AS BIGINT) AS cluster,
-        |  CAST(dist AS BIGINT) AS dist2
-        |FROM (SELECT vec_id, j, dist, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY dist, j) AS rn FROM df)
-        |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    "q193_span_removal" ->
-      raw"""WITH ${plantedRepeatSpanCtes},
-        |tokpos AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, ws[i+1] AS tok
-        |  FROM toks, UNNEST(range(len(ws))) t(i)),
-        |kept AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tokpos tp
-        |  WHERE NOT EXISTS (SELECT 1 FROM sp
-        |    WHERE sp.doc_id = tp.doc_id AND tp.pos >= sp.s AND tp.pos < sp.e)),
-        |ka AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text,
-        |    count(*) AS kept FROM kept GROUP BY 1)
-        |SELECT t.doc_id, COALESCE(ka.text, '') AS text,
-        |  CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(ka.kept, 0) AS BIGINT) AS kept_tokens
-        |FROM toks t LEFT JOIN ka USING (doc_id) ORDER BY t.doc_id""".stripMargin,
-
-    "q194_snapshot_takedown" ->
-      """WITH d AS (SELECT doc_id AS id FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS version,
-        |  CAST((SELECT count(*) FROM d WHERE id < 100 AND id != 7) AS BIGINT) AS n_rows,
-        |  CAST((SELECT count(*) FROM d WHERE id < 100 AND id % 10 = 0) AS BIGINT) AS n_mod10,
-        |  CAST(0 AS BIGINT) AS n_id7, CAST(0 AS BIGINT) AS n_v2
-        |UNION ALL SELECT 2,
-        |  CAST((SELECT count(*) FROM d WHERE id < 150 AND id != 7) AS BIGINT),
-        |  CAST((SELECT count(*) FROM d WHERE id < 150 AND id % 10 = 0) AS BIGINT),
-        |  0,
-        |  CAST((SELECT count(*) FROM d WHERE id BETWEEN 50 AND 149) AS BIGINT)
-        |UNION ALL SELECT 3,
-        |  CAST((SELECT count(*) FROM d WHERE id < 150 AND id != 7
-        |    AND id % 10 != 0) AS BIGINT),
-        |  0, 0,
-        |  CAST((SELECT count(*) FROM d WHERE id BETWEEN 50 AND 149
-        |    AND id % 10 != 0) AS BIGINT)
-        |ORDER BY version""".stripMargin,
-
-    "q195_range_shards" ->
-      """WITH cuts AS (SELECT cut FROM '__AUX__/q195_cuts/*.parquet'),
-        |asg AS (SELECT n_chars,
-        |    (SELECT count(*) FROM cuts c WHERE d.n_chars > c.cut) AS shard
-        |  FROM documents d)
-        |SELECT CAST(shard AS BIGINT) AS shard,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(min(n_chars) AS BIGINT) AS min_v,
-        |  CAST(max(n_chars) AS BIGINT) AS max_v
-        |FROM asg GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q196_video_neardup" -> {
-      // mirror of Dedup.bandLayout(64, 5): widths 13,13,13,13,12
-      val layout = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
-      val bands = layout.zipWithIndex.map { case ((off, w), b) =>
-        s"SELECT vid_id, frame_idx, sig, $b AS b, " +
-          s"(sig >> $off) & ${(1L << w) - 1} AS v FROM sigs" }
-        .mkString("\n  UNION ALL ")
-      s"""WITH sigs AS (SELECT vid_id, frame_idx, sig
-         |    FROM '__AUX__/q196_frame_sigs/*.parquet'),
-         |banded AS (
-         |  $bands),
-         |cand AS (SELECT DISTINCT a.vid_id AS id_left, b.vid_id AS id_right,
-         |    a.frame_idx AS f_left, b.frame_idx AS f_right,
-         |    a.sig AS s1, b.sig AS s2
-         |  FROM banded a JOIN banded b
-         |    ON a.b = b.b AND a.v = b.v AND a.vid_id < b.vid_id),
-         |m AS (SELECT id_left, id_right, f_left, f_right FROM cand
-         |  WHERE bit_count(xor(s1, s2)) <= 4)
-         |SELECT id_left, id_right,
-         |  CAST(f_right - f_left AS BIGINT) AS diag,
-         |  CAST(count(*) AS BIGINT) AS n_matched,
-         |  CAST(min(f_left) AS BIGINT) AS lo_left,
-         |  CAST(max(f_left) AS BIGINT) AS hi_left
-         |FROM m GROUP BY 1, 2, 3 HAVING count(*) >= 2
-         |ORDER BY id_left, id_right, diag""".stripMargin
-    },
-
-    "q197_citation_authority" ->
-      s"""WITH RECURSIVE d AS (SELECT DISTINCT doc_id % 40 AS src
-        |  FROM documents),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, (src * src + 13) % 40 AS dst FROM d
-        |    UNION ALL
-        |    SELECT src, (src * 7 + 3) % 40 AS dst FROM d)
-        |  WHERE src <> dst),
-        |${pageRankCtes(3)}
-        |SELECT id, rank FROM pr WHERE iter = 3""".stripMargin,
-
-    "q198_source_overlap" ->
-      """WITH toks AS (SELECT source AS g,
-        |    unnest(regexp_extract_all(text, '\S+')) AS tok FROM documents),
-        |hs AS (SELECT DISTINCT g, md5(tok) AS h FROM toks),
-        |ranked AS (SELECT g, h,
-        |    row_number() OVER (PARTITION BY g ORDER BY h) AS rn FROM hs),
-        |sk AS (SELECT g, h FROM ranked WHERE rn <= 64),
-        |ns AS (SELECT g, count(*) AS n FROM sk GROUP BY 1),
-        |pairs AS (SELECT a.g AS g1, b.g AS g2 FROM ns a JOIN ns b ON a.g < b.g),
-        |uh AS (SELECT DISTINCT p.g1, p.g2, s.h FROM pairs p
-        |  JOIN sk s ON s.g = p.g1 OR s.g = p.g2),
-        |ur AS (SELECT g1, g2, h, row_number() OVER (
-        |    PARTITION BY g1, g2 ORDER BY h) AS rn FROM uh),
-        |uk AS (SELECT g1, g2, h FROM ur WHERE rn <= 64),
-        |un AS (SELECT g1, g2, count(*) AS nu, max(h) AS hk
-        |  FROM uk GROUP BY 1, 2),
-        |eu AS (SELECT g1, g2, CASE WHEN nu < 64 THEN nu
-        |    ELSE CAST(63 AS HUGEINT) * 1152921504606846976
-        |      // CAST('0x' || substr(hk, 1, 15) AS BIGINT) END AS est
-        |  FROM un),
-        |m AS (SELECT u.g1, u.g2, count(*) AS matched FROM uk u
-        |  WHERE EXISTS (SELECT 1 FROM sk a WHERE a.g = u.g1 AND a.h = u.h)
-        |    AND EXISTS (SELECT 1 FROM sk b WHERE b.g = u.g2 AND b.h = u.h)
-        |  GROUP BY 1, 2)
-        |SELECT e.g1, e.g2,
-        |  CAST(na.n AS BIGINT) AS n_g1, CAST(nb.n AS BIGINT) AS n_g2,
-        |  CAST(e.est AS BIGINT) AS est_union,
-        |  CAST(COALESCE(m.matched, 0) AS BIGINT) AS matched,
-        |  CAST(COALESCE(m.matched, 0) * e.est // 64 AS BIGINT)
-        |    AS est_intersection,
-        |  CAST(COALESCE(m.matched, 0) * 1000 // 64 AS BIGINT) AS jaccard_pm
-        |FROM eu e JOIN ns na ON na.g = e.g1 JOIN ns nb ON nb.g = e.g2
-        |  LEFT JOIN m ON m.g1 = e.g1 AND m.g2 = e.g2
-        |ORDER BY e.g1, e.g2""".stripMargin,
-
-    "q199_lsh_band_audit" ->
-      s"""WITH ${minhashLshCtes},
-        |candb AS (SELECT x.band AS band_id, x.doc_id AS id1, y.doc_id AS id2
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-        |vok AS (SELECT id1, id2,
-        |    CASE WHEN jaccard >= 0.8 THEN 1 ELSE 0 END AS ok FROM verified),
-        |perband AS (SELECT band_id, count(*) AS n_cand, sum(ok) AS n_verified
-        |  FROM candb JOIN vok USING (id1, id2) GROUP BY 1),
-        |buckets AS (SELECT band AS band_id, count(DISTINCT bh) AS n_buckets
-        |  FROM bands GROUP BY 1)
-        |SELECT CAST(b.band_id AS BIGINT) AS band_id,
-        |  CAST(b.n_buckets AS BIGINT) AS n_buckets,
-        |  CAST(COALESCE(p.n_cand, 0) AS BIGINT) AS n_cand,
-        |  CAST(COALESCE(p.n_verified, 0) AS BIGINT) AS n_verified,
-        |  CAST(CASE WHEN COALESCE(p.n_cand, 0) = 0 THEN 0
-        |    ELSE p.n_verified * 1000 // p.n_cand END AS BIGINT) AS precision_pm
-        |FROM buckets b LEFT JOIN perband p USING (band_id)
-        |ORDER BY band_id""".stripMargin,
-
-    "q200_label_propagation" ->
-      """WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |e0 AS (SELECT n AS src, (n // 10) * 10 + (n % 10 + 1) % 10 AS dst
-        |    FROM nn
-        |  UNION ALL SELECT n, (n // 10) * 10 + (n % 10 + 2) % 10 FROM nn
-        |  UNION ALL SELECT n, (n + 1) % 40 FROM nn WHERE n % 10 = 9),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
-        |  WHERE src <> dst),
-        |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),
-        |c1 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-        |  FROM e JOIN l0 l ON l.id = e.dst GROUP BY 1, 2),
-        |l1 AS (SELECT id, lbl FROM (SELECT id, lbl,
-        |    row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl) AS rn
-        |  FROM c1) WHERE rn = 1),
-        |c2 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-        |  FROM e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-        |l2 AS (SELECT id, lbl FROM (SELECT id, lbl,
-        |    row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl) AS rn
-        |  FROM c2) WHERE rn = 1)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(lbl AS BIGINT) AS lbl
-        |FROM l2 ORDER BY id""".stripMargin,
-
-    "q201_multiprobe_lsh" ->
-      """WITH b AS (SELECT * FROM '__AUX__/q201_buckets/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q201_probes/*.parquet'),
-        |q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |cand AS (SELECT e.vec_id, b.bucket, e.embedding
-        |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id
-        |  WHERE b.bucket IN (SELECT bucket FROM p)),
-        |c AS (SELECT vec_id, bucket,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM (SELECT cand.vec_id, cand.bucket, unnest(cand.embedding)::DOUBLE AS x,
-        |               unnest(q.embedding)::DOUBLE AS y FROM cand, q)
-        |  GROUP BY 1, 2)
-        |SELECT vec_id, bucket, cos FROM c ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q202_ann_recall_audit" ->
-      """WITH b AS (SELECT * FROM '__AUX__/q202_buckets/*.parquet'),
-        |p AS (SELECT DISTINCT qid, bucket FROM '__AUX__/q202_probes/*.parquet'),
-        |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-        |  WHERE vec_id % 25 = 0),
-        |raw AS (SELECT q.qid, c.vec_id AS cid,
-        |    unnest(c.embedding)::DOUBLE AS x, unnest(q.qv)::DOUBLE AS y
-        |  FROM qs q CROSS JOIN embeddings c),
-        |cosall AS (SELECT qid, cid,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM raw GROUP BY 1, 2),
-        |bruteK AS (SELECT qid, cid FROM (SELECT qid, cid,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-        |  FROM cosall) WHERE rn <= 10),
-        |cand AS (SELECT DISTINCT p.qid, b.vec_id AS cid
-        |  FROM p JOIN b ON b.bucket = p.bucket),
-        |annK AS (SELECT qid, cid FROM (SELECT a.qid, a.cid,
-        |    row_number() OVER (PARTITION BY a.qid ORDER BY c.cos DESC, a.cid)
-        |      AS rn
-        |  FROM cand a JOIN cosall c ON c.qid = a.qid AND c.cid = a.cid)
-        |  WHERE rn <= 10),
-        |hits AS (SELECT qid, count(*) AS n_hit FROM annK
-        |  JOIN bruteK USING (qid, cid) GROUP BY 1)
-        |SELECT q.qid AS query_id,
-        |  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  CAST(COALESCE(h.n_hit, 0) * 1000 // 10 AS BIGINT) AS recall_pm
-        |FROM qs q LEFT JOIN hits h ON h.qid = q.qid ORDER BY query_id""".stripMargin,
-
-    "q203_hybrid_ann" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q203_index/*.parquet'),
-        |asg AS (SELECT * FROM '__AUX__/q203_assign/*.parquet'),
-        |pr AS (SELECT * FROM '__AUX__/q203_probes/*.parquet'),
-        |qv AS (SELECT qv FROM '__AUX__/q203_qvec/*.parquet'),
-        |cand AS (SELECT i.id, i.dense_vec FROM idx i JOIN asg a ON a.id = i.id
-        |  WHERE a.centroid IN (SELECT centroid FROM pr)),
-        |dc AS (SELECT id, round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6)
-        |      AS dense_score
-        |  FROM (SELECT cand.id, unnest(cand.dense_vec)::DOUBLE AS x,
-        |        unnest(qv.qv)::DOUBLE AS y FROM cand, qv)
-        |  GROUP BY id),
-        |dense AS (SELECT id, dense_score FROM dc
-        |  ORDER BY dense_score DESC, id LIMIT 25),
-        |${bm25Top25Ctes("'filter','join','scan','vector'")},
-        |${rrfTop5Sql}""".stripMargin,
-
-    "q204_wordpiece" ->
-      """WITH RECURSIVE vp AS (SELECT piece,
-        |    CASE WHEN piece LIKE '##%' THEN substr(piece, 3) ELSE piece END AS raw,
-        |    (piece LIKE '##%') AS cont
-        |  FROM '__AUX__/q204_vocab/*.parquet'),
-        |words AS (SELECT DISTINCT w AS word FROM (
-        |    SELECT unnest(string_split(lower(trim(text)), ' ')) AS w
-        |    FROM documents WHERE doc_id < 50)
-        |  WHERE w <> ''
-        |  UNION SELECT 'q~z'),
-        |seg(word, pos, pieces) AS (
-        |  SELECT word, 0, '' FROM words
-        |  UNION ALL
-        |  SELECT s.word, s.pos + len(p.raw),
-        |    s.pieces || CASE WHEN s.pieces = '' THEN '' ELSE ' ' END || p.piece
-        |  FROM seg s, LATERAL (
-        |    SELECT piece, raw FROM vp
-        |    WHERE vp.cont = (s.pos > 0)
-        |      AND substr(s.word, s.pos + 1, len(vp.raw)) = vp.raw
-        |    ORDER BY len(raw) DESC LIMIT 1) p
-        |  WHERE s.pos < len(s.word)),
-        |done AS (SELECT word, pieces FROM seg WHERE pos = len(word))
-        |SELECT w.word, COALESCE(d.pieces, '[UNK]') AS pieces
-        |FROM words w LEFT JOIN done d USING (word) ORDER BY word""".stripMargin,
-
-    "q205_rouge" ->
-      s"""WITH p AS (SELECT doc_id AS id,
-        |    array_to_string(string_split(text, ' ')[1:20], ' ') AS cand,
-        |    array_to_string(string_split(text, ' ')[5:30], ' ') AS ref
-        |  FROM documents),
-        |${rougeGramCtes("cand", "cg")},
-        |${rougeGramCtes("ref", "rg")},
-        |m AS (SELECT id, sum(least(cg.c, rg.c)) AS match_n
-        |  FROM cg JOIN rg USING (id, g) GROUP BY 1),
-        |ct AS (SELECT id, sum(c) AS s FROM cg GROUP BY 1),
-        |rt AS (SELECT id, sum(c) AS s FROM rg GROUP BY 1)
-        |SELECT p.id, CAST(COALESCE(ct.s, 0) AS BIGINT) AS cand_n,
-        |  CAST(COALESCE(rt.s, 0) AS BIGINT) AS ref_n,
-        |  CAST(COALESCE(m.match_n, 0) AS BIGINT) AS match_n,
-        |  CAST(CASE WHEN COALESCE(ct.s, 0) = 0 THEN 0
-        |    ELSE COALESCE(m.match_n, 0) * 1000 // ct.s END AS BIGINT)
-        |    AS precision_pm,
-        |  CAST(CASE WHEN COALESCE(rt.s, 0) = 0 THEN 0
-        |    ELSE COALESCE(m.match_n, 0) * 1000 // rt.s END AS BIGINT)
-        |    AS recall_pm
-        |FROM p LEFT JOIN ct ON ct.id = p.id LEFT JOIN rt ON rt.id = p.id
-        |  LEFT JOIN m ON m.id = p.id
-        |ORDER BY p.id""".stripMargin,
-
-    "q206_span_corrupt" ->
-      """WITH toks AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, ws[i+1] AS tok,
-        |    CAST(i // 3 AS BIGINT) AS span
-        |  FROM (SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS ws
-        |    FROM documents), UNNEST(range(len(ws))) t(i)),
-        |sp AS (SELECT DISTINCT doc_id, span FROM toks),
-        |msk AS (SELECT doc_id, span,
-        |    substr(md5(CAST(doc_id AS VARCHAR) || '_' ||
-        |      CAST(span AS VARCHAR)), 1, 8) < '40000000' AS m
-        |  FROM sp),
-        |sk AS (SELECT doc_id, span,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY span) - 1 AS k
-        |  FROM msk WHERE m),
-        |inp AS (
-        |  SELECT t.doc_id, t.pos AS ord, t.tok
-        |  FROM toks t JOIN msk ON msk.doc_id = t.doc_id AND msk.span = t.span
-        |  WHERE NOT msk.m
-        |  UNION ALL
-        |  SELECT s.doc_id, s.span * 3,
-        |    '<extra_id_' || CAST(s.k AS VARCHAR) || '>' FROM sk s),
-        |inag AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY ord)
-        |    AS input_text FROM inp GROUP BY 1),
-        |tgt AS (
-        |  SELECT s.doc_id, s.span * 30 AS ord,
-        |    '<extra_id_' || CAST(s.k AS VARCHAR) || '>' AS tok FROM sk s
-        |  UNION ALL
-        |  SELECT t.doc_id, t.pos * 10 + 5, t.tok
-        |  FROM toks t JOIN sk s ON s.doc_id = t.doc_id AND s.span = t.span),
-        |tgag AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY ord)
-        |    AS target_text FROM tgt GROUP BY 1),
-        |nm AS (SELECT doc_id, count(*) AS n_masked FROM sk GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(i.input_text, '') AS input_text,
-        |  COALESCE(g.target_text, '') AS target_text,
-        |  CAST(COALESCE(nm.n_masked, 0) AS BIGINT) AS n_masked
-        |FROM documents d LEFT JOIN inag i USING (doc_id)
-        |  LEFT JOIN tgag g USING (doc_id) LEFT JOIN nm USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q207_semantic_decontam" ->
-      """WITH ev AS (SELECT vec_id AS eval_id, embedding AS evv
-        |  FROM embeddings WHERE vec_id % 50 = 0),
-        |tr AS (SELECT vec_id AS doc_id, embedding AS tvv
-        |  FROM embeddings WHERE vec_id % 50 <> 0),
-        |c AS (SELECT doc_id, eval_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM (SELECT t.doc_id, e.eval_id, unnest(t.tvv)::DOUBLE AS x,
-        |        unnest(e.evv)::DOUBLE AS y FROM tr t CROSS JOIN ev e)
-        |  GROUP BY 1, 2)
-        |SELECT doc_id, eval_id, cos FROM c WHERE cos >= 0.35
-        |ORDER BY doc_id, eval_id""".stripMargin,
-
-    "q208_embedding_outliers" ->
-      s"""WITH dims AS (SELECT vec_id, i,
-        |    CAST(round(embedding[i + 1]::DOUBLE * 1000000) AS BIGINT)
-        |      + 2097152 AS xi
-        |  FROM (SELECT vec_id, embedding,
-        |      unnest(range(len(embedding))) AS i FROM embeddings)),
-        |ord AS (SELECT vec_id, row_number() OVER (
-        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), CAST(vec_id AS VARCHAR))
-        |    - 1 AS j FROM embeddings),
-        |c0 AS (SELECT o.j, d.i, d.xi AS c
-        |  FROM ord o JOIN dims d USING (vec_id) WHERE o.j < 4),
-        |${kmeansIterCtes(2)}
-        |df AS (SELECT d.vec_id, c.j,
-        |    sum((d.xi - c.c) * (d.xi - c.c)) AS dist
-        |  FROM dims d JOIN c2 c ON c.i = d.i GROUP BY 1, 2),
-        |asg AS (SELECT vec_id, j AS cluster, dist AS dist2
-        |  FROM (SELECT vec_id, j, dist, row_number() OVER (
-        |      PARTITION BY vec_id ORDER BY dist, j) AS rn FROM df)
-        |  WHERE rn = 1),
-        |st AS (SELECT cluster, count(*) AS n_c, sum(dist2) AS sum_c
-        |  FROM asg GROUP BY 1)
-        |SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cluster,
-        |  CAST(a.dist2 AS BIGINT) AS dist2, CAST(s.n_c AS BIGINT) AS n_c,
-        |  CAST(CASE WHEN a.dist2 * s.n_c > 4 * s.sum_c THEN 1 ELSE 0 END
-        |    AS BIGINT) AS flagged
-        |FROM asg a JOIN st s USING (cluster) ORDER BY a.vec_id""".stripMargin,
-
-    "q209_large_orders" ->
-      """WITH big AS (SELECT l_orderkey, sum(l_quantity) AS sum_qty
-        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300)
-        |SELECT c.c_name, o.o_orderkey,
-        |  CAST(round(o.o_totalprice * 100, 0) AS BIGINT) AS total_cents,
-        |  CAST(b.sum_qty AS BIGINT) AS sum_qty
-        |FROM orders o JOIN big b ON b.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON c.c_custkey = o.o_custkey
-        |ORDER BY total_cents DESC, o.o_orderkey LIMIT 20""".stripMargin,
-
-    "q210_release_datasheet" ->
-      """SELECT COALESCE(lang, '__all__') AS lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(string_split(trim(text), ' '))) AS BIGINT) AS n_tokens,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
-        |  CAST(min(n_chars) AS BIGINT) AS min_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY ROLLUP (lang)
-        |ORDER BY COALESCE(lang, '__all__')""".stripMargin,
-
-    "q211_hnsw_nndescent" ->
-      s"""WITH ${hnswWalkCtes("q211")},
-         |brute AS (SELECT id FROM sc ORDER BY cos DESC, id LIMIT 10)
-         |SELECT id AS vec_id, cos,
-         |  CAST(CASE WHEN id IN (SELECT id FROM brute) THEN 1 ELSE 0 END
-         |    AS BIGINT) AS in_brute
-         |FROM (SELECT DISTINCT id, cos FROM v3)
-         |ORDER BY cos DESC, id LIMIT 10""".stripMargin,
-
-    "q212_bpe_batched" ->
-      s"""WITH RECURSIVE wt AS (SELECT w, count(*) AS cnt FROM (
-         |    SELECT unnest(regexp_extract_all(text, '\\S+')) AS w
-         |    FROM documents WHERE doc_id < 40) GROUP BY 1),
-         |s0 AS MATERIALIZED (SELECT w, cnt, array_to_string(list_transform(
-         |    range(len(w)), i -> substr(w, CAST(i + 1 AS INT), 1)), ' ') AS s
-         |  FROM wt),
-         |${bpeBatchedRoundCtes(1, 4, 2)},
-         |${bpeBatchedRoundCtes(2, 4, 2)},
-         |${bpeBatchedRoundCtes(3, 4, 2)},
-         |${bpeBatchedRoundCtes(4, 4, 2)},
-         |allm AS (SELECT 1 AS r, rn, a, b FROM m1
-         |  UNION ALL SELECT 2, rn, a, b FROM m2
-         |  UNION ALL SELECT 3, rn, a, b FROM m3
-         |  UNION ALL SELECT 4, rn, a, b FROM m4)
-         |SELECT CAST(row_number() OVER (ORDER BY r, rn) AS BIGINT)
-         |    AS merge_rank,
-         |  a AS lhs, b AS rhs
-         |FROM allm ORDER BY merge_rank""".stripMargin,
-
-    "q213_langid_trained" -> langIdTrainedOracle,
-
-    // counts are additive → incremental == full training, so the
-    // incremental query must match the FULL-training replay verbatim
-    "q218_langid_incremental" -> langIdTrainedOracle,
-
-    "q219_perceptron" ->
-      s"""WITH f AS (SELECT
-         |    CASE WHEN n_chars >= 250 THEN 1 ELSE -1 END AS y,
-         |    len(regexp_extract_all(text, '\\S+')) AS fw,
-         |    length(text) AS fc,
-         |    len(regexp_extract_all(text, '!')) AS fe,
-         |    len(regexp_extract_all(text, '[0-9]')) AS fd
-         |  FROM documents),
-         |w0 AS (SELECT 0 AS ww, 0 AS wc, 0 AS we, 0 AS wd, 0 AS wb),
-         |${perceptronIterCtes(3)}
-         |SELECT * FROM (
-         |  SELECT CAST(1 AS BIGINT) AS iter, CAST(u1.n AS BIGINT) AS n_wrong,
-         |    CAST(w1.ww AS BIGINT) AS w_words, CAST(w1.wc AS BIGINT) AS w_chars,
-         |    CAST(w1.we AS BIGINT) AS w_exclaim, CAST(w1.wd AS BIGINT) AS w_digits,
-         |    CAST(w1.wb AS BIGINT) AS w_bias FROM u1, w1
-         |  UNION ALL
-         |  SELECT 2, CAST(u2.n AS BIGINT), CAST(w2.ww AS BIGINT),
-         |    CAST(w2.wc AS BIGINT), CAST(w2.we AS BIGINT),
-         |    CAST(w2.wd AS BIGINT), CAST(w2.wb AS BIGINT) FROM u2, w2
-         |  UNION ALL
-         |  SELECT 3, CAST(u3.n AS BIGINT), CAST(w3.ww AS BIGINT),
-         |    CAST(w3.wc AS BIGINT), CAST(w3.we AS BIGINT),
-         |    CAST(w3.wd AS BIGINT), CAST(w3.wb AS BIGINT) FROM u3, w3)
-         |ORDER BY iter""".stripMargin,
-
-    "q220_multi_term_scan" ->
-      """WITH tw AS (SELECT w, count(*) AS c FROM (
-        |    SELECT unnest(string_split(lower(trim(text)), ' ')) AS w
-        |    FROM documents)
-        |  WHERE w <> '' GROUP BY w ORDER BY c DESC, w LIMIT 5),
-        |t1 AS (SELECT w FROM tw ORDER BY c DESC, w LIMIT 1),
-        |terms AS (SELECT DISTINCT term FROM (
-        |  SELECT w AS term FROM tw
-        |  UNION ALL SELECT substr(w, 1, 2) FROM t1)),
-        |lt AS (SELECT doc_id, lower(text) AS text FROM documents),
-        |hits AS (SELECT d.doc_id, t.term,
-        |    CAST(count(*) AS BIGINT) AS n_hits
-        |  FROM lt d CROSS JOIN terms t,
-        |    UNNEST(range(length(d.text) - length(t.term) + 1)) r(i)
-        |  WHERE substr(d.text, CAST(i + 1 AS INT), length(t.term)) = t.term
-        |  GROUP BY 1, 2)
-        |SELECT doc_id, term, n_hits FROM hits ORDER BY doc_id, term""".stripMargin,
-
-    "q221_distinct_n" ->
-      """WITH ws AS (SELECT doc_id,
-        |    list_filter(string_split(lower(trim(text)), ' '), w -> w <> '')
-        |      AS ws
-        |  FROM documents),
-        |g1 AS (SELECT doc_id, unnest(ws) AS g FROM ws),
-        |g2 AS (SELECT doc_id, unnest([ws[i+1] || ' ' || ws[i+2]
-        |      for i in range(len(ws) - 1)]) AS g
-        |  FROM ws WHERE len(ws) >= 2),
-        |a1 AS (SELECT doc_id, CAST(1 AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(count(DISTINCT g) AS BIGINT) AS n_unique
-        |  FROM g1 GROUP BY 1),
-        |a2 AS (SELECT doc_id, CAST(2 AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(count(DISTINCT g) AS BIGINT) AS n_unique
-        |  FROM g2 GROUP BY 1)
-        |SELECT doc_id, n, n_grams, n_unique,
-        |  CAST(n_unique * 1000 // n_grams AS BIGINT) AS distinct_pm
-        |FROM (SELECT * FROM a1 UNION ALL SELECT * FROM a2)
-        |ORDER BY doc_id, n""".stripMargin,
-
-    "q222_ppl_buckets" ->
-      s"""WITH $backoffLmDocCtes,
-        |ds AS (SELECT doc_id, count(*) AS n_tri,
-        |    CAST(SUM(CAST(round(log10(p) * 1e6) AS BIGINT)) AS BIGINT)
-        |      AS sum_lp6
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, CAST(n_tri AS BIGINT) AS n_tri, sum_lp6,
-        |  round(sum_lp6 / n_tri, 6) AS mean_lp6,
-        |  CAST(ntile(3) OVER (ORDER BY round(sum_lp6 / n_tri, 6) DESC,
-        |    doc_id) AS BIGINT) AS bucket
-        |FROM ds ORDER BY doc_id""".stripMargin,
-
-    "q223_containment_join" ->
-      """WITH planted AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 20000,
-        |    array_to_string(string_split(text, ' ')[1:12], ' ')
-        |  FROM documents WHERE doc_id % 11 = 5),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM planted),
-        |shs AS (SELECT DISTINCT doc_id,
-        |    array_to_string(w[i+1:i+5], ' ') AS sh
-        |  FROM (SELECT doc_id, w, unnest(range(len(w) - 4)) AS i
-        |        FROM toks WHERE len(w) >= 5)),
-        |cnts AS (SELECT sh, count(*) AS cnt FROM shs GROUP BY 1),
-        |pref AS (SELECT doc_id, sh FROM (
-        |    SELECT s.doc_id, s.sh,
-        |      row_number() OVER (PARTITION BY s.doc_id
-        |                         ORDER BY c.cnt, s.sh) AS rk,
-        |      count(*) OVER (PARTITION BY s.doc_id) AS n
-        |    FROM shs s JOIN cnts c ON c.sh = s.sh)
-        |  WHERE rk <= n - (n * 4 + 4) // 5 + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_small, b.doc_id AS id_big
-        |  FROM pref a JOIN shs b ON a.sh = b.sh AND a.doc_id <> b.doc_id),
-        |inter AS (SELECT c.id_small, c.id_big, count(*) AS inter
-        |  FROM cand c JOIN shs x ON x.doc_id = c.id_small
-        |              JOIN shs y ON y.doc_id = c.id_big AND y.sh = x.sh
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM shs GROUP BY 1)
-        |SELECT i.id_small, i.id_big, CAST(i.inter AS BIGINT) AS inter,
-        |  CAST(s.n AS BIGINT) AS n_small,
-        |  CAST(i.inter * 1000 // s.n AS BIGINT) AS containment_pm
-        |FROM inter i JOIN sizes s ON s.doc_id = i.id_small
-        |WHERE i.inter * 5 >= s.n * 4
-        |ORDER BY id_small, id_big""".stripMargin,
-
-    "q224_scd2_dim" ->
-      s"""WITH $scd2DimCtes
-        |SELECT custkey, status,
-        |  strftime(f, '%Y-%m-%d %H:%M:%S') AS eff_from,
-        |  strftime(t, '%Y-%m-%d %H:%M:%S') AS eff_to,
-        |  version, t IS NULL AS is_current
-        |FROM sv ORDER BY custkey, version""".stripMargin,
-
-    "q225_pit_join" ->
-      s"""WITH $scd2DimCtes,
-        |fact AS (SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT)
-        |      AS l_linenumber,
-        |    o.o_custkey AS custkey, l.l_shipdate AS ship
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
-        |SELECT f.l_orderkey, f.l_linenumber, f.custkey,
-        |  strftime(f.ship, '%Y-%m-%d %H:%M:%S') AS ship_ts,
-        |  s.status AS status_at_ship
-        |FROM fact f LEFT JOIN sv s ON s.custkey = f.custkey
-        |  AND f.ship >= s.f AND (s.t IS NULL OR f.ship < s.t)
-        |ORDER BY l_orderkey, l_linenumber, ship_ts""".stripMargin,
-
-    "q226_snapshot_diff" ->
-      """WITH ids AS (SELECT doc_id AS id FROM documents
-        |  WHERE doc_id < 150),
-        |d12 AS (SELECT CAST(1 AS BIGINT) AS from_v, CAST(2 AS BIGINT)
-        |      AS to_v, id,
-        |    CASE WHEN id >= 100 THEN 'added' ELSE 'changed' END AS change
-        |  FROM ids WHERE id >= 50),
-        |d23 AS (SELECT CAST(2 AS BIGINT), CAST(3 AS BIGINT), id,
-        |    'removed'
-        |  FROM ids WHERE id % 10 = 0)
-        |SELECT * FROM d12 UNION ALL SELECT * FROM d23
-        |ORDER BY from_v, id""".stripMargin,
-
-    "q227_kcore" -> {
-      // AS MATERIALIZED: DuckDB inlines plain CTEs, so a 9-round chain
-      // referencing its predecessor 3× would expand 3^9 scans
-      val rounds = (1 to 9).map { r =>
-        s"""d$r AS MATERIALIZED (SELECT src, count(*) AS c
-           |  FROM e${r - 1} GROUP BY 1),
-           |k$r AS MATERIALIZED (SELECT src FROM d$r WHERE c >= 2),
-           |e$r AS MATERIALIZED (SELECT e.src, e.dst FROM e${r - 1} e
-           |  JOIN k$r a ON e.src = a.src JOIN k$r b ON e.dst = b.src)"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""WITH n AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |raw AS (
-        |  SELECT n AS src, (n + 1) % 10 AS dst FROM n WHERE n < 10
-        |  UNION ALL SELECT n, (n + 2) % 10 FROM n WHERE n < 10
-        |  UNION ALL SELECT n, n + 1 FROM n WHERE n BETWEEN 10 AND 15
-        |  UNION ALL SELECT n, 0 FROM n WHERE n = 10
-        |  UNION ALL SELECT n, 30 + (n + 1 - 30) % 3 FROM n
-        |    WHERE n BETWEEN 30 AND 32),
-        |e0 AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM raw
-        |    UNION ALL SELECT dst, src FROM raw)
-        |  WHERE src <> dst),
-        |$rounds
-        |SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
-        |FROM e9 GROUP BY 1 ORDER BY id""".stripMargin
-    },
-
-    "q228_purged_folds" ->
-      """WITH f AS (SELECT o_orderkey, o_orderdate AS ts,
-        |    CAST(ntile(3) OVER (ORDER BY o_orderdate, o_orderkey)
-        |      AS BIGINT) AS fold
-        |  FROM orders),
-        |b AS (SELECT fold AS test_fold, min(ts) AS f_min,
-        |    max(ts) AS f_max
-        |  FROM f GROUP BY 1)
-        |SELECT b.test_fold, f.o_orderkey,
-        |  CASE WHEN f.fold = b.test_fold THEN 'test'
-        |       WHEN f.ts >= b.f_min - INTERVAL 30 DAY
-        |        AND f.ts <= b.f_max + INTERVAL 30 DAY THEN 'purged'
-        |       ELSE 'train' END AS role
-        |FROM f CROSS JOIN b
-        |ORDER BY test_fold, o_orderkey""".stripMargin,
-
-    "q229_label_conflict" ->
-      """WITH p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    unnest(a.embedding)::DOUBLE AS x,
-        |    unnest(b.embedding)::DOUBLE AS y
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
-        |c AS (SELECT id1, id2 FROM (
-        |    SELECT id1, id2,
-        |      round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |    FROM p GROUP BY 1, 2)
-        |  WHERE cos >= 0.3),
-        |sym AS (SELECT id1, id2 FROM c
-        |  UNION ALL SELECT id2, id1 FROM c),
-        |g AS (SELECT s.id1, e1.label AS lbl, e2.label AS n_lbl
-        |  FROM sym s JOIN embeddings e1 ON e1.vec_id = s.id1
-        |             JOIN embeddings e2 ON e2.vec_id = s.id2),
-        |pl AS (SELECT id1, lbl, n_lbl, count(*) AS cnt
-        |  FROM g GROUP BY 1, 2, 3),
-        |mj AS (SELECT id1, n_lbl AS suggested FROM (
-        |    SELECT id1, n_lbl, row_number() OVER (PARTITION BY id1
-        |        ORDER BY cnt DESC, n_lbl) AS rn
-        |    FROM pl)
-        |  WHERE rn = 1),
-        |agg AS (SELECT id1, lbl, CAST(count(*) AS BIGINT) AS n_nbrs,
-        |    CAST(sum(CASE WHEN n_lbl <> lbl THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_conflict
-        |  FROM g GROUP BY 1, 2)
-        |SELECT a.id1 AS vec_id, CAST(a.lbl AS BIGINT) AS label,
-        |  a.n_nbrs, a.n_conflict,
-        |  CAST(m.suggested AS BIGINT) AS suggested_label
-        |FROM agg a JOIN mj m ON m.id1 = a.id1
-        |WHERE m.suggested <> a.lbl AND a.n_conflict * 2 > a.n_nbrs
-        |ORDER BY vec_id""".stripMargin,
-
-    "q230_t_closeness" ->
-      """WITH d AS (SELECT doc_id, lang, source,
-        |    CAST(n_chars // 500 AS BIGINT) AS size_bin FROM documents),
-        |gv AS (SELECT lang, count(*) AS c_v FROM d GROUP BY 1),
-        |n AS (SELECT count(*) AS N FROM d),
-        |g AS (SELECT source, size_bin, lang, count(*) AS c_gv
-        |  FROM d GROUP BY 1, 2, 3),
-        |ng AS (SELECT source, size_bin, sum(c_gv) AS n_g
-        |  FROM g GROUP BY 1, 2),
-        |j AS (SELECT g.source, g.size_bin, g.c_gv, gv.c_v, ng.n_g, n.N
-        |  FROM g JOIN gv USING (lang)
-        |         JOIN ng USING (source, size_bin) CROSS JOIN n),
-        |pg AS (SELECT source, size_bin, any_value(n_g) AS n_g,
-        |    any_value(N) AS N,
-        |    sum(abs(c_gv * N - c_v * n_g)) AS abs_in, sum(c_v) AS cov
-        |  FROM j GROUP BY 1, 2),
-        |risky AS (SELECT source, size_bin, CAST(n_g AS BIGINT) AS group_n,
-        |    CAST((abs_in + n_g * (N - cov)) * 1000 // (2 * n_g * N)
-        |      AS BIGINT) AS tv_pm
-        |  FROM pg
-        |  WHERE (abs_in + n_g * (N - cov)) * 4 > 2 * n_g * N)
-        |SELECT d.doc_id, d.lang, d.source, d.size_bin, r.group_n, r.tv_pm
-        |FROM d JOIN risky r ON d.source IS NOT DISTINCT FROM r.source
-        |  AND d.size_bin IS NOT DISTINCT FROM r.size_bin
-        |ORDER BY doc_id""".stripMargin,
-
-    "q231_join_fanout" ->
-      """WITH lc AS (SELECT l_suppkey AS key, count(*) AS n_left
-        |  FROM lineitem GROUP BY 1),
-        |rc AS (SELECT s_suppkey AS key, count(*) AS n_right
-        |  FROM supplier GROUP BY 1),
-        |m AS (SELECT COALESCE(lc.key, rc.key) AS key,
-        |    CAST(COALESCE(n_left, 0) AS BIGINT) AS n_left,
-        |    CAST(COALESCE(n_right, 0) AS BIGINT) AS n_right
-        |  FROM lc FULL OUTER JOIN rc ON lc.key = rc.key),
-        |c AS (SELECT key, n_left, n_right,
-        |    CAST(n_left * n_right AS BIGINT) AS contrib FROM m),
-        |tot AS (SELECT CAST(sum(contrib) AS BIGINT) AS est_total FROM c)
-        |SELECT c.key, c.n_left, c.n_right, c.contrib, t.est_total,
-        |  CAST(c.contrib * 1000 // greatest(t.est_total, 1) AS BIGINT)
-        |    AS share_pm
-        |FROM c CROSS JOIN tot t
-        |ORDER BY contrib DESC, key LIMIT 20""".stripMargin,
-
-    "q232_lateness_audit" ->
-      """WITH ev AS (SELECT event_id, user_id,
-        |    CASE WHEN event_id % 7 = 3 THEN ts - INTERVAL 1 HOUR
-        |         ELSE ts END AS ts
-        |  FROM events),
-        |w AS (SELECT user_id, event_id, ts,
-        |    max(ts) OVER (PARTITION BY user_id ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS wm
-        |  FROM ev)
-        |SELECT user_id, event_id,
-        |  CAST(epoch_us(wm) - epoch_us(ts) AS BIGINT) AS late_us,
-        |  epoch_us(wm) - epoch_us(ts) > 1800 * CAST(1000000 AS BIGINT)
-        |    AS dropped_1800s,
-        |  epoch_us(wm) - epoch_us(ts) > 7200 * CAST(1000000 AS BIGINT)
-        |    AS dropped_7200s
-        |FROM w WHERE ts < wm
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q233_domain_mixture" -> {
-      // integer pow tables for bucket ∈ [-4, 4]: k ≥ 0 multiplies by
-      // 11^k / 10^k, k < 0 by 10^|k| / 11^|k| (all floored, positive)
-      def powCase(f: Int => Long) = (-4 to 4)
-        .map(k => s"WHEN $k THEN ${f(k)}").mkString(" ")
-      val num = powCase(k => if (k >= 0) math.pow(11, k).toLong
-        else math.pow(10, -k).toLong)
-      val den = powCase(k => if (k >= 0) math.pow(10, k).toLong
-        else math.pow(11, -k).toLong)
-      val roundCtes = (1 to 3).map { r =>
-        s"""s$r AS MATERIALIZED (SELECT domain, n_rows, mean_score,
-           |    excess, bucket,
-           |    w * (CASE bucket $num END) // (CASE bucket $den END) AS sw
-           |  FROM w${r - 1}),
-           |w$r AS MATERIALIZED (SELECT domain, n_rows, mean_score,
-           |    excess, bucket,
-           |    sw * 1000000 // (SELECT sum(sw) FROM s$r) AS w
-           |  FROM s$r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH a AS (SELECT CAST(source AS VARCHAR) AS domain,
-        |    CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(n_chars) AS BIGINT) AS s
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(s) // sum(n_rows) AS BIGINT) AS ref FROM a),
-        |e AS (SELECT domain, n_rows,
-        |    CAST(s // n_rows AS BIGINT) AS mean_score,
-        |    CAST(s // n_rows - t.ref AS BIGINT) AS excess
-        |  FROM a CROSS JOIN t),
-        |w0 AS (SELECT domain, n_rows, mean_score, excess,
-        |    CAST(greatest(-4, least(4, excess // 20)) AS BIGINT)
-        |      AS bucket,
-        |    CAST(1000000 AS HUGEINT) AS w
-        |  FROM e),
-        |$roundCtes
-        |SELECT domain, n_rows, mean_score, excess, bucket,
-        |  CAST(w AS BIGINT) AS w_ppm
-        |FROM w3 ORDER BY domain""".stripMargin
-    },
-
-    "q234_cohen_kappa" ->
-      """WITH ann AS (SELECT CAST(label AS BIGINT) AS a,
-        |    CAST(CASE WHEN vec_id % 5 = 0 THEN (label + 1) % 10
-        |         ELSE label END AS BIGINT) AS b
-        |  FROM embeddings),
-        |conf AS (SELECT CAST(a AS VARCHAR) AS label_a,
-        |    CAST(b AS VARCHAR) AS label_b,
-        |    CAST(count(*) AS BIGINT) AS n_pair
-        |  FROM ann GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(n_pair) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN label_a = label_b THEN n_pair ELSE 0 END)
-        |      AS BIGINT) AS n_agree
-        |  FROM conf),
-        |ma AS (SELECT label_a AS c, sum(n_pair) AS na FROM conf GROUP BY 1),
-        |mb AS (SELECT label_b AS c, sum(n_pair) AS nb FROM conf GROUP BY 1),
-        |sums AS (SELECT CAST(sum(COALESCE(na, 0) * COALESCE(nb, 0))
-        |      AS BIGINT) AS s
-        |  FROM ma FULL OUTER JOIN mb USING (c))
-        |SELECT conf.label_a, conf.label_b, conf.n_pair, t.n, t.n_agree,
-        |  CAST(CASE WHEN t.n * t.n - s.s = 0 THEN 1000
-        |       ELSE 1000 * (t.n * t.n_agree - s.s) // (t.n * t.n - s.s)
-        |       END AS BIGINT) AS kappa_pm
-        |FROM conf CROSS JOIN tot t CROSS JOIN sums s
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    "q235_t_closeness_ordered" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    CAST(n_chars // 100 AS BIGINT) AS band FROM documents),
-        |gv AS (SELECT band AS v, count(*) AS c FROM d GROUP BY 1),
-        |cum AS (SELECT v, CAST(sum(c) OVER (ORDER BY v) AS BIGINT)
-        |    AS cum_v FROM gv),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS N,
-        |    CAST(count(DISTINCT band) AS BIGINT) AS m FROM d),
-        |g AS (SELECT source, band AS v, count(*) AS c_gv
-        |  FROM d GROUP BY 1, 2),
-        |grid AS (SELECT s.source, c.v, c.cum_v,
-        |    CAST(COALESCE(g.c_gv, 0) AS BIGINT) AS c_gv
-        |  FROM (SELECT DISTINCT source FROM d) s CROSS JOIN cum c
-        |  LEFT JOIN g ON g.source IS NOT DISTINCT FROM s.source
-        |    AND g.v = c.v),
-        |cg AS (SELECT source, v, cum_v,
-        |    sum(c_gv) OVER (PARTITION BY source ORDER BY v) AS cum_g,
-        |    sum(c_gv) OVER (PARTITION BY source) AS n_g FROM grid),
-        |pg AS (SELECT source, CAST(any_value(n_g) AS BIGINT) AS group_n,
-        |    sum(abs(cum_g * n.N - cum_v * n_g)) AS s,
-        |    any_value(n.N) AS N, any_value(n.m) AS m
-        |  FROM cg CROSS JOIN n GROUP BY source),
-        |risky AS (SELECT source, group_n,
-        |    CAST(s * 1000 // ((m - 1) * group_n * N) AS BIGINT) AS emd_pm
-        |  FROM pg WHERE s * 100 > 7 * (m - 1) * group_n * N)
-        |SELECT d.doc_id, d.source, d.band, r.group_n, r.emd_pm
-        |FROM d JOIN risky r ON d.source IS NOT DISTINCT FROM r.source
-        |ORDER BY doc_id""".stripMargin,
-
-    "q236_chi_square" ->
-      """WITH ev AS (SELECT event_type AS a,
-        |    CAST(user_id % 2 AS VARCHAR) AS b FROM events),
-        |conf AS (SELECT a, b, CAST(count(*) AS BIGINT) AS o
-        |  FROM ev GROUP BY 1, 2),
-        |rt AS (SELECT a, CAST(sum(o) AS BIGINT) AS row_n
-        |  FROM conf GROUP BY 1),
-        |ct AS (SELECT b, CAST(sum(o) AS BIGINT) AS col_n
-        |  FROM conf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM conf),
-        |grid AS (SELECT rt.a, ct.b,
-        |    CAST(COALESCE(conf.o, 0) AS BIGINT) AS observed,
-        |    rt.row_n, ct.col_n, tot.n
-        |  FROM rt CROSS JOIN ct CROSS JOIN tot
-        |  LEFT JOIN conf ON conf.a = rt.a AND conf.b = ct.b),
-        |terms AS (SELECT a, b, observed, row_n, col_n, n,
-        |    (CAST(observed AS HUGEINT) * n - CAST(row_n AS HUGEINT)
-        |      * col_n) AS diff
-        |  FROM grid),
-        |scored AS (SELECT a, b, observed, row_n, col_n, n,
-        |    diff * diff * 1000000 //
-        |      (CAST(n AS HUGEINT) * row_n * col_n) AS term
-        |  FROM terms),
-        |agg AS (SELECT CAST(sum(term) AS BIGINT) AS chi2_u6 FROM scored),
-        |dims AS (SELECT CAST((count(DISTINCT a) - 1)
-        |    * (count(DISTINCT b) - 1) AS BIGINT) AS dof FROM conf)
-        |SELECT s.a, s.b, s.observed, s.row_n, s.col_n, s.n,
-        |  g.chi2_u6, d.dof
-        |FROM scored s CROSS JOIN agg g CROSS JOIN dims d
-        |ORDER BY a, b""".stripMargin,
-
-    "q237_subject_export" ->
-      """WITH subj AS (SELECT c_custkey AS sid FROM customer
-        |  WHERE c_custkey % 100 = 7),
-        |cust AS (SELECT c_custkey AS sid,
-        |    c_custkey || '|' || c_name || '|' || c_mktsegment AS repr
-        |  FROM customer),
-        |ord AS (SELECT o_custkey AS sid,
-        |    o_orderkey || '|' || o_orderstatus || '|' ||
-        |      CAST(round(o_totalprice * 100) AS BIGINT) AS repr
-        |  FROM orders),
-        |li AS (SELECT o.o_custkey AS sid,
-        |    l.l_orderkey || '|' || l.l_linenumber || '|' ||
-        |      CAST(round(l.l_extendedprice * 100) AS BIGINT) AS repr
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |parts AS (
-        |  SELECT 'customer' AS table_name, sid, repr FROM cust
-        |  UNION ALL SELECT 'orders', sid, repr FROM ord
-        |  UNION ALL SELECT 'lineitem', sid, repr FROM li)
-        |SELECT p.sid AS subject_id, p.table_name,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  md5(string_agg(p.repr, chr(1) ORDER BY p.repr)) AS digest
-        |FROM parts p JOIN subj s ON s.sid = p.sid
-        |GROUP BY 1, 2
-        |ORDER BY subject_id, table_name""".stripMargin,
-
-    "q238_bucket_digest" ->
-      """WITH a AS (SELECT doc_id, text FROM documents),
-        |b AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 97 = 13 THEN text || ' v2' ELSE text END
-        |      AS text
-        |  FROM documents WHERE doc_id % 101 <> 5),
-        |da AS (SELECT
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) % 32 AS bucket,
-        |    CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) AS sig
-        |  FROM a),
-        |db AS (SELECT
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) % 32 AS bucket,
-        |    CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) AS sig
-        |  FROM b),
-        |ga AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_a,
-        |    CAST(sum(sig) AS BIGINT) AS sum_a FROM da GROUP BY 1),
-        |gb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_b,
-        |    CAST(sum(sig) AS BIGINT) AS sum_b FROM db GROUP BY 1)
-        |SELECT COALESCE(ga.bucket, gb.bucket) AS bucket,
-        |  COALESCE(n_a, 0) AS n_a, COALESCE(sum_a, 0) AS sum_a,
-        |  COALESCE(n_b, 0) AS n_b, COALESCE(sum_b, 0) AS sum_b,
-        |  COALESCE(n_a, 0) = COALESCE(n_b, 0)
-        |    AND COALESCE(sum_a, 0) = COALESCE(sum_b, 0) AS bucket_match
-        |FROM ga FULL OUTER JOIN gb ON ga.bucket = gb.bucket
-        |ORDER BY bucket""".stripMargin,
-
-    "q239_ctfidf_topics" ->
-      """WITH toks AS (SELECT CAST(source AS VARCHAR) AS cls,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tk AS (SELECT cls, term FROM toks WHERE term <> ''),
-        |tf AS (SELECT cls, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM tk GROUP BY 1, 2),
-        |fw AS (SELECT term, CAST(count(*) AS BIGINT) AS f_w
-        |  FROM tk GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) // count(DISTINCT cls) AS BIGINT)
-        |    AS a FROM tk),
-        |scored AS (SELECT tf.cls, tf.term, tf.tf, fw.f_w,
-        |    CAST(tf.tf * CAST(round(log10(1 + CAST(t.a AS DOUBLE)
-        |      / fw.f_w) * 1000000, 0) AS BIGINT) AS BIGINT) AS score_u6
-        |  FROM tf JOIN fw USING (term) CROSS JOIN tot t),
-        |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY cls
-        |    ORDER BY score_u6 DESC, term) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT cls, term, tf, f_w, score_u6, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY cls, rank""".stripMargin,
-
-    "q240_item_cooccurrence" ->
-      """WITH b AS (SELECT DISTINCT o.o_custkey AS bk,
-        |    l.l_partkey AS item
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |cnt AS (SELECT item, CAST(count(*) AS BIGINT) AS c
-        |  FROM b GROUP BY 1),
-        |p AS (SELECT x.item AS item, y.item AS other,
-        |    CAST(count(*) AS BIGINT) AS cooc
-        |  FROM b x JOIN b y ON x.bk = y.bk AND x.item < y.item
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT item, other, cooc FROM p
-        |  UNION ALL SELECT other, item, cooc FROM p),
-        |scored AS (SELECT s.item, s.other, s.cooc,
-        |    ci.c AS c_item, co.c AS c_other,
-        |    CAST(s.cooc * s.cooc * 1000000 // (ci.c * co.c) AS BIGINT)
-        |      AS sim2_u6
-        |  FROM sym s JOIN cnt ci ON ci.item = s.item
-        |             JOIN cnt co ON co.item = s.other),
-        |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY item
-        |    ORDER BY sim2_u6 DESC, other) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT item, other, cooc, c_item, c_other, sim2_u6, rank
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY item, rank""".stripMargin,
-
-    "q241_association_rules" ->
-      """WITH b AS (SELECT DISTINCT o.o_custkey AS bk,
-        |    l.l_partkey AS item
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |nb AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS n FROM b),
-        |cnt AS (SELECT item, CAST(count(*) AS BIGINT) AS c
-        |  FROM b GROUP BY 1),
-        |p AS (SELECT x.item AS item, y.item AS other,
-        |    CAST(count(*) AS BIGINT) AS cooc
-        |  FROM b x JOIN b y ON x.bk = y.bk AND x.item < y.item
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
-        |d AS (SELECT item, other, cooc FROM p
-        |  UNION ALL SELECT other, item, cooc FROM p)
-        |SELECT d.item AS antecedent, d.other AS consequent, d.cooc,
-        |  ca.c AS c_ante, cc.c AS c_cons, nb.n AS n_baskets,
-        |  CAST(d.cooc * 1000 // ca.c AS BIGINT) AS conf_pm,
-        |  CAST(d.cooc * nb.n * 1000000 // (ca.c * cc.c) AS BIGINT)
-        |    AS lift_u6
-        |FROM d JOIN cnt ca ON ca.item = d.item
-        |       JOIN cnt cc ON cc.item = d.other
-        |       CROSS JOIN nb
-        |ORDER BY antecedent, consequent""".stripMargin,
-
-    "q242_calibration" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(least(greatest((n_chars - 100) * 2, 0), 1000)
-        |      AS BIGINT) AS score_pm
-        |  FROM documents),
-        |l AS (SELECT doc_id, score_pm,
-        |    CASE WHEN (doc_id * 7919) % 1000 < score_pm THEN 1
-        |         ELSE 0 END AS y
-        |  FROM d),
-        |b AS (SELECT least(score_pm // 100, 9) AS bucket, score_pm, y
-        |  FROM l),
-        |agg AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(score_pm) AS BIGINT) AS sum_score_pm,
-        |    CAST(sum(y) AS BIGINT) AS n_pos
-        |  FROM b GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |    CAST(sum(abs(sum_score_pm - n_pos * 1000)) AS BIGINT) AS s
-        |  FROM agg)
-        |SELECT a.bucket, a.n, a.sum_score_pm, a.n_pos,
-        |  CAST(a.sum_score_pm // a.n AS BIGINT) AS mean_score_pm,
-        |  CAST(a.n_pos * 1000 // a.n AS BIGINT) AS pos_rate_pm,
-        |  CAST(t.s * 1000 // t.nn AS BIGINT) AS ece_u6
-        |FROM agg a CROSS JOIN tot t
-        |ORDER BY bucket""".stripMargin,
-
-    "q243_disparate_impact" ->
-      """WITH d AS (SELECT lang AS grp,
-        |    n_chars >= CASE WHEN lang = 'de' THEN 350 ELSE 280 END
-        |      AS sel
-        |  FROM documents),
-        |a AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_sel
-        |  FROM d GROUP BY 1),
-        |ref AS (SELECT grp, n, n_sel FROM a g
-        |  WHERE NOT EXISTS (SELECT 1 FROM a h
-        |    WHERE h.n_sel * g.n > g.n_sel * h.n)
-        |  ORDER BY grp LIMIT 1)
-        |SELECT a.grp, a.n, a.n_sel,
-        |  CAST(a.n_sel * 1000 // a.n AS BIGINT) AS rate_pm,
-        |  r.grp AS ref_grp,
-        |  CAST(CASE WHEN r.n_sel = 0 THEN 1000
-        |       ELSE a.n_sel * r.n * 1000 // (a.n * r.n_sel)
-        |       END AS BIGINT) AS di_pm,
-        |  CASE WHEN r.n_sel = 0 THEN 1000
-        |       ELSE a.n_sel * r.n * 1000 // (a.n * r.n_sel) END < 800
-        |    AS flagged
-        |FROM a CROSS JOIN ref r
-        |ORDER BY a.grp""".stripMargin,
-
-    "q244_concentration" ->
-      """WITH a AS (SELECT CAST(source AS VARCHAR) AS grp,
-        |    CAST(sum(n_chars) AS BIGINT) AS w
-        |  FROM documents GROUP BY 1),
-        |o AS (SELECT grp, w,
-        |    CAST(row_number() OVER (ORDER BY w, grp) AS BIGINT) AS i
-        |  FROM a),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(w) AS BIGINT) AS tw,
-        |    CAST(sum(i * w) AS BIGINT) AS iw
-        |  FROM o)
-        |SELECT o.grp, o.w,
-        |  CAST(o.w * 1000 // t.tw AS BIGINT) AS share_pm,
-        |  CAST(sum(o.w) OVER (ORDER BY o.i) * 1000 // t.tw AS BIGINT)
-        |    AS cum_share_pm,
-        |  o.i AS lorenz_rank,
-        |  CAST((2 * t.iw - (t.n + 1) * t.tw) * 1000 // (t.n * t.tw)
-        |    AS BIGINT) AS gini_pm
-        |FROM o CROSS JOIN t
-        |ORDER BY lorenz_rank""".stripMargin,
-
-    "q245_benford" ->
-      """WITH v AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT)
-        |    AS amount FROM orders),
-        |c AS (SELECT CAST(substr(CAST(amount AS VARCHAR), 1, 1)
-        |      AS BIGINT) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM v WHERE amount > 0 GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
-        |g AS (SELECT d.digit, CAST(COALESCE(c.n, 0) AS BIGINT) AS n,
-        |    CAST(COALESCE(c.n, 0) * 1000000 // t.tot AS BIGINT)
-        |      AS share_u6,
-        |    CAST(round(log10(1 + 1.0 / d.digit) * 1000000) AS BIGINT)
-        |      AS expected_u6
-        |  FROM (SELECT unnest(range(1, 10)) AS digit) d
-        |  CROSS JOIN t LEFT JOIN c ON c.digit = d.digit),
-        |dev AS (SELECT *, abs(share_u6 - expected_u6) AS dev_u6 FROM g),
-        |m AS (SELECT CAST(max(dev_u6) AS BIGINT) AS mx FROM dev)
-        |SELECT digit, n, share_u6, expected_u6, dev_u6,
-        |  m.mx AS max_dev_u6
-        |FROM dev CROSS JOIN m ORDER BY digit""".stripMargin,
-
-    "q246_postings_varint" ->
-      """WITH toks AS (SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)),
-        |      '\s+')) AS term
-        |    FROM documents)
-        |  WHERE term <> ''),
-        |g AS (SELECT term,
-        |    doc_id - COALESCE(lag(doc_id) OVER (PARTITION BY term
-        |      ORDER BY doc_id), 0) AS gap
-        |  FROM toks),
-        |v AS (SELECT term, CASE WHEN gap < 128 THEN 1
-        |    WHEN gap < 16384 THEN 2 WHEN gap < 2097152 THEN 3
-        |    WHEN gap < 268435456 THEN 4 ELSE 5 END AS vb
-        |  FROM g)
-        |SELECT term, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(vb) AS BIGINT) AS varint_bytes,
-        |  CAST(count(*) * 8 AS BIGINT) AS raw_bytes,
-        |  CAST(sum(vb) * 1000 // (count(*) * 8) AS BIGINT) AS ratio_pm
-        |FROM v GROUP BY 1 ORDER BY term""".stripMargin,
-
-    "q247_ks_drift" ->
-      """WITH ca AS (SELECT n_chars AS value, count(*) AS c_a
-        |  FROM documents WHERE lang = 'en' GROUP BY 1),
-        |cb AS (SELECT n_chars AS value, count(*) AS c_b
-        |  FROM documents WHERE lang <> 'en' GROUP BY 1),
-        |na AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |  WHERE lang = 'en'),
-        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |  WHERE lang <> 'en'),
-        |m AS (SELECT COALESCE(ca.value, cb.value) AS value,
-        |    CAST(COALESCE(c_a, 0) AS BIGINT) AS c_a,
-        |    CAST(COALESCE(c_b, 0) AS BIGINT) AS c_b
-        |  FROM ca FULL OUTER JOIN cb ON ca.value = cb.value),
-        |cum AS (SELECT value,
-        |    CAST(sum(c_a) OVER (ORDER BY value) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY value) AS BIGINT) AS cum_b
-        |  FROM m),
-        |g AS (SELECT cum.*, na.n AS n_a, nb.n AS n_b,
-        |    CAST(abs(cum_a * nb.n - cum_b * na.n) AS BIGINT) AS gap_num
-        |  FROM cum CROSS JOIN na CROSS JOIN nb),
-        |mx AS (SELECT gap_num, value FROM g
-        |  ORDER BY gap_num DESC, value LIMIT 1)
-        |SELECT g.value, g.cum_a, g.cum_b, g.gap_num, g.n_a, g.n_b,
-        |  CAST(mx.gap_num * 1000 // (g.n_a * g.n_b) AS BIGINT) AS ks_pm,
-        |  mx.value AS ks_at_value
-        |FROM g CROSS JOIN mx
-        |ORDER BY g.value""".stripMargin,
-
-    "q248_auc" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(least(greatest((n_chars - 100) * 2, 0), 1000)
-        |      AS BIGINT) AS score
-        |  FROM documents),
-        |l AS (SELECT score,
-        |    CASE WHEN (doc_id * 7919) % 1000 < score THEN 1 ELSE 0 END
-        |      AS y
-        |  FROM d),
-        |p AS (SELECT score, CAST(sum(y) AS BIGINT) AS n_pos_v,
-        |    CAST(sum(1 - y) AS BIGINT) AS n_neg_v
-        |  FROM l GROUP BY 1),
-        |c AS (SELECT *, CAST(COALESCE(sum(n_neg_v) OVER (ORDER BY score
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cum_neg_below
-        |  FROM p),
-        |t AS (SELECT CAST(sum(n_pos_v) AS BIGINT) AS np,
-        |    CAST(sum(n_neg_v) AS BIGINT) AS nn,
-        |    CAST(sum(n_pos_v * (cum_neg_below * 2 + n_neg_v))
-        |      AS BIGINT) AS u2
-        |  FROM c)
-        |SELECT c.score, c.n_pos_v, c.n_neg_v, c.cum_neg_below,
-        |  t.np AS n_pos, t.nn AS n_neg,
-        |  CAST(t.u2 * 1000000 // (2 * t.np * t.nn) AS BIGINT) AS auc_u6
-        |FROM c CROSS JOIN t
-        |ORDER BY c.score""".stripMargin,
-
-    "q249_quality_report" ->
-      """WITH vol AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(n_chars) AS BIGINT) AS ch
-        |  FROM documents GROUP BY 1),
-        |ga AS (SELECT CAST(source AS VARCHAR) AS grp,
-        |    CAST(sum(n_chars) AS BIGINT) AS w FROM documents GROUP BY 1),
-        |go AS (SELECT w, CAST(row_number() OVER (ORDER BY w, grp)
-        |    AS BIGINT) AS i FROM ga),
-        |gt AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(w) AS BIGINT) AS tw,
-        |    CAST(sum(i * w) AS BIGINT) AS iw FROM go),
-        |gini AS (SELECT CAST((2 * iw - (n + 1) * tw) * 1000 // (n * tw)
-        |    AS BIGINT) AS v FROM gt),
-        |bv AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT)
-        |    AS amount FROM orders),
-        |bc AS (SELECT CAST(substr(CAST(amount AS VARCHAR), 1, 1)
-        |      AS BIGINT) AS digit, CAST(count(*) AS BIGINT) AS n
-        |  FROM bv WHERE amount > 0 GROUP BY 1),
-        |bt AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM bc),
-        |bg AS (SELECT d.digit,
-        |    CAST(COALESCE(bc.n, 0) * 1000000 // bt.tot AS BIGINT)
-        |      AS share_u6,
-        |    CAST(round(log10(1 + 1.0 / d.digit) * 1000000) AS BIGINT)
-        |      AS expected_u6
-        |  FROM (SELECT unnest(range(1, 10)) AS digit) d
-        |  CROSS JOIN bt LEFT JOIN bc ON bc.digit = d.digit),
-        |ben AS (SELECT CAST(max(abs(share_u6 - expected_u6)) AS BIGINT)
-        |    AS v FROM bg),
-        |kca AS (SELECT (LEAST(GREATEST(CAST(n_chars AS BIGINT), 0),
-        |      65535) * 4096) // 65536 AS value, count(*) AS c_a
-        |  FROM documents WHERE lang = 'en' GROUP BY 1),
-        |kcb AS (SELECT (LEAST(GREATEST(CAST(n_chars AS BIGINT), 0),
-        |      65535) * 4096) // 65536 AS value, count(*) AS c_b
-        |  FROM documents WHERE lang <> 'en' GROUP BY 1),
-        |kna AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |  WHERE lang = 'en'),
-        |knb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |  WHERE lang <> 'en'),
-        |km AS (SELECT COALESCE(kca.value, kcb.value) AS value,
-        |    CAST(COALESCE(c_a, 0) AS BIGINT) AS c_a,
-        |    CAST(COALESCE(c_b, 0) AS BIGINT) AS c_b
-        |  FROM kca FULL OUTER JOIN kcb ON kca.value = kcb.value),
-        |kcum AS (SELECT value,
-        |    CAST(sum(c_a) OVER (ORDER BY value) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY value) AS BIGINT) AS cum_b
-        |  FROM km),
-        |ks AS (SELECT CAST(max(abs(cum_a * knb.n - cum_b * kna.n))
-        |      * 1000 // (any_value(kna.n) * any_value(knb.n)) AS BIGINT)
-        |      AS v
-        |  FROM kcum CROSS JOIN kna CROSS JOIN knb),
-        |fd AS (SELECT lang AS grp, n_chars >=
-        |    CASE WHEN lang = 'de' THEN 350 ELSE 280 END AS sel
-        |  FROM documents),
-        |fa AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_sel
-        |  FROM fd GROUP BY 1),
-        |fref AS (SELECT grp, n, n_sel FROM fa g
-        |  WHERE NOT EXISTS (SELECT 1 FROM fa h
-        |    WHERE h.n_sel * g.n > g.n_sel * h.n)
-        |  ORDER BY grp LIMIT 1),
-        |fair AS (SELECT CAST(count(*) AS BIGINT) AS v
-        |  FROM fa CROSS JOIN fref r
-        |  WHERE CASE WHEN r.n_sel = 0 THEN 1000
-        |    ELSE fa.n_sel * r.n * 1000 // (fa.n * r.n_sel) END < 800)
-        |SELECT * FROM (
-        |  SELECT 'volume_docs' AS section, lang AS key, n AS value
-        |    FROM vol
-        |  UNION ALL SELECT 'volume_chars', lang, ch FROM vol
-        |  UNION ALL SELECT 'concentration', 'gini_pm', v FROM gini
-        |  UNION ALL SELECT 'benford', 'max_dev_u6', v FROM ben
-        |  UNION ALL SELECT 'drift', 'ks_en_vs_rest_pm', v FROM ks
-        |  UNION ALL SELECT 'fairness', 'n_flagged_langs', v FROM fair)
-        |ORDER BY section, key""".stripMargin,
-
-    "q250_spearman" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(n_chars AS BIGINT) AS x,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS y
-        |  FROM documents),
-        |rx AS (SELECT doc_id, x,
-        |    CAST(row_number() OVER (ORDER BY x, doc_id) AS BIGINT)
-        |      AS rn FROM d),
-        |gx AS (SELECT x, min(rn) + max(rn) AS r2 FROM rx GROUP BY 1),
-        |jx AS (SELECT rx.doc_id, gx.r2 AS r2x
-        |  FROM rx JOIN gx ON gx.x = rx.x),
-        |ry AS (SELECT doc_id, y,
-        |    CAST(row_number() OVER (ORDER BY y, doc_id) AS BIGINT)
-        |      AS rn FROM d),
-        |gy AS (SELECT y, min(rn) + max(rn) AS r2 FROM ry GROUP BY 1),
-        |jy AS (SELECT ry.doc_id, gy.r2 AS r2y
-        |  FROM ry JOIN gy ON gy.y = ry.y),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(r2x) AS BIGINT) AS sx,
-        |    CAST(sum(r2y) AS BIGINT) AS sy,
-        |    CAST(sum(r2x * r2x) AS BIGINT) AS sxx,
-        |    CAST(sum(r2y * r2y) AS BIGINT) AS syy,
-        |    CAST(sum(r2x * r2y) AS BIGINT) AS sxy
-        |  FROM jx JOIN jy USING (doc_id))
-        |SELECT n, sx, sy, sxx, syy, sxy,
-        |  CAST(sign(n * sxy - sx * sy) AS BIGINT) AS cov_sign,
-        |  CAST((CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy)
-        |    * (CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy)
-        |    * 1000000
-        |    // ((CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx)
-        |       * (CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy))
-        |    AS BIGINT) AS rho2_u6
-        |FROM s""".stripMargin,
-
-    "q251_boruvka_mst" ->
-      """WITH RECURSIVE nn AS (SELECT DISTINCT doc_id % 40 AS n
-        |  FROM documents),
-        |raw AS (
-        |  SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |e AS (SELECT a, b,
-        |    ((a * 73 + b * 31) % 997) * 1000 + a * 40 + b AS w
-        |  FROM (SELECT DISTINCT least(src, dst) AS a,
-        |      greatest(src, dst) AS b FROM raw WHERE src <> dst)),
-        |reach(e_a, e_b, e_w, node) AS (
-        |  SELECT a, b, w, a FROM e
-        |  UNION
-        |  SELECT r.e_a, r.e_b, r.e_w,
-        |    CASE WHEN x.a = r.node THEN x.b ELSE x.a END
-        |  FROM reach r JOIN e x
-        |    ON (x.a = r.node OR x.b = r.node) AND x.w < r.e_w)
-        |SELECT a, b, CAST(w AS BIGINT) AS w FROM e
-        |WHERE NOT EXISTS (SELECT 1 FROM reach r
-        |  WHERE r.e_a = e.a AND r.e_b = e.b AND r.e_w = e.w
-        |    AND r.node = e.b)
-        |ORDER BY a, b""".stripMargin,
-
-    "q252_shortest_paths" ->
-      """WITH RECURSIVE nn AS (SELECT DISTINCT doc_id % 40 AS n
-        |  FROM documents),
-        |raw AS (
-        |  SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |e AS (SELECT a, b,
-        |    ((a * 73 + b * 31) % 997) * 1000 + a * 40 + b AS w
-        |  FROM (SELECT DISTINCT least(src, dst) AS a,
-        |      greatest(src, dst) AS b FROM raw WHERE src <> dst)),
-        |sym AS (SELECT a AS src, b AS dst, w FROM e
-        |  UNION ALL SELECT b, a, w FROM e),
-        |p(node, dist, hops) AS (
-        |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT), 0
-        |  UNION
-        |  SELECT s.dst, p.dist + s.w, p.hops + 1
-        |  FROM p JOIN sym s ON s.src = p.node
-        |  WHERE p.hops < 12)
-        |SELECT node AS id, CAST(min(dist) AS BIGINT) AS dist
-        |FROM p GROUP BY 1 ORDER BY id""".stripMargin,
-
-    "q253_clustering_coeff" ->
-      """WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |raw AS (
-        |  SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |sym AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
-        |  WHERE src <> dst),
-        |canon AS (SELECT src AS pa, dst AS pb FROM sym WHERE src < dst),
-        |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
-        |  FROM sym GROUP BY 1),
-        |pairs AS (SELECT x.src AS id, x.dst AS v, y.dst AS w
-        |  FROM sym x JOIN sym y ON x.src = y.src AND x.dst < y.dst),
-        |tri AS (SELECT p.id, CAST(count(*) AS BIGINT) AS triangles
-        |  FROM pairs p JOIN canon c ON p.v = c.pa AND p.w = c.pb
-        |  GROUP BY 1)
-        |SELECT d.id, d.deg,
-        |  CAST(COALESCE(t.triangles, 0) AS BIGINT) AS triangles,
-        |  CASE WHEN d.deg >= 2 THEN CAST(COALESCE(t.triangles, 0) * 2
-        |    * 1000 // (d.deg * (d.deg - 1)) AS BIGINT)
-        |    ELSE CAST(0 AS BIGINT) END AS cc_pm
-        |FROM deg d LEFT JOIN tri t ON t.id = d.id
-        |ORDER BY d.id""".stripMargin,
-
-    "q254_link_prediction" ->
-      """WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |raw AS (
-        |  SELECT n AS src, (n + 1) % 40 AS dst FROM nn
-        |  UNION ALL SELECT n, (n + 7) % 40 FROM nn
-        |  UNION ALL SELECT n, (n + 13) % 40 FROM nn WHERE n < 20),
-        |sym AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)
-        |  WHERE src <> dst),
-        |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
-        |  FROM sym GROUP BY 1),
-        |w AS (SELECT x.src AS u, y.src AS v,
-        |    CAST(count(*) AS BIGINT) AS cn
-        |  FROM sym x JOIN sym y ON x.dst = y.dst AND x.src < y.src
-        |  GROUP BY 1, 2),
-        |nonadj AS (SELECT w.* FROM w
-        |  WHERE NOT EXISTS (SELECT 1 FROM sym s
-        |    WHERE s.src = w.u AND s.dst = w.v))
-        |SELECT n.u, n.v, n.cn, du.deg AS deg_u, dv.deg AS deg_v,
-        |  CAST(n.cn * 1000 // (du.deg + dv.deg - n.cn) AS BIGINT)
-        |    AS jaccard_pm
-        |FROM nonadj n JOIN deg du ON du.id = n.u
-        |              JOIN deg dv ON dv.id = n.v
-        |ORDER BY u, v""".stripMargin,
-
-    "q255_cusum" ->
-      """WITH RECURSIVE ev AS (SELECT user_id, event_id,
-        |    CAST(round(value * 100) AS BIGINT) +
-        |      CASE WHEN (event_id // 1000) % 3 = 2 THEN 10000
-        |           ELSE 0 END AS x
-        |  FROM events),
-        |r AS MATERIALIZED (SELECT user_id, event_id, x,
-        |    CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY event_id) AS BIGINT) AS rn
-        |  FROM ev),
-        |c(user_id, rn, event_id, up_after, down_after, up_raw,
-        |  down_raw) AS (
-        |  SELECT user_id, rn, event_id,
-        |    CASE WHEN greatest(0, x - 7000) > 30000 THEN 0
-        |         ELSE greatest(0, x - 7000) END,
-        |    CASE WHEN greatest(0, 3000 - x) > 30000 THEN 0
-        |         ELSE greatest(0, 3000 - x) END,
-        |    greatest(0, x - 7000), greatest(0, 3000 - x)
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.user_id, r.rn, r.event_id,
-        |    CASE WHEN greatest(0, c.up_after + r.x - 7000) > 30000
-        |         THEN 0 ELSE greatest(0, c.up_after + r.x - 7000) END,
-        |    CASE WHEN greatest(0, c.down_after + 3000 - r.x) > 30000
-        |         THEN 0 ELSE greatest(0, c.down_after + 3000 - r.x) END,
-        |    greatest(0, c.up_after + r.x - 7000),
-        |    greatest(0, c.down_after + 3000 - r.x)
-        |  FROM c JOIN r ON r.user_id = c.user_id AND r.rn = c.rn + 1)
-        |SELECT user_id, event_id, side, stat FROM (
-        |  SELECT user_id, event_id, 'up' AS side,
-        |    CAST(up_raw AS BIGINT) AS stat FROM c WHERE up_raw > 30000
-        |  UNION ALL SELECT user_id, event_id, 'down',
-        |    CAST(down_raw AS BIGINT) FROM c WHERE down_raw > 30000)
-        |ORDER BY user_id, event_id, side""".stripMargin,
-
-    "q256_attribution" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |conv AS (SELECT user_id, event_id AS conversion_id, us
-        |  FROM e WHERE event_type = 'purchase'),
-        |touch AS (SELECT user_id, event_id, us FROM e
-        |  WHERE event_type = 'click'),
-        |j AS (SELECT c.user_id, c.conversion_id, c.us AS conv_us,
-        |    t.event_id AS tid, t.us AS tus
-        |  FROM conv c LEFT JOIN touch t ON t.user_id = c.user_id
-        |    AND t.us >= c.us - 86400 * CAST(1000000 AS BIGINT)
-        |    AND t.us < c.us)
-        |SELECT user_id, conversion_id, conv_us,
-        |  CAST((max(CASE WHEN tid IS NULL THEN NULL
-        |    ELSE struct_pack(us := tus, id := tid) END)).id AS BIGINT)
-        |    AS last_touch_id,
-        |  CAST((min(CASE WHEN tid IS NULL THEN NULL
-        |    ELSE struct_pack(us := tus, id := tid) END)).id AS BIGINT)
-        |    AS first_touch_id
-        |FROM j GROUP BY 1, 2, 3
-        |ORDER BY user_id, conversion_id""".stripMargin,
-
-    "q257_isotonic" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(least(greatest((n_chars - 100) * 2, 0), 1000) // 20
-        |      AS BIGINT) AS score
-        |  FROM documents),
-        |l AS (SELECT score,
-        |    CASE WHEN (doc_id * 7919) % 50 < score THEN 1 ELSE 0 END
-        |      AS y
-        |  FROM d),
-        |p AS (SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS pos
-        |  FROM l GROUP BY 1),
-        |o AS (SELECT *, CAST(row_number() OVER (ORDER BY score)
-        |    AS BIGINT) AS i FROM p),
-        |cum AS (SELECT i, score, n, pos,
-        |    sum(n) OVER (ORDER BY i) AS cn,
-        |    sum(pos) OVER (ORDER BY i) AS cpos
-        |  FROM o),
-        |seg AS (SELECT a.i AS k, b.i AS j,
-        |    (b.cpos - COALESCE(a2.cpos, 0)) * CAST(1000000000000
-        |      AS HUGEINT) // (b.cn - COALESCE(a2.cn, 0)) AS mval
-        |  FROM cum a JOIN cum b ON b.i >= a.i
-        |  LEFT JOIN cum a2 ON a2.i = a.i - 1),
-        |mi AS (SELECT o.i, s.k, min(s.mval) AS mn
-        |  FROM o JOIN seg s ON s.k <= o.i AND s.j >= o.i
-        |  GROUP BY 1, 2),
-        |iso AS (SELECT i, CAST(max(mn) AS BIGINT) AS iso_u12
-        |  FROM mi GROUP BY 1)
-        |SELECT o.score, o.n, o.pos AS n_pos, iso.iso_u12
-        |FROM o JOIN iso ON iso.i = o.i
-        |ORDER BY o.score""".stripMargin,
-
-    "q258_quantile_norm" ->
-      """WITH d AS (SELECT source AS grp, doc_id AS id,
-        |    CAST(n_chars AS BIGINT) AS v FROM documents),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM d),
-        |r AS (SELECT grp, id, v,
-        |    CAST(row_number() OVER (PARTITION BY grp ORDER BY v, id)
-        |      AS BIGINT) AS rg,
-        |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS ng
-        |  FROM d),
-        |p AS (SELECT CAST(row_number() OVER (ORDER BY v, id) AS BIGINT)
-        |      AS pooled_pos, v AS norm_v
-        |  FROM d)
-        |SELECT r.grp, r.id, r.v, r.rg, r.ng,
-        |  CAST((r.rg * n.nn + r.ng - 1) // r.ng AS BIGINT)
-        |    AS pooled_pos,
-        |  p.norm_v
-        |FROM r CROSS JOIN n
-        |JOIN p ON p.pooled_pos = (r.rg * n.nn + r.ng - 1) // r.ng
-        |ORDER BY grp, id""".stripMargin,
-
-    "q259_rfm_segments" ->
-      """WITH base AS (SELECT o_custkey AS entity,
-        |    CAST(max(epoch_us(o_orderdate)) AS BIGINT) AS recency,
-        |    CAST(count(*) AS BIGINT) AS frequency,
-        |    CAST(sum(CAST(trunc(o_totalprice) AS BIGINT)) AS BIGINT)
-        |      AS monetary
-        |  FROM orders GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM base),
-        |rr AS (SELECT entity, CAST(row_number() OVER (
-        |    ORDER BY recency, entity) AS BIGINT) AS rn FROM base),
-        |rf AS (SELECT entity, CAST(row_number() OVER (
-        |    ORDER BY frequency, entity) AS BIGINT) AS rn FROM base),
-        |rm AS (SELECT entity, CAST(row_number() OVER (
-        |    ORDER BY monetary, entity) AS BIGINT) AS rn FROM base)
-        |SELECT b.entity, b.recency, b.frequency, b.monetary,
-        |  CAST((rr.rn - 1) * 5 // n.nn + 1 AS BIGINT) AS r,
-        |  CAST((rf.rn - 1) * 5 // n.nn + 1 AS BIGINT) AS f,
-        |  CAST((rm.rn - 1) * 5 // n.nn + 1 AS BIGINT) AS m,
-        |  CAST(((rr.rn - 1) * 5 // n.nn + 1) * 100
-        |    + ((rf.rn - 1) * 5 // n.nn + 1) * 10
-        |    + ((rm.rn - 1) * 5 // n.nn + 1) AS BIGINT) AS segment
-        |FROM base b CROSS JOIN n
-        |JOIN rr ON rr.entity = b.entity
-        |JOIN rf ON rf.entity = b.entity
-        |JOIN rm ON rm.entity = b.entity
-        |ORDER BY b.entity""".stripMargin,
-
-    "q260_keyness" ->
-      """WITH ta AS (SELECT t AS term FROM (SELECT
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents WHERE lang = 'en') WHERE t <> ''),
-        |tb AS (SELECT t AS term FROM (SELECT
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents WHERE lang <> 'en') WHERE t <> ''),
-        |ca AS (SELECT term, CAST(count(*) AS BIGINT) AS o1
-        |  FROM ta GROUP BY 1),
-        |cb AS (SELECT term, CAST(count(*) AS BIGINT) AS o2
-        |  FROM tb GROUP BY 1),
-        |nn AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM ta) AS n1,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM tb) AS n2),
-        |j AS (SELECT term, COALESCE(o1, CAST(0 AS BIGINT)) AS o1,
-        |    COALESCE(o2, CAST(0 AS BIGINT)) AS o2
-        |  FROM ca FULL OUTER JOIN cb USING (term)),
-        |sc AS (SELECT j.term, j.o1, j.o2,
-        |    CASE WHEN j.o1 = 0 THEN CAST(0 AS BIGINT)
-        |      ELSE j.o1 * CAST(round(log10(
-        |        CAST(j.o1 * (nn.n1 + nn.n2) AS DOUBLE)
-        |        / ((j.o1 + j.o2) * nn.n1)) * 1000000, 0) AS BIGINT)
-        |      END AS c1_u6,
-        |    CASE WHEN j.o2 = 0 THEN CAST(0 AS BIGINT)
-        |      ELSE j.o2 * CAST(round(log10(
-        |        CAST(j.o2 * (nn.n1 + nn.n2) AS DOUBLE)
-        |        / ((j.o1 + j.o2) * nn.n2)) * 1000000, 0) AS BIGINT)
-        |      END AS c2_u6,
-        |    CAST(CASE WHEN j.o1 * nn.n2 > j.o2 * nn.n1 THEN 1
-        |      WHEN j.o1 * nn.n2 < j.o2 * nn.n1 THEN -1
-        |      ELSE 0 END AS BIGINT) AS direction
-        |  FROM j CROSS JOIN nn
-        |  WHERE j.o1 + j.o2 >= 5)
-        |SELECT term, o1, o2, c1_u6, c2_u6,
-        |  (c1_u6 + c2_u6) * 2 AS keyness_u6, direction
-        |FROM sc ORDER BY term""".stripMargin,
-
-    "q261_seasonal_decompose" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us, event_id,
-        |    CAST(round(value * 1000000, 0) AS BIGINT) AS v_u6
-        |  FROM events),
-        |o AS (SELECT *, CAST(row_number() OVER w AS BIGINT) AS idx,
-        |    CASE WHEN count(*) OVER c = 7 THEN
-        |      CAST(sum(v_u6) OVER c // 7 AS BIGINT) END AS trend_u6
-        |  FROM e WINDOW w AS (PARTITION BY k ORDER BY us, event_id),
-        |    c AS (PARTITION BY k ORDER BY us, event_id
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |p AS (SELECT *, CAST((idx - 1) % 7 AS BIGINT) AS phase,
-        |    v_u6 - trend_u6 AS detr FROM o),
-        |s AS (SELECT k, phase, CAST(sum(detr) // count(detr) AS BIGINT)
-        |    AS seasonal_u6 FROM p WHERE detr IS NOT NULL GROUP BY 1, 2)
-        |SELECT p.k AS user_id, p.idx, p.phase, p.v_u6, p.trend_u6,
-        |  CASE WHEN p.trend_u6 IS NOT NULL THEN s.seasonal_u6 END
-        |    AS seasonal_u6,
-        |  CASE WHEN p.trend_u6 IS NOT NULL
-        |    THEN p.v_u6 - p.trend_u6 - s.seasonal_u6 END AS resid_u6,
-        |  p.us, p.event_id
-        |FROM p LEFT JOIN s ON s.k = p.k AND s.phase = p.phase
-        |ORDER BY user_id, idx""".stripMargin,
-
-    "q262_hits" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id % 50 AS src FROM documents),
-        |e AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-        |    SELECT src, (src * src + 3) % 50 AS dst FROM base
-        |    UNION ALL SELECT src, (src * 3 + 7) % 50 FROM base)
-        |  WHERE src <> dst),
-        |nodes AS MATERIALIZED (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |a0 AS MATERIALIZED (SELECT id, CAST(1000000 AS BIGINT) AS auth
-        |  FROM nodes),
-        |h1r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.src AS id,
-        |      CAST(sum(a.auth) AS BIGINT) AS raw
-        |    FROM e JOIN a0 a ON a.id = e.dst GROUP BY 1) s
-        |  ON s.id = n.id),
-        |h1 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM h1r) AS BIGINT) AS hub FROM h1r),
-        |a1r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.dst AS id,
-        |      CAST(sum(h.hub) AS BIGINT) AS raw
-        |    FROM e JOIN h1 h ON h.id = e.src GROUP BY 1) s
-        |  ON s.id = n.id),
-        |a1 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM a1r) AS BIGINT) AS auth FROM a1r),
-        |h2r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.src AS id,
-        |      CAST(sum(a.auth) AS BIGINT) AS raw
-        |    FROM e JOIN a1 a ON a.id = e.dst GROUP BY 1) s
-        |  ON s.id = n.id),
-        |h2 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM h2r) AS BIGINT) AS hub FROM h2r),
-        |a2r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.dst AS id,
-        |      CAST(sum(h.hub) AS BIGINT) AS raw
-        |    FROM e JOIN h2 h ON h.id = e.src GROUP BY 1) s
-        |  ON s.id = n.id),
-        |a2 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM a2r) AS BIGINT) AS auth FROM a2r),
-        |h3r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.src AS id,
-        |      CAST(sum(a.auth) AS BIGINT) AS raw
-        |    FROM e JOIN a2 a ON a.id = e.dst GROUP BY 1) s
-        |  ON s.id = n.id),
-        |h3 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM h3r) AS BIGINT) AS hub FROM h3r),
-        |a3r AS MATERIALIZED (SELECT n.id, COALESCE(s.raw, 0) AS raw
-        |  FROM nodes n LEFT JOIN (SELECT e.dst AS id,
-        |      CAST(sum(h.hub) AS BIGINT) AS raw
-        |    FROM e JOIN h3 h ON h.id = e.src GROUP BY 1) s
-        |  ON s.id = n.id),
-        |a3 AS MATERIALIZED (SELECT id, CAST(raw * 1000000
-        |  // (SELECT max(raw) FROM a3r) AS BIGINT) AS auth FROM a3r)
-        |SELECT h3.id, h3.hub, a3.auth
-        |FROM h3 JOIN a3 ON a3.id = h3.id
-        |ORDER BY h3.id""".stripMargin,
-
-    "q263_kcenter_coreset" -> {
-      val rounds = (2 to 5).map(r => kcRoundCtes(r, last = r == 5))
-        .mkString(",\n")
-      val picks = (2 to 5)
-        .map(r => s"UNION ALL SELECT $r, id, mind FROM c$r")
-        .mkString("\n")
-      s"""WITH c1 AS MATERIALIZED (SELECT min(vec_id) AS id FROM embeddings),
-         |m1 AS MATERIALIZED (
-         |  SELECT p.id, 1000000 - CAST(round(sum(p.x*p.y)
-         |    / (sqrt(sum(p.x*p.x)) * sqrt(sum(p.y*p.y))) * 1000000, 0)
-         |    AS BIGINT) AS mind
-         |  FROM (SELECT a.vec_id AS id, unnest(a.embedding)::DOUBLE AS x,
-         |      unnest(e.embedding)::DOUBLE AS y
-         |    FROM embeddings a CROSS JOIN (SELECT embedding
-         |      FROM embeddings JOIN c1 ON vec_id = c1.id) e) p
-         |  GROUP BY p.id),
-         |$rounds
-         |SELECT CAST(pick AS BIGINT) AS pick, id,
-         |  CAST(sel_dist_u6 AS BIGINT) AS sel_dist_u6 FROM (
-         |  SELECT 1 AS pick, id, NULL AS sel_dist_u6 FROM c1
-         |  $picks)
-         |ORDER BY pick""".stripMargin
-    },
-
-    "q264_kneser_ney" ->
-      """WITH toks AS (SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts
-        |      FROM documents))),
-        |pairs AS (SELECT a.tok AS prev, b.tok AS next
-        |  FROM toks a JOIN toks b
-        |    ON a.doc_id = b.doc_id AND b.idx = a.idx + 1),
-        |cnts AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM pairs GROUP BY 1, 2),
-        |lft AS (SELECT prev, CAST(sum(cnt) AS BIGINT) AS c1,
-        |    CAST(count(*) AS BIGINT) AS n1_fwd FROM cnts GROUP BY 1),
-        |cont AS (SELECT next, CAST(count(*) AS BIGINT) AS n1_bwd
-        |  FROM cnts GROUP BY 1),
-        |nt AS (SELECT CAST(count(*) AS BIGINT) AS ntot FROM cnts)
-        |SELECT c.prev, c.next, c.cnt, l.c1, l.n1_fwd, o.n1_bwd,
-        |  CAST((greatest(c.cnt * 4 - 3, 0) * nt.ntot
-        |    + 3 * l.n1_fwd * o.n1_bwd) * 1000000
-        |    // (4 * l.c1 * nt.ntot) AS BIGINT) AS p_u6
-        |FROM cnts c JOIN lft l ON l.prev = c.prev
-        |JOIN cont o ON o.next = c.next CROSS JOIN nt
-        |ORDER BY c.prev, c.next""".stripMargin,
-
-    "q265_textrank" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split(text, ' ') AS parts
-        |      FROM documents))),
-        |pairs AS (SELECT a.tok AS src, b.tok AS dst
-        |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id
-        |    AND b.idx > a.idx AND b.idx <= a.idx + 2
-        |  WHERE a.tok <> b.tok),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT src, dst FROM pairs
-        |  UNION ALL SELECT dst, src FROM pairs)),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-        |e0 AS (SELECT src, dst, 1 AS w FROM e
-        |  UNION ALL SELECT id, id, 0 FROM nodes),
-        |pr(id, rank, iter) AS (
-        |  SELECT id, CAST(1000000000 AS BIGINT), 0 FROM nodes
-        |  UNION ALL
-        |  SELECT e0.dst,
-        |    CAST(150000000 + SUM(e0.w * ((p.rank * 85)
-        |      // (100 * COALESCE(o.outdeg, 1)))) AS BIGINT),
-        |    p.iter + 1
-        |  FROM pr p
-        |  JOIN e0 ON e0.src = p.id
-        |  LEFT JOIN outdeg o ON o.src = e0.src
-        |  WHERE p.iter < 5
-        |  GROUP BY e0.dst, p.iter)
-        |SELECT id AS token, rank FROM pr WHERE iter = 5
-        |ORDER BY rank DESC, token LIMIT 15""".stripMargin,
-
-    "q266_expectations" ->
-      """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(CASE WHEN NOT COALESCE(o_orderkey IS NOT NULL,
-        |    FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS b1,
-        |  CAST(sum(CASE WHEN NOT COALESCE(o_totalprice > 0, FALSE)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS b2,
-        |  CAST(sum(CASE WHEN NOT COALESCE(o_orderstatus IN
-        |    ('O', 'F', 'P'), FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS b3,
-        |  CAST(sum(CASE WHEN NOT COALESCE(len(o_orderpriority) > 0,
-        |    FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS b4,
-        |  CAST(count(o_orderkey) - count(DISTINCT o_orderkey)
-        |    AS BIGINT) AS b5
-        |  FROM orders)
-        |SELECT rule, n_rows, n_bad, n_bad = 0 AS pass FROM (
-        |  SELECT 'orderkey_not_null' AS rule, n_rows, b1 AS n_bad FROM a
-        |  UNION ALL SELECT 'totalprice_positive', n_rows, b2 FROM a
-        |  UNION ALL SELECT 'status_known', n_rows, b3 FROM a
-        |  UNION ALL SELECT 'priority_nonempty', n_rows, b4 FROM a
-        |  UNION ALL SELECT 'unique_o_orderkey', n_rows, b5 FROM a)
-        |ORDER BY rule""".stripMargin,
-
-    "q267_token_entropy" ->
-      """WITH tk AS (SELECT doc_id, t AS tok FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)),
-        |      '\s+')) AS t FROM documents) WHERE t <> ''),
-        |c AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-        |  FROM tk GROUP BY 1, 2),
-        |tt AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok,
-        |    CAST(count(*) AS BIGINT) AS n_types FROM c GROUP BY 1)
-        |SELECT c.doc_id, tt.n_tok, tt.n_types,
-        |  CAST(sum(c.c * CAST(round(log10(CAST(tt.n_tok AS DOUBLE)
-        |    / c.c) * 1000000, 0) AS BIGINT)) // tt.n_tok AS BIGINT)
-        |    AS entropy_u6
-        |FROM c JOIN tt USING (doc_id)
-        |GROUP BY c.doc_id, tt.n_tok, tt.n_types
-        |ORDER BY doc_id""".stripMargin,
-
-    "q268_source_divergence" ->
-      """WITH tk AS (SELECT cls, t AS term FROM (
-        |    SELECT CAST(lang AS VARCHAR) AS cls,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |st AS (SELECT cls, term, CAST(count(*) AS BIGINT) AS c_st
-        |  FROM tk GROUP BY 1, 2),
-        |pc AS (SELECT cls, CAST(sum(c_st) AS BIGINT) AS n_s,
-        |    CAST(count(*) AS BIGINT) AS n_types FROM st GROUP BY 1),
-        |pt AS (SELECT term, CAST(sum(c_st) AS BIGINT) AS c_t
-        |  FROM st GROUP BY 1),
-        |nn AS (SELECT CAST(sum(c_st) AS BIGINT) AS n_corpus FROM st)
-        |SELECT st.cls, pc.n_s AS n_tok, pc.n_types,
-        |  CAST(sum(st.c_st * CAST(round(log10(
-        |    CAST(st.c_st * nn.n_corpus AS DOUBLE) / (pc.n_s * pt.c_t))
-        |    * 1000000, 0) AS BIGINT)) // pc.n_s AS BIGINT) AS kl_u6
-        |FROM st JOIN pc ON pc.cls = st.cls
-        |JOIN pt ON pt.term = st.term CROSS JOIN nn
-        |GROUP BY st.cls, pc.n_s, pc.n_types
-        |ORDER BY st.cls""".stripMargin,
-
-    "q269_woe_iv" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(least(greatest((n_chars - 100) * 2, 0), 1000) // 20
-        |      AS BIGINT) AS score_b
-        |  FROM documents),
-        |l AS (SELECT score_b // 10 AS bin,
-        |    CASE WHEN (doc_id * 7919) % 50 < score_b THEN 1 ELSE 0 END
-        |      AS y FROM d),
-        |a AS (SELECT bin, CAST(sum(y) AS BIGINT) AS n_pos,
-        |    CAST(count(*) - sum(y) AS BIGINT) AS n_neg
-        |  FROM l GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_pos) AS BIGINT) AS p,
-        |    CAST(sum(n_neg) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS b FROM a),
-        |w AS (SELECT a.bin, a.n_pos, a.n_neg,
-        |    CAST(round(log10(CAST((a.n_pos + 1) * (t.n + t.b) AS DOUBLE)
-        |      / ((a.n_neg + 1) * (t.p + t.b))) * 1000000, 0) AS BIGINT)
-        |      AS woe_u6,
-        |    CAST((a.n_pos + 1) * 1000000 // (t.p + t.b)
-        |      - (a.n_neg + 1) * 1000000 // (t.n + t.b) AS BIGINT)
-        |      AS dp_u6
-        |  FROM a CROSS JOIN t)
-        |SELECT bin, n_pos, n_neg, woe_u6,
-        |  CAST((dp_u6 * woe_u6) // 1000000 AS BIGINT) AS iv_u6
-        |FROM w ORDER BY bin""".stripMargin,
-
-    "q270_skipgram_pairs" ->
-      """WITH tk AS MATERIALIZED (
-        |  SELECT doc, idx, parts[idx+1] AS tok FROM (
-        |    SELECT doc_id AS doc, parts,
-        |      unnest(range(len(parts))) AS idx FROM (
-        |      SELECT doc_id, string_split_regex(lower(trim(text)),
-        |        '\s+') AS parts FROM documents))
-        |  WHERE parts[idx+1] <> ''),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tk),
-        |thr AS MATERIALIZED (SELECT tok, least(4294967296,
-        |    CAST(floor(sqrt(CAST(1000 * nn.n AS DOUBLE)
-        |      / (count(*) * 1000000)) * 4294967296) AS BIGINT)) AS thr
-        |  FROM tk CROSS JOIN nn GROUP BY tok, nn.n),
-        |kept AS MATERIALIZED (SELECT tk.doc, tk.idx, tk.tok
-        |  FROM tk JOIN thr USING (tok)
-        |  WHERE CAST('0x' || substr(md5(CAST(tk.doc AS VARCHAR) || ':'
-        |    || CAST(tk.idx AS VARCHAR)), 1, 8) AS BIGINT) < thr.thr),
-        |sq AS MATERIALIZED (SELECT doc,
-        |    row_number() OVER (PARTITION BY doc ORDER BY idx) AS pos,
-        |    tok FROM kept),
-        |pr AS (SELECT a.tok AS center, b.tok AS context
-        |  FROM sq a JOIN sq b ON a.doc = b.doc
-        |    AND b.pos > a.pos AND b.pos <= a.pos + 2)
-        |SELECT center, context, CAST(count(*) AS BIGINT) AS cnt FROM (
-        |  SELECT center, context FROM pr
-        |  UNION ALL SELECT context, center FROM pr)
-        |GROUP BY 1, 2
-        |ORDER BY center, context""".stripMargin,
-
-    "q271_flesch" ->
-      """WITH tk AS (SELECT doc_id, n_sents, t AS tok FROM (
-        |    SELECT doc_id,
-        |      greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sents,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |sy AS (SELECT doc_id, n_sents,
-        |    greatest(len(regexp_extract_all(tok, '[aeiouy]+')), 1) AS syl
-        |  FROM tk),
-        |ag AS (SELECT doc_id, CAST(n_sents AS BIGINT) AS n_sents,
-        |    CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(sum(syl) AS BIGINT) AS n_syll
-        |  FROM sy GROUP BY 1, 2)
-        |SELECT doc_id, n_words, n_sents, n_syll,
-        |  CAST(206835 - (1015 * n_words) // n_sents
-        |    - (84600 * n_syll) // n_words AS BIGINT) AS flesch_u3,
-        |  CAST((390 * n_words) // n_sents
-        |    + (11800 * n_syll) // n_words - 15590 AS BIGINT) AS fkgl_u3
-        |FROM ag ORDER BY doc_id""".stripMargin,
-
-    "q272_kaplan_meier" ->
-      """WITH life AS (SELECT user_id AS entity,
-        |    CAST(min(epoch(ts)) AS BIGINT) AS first_s,
-        |    CAST(max(epoch(ts)) AS BIGINT) AS last_s
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT max(last_s) AS w_end,
-        |    CAST(count(*) AS BIGINT) AS n_total FROM life),
-        |durs AS (SELECT (last_s - first_s) // 3600 AS t_h,
-        |    CASE WHEN last_s <= w.w_end - 86400 THEN 1 ELSE 0 END AS obs,
-        |    w.n_total FROM life, w),
-        |byt AS (SELECT t_h, n_total, CAST(sum(obs) AS BIGINT) AS d,
-        |    CAST(sum(1 - obs) AS BIGINT) AS c FROM durs GROUP BY 1, 2),
-        |r AS (SELECT t_h, d, c, n_total - coalesce(sum(d + c) OVER (
-        |      ORDER BY t_h ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING), 0) AS n_risk
-        |  FROM byt),
-        |s AS (SELECT t_h, n_risk, d, c,
-        |    CASE WHEN d < n_risk THEN CAST(round(ln(
-        |      CAST(n_risk - d AS DOUBLE) / n_risk) * 1000000, 0)
-        |      AS BIGINT) END AS step_u6,
-        |    CASE WHEN d >= n_risk THEN 1 ELSE 0 END AS z FROM r)
-        |SELECT t_h, CAST(n_risk AS BIGINT) AS n_risk, d, c,
-        |  CAST(coalesce(sum(step_u6) OVER (ORDER BY t_h
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-        |    AS BIGINT) AS logsurv_u6,
-        |  CAST(max(z) OVER (ORDER BY t_h ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS BIGINT) AS s_zero
-        |FROM s ORDER BY t_h""".stripMargin,
-
-    "q273_modularity_move" ->
-      s"""WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |${modularityTwoRoundCtes},
-        |qq AS (SELECT CAST(num * 1000000 // (4 * m * m) AS BIGINT)
-        |    AS q_u6 FROM qn)
-        |SELECT r2.id, r2.comm, qq.q_u6 FROM r2, qq
-        |ORDER BY id""".stripMargin,
-
-    "q274_soundex_blocking" ->
-      """WITH wds AS (SELECT DISTINCT w AS word FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS w FROM (SELECT text FROM documents
-        |        UNION ALL SELECT p_name FROM part)) WHERE w <> ''),
-        |cl AS (SELECT word,
-        |    upper(regexp_replace(word, '[^A-Za-z]', '', 'g')) AS cw
-        |  FROM wds),
-        |ch AS (SELECT word, cw, i, translate(substr(cw, i, 1),
-        |    'ABCDEFGHIJKLMNOPQRSTUVWXYZ', '01230120022455012623010202')
-        |    AS d
-        |  FROM (SELECT word, cw, unnest(range(1, len(cw) + 1)) AS i
-        |    FROM cl WHERE len(cw) > 0)),
-        |kp AS (SELECT word, cw, i, d,
-        |    lag(d) OVER (PARTITION BY word ORDER BY i) AS pd FROM ch),
-        |dd AS (SELECT word, cw, i, d,
-        |    row_number() OVER (PARTITION BY word ORDER BY i) AS rn
-        |  FROM kp WHERE pd IS NULL OR d <> pd),
-        |ds AS (SELECT word, i, d,
-        |    row_number() OVER (PARTITION BY word ORDER BY i) AS dn
-        |  FROM dd WHERE rn > 1 AND d <> '0'),
-        |agg AS (SELECT word, string_agg(d, '' ORDER BY i) AS s3
-        |  FROM ds WHERE dn <= 3 GROUP BY word),
-        |code AS (SELECT cl.word,
-        |    substr(cl.cw, 1, 1) || rpad(coalesce(agg.s3, ''), 3, '0')
-        |      AS code
-        |  FROM cl LEFT JOIN agg USING (word) WHERE len(cl.cw) > 0),
-        |blk AS (SELECT code, CAST(count(*) AS BIGINT) AS n_block
-        |  FROM code GROUP BY 1)
-        |SELECT c.word, c.code, b.n_block
-        |FROM code c JOIN blk b USING (code)
-        |ORDER BY word""".stripMargin,
-
-    "q275_naive_bayes" ->
-      """WITH tr AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-        |te AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
-        |trt AS MATERIALIZED (SELECT cls, tok FROM (
-        |    SELECT CAST(lang AS VARCHAR) AS cls,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |    FROM tr) WHERE tok <> ''),
-        |ct AS MATERIALIZED (SELECT cls, tok,
-        |    CAST(count(*) AS BIGINT) AS c FROM trt GROUP BY 1, 2),
-        |vv AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM ct),
-        |cs AS MATERIALIZED (SELECT cls, CAST(sum(c) AS BIGINT) AS tot,
-        |    CAST(round(log10(1.0 / (CAST(sum(c) AS BIGINT) + vv.v))
-        |      * 1000000, 0) AS BIGINT) AS oov_u6
-        |  FROM ct, vv GROUP BY cls, vv.v),
-        |lp AS MATERIALIZED (SELECT ct.cls, ct.tok,
-        |    CAST(round(log10(CAST(ct.c + 1 AS DOUBLE) / (cs.tot + vv.v))
-        |      * 1000000, 0) AS BIGINT) AS lp_u6
-        |  FROM ct JOIN cs USING (cls), vv),
-        |nr AS (SELECT CAST(count(*) AS BIGINT) AS n_train FROM tr),
-        |pri AS (SELECT CAST(lang AS VARCHAR) AS cls,
-        |    CAST(round(log10(CAST(count(*) AS DOUBLE) / nr.n_train)
-        |      * 1000000, 0) AS BIGINT) AS prior_u6
-        |  FROM tr, nr GROUP BY 1, nr.n_train),
-        |tet AS MATERIALIZED (SELECT id, tok,
-        |    CAST(count(*) AS BIGINT) AS n FROM (
-        |    SELECT doc_id AS id,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |    FROM te) WHERE tok <> '' GROUP BY 1, 2),
-        |sc AS (SELECT tet.id, cs.cls,
-        |    CAST(sum(tet.n * coalesce(lp.lp_u6, cs.oov_u6)) AS BIGINT)
-        |      AS s
-        |  FROM tet CROSS JOIN cs
-        |  LEFT JOIN lp ON lp.cls = cs.cls AND lp.tok = tet.tok
-        |  GROUP BY 1, 2),
-        |fin AS (SELECT sc.id, sc.cls, sc.s + pri.prior_u6 AS score_u6
-        |  FROM sc JOIN pri USING (cls)),
-        |pk AS (SELECT id, cls AS pred, score_u6 FROM (
-        |    SELECT id, cls, score_u6, row_number() OVER (
-        |      PARTITION BY id ORDER BY score_u6 DESC, cls) AS rn
-        |    FROM fin) WHERE rn = 1)
-        |SELECT pk.id AS doc_id, pk.pred,
-        |  CAST(te.lang AS VARCHAR) AS actual,
-        |  CAST(pk.score_u6 AS BIGINT) AS score_u6,
-        |  CASE WHEN pk.pred = CAST(te.lang AS VARCHAR)
-        |    THEN 1 ELSE 0 END AS correct
-        |FROM pk JOIN te ON te.doc_id = pk.id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q276_heaps_law" ->
-      """WITH tk AS MATERIALIZED (SELECT id, tok FROM (
-        |    SELECT doc_id AS id,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |    FROM documents) WHERE tok <> ''),
-        |bt AS (SELECT id // 50 AS b, CAST(count(*) AS BIGINT) AS nt
-        |  FROM tk GROUP BY 1),
-        |bn AS (SELECT fid // 50 AS b, CAST(count(*) AS BIGINT) AS nv
-        |  FROM (SELECT tok, min(id) AS fid FROM tk GROUP BY 1)
-        |  GROUP BY 1),
-        |cv AS MATERIALIZED (SELECT b,
-        |    CAST(sum(coalesce(nt, 0)) OVER (ORDER BY b ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS n_tokens,
-        |    CAST(sum(coalesce(nv, 0)) OVER (ORDER BY b ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS v_types
-        |  FROM bt FULL OUTER JOIN bn USING (b)),
-        |cx AS MATERIALIZED (SELECT b, n_tokens, v_types,
-        |    CAST(round(log10(CAST(n_tokens AS DOUBLE)) * 1000000, 0)
-        |      AS BIGINT) AS x_u6,
-        |    CAST(round(log10(CAST(v_types AS DOUBLE)) * 1000000, 0)
-        |      AS BIGINT) AS y_u6
-        |  FROM cv WHERE n_tokens > 0 AND v_types > 0),
-        |ft AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x_u6) AS BIGINT) AS sx,
-        |    CAST(sum(y_u6) AS BIGINT) AS sy,
-        |    CAST(sum(x_u6 * y_u6) AS HUGEINT) AS sxy,
-        |    CAST(sum(x_u6 * x_u6) AS HUGEINT) AS sxx FROM cx),
-        |fit AS (SELECT
-        |    CAST((n * sxy - sx * sy) * 1000000
-        |      // (n * sxx - sx * sx) AS BIGINT) AS beta_u6 FROM ft),
-        |fit2 AS (SELECT fit.beta_u6,
-        |    CAST((ft.sy - (fit.beta_u6 * ft.sx) // 1000000) // ft.n
-        |      AS BIGINT) AS alpha_u6 FROM fit, ft)
-        |SELECT cx.b, cx.n_tokens, cx.v_types, cx.x_u6, cx.y_u6,
-        |  fit2.beta_u6, fit2.alpha_u6
-        |FROM cx, fit2 ORDER BY b""".stripMargin,
-
-    "q277_fellegi_sunter" ->
-      s"""WITH $fellegiSunterCtes
-        |SELECT id1, id2, CAST(g1 + g2 AS BIGINT) AS n_agree,
-        |  CAST(g1 * w1.wa + (1 - g1) * w1.wd
-        |    + g2 * w2.wa + (1 - g2) * w2.wd AS BIGINT) AS score_u6,
-        |  CASE WHEN g1 * w1.wa + (1 - g1) * w1.wd
-        |    + g2 * w2.wa + (1 - g2) * w2.wd >= 1
-        |    THEN 'link' ELSE 'possible' END AS decision
-        |FROM p, w1, w2
-        |WHERE g1 * w1.wa + (1 - g1) * w1.wd
-        |  + g2 * w2.wa + (1 - g2) * w2.wd >= -400000
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q278_pca_power" -> pcaPowerOracle,
-
-    "q279_int8_recall" ->
-      """WITH ex AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x
-        |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)),
-        |mx AS (SELECT vec_id, max(abs(x)) AS maxabs FROM ex GROUP BY 1),
-        |cd AS MATERIALIZED (SELECT ex.vec_id, i,
-        |    CASE WHEN maxabs = 0 THEN 0
-        |         ELSE CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)
-        |    END AS q
-        |  FROM ex JOIN mx USING (vec_id)),
-        |qv AS (SELECT i, q AS qv FROM cd WHERE vec_id = 0),
-        |dt AS (SELECT cd.vec_id, CAST(sum(cd.q * qv.qv) AS BIGINT)
-        |    AS dot_q FROM cd JOIN qv USING (i) GROUP BY 1),
-        |tq AS (SELECT vec_id, dot_q, CAST(row_number() OVER (
-        |      ORDER BY dot_q DESC, vec_id) AS BIGINT) AS rn
-        |  FROM dt QUALIFY rn <= 10),
-        |p AS (SELECT a.vec_id, unnest(a.embedding)::DOUBLE AS x,
-        |    unnest(q.embedding)::DOUBLE AS y
-        |  FROM embeddings a,
-        |    (SELECT embedding FROM embeddings WHERE vec_id = 0) q),
-        |sc AS (SELECT vec_id, round(sum(x*y)
-        |    / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1),
-        |ex10 AS (SELECT vec_id FROM sc ORDER BY cos DESC, vec_id
-        |  LIMIT 10)
-        |SELECT tq.rn, tq.vec_id, tq.dot_q,
-        |  CASE WHEN ex10.vec_id IS NULL THEN 0 ELSE 1 END AS in_exact
-        |FROM tq LEFT JOIN ex10 ON ex10.vec_id = tq.vec_id
-        |ORDER BY rn""".stripMargin,
-
-    "q280_conformal" ->
-      """WITH mn AS (SELECT CAST(lang AS VARCHAR) AS grp,
-        |    CAST(sum(CAST(n_chars AS BIGINT))
-        |      // count(*) AS BIGINT) AS mean_v
-        |  FROM documents WHERE doc_id % 3 = 1 GROUP BY 1),
-        |cal AS (SELECT abs(CAST(d.n_chars AS BIGINT) - mn.mean_v)
-        |    AS resid
-        |  FROM documents d JOIN mn ON mn.grp = CAST(d.lang AS VARCHAR)
-        |  WHERE d.doc_id % 3 = 2),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_cal FROM cal),
-        |cum AS (SELECT resid, CAST(sum(count(*)) OVER (ORDER BY resid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum
-        |  FROM cal GROUP BY resid),
-        |qh AS (SELECT min(resid) AS qhat FROM cum, nn
-        |  WHERE cum.cum >= ((nn.n_cal + 1) * 90 + 99) // 100)
-        |SELECT grp, CAST(count(*) AS BIGINT) AS n_test,
-        |  CAST(sum(CASE WHEN qh.qhat IS NULL
-        |    OR abs(CAST(d.n_chars AS BIGINT) - mn.mean_v) <= qh.qhat
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-        |  qh.qhat
-        |FROM documents d JOIN mn ON mn.grp = CAST(d.lang AS VARCHAR)
-        |  CROSS JOIN qh
-        |WHERE d.doc_id % 3 = 0
-        |GROUP BY grp, qh.qhat
-        |ORDER BY grp""".stripMargin,
-
-    "q281_ucb1_replay" -> {
-      val armz = Seq("click", "error", "purchase", "signup", "view")
-      def sc(i: Int) =
-        s"""s.r$i * 1000000 // s.n$i
-           |        + CAST(round(sqrt(2.0 * ln(CAST(s.matched + 1
-           |          AS DOUBLE)) / s.n$i) * 1000000, 0) AS BIGINT)"""
-          .stripMargin
-      def upd(i: Int, a: String) =
-        s"""s.n$i + CASE WHEN p.pick = '$a' AND e.arm = '$a'
-           |      THEN 1 ELSE 0 END AS n$i,
-           |    s.r$i + CASE WHEN p.pick = '$a' AND e.arm = '$a'
-           |      THEN e.rw ELSE 0 END AS r$i""".stripMargin
-      def fin(i: Int, a: String) =
-        s"""SELECT key, '$a' AS arm, n$i AS pulls, r$i AS rewards,
-           |  matched FROM fin""".stripMargin
-      s"""WITH RECURSIVE ev AS MATERIALIZED (
-        |  SELECT * FROM (
-        |  SELECT user_id % 32 AS key, row_number() OVER (
-        |      PARTITION BY user_id % 32
-        |      ORDER BY epoch(ts), event_id) AS rn,
-        |    event_type AS arm,
-        |    CASE WHEN value >= 100.0 THEN CAST(1 AS BIGINT)
-        |      ELSE CAST(0 AS BIGINT) END AS rw
-        |  FROM events) WHERE rn <= 256),
-        |st AS (
-        |  SELECT DISTINCT key, 0 AS t,
-        |    ${(1 to 5).map(i => s"CAST(0 AS BIGINT) AS n$i, " +
-              s"CAST(0 AS BIGINT) AS r$i").mkString(",\n    ")},
-        |    CAST(0 AS BIGINT) AS matched
-        |  FROM ev
-        |  UNION ALL
-        |  SELECT s.key, s.t + 1,
-        |    ${armz.zipWithIndex.map { case (a, i) => upd(i + 1, a) }
-              .mkString(",\n    ")},
-        |    s.matched + CASE WHEN p.pick = e.arm THEN 1 ELSE 0 END
-        |  FROM st s JOIN ev e ON e.key = s.key AND e.rn = s.t + 1,
-        |  LATERAL (SELECT
-        |      ${(1 to 5).map(i =>
-                s"CASE WHEN s.n$i = 0 THEN NULL ELSE\n        ${sc(i)}"
-                  + s" END AS s$i").mkString(",\n      ")}) q,
-        |  LATERAL (SELECT CASE
-        |      ${(1 to 5).map(i =>
-                s"WHEN s.n$i = 0 THEN '${armz(i - 1)}'")
-                .mkString("\n      ")}
-        |      WHEN q.s1 >= greatest(q.s2, q.s3, q.s4, q.s5)
-        |        THEN 'click'
-        |      WHEN q.s2 >= greatest(q.s3, q.s4, q.s5) THEN 'error'
-        |      WHEN q.s3 >= greatest(q.s4, q.s5) THEN 'purchase'
-        |      WHEN q.s4 >= q.s5 THEN 'signup'
-        |      ELSE 'view'
-        |    END AS pick) p),
-        |fin AS (SELECT * FROM st QUALIFY row_number() OVER (
-        |  PARTITION BY key ORDER BY t DESC) = 1)
-        |${armz.zipWithIndex.map { case (a, i) => fin(i + 1, a) }
-            .mkString("\nUNION ALL\n")}
-        |ORDER BY key, arm""".stripMargin
-    },
-
-    "q282_theil_sen" ->
-      """WITH b AS (SELECT CAST(lang AS VARCHAR) AS grp,
-        |    CAST(doc_id AS BIGINT) AS x, CAST(n_chars AS BIGINT) AS y
-        |  FROM documents),
-        |p AS MATERIALIZED (SELECT a.grp,
-        |    CAST((c.y - a.y) * 1000000 // (c.x - a.x) AS BIGINT)
-        |      AS slope_u6
-        |  FROM b a JOIN b c ON a.grp = c.grp AND a.x < c.x),
-        |np AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_pairs
-        |  FROM p GROUP BY 1),
-        |cum AS (SELECT grp, slope_u6, CAST(sum(count(*)) OVER (
-        |      PARTITION BY grp ORDER BY slope_u6 ROWS BETWEEN
-        |      UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |  FROM p GROUP BY grp, slope_u6)
-        |SELECT cum.grp, np.n_pairs,
-        |  CAST(min(slope_u6) AS BIGINT) AS slope_med_u6
-        |FROM cum JOIN np USING (grp)
-        |WHERE cum.cum >= (np.n_pairs + 1) // 2
-        |GROUP BY cum.grp, np.n_pairs
-        |ORDER BY grp""".stripMargin,
-
-    "q283_pca_incremental" -> pcaPowerOracle,
-
-    "q284_diff_in_diff" ->
-      """WITH w AS (SELECT (CAST(min(epoch(ts)) AS BIGINT)
-        |    + CAST(max(epoch(ts)) AS BIGINT)) // 2 AS cut FROM events),
-        |c AS (SELECT user_id % 2 AS treated,
-        |    CASE WHEN CAST(epoch(ts) AS BIGINT) > w.cut
-        |      THEN 1 ELSE 0 END AS post,
-        |    CAST(round(value * 1000000, 0) AS BIGINT) AS v
-        |  FROM events, w),
-        |m AS (SELECT treated, post, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(v) AS BIGINT) // count(*) AS mean_u6
-        |  FROM c GROUP BY 1, 2),
-        |d AS (SELECT CAST(
-        |    sum(CASE WHEN treated = 1 AND post = 1 THEN mean_u6
-        |      ELSE 0 END)
-        |    - sum(CASE WHEN treated = 1 AND post = 0 THEN mean_u6
-        |      ELSE 0 END)
-        |    - sum(CASE WHEN treated = 0 AND post = 1 THEN mean_u6
-        |      ELSE 0 END)
-        |    + sum(CASE WHEN treated = 0 AND post = 0 THEN mean_u6
-        |      ELSE 0 END) AS BIGINT) AS did_u6 FROM m)
-        |SELECT CAST(treated AS BIGINT) AS treated,
-        |  CAST(post AS BIGINT) AS post, n,
-        |  CAST(mean_u6 AS BIGINT) AS mean_u6, d.did_u6
-        |FROM m, d ORDER BY treated, post""".stripMargin,
-
-    "q285_cuped" ->
-      """WITH w AS (SELECT (CAST(min(epoch(ts)) AS BIGINT)
-        |    + CAST(max(epoch(ts)) AS BIGINT)) // 2 AS cut FROM events),
-        |b AS (SELECT user_id AS unit, user_id % 2 AS treated,
-        |    CASE WHEN CAST(epoch(ts) AS BIGINT) > w.cut
-        |      THEN 1 ELSE 0 END AS post,
-        |    CAST(round(value * 1000, 0) AS BIGINT) AS v
-        |  FROM events, w),
-        |per AS (SELECT unit, treated, post,
-        |    CAST(sum(v) AS BIGINT) // count(*) AS m
-        |  FROM b GROUP BY 1, 2, 3),
-        |u AS MATERIALIZED (SELECT p0.unit, p0.treated, p0.m AS x,
-        |    p1.m AS y
-        |  FROM per p0 JOIN per p1 ON p1.unit = p0.unit
-        |  WHERE p0.post = 0 AND p1.post = 1),
-        |f AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * y) AS HUGEINT) AS sxy,
-        |    CAST(sum(x * x) AS HUGEINT) AS sxx FROM u),
-        |t AS (SELECT CAST((n * sxy - sx * sy) * 1000000
-        |      // (n * sxx - sx * sx) AS BIGINT) AS theta_u6,
-        |    sx // n AS xbar FROM f)
-        |SELECT CAST(u.treated AS BIGINT) AS treated,
-        |  CAST(count(*) AS BIGINT) AS n_units,
-        |  CAST(CAST(sum(u.y) AS BIGINT) // count(*) AS BIGINT)
-        |    AS mean_y_u3,
-        |  CAST(CAST(sum(u.y - (t.theta_u6 * (u.x - t.xbar)) // 1000000)
-        |    AS BIGINT) // count(*) AS BIGINT) AS mean_yadj_u3,
-        |  t.theta_u6
-        |FROM u, t GROUP BY u.treated, t.theta_u6
-        |ORDER BY treated""".stripMargin,
-
-    "q286_er_composite" ->
-      s"""WITH RECURSIVE $fellegiSunterCtes,
-        |links AS MATERIALIZED (SELECT id1, id2 FROM p, w1, w2
-        |  WHERE g1 * w1.wa + (1 - g1) * w1.wd
-        |    + g2 * w2.wa + (1 - g2) * w2.wd >= 1),
-        |${componentWalkCtes("links", true)},
-        |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-        |sz AS (SELECT comp, CAST(count(*) AS BIGINT) AS n_members
-        |  FROM cc GROUP BY 1)
-        |SELECT cc.id, cc.comp AS canon, sz.n_members
-        |FROM cc JOIN sz USING (comp) ORDER BY id""".stripMargin,
-
-    "q287_bootstrap_ci" ->
-      """WITH ex AS MATERIALIZED (SELECT r,
-        |    CAST(n_chars AS BIGINT) AS v
-        |  FROM documents, UNNEST(range(200)) t(r)
-        |  WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':'
-        |    || CAST(r AS VARCHAR)), 1, 1) < '8'),
-        |means AS (SELECT r,
-        |    CAST(sum(v) * 1000 // count(*) AS BIGINT) AS m_u3
-        |  FROM ex GROUP BY 1),
-        |cum AS (SELECT m_u3, CAST(sum(count(*)) OVER (ORDER BY m_u3
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum
-        |  FROM means GROUP BY m_u3),
-        |lo AS (SELECT min(m_u3) AS ci_lo_u3 FROM cum WHERE cum >= 6),
-        |hi AS (SELECT min(m_u3) AS ci_hi_u3 FROM cum WHERE cum >= 195),
-        |f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(CAST(n_chars AS BIGINT)) * 1000 // count(*)
-        |      AS BIGINT) AS mean_u3 FROM documents)
-        |SELECT f.n_rows, CAST(200 AS BIGINT) AS b, f.mean_u3,
-        |  lo.ci_lo_u3, hi.ci_hi_u3
-        |FROM f, lo, hi""".stripMargin,
-
-    "q288_markov_accuracy" ->
-      """WITH tr AS MATERIALIZED (SELECT user_id AS u, prev_type,
-        |    event_type AS next_type FROM (
-        |    SELECT user_id, event_type, lag(event_type) OVER (
-        |      PARTITION BY user_id ORDER BY epoch(ts), event_id)
-        |      AS prev_type FROM events)
-        |  WHERE prev_type IS NOT NULL),
-        |md AS (SELECT prev_type, next_type, count(*) AS c FROM tr
-        |  WHERE u % 2 = 0 GROUP BY 1, 2),
-        |pr AS (SELECT prev_type, next_type AS pred FROM (
-        |    SELECT prev_type, next_type, row_number() OVER (
-        |      PARTITION BY prev_type ORDER BY c DESC, next_type) AS rn
-        |    FROM md) WHERE rn = 1)
-        |SELECT tr.prev_type, pr.pred,
-        |  CAST(count(*) AS BIGINT) AS n_trans,
-        |  CAST(sum(CASE WHEN tr.next_type IS NOT DISTINCT FROM pr.pred
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-        |FROM tr LEFT JOIN pr USING (prev_type)
-        |WHERE tr.u % 2 = 1
-        |GROUP BY 1, 2 ORDER BY prev_type""".stripMargin,
-
-    "q289_hilbert" ->
-      s"""WITH hl0 AS (SELECT doc_id, doc_id % 1024 AS x,
-        |    n_chars % 1024 AS y, CAST(0 AS BIGINT) AS d
-        |  FROM documents),
-        |${(1 to 10).map(k => hilbertLevelCte(k, 1L << (10 - k)))
-            .mkString(",\n")}
-        |SELECT doc_id, CAST(d AS BIGINT) AS h FROM hl10""".stripMargin,
-
-    "q290_warc_roundtrip" ->
-      """SELECT doc_id, text FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q291_robots_policy" ->
-      """WITH rp AS (SELECT p_partkey AS k,
-        |    string_split(p_name, ' ') AS ws
-        |  FROM part WHERE p_partkey < 40),
-        |rules AS MATERIALIZED (SELECT
-        |    CASE WHEN k % 2 = 0 THEN 0 ELSE 1 END AS allow,
-        |    CASE WHEN k % 2 = 0 THEN '/' || ws[1]
-        |      ELSE '/' || ws[1] || '/' || ws[2] END AS prefix
-        |  FROM rp),
-        |paths AS (SELECT p_partkey,
-        |    '/' || replace(p_name, ' ', '/') AS path FROM part),
-        |hits AS (SELECT p.p_partkey, p.path, r.allow,
-        |    len(r.prefix) AS l
-        |  FROM paths p JOIN rules r ON starts_with(p.path, r.prefix)),
-        |best AS (SELECT p_partkey, path, max(l) AS ml
-        |  FROM hits GROUP BY 1, 2),
-        |dec AS (SELECT b.p_partkey, max(h.allow) AS allowed
-        |  FROM best b JOIN hits h ON h.p_partkey = b.p_partkey
-        |    AND h.path = b.path AND h.l = b.ml
-        |  GROUP BY 1)
-        |SELECT p.p_partkey, p.path,
-        |  CAST(coalesce(d.allowed, 1) AS BIGINT) AS allowed
-        |FROM paths p LEFT JOIN dec d USING (p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q292_coec" ->
-      """WITH b AS (SELECT event_type AS item, event_id % 10 AS pos,
-        |    CASE WHEN value >= 100.0 THEN 1 ELSE 0 END AS clk
-        |  FROM events),
-        |pr AS (SELECT pos, CAST(sum(clk) AS BIGINT) * 1000000
-        |    // count(*) AS ctr_ppm
-        |  FROM b GROUP BY 1)
-        |SELECT b.item, CAST(count(*) AS BIGINT) AS n_impr,
-        |  CAST(sum(b.clk) AS BIGINT) AS n_clicks,
-        |  CAST(sum(pr.ctr_ppm) AS BIGINT) AS exp_ppm,
-        |  CASE WHEN sum(pr.ctr_ppm) = 0 THEN NULL
-        |    ELSE CAST(CAST(sum(b.clk) AS BIGINT) * 1000000000
-        |      // CAST(sum(pr.ctr_ppm) AS BIGINT) AS BIGINT)
-        |  END AS coec_u3
-        |FROM b JOIN pr USING (pos)
-        |GROUP BY b.item ORDER BY item""".stripMargin,
-
-    "q293_mondrian" ->
-      s"""WITH mr0 AS (SELECT doc_id AS id,
-        |    CAST(n_chars AS BIGINT) AS a,
-        |    CAST(doc_id % 512 AS BIGINT) AS b,
-        |    CAST(1 AS BIGINT) AS pid, FALSE AS fin FROM documents),
-        |${(1 to 4).map(r => mondrianRoundCtes(r, 25)).mkString(",\n")}
-        |SELECT pid, CAST(count(*) AS BIGINT) AS n,
-        |  min(a) AS a_lo, max(a) AS a_hi, min(b) AS b_lo,
-        |  max(b) AS b_hi
-        |FROM mr4 GROUP BY pid ORDER BY pid""".stripMargin,
-
-    "q294_skyline" ->
-      """WITH u AS (SELECT user_id AS id, CAST(count(*) AS BIGINT) AS a,
-        |    CAST(sum(CAST(round(value * 1000, 0) AS BIGINT))
-        |      AS BIGINT) AS b
-        |  FROM events GROUP BY 1),
-        |pa AS (SELECT a, max(b) AS bmax FROM u GROUP BY 1),
-        |fr AS (SELECT a, bmax FROM (
-        |    SELECT a, bmax, max(bmax) OVER (ORDER BY a DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS bprev FROM pa)
-        |  WHERE bprev IS NULL OR bmax > bprev)
-        |SELECT u.id, u.a, u.b FROM u
-        |JOIN fr ON u.a = fr.a AND u.b = fr.bmax
-        |ORDER BY id""".stripMargin,
-
-    "q295_prf_expansion" ->
-      s"""WITH d AS MATERIALIZED (SELECT doc_id,
-        |    string_split(text, ' ') AS toks FROM documents),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    avg(len(toks)) AS avgdl FROM d),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf,
-        |    any_value(dl) AS dl FROM (
-        |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl
-        |    FROM d) u
-        |  WHERE tok IN ('table', 'scan', 'merge')
-        |  GROUP BY doc_id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE)
-        |    AS df FROM (
-        |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
-        |sc AS (SELECT t.doc_id,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |top AS MATERIALIZED (SELECT doc_id,
-        |    CAST(round(round(sum(s), 6) * 1000000, 0) AS BIGINT) AS w
-        |  FROM sc GROUP BY doc_id
-        |  ORDER BY round(sum(s), 6) DESC, doc_id LIMIT 10),
-        |ex AS (SELECT u.doc_id, u.tok, top.w FROM (
-        |    SELECT doc_id, unnest(toks) AS tok FROM d) u
-        |  JOIN top USING (doc_id)
-        |  WHERE u.tok <> ''
-        |    AND u.tok NOT IN ('table', 'scan', 'merge'))
-        |SELECT tok AS term,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS df_fb,
-        |  CAST(sum(w) AS BIGINT) AS w_sum
-        |FROM ex GROUP BY 1
-        |ORDER BY w_sum DESC, term LIMIT 20""".stripMargin,
-
-    "q296_holt_smoothing" ->
-      """WITH RECURSIVE ev AS MATERIALIZED (SELECT * FROM (
-        |  SELECT user_id % 16 AS key, row_number() OVER (
-        |      PARTITION BY user_id % 16
-        |      ORDER BY epoch(ts), event_id) AS rn,
-        |    CAST(round(value * 1000, 0) AS BIGINT) AS y
-        |  FROM events) WHERE rn <= 256),
-        |hw AS (
-        |  SELECT key, CAST(1 AS BIGINT) AS t, y AS l,
-        |    CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS sae
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.key, s.t + 1,
-        |    (300000 * e.y + 700000 * (s.l + s.b)) // 1000000,
-        |    (100000 * (((300000 * e.y + 700000 * (s.l + s.b))
-        |        // 1000000) - s.l) + 900000 * s.b) // 1000000,
-        |    s.sae + abs(e.y - (s.l + s.b))
-        |  FROM hw s JOIN ev e ON e.key = s.key AND e.rn = s.t + 1),
-        |fin AS (SELECT * FROM hw QUALIFY row_number() OVER (
-        |  PARTITION BY key ORDER BY t DESC) = 1)
-        |SELECT key, t AS n, CAST(l AS BIGINT) AS level_u3,
-        |  CAST(b AS BIGINT) AS trend_u3, CAST(sae AS BIGINT) AS sae_u3,
-        |  CAST(l + b AS BIGINT) AS forecast_u3
-        |FROM fin ORDER BY key""".stripMargin,
-
-    "q297_sorted_neighborhood" ->
-      """WITH rk AS (SELECT c_custkey AS id,
-        |    CAST(floor(c_acctbal * 100) AS BIGINT) AS k,
-        |    row_number() OVER (ORDER BY
-        |      CAST(floor(c_acctbal * 100) AS BIGINT), c_custkey) AS rn
-        |  FROM customer)
-        |SELECT a.id AS id1, b.id AS id2,
-        |  CAST(b.k - a.k AS BIGINT) AS d_cents
-        |FROM rk a JOIN rk b ON b.rn - a.rn IN (1, 2)
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q298_schema_match" ->
-      """WITH va AS MATERIALIZED (
-        |  SELECT 'c_custkey' AS col_a,
-        |    CAST(c_custkey AS VARCHAR) AS v FROM customer
-        |  UNION SELECT 'c_nationkey',
-        |    CAST(c_nationkey AS VARCHAR) FROM customer
-        |  UNION SELECT 'c_mktsegment',
-        |    CAST(c_mktsegment AS VARCHAR) FROM customer
-        |  UNION SELECT 'c_bal',
-        |    CAST(CAST(floor(c_acctbal) AS BIGINT) AS VARCHAR)
-        |    FROM customer),
-        |vb AS MATERIALIZED (
-        |  SELECT 's_suppkey' AS col_b,
-        |    CAST(s_suppkey AS VARCHAR) AS v FROM supplier
-        |  UNION SELECT 's_nationkey',
-        |    CAST(s_nationkey AS VARCHAR) FROM supplier
-        |  UNION SELECT 's_bal',
-        |    CAST(CAST(floor(s_acctbal) AS BIGINT) AS VARCHAR)
-        |    FROM supplier),
-        |na AS (SELECT col_a, CAST(count(*) AS BIGINT) AS n_a
-        |  FROM va GROUP BY 1),
-        |nb AS (SELECT col_b, CAST(count(*) AS BIGINT) AS n_b
-        |  FROM vb GROUP BY 1),
-        |ov AS (SELECT va.col_a, vb.col_b,
-        |    CAST(count(*) AS BIGINT) AS n_common
-        |  FROM va JOIN vb USING (v) GROUP BY 1, 2)
-        |SELECT ov.col_a, ov.col_b, na.n_a, nb.n_b, ov.n_common,
-        |  CAST(ov.n_common * 1000000
-        |    // (na.n_a + nb.n_b - ov.n_common) AS BIGINT) AS jaccard_pm
-        |FROM ov JOIN na USING (col_a) JOIN nb USING (col_b)
-        |ORDER BY col_a, col_b""".stripMargin,
-
-    "q299_ndcg" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
-        |    label AS qlabel FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS doc_id, embedding AS cv,
-        |    label AS clabel FROM embeddings),
-        |p AS (SELECT query_id, doc_id,
-        |    unnest(cv)::DOUBLE AS x, unnest(qv)::DOUBLE AS y
-        |  FROM q, c WHERE doc_id <> query_id),
-        |cs AS (SELECT query_id, doc_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6)
-        |      AS cos
-        |  FROM p GROUP BY 1, 2),
-        |ranked AS MATERIALIZED (SELECT query_id, doc_id, rank FROM (
-        |    SELECT query_id, doc_id, row_number() OVER (
-        |      PARTITION BY query_id ORDER BY cos DESC, doc_id) AS rank
-        |    FROM cs) WHERE rank <= 10),
-        |rel AS MATERIALIZED (SELECT q.query_id, c.doc_id FROM q
-        |  JOIN c ON q.qlabel = c.clabel AND c.doc_id <> q.query_id),
-        |relc AS (SELECT query_id, CAST(count(*) AS BIGINT)
-        |    AS n_relevant FROM rel GROUP BY 1),
-        |w AS (SELECT i + 1 AS rank,
-        |    CAST(round(1000000 / log2(i + 2), 0) AS BIGINT) AS w
-        |  FROM range(10) t(i)),
-        |cw AS (SELECT 0 AS j, CAST(0 AS BIGINT) AS cw
-        |  UNION ALL SELECT rank, CAST(sum(w) OVER (ORDER BY rank
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) FROM w),
-        |d AS (SELECT r.query_id, CAST(sum(CASE WHEN rel.doc_id
-        |      IS NOT NULL THEN w.w ELSE 0 END) AS BIGINT) AS dcg_u6
-        |  FROM ranked r JOIN w ON w.rank = r.rank
-        |  LEFT JOIN rel ON rel.query_id = r.query_id
-        |    AND rel.doc_id = r.doc_id
-        |  GROUP BY 1),
-        |f AS (SELECT qq.query_id,
-        |    coalesce(relc.n_relevant, 0) AS n_relevant,
-        |    coalesce(d.dcg_u6, 0) AS dcg_u6
-        |  FROM (SELECT DISTINCT query_id FROM ranked) qq
-        |  LEFT JOIN relc USING (query_id) LEFT JOIN d USING (query_id))
-        |SELECT f.query_id, f.n_relevant, f.dcg_u6,
-        |  CASE WHEN cw.cw = 0 THEN NULL
-        |    ELSE CAST(f.dcg_u6 * 1000000 // cw.cw AS BIGINT)
-        |  END AS ndcg_ppm
-        |FROM f JOIN cw ON cw.j = least(f.n_relevant, 10)
-        |ORDER BY query_id""".stripMargin,
-
-    "q300_release_funnel" ->
-      """WITH tk AS (SELECT doc_id, n_sents, t AS tok FROM (
-        |    SELECT doc_id, greatest(len(regexp_extract_all(text,
-        |      '[.!?]+')), 1) AS n_sents,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |fl AS MATERIALIZED (SELECT doc_id,
-        |    CAST(206835 - (1015 * n_words) // n_sents
-        |      - (84600 * n_syll) // n_words AS BIGINT) AS flesch_u3
-        |  FROM (SELECT doc_id, CAST(n_sents AS BIGINT) AS n_sents,
-        |      CAST(count(*) AS BIGINT) AS n_words,
-        |      CAST(sum(greatest(len(regexp_extract_all(tok,
-        |        '[aeiouy]+')), 1)) AS BIGINT) AS n_syll
-        |    FROM tk GROUP BY 1, 2)),
-        |ec AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-        |  FROM tk GROUP BY 1, 2),
-        |et AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok
-        |  FROM ec GROUP BY 1),
-        |en AS MATERIALIZED (SELECT ec.doc_id,
-        |    CAST(sum(ec.c * CAST(round(log10(CAST(et.n_tok AS DOUBLE)
-        |      / ec.c) * 1000000, 0) AS BIGINT)) // et.n_tok AS BIGINT)
-        |      AS entropy_u6
-        |  FROM ec JOIN et USING (doc_id)
-        |  GROUP BY ec.doc_id, et.n_tok),
-        |kp AS (SELECT min(doc_id) AS doc_id FROM documents
-        |  GROUP BY md5(text)),
-        |b AS (SELECT d.doc_id, d.lang, d.n_chars,
-        |    CASE WHEN d.n_chars >= 100 THEN 1 ELSE 0 END AS g_len,
-        |    CASE WHEN coalesce(fl.flesch_u3, -1) >= 0
-        |      THEN 1 ELSE 0 END AS g_read,
-        |    CASE WHEN coalesce(en.entropy_u6, -1) >= 1200000
-        |      THEN 1 ELSE 0 END AS g_ent,
-        |    CASE WHEN kp.doc_id IS NOT NULL THEN 1 ELSE 0 END
-        |      AS g_dedup
-        |  FROM documents d LEFT JOIN fl USING (doc_id)
-        |  LEFT JOIN en USING (doc_id)
-        |  LEFT JOIN kp ON kp.doc_id = d.doc_id)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n0,
-        |  CAST(sum(g_len) AS BIGINT) AS n_len,
-        |  CAST(sum(g_len * g_read) AS BIGINT) AS n_read,
-        |  CAST(sum(g_len * g_read * g_ent) AS BIGINT) AS n_ent,
-        |  CAST(sum(g_len * g_read * g_ent * g_dedup) AS BIGINT)
-        |    AS n_final,
-        |  CAST(CAST(sum(g_len * g_read * g_ent * g_dedup * n_chars)
-        |    AS BIGINT) * 1000 // greatest(CAST(sum(g_len * g_read
-        |    * g_ent * g_dedup) AS BIGINT), 1) AS BIGINT)
-        |    AS mean_chars_u3
-        |FROM b GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q301_logo_valuation" -> {
-      def excl(g: Int) =
-        s" AND CAST(substr(source, 4) AS INT) % 4 <> $g"
-      val branches = Seq(("f", "__full__", "")) ++
-        (0 to 3).map(g => (s"g$g", g.toString, excl(g)))
-      s"""WITH te AS MATERIALIZED (SELECT * FROM documents
-        |  WHERE doc_id % 5 = 0),
-        |tet AS MATERIALIZED (SELECT id, tok,
-        |    CAST(count(*) AS BIGINT) AS n FROM (
-        |    SELECT doc_id AS id,
-        |      unnest(string_split_regex(lower(trim(text)), '\\s+'))
-        |        AS tok
-        |    FROM te) WHERE tok <> '' GROUP BY 1, 2),
-        |${branches.map { case (p, l, e) => nbLogoBranch(p, l, e) }
-            .mkString(",\n")}
-        |SELECT b.left_out, b.n_test, b.n_correct,
-        |  CAST(f.n_correct - b.n_correct AS BIGINT) AS delta_correct
-        |FROM (${branches.map(b => s"SELECT * FROM ${b._1}sum")
-            .mkString(" UNION ALL ")}) b, fsum f
-        |ORDER BY b.left_out""".stripMargin
-    },
-
-    "q302_mlm_masking" ->
-      """WITH tk AS MATERIALIZED (SELECT doc_id AS id, idx AS pos,
-        |    parts[idx + 1] AS tok FROM (
-        |    SELECT doc_id, parts, unnest(range(len(parts))) AS idx
-        |    FROM (SELECT doc_id,
-        |      string_split_regex(lower(trim(text)), '\s+') AS parts
-        |      FROM documents))
-        |  WHERE parts[idx + 1] <> ''),
-        |sel AS MATERIALIZED (SELECT * FROM (
-        |    SELECT id, pos, tok, CAST('0x' ||
-        |      substr(md5(CAST(id AS VARCHAR) || ':'
-        |        || CAST(pos AS VARCHAR)), 1, 8) AS BIGINT) AS u
-        |    FROM tk)
-        |  WHERE u * 1000000 < 644245094400000),
-        |vocab AS MATERIALIZED (SELECT tok AS repl,
-        |    row_number() OVER (ORDER BY tok) - 1 AS vr
-        |  FROM (SELECT DISTINCT tok FROM tk)),
-        |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM vocab)
-        |SELECT s.id, CAST(s.pos AS BIGINT) AS pos, s.tok,
-        |  CASE WHEN s.u % 10 < 8 THEN 'mask'
-        |    WHEN s.u % 10 = 8 THEN 'random' ELSE 'keep' END AS action,
-        |  CASE WHEN s.u % 10 = 8 THEN vo.repl END AS repl
-        |FROM sel s CROSS JOIN vv
-        |LEFT JOIN vocab vo ON vo.vr = (s.u // 10) % vv.v
-        |ORDER BY id, pos""".stripMargin,
-
-    "q303_fleiss_kappa" ->
-      """WITH r AS MATERIALIZED (
-        |  SELECT doc_id, CAST(lang AS VARCHAR) AS lbl FROM documents
-        |  UNION ALL SELECT doc_id, CASE WHEN CAST('0x' ||
-        |      substr(md5('a:' || CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) * 1000000 < 858993459200000
-        |    THEN 'xx' ELSE CAST(lang AS VARCHAR) END FROM documents
-        |  UNION ALL SELECT doc_id, CASE WHEN CAST('0x' ||
-        |      substr(md5('b:' || CAST(doc_id AS VARCHAR)), 1, 8)
-        |      AS BIGINT) * 1000000 < 1288490188800000
-        |    THEN 'xx' ELSE CAST(lang AS VARCHAR) END FROM documents),
-        |cell AS MATERIALIZED (SELECT doc_id, lbl,
-        |    CAST(count(*) AS BIGINT) AS nic FROM r GROUP BY 1, 2),
-        |tt AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(agree) AS HUGEINT) AS sa FROM (
-        |    SELECT doc_id, sum(nic * (nic - 1)) AS agree
-        |    FROM cell GROUP BY 1)),
-        |ss AS (SELECT CAST(sum(tc * tc) AS HUGEINT) AS s2 FROM (
-        |    SELECT lbl, CAST(sum(nic) AS BIGINT) AS tc
-        |    FROM cell GROUP BY 1))
-        |SELECT CAST(tt.n AS BIGINT) AS n_items,
-        |  CAST(3 AS BIGINT) AS n_raters, CAST(tt.sa AS BIGINT) AS sa,
-        |  CAST(ss.s2 AS BIGINT) AS s2,
-        |  CAST((tt.sa * (tt.n * 3) * (tt.n * 3)
-        |      - ss.s2 * (tt.n * 6)) * 1000000
-        |    // ((tt.n * 6) * ((tt.n * 3) * (tt.n * 3) - ss.s2))
-        |    AS BIGINT) AS kappa_u6
-        |FROM tt, ss""".stripMargin,
-
-    "q304_consistent_hashing" -> {
-      def ring(p: String, n: Int) =
-        s"""${p} AS MATERIALIZED (SELECT node, CAST('0x' ||
-           |    substr(md5(node || ':' || CAST(v AS VARCHAR)), 1, 8)
-           |    AS BIGINT) AS point
-           |  FROM (SELECT 'node' || CAST(i AS VARCHAR) AS node
-           |    FROM range($n) t(i)), range(64) s(v))"""
-      def assign(p: String, r: String, out: String) =
-        s"""${p}a AS (SELECT id, node FROM (
-           |    SELECT k.id, r.node, row_number() OVER (
-           |      PARTITION BY k.id ORDER BY r.point, r.node) AS rn
-           |    FROM keys k JOIN $r r ON r.point >= k.kp)
-           |  WHERE rn = 1),
-           |${p}w AS (SELECT node FROM $r ORDER BY point, node LIMIT 1),
-           |${p}f AS (SELECT k.id, coalesce(a.node, w.node) AS $out
-           |  FROM keys k LEFT JOIN ${p}a a ON a.id = k.id, ${p}w w)"""
-      s"""WITH ${ring("r4", 4)},
-        |${ring("r5", 5)},
-        |keys AS MATERIALIZED (SELECT doc_id AS id, CAST('0x' ||
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        |    AS kp FROM documents),
-        |${assign("b", "r4", "node_before")},
-        |${assign("c", "r5", "node_after")}
-        |SELECT bf.node_before, cf.node_after,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM bf JOIN cf USING (id)
-        |GROUP BY 1, 2 ORDER BY node_before, node_after""".stripMargin
-    },
-
-    "q305_uncertainty_queue" ->
-      s"""WITH te AS MATERIALIZED (SELECT * FROM documents
-        |  WHERE doc_id % 5 = 0),
-        |tet AS MATERIALIZED (SELECT id, tok,
-        |    CAST(count(*) AS BIGINT) AS n FROM (
-        |    SELECT doc_id AS id,
-        |      unnest(string_split_regex(lower(trim(text)), '\\s+'))
-        |        AS tok
-        |    FROM te) WHERE tok <> '' GROUP BY 1, 2),
-        |${nbLogoBranch("f", "__full__", "")},
-        |tot AS (SELECT sc.id, sc.cls,
-        |    CAST(sc.s + pri.prior_u6 AS BIGINT) AS score
-        |  FROM fsc sc JOIN fpri pri USING (cls)),
-        |r2 AS (SELECT id, cls, score, row_number() OVER (
-        |    PARTITION BY id ORDER BY score DESC, cls) AS rn FROM tot)
-        |SELECT a.id AS doc_id, a.cls AS top_cls,
-        |  CAST(a.score - b.score AS BIGINT) AS margin_u6
-        |FROM r2 a JOIN r2 b ON b.id = a.id AND a.rn = 1 AND b.rn = 2
-        |ORDER BY margin_u6, doc_id LIMIT 20""".stripMargin,
-
-    "q306_tfidf_cosine" ->
-      """WITH d AS (SELECT doc_id, text || ' rare'
-        |    || CAST(doc_id // 7 AS VARCHAR) AS text FROM documents),
-        |tk AS MATERIALIZED (SELECT doc_id AS id, t AS tok,
-        |    CAST(count(*) AS BIGINT) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)),
-        |      '\s+')) AS t FROM d) WHERE t <> '' GROUP BY 1, 2),
-        |dft AS MATERIALIZED (SELECT tok, CAST(count(*) AS BIGINT)
-        |    AS df FROM tk GROUP BY 1),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-        |w AS MATERIALIZED (SELECT tk.id, tk.tok,
-        |    tk.tf * CAST(round(ln(CAST(nn.n AS DOUBLE) / dft.df)
-        |      * 1000000, 0) AS BIGINT) AS w
-        |  FROM tk JOIN dft USING (tok), nn),
-        |nrm AS (SELECT id, sqrt(CAST(sum(w * w) AS DOUBLE)) AS nrm
-        |  FROM w GROUP BY 1),
-        |rare AS (SELECT tok FROM dft WHERE df >= 2 AND df <= 20),
-        |pst AS (SELECT tk.tok, tk.id FROM tk JOIN rare USING (tok)),
-        |cand AS MATERIALIZED (SELECT DISTINCT a.id AS id1, b.id AS id2
-        |  FROM pst a JOIN pst b ON a.tok = b.tok AND a.id < b.id),
-        |dots AS (SELECT c.id1, c.id2,
-        |    CAST(sum(w1.w * w2.w) AS BIGINT) AS dot_w
-        |  FROM cand c
-        |  JOIN w w1 ON w1.id = c.id1
-        |  JOIN w w2 ON w2.id = c.id2 AND w2.tok = w1.tok
-        |  GROUP BY 1, 2)
-        |SELECT dots.id1, dots.id2, dots.dot_w,
-        |  round(CAST(dots.dot_w AS DOUBLE) / (a.nrm * b.nrm), 6) AS cos
-        |FROM dots JOIN nrm a ON a.id = dots.id1
-        |JOIN nrm b ON b.id = dots.id2
-        |ORDER BY cos DESC, id1, id2 LIMIT 20""".stripMargin,
-
-    "q307_haar_sketch" -> {
-      def lvl(k: Int) =
-        s"""lvl$k AS MATERIALIZED (SELECT i // 2 AS i,
-           |    CAST(sum(x) AS BIGINT) AS x,
-           |    CAST(sum(CASE WHEN i % 2 = 0 THEN x ELSE -x END)
-           |      AS BIGINT) AS d
-           |  FROM lvl${k - 1} GROUP BY 1)"""
-      s"""WITH m AS (SELECT CAST(min(epoch(ts)) AS BIGINT) AS t0
-        |  FROM events),
-        |cnt AS (SELECT h, CAST(count(*) AS BIGINT) AS x FROM (
-        |    SELECT (CAST(epoch(ts) AS BIGINT) - m.t0) // 3600 AS h
-        |    FROM events, m)
-        |  WHERE h >= 0 AND h < 256 GROUP BY 1),
-        |lvl0 AS MATERIALIZED (SELECT r.i, coalesce(cnt.x, 0) AS x
-        |  FROM (SELECT unnest(range(256)) AS i) r
-        |  LEFT JOIN cnt ON cnt.h = r.i),
-        |${(1 to 8).map(lvl).mkString(",\n")},
-        |det AS (${(1 to 8).map(k =>
-            s"SELECT CAST(${k - 1} AS BIGINT) AS level, " +
-            s"CAST(i AS BIGINT) AS idx, d AS coef FROM lvl$k")
-            .mkString("\nUNION ALL ")}),
-        |top AS (SELECT level, idx, coef FROM det
-        |  ORDER BY abs(coef) DESC, level, idx LIMIT 16)
-        |SELECT CAST(8 AS BIGINT) AS level, CAST(i AS BIGINT) AS idx,
-        |  CAST(x AS BIGINT) AS coef FROM lvl8
-        |UNION ALL SELECT level, idx, CAST(coef AS BIGINT) FROM top"""
-        .stripMargin
-    },
-
-    "q308_ransac_line" ->
-      """WITH p AS MATERIALIZED (SELECT
-        |    row_number() OVER (ORDER BY doc_id) AS rn,
-        |    CAST(doc_id AS BIGINT) AS x,
-        |    CAST(n_chars AS BIGINT) AS y FROM documents),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM p),
-        |cd AS MATERIALIZED (SELECT r, x1, y1,
-        |    CAST((y2 - y1) * 1000000 // (x2 - x1) AS BIGINT)
-        |      AS slope_u6 FROM (
-        |    SELECT rr.r, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
-        |    FROM (SELECT r,
-        |        CAST('0x' || substr(md5('a:' || CAST(r AS VARCHAR)),
-        |          1, 8) AS BIGINT) % nn.n + 1 AS r1,
-        |        CAST('0x' || substr(md5('b:' || CAST(r AS VARCHAR)),
-        |          1, 8) AS BIGINT) % nn.n + 1 AS r2
-        |      FROM (SELECT unnest(range(32)) AS r), nn) rr
-        |    JOIN p a ON a.rn = rr.r1 JOIN p b ON b.rn = rr.r2
-        |    WHERE rr.r1 <> rr.r2 AND a.x <> b.x)),
-        |sc AS (SELECT c.r, c.x1, c.y1, c.slope_u6,
-        |    CAST(count(*) AS BIGINT) AS n_inliers
-        |  FROM p, cd c
-        |  WHERE abs(p.y - (c.y1 + (c.slope_u6 * (p.x - c.x1))
-        |    // 1000000)) <= 60
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT CAST(r AS BIGINT) AS r, x1, y1, slope_u6, n_inliers
-        |FROM sc ORDER BY n_inliers DESC, r LIMIT 1""".stripMargin,
-
-    "q309_rendezvous_hashing" -> {
-      def assign(p: String, n: Int, out: String) =
-        s"""${p} AS MATERIALIZED (SELECT id, node AS $out FROM (
-           |    SELECT d.doc_id AS id, nd.node, row_number() OVER (
-           |      PARTITION BY d.doc_id ORDER BY CAST('0x' ||
-           |        substr(md5(nd.node || ':'
-           |          || CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-           |        DESC, nd.node) AS rn
-           |    FROM documents d, (SELECT 'node' || CAST(i AS VARCHAR)
-           |      AS node FROM range($n) t(i)) nd)
-           |  WHERE rn = 1)"""
-      s"""WITH ${assign("b5", 5, "node_before")},
-        |${assign("a4", 4, "node_after")}
-        |SELECT b5.node_before, a4.node_after,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM b5 JOIN a4 USING (id)
-        |GROUP BY 1, 2 ORDER BY node_before, node_after""".stripMargin
-    },
-
-    "q310_dormant_accounts" ->
-      """WITH c AS (SELECT c_custkey, c_nationkey,
-        |    CAST(floor(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer),
-        |t AS (SELECT CAST(sum(cents) AS BIGINT) // count(*) AS thr
-        |  FROM c),
-        |cut AS (SELECT max(o_orderdate) - INTERVAL 90 DAY AS cut
-        |  FROM orders)
-        |SELECT c.c_nationkey, CAST(count(*) AS BIGINT) AS n_cust,
-        |  CAST(sum(c.cents) AS BIGINT) AS sum_cents
-        |FROM c, t, cut
-        |WHERE c.cents > t.thr
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |    WHERE o.o_custkey = c.c_custkey
-        |      AND o.o_orderdate > cut.cut)
-        |GROUP BY 1 ORDER BY c_nationkey""".stripMargin,
-
-    "q311_lsh_param_sweep" ->
-      """WITH pr AS (SELECT b, r FROM
-        |    (SELECT unnest(range(1, 65)) AS b),
-        |    (SELECT unnest(range(1, 65)) AS r)
-        |  WHERE b * r <= 64),
-        |sc AS (SELECT b, r,
-        |    CAST(round((1 - pow(1 - pow(800000.0 / 1000000.0,
-        |      CAST(r AS DOUBLE)), CAST(b AS DOUBLE))) * 1000000, 0)
-        |      AS BIGINT) AS p_at_ppm,
-        |    CAST(round((1 - pow(1 - pow(800000.0 / 1000000.0 - 0.1,
-        |      CAST(r AS DOUBLE)), CAST(b AS DOUBLE))) * 1000000, 0)
-        |      AS BIGINT) AS p_lo_ppm,
-        |    CAST(round((1 - pow(1 - pow(800000.0 / 1000000.0 + 0.1,
-        |      CAST(r AS DOUBLE)), CAST(b AS DOUBLE))) * 1000000, 0)
-        |      AS BIGINT) AS p_hi_ppm
-        |  FROM pr),
-        |g AS (SELECT b, r, p_at_ppm, p_lo_ppm, p_hi_ppm,
-        |    p_hi_ppm - p_lo_ppm AS gap_ppm FROM sc)
-        |SELECT CAST(b AS BIGINT) AS b, CAST(r AS BIGINT) AS r,
-        |  p_at_ppm, p_lo_ppm, p_hi_ppm, CAST(gap_ppm AS BIGINT)
-        |    AS gap_ppm,
-        |  CAST(CASE WHEN row_number() OVER (ORDER BY gap_ppm DESC,
-        |    b, r) = 1 THEN 1 ELSE 0 END AS BIGINT) AS recommended
-        |FROM g ORDER BY b, r""".stripMargin,
-
-    "q312_personalized_pagerank" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT doc_id % 50 AS src,
-        |      ((doc_id % 50) * (doc_id % 50) + 3) % 50 AS dst
-        |    FROM documents
-        |    UNION ALL
-        |    SELECT doc_id % 50 AS src, ((doc_id % 50) * 3 + 7) % 50 AS dst
-        |    FROM documents) WHERE src <> dst),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-        |outdeg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-        |e0 AS (SELECT src, dst, 1 AS w FROM e
-        |  UNION ALL SELECT id, id, 0 FROM nodes),
-        |pr(id, rank, iter) AS (
-        |  SELECT id, CAST(CASE WHEN id % 10 = 0 THEN 1000000000
-        |    ELSE 0 END AS BIGINT), 0 FROM nodes
-        |  UNION ALL
-        |  SELECT e0.dst,
-        |    CAST(CASE WHEN e0.dst % 10 = 0 THEN 150000000 ELSE 0 END
-        |      + SUM(e0.w * ((p.rank * 85) // (100 * COALESCE(o.outdeg, 1))))
-        |      AS BIGINT),
-        |    p.iter + 1
-        |  FROM pr p
-        |  JOIN e0 ON e0.src = p.id
-        |  LEFT JOIN outdeg o ON o.src = e0.src
-        |  WHERE p.iter < 5
-        |  GROUP BY e0.dst, p.iter)
-        |SELECT id, rank FROM pr WHERE iter = 5""".stripMargin,
-
-    "q313_acf" ->
-      """WITH m AS (SELECT CAST(min(epoch_us(ts) // 1000000) AS BIGINT)
-        |    AS t0 FROM events),
-        |cnt AS (SELECT k, h, CAST(count(*) AS BIGINT) AS x FROM (
-        |    SELECT event_type AS k,
-        |      (epoch_us(ts) // 1000000 - m.t0) // 3600 AS h
-        |    FROM events, m)
-        |  WHERE h >= 0 AND h < 256 GROUP BY 1, 2),
-        |keys AS (SELECT DISTINCT k FROM cnt),
-        |grid AS (SELECT keys.k, r.h, COALESCE(cnt.x, 0) AS x
-        |  FROM keys CROSS JOIN (SELECT unnest(range(256)) AS h) r
-        |  LEFT JOIN cnt ON cnt.k = keys.k AND cnt.h = r.h),
-        |st AS (SELECT k, CAST(sum(x) AS BIGINT) AS s
-        |  FROM grid GROUP BY 1),
-        |cg AS MATERIALIZED (SELECT g.k, g.h,
-        |    CAST(256 * g.x - st.s AS BIGINT) AS c
-        |  FROM grid g JOIN st ON st.k = g.k),
-        |den AS (SELECT k, CAST(sum(c * c) AS BIGINT) AS den
-        |  FROM cg GROUP BY 1),
-        |num AS (SELECT a.k, l.lag, CAST(sum(a.c * b.c) AS BIGINT)
-        |    AS num
-        |  FROM (SELECT unnest([1, 2, 24]) AS lag) l, cg a, cg b
-        |  WHERE b.k = a.k AND b.h = a.h - l.lag
-        |  GROUP BY 1, 2)
-        |SELECT n.k AS event_type, CAST(n.lag AS BIGINT) AS lag,
-        |  CAST(CAST(n.num AS HUGEINT) * 1000000 // NULLIF(d.den, 0)
-        |    AS BIGINT) AS acf_ppm
-        |FROM num n JOIN den d ON d.k = n.k
-        |ORDER BY event_type, lag""".stripMargin,
-
-    "q314_sprt" ->
-      """WITH obs AS (SELECT event_type AS k, ts, event_id AS seq,
-        |    CASE WHEN value >= 100.0 THEN 405465 ELSE -405465 END
-        |      AS inc
-        |  FROM events),
-        |walk AS (SELECT k,
-        |    ROW_NUMBER() OVER (PARTITION BY k ORDER BY ts, seq) AS n,
-        |    CAST(SUM(inc) OVER (PARTITION BY k ORDER BY ts, seq
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS llr
-        |  FROM obs),
-        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total_n,
-        |    CAST(sum(inc) AS BIGINT) AS final_llr
-        |  FROM obs GROUP BY 1),
-        |crs AS (SELECT k, n, llr,
-        |    ROW_NUMBER() OVER (PARTITION BY k ORDER BY n) AS rn
-        |  FROM walk WHERE llr >= 2944439 OR llr <= -2944439),
-        |fc AS (SELECT k, n AS n_cross, llr AS llr_cross
-        |  FROM crs WHERE rn = 1)
-        |SELECT t.k AS event_type,
-        |  CASE WHEN f.n_cross IS NULL THEN 'continue'
-        |       WHEN f.llr_cross >= 2944439 THEN 'accept_h1'
-        |       ELSE 'accept_h0' END AS decision,
-        |  CAST(COALESCE(f.n_cross, t.total_n) AS BIGINT) AS n_obs,
-        |  COALESCE(f.llr_cross, t.final_llr) AS llr_u6
-        |FROM tot t LEFT JOIN fc f ON f.k = t.k
-        |ORDER BY event_type""".stripMargin,
-
-    "q315_join_size_est" ->
-      """WITH va AS (SELECT CAST(l_partkey AS VARCHAR) AS v
-        |  FROM lineitem WHERE l_partkey IS NOT NULL),
-        |cm AS (SELECT row,
-        |    CAST('0x' || substr(md5(CAST(row AS VARCHAR) || '#' || v),
-        |      1, 8) AS BIGINT) % 64 AS bucket,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM va CROSS JOIN (SELECT unnest(range(4)) AS row)
-        |  GROUP BY 1, 2),
-        |inn AS (SELECT a.row,
-        |    CAST(sum(CAST(a.c AS HUGEINT) * COALESCE(b.c, 0))
-        |      AS HUGEINT) AS ih
-        |  FROM cm a LEFT JOIN cm b
-        |    ON b.row = a.row AND b.bucket = a.bucket
-        |  GROUP BY 1),
-        |est AS (SELECT min(ih) AS eh FROM inn),
-        |kc AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM va
-        |  GROUP BY 1),
-        |ex AS (SELECT COALESCE(CAST(sum(CAST(c AS HUGEINT) * c)
-        |    AS HUGEINT), 0) AS xh FROM kc)
-        |SELECT CAST(i.row AS BIGINT) AS hash_row,
-        |  CAST(i.ih AS BIGINT) AS "inner",
-        |  CAST(est.eh AS BIGINT) AS est,
-        |  CAST(ex.xh AS BIGINT) AS exact_size,
-        |  CASE WHEN ex.xh = 0 THEN NULL
-        |       ELSE CAST((est.eh - ex.xh) * 1000000 // ex.xh AS BIGINT)
-        |  END AS over_ppm
-        |FROM inn i, est, ex
-        |ORDER BY hash_row""".stripMargin,
-
-    "q316_pruning_audit" ->
-      """WITH base AS (SELECT o_orderkey AS id, o_custkey AS x,
-        |    CAST(round(o_totalprice) AS BIGINT) AS y FROM orders),
-        |preds(pred_id, x_lo, x_hi, y_lo, y_hi) AS (VALUES
-        |  (0, 10, 25, 0, 1000000),
-        |  (1, 0, 10000000, 50000, 100000),
-        |  (2, 10, 100, 50000, 150000),
-        |  (3, 0, 400, 0, 200000)),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
-        |lay AS (
-        |  SELECT 'linear_x' AS layout, id, x, y, x AS k FROM base
-        |  UNION ALL
-        |  SELECT 'zorder', id, x, y,
-        |    (SELECT CAST(SUM((((x >> i) & 1) << (2*i)) +
-        |                     (((y >> i) & 1) << (2*i + 1))) AS BIGINT)
-        |     FROM range(21) t(i))
-        |  FROM base),
-        |ranked AS (SELECT layout, x, y,
-        |    ROW_NUMBER() OVER (PARTITION BY layout ORDER BY k, id)
-        |      AS rn
-        |  FROM lay),
-        |zones AS MATERIALIZED (SELECT layout,
-        |    (rn - 1) * 16 // nn.n AS file,
-        |    min(x) AS xmn, max(x) AS xmx, min(y) AS ymn, max(y) AS ymx,
-        |    CAST(count(*) AS BIGINT) AS n_rows
-        |  FROM ranked, nn GROUP BY 1, 2),
-        |ft AS (SELECT layout, CAST(count(*) AS BIGINT) AS files_total
-        |  FROM zones GROUP BY 1),
-        |lp AS (SELECT f.layout, p.pred_id, p.x_lo, p.x_hi, p.y_lo,
-        |    p.y_hi, f.files_total
-        |  FROM ft f CROSS JOIN preds p),
-        |rd AS (SELECT lp.layout, lp.pred_id, lp.files_total,
-        |    CAST(count(z.file) AS BIGINT) AS files_read,
-        |    CAST(COALESCE(sum(z.n_rows), 0) AS BIGINT) AS rows_scanned
-        |  FROM lp LEFT JOIN zones z ON z.layout = lp.layout
-        |    AND z.xmx >= lp.x_lo AND z.xmn <= lp.x_hi
-        |    AND z.ymx >= lp.y_lo AND z.ymn <= lp.y_hi
-        |  GROUP BY 1, 2, 3),
-        |mt AS (SELECT p.pred_id,
-        |    CAST(count(b.id) AS BIGINT) AS rows_matched
-        |  FROM preds p LEFT JOIN base b
-        |    ON b.x BETWEEN p.x_lo AND p.x_hi
-        |    AND b.y BETWEEN p.y_lo AND p.y_hi
-        |  GROUP BY 1)
-        |SELECT rd.layout, CAST(rd.pred_id AS BIGINT) AS pred_id,
-        |  rd.files_total, rd.files_read, rd.rows_scanned,
-        |  mt.rows_matched,
-        |  (rd.files_total - rd.files_read) * 1000000 // rd.files_total
-        |    AS prune_ppm,
-        |  CASE WHEN mt.rows_matched = 0 THEN NULL
-        |       ELSE rd.rows_scanned * 1000000 // mt.rows_matched
-        |  END AS amp_ppm
-        |FROM rd JOIN mt ON mt.pred_id = rd.pred_id
-        |ORDER BY layout, pred_id""".stripMargin,
-
-    "q317_salt_plan" ->
-      """WITH kc AS (SELECT CAST(event_type AS VARCHAR) AS k,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1),
-        |plan AS (SELECT k, cnt, (cnt + 499) // 500 AS s FROM kc),
-        |bef AS (SELECT
-        |    CAST('0x' || substr(md5(k), 1, 8) AS BIGINT) % 16 AS p,
-        |    CAST(sum(cnt) AS BIGINT) AS lb
-        |  FROM plan GROUP BY 1),
-        |reps AS (SELECT k, cnt, s, unnest(range(s)) AS i FROM plan),
-        |aft AS (SELECT
-        |    CAST('0x' || substr(md5(k || '#' || CAST(i AS VARCHAR)),
-        |      1, 8) AS BIGINT) % 16 AS p,
-        |    CAST(sum(cnt // s +
-        |      CASE WHEN i < cnt % s THEN 1 ELSE 0 END) AS BIGINT) AS la
-        |  FROM reps GROUP BY 1)
-        |SELECT r.p AS partition,
-        |  COALESCE(b.lb, 0) AS load_before,
-        |  COALESCE(a.la, 0) AS load_after
-        |FROM (SELECT unnest(range(16)) AS p) r
-        |LEFT JOIN bef b ON b.p = r.p
-        |LEFT JOIN aft a ON a.p = r.p
-        |ORDER BY partition""".stripMargin,
-
-    "q318_secret_scan" -> {
-      // The SAME lnU6 literals the Spark side broadcasts (driver-side
-      // libm, rounded once) — no transcendental in either data path.
-      val lnVals = (1 to 256)
-        .map(n => s"($n, ${math.round(math.log(n) * 1e6)})")
-        .mkString(", ")
-      s"""WITH lnt(n, ln_u6) AS (VALUES $lnVals),
-        |docs AS (SELECT doc_id,
-        |    text || ' ' || md5(CAST(doc_id AS VARCHAR)) AS t
-        |  FROM documents),
-        |cand AS (SELECT doc_id, tok FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(t, '\\s+')) AS tok
-        |    FROM docs)
-        |  WHERE len(tok) BETWEEN 16 AND 256
-        |    AND regexp_matches(tok, '^[A-Za-z0-9+/=_-]+$$')),
-        |toks AS (SELECT DISTINCT tok FROM cand),
-        |cc AS (SELECT tok, substr(tok, CAST(i + 1 AS INT), 1) AS ch,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM (SELECT tok, unnest(range(len(tok))) AS i FROM toks)
-        |  GROUP BY 1, 2),
-        |sums AS (SELECT tok, CAST(sum(cnt) AS BIGINT) AS l,
-        |    CAST(sum(cnt * lc.ln_u6) AS BIGINT) AS slc
-        |  FROM cc JOIN lnt lc ON lc.n = cc.cnt GROUP BY 1),
-        |ent AS (SELECT tok,
-        |    CAST((l * ll.ln_u6 - slc) // l AS BIGINT) AS entropy_u6
-        |  FROM sums JOIN lnt ll ON ll.n = sums.l),
-        |j AS (SELECT c.doc_id, c.tok, e.entropy_u6,
-        |    e.entropy_u6 >= 2600000 AS flag
-        |  FROM cand c JOIN ent e ON e.tok = c.tok),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
-        |    CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_flagged
-        |  FROM j GROUP BY 1),
-        |top AS (SELECT doc_id, tok AS top_token,
-        |    entropy_u6 AS top_entropy_u6
-        |  FROM (SELECT doc_id, tok, entropy_u6, ROW_NUMBER() OVER (
-        |      PARTITION BY doc_id
-        |      ORDER BY entropy_u6 DESC, tok DESC) AS rn
-        |    FROM j WHERE flag)
-        |  WHERE rn = 1)
-        |SELECT a.doc_id, a.n_candidates, a.n_flagged,
-        |  t.top_token, t.top_entropy_u6
-        |FROM agg a LEFT JOIN top t ON t.doc_id = a.doc_id
-        |ORDER BY a.doc_id""".stripMargin
-    },
-
-    "q319_grid_dbscan" ->
-      """WITH RECURSIVE pts AS MATERIALIZED (SELECT p_partkey AS pid,
-        |    (p_partkey % 4) % 2 * 1000
-        |      + CAST('0x' || substr(md5('x#' ||
-        |          CAST(p_partkey AS VARCHAR)), 1, 8) AS BIGINT) % 400
-        |      + CASE WHEN p_partkey % 97 = 0 THEN 460 ELSE 0 END AS x,
-        |    (p_partkey % 4) // 2 * 1000
-        |      + CAST('0x' || substr(md5('y#' ||
-        |          CAST(p_partkey AS VARCHAR)), 1, 8) AS BIGINT) % 400
-        |      AS y
-        |  FROM part),
-        |nbrs AS MATERIALIZED (SELECT a.pid AS id1, b.pid AS id2
-        |  FROM pts a JOIN pts b ON b.pid <> a.pid
-        |    AND (a.x - b.x) * (a.x - b.x)
-        |      + (a.y - b.y) * (a.y - b.y) <= 625),
-        |deg AS (SELECT id1 AS id, CAST(count(*) AS BIGINT) AS others
-        |  FROM nbrs GROUP BY 1),
-        |roles AS MATERIALIZED (SELECT p.pid AS id,
-        |    COALESCE(d.others, 0) + 1 >= 4 AS is_core
-        |  FROM pts p LEFT JOIN deg d ON d.id = p.pid),
-        |sym AS MATERIALIZED (SELECT n.id1 AS src, n.id2 AS dst
-        |  FROM nbrs n
-        |  JOIN roles r1 ON r1.id = n.id1 AND r1.is_core
-        |  JOIN roles r2 ON r2.id = n.id2 AND r2.is_core),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |walk(id, comp) AS (SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, w.comp FROM sym s JOIN walk w ON s.dst = w.id),
-        |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY 1),
-        |corec AS MATERIALIZED (SELECT r.id,
-        |    COALESCE(c.comp, r.id) AS cluster
-        |  FROM roles r LEFT JOIN cc c ON c.id = r.id WHERE r.is_core),
-        |bord AS (SELECT n.id1 AS id, min(k.cluster) AS bcluster
-        |  FROM nbrs n JOIN corec k ON k.id = n.id2 GROUP BY 1)
-        |SELECT r.id AS pid,
-        |  CASE WHEN r.is_core THEN 'core'
-        |       WHEN b.bcluster IS NOT NULL THEN 'border'
-        |       ELSE 'noise' END AS role,
-        |  CASE WHEN r.is_core THEN k.cluster
-        |       ELSE b.bcluster END AS cluster
-        |FROM roles r LEFT JOIN corec k ON k.id = r.id
-        |LEFT JOIN bord b ON b.id = r.id
-        |ORDER BY r.id""".stripMargin,
-
-    "q320_waiting_suppliers" ->
-      """WITH l AS MATERIALIZED (SELECT l.l_orderkey AS ok,
-        |    l.l_suppkey AS sk,
-        |    l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY AS late,
-        |    o.o_orderstatus AS st
-        |  FROM lineitem l
-        |  JOIN orders o ON o.o_orderkey = l.l_orderkey),
-        |l1 AS (SELECT * FROM l WHERE late AND st = 'F'),
-        |cand AS (SELECT l1.ok, l1.sk FROM l1
-        |  WHERE EXISTS (SELECT 1 FROM l l2
-        |      WHERE l2.ok = l1.ok AND l2.sk <> l1.sk)
-        |    AND NOT EXISTS (SELECT 1 FROM l l3
-        |      WHERE l3.ok = l1.ok AND l3.sk <> l1.sk AND l3.late))
-        |SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM cand c
-        |JOIN supplier s ON s.s_suppkey = c.sk
-        |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |  AND n.n_nationkey % 5 = 3
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 25""".stripMargin,
-
-    "q321_kleinberg_bursts" ->
-      """WITH RECURSIVE ev AS MATERIALIZED (
-        |  SELECT k, ts_s, rn FROM (
-        |    SELECT event_type AS k, epoch_us(ts) // 1000000 AS ts_s,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type
-        |        ORDER BY ts, event_id) AS rn
-        |    FROM events) WHERE rn <= 600),
-        |stats AS MATERIALIZED (SELECT k,
-        |    CAST(count(*) - 1 AS BIGINT) AS n,
-        |    CAST(max(ts_s) - min(ts_s) AS BIGINT) AS tt
-        |  FROM ev GROUP BY 1
-        |  HAVING count(*) >= 2 AND max(ts_s) > min(ts_s)),
-        |gaps AS MATERIALIZED (SELECT a.k, a.rn AS n,
-        |    a.ts_s AS t0, b.ts_s AS t1,
-        |    (st.n * 1000000 // st.tt) * (b.ts_s - a.ts_s) - 693147
-        |      AS dk
-        |  FROM ev a JOIN ev b ON b.k = a.k AND b.rn = a.rn + 1
-        |  JOIN stats st ON st.k = a.k),
-        |mx AS MATERIALIZED (SELECT k, CAST(max(n) AS BIGINT) AS mn
-        |  FROM gaps GROUP BY 1),
-        |fw(k, n, d) AS (
-        |  SELECT k, CAST(0 AS BIGINT), CAST(1000000 AS BIGINT)
-        |  FROM stats
-        |  UNION ALL
-        |  SELECT g.k, g.n, least(1000000, f.d) - least(0, f.d) + g.dk
-        |  FROM fw f JOIN gaps g ON g.k = f.k AND g.n = f.n + 1),
-        |fwm AS MATERIALIZED (SELECT * FROM fw),
-        |bk(k, n, state) AS (
-        |  SELECT f.k, f.n, CASE WHEN f.d < 0 THEN 1 ELSE 0 END
-        |  FROM fwm f JOIN mx ON mx.k = f.k AND mx.mn = f.n
-        |  UNION ALL
-        |  SELECT b.k, b.n - 1,
-        |    CASE WHEN b.state = 1 THEN
-        |        (CASE WHEN f.d >= 1000000 THEN 0 ELSE 1 END)
-        |      ELSE (CASE WHEN f.d >= 0 THEN 0 ELSE 1 END) END
-        |  FROM bk b JOIN fwm f ON f.k = b.k AND f.n = b.n - 1
-        |  WHERE b.n > 1),
-        |burst AS (SELECT b.k, b.n, g.t0, g.t1, g.dk,
-        |    b.n - ROW_NUMBER() OVER (PARTITION BY b.k ORDER BY b.n)
-        |      AS grp
-        |  FROM bk b JOIN gaps g ON g.k = b.k AND g.n = b.n
-        |  WHERE b.state = 1)
-        |SELECT k AS event_type, CAST(min(n) AS BIGINT) AS start_n,
-        |  CAST(max(n) AS BIGINT) AS end_n,
-        |  CAST(count(*) AS BIGINT) AS n_gaps,
-        |  CAST(min(t0) AS BIGINT) AS burst_start_s,
-        |  CAST(max(t1) AS BIGINT) AS burst_end_s,
-        |  CAST(sum(-dk) AS BIGINT) AS weight_u6
-        |FROM burst GROUP BY k, grp
-        |ORDER BY event_type, start_n""".stripMargin,
-
-    "q322_louvain_two_level" ->
-      s"""WITH nn AS (SELECT DISTINCT doc_id % 40 AS n FROM documents),
-        |${modularityTwoRoundCtes},
-        |qq AS (SELECT CAST(num * 1000000 // (4 * m * m) AS BIGINT)
-        |    AS q_l1_u6 FROM qn),
-        |lab AS MATERIALIZED (SELECT a.comm AS ca, b.comm AS cb
-        |  FROM sym s JOIN r2 a ON a.id = s.src
-        |  JOIN r2 b ON b.id = s.dst),
-        |adj2 AS MATERIALIZED (
-        |  SELECT ca AS src, cb AS dst, CAST(count(*) AS BIGINT) AS w
-        |  FROM lab WHERE ca <> cb GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT ca, ca, CAST(count(*) AS BIGINT)
-        |  FROM lab WHERE ca = cb GROUP BY 1, 2),
-        |sym2 AS MATERIALIZED (SELECT src, dst, w FROM adj2
-        |  WHERE src <> dst),
-        |deg2 AS MATERIALIZED (SELECT src AS id,
-        |    CAST(sum(w) AS BIGINT) AS k FROM adj2 GROUP BY 1),
-        |mm2 AS MATERIALIZED (SELECT CAST(sum(w) // 2 AS BIGINT) AS m
-        |  FROM adj2),
-        |s0 AS (SELECT id, id AS comm FROM deg2),
-        |${modularityWRoundCtes("s0", 1)},
-        |${modularityWRoundCtes("s1", 2)},
-        |iw AS (SELECT a.comm, CAST(sum(s.w) AS BIGINT) AS iw
-        |  FROM sym2 s JOIN s2 a ON a.id = s.src
-        |  JOIN s2 b ON b.id = s.dst AND b.comm = a.comm GROUP BY 1),
-        |sw AS (SELECT c.comm, CAST(sum(a.w) AS BIGINT) AS sw
-        |  FROM adj2 a JOIN s2 c ON c.id = a.src
-        |  WHERE a.src = a.dst GROUP BY 1),
-        |kc2t AS (SELECT r.comm, CAST(sum(d.k) AS BIGINT) AS kc
-        |  FROM s2 r JOIN deg2 d USING (id) GROUP BY 1),
-        |qn2 AS (SELECT CAST(sum(4 * mm2.m * ecv - kc * kc) AS BIGINT)
-        |      AS num, max(mm2.m) AS m
-        |  FROM (SELECT k2.comm, k2.kc,
-        |      (coalesce(iw.iw, 0) + coalesce(sw.sw, 0)) // 2 AS ecv
-        |    FROM kc2t k2 LEFT JOIN iw ON iw.comm = k2.comm
-        |    LEFT JOIN sw ON sw.comm = k2.comm) CROSS JOIN mm2),
-        |qq2 AS (SELECT CAST(num * 1000000 // (4 * m * m) AS BIGINT)
-        |    AS q_l2_u6 FROM qn2)
-        |SELECT r2.id, r2.comm AS comm_l1, sm.comm AS comm_l2,
-        |  qq.q_l1_u6, qq2.q_l2_u6
-        |FROM r2 JOIN s2 sm ON sm.id = r2.comm, qq, qq2
-        |ORDER BY r2.id""".stripMargin,
-
-    "q323_markov_attribution" ->
-      s"""WITH ordered AS MATERIALIZED (SELECT user_id AS u,
-        |    CASE WHEN event_type = 'purchase' THEN '__conv__'
-        |         ELSE event_type END AS st,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |fc AS (SELECT u, min(rn) AS fp FROM ordered
-        |  WHERE st = '__conv__' GROUP BY 1),
-        |kept AS MATERIALIZED (SELECT o.u, o.st, o.rn
-        |  FROM ordered o LEFT JOIN fc ON fc.u = o.u
-        |  WHERE fc.fp IS NULL OR o.rn <= fc.fp),
-        |mxr AS (SELECT u, max(rn) AS mx,
-        |    max(CASE WHEN st = '__conv__' THEN 1 ELSE 0 END) AS conv
-        |  FROM kept GROUP BY 1),
-        |pairs AS MATERIALIZED (
-        |  SELECT a.st AS s, b.st AS t FROM kept a
-        |  JOIN kept b ON b.u = a.u AND b.rn = a.rn + 1
-        |  UNION ALL SELECT '__start__', st FROM kept WHERE rn = 1
-        |  UNION ALL SELECT k.st, '__null__' FROM kept k
-        |  JOIN mxr ON mxr.u = k.u AND mxr.conv = 0 AND k.rn = mxr.mx),
-        |outs AS (SELECT s, CAST(count(*) AS BIGINT) AS n
-        |  FROM pairs GROUP BY 1),
-        |ta AS MATERIALIZED (SELECT p.s, p.t,
-        |    CAST(CAST(count(*) AS BIGINT) * 1000000 // o.n AS BIGINT)
-        |      AS tp
-        |  FROM pairs p JOIN outs o ON o.s = p.s GROUP BY p.s, p.t, o.n),
-        |tt AS MATERIALIZED (SELECT * FROM ta
-        |  WHERE t NOT IN ('__conv__', '__null__')),
-        |bb AS MATERIALIZED (SELECT s, tp AS bp FROM ta
-        |  WHERE t = '__conv__'),
-        |chs AS MATERIALIZED (SELECT DISTINCT s AS ch FROM ta
-        |  WHERE s <> '__start__'),
-        |trans AS (SELECT DISTINCT s FROM ta),
-        |spine AS MATERIALIZED (SELECT sc.scenario, tr.s FROM
-        |  (SELECT ch AS scenario FROM chs UNION ALL SELECT 'FULL') sc
-        |  CROSS JOIN trans tr WHERE tr.s <> sc.scenario),
-        |ap0 AS (SELECT scenario, s, CAST(0 AS BIGINT) AS p FROM spine),
-        |${(1 to 12).map(r => attributionRoundCtes(s"ap${r - 1}", r))
-            .mkString(",\n")},
-        |st AS (SELECT scenario, p FROM ap12 WHERE s = '__start__'),
-        |fl AS (SELECT p AS p_full_ppm FROM st WHERE scenario = 'FULL')
-        |SELECT c.ch AS channel, fl.p_full_ppm, st.p AS p_removed_ppm,
-        |  fl.p_full_ppm - st.p AS effect_ppm
-        |FROM chs c JOIN st ON st.scenario = c.ch, fl
-        |ORDER BY channel""".stripMargin,
-
-    "q324_view_selection" ->
-      s"""WITH base AS MATERIALIZED (SELECT o_custkey % 10 AS c,
-        |    quarter(o_orderdate) AS d, o_orderpriority AS p
-        |  FROM orders),
-        |sizes(mask, sz) AS MATERIALIZED (
-        |  SELECT 0, CAST(1 AS BIGINT)
-        |  UNION ALL SELECT 1, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT c FROM base))
-        |  UNION ALL SELECT 2, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT d FROM base))
-        |  UNION ALL SELECT 3, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT c, d FROM base))
-        |  UNION ALL SELECT 4, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT p FROM base))
-        |  UNION ALL SELECT 5, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT c, p FROM base))
-        |  UNION ALL SELECT 6, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT d, p FROM base))
-        |  UNION ALL SELECT 7, (SELECT CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT c, d, p FROM base))),
-        |sel0 AS (SELECT 7 AS mask),
-        |${(1 to 3).map(viewGreedyRoundCtes).mkString(",\n")}
-        |SELECT CAST(s.step AS BIGINT) AS step,
-        |  CASE s.mask WHEN 0 THEN '()' WHEN 1 THEN 'c' WHEN 2 THEN 'd'
-        |    WHEN 3 THEN 'c,d' WHEN 4 THEN 'p' WHEN 5 THEN 'c,p'
-        |    WHEN 6 THEN 'd,p' ELSE 'c,d,p' END AS view,
-        |  CAST(s.mask AS BIGINT) AS mask, z.sz AS size, s.b AS benefit
-        |FROM (SELECT 1 AS step, mask, b FROM pick1
-        |  UNION ALL SELECT 2, mask, b FROM pick2
-        |  UNION ALL SELECT 3, mask, b FROM pick3) s
-        |JOIN sizes z ON z.mask = s.mask
-        |ORDER BY step""".stripMargin,
-
-    "q325_ivm_agg_delta" ->
-      """WITH base AS (SELECT o_orderkey, o_custkey % 10 AS g1,
-        |    o_orderpriority AS g2,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS v
-        |  FROM orders),
-        |modified AS (
-        |  SELECT g1, g2, v FROM base WHERE o_orderkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT (g1 + 1) % 10, g2, v + 500 FROM base
-        |  WHERE o_orderkey % 11 = 0)
-        |SELECT g1, g2, CAST(count(*) AS BIGINT) AS cnt,
-        |  CAST(sum(v) AS BIGINT) AS sum_v
-        |FROM modified GROUP BY 1, 2
-        |ORDER BY g1, g2""".stripMargin,
-
-    "q326_selinger_join_order" ->
-      s"""WITH RECURSIVE st AS MATERIALIZED (SELECT
-        |  (SELECT CAST(count(*) AS HUGEINT) FROM lineitem) AS rl,
-        |  (SELECT CAST(count(*) AS HUGEINT) FROM orders) AS ro,
-        |  (SELECT CAST(count(*) AS HUGEINT) FROM customer) AS rc,
-        |  (SELECT CAST(count(*) AS HUGEINT) FROM supplier) AS rs,
-        |  (SELECT CAST(count(*) AS HUGEINT) FROM part) AS rp,
-        |  (SELECT count(DISTINCT l_orderkey) FROM lineitem) AS n_l_ok,
-        |  (SELECT count(DISTINCT o_orderkey) FROM orders) AS n_o_ok,
-        |  (SELECT count(DISTINCT o_custkey) FROM orders) AS n_o_ck,
-        |  (SELECT count(DISTINCT c_custkey) FROM customer) AS n_c_ck,
-        |  (SELECT count(DISTINCT l_suppkey) FROM lineitem) AS n_l_sk,
-        |  (SELECT count(DISTINCT s_suppkey) FROM supplier) AS n_s_sk,
-        |  (SELECT count(DISTINCT l_partkey) FROM lineitem) AS n_l_pk,
-        |  (SELECT count(DISTINCT p_partkey) FROM part) AS n_p_pk),
-        |ed AS MATERIALIZED (
-        |  SELECT 1 AS a, 2 AS b, greatest(n_l_ok, n_o_ok) AS d FROM st
-        |  UNION ALL SELECT 2, 4, greatest(n_o_ck, n_c_ck) FROM st
-        |  UNION ALL SELECT 1, 8, greatest(n_l_sk, n_s_sk) FROM st
-        |  UNION ALL SELECT 1, 16, greatest(n_l_pk, n_p_pk) FROM st),
-        |bits AS (SELECT unnest(range(5)) AS i),
-        |subs AS (SELECT unnest(range(1, 32)) AS mask),
-        |pcs AS MATERIALIZED (SELECT mask,
-        |    CAST((mask & 1) + ((mask >> 1) & 1) + ((mask >> 2) & 1)
-        |      + ((mask >> 3) & 1) + ((mask >> 4) & 1) AS BIGINT) AS pc
-        |  FROM subs),
-        |rch(mask, reach) AS (
-        |  SELECT mask, mask & (-mask) FROM subs
-        |  UNION
-        |  SELECT r.mask, r.reach | (e.a | e.b) FROM rch r JOIN ed e
-        |    ON ((e.a | e.b) & r.mask) = (e.a | e.b)
-        |    AND (r.reach & (e.a | e.b)) <> 0),
-        |conn AS MATERIALIZED (SELECT p.mask, p.pc FROM pcs p
-        |  JOIN (SELECT mask, max(reach) AS f FROM rch GROUP BY 1) r
-        |    ON r.mask = p.mask AND r.f = p.mask),
-        |s0 AS (SELECT c.mask,
-        |    (CASE WHEN c.mask & 1 <> 0 THEN st.rl ELSE 1 END)
-        |  * (CASE WHEN c.mask & 2 <> 0 THEN st.ro ELSE 1 END)
-        |  * (CASE WHEN c.mask & 4 <> 0 THEN st.rc ELSE 1 END)
-        |  * (CASE WHEN c.mask & 8 <> 0 THEN st.rs ELSE 1 END)
-        |  * (CASE WHEN c.mask & 16 <> 0 THEN st.rp ELSE 1 END) AS sz
-        |  FROM conn c, st),
-        |s1 AS (SELECT mask, CASE WHEN mask & 3 = 3 THEN sz //
-        |    (SELECT d FROM ed WHERE a = 1 AND b = 2) ELSE sz END AS sz
-        |  FROM s0),
-        |s2 AS (SELECT mask, CASE WHEN mask & 6 = 6 THEN sz //
-        |    (SELECT d FROM ed WHERE a = 2 AND b = 4) ELSE sz END AS sz
-        |  FROM s1),
-        |s3 AS (SELECT mask, CASE WHEN mask & 9 = 9 THEN sz //
-        |    (SELECT d FROM ed WHERE a = 1 AND b = 8) ELSE sz END AS sz
-        |  FROM s2),
-        |szs AS MATERIALIZED (SELECT mask,
-        |    CASE WHEN mask & 17 = 17 THEN sz //
-        |    (SELECT d FROM ed WHERE a = 1 AND b = 16) ELSE sz END AS sz
-        |  FROM s3),
-        |cstall1 AS (SELECT mask, CAST(0 AS HUGEINT) AS cost FROM pcs
-        |  WHERE pc = 1),
-        |${(2 to 5).map(selingerRoundCtes).mkString(",\n")},
-        |picks AS (SELECT mask, ridx, cost FROM pick2
-        |  UNION ALL SELECT mask, ridx, cost FROM pick3
-        |  UNION ALL SELECT mask, ridx, cost FROM pick4
-        |  UNION ALL SELECT mask, ridx, cost FROM pick5)
-        |SELECT CAST(c.mask AS BIGINT) AS mask,
-        |  concat_ws(',',
-        |    CASE WHEN c.mask & 1 <> 0 THEN 'L' END,
-        |    CASE WHEN c.mask & 2 <> 0 THEN 'O' END,
-        |    CASE WHEN c.mask & 4 <> 0 THEN 'C' END,
-        |    CASE WHEN c.mask & 8 <> 0 THEN 'S' END,
-        |    CASE WHEN c.mask & 16 <> 0 THEN 'P' END) AS rels,
-        |  CAST(LEAST(z.sz, CAST(9223372036854775807 AS HUGEINT))
-        |    AS BIGINT) AS size_est,
-        |  CAST(LEAST(k.cost, CAST(9223372036854775807 AS HUGEINT))
-        |    AS BIGINT) AS best_cost,
-        |  CASE k.ridx WHEN 0 THEN 'L' WHEN 1 THEN 'O' WHEN 2 THEN 'C'
-        |    WHEN 3 THEN 'S' ELSE 'P' END AS best_last
-        |FROM conn c JOIN szs z ON z.mask = c.mask
-        |JOIN picks k ON k.mask = c.mask
-        |WHERE c.pc >= 2 ORDER BY mask""".stripMargin,
-
-    "q327_histogram_audit" ->
-      """WITH v AS MATERIALIZED (SELECT
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS v FROM orders),
-        |st AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    min(v) AS lo, max(v) AS hi, max(v) - min(v) + 1 AS w
-        |  FROM v),
-        |preds(pred_id, q_lo, q_hi) AS (VALUES
-        |  (0, 0, 5000000), (1, 10000000, 20000000),
-        |  (2, 40000000, 60000000), (3, 0, 100000000)),
-        |wcnt AS (SELECT least(15, (v.v - st.lo) * 16 // st.w) AS b,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM v, st GROUP BY 1),
-        |wb AS (SELECT 'width' AS hist, r.b,
-        |    st.lo + (r.b * st.w + 15) // 16 AS s,
-        |    st.lo + ((r.b + 1) * st.w + 15) // 16 - 1 AS e,
-        |    COALESCE(w.cnt, 0) AS cnt
-        |  FROM (SELECT unnest(range(16)) AS b) r CROSS JOIN st
-        |  LEFT JOIN wcnt w ON w.b = r.b),
-        |qarr AS (SELECT quantile_cont(v, [
-        |    0.0625, 0.125, 0.1875, 0.25, 0.3125, 0.375, 0.4375, 0.5,
-        |    0.5625, 0.625, 0.6875, 0.75, 0.8125, 0.875, 0.9375])
-        |      AS qs FROM v),
-        |bet AS MATERIALIZED (SELECT i,
-        |    CASE WHEN i = 0 THEN (SELECT lo - 1 FROM st)
-        |         WHEN i = 16 THEN (SELECT hi FROM st)
-        |         ELSE CAST(round(qs[CAST(i AS INT)]) AS BIGINT) END
-        |      AS beta
-        |  FROM (SELECT unnest(range(17)) AS i), qarr),
-        |vals AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM v
-        |  GROUP BY 1),
-        |vasg AS (SELECT a.v, a.c, CAST(count(b.i) AS BIGINT) AS bkt
-        |  FROM vals a LEFT JOIN bet b
-        |    ON b.i BETWEEN 1 AND 15 AND a.v > b.beta
-        |  GROUP BY a.v, a.c),
-        |dcnt AS (SELECT bkt AS b, CAST(sum(c) AS BIGINT) AS cnt
-        |  FROM vasg GROUP BY 1),
-        |db AS (SELECT 'depth' AS hist, r.b, b1.beta + 1 AS s,
-        |    b2.beta AS e, COALESCE(d.cnt, 0) AS cnt
-        |  FROM (SELECT unnest(range(16)) AS b) r
-        |  JOIN bet b1 ON b1.i = r.b
-        |  JOIN bet b2 ON b2.i = r.b + 1
-        |  LEFT JOIN dcnt d ON d.b = r.b),
-        |allb AS (SELECT * FROM wb UNION ALL SELECT * FROM db),
-        |est AS (SELECT hist, p.pred_id, CAST(sum(
-        |    CASE WHEN e >= s
-        |        AND least(e, p.q_hi) - greatest(s, p.q_lo) + 1 > 0
-        |      THEN (cnt * (least(e, p.q_hi) - greatest(s, p.q_lo) + 1))
-        |        // greatest(e - s + 1, 1)
-        |      ELSE 0 END) AS BIGINT) AS est_rows
-        |  FROM allb CROSS JOIN preds p GROUP BY 1, 2),
-        |act AS (SELECT p.pred_id, CAST(count(v.v) AS BIGINT) AS ar
-        |  FROM preds p LEFT JOIN v
-        |    ON v.v BETWEEN p.q_lo AND p.q_hi GROUP BY 1)
-        |SELECT e.hist, CAST(e.pred_id AS BIGINT) AS pred_id,
-        |  e.est_rows, a.ar AS actual_rows,
-        |  abs(e.est_rows - a.ar) * 1000000 // st.n AS err_ppm
-        |FROM est e JOIN act a ON a.pred_id = e.pred_id, st
-        |ORDER BY hist, pred_id""".stripMargin,
-
-    "q328_roaring_plan" ->
-      """WITH posts AS (
-        |  SELECT event_type AS term, event_id AS doc FROM events
-        |  UNION ALL SELECT '__all__', event_id FROM events),
-        |base AS (SELECT DISTINCT term, CAST(doc AS BIGINT) AS doc
-        |  FROM posts),
-        |m AS (SELECT term, doc // 65536 AS chunk, doc % 65536 AS lo,
-        |    lag(doc % 65536) OVER (PARTITION BY term, doc // 65536
-        |      ORDER BY doc % 65536) AS prev
-        |  FROM base),
-        |st AS (SELECT term, chunk,
-        |    CAST(count(*) AS BIGINT) AS cardinality,
-        |    CAST(sum(CASE WHEN prev IS NULL OR lo - prev <> 1
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_runs
-        |  FROM m GROUP BY 1, 2),
-        |pl AS (SELECT term, chunk, cardinality, n_runs,
-        |    CASE WHEN cardinality <= 4096 THEN cardinality * 2
-        |         ELSE 9223372036854775807 END AS ab,
-        |    CAST(8192 AS BIGINT) AS bb,
-        |    2 + n_runs * 4 AS rb
-        |  FROM st)
-        |SELECT term, chunk, cardinality, n_runs,
-        |  CASE WHEN ab <= bb AND ab <= rb THEN 'array'
-        |       WHEN bb <= rb THEN 'bitmap' ELSE 'run' END AS container,
-        |  CAST(least(ab, bb, rb) AS BIGINT) AS bytes
-        |FROM pl ORDER BY term, chunk""".stripMargin,
-
-    "q329_pettitt_change" ->
-      """WITH m AS (SELECT CAST(min(epoch_us(ts) // 1000000) AS BIGINT)
-        |    AS t0 FROM events),
-        |cnt AS (SELECT k, h, CAST(count(*) AS BIGINT) AS x FROM (
-        |    SELECT event_type AS k,
-        |      (epoch_us(ts) // 1000000 - m.t0) // 3600 AS h
-        |    FROM events, m)
-        |  WHERE h >= 0 AND h < 256 GROUP BY 1, 2),
-        |keys AS (SELECT DISTINCT k FROM cnt),
-        |grid AS (SELECT keys.k, r.h, COALESCE(cnt.x, 0) AS x
-        |  FROM keys CROSS JOIN (SELECT unnest(range(256)) AS h) r
-        |  LEFT JOIN cnt ON cnt.k = keys.k AND cnt.h = r.h),
-        |rk AS (SELECT k, h, CAST(ROW_NUMBER() OVER (PARTITION BY k
-        |      ORDER BY x, h) AS BIGINT) AS r
-        |  FROM grid),
-        |uu AS (SELECT k, h + 1 AS mm,
-        |    2 * CAST(SUM(r) OVER (PARTITION BY k ORDER BY h
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |      - (h + 1) * 257 AS u
-        |  FROM rk),
-        |pick AS (SELECT k, mm, u,
-        |    ROW_NUMBER() OVER (PARTITION BY k
-        |      ORDER BY abs(u) DESC, mm) AS rn
-        |  FROM uu WHERE mm < 256)
-        |SELECT k AS event_type, CAST(mm AS BIGINT) AS m_star,
-        |  u AS u_star, abs(u) AS abs_u
-        |FROM pick WHERE rn = 1
-        |ORDER BY event_type""".stripMargin,
-
-    "q330_stable_matching" ->
-      s"""WITH sup AS (SELECT CAST(s_suppkey AS BIGINT) AS p
-        |  FROM supplier WHERE s_suppkey BETWEEN 1 AND 6),
-        |nat AS (SELECT CAST(n_nationkey AS BIGINT) AS a
-        |  FROM nation WHERE n_nationkey BETWEEN 0 AND 5),
-        |ps AS (SELECT p, a,
-        |    CAST('0x' || substr(md5('p#' || CAST(p AS VARCHAR) || '#'
-        |      || CAST(a AS VARCHAR)), 1, 8) AS BIGINT) % 1000000 AS sc
-        |  FROM sup CROSS JOIN nat),
-        |pp AS MATERIALIZED (SELECT p, a,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY p
-        |      ORDER BY sc DESC, a) - 1 AS BIGINT) AS rank
-        |  FROM ps),
-        |pa AS MATERIALIZED (SELECT a, p,
-        |    CAST('0x' || substr(md5('a#' || CAST(a AS VARCHAR) || '#'
-        |      || CAST(p AS VARCHAR)), 1, 8) AS BIGINT) % 1000000
-        |      AS score
-        |  FROM sup CROSS JOIN nat),
-        |ptr0 AS (SELECT p, CAST(0 AS BIGINT) AS ptr FROM sup),
-        |eng0 AS (SELECT CAST(NULL AS BIGINT) AS p,
-        |    CAST(NULL AS BIGINT) AS a WHERE 1 = 0),
-        |${(1 to 36).map(k => gsRoundCtes(k - 1, k)).mkString(",\n")}
-        |SELECT e.p, e.a, pp.rank AS rank_used
-        |FROM eng36 e JOIN pp ON pp.p = e.p AND pp.a = e.a
-        |ORDER BY e.p""".stripMargin,
-
-    "q331_fd_discovery" -> {
-      val cs = Seq("o_orderkey" -> "ok", "o_custkey" -> "ck",
-        "o_orderstatus" -> "st", "o_orderpriority" -> "pr")
-      val prs = for { a <- cs; b <- cs if a._1 != b._1 } yield (a, b)
-      val singles = cs.map { case (c, t) =>
-        s"(SELECT CAST(count(DISTINCT $c) AS BIGINT) FROM orders) AS s_$t"
-      }
-      val pairSel = prs.map { case ((a, ta), (b, tb)) =>
-        s"(SELECT CAST(count(DISTINCT ($a, $b)) AS BIGINT) " +
-          s"FROM orders) AS p_${ta}_$tb"
-      }
-      val rows = prs.map { case ((a, ta), (b, tb)) =>
-        s"SELECT '$a' AS a, '$b' AS b, s_$ta AS ndv_a, " +
-          s"p_${ta}_$tb AS ndv_ab, p_${ta}_$tb = s_$ta AS holds, " +
-          s"p_${ta}_$tb - s_$ta AS violations FROM s"
-      }
-      s"""WITH s AS MATERIALIZED (SELECT
-        |  ${(singles ++ pairSel).mkString(",\n  ")})
-        |${rows.mkString("\nUNION ALL ")}
-        |ORDER BY a, b""".stripMargin
-    },
-
-    "q332_zipf_slope" ->
-      """WITH toks AS (SELECT
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |  FROM documents),
-        |fr AS (SELECT tok, CAST(count(*) AS BIGINT) AS freq FROM toks
-        |  WHERE tok <> '' GROUP BY 1),
-        |top AS MATERIALIZED (SELECT tok, freq,
-        |    ROW_NUMBER() OVER (ORDER BY freq DESC, tok) AS rank
-        |  FROM fr QUALIFY rank <= 64),
-        |pts AS MATERIALIZED (SELECT
-        |    CAST(round(log10(rank) * 1000000) AS BIGINT) AS x,
-        |    CAST(round(log10(freq) * 1000000) AS BIGINT) AS y
-        |  FROM top),
-        |slopes AS MATERIALIZED (SELECT
-        |    CAST((b.y - a.y) * 1000000 // (b.x - a.x) AS BIGINT) AS s
-        |  FROM pts a JOIN pts b ON a.x < b.x),
-        |np AS (SELECT CAST(count(*) AS BIGINT) AS n FROM slopes),
-        |med AS (SELECT s, CAST(count(*) AS BIGINT) AS c FROM slopes
-        |  GROUP BY 1),
-        |cum AS (SELECT s,
-        |    sum(c) OVER (ORDER BY s ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM med)
-        |SELECT CAST(1 AS BIGINT) AS grp, np.n AS n_pairs,
-        |  CAST(min(s) AS BIGINT) AS slope_med_u6
-        |FROM cum, np WHERE cum >= (np.n + 1) // 2
-        |GROUP BY np.n""".stripMargin,
-
-    "q333_binary_recall" ->
-      """WITH pe AS (SELECT vec_id, i - 1 AS i,
-        |    embedding[i]::DOUBLE AS v
-        |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) t(i)),
-        |bits AS (SELECT vec_id, i // 32 AS w,
-        |    bit_or(CASE WHEN v > 0 THEN 1::BIGINT << CAST(i % 32 AS INT)
-        |      END) AS code
-        |  FROM pe GROUP BY 1, 2),
-        |codes AS MATERIALIZED (SELECT e.vec_id, r.w,
-        |    COALESCE(b.code, 0) AS code
-        |  FROM (SELECT DISTINCT vec_id FROM embeddings) e
-        |  CROSS JOIN (SELECT unnest(range(2)) AS w) r
-        |  LEFT JOIN bits b ON b.vec_id = e.vec_id AND b.w = r.w),
-        |qc AS (SELECT w, code AS qcode FROM codes WHERE vec_id = 0),
-        |hd AS (SELECT c.vec_id,
-        |    CAST(sum(bit_count(xor(c.code, qc.qcode))) AS BIGINT)
-        |      AS hamming
-        |  FROM codes c JOIN qc ON qc.w = c.w GROUP BY 1),
-        |th AS (SELECT vec_id, hamming, CAST(row_number() OVER (
-        |      ORDER BY hamming, vec_id) AS BIGINT) AS rn
-        |  FROM hd QUALIFY rn <= 10),
-        |p AS (SELECT a.vec_id, unnest(a.embedding)::DOUBLE AS x,
-        |    unnest(q.embedding)::DOUBLE AS y
-        |  FROM embeddings a,
-        |    (SELECT embedding FROM embeddings WHERE vec_id = 0) q),
-        |sc AS (SELECT vec_id, round(sum(x*y)
-        |    / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM p GROUP BY 1),
-        |ex10 AS (SELECT vec_id FROM sc ORDER BY cos DESC, vec_id
-        |  LIMIT 10)
-        |SELECT th.rn, th.vec_id, th.hamming,
-        |  CASE WHEN ex10.vec_id IS NULL THEN 0 ELSE 1 END AS in_exact
-        |FROM th LEFT JOIN ex10 ON ex10.vec_id = th.vec_id
-        |ORDER BY rn""".stripMargin,
-
-    "q334_parts_supplier_cnt" ->
-      """SELECT p.p_brand, p.p_type, CAST(p.p_size AS BIGINT) AS p_size,
-        |  CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem l
-        |JOIN part p ON p.p_partkey = l.l_partkey
-        |WHERE p.p_brand <> 'Brand#13'
-        |  AND p.p_type NOT LIKE 'ECONOMY%'
-        |  AND p.p_size IN (5, 10, 24, 30)
-        |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |    WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q335_boilerplate_density" ->
-      """WITH f AS (SELECT * FROM '__AUX__/q335_blocks/*.parquet'),
-        |c AS (SELECT doc_id, words, text_len, link_len, chrome,
-        |    COALESCE(lag(words) OVER w, 0) AS pw,
-        |    COALESCE(lag(text_len) OVER w, 0) AS pt,
-        |    COALESCE(lag(link_len) OVER w, 0) AS pl,
-        |    COALESCE(lead(words) OVER w, 0) AS nw
-        |  FROM f
-        |  WINDOW w AS (PARTITION BY doc_id ORDER BY block_idx)),
-        |d AS (SELECT doc_id, words,
-        |    CASE WHEN chrome = 1 THEN FALSE
-        |         WHEN link_len * 3 > text_len THEN FALSE
-        |         WHEN pl * 9 <= pt * 5
-        |           THEN (words > 16 OR nw > 15 OR pw > 4)
-        |         ELSE (words > 40 OR nw > 17) END AS content
-        |  FROM c)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_blocks,
-        |  CAST(sum(CASE WHEN content THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_content,
-        |  CAST(sum(CASE WHEN content THEN words ELSE 0 END) AS BIGINT)
-        |    AS content_words
-        |FROM d GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "q336_simrank" ->
-      s"""WITH nn AS (SELECT DISTINCT doc_id % 6 AS n FROM documents),
-        |raw AS (SELECT n AS src, 6 + n % 3 AS dst FROM nn
-        |  UNION ALL SELECT n, 6 + (n + 1) % 3 FROM nn
-        |  UNION ALL SELECT 6 + n, 9 FROM nn WHERE n < 3),
-        |ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM raw),
-        |nodes AS (SELECT DISTINCT id FROM (
-        |  SELECT src AS id FROM ed UNION ALL SELECT dst FROM ed)),
-        |ind AS MATERIALIZED (SELECT dst AS id,
-        |    CAST(count(*) AS BIGINT) AS ind FROM ed GROUP BY 1),
-        |sim0 AS (SELECT id AS a, id AS b, CAST(1000000 AS BIGINT) AS s
-        |  FROM nodes),
-        |${(1 to 3).map(k => simRankRoundCtes(k - 1, k)).mkString(",\n")}
-        |SELECT a, b, s AS sim_ppm FROM sim3 WHERE a < b
-        |ORDER BY a, b""".stripMargin,
-
-    "q337_encoding_advisor" -> {
-      def colCte(table: String, c: String): String =
-        s"""SELECT '$c' AS column_name, stats.n AS n_rows, stats.ndv,
-           |  stats.slen + 4 * stats.n AS plain_bytes,
-           |  stats.dlen + 4 * stats.ndv
-           |    + (stats.n * bits.b + 7) // 8 AS dict_bytes,
-           |  bits.b AS bits,
-           |  CASE WHEN stats.dlen + 4 * stats.ndv
-           |      + (stats.n * bits.b + 7) // 8
-           |      <= stats.slen + 4 * stats.n
-           |    THEN 'dict' ELSE 'plain' END AS encoding
-           |FROM (SELECT CAST(count(*) AS BIGINT) AS ndv,
-           |    CAST(sum(strlen(v)) AS BIGINT) AS dlen,
-           |    CAST(sum(cnt) AS BIGINT) AS n,
-           |    CAST(sum(strlen(v) * cnt) AS BIGINT) AS slen
-           |  FROM (SELECT $c AS v, count(*) AS cnt FROM $table
-           |    WHERE $c IS NOT NULL GROUP BY 1)) stats,
-           |  LATERAL (SELECT CAST(min(bb.b) AS BIGINT) AS b
-           |    FROM (SELECT unnest(range(1, 63)) AS b) bb
-           |    WHERE (1::BIGINT << CAST(bb.b AS INT)) >= stats.ndv
-           |      OR stats.ndv <= 2 AND bb.b = 1) bits""".stripMargin
-      Seq(colCte("part", "p_name"), colCte("part", "p_brand"),
-        colCte("part", "p_type"), colCte("customer", "c_name"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-
-    "q338_psi_drift" ->
-      """WITH ev AS MATERIALIZED (SELECT
-        |    CAST(round(value * 100) AS BIGINT) AS cents,
-        |    epoch_us(ts) // 1000000 AS ts_s
-        |  FROM events),
-        |mid AS (SELECT (min(ts_s) + max(ts_s)) // 2 AS m FROM ev),
-        |fl AS MATERIALIZED (SELECT cents AS v,
-        |    CASE WHEN ts_s > mid.m THEN 1 ELSE 0 END AS p
-        |  FROM ev, mid),
-        |qarr AS (SELECT quantile_cont(v, [0.125, 0.25, 0.375, 0.5,
-        |    0.625, 0.75, 0.875]) AS qs
-        |  FROM fl WHERE p = 0),
-        |bet AS MATERIALIZED (SELECT i,
-        |    CAST(round(qs[CAST(i AS INT)]) AS BIGINT) AS beta
-        |  FROM (SELECT unnest(range(1, 8)) AS i), qarr),
-        |asg AS (SELECT f.p, f.v,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM bet b
-        |      WHERE f.v > b.beta) AS bin
-        |  FROM fl f),
-        |cnts AS (SELECT p, bin, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM asg GROUP BY 1, 2),
-        |tot AS (SELECT p, CAST(count(*) AS BIGINT) AS n FROM fl
-        |  GROUP BY 1),
-        |spn AS (SELECT pr.p, r.bin
-        |  FROM (SELECT unnest(range(8)) AS bin) r
-        |  CROSS JOIN (SELECT unnest([0, 1]) AS p) pr),
-        |sh AS (SELECT s.p, s.bin,
-        |    greatest(CAST(COALESCE(c.cnt, 0) * 1000000 // t.n
-        |      AS BIGINT), 1) AS share
-        |  FROM spn s LEFT JOIN cnts c ON c.p = s.p AND c.bin = s.bin
-        |  JOIN tot t ON t.p = s.p),
-        |wide AS MATERIALIZED (SELECT a.bin, a.share AS ref_ppm,
-        |    b.share AS cur_ppm,
-        |    CAST(round(ln(a.share::DOUBLE / b.share) * 1000000)
-        |      AS BIGINT) AS ln_u6
-        |  FROM sh a JOIN sh b ON b.bin = a.bin AND b.p = 1
-        |  WHERE a.p = 0),
-        |tt AS (SELECT CAST(sum((ref_ppm - cur_ppm) * ln_u6) AS BIGINT)
-        |    AS psi_total_p12 FROM wide)
-        |SELECT w.bin, w.ref_ppm, w.cur_ppm, w.ln_u6,
-        |  (w.ref_ppm - w.cur_ppm) * w.ln_u6 AS psi_contrib_p12,
-        |  tt.psi_total_p12
-        |FROM wide w, tt ORDER BY w.bin""".stripMargin,
-
-    "q339_contamination_pruned" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q339_assign/*.parquet'),
-        |p AS (SELECT DISTINCT eval_id, centroid
-        |  FROM '__AUX__/q339_probes/*.parquet'),
-        |ev AS (SELECT vec_id AS eval_id, embedding AS qv FROM embeddings
-        |  WHERE vec_id % 20 = 0),
-        |raw AS (SELECT e.eval_id, c.vec_id AS doc_id,
-        |    unnest(c.embedding)::DOUBLE AS x, unnest(e.qv)::DOUBLE AS y
-        |  FROM ev e CROSS JOIN embeddings c),
-        |cosall AS MATERIALIZED (SELECT eval_id, doc_id,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM raw GROUP BY 1, 2),
-        |brute AS MATERIALIZED (SELECT eval_id, doc_id FROM cosall
-        |  WHERE cos >= 0.3),
-        |pruned AS (SELECT b.eval_id, b.doc_id FROM brute b
-        |  JOIN a ON a.vec_id = b.doc_id
-        |  JOIN p ON p.eval_id = b.eval_id AND p.centroid = a.centroid),
-        |nb AS (SELECT eval_id, CAST(count(*) AS BIGINT) AS n_brute
-        |  FROM brute GROUP BY 1),
-        |np AS (SELECT eval_id, CAST(count(*) AS BIGINT) AS n_pruned
-        |  FROM pruned GROUP BY 1)
-        |SELECT nb.eval_id, nb.n_brute,
-        |  CAST(COALESCE(np.n_pruned, 0) AS BIGINT) AS n_pruned,
-        |  CAST(COALESCE(np.n_pruned, 0) * 1000 // nb.n_brute AS BIGINT)
-        |    AS recall_pm
-        |FROM nb LEFT JOIN np ON np.eval_id = nb.eval_id
-        |ORDER BY nb.eval_id""".stripMargin,
-
-    "q340_exactsubstr_sa" -> {
-      s"""WITH planted AS (SELECT doc_id, text || CASE WHEN doc_id % 7 = 0
-         |    THEN ' exact substr pass finds arbitrary length repeats beyond any fixed k grid'
-         |    ELSE '' END AS text FROM documents),
-         |${saRepeatHitsCtes},
-         |${islandSpanCtes(false)},
-         |agg AS (SELECT doc_id, CAST(sum(e - s) AS BIGINT) AS repeated_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-         |SELECT l.doc_id, l.len AS n_tokens,
-         |  CAST(COALESCE(a.repeated_tokens, 0) AS BIGINT) AS repeated_tokens,
-         |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-         |FROM lens l LEFT JOIN agg a USING (doc_id)
-         |ORDER BY l.doc_id""".stripMargin
-    },
-
-    "q345_exactsubstr_removal" -> {
-      s"""WITH planted AS (SELECT doc_id, text || CASE WHEN doc_id % 7 = 0
-         |    THEN ' exact substr pass finds arbitrary length repeats beyond any fixed k grid'
-         |    ELSE '' END AS text FROM documents),
-         |otoks AS MATERIALIZED (SELECT doc_id,
-         |    regexp_extract_all(text, '\\S+') AS ows FROM planted),
-         |${saRepeatHitsCtes},
-         |${spanRemovalSql}""".stripMargin
-    },
-
-    "q346_ivfpq_batch" ->
-      """WITH a AS (SELECT * FROM '__AUX__/q346_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q346_probes/*.parquet'),
-        |cent AS (SELECT * FROM '__AUX__/q346_centroids/*.parquet'),
-        |cb AS (SELECT * FROM '__AUX__/q346_codebooks/*.parquet'),
-        |codes AS (SELECT * FROM '__AUX__/q346_codes/*.parquet'),
-        |qf AS (SELECT vec_id AS qid, CAST(i - 1 AS INT) AS j,
-        |    embedding[i]::DOUBLE AS qv
-        |  FROM embeddings, UNNEST(range(1, 65)) t(i)
-        |  WHERE vec_id IN (2, 31, 77)),
-        |rq AS (SELECT p.qid, p.centroid AS cell,
-        |    CAST(qf.j // 16 AS INT) AS s, CAST(qf.j % 16 AS INT) AS jj,
-        |    qf.qv - cent.val AS rv
-        |  FROM p JOIN cent ON cent.c = p.centroid
-        |  JOIN qf ON qf.j = cent.j AND qf.qid = p.qid),
-        |lut AS MATERIALIZED (SELECT rq.qid, rq.cell, rq.s, cb.c,
-        |    round(sum((rq.rv - cb.val) * (rq.rv - cb.val)), 6) AS d2
-        |  FROM rq JOIN cb ON cb.s = rq.s AND cb.j = rq.jj
-        |  GROUP BY 1, 2, 3, 4),
-        |cand AS (SELECT p.qid, a.vec_id, a.centroid FROM a
-        |  JOIN p ON p.centroid = a.centroid),
-        |dist AS (SELECT cand.qid, cand.vec_id, cand.centroid,
-        |    round(sum(lut.d2), 6) AS adc_dist
-        |  FROM cand JOIN codes USING (vec_id)
-        |  JOIN lut ON lut.qid = cand.qid AND lut.cell = cand.centroid
-        |    AND lut.s = codes.s AND lut.c = codes.code
-        |  GROUP BY 1, 2, 3)
-        |SELECT qid AS query_id, vec_id, centroid, adc_dist FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY qid
-        |    ORDER BY adc_dist, vec_id) AS rn FROM dist)
-        |WHERE rn <= 10 ORDER BY query_id, adc_dist, vec_id""".stripMargin,
-
-    "q347_ivfpq_append" ->
-      """WITH cent AS (SELECT * FROM '__AUX__/q347_centroids/*.parquet'),
-        |cb AS (SELECT * FROM '__AUX__/q347_codebooks/*.parquet'),
-        |vf AS MATERIALIZED (SELECT vec_id, CAST(i - 1 AS INT) AS j,
-        |    embedding[i]::DOUBLE AS v
-        |  FROM embeddings, UNNEST(range(1, 65)) t(i)),
-        |ad AS MATERIALIZED (SELECT vf.vec_id, cent.c,
-        |    sum((cent.val - vf.v) * (cent.val - vf.v)) AS d2
-        |  FROM vf JOIN cent ON cent.j = vf.j GROUP BY 1, 2),
-        |assign AS MATERIALIZED (SELECT vec_id, c AS centroid
-        |  FROM (SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY d2, c) AS rn FROM ad)
-        |  WHERE rn = 1),
-        |res AS MATERIALIZED (SELECT vf.vec_id, a.centroid, vf.j,
-        |    CAST(CAST(vf.v - cent.val AS REAL) AS DOUBLE) AS rv
-        |  FROM vf JOIN assign a USING (vec_id)
-        |  JOIN cent ON cent.c = a.centroid AND cent.j = vf.j),
-        |cd AS MATERIALIZED (SELECT r.vec_id, r.centroid,
-        |    CAST(r.j // 16 AS INT) AS s, cb.c,
-        |    sum((cb.val - r.rv) * (cb.val - r.rv)) AS d2
-        |  FROM res r JOIN cb ON cb.s = r.j // 16 AND cb.j = r.j % 16
-        |  GROUP BY 1, 2, 3, 4),
-        |codes AS (SELECT vec_id, centroid, s, c AS code
-        |  FROM (SELECT vec_id, centroid, s, c,
-        |      row_number() OVER (PARTITION BY vec_id, s
-        |        ORDER BY d2, c) AS rn FROM cd)
-        |  WHERE rn = 1)
-        |SELECT vec_id,
-        |  CAST(CASE WHEN vec_id % 2 = 0 THEN 0 ELSE 1 END AS INTEGER)
-        |    AS generation,
-        |  CAST(centroid AS INTEGER) AS centroid,
-        |  CAST(s AS INTEGER) AS s, CAST(code AS INTEGER) AS code
-        |FROM codes ORDER BY vec_id, s""".stripMargin,
-
-    "q348_exactsubstr_contam" -> {
-      s"""WITH planted AS (SELECT doc_id, text
-         |    || CASE WHEN doc_id % 50 = 0 OR doc_id % 7 = 3
-         |      THEN ' benchmark answer span leaks verbatim into web crawl training corpora every day'
-         |      ELSE '' END
-         |    || CASE WHEN doc_id % 13 = 5 AND doc_id % 50 <> 0
-         |      THEN ' shared internal navigation chrome repeats across many training documents without leaking ever'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |${saRankCtes(3, "SELECT doc_id, text FROM planted")},
-         |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-         |keyed AS MATERIALIZED (SELECT a.doc_id, a.pos, a.rank AS ra,
-         |    b.rank AS rb,
-         |    CASE WHEN a.doc_id % 50 = 0 THEN 1 ELSE 0 END AS ev
-         |  FROM r3 a JOIN r3 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 4
-         |  JOIN lens l ON l.doc_id = a.doc_id
-         |  WHERE a.pos + 12 <= l.len),
-         |grp AS (SELECT ra, rb FROM keyed GROUP BY ra, rb
-         |  HAVING max(ev) = 1 AND min(ev) = 0),
-         |hits AS (SELECT k.doc_id, k.pos AS s, k.pos + 12 AS e
-         |  FROM keyed k JOIN grp USING (ra, rb) WHERE k.ev = 0),
-         |${islandSpanCtes(false)},
-         |agg AS (SELECT doc_id,
-         |    CAST(sum(e - s) AS BIGINT) AS contaminated_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-         |SELECT l.doc_id, l.len AS n_tokens,
-         |  CAST(COALESCE(a.contaminated_tokens, 0) AS BIGINT)
-         |    AS contaminated_tokens,
-         |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-         |FROM lens l LEFT JOIN agg a USING (doc_id)
-         |WHERE l.doc_id % 50 <> 0
-         |ORDER BY l.doc_id""".stripMargin
-    },
-
-    "q349_dsir_select" ->
-      s"""WITH rawd AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 3
-        |      THEN translate(text, 'aeiou', 'zzzzz') ELSE text END AS text
-        |  FROM documents),
-        |lv AS (SELECT 'raw' AS lang, text FROM rawd
-        |  UNION ALL
-        |  SELECT 'target', text FROM documents WHERE doc_id % 10 = 0),
-        |tb AS (SELECT lang,
-        |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % 1024 AS bucket
-        |  FROM (SELECT lang, unnest(flatten(list_transform(
-        |      list_filter(string_split(lower(trim(text)), ' '),
-        |        w -> w <> ''),
-        |      w -> list_transform(range(1, length(w) + 2),
-        |        i -> substr('_' || w || '_', CAST(i AS INT), 2))))) AS g
-        |    FROM lv)),
-        |${langIdBucketScoreCtes("rawd")},
-        |sc AS (SELECT g.doc_id, l.lang,
-        |    CAST(SUM(COALESCE(w.w6, f.def6)) AS BIGINT) AS score6,
-        |    CAST(count(*) AS BIGINT) AS n_grams
-        |  FROM gb g CROSS JOIN (SELECT DISTINCT lang FROM tot) l
-        |  LEFT JOIN wts w ON w.lang = l.lang AND w.bucket = g.bucket
-        |  JOIN flo f ON f.lang = l.lang
-        |  GROUP BY 1, 2),
-        |wt AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN lang = 'target' THEN score6
-        |      ELSE -score6 END) AS BIGINT) AS w6,
-        |    CAST(max(n_grams) AS BIGINT) AS n_grams
-        |  FROM sc GROUP BY 1),
-        |rk AS (SELECT doc_id, w6, n_grams,
-        |    row_number() OVER (ORDER BY w6 DESC, doc_id) AS rn FROM wt)
-        |SELECT doc_id, w6, n_grams,
-        |  CAST(CASE WHEN rn <= 200 THEN 1 ELSE 0 END AS BIGINT) AS selected
-        |FROM rk ORDER BY doc_id""".stripMargin,
-
-    "q350_hnsw_batch_tombstoned" -> {
-      s"""WITH ${hnswBatchWalkCtes("q350",
-        s"""pp AS (SELECT q.vec_id AS qid, e.vec_id AS id,
-           |    unnest(e.embedding)::DOUBLE AS x, unnest(q.embedding)::DOUBLE AS y
-           |  FROM embeddings e,
-           |       (SELECT vec_id, embedding FROM embeddings
-           |        WHERE vec_id IN (1, 26, 52)) q)""".stripMargin)}
-         |SELECT qid AS query_id, id AS vec_id, cos FROM (
-         |  SELECT qid, id, cos, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, id) AS rn
-         |  FROM (SELECT DISTINCT qid, id, cos FROM v3)
-         |  WHERE id % 5 <> 0)
-         |WHERE rn <= 10
-         |ORDER BY query_id, cos DESC, vec_id""".stripMargin
-    },
-
-    "q351_small_qty_revenue" ->
-      """WITH p AS (SELECT p_partkey FROM part
-        |  WHERE p_brand = 'Brand#4' AND p_size < 20),
-        |lp AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        |  FROM lineitem JOIN p ON p_partkey = l_partkey),
-        |st AS (SELECT l_partkey, sum(qty) AS sumq, count(*) AS cnt
-        |  FROM lp GROUP BY 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(COALESCE(sum(cents), 0) AS BIGINT) AS sum_cents,
-        |  CAST(COALESCE(sum(cents), 0) // 7 AS BIGINT) AS avg_yearly_cents
-        |FROM lp JOIN st USING (l_partkey)
-        |WHERE qty * cnt * 5 < sumq""".stripMargin,
-
-    "q352_view_rewrite" -> viewLatticeOracle,
-
-    // true grouping cardinalities over the FULL table (pre + delta) and
-    // the (rows, name) pick among the rf-subsuming views
-    "q360_view_stats_route" ->
-      """WITH l AS (SELECT l_returnflag AS rf, l_linestatus AS ls,
-        |    month(l_shipdate) AS mth FROM lineitem),
-        |sz AS (SELECT 'v_rf_ls' AS view, CAST(count(*) AS BIGINT)
-        |    AS view_rows FROM (SELECT DISTINCT rf, ls FROM l)
-        |  UNION ALL SELECT 'v_rf_mth', CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT rf, mth FROM l)
-        |  UNION ALL SELECT 'v_ls_mth', CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT ls, mth FROM l)),
-        |pick AS (SELECT view FROM sz WHERE view IN ('v_rf_ls', 'v_rf_mth')
-        |  ORDER BY view_rows, view LIMIT 1)
-        |SELECT view, view_rows,
-        |  CAST(CASE WHEN view = (SELECT view FROM pick)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS chosen
-        |FROM sz ORDER BY view""".stripMargin,
-
-    // both inverted-index structures derived from the FULL corpus in
-    // one pass — the merged/streamed builds must match exactly
-    "q361_postings_merge" -> postingsFullOracle,
-    "q363_postings_stream" -> postingsFullOracle,
-
-    // the BM25 prefetch re-derived from scratch (q19's CTEs at k'=50),
-    // the MaxSim stage from the aux token vectors — max/sum over exact
-    // ×10⁶ integers
-    "q364_maxsim_rerank" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d) u
-        |  WHERE tok IN ('table','scan','merge','join','vector') GROUP BY doc_id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
-        |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
-        |sc AS (SELECT t.doc_id,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |cand AS MATERIALIZED (SELECT doc_id FROM (
-        |  SELECT doc_id, round(sum(s), 6) AS bm25_score FROM sc GROUP BY doc_id
-        |  ORDER BY bm25_score DESC, doc_id LIMIT 50)),
-        |dv AS (SELECT dtok, dvec FROM '__AUX__/q364_dvecs/*.parquet'),
-        |qv AS (SELECT qtok, qvec FROM '__AUX__/q364_qvecs/*.parquet'),
-        |pairs AS (SELECT dv.dtok, qv.qtok,
-        |    unnest(dv.dvec)::DOUBLE AS x, unnest(qv.qvec)::DOUBLE AS y
-        |  FROM dv CROSS JOIN qv),
-        |pc AS MATERIALIZED (SELECT dtok, qtok,
-        |    CAST(round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y)))
-        |      * 1000000, 0) AS BIGINT) AS cos_u6
-        |  FROM pairs GROUP BY 1, 2),
-        |dt AS (SELECT DISTINCT doc_id, unnest(toks) AS dtok
-        |  FROM d JOIN cand USING (doc_id)),
-        |best AS (SELECT dt.doc_id, pc.qtok, max(pc.cos_u6) AS b
-        |  FROM dt JOIN pc USING (dtok) GROUP BY 1, 2),
-        |sumd AS (SELECT doc_id, CAST(sum(b) AS BIGINT) AS maxsim_u6
-        |  FROM best GROUP BY 1)
-        |SELECT doc_id, maxsim_u6 FROM sumd
-        |ORDER BY maxsim_u6 DESC, doc_id LIMIT 10""".stripMargin,
-
-    "q365_maxsim_batch" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(len(toks)) AS avgdl FROM d),
-        |qt(query_id, tok) AS (VALUES (0,'table'),(0,'scan'),(0,'merge'),
-        |  (0,'join'),(0,'vector'),(1,'window'),(1,'order'),(1,'sort'),
-        |  (2,'group'),(2,'key'),(2,'value')),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf, any_value(dl) AS dl FROM (
-        |    SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d) u
-        |  WHERE tok IN (SELECT DISTINCT tok FROM qt) GROUP BY doc_id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM (
-        |    SELECT doc_id, unnest(toks) AS tok FROM d) u GROUP BY tok),
-        |sc AS (SELECT q.query_id, t.doc_id,
-        |${bm25TermScore}
-        |  FROM tf t JOIN qt q ON q.tok = t.tok
-        |  JOIN df f ON f.tok = t.tok CROSS JOIN params p),
-        |bm AS (SELECT query_id, doc_id, round(sum(s), 6) AS b
-        |  FROM sc GROUP BY 1, 2),
-        |cand AS MATERIALIZED (SELECT query_id, doc_id FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY b DESC, doc_id) AS rn FROM bm) WHERE rn <= 50),
-        |dv AS (SELECT dtok, dvec FROM '__AUX__/q365_dvecs/*.parquet'),
-        |qv AS (SELECT qtok, qvec FROM '__AUX__/q365_qvecs/*.parquet'),
-        |pairs AS (SELECT dv.dtok, qv.qtok,
-        |    unnest(dv.dvec)::DOUBLE AS x, unnest(qv.qvec)::DOUBLE AS y
-        |  FROM dv CROSS JOIN qv),
-        |pc AS MATERIALIZED (SELECT dtok, qtok,
-        |    CAST(round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y)))
-        |      * 1000000, 0) AS BIGINT) AS cos_u6
-        |  FROM pairs GROUP BY 1, 2),
-        |dt AS MATERIALIZED (SELECT DISTINCT doc_id, unnest(toks) AS dtok
-        |  FROM d WHERE doc_id IN (SELECT doc_id FROM cand)),
-        |best AS (SELECT c.query_id, c.doc_id, q.tok AS qtok,
-        |    max(pc.cos_u6) AS bst
-        |  FROM cand c JOIN dt ON dt.doc_id = c.doc_id
-        |  JOIN pc ON pc.dtok = dt.dtok
-        |  JOIN qt q ON q.query_id = c.query_id AND q.tok = pc.qtok
-        |  GROUP BY 1, 2, 3),
-        |sumd AS (SELECT query_id, doc_id,
-        |    CAST(sum(bst) AS BIGINT) AS maxsim_u6 FROM best GROUP BY 1, 2)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, maxsim_u6
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY maxsim_u6 DESC, doc_id) AS rn FROM sumd)
-        |WHERE rn <= 10
-        |ORDER BY query_id, maxsim_u6 DESC, doc_id""".stripMargin,
-
-    // corpus-wide window counting, independent of the segment split
-    // (and of the q377 store compaction — the counts are additive over
-    // doc-disjoint segments, so merged and unmerged stores decide
-    // identically)
-    "q362_sa_stats_incremental" -> saStatsIncrementalOracle,
-    "q377_sa_keytable_compaction" -> saStatsIncrementalOracle,
-
-    // positional postings + corpus stats rebuilt FROM SCRATCH on the
-    // surviving docs (keep = 1): the maintained anti-join + the
-    // corpus-derived (n_docs, total_dl) delta must land exactly here —
-    // including the token-less purged doc's n_docs decrement
-    "q376_forget_positional" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q376_index/*.parquet'),
-        |surv AS (SELECT id, tokens FROM idx WHERE keep = 1),
-        |pp AS (SELECT id, tokens[CAST(i + 1 AS INT)] AS term,
-        |    CAST(i AS BIGINT) AS pos, CAST(len(tokens) AS BIGINT) AS dl
-        |  FROM surv, UNNEST(range(len(tokens))) t(i)),
-        |cs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(COALESCE(sum(len(tokens)), 0) AS BIGINT) AS total_dl
-        |  FROM surv)
-        |SELECT pp.term, pp.id, pp.pos, pp.dl, cs.n_docs, cs.total_dl
-        |FROM pp, cs ORDER BY term, id, pos""".stripMargin,
-
-    // every artifact rebuilt from the SURVIVING corpus (doc_id % 9 <> 4)
-    // in one DuckDB pass; pos_cnt must equal tf — the positional store
-    // and the bag store can only agree if the takedown scrubbed both
-    "q380_forget_streamed" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS parts
-        |  FROM documents WHERE doc_id % 9 <> 4),
-        |pos AS MATERIALIZED (SELECT CAST(doc_id AS VARCHAR) AS id,
-        |    unnest(parts) AS term, len(parts) AS dl FROM toks),
-        |tf AS (SELECT term, id, CAST(count(*) AS BIGINT) AS tf,
-        |    CAST(any_value(dl) AS BIGINT) AS dl FROM pos GROUP BY 1, 2),
-        |df AS (SELECT term, CAST(count(DISTINCT id) AS BIGINT) AS df
-        |  FROM pos GROUP BY 1),
-        |tb AS (SELECT term, max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf GROUP BY 1)
-        |SELECT t.term, t.id, t.tf, t.dl, d.df, b.max_tf, b.min_dl,
-        |  t.tf AS pos_cnt
-        |FROM tf t JOIN df d USING (term) JOIN tb b USING (term)
-        |ORDER BY term, id""".stripMargin,
-
-    // occurrence counts from the independent window-equality phrase
-    // definition, ranked (hits desc, id), top-5 — the served ranking
-    "q379_phrase_topdocs" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q379_index/*.parquet'),
-        |occ AS (SELECT id, CAST(count(*) AS BIGINT) AS phrase_hits
-        |  FROM idx, UNNEST(range(1, len(tokens) - 1)) t(i)
-        |  WHERE tokens[i] = 'graft' AND tokens[i + 1] = 'phrase'
-        |    AND tokens[i + 2] = 'probe'
-        |  GROUP BY id)
-        |SELECT id, phrase_hits FROM occ
-        |ORDER BY phrase_hits DESC, id LIMIT 5""".stripMargin,
-
-    // true grouping cardinalities + the routed rf aggregate over the
-    // FULL table — the reloaded lattice's stored stats, its choice,
-    // and its answer must all land exactly here
-    "q378_view_stats_persisted" ->
-      """WITH l AS (SELECT l_returnflag AS rf, l_linestatus AS ls,
-        |    month(l_shipdate) AS mth,
-        |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |sz AS (SELECT 'v_rf_ls' AS view, CAST(count(*) AS BIGINT)
-        |    AS view_rows FROM (SELECT DISTINCT rf, ls FROM l)
-        |  UNION ALL SELECT 'v_rf_mth', CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT rf, mth FROM l)
-        |  UNION ALL SELECT 'v_ls_mth', CAST(count(*) AS BIGINT)
-        |    FROM (SELECT DISTINCT ls, mth FROM l)),
-        |pick AS (SELECT view FROM sz WHERE view IN ('v_rf_ls', 'v_rf_mth')
-        |  ORDER BY view_rows, view LIMIT 1),
-        |agg AS (SELECT rf, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents FROM l GROUP BY rf)
-        |SELECT agg.rf, agg.cnt, agg.sum_cents,
-        |  (SELECT view FROM pick) AS served_from,
-        |  sz.view, sz.view_rows,
-        |  CAST(CASE WHEN sz.view = (SELECT view FROM pick)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS chosen
-        |FROM agg, sz ORDER BY rf, view""".stripMargin,
-
-    // IVM refresh == full recompute under additivity, so the routed
-    // answer over the REFRESHED lattice must match the full-table
-    // replay verbatim (the q218 shared-oracle pattern)
-    "q354_view_ivm_route" -> viewLatticeOracle,
-
-    
-
-    "q353_provenance_chain" ->
-      """WITH st AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(strip_accents(text)),
-        |      '\s+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |st2 AS (SELECT doc_id, norm, substr(norm, 1, 200) AS trunc
-        |  FROM st),
-        |st3 AS (SELECT doc_id, norm, trunc,
-        |    regexp_replace(trunc, '[0-9]+', '#', 'g') AS masked
-        |  FROM st2),
-        |ch AS (SELECT doc_id,
-        |    md5('genesis|' || CAST(doc_id AS VARCHAR)) AS c0,
-        |    md5(norm) AS d1, md5(trunc) AS d2, md5(masked) AS d3
-        |  FROM st3),
-        |ch2 AS (SELECT doc_id, c0, d1, d2, d3,
-        |    md5(c0 || '|normalize|' || d1) AS c1 FROM ch),
-        |ch3 AS (SELECT *, md5(c1 || '|truncate200|' || d2) AS c2 FROM ch2),
-        |ch4 AS (SELECT *, md5(c2 || '|mask_digits|' || d3) AS c3 FROM ch3)
-        |SELECT doc_id, CAST(0 AS BIGINT) AS seq, 'genesis' AS stage,
-        |  c0 AS digest, c0 AS chain, CAST(1 AS BIGINT) AS ok FROM ch4
-        |UNION ALL SELECT doc_id, 1, 'normalize', d1, c1, 1 FROM ch4
-        |UNION ALL SELECT doc_id, 2, 'truncate200', d2, c2, 1 FROM ch4
-        |UNION ALL SELECT doc_id, 3, 'mask_digits', d3, c3, 1 FROM ch4
-        |ORDER BY doc_id, seq""".stripMargin,
-
-    "q355_bitemporal" -> {
-      def dimCtes(n: Int, pred: String) =
-        s"""log$n AS (SELECT o_custkey AS custkey, o_orderdate AS ts,
-           |    o_orderkey AS seq, o_orderstatus AS status
-           |  FROM orders $pred),
-           |d$n AS (SELECT *, lag(status) OVER (PARTITION BY custkey
-           |    ORDER BY ts, seq) AS pv FROM log$n),
-           |c$n AS (SELECT custkey, ts, seq, status FROM d$n
-           |  WHERE pv IS NULL OR status <> pv),
-           |sv$n AS (SELECT custkey, status, ts AS f,
-           |    lead(ts) OVER (PARTITION BY custkey ORDER BY ts, seq) AS t
-           |  FROM c$n)""".stripMargin
-      s"""WITH probes AS (SELECT c_custkey AS custkey FROM customer
-         |  WHERE c_custkey % 10 = 7),
-         |${dimCtes(1, "WHERE o_orderdate < TIMESTAMP '1998-01-01'")},
-         |${dimCtes(2, "")},
-         |a1 AS (SELECT p.custkey, s.status FROM probes p
-         |  LEFT JOIN sv1 s ON s.custkey = p.custkey
-         |    AND TIMESTAMP '2000-06-15' >= s.f
-         |    AND (s.t IS NULL OR TIMESTAMP '2000-06-15' < s.t)),
-         |a2 AS (SELECT p.custkey, s.status FROM probes p
-         |  LEFT JOIN sv2 s ON s.custkey = p.custkey
-         |    AND TIMESTAMP '2000-06-15' >= s.f
-         |    AND (s.t IS NULL OR TIMESTAMP '2000-06-15' < s.t))
-         |SELECT p.custkey,
-         |  COALESCE(a1.status, 'none') AS status_tx1,
-         |  COALESCE(a2.status, 'none') AS status_tx2,
-         |  CAST(CASE WHEN COALESCE(a1.status, 'none')
-         |    IS DISTINCT FROM COALESCE(a2.status, 'none')
-         |    THEN 1 ELSE 0 END AS BIGINT) AS revised
-         |FROM probes p
-         |LEFT JOIN a1 ON a1.custkey = p.custkey
-         |LEFT JOIN a2 ON a2.custkey = p.custkey
-         |ORDER BY p.custkey""".stripMargin
-    },
-
-    // the SCAN-PATH arithmetic (token explode → tf → BM25), independent
-    // of the postings table Spark served from — equality proves the
-    // postings routing changes no score bit
-    // the RESULT rows come from full unpruned scoring (independent of
-    // the pruning), the AUDIT columns from a u6 replay of the MaxScore
-    // decision — a pruning bug fails one or the other
-    "q367_bm25_maxscore" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q367_index/*.parquet'),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
-        |    any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('zqmaxscore', 'scan', 'filter', 'join')
-        |  GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id, t.tok,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc
-        |  GROUP BY id ORDER BY bm25_score DESC, id LIMIT 10),
-        |${maxScoreTopTermCtes},
-        |theta AS (SELECT CASE WHEN (SELECT count(*) FROM ts) < 10
-        |    THEN CAST(-1 AS BIGINT)
-        |    ELSE (SELECT s6 - 1 FROM ts WHERE rn = 10) END AS theta6),
-        |ess AS (SELECT tok, ub6,
-        |    CASE WHEN SUM(ub6) OVER (ORDER BY ub6, tok
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      >= (SELECT theta6 FROM theta) THEN 1 ELSE 0 END AS e
-        |  FROM ub),
-        |cand AS (SELECT DISTINCT id FROM tf
-        |  WHERE tok IN (SELECT tok FROM ess WHERE e = 1))
-        |SELECT bm.id, bm.bm25_score,
-        |  (SELECT theta6 FROM theta) AS theta6,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM ub) AS n_terms,
-        |  (SELECT CAST(sum(e) AS BIGINT) FROM ess) AS n_essential,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates
-        |FROM bm ORDER BY bm25_score DESC, id""".stripMargin,
-
-    // each phrase verified with the independent window-equality
-    // definition, unioned per query_id — no slot-count replay
-    "q375_phrase_batch" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q375_index/*.parquet')
-        |SELECT CAST(0 AS BIGINT) AS query_id, id, CAST(i - 1 AS BIGINT) AS pos
-        |FROM idx, UNNEST(range(1, len(tokens) - 1)) t(i)
-        |WHERE tokens[i] = 'graft' AND tokens[i + 1] = 'phrase'
-        |  AND tokens[i + 2] = 'probe'
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), id, CAST(i - 1 AS BIGINT)
-        |FROM idx, UNNEST(range(1, len(tokens))) t(i)
-        |WHERE tokens[i] = 'graft' AND tokens[i + 1] = 'phrase'
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), id, CAST(i - 1 AS BIGINT)
-        |FROM idx, UNNEST(range(1, len(tokens) - 1)) t(i)
-        |WHERE tokens[i] = 'graft' AND tokens[i + 1] = 'graft'
-        |  AND tokens[i + 2] = 'phrase'
-        |ORDER BY query_id, id, pos""".stripMargin,
-
-    // the INDEPENDENT phrase definition: a direct window-equality scan
-    // over the token arrays — no postings, no join-chain replay
-    "q371_phrase_search" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q371_index/*.parquet')
-        |SELECT id, CAST(i - 1 AS BIGINT) AS pos
-        |FROM idx, UNNEST(range(1, len(tokens) - 1)) t(i)
-        |WHERE tokens[i] = 'graft' AND tokens[i + 1] = 'phrase'
-        |  AND tokens[i + 2] = 'probe'
-        |ORDER BY id, pos""".stripMargin,
-
-    // every dial from ONE ranked dot table: dot-rank <= rerank, then
-    // cos-rank <= 10 within the survivors, hits vs the exact probed
-    // top-10
-    "q374_quantized_dial" ->
-      s"""WITH a AS (SELECT * FROM '__AUX__/q374_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q374_probes/*.parquet'),
-        |${int8ProbedCodesCtes},
-        |dr AS (SELECT cd.vec_id,
-        |    row_number() OVER (ORDER BY CAST(sum(cd.q * qv.qv) AS BIGINT)
-        |      DESC, cd.vec_id) AS drn
-        |  FROM cd JOIN qv USING (i) GROUP BY cd.vec_id),
-        |pp AS (SELECT c.vec_id, unnest(c.embedding)::DOUBLE AS x,
-        |    unnest(q.embedding)::DOUBLE AS y
-        |  FROM cand c,
-        |    (SELECT embedding FROM embeddings WHERE vec_id = 1) q),
-        |sc AS MATERIALIZED (SELECT vec_id, round(sum(x*y)
-        |    / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pp GROUP BY 1),
-        |exact AS (SELECT vec_id FROM sc ORDER BY cos DESC, vec_id
-        |  LIMIT 10),
-        |ks AS (SELECT CAST(unnest([10, 25, 50]) AS BIGINT) AS rerank),
-        |sel AS (SELECT ks.rerank, s.vec_id,
-        |    row_number() OVER (PARTITION BY ks.rerank
-        |      ORDER BY s.cos DESC, s.vec_id) AS crn
-        |  FROM ks JOIN dr ON dr.drn <= ks.rerank
-        |  JOIN sc s ON s.vec_id = dr.vec_id)
-        |SELECT rerank, CAST(count(*) FILTER (WHERE vec_id IN
-        |    (SELECT vec_id FROM exact)) AS BIGINT) AS hits_in_exact
-        |FROM sel WHERE crn <= 10 GROUP BY rerank ORDER BY rerank""".stripMargin,
-
-    // q367's replay plus the block layer: md5-derived blocks, per-block
-    // bounds, the survive rule ub6b + (total − ub6(t)) ≥ θ6; result
-    // rows from FULL unpruned scoring, independent of all of it
-    "q373_bm25_blockmax" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q373_index/*.parquet'),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
-        |    any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('zqblock', 'scan', 'filter')
-        |  GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id, t.tok,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM sc
-        |  GROUP BY id ORDER BY bm25_score DESC, id LIMIT 5),
-        |${maxScoreTopTermCtes},
-        |theta AS (SELECT CASE WHEN (SELECT count(*) FROM ts) < 5
-        |    THEN CAST(-1 AS BIGINT)
-        |    ELSE (SELECT s6 - 1 FROM ts WHERE rn = 5) END AS theta6),
-        |ess AS (SELECT tok, ub6,
-        |    CASE WHEN SUM(ub6) OVER (ORDER BY ub6, tok
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      >= (SELECT theta6 FROM theta) THEN 1 ELSE 0 END AS e
-        |  FROM ub),
-        |tot AS (SELECT CAST(sum(ub6) AS BIGINT) AS total FROM ub),
-        |blk AS (SELECT tok,
-        |    CAST('0x' || substr(md5(id), 1, 15) AS BIGINT) % 64 AS block,
-        |    max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf JOIN ess USING (tok) WHERE ess.e = 1 GROUP BY 1, 2),
-        |ubb AS (SELECT b.tok, b.block,
-        |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
-        |      b.max_tf * 2.2 /
-        |      (b.max_tf + 1.2 * (0.25 + 0.75 * b.min_dl / p.avgdl)) *
-        |      1000000, 0) AS BIGINT) + 1 AS ub6b
-        |  FROM blk b, params p JOIN df f ON b.tok = f.tok),
-        |srv AS (SELECT u2.tok, u2.block FROM ubb u2
-        |  JOIN ub ON ub.tok = u2.tok, tot, theta
-        |  WHERE u2.ub6b + (tot.total - ub.ub6) >= theta.theta6)
-        |SELECT bm.id, bm.bm25_score,
-        |  (SELECT theta6 FROM theta) AS theta6,
-        |  (SELECT CAST(sum(e) AS BIGINT) FROM ess) AS n_essential,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM blk) AS n_blocks,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM srv)
-        |    AS n_blocks_surviving
-        |FROM bm ORDER BY bm25_score DESC, id""".stripMargin,
-
-    // the greedy chain replayed from raw token arrays, then re-ranked
-    // by span count (ties → id) — the served proximity ranking
-    "q381_proximity_topdocs" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q381_index/*.parquet'),
-        |${proximitySpanCtes}
-        |SELECT id, CAST(count(*) AS BIGINT) AS span_hits FROM s2
-        |GROUP BY id ORDER BY span_hits DESC, id LIMIT 5""".stripMargin,
-
-    // bin-first KS replayed in full integer arithmetic: the clamp-
-    // then-divide binning, per-bin counts, cumulative walks, cross-
-    // multiplied gaps, and the (max gap, min bin) argmax
-    "q382_ks_binned" ->
-      """WITH vals AS (SELECT CAST(round(l_extendedprice * 100)
-        |      AS BIGINT) AS v,
-        |    CASE WHEN l_shipdate < DATE '1996-01-01' THEN 0 ELSE 1 END
-        |      AS side
-        |  FROM lineitem),
-        |mm AS (SELECT CAST(min(v) AS BIGINT) AS lo,
-        |    CAST(greatest(max(v), min(v) + 1) AS BIGINT) AS hi
-        |  FROM vals),
-        |bn AS (SELECT ((least(greatest(v, lo), hi - 1) - lo) * 256)
-        |      // (hi - lo) AS bin, side
-        |  FROM vals CROSS JOIN mm),
-        |m AS (SELECT bin,
-        |    CAST(sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c_a,
-        |    CAST(sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c_b
-        |  FROM bn GROUP BY 1),
-        |cum AS (SELECT bin,
-        |    CAST(sum(c_a) OVER (ORDER BY bin) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY bin) AS BIGINT) AS cum_b
-        |  FROM m),
-        |nt AS (SELECT
-        |    CAST(sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_a,
-        |    CAST(sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_b
-        |  FROM vals),
-        |g AS (SELECT cum.*, nt.n_a, nt.n_b,
-        |    CAST(abs(cum_a * nt.n_b - cum_b * nt.n_a) AS BIGINT)
-        |      AS gap_num
-        |  FROM cum CROSS JOIN nt),
-        |mx AS (SELECT gap_num, bin FROM g
-        |  ORDER BY gap_num DESC, bin LIMIT 1)
-        |SELECT g.bin, g.cum_a, g.cum_b, g.gap_num, g.n_a, g.n_b,
-        |  CAST(mx.gap_num * 1000 // (g.n_a * g.n_b) AS BIGINT) AS ks_pm,
-        |  mx.bin AS ks_at_bin
-        |FROM g CROSS JOIN mx ORDER BY g.bin""".stripMargin,
-
-    // bin-first AUC: same binning, then q248's tie-safe doubled-U fold
-    // over the bounded bin dimension
-    "q383_auc_binned" ->
-      """WITH vals AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT)
-        |      AS v,
-        |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-        |  FROM orders),
-        |mm AS (SELECT CAST(min(v) AS BIGINT) AS lo,
-        |    CAST(greatest(max(v), min(v) + 1) AS BIGINT) AS hi
-        |  FROM vals),
-        |bn AS (SELECT ((least(greatest(v, lo), hi - 1) - lo) * 512)
-        |      // (hi - lo) AS bin, y
-        |  FROM vals CROSS JOIN mm),
-        |p AS (SELECT bin, CAST(sum(y) AS BIGINT) AS n_pos_v,
-        |    CAST(sum(1 - y) AS BIGINT) AS n_neg_v
-        |  FROM bn GROUP BY 1),
-        |c AS (SELECT *, CAST(COALESCE(sum(n_neg_v) OVER (ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cum_neg_below
-        |  FROM p),
-        |t AS (SELECT CAST(sum(n_pos_v) AS BIGINT) AS np,
-        |    CAST(sum(n_neg_v) AS BIGINT) AS nn,
-        |    CAST(sum(n_pos_v * (cum_neg_below * 2 + n_neg_v))
-        |      AS BIGINT) AS u2
-        |  FROM c)
-        |SELECT c.bin, c.n_pos_v, c.n_neg_v, c.cum_neg_below,
-        |  t.np AS n_pos, t.nn AS n_neg,
-        |  CAST(t.u2 * 1000000 // (2 * t.np * t.nn) AS BIGINT) AS auc_u6
-        |FROM c CROSS JOIN t ORDER BY c.bin""".stripMargin,
-
-    // the greedy proximity contract replayed from raw token arrays:
-    // exploded positions, min-next-position per step, final span check
-    "q372_proximity_search" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q372_index/*.parquet'),
-        |${proximitySpanCtes}
-        |SELECT id, s, e FROM s2 ORDER BY id, s""".stripMargin,
-
-    // the full quantized ladder replayed from raw embeddings: codes
-    // (half-up symmetric int8), exact integer dots, the rerank-50 cut,
-    // then exact cosines — probe cells and assignment from the aux
-    "q370_ivf_quantized" ->
-      s"""WITH a AS (SELECT * FROM '__AUX__/q370_assigned/*.parquet'),
-        |p AS (SELECT * FROM '__AUX__/q370_probes/*.parquet'),
-        |${int8ProbedCodesCtes},
-        |dt AS (SELECT cd.vec_id, CAST(sum(cd.q * qv.qv) AS BIGINT)
-        |    AS dot_q FROM cd JOIN qv USING (i) GROUP BY 1),
-        |rr AS (SELECT vec_id, dot_q FROM dt
-        |  ORDER BY dot_q DESC, vec_id LIMIT 50),
-        |pp AS (SELECT c.vec_id, unnest(c.embedding)::DOUBLE AS x,
-        |    unnest(q.embedding)::DOUBLE AS y
-        |  FROM cand c JOIN rr USING (vec_id),
-        |    (SELECT embedding FROM embeddings WHERE vec_id = 1) q),
-        |sc AS (SELECT vec_id, round(sum(x*y)
-        |    / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM pp GROUP BY 1)
-        |SELECT rr.vec_id, rr.dot_q, sc.cos
-        |FROM rr JOIN sc USING (vec_id)
-        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    // per-query results from FULL unpruned scoring; per-query audit
-    // columns from the u6 pruning replay, GROUPed BY query_id
-    "q369_bm25_maxscore_batch" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q369_index/*.parquet'),
-        |qt AS (SELECT CAST(query_id AS BIGINT) AS query_id, tok
-        |  FROM (VALUES (0, 'zqalpha'), (0, 'scan'), (0, 'filter'),
-        |    (1, 'zqbeta'), (1, 'join'), (1, 'merge'),
-        |    (2, 'scan'), (2, 'filter'), (2, 'join')) t(query_id, tok)),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
-        |    any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN (SELECT DISTINCT tok FROM qt) GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |sc AS (SELECT t.id, t.tok,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm0 AS (SELECT q.query_id, s.id, round(sum(s.s), 6) AS bm25_score
-        |  FROM sc s JOIN qt q ON q.tok = s.tok GROUP BY 1, 2),
-        |bm AS (SELECT query_id, id, bm25_score FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY bm25_score DESC, id) AS rn FROM bm0)
-        |  WHERE rn <= 10),
-        |tb AS (SELECT tok, max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf GROUP BY tok),
-        |ub AS (SELECT q.query_id, q.tok,
-        |    CAST(round(ln(1 + (p.n - f.df + 0.5) / (f.df + 0.5)) *
-        |      tb.max_tf * 2.2 /
-        |      (tb.max_tf + 1.2 * (0.25 + 0.75 * tb.min_dl / p.avgdl)) *
-        |      1000000, 0) AS BIGINT) + 1 AS ub6
-        |  FROM qt q JOIN tb ON tb.tok = q.tok, params p
-        |  JOIN df f ON f.tok = q.tok),
-        |tt AS (SELECT query_id, tok FROM (
-        |    SELECT query_id, tok, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY ub6 DESC, tok) AS rn FROM ub) WHERE rn = 1),
-        |ts AS (SELECT t.query_id,
-        |    CAST(round(s.s * 1000000, 0) AS BIGINT) AS s6,
-        |    row_number() OVER (PARTITION BY t.query_id
-        |      ORDER BY CAST(round(s.s * 1000000, 0) AS BIGINT) DESC, s.id)
-        |      AS rn
-        |  FROM sc s JOIN tt t ON t.tok = s.tok),
-        |theta AS (SELECT query_id,
-        |    CASE WHEN count(*) < 10 THEN CAST(-1 AS BIGINT)
-        |      ELSE max(CASE WHEN rn = 10 THEN s6 END) - 1 END AS theta6
-        |  FROM ts WHERE rn <= 10 GROUP BY query_id),
-        |ess AS (SELECT u.query_id, u.tok,
-        |    CASE WHEN SUM(u.ub6) OVER (PARTITION BY u.query_id
-        |      ORDER BY u.ub6, u.tok
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      >= COALESCE(th.theta6, -1) THEN 1 ELSE 0 END AS e
-        |  FROM ub u LEFT JOIN theta th USING (query_id)),
-        |cand AS (SELECT DISTINCT e.query_id, t.id
-        |  FROM tf t JOIN ess e ON e.tok = t.tok AND e.e = 1),
-        |aud AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_terms,
-        |    CAST(sum(e) AS BIGINT) AS n_essential FROM ess GROUP BY 1),
-        |cnd AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_candidates
-        |  FROM cand GROUP BY 1)
-        |SELECT bm.query_id, bm.id, bm.bm25_score, a.n_terms,
-        |  a.n_essential, c.n_candidates
-        |FROM bm JOIN aud a USING (query_id) JOIN cnd c USING (query_id)
-        |ORDER BY query_id, bm25_score DESC, id""".stripMargin,
-
-    // every maintained artifact rebuilt FROM SCRATCH on the surviving
-    // corpus — the forget deltas must land exactly on this
-    "q368_forget_index" ->
-      """WITH idx AS (SELECT * FROM '__AUX__/q368_index/*.parquet'
-        |  WHERE doc_id % 9 <> 4),
-        |tf AS (SELECT id, tok AS term, CAST(count(*) AS BIGINT) AS tf,
-        |    CAST(any_value(dl) AS BIGINT) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  GROUP BY id, tok),
-        |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-        |  FROM tf GROUP BY term),
-        |tb AS (SELECT term, max(tf) AS max_tf, min(dl) AS min_dl
-        |  FROM tf GROUP BY term),
-        |cs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(tokens)) AS BIGINT) AS total_dl FROM idx)
-        |SELECT t.term, t.id, t.tf, t.dl, f.df, b.max_tf, b.min_dl,
-        |  cs.n_docs, cs.total_dl
-        |FROM tf t JOIN df f USING (term) JOIN tb b USING (term), cs
-        |ORDER BY term, id""".stripMargin,
-
-    "q356_bm25_postings" ->
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q356_index/*.parquet'),
-        |dense AS (SELECT * FROM '__AUX__/q356_dense/*.parquet'),
-        |${bm25Top25Ctes("'filter','predicate','pushdown','scan'")},
-        |${rrfTop5Sql}""".stripMargin,
-
-    // independent of BOTH constructions: direct 12-token-window equality
-    // (train window ∈ eval windows), no suffix-array replay
-    "q357_sa_incremental" ->
-      s"""WITH planted AS (SELECT doc_id, text
-         |    || CASE WHEN doc_id % 50 = 0 OR doc_id % 7 = 3
-         |      THEN ' benchmark answer span leaks verbatim into web crawl training corpora every day'
-         |      ELSE '' END
-         |    || CASE WHEN doc_id % 13 = 5 AND doc_id % 50 <> 0
-         |      THEN ' shared internal navigation chrome repeats across many training documents without leaking ever'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |toks AS MATERIALIZED (SELECT doc_id,
-         |    [lower(x) for x in regexp_extract_all(text, '\\S+')] AS ws
-         |  FROM planted),
-         |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS len FROM toks),
-         |wins AS MATERIALIZED (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    array_to_string(ws[CAST(i + 1 AS INT):CAST(i + 12 AS INT)], ' ') AS w
-         |  FROM toks, UNNEST(range(len(ws) - 11)) t(i)
-         |  WHERE len(ws) >= 12),
-         |ev AS MATERIALIZED (SELECT DISTINCT w FROM wins WHERE doc_id % 50 = 0),
-         |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e FROM wins
-         |  WHERE doc_id % 50 <> 0 AND w IN (SELECT w FROM ev)),
-         |${islandSpanCtes(false)},
-         |agg AS (SELECT doc_id,
-         |    CAST(sum(e - s) AS BIGINT) AS contaminated_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_spans FROM sp GROUP BY 1)
-         |SELECT l.doc_id, l.len AS n_tokens,
-         |  CAST(COALESCE(a.contaminated_tokens, 0) AS BIGINT)
-         |    AS contaminated_tokens,
-         |  CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans
-         |FROM lens l LEFT JOIN agg a USING (doc_id)
-         |WHERE l.doc_id % 50 <> 0
-         |ORDER BY l.doc_id""".stripMargin,
-
-    // q357's window-equality hits + q345's excision replay, restricted
-    // to the batch (non-eval) docs
-    "q366_sa_removal_incremental" ->
-      s"""WITH planted AS (SELECT doc_id, text
-         |    || CASE WHEN doc_id % 50 = 0 OR doc_id % 7 = 3
-         |      THEN ' benchmark answer span leaks verbatim into web crawl training corpora every day'
-         |      ELSE '' END
-         |    || CASE WHEN doc_id % 13 = 5 AND doc_id % 50 <> 0
-         |      THEN ' shared internal navigation chrome repeats across many training documents without leaking ever'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |toks AS MATERIALIZED (SELECT doc_id,
-         |    [lower(x) for x in regexp_extract_all(text, '\\S+')] AS ws
-         |  FROM planted),
-         |otoks AS MATERIALIZED (SELECT doc_id,
-         |    regexp_extract_all(text, '\\S+') AS ows FROM planted
-         |  WHERE doc_id % 50 <> 0),
-         |wins AS MATERIALIZED (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    array_to_string(ws[CAST(i + 1 AS INT):CAST(i + 12 AS INT)], ' ') AS w
-         |  FROM toks, UNNEST(range(len(ws) - 11)) t(i)
-         |  WHERE len(ws) >= 12),
-         |ev AS MATERIALIZED (SELECT DISTINCT w FROM wins WHERE doc_id % 50 = 0),
-         |hits AS (SELECT doc_id, pos AS s, pos + 12 AS e FROM wins
-         |  WHERE doc_id % 50 <> 0 AND w IN (SELECT w FROM ev)),
-         |${spanRemovalSql}""".stripMargin,
-
-    "q341_sa_adjacent_lcp" -> {
-      val levels = (7 to 0 by -1).map { k =>
-        val h = 1L << k
-        val prev = if (k == 7) "adj" else s"l${k + 1}"
-        s"""l$k AS MATERIALIZED (SELECT p.doc_a, p.pos_a, p.doc_b, p.pos_b,
-           |    p.lcp + CASE WHEN ra.rank IS NOT NULL AND ra.rank = rb.rank
-           |      THEN $h ELSE 0 END AS lcp
-           |  FROM $prev p
-           |  LEFT JOIN r$k ra ON ra.doc_id = p.doc_a
-           |    AND ra.pos = p.pos_a + p.lcp
-           |  LEFT JOIN r$k rb ON rb.doc_id = p.doc_b
-           |    AND rb.pos = p.pos_b + p.lcp)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH planted AS (SELECT doc_id, text
-         |    || CASE WHEN doc_id % 7 = 0
-         |      THEN ' please subscribe to our newsletter for free updates today'
-         |      ELSE '' END
-         |    || CASE WHEN doc_id % 11 = 0
-         |      THEN ' this opinion is subject to formal revision before publication in the preliminary print of the united states reports'
-         |      ELSE '' END AS text
-         |  FROM documents WHERE doc_id < 60),
-         |${saRankCtes(7, "SELECT doc_id, text FROM planted")},
-         |adj AS MATERIALIZED (SELECT a.doc_id AS doc_a, a.pos AS pos_a,
-         |    b.doc_id AS doc_b, b.pos AS pos_b, CAST(0 AS BIGINT) AS lcp
-         |  FROM r7 a JOIN r7 b ON b.rank = a.rank + 1
-         |  WHERE a.doc_id <> b.doc_id),
-         |$levels
-         |SELECT f.doc_a, f.pos_a, f.doc_b, f.pos_b, f.lcp,
-         |  CAST(CASE WHEN f.pos_a = 0 OR f.pos_b = 0 OR ta.tok <> tb.tok
-         |    THEN 1 ELSE 0 END AS BIGINT) AS left_maximal
-         |FROM l0 f
-         |LEFT JOIN posr ta ON ta.doc_id = f.doc_a AND ta.pos = f.pos_a - 1
-         |LEFT JOIN posr tb ON tb.doc_id = f.doc_b AND tb.pos = f.pos_b - 1
-         |WHERE f.lcp >= 8
-         |ORDER BY f.doc_a, f.pos_a, f.doc_b, f.pos_b""".stripMargin
-    },
-
-    "q342_hybrid_hnsw_batch" -> {
-      s"""WITH idx AS (SELECT * FROM '__AUX__/q342_index/*.parquet'),
-         |qtab AS (SELECT * FROM '__AUX__/q342_queries/*.parquet'),
-         |${hnswBatchWalkCtes("q342",
-        s"""pp AS (SELECT q.qid, e.hid AS id,
-           |    unnest(e.dense_vec)::DOUBLE AS x, unnest(q.qv)::DOUBLE AS y
-           |  FROM idx e, qtab q)""".stripMargin)},
-         |dense AS (SELECT d.qid, i.id, d.cos AS dense_score
-         |  FROM (SELECT qid, id, cos FROM (SELECT qid, id, cos,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id)
-         |        AS rn FROM (SELECT DISTINCT qid, id, cos FROM v3))
-         |    WHERE rn <= 25) d
-         |  JOIN idx i ON i.hid = d.id),
-         |qt AS (SELECT DISTINCT qid, unnest(terms) AS tok FROM qtab),
-         |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |    avg(len(tokens)) AS avgdl FROM idx),
-         |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
-         |    any_value(dl) AS dl FROM (
-         |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-         |  WHERE tok IN (SELECT DISTINCT tok FROM qt) GROUP BY id, tok),
-         |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-         |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-         |bsc AS (SELECT q.qid, t.id,
-         |${bm25TermScore}
-         |  FROM qt q JOIN tf t ON t.tok = q.tok, params p
-         |  JOIN df f ON t.tok = f.tok),
-         |bm AS (SELECT qid, id, bm25_score FROM (SELECT qid, id,
-         |    round(sum(s), 6) AS bm25_score,
-         |    row_number() OVER (PARTITION BY qid
-         |      ORDER BY round(sum(s), 6) DESC, id) AS rn
-         |  FROM bsc GROUP BY qid, id) WHERE rn <= 25),
-         |dr AS (SELECT qid, id, dense_score, ROW_NUMBER() OVER (
-         |    PARTITION BY qid ORDER BY dense_score DESC, id) AS dense_rank
-         |  FROM dense),
-         |br AS (SELECT qid, id, bm25_score, ROW_NUMBER() OVER (
-         |    PARTITION BY qid ORDER BY bm25_score DESC, id) AS bm25_rank
-         |  FROM bm),
-         |fused AS (SELECT COALESCE(dr.qid, br.qid) AS qid,
-         |    COALESCE(dr.id, br.id) AS id, dr.dense_score, br.bm25_score,
-         |${rrfScoreSum}
-         |  FROM dr FULL OUTER JOIN br
-         |    ON br.qid = dr.qid AND br.id = dr.id),
-         |top AS (SELECT qid, id, dense_score, bm25_score, rrf_score
-         |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-         |    ORDER BY rrf_score DESC, id) AS rn FROM fused) WHERE rn <= 5)
-         |SELECT top.qid AS query_id, top.id, i.chunk_id, top.rrf_score,
-         |  top.dense_score, top.bm25_score
-         |FROM top JOIN idx i ON i.id = top.id
-         |ORDER BY top.qid, top.id""".stripMargin
-    },
-
-    "q343_hnsw_repair" ->
-      s"""WITH g AS (SELECT * FROM '__AUX__/q343_graph/*.parquet'),
-        |t AS (SELECT vec_id AS tid FROM embeddings WHERE vec_id % 5 = 0),
-        |${hnswTombstoneRepairCtes}
-        |SELECT DISTINCT layer, id, nbr, cos FROM (
-        |  SELECT * FROM rep
-        |  UNION ALL SELECT layer, nbr AS id, id AS nbr, cos FROM rep)
-        |ORDER BY layer, id, nbr""".stripMargin,
-
-    // generation 1 = the dumped pre-sweep graph; generation 2 =
-    // the repair rule replayed over the CUMULATIVE tombstone set
-    // (both waves — wave 1 stayed below the bar and accumulated)
-    "q359_hnsw_generations" ->
-      s"""WITH g AS (SELECT * FROM '__AUX__/q359_graph/*.parquet'),
-        |t AS (SELECT vec_id AS tid FROM embeddings
-        |  WHERE vec_id % 20 = 3 OR vec_id % 5 = 0),
-        |${hnswTombstoneRepairCtes},
-        |rep2 AS (SELECT DISTINCT layer, id, nbr, cos FROM (
-        |  SELECT * FROM rep
-        |  UNION ALL SELECT layer, nbr AS id, id AS nbr, cos FROM rep))
-        |SELECT CAST(1 AS BIGINT) AS version, layer, id, nbr, cos FROM g
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS version, layer, id, nbr, cos FROM rep2
-        |ORDER BY version, layer, id, nbr""".stripMargin,
-
-    // the streamed gates, then the compaction epoch: keep-best per
-    // near-dup cluster (connected components over the verified pairs
-    // among exact survivors; argmax by n_chars desc, id asc)
-    "q358_curation_reconcile" ->
-      s"""WITH RECURSIVE $curationGateCtes,
-         |exo AS MATERIALIZED (SELECT id, n_chars FROM flags
-         |  WHERE pass_exact = 1),
-         |ndvx AS MATERIALIZED (SELECT v.id1, v.id2 FROM ndver v
-         |  JOIN exo a ON a.id = v.id1 JOIN exo b ON b.id = v.id2),
-         |${componentWalkCtes("ndvx", false)},
-         |cc AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-         |rkd AS (SELECT cc.id,
-         |    row_number() OVER (PARTITION BY comp
-         |      ORDER BY e.n_chars DESC, cc.id) AS rn
-         |  FROM cc JOIN exo e ON e.id = cc.id),
-         |losers AS (SELECT id FROM rkd WHERE rn > 1),
-         |upg AS (SELECT f.id, f.n_chars, f.pass_exact,
-         |    CASE WHEN f.pass_exact = 1 THEN
-         |      CASE WHEN l.id IS NULL THEN 1 ELSE 0 END
-         |    ELSE f.pass_neardup END AS pass_neardup,
-         |    f.pred_lang, f.margin6, f.logit, f.top_cnt, f.n_pairs
-         |  FROM flags f LEFT JOIN losers l ON l.id = f.id)
-         |${curationVerdictSql("upg")}""".stripMargin,
-
-    "q344_curation_stream" ->
-      s"""WITH $curationGateCtes
-         |${curationVerdictSql("flags")}""".stripMargin
-  ) ++ Map(
-    "q214_unigram_lm" ->
-      """WITH RECURSIVE vp AS (SELECT piece, w6
-        |  FROM '__AUX__/q214_vocab/*.parquet'),
-        |words AS (SELECT DISTINCT w AS word FROM (
-        |    SELECT unnest(string_split(lower(trim(text)), ' ')) AS w
-        |    FROM documents)
-        |  WHERE w <> ''),
-        |paths(word, pos, score, pieces, np) AS (
-        |  SELECT word, 0, CAST(0 AS BIGINT), '', CAST(0 AS BIGINT)
-        |  FROM words
-        |  UNION ALL
-        |  SELECT p.word, p.pos + len(v.piece), p.score + v.w6,
-        |    p.pieces || CASE WHEN p.pieces = '' THEN '' ELSE ' ' END
-        |      || v.piece,
-        |    p.np + 1
-        |  FROM paths p JOIN vp v
-        |    ON substr(p.word, p.pos + 1, len(v.piece)) = v.piece
-        |  WHERE p.pos < len(p.word)),
-        |done AS (SELECT word, pieces, score, np,
-        |    row_number() OVER (PARTITION BY word
-        |      ORDER BY score DESC, pieces) AS rn
-        |  FROM paths WHERE pos = len(word))
-        |SELECT word, pieces, score AS score6, np AS n_pieces
-        |FROM done WHERE rn = 1 ORDER BY word""".stripMargin,
-
-    "q215_hybrid_hnsw" ->
-      s"""WITH ${hnswWalkCtesWith("q215",
-        s"""pp AS (SELECT e.hid AS id, unnest(e.dense_vec)::DOUBLE AS x,
-           |    unnest(q.qv)::DOUBLE AS y
-           |  FROM '__AUX__/q215_index/*.parquet' e,
-           |       (SELECT qv FROM '__AUX__/q215_qvec/*.parquet') q)""".stripMargin)},
-        |idx AS (SELECT * FROM '__AUX__/q215_index/*.parquet'),
-        |dense AS (SELECT i.id, d.cos AS dense_score
-        |  FROM (SELECT id, cos FROM (SELECT DISTINCT id, cos FROM v3)
-        |    ORDER BY cos DESC, id LIMIT 25) d
-        |  JOIN idx i ON i.hid = d.id),
-        |params AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    avg(len(tokens)) AS avgdl FROM idx),
-        |tf AS (SELECT id, tok, CAST(count(*) AS DOUBLE) AS tf,
-        |    any_value(dl) AS dl FROM (
-        |    SELECT id, unnest(tokens) AS tok, len(tokens) AS dl FROM idx) u
-        |  WHERE tok IN ('filter','join','scan','vector') GROUP BY id, tok),
-        |df AS (SELECT tok, CAST(count(DISTINCT id) AS DOUBLE) AS df FROM (
-        |    SELECT id, unnest(tokens) AS tok FROM idx) u GROUP BY tok),
-        |bsc AS (SELECT t.id,
-        |${bm25TermScore}
-        |  FROM tf t, params p JOIN df f ON t.tok = f.tok),
-        |bm AS (SELECT id, round(sum(s), 6) AS bm25_score FROM bsc GROUP BY id
-        |  ORDER BY bm25_score DESC, id LIMIT 25),
-        |dr AS (SELECT id, dense_score,
-        |    ROW_NUMBER() OVER (ORDER BY dense_score DESC, id) AS dense_rank
-        |  FROM dense),
-        |br AS (SELECT id, bm25_score,
-        |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, id) AS bm25_rank
-        |  FROM bm),
-        |fused AS (SELECT COALESCE(dr.id, br.id) AS id, dr.dense_score,
-        |    br.bm25_score,
-        |${rrfScoreSum}
-        |  FROM dr FULL OUTER JOIN br ON dr.id = br.id),
-        |top AS (SELECT * FROM fused ORDER BY rrf_score DESC, id LIMIT 5)
-        |SELECT top.id, idx.chunk_id, top.rrf_score, top.dense_score,
-        |  top.bm25_score
-        |FROM top JOIN idx ON idx.id = top.id""".stripMargin,
-
-    "q216_winsorize_sketched" ->
-      """WITH cuts AS (SELECT lo_cut, hi_cut
-        |  FROM '__AUX__/q216_cuts/*.parquet'),
-        |d AS (SELECT doc_id, n_chars FROM documents),
-        |st AS (SELECT count(*) AS n,
-        |    SUM(CASE WHEN n_chars <= (SELECT lo_cut FROM cuts)
-        |        THEN 1 ELSE 0 END) AS n_le_lo,
-        |    SUM(CASE WHEN n_chars <= (SELECT hi_cut FROM cuts)
-        |        THEN 1 ELSE 0 END) AS n_le_hi
-        |  FROM d),
-        |b AS (SELECT n, n_le_lo, n_le_hi,
-        |    (50 * n + 999) // 1000 AS t_lo,
-        |    (950 * n + 999) // 1000 AS t_hi,
-        |    (6 * n + 63) // 64 AS slack FROM st)
-        |SELECT d.doc_id, d.n_chars,
-        |  round(least(greatest(d.n_chars::DOUBLE, c.lo_cut), c.hi_cut), 6)
-        |    AS n_chars_wins,
-        |  CAST(CASE WHEN d.n_chars < c.lo_cut THEN -1
-        |    WHEN d.n_chars > c.hi_cut THEN 1 ELSE 0 END AS BIGINT)
-        |    AS clamped,
-        |  CAST(CASE WHEN b.n_le_lo BETWEEN b.t_lo - b.slack
-        |      AND b.t_lo + b.slack THEN 1 ELSE 0 END AS BIGINT)
-        |    AS in_bound_lo,
-        |  CAST(CASE WHEN b.n_le_hi BETWEEN b.t_hi - b.slack
-        |      AND b.t_hi + b.slack THEN 1 ELSE 0 END AS BIGINT)
-        |    AS in_bound_hi
-        |FROM d, cuts c, b ORDER BY d.doc_id""".stripMargin,
-
-    "q217_hnsw_admit_dist" ->
-      """WITH bt AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 5 = 0),
-        |st AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 5 <> 0),
-        |fwd AS (SELECT id, nbr FROM '__AUX__/q217_edges/*.parquet'
-        |  WHERE layer = 0 AND id % 5 = 0),
-        |cc AS (SELECT qid, cid,
-        |    round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos
-        |  FROM (SELECT b.vec_id AS qid, s.vec_id AS cid,
-        |      unnest(s.embedding)::DOUBLE AS x,
-        |      unnest(b.embedding)::DOUBLE AS y
-        |    FROM bt b CROSS JOIN st s)
-        |  GROUP BY 1, 2),
-        |brute AS (SELECT qid, cid FROM (SELECT qid, cid,
-        |      row_number() OVER (PARTITION BY qid
-        |        ORDER BY cos DESC, cid) AS rn FROM cc)
-        |  WHERE rn <= 16),
-        |hits AS (SELECT f.id, count(*) AS n_hit FROM fwd f
-        |  JOIN brute b ON b.qid = f.id AND b.cid = f.nbr GROUP BY 1),
-        |na AS (SELECT id, count(*) AS n_admit FROM fwd GROUP BY 1)
-        |SELECT bt.vec_id,
-        |  CAST(COALESCE(na.n_admit, 0) AS BIGINT) AS n_admit,
-        |  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  CAST(COALESCE(h.n_hit, 0) * 1000 // 16 AS BIGINT) AS recall_pm
-        |FROM bt LEFT JOIN na ON na.id = bt.vec_id
-        |  LEFT JOIN hits h ON h.id = bt.vec_id
-        |ORDER BY bt.vec_id""".stripMargin
-  )
-
-  /** One unrolled round of q212's batched-BPE training replay, ending in
-    * `m<r>(rn, a, b)` (that round's selected merges, candidate-ranked)
-    * and `s<r>(w, cnt, s)` (the word table after applying them — a
-    * recursive left-to-right fold per word, one pass over the
-    * symbol-disjoint selected set, mirroring `bpeTrain`'s applyMerges
-    * UDF exactly). `want` re-derives min(batch, numMerges − selected so
-    * far) and the candidate window is the same 8·want ranked prefix the
-    * Scala side collects; the greedy non-conflicting selection walks
-    * rank order carrying the used-symbol set as a delimited string.
-    * Chained CTEs are MATERIALIZED: without the hint DuckDB re-inlines
-    * the whole prior-round chain into every recursion step of the next
-    * round's CTEs — observed as runaway recomputation (minutes → 0.2 s
-    * with the hints). */
-  private def bpeBatchedRoundCtes(r: Int, numMerges: Int, batch: Int): String = {
-    val selSoFar =
-      if (r == 1) "0"
-      else "(" + (1 until r).map(i => s"(SELECT count(*) FROM m$i)")
-        .mkString(" + ") + ")"
-    val takeCond =
-      s"""sl.k < (SELECT want FROM w$r)
-         |      AND strpos(sl.used, ' ' || c.a || ' ') = 0
-         |      AND strpos(sl.used, ' ' || c.b || ' ') = 0""".stripMargin
-    s"""e$r AS MATERIALIZED (SELECT w, cnt, string_split(s, ' ') AS p,
-       |    len(string_split(s, ' ')) AS np FROM s${r - 1}),
-       |pc$r AS (SELECT p[i + 1] AS a, p[i + 2] AS b, SUM(cnt) AS n
-       |  FROM e$r, UNNEST(range(np - 1)) t(i) GROUP BY 1, 2),
-       |w$r AS MATERIALIZED (SELECT least($batch, $numMerges - $selSoFar)
-       |    AS want),
-       |cand$r AS MATERIALIZED (SELECT a, b, rn FROM (SELECT a, b,
-       |      row_number() OVER (ORDER BY n DESC, a, b) AS rn FROM pc$r)
-       |  WHERE rn <= 8 * (SELECT want FROM w$r)),
-       |sel$r(rn, a, b, took, used, k) AS (
-       |  SELECT 0, '', '', false, ' ', 0
-       |  UNION ALL
-       |  SELECT c.rn, c.a, c.b,
-       |    $takeCond,
-       |    CASE WHEN $takeCond
-       |      THEN sl.used || c.a || ' ' || c.b || ' ' ELSE sl.used END,
-       |    CASE WHEN $takeCond THEN sl.k + 1 ELSE sl.k END
-       |  FROM sel$r sl JOIN cand$r c ON c.rn = sl.rn + 1),
-       |m$r AS MATERIALIZED (SELECT rn, a, b FROM sel$r WHERE took),
-       |ap$r(w, i, o) AS (
-       |  SELECT w, 1, '' FROM e$r
-       |  UNION ALL
-       |  SELECT a.w,
-       |    CASE WHEN m.a IS NOT NULL THEN a.i + 2 ELSE a.i + 1 END,
-       |    a.o || CASE WHEN a.o = '' THEN '' ELSE ' ' END ||
-       |      CASE WHEN m.a IS NOT NULL THEN e.p[a.i] || e.p[a.i + 1]
-       |        ELSE e.p[a.i] END
-       |  FROM ap$r a JOIN e$r e USING (w)
-       |    LEFT JOIN m$r m ON a.i < e.np AND m.a = e.p[a.i]
-       |      AND m.b = e.p[a.i + 1]
-       |  WHERE a.i <= e.np),
-       |s$r AS MATERIALIZED (SELECT e.w, e.cnt, a.o AS s
-       |  FROM ap$r a JOIN e$r e USING (w) WHERE a.i = e.np + 1)""".stripMargin
-  }
-
-  /** ROUGE word-bigram multiset counts of column `c` of CTE `p` as a
-    * DuckDB CTE `<name>(id, g, c)` (lowercased grams — the Spark
-    * tokenizer's normalization). */
-  private def rougeGramCtes(c: String, name: String): String =
-    s"""$name AS (SELECT id, g, count(*) AS c FROM (
-       |    SELECT id, unnest([lower(ws[i+1]) || ' ' || lower(ws[i+2])
-       |        for i in range(len(ws) - 1)]) AS g
-       |    FROM (SELECT id, string_split($c, ' ') AS ws FROM p)
-       |    WHERE len(ws) >= 2)
-       |  GROUP BY 1, 2)"""
-
-  /** Unrolled Lloyd's iterations as DuckDB CTEs: `c{t-1}` →
-    * distances → argmin (tie → smallest centroid index) → floor-division
-    * centroid update, empty clusters inheriting `c{t-1}` — ends in
-    * `c{iters}(j, i, c)`. Coordinates are the +2^21-shifted non-negative
-    * fixed-point longs, so `//` (floor) and the Scala `floorDiv` agree
-    * by construction. */
-  private def kmeansIterCtes(iters: Int): String =
-    (1 to iters).map { t =>
-      s"""d$t AS (SELECT d.vec_id, c.j,
-         |    sum((d.xi - c.c) * (d.xi - c.c)) AS dist
-         |  FROM dims d JOIN c${t - 1} c ON c.i = d.i GROUP BY 1, 2),
-         |a$t AS (SELECT vec_id, j FROM (SELECT vec_id, j,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, j)
-         |      AS rn FROM d$t) WHERE rn = 1),
-         |s$t AS (SELECT a.j, d.i, sum(d.xi) // count(*) AS c
-         |  FROM a$t a JOIN dims d USING (vec_id) GROUP BY 1, 2),
-         |c$t AS (SELECT p.j, p.i, coalesce(n.c, p.c) AS c
-         |  FROM c${t - 1} p LEFT JOIN s$t n ON n.j = p.j AND n.i = p.i),"""
-    }.mkString("\n")
-
-  /** KMV sketch of the distinct 3-shingle md5 hashes of a documents
-    * subset, as DuckDB CTEs ending in `<p>(h)` — the k=128 smallest
-    * hashes in lexicographic (== numeric 128-bit) order. */
-  private def kmvSketchCtes(where: String, p: String): String =
-    s"""${p}s AS (SELECT DISTINCT md5(x) AS h FROM (
-       |    SELECT unnest([parts[i+1] || ' ' || parts[i+2] || ' ' || parts[i+3]
-       |        for i in range(len(parts) - 2)]) AS x
-       |    FROM (SELECT string_split(text, ' ') AS parts FROM documents
-       |      WHERE $where)
-       |    WHERE len(parts) >= 3)),
-       |$p AS (SELECT h FROM ${p}s ORDER BY h LIMIT 128)"""
-
-  /** KMV estimator over a sketch CTE `<p>(h)`: exact size under
-    * capacity, else (k−1)·2^60 // v_k with v_k the 60-bit prefix of the
-    * largest retained hash (HUGEINT multiply — 127·2^60 overflows a
-    * signed 64-bit). */
-  private def kmvEstSql(p: String): String =
-    s"""CASE WHEN count(*) < 128 THEN count(*)
-       |    ELSE CAST(127 AS HUGEINT) * 1152921504606846976
-       |      // CAST('0x' || substr(max(h), 1, 15) AS BIGINT) END""".stripMargin
-
-  /** The q189 winnowing selection (k=3, w=4) as DuckDB CTEs ending in
-    * `<p>keep(doc_id, pos, fp)` — shared by the q189 fingerprint oracle
-    * and q190's two-corpus copy-span oracle. NOT pre-stripped: the
-    * result embeds in stripMargin outer strings, and stripping twice
-    * would eat one pipe of a continuation line's `||` concat operator
-    * (observed as DuckDB "no function |(VARCHAR, VARCHAR)"). */
-  private def winnowingCtes(src: String, p: String): String =
-    s"""${p}wd AS (SELECT doc_id, string_split(text, ' ') AS parts
-       |  FROM $src),
-       |${p}g AS (SELECT doc_id, i AS pos,
-       |    CAST('0x' || substr(md5(parts[i+1] || ' ' || parts[i+2] || ' '
-       |      || parts[i+3]), 1, 8) AS BIGINT) AS h
-       |  FROM (SELECT doc_id, parts, unnest(range(len(parts) - 2)) AS i
-       |    FROM ${p}wd WHERE len(parts) >= 3)),
-       |${p}n AS (SELECT doc_id, count(*) AS ng FROM ${p}g GROUP BY 1),
-       |${p}win AS (SELECT a.doc_id, a.pos AS wpos, b.pos, b.h
-       |  FROM ${p}g a JOIN ${p}g b ON b.doc_id = a.doc_id
-       |    AND b.pos BETWEEN a.pos AND a.pos + 3),
-       |${p}sel AS (SELECT doc_id, wpos, pos, h,
-       |    row_number() OVER (PARTITION BY doc_id, wpos
-       |      ORDER BY h, pos DESC) AS rn
-       |  FROM ${p}win),
-       |${p}keep AS (SELECT DISTINCT s.doc_id AS doc_id, s.pos AS pos,
-       |    s.h AS fp
-       |  FROM ${p}sel s JOIN ${p}n n ON n.doc_id = s.doc_id
-       |  WHERE s.rn = 1 AND s.wpos <= greatest(n.ng - 4, 0))"""
-
-  /** One q301 Naive-Bayes retrain branch as DuckDB CTEs (prefixed
-    * `<p>ct/vv/cs/lp/nr/pri/sc/pk/sum`): the q275 model chain with a
-    * branch-specific TRAIN predicate (`excl` appends to the shared
-    * id%5 split) and the shared test CTEs `te`/`tet`, ending in
-    * `<p>sum(left_out, n_test, n_correct)` — the LOGO valuation is
-    * this branch instantiated once per left-out group plus once full.
-    * NOT pre-stripped (embeds in stripMargin outer strings). */
-  private def nbLogoBranch(p: String, label: String,
-      excl: String): String =
-    s"""${p}ct AS MATERIALIZED (SELECT cls, tok,
-       |    CAST(count(*) AS BIGINT) AS c FROM (
-       |    SELECT CAST(lang AS VARCHAR) AS cls,
-       |      unnest(string_split_regex(lower(trim(text)), '\\s+'))
-       |        AS tok
-       |    FROM documents WHERE doc_id % 5 <> 0$excl)
-       |  WHERE tok <> '' GROUP BY 1, 2),
-       |${p}vv AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
-       |  FROM ${p}ct),
-       |${p}cs AS MATERIALIZED (SELECT cls,
-       |    CAST(sum(c) AS BIGINT) AS tot,
-       |    CAST(round(log10(1.0 / (CAST(sum(c) AS BIGINT) + vv.v))
-       |      * 1000000, 0) AS BIGINT) AS oov_u6
-       |  FROM ${p}ct, ${p}vv vv GROUP BY cls, vv.v),
-       |${p}lp AS MATERIALIZED (SELECT ct.cls, ct.tok,
-       |    CAST(round(log10(CAST(ct.c + 1 AS DOUBLE) / (cs.tot + vv.v))
-       |      * 1000000, 0) AS BIGINT) AS lp_u6
-       |  FROM ${p}ct ct JOIN ${p}cs cs USING (cls), ${p}vv vv),
-       |${p}nr AS (SELECT CAST(count(*) AS BIGINT) AS n_train
-       |  FROM documents WHERE doc_id % 5 <> 0$excl),
-       |${p}pri AS (SELECT CAST(lang AS VARCHAR) AS cls,
-       |    CAST(round(log10(CAST(count(*) AS DOUBLE) / nr.n_train)
-       |      * 1000000, 0) AS BIGINT) AS prior_u6
-       |  FROM documents, ${p}nr nr WHERE doc_id % 5 <> 0$excl
-       |  GROUP BY 1, nr.n_train),
-       |${p}sc AS (SELECT tet.id, cs.cls,
-       |    CAST(sum(tet.n * coalesce(lp.lp_u6, cs.oov_u6)) AS BIGINT)
-       |      AS s
-       |  FROM tet CROSS JOIN ${p}cs cs
-       |  LEFT JOIN ${p}lp lp ON lp.cls = cs.cls AND lp.tok = tet.tok
-       |  GROUP BY 1, 2),
-       |${p}pk AS (SELECT id, cls AS pred FROM (
-       |    SELECT sc.id, sc.cls, row_number() OVER (
-       |      PARTITION BY sc.id
-       |      ORDER BY sc.s + pri.prior_u6 DESC, sc.cls) AS rn
-       |    FROM ${p}sc sc JOIN ${p}pri pri USING (cls)) WHERE rn = 1),
-       |${p}sum AS (SELECT '$label' AS left_out,
-       |    CAST(count(*) AS BIGINT) AS n_test,
-       |    CAST(sum(CASE WHEN pk.pred = CAST(te.lang AS VARCHAR)
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-       |  FROM ${p}pk pk JOIN te ON te.doc_id = pk.id)"""
-
-  /** One q293 Mondrian round as DuckDB CTEs reading
-    * `mr<r-1>(id, a, b, pid, fin)` and ending in `mr<r>` — live-
-    * partition stats + range-argmax dimension (ties to `a`), the
-    * lower-median count-based order statistic, the k-starvation split
-    * decision, and the 2·pid+side relabel, mirroring
-    * [[graft.ops.Curation.mondrian]]'s round body exactly. NOT
-    * pre-stripped (embeds in stripMargin outer strings). */
-  private def mondrianRoundCtes(r: Int, k: Int): String = {
-    val p = s"mr${r - 1}"
-    s"""st$r AS (SELECT pid, CAST(count(*) AS BIGINT) AS n,
-       |    CASE WHEN max(a) - min(a) >= max(b) - min(b)
-       |      THEN 'a' ELSE 'b' END AS dim
-       |  FROM $p WHERE NOT fin GROUP BY pid),
-       |vl$r AS (SELECT m.pid, s.n,
-       |    CASE WHEN s.dim = 'a' THEN m.a ELSE m.b END AS v
-       |  FROM $p m JOIN st$r s USING (pid) WHERE NOT m.fin),
-       |cm$r AS (SELECT pid, n, v, CAST(sum(count(*)) OVER (
-       |      PARTITION BY pid ORDER BY v ROWS BETWEEN UNBOUNDED
-       |      PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-       |  FROM vl$r GROUP BY pid, n, v),
-       |md$r AS (SELECT pid, n, min(v) AS med FROM cm$r
-       |  WHERE cum >= (n + 1) // 2 GROUP BY pid, n),
-       |sp$r AS (SELECT md.pid, md.med, st.dim,
-       |    (cm.cum >= $k AND md.n - cm.cum >= $k) AS split
-       |  FROM md$r md JOIN cm$r cm ON cm.pid = md.pid
-       |    AND cm.v = md.med
-       |  JOIN st$r st ON st.pid = md.pid),
-       |mr$r AS MATERIALIZED (SELECT m.id, m.a, m.b,
-       |    CASE WHEN coalesce(sp.split, FALSE)
-       |      THEN 2 * m.pid + (CASE WHEN (CASE WHEN sp.dim = 'a'
-       |        THEN m.a ELSE m.b END) > sp.med THEN 1 ELSE 0 END)
-       |      ELSE m.pid END AS pid,
-       |    (m.fin OR coalesce(NOT sp.split, FALSE)) AS fin
-       |  FROM $p m LEFT JOIN sp$r sp USING (pid))"""
-  }
-
-  /** The q277 Fellegi–Sunter model (customer blocks, frequency u
-    * estimation, both field weights, blocked agreement pairs) as
-    * DuckDB CTEs ending in `p(id1, id2, g1, g2)` plus the weight rows
-    * `w1(wa, wd)` / `w2(wa, wd)` — shared by the q277 pair-scoring
-    * oracle and q286's entity-resolution composite (which appends the
-    * link filter and the reachability closure). NOT pre-stripped
-    * (embeds in stripMargin outer strings, the winnowingCtes rule). */
-  private def fellegiSunterCtes: String =
-    """c AS MATERIALIZED (SELECT c_custkey, c_mktsegment,
-      |    c_nationkey, CAST(floor(c_acctbal / 1000) AS BIGINT)
-      |      AS bal_b, right(c_name, 1) AS name_d FROM customer),
-      |u1 AS (SELECT greatest(1, least(999999,
-      |    CAST(sum(nv * nv) AS BIGINT) * 1000000
-      |      // (CAST(sum(nv) AS BIGINT) * CAST(sum(nv) AS BIGINT))))
-      |    AS u
-      |  FROM (SELECT CAST(count(*) AS BIGINT) AS nv FROM c
-      |    GROUP BY bal_b)),
-      |w1 AS MATERIALIZED (SELECT
-      |    CAST(round(log10(950000.0 / u) * 1000000, 0) AS BIGINT)
-      |      AS wa,
-      |    CAST(round(log10(50000.0 / (1000000 - u)) * 1000000, 0)
-      |      AS BIGINT) AS wd FROM u1),
-      |u2 AS (SELECT greatest(1, least(999999,
-      |    CAST(sum(nv * nv) AS BIGINT) * 1000000
-      |      // (CAST(sum(nv) AS BIGINT) * CAST(sum(nv) AS BIGINT))))
-      |    AS u
-      |  FROM (SELECT CAST(count(*) AS BIGINT) AS nv FROM c
-      |    GROUP BY name_d)),
-      |w2 AS MATERIALIZED (SELECT
-      |    CAST(round(log10(950000.0 / u) * 1000000, 0) AS BIGINT)
-      |      AS wa,
-      |    CAST(round(log10(50000.0 / (1000000 - u)) * 1000000, 0)
-      |      AS BIGINT) AS wd FROM u2),
-      |p AS MATERIALIZED (SELECT a.c_custkey AS id1, b.c_custkey AS id2,
-      |    CASE WHEN a.bal_b IS NOT DISTINCT FROM b.bal_b
-      |      THEN 1 ELSE 0 END AS g1,
-      |    CASE WHEN a.name_d IS NOT DISTINCT FROM b.name_d
-      |      THEN 1 ELSE 0 END AS g2
-      |  FROM c a JOIN c b ON a.c_mktsegment = b.c_mktsegment
-      |    AND a.c_nationkey = b.c_nationkey
-      |    AND a.c_custkey < b.c_custkey)""".stripMargin
-
-  /** One q289 Hilbert xy2d level as a DuckDB CTE `hl<k>` reading
-    * `hl<k-1>(doc_id, x, y, d)`: accumulate the quadrant cost
-    * s²·(3rx ⊕ ry), then flip-and-swap the frame exactly as
-    * [[graft.ops.Layout.hilbertValue]]'s column fold does (all three
-    * outputs read the PREVIOUS level's x/y, so the simultaneous-
-    * assignment semantics match). NOT pre-stripped (embeds in a
-    * stripMargin outer string, the winnowingCtes rule). */
-  private def hilbertLevelCte(k: Int, s: Long): String =
-    s"""hl$k AS (SELECT doc_id,
-       |    CASE WHEN (y & $s) = 0 THEN CASE WHEN (x & $s) > 0
-       |      THEN $s - 1 - y ELSE y END ELSE x END AS x,
-       |    CASE WHEN (y & $s) = 0 THEN CASE WHEN (x & $s) > 0
-       |      THEN $s - 1 - x ELSE x END ELSE y END AS y,
-       |    d + $s * $s * xor(3 * (CASE WHEN (x & $s) > 0
-       |      THEN 1 ELSE 0 END),
-       |      CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END) AS d
-       |  FROM hl${k - 1})"""
-
-  /** The q278 exact-integer PCA oracle — also q283's verbatim gate:
-    * the incremental moment tables are additive integer sums, so the
-    * batch-unioned maintenance path must reproduce THIS replay
-    * bit-for-bit (the q218 incremental ≡ full-training proof shape). */
-  private def pcaPowerOracle: String =
-    s"""WITH ex AS MATERIALIZED (SELECT vec_id, i,
-       |    CAST(round(embedding[i + 1]::DOUBLE * 1000000, 0)
-       |      AS BIGINT) AS xu
-       |  FROM (SELECT vec_id, embedding,
-       |    unnest(range(len(embedding))) AS i FROM embeddings)),
-       |ms AS (SELECT a.i, b.i AS j,
-       |    CAST(sum(a.xu * b.xu) AS HUGEINT) AS s
-       |  FROM ex a JOIN ex b USING (vec_id) GROUP BY 1, 2),
-       |sx AS MATERIALIZED (SELECT i, CAST(sum(xu) AS HUGEINT) AS sx
-       |  FROM ex GROUP BY 1),
-       |nn AS (SELECT CAST(count(DISTINCT vec_id) AS HUGEINT) AS n
-       |  FROM embeddings),
-       |mm AS MATERIALIZED (SELECT ms.i, ms.j,
-       |    CAST((nn.n * ms.s - a.sx * b.sx) // (nn.n * nn.n)
-       |      AS HUGEINT) AS mv
-       |  FROM ms JOIN sx a ON a.i = ms.i JOIN sx b ON b.i = ms.j, nn),
-       |v0 AS (SELECT i AS j, CASE WHEN i = 0
-       |    THEN CAST(1000000 AS HUGEINT)
-       |    ELSE CAST(0 AS HUGEINT) END AS v FROM sx),
-       |${(1 to 8).map(pcaIterCtes).mkString(",\n")}
-       |SELECT CAST(j AS BIGINT) AS dim_i, CAST(v AS BIGINT) AS v_u6
-       |FROM v8 ORDER BY dim_i""".stripMargin
-
-  /** One q278 power-iteration round as DuckDB CTEs `w<r>/x<r>/v<r>`
-    * reading `v<r-1>(j, v)` and the covariance table `mm(i, j, mv)`,
-    * ending in `v<r>(j, v)` — integer mat-vec (order-free HUGEINT
-    * sum), max-|component| renormalization by truncating division,
-    * mirroring [[graft.ops.VectorOps.pcaPowerIteration]]'s BigInt
-    * loop exactly. NOT pre-stripped (embeds in a stripMargin outer
-    * string, the winnowingCtes rule). */
-  private def pcaIterCtes(r: Int): String =
-    s"""w$r AS MATERIALIZED (SELECT m.i,
-       |    CAST(sum(m.mv * v${r - 1}.v) AS HUGEINT) AS w
-       |  FROM mm m JOIN v${r - 1} ON v${r - 1}.j = m.j GROUP BY 1),
-       |x$r AS (SELECT max(abs(w)) AS mx FROM w$r),
-       |v$r AS (SELECT w$r.i AS j,
-       |    CAST(w$r.w * 1000000 // x$r.mx AS HUGEINT) AS v
-       |  FROM w$r, x$r)"""
-
-  /** One synchronous modularity local-move round (q273) as DuckDB CTEs
-    * `kc<r>/nb<r>/cd<r>/sc<r>/r<r>` reading assignment `prev(id, comm)`
-    * and the shared `sym/deg/mm` tables, ending in `r<r>(id, comm)` —
-    * mirrors [[graft.ops.GraphOps.modularityLocalMove]]'s round body
-    * exactly (own-community candidate at e = 0, score = 2m·e − k·K',
-    * ties score desc then community asc). NOT pre-stripped (embeds in
-    * a stripMargin outer string, the winnowingCtes rule). */
-  /** One q326 Selinger DP round for subsets of popcount `k`: best
-    * removable leaf = (cost(rest) + size) argmin with (cost, bit idx)
-    * ties; `call` = cstall${k-1} accumulates all solved subsets. NOT
-    * pre-stripped. */
-  private def selingerRoundCtes(k: Int): String =
-    s"""cand$k AS (SELECT c.mask, b.i AS ridx,
-       |    p.cost + z.sz AS cost
-       |  FROM conn c JOIN bits b ON ((c.mask >> b.i) & 1) = 1
-       |  JOIN cstall${k - 1} p ON p.mask = c.mask - (1 << b.i)
-       |  JOIN szs z ON z.mask = c.mask
-       |  WHERE c.pc = $k AND EXISTS (SELECT 1 FROM ed e
-       |    WHERE (e.a = (1 << b.i)
-       |        AND (e.b & (c.mask - (1 << b.i))) <> 0)
-       |      OR (e.b = (1 << b.i)
-       |        AND (e.a & (c.mask - (1 << b.i))) <> 0))),
-       |pick$k AS MATERIALIZED (SELECT mask, ridx, cost FROM (
-       |    SELECT mask, ridx, cost, row_number() OVER (
-       |      PARTITION BY mask ORDER BY cost, ridx) AS rn
-       |    FROM cand$k) WHERE rn = 1),
-       |cstall$k AS MATERIALIZED (SELECT mask, cost FROM cstall${k - 1}
-       |  UNION ALL SELECT mask, cost FROM pick$k)"""
-
-  /** One q336 SimRank round over tables ed/ind/nodes: contributions
-    * from the previous round's pairs through both in-edge joins, then
-    * the cPpm-scaled truncating normalization; the diagonal re-enters
-    * at 10⁶ every round. NOT pre-stripped. */
-  private def simRankRoundCtes(j: Int, k: Int): String =
-    s"""ct$k AS (SELECT e1.dst AS a, e2.dst AS b,
-       |    CAST(sum(s.s) AS BIGINT) AS ssum
-       |  FROM sim$j s JOIN ed e1 ON e1.src = s.a
-       |  JOIN ed e2 ON e2.src = s.b
-       |  WHERE e1.dst <> e2.dst GROUP BY 1, 2),
-       |sim$k AS MATERIALIZED (
-       |  SELECT id AS a, id AS b, CAST(1000000 AS BIGINT) AS s
-       |  FROM nodes
-       |  UNION ALL
-       |  SELECT c.a, c.b, CAST(800000 * c.ssum
-       |      // (ia.ind * ib.ind * 1000000) AS BIGINT) AS s
-       |  FROM ct$k c JOIN ind ia ON ia.id = c.a
-       |  JOIN ind ib ON ib.id = c.b
-       |  WHERE 800000 * c.ssum // (ia.ind * ib.ind * 1000000) > 0)"""
-
-  /** One q330 synchronous deferred-acceptance round: free proposers
-    * offer at their pointer, each acceptor keeps its best offer ever
-    * (score desc, p asc), every loser — dumped incumbents included —
-    * advances its pointer. Rounds past the fixpoint are no-ops. NOT
-    * pre-stripped. */
-  private def gsRoundCtes(j: Int, k: Int): String =
-    s"""prop$k AS MATERIALIZED (SELECT pt.p, pp.a
-       |  FROM ptr$j pt JOIN pp ON pp.p = pt.p AND pp.rank = pt.ptr
-       |  WHERE pt.p NOT IN (SELECT p FROM eng$j WHERE p IS NOT NULL)),
-       |cand$k AS (SELECT p, a FROM prop$k
-       |  UNION ALL SELECT p, a FROM eng$j WHERE p IS NOT NULL),
-       |win$k AS MATERIALIZED (SELECT p, a FROM (
-       |    SELECT c.p, c.a, ROW_NUMBER() OVER (PARTITION BY c.a
-       |      ORDER BY s.score DESC, c.p) AS rn
-       |    FROM cand$k c JOIN pa s ON s.a = c.a AND s.p = c.p)
-       |  WHERE rn = 1),
-       |lose$k AS (SELECT DISTINCT p FROM (
-       |    SELECT p, a FROM cand$k EXCEPT SELECT p, a FROM win$k)),
-       |ptr$k AS MATERIALIZED (SELECT pt.p, pt.ptr +
-       |    CASE WHEN pt.p IN (SELECT p FROM lose$k) THEN 1 ELSE 0 END
-       |      AS ptr
-       |  FROM ptr$j pt),
-       |eng$k AS MATERIALIZED (SELECT p, a FROM win$k)"""
-
-  /** One q324 HRU greedy round over table `sizes`: per-view cost =
-    * min selected-ancestor size, benefit = Σ_{w⊆v} max(0, cost−|v|),
-    * pick = (benefit desc, mask asc) argmax. NOT pre-stripped. */
-  private def viewGreedyRoundCtes(r: Int): String =
-    s"""cst$r AS (SELECT w.mask AS wm, min(s.sz) AS c
-       |  FROM sizes w JOIN sel${r - 1} a ON (w.mask & a.mask) = w.mask
-       |  JOIN sizes s ON s.mask = a.mask GROUP BY 1),
-       |ben$r AS (SELECT v.mask AS vm,
-       |    CAST(sum(CASE WHEN c.c > v.sz THEN c.c - v.sz ELSE 0 END)
-       |      AS BIGINT) AS b
-       |  FROM sizes v JOIN sizes w ON (w.mask & v.mask) = w.mask
-       |  JOIN cst$r c ON c.wm = w.mask
-       |  WHERE v.mask NOT IN (SELECT mask FROM sel${r - 1})
-       |  GROUP BY v.mask, v.sz),
-       |pick$r AS MATERIALIZED (SELECT vm AS mask, b FROM ben$r
-       |  ORDER BY b DESC, vm LIMIT 1),
-       |sel$r AS MATERIALIZED (SELECT mask FROM sel${r - 1}
-       |  UNION ALL SELECT mask FROM pick$r)"""
-
-  /** One q323 value-iteration round over tables spine/tt/bb: p'(s) =
-    * (Σ_t tp·p(t) + bp·10⁶) div 10⁶ per (scenario, s); rows for the
-    * removed channel are absent from spine, which IS the clamp. NOT
-    * pre-stripped. */
-  private def attributionRoundCtes(prev: String, r: Int): String =
-    s"""ap$r AS MATERIALIZED (SELECT sp.scenario, sp.s,
-       |    CAST((COALESCE(acc.a, 0) + COALESCE(bb.bp, 0) * 1000000)
-       |      // 1000000 AS BIGINT) AS p
-       |  FROM spine sp
-       |  LEFT JOIN (SELECT p.scenario, t.s,
-       |      CAST(sum(t.tp * p.p) AS BIGINT) AS a
-       |    FROM tt t JOIN $prev p ON p.s = t.t
-       |    GROUP BY 1, 2) acc
-       |    ON acc.scenario = sp.scenario AND acc.s = sp.s
-       |  LEFT JOIN bb ON bb.s = sp.s)"""
-
-  /** Weighted Louvain round CTEs over tables sym2/deg2/mm2 (the q322
-    * coarse graph): [[modularityRoundCtes]] with Σw in place of
-    * counts. Emits s$r as the round's assignment. NOT pre-stripped. */
-  private def modularityWRoundCtes(prev: String, r: Int): String =
-    s"""kcw$r AS MATERIALIZED (SELECT p.comm, CAST(sum(d.k) AS BIGINT)
-       |    AS kc FROM $prev p JOIN deg2 d USING (id) GROUP BY 1),
-       |nbw$r AS (SELECT s.src AS id, c.comm AS ncomm,
-       |    CAST(sum(s.w) AS BIGINT) AS e
-       |  FROM sym2 s JOIN $prev c ON c.id = s.dst GROUP BY 1, 2),
-       |cdw$r AS (SELECT id, ncomm, max(e) AS e FROM (
-       |    SELECT id, ncomm, e FROM nbw$r
-       |    UNION ALL SELECT id, comm AS ncomm, 0 AS e FROM $prev)
-       |  GROUP BY 1, 2),
-       |scw$r AS MATERIALIZED (SELECT c.id, c.ncomm,
-       |    2 * mm2.m * c.e - d.k * (CASE WHEN c.ncomm = p.comm
-       |      THEN kc.kc - d.k ELSE kc.kc END) AS score
-       |  FROM cdw$r c JOIN $prev p ON p.id = c.id
-       |  JOIN deg2 d ON d.id = c.id
-       |  JOIN kcw$r kc ON kc.comm = c.ncomm CROSS JOIN mm2),
-       |s$r AS MATERIALIZED (SELECT id, ncomm AS comm FROM (
-       |    SELECT id, ncomm, row_number() OVER (PARTITION BY id
-       |      ORDER BY score DESC, ncomm) AS rn FROM scw$r)
-       |  WHERE rn = 1)"""
-
-  private def modularityRoundCtes(prev: String, r: Int): String =
-    s"""kc$r AS MATERIALIZED (SELECT p.comm, CAST(sum(d.k) AS BIGINT)
-       |    AS kc FROM $prev p JOIN deg d USING (id) GROUP BY 1),
-       |nb$r AS (SELECT s.src AS id, c.comm AS ncomm,
-       |    CAST(count(*) AS BIGINT) AS e
-       |  FROM sym s JOIN $prev c ON c.id = s.dst GROUP BY 1, 2),
-       |cd$r AS (SELECT id, ncomm, max(e) AS e FROM (
-       |    SELECT id, ncomm, e FROM nb$r
-       |    UNION ALL SELECT id, comm AS ncomm, 0 AS e FROM $prev)
-       |  GROUP BY 1, 2),
-       |sc$r AS MATERIALIZED (SELECT c.id, c.ncomm,
-       |    2 * mm.m * c.e - d.k * (CASE WHEN c.ncomm = p.comm
-       |      THEN kc.kc - d.k ELSE kc.kc END) AS score
-       |  FROM cd$r c JOIN $prev p ON p.id = c.id
-       |  JOIN deg d ON d.id = c.id
-       |  JOIN kc$r kc ON kc.comm = c.ncomm CROSS JOIN mm),
-       |r$r AS MATERIALIZED (SELECT id, ncomm AS comm FROM (
-       |    SELECT id, ncomm, row_number() OVER (PARTITION BY id
-       |      ORDER BY score DESC, ncomm) AS rn FROM sc$r)
-       |  WHERE rn = 1)"""
+  def oracleSql: Map[String, String] = families.flatMap(_.oracleSql).toMap
 }
