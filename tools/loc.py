@@ -2,8 +2,10 @@
 """Count code lines in Scala/Java sources.
 
 A line counts unless it is blank, a `//` comment line, or lies wholly
-inside a `/* ... */` comment (nested comments and comment markers inside
-string literals are handled). A line holding code and a comment counts.
+inside a `/* ... */` comment (nested comments, comment markers inside
+string literals, and literals nested in `${...}` splices of interpolated
+multi-line strings are handled). A line holding code and a comment
+counts.
 
 Usage: python3 tools/loc.py [PATH ...]   (default: src/main)
 
@@ -23,17 +25,25 @@ def code_lines(text):
 
 def code_line_flags(text):
     """Yield, for each line of `text`, whether it carries code."""
-    depth = 0          # nesting depth of /* */ comments
-    in_triple = False  # inside a """ string, which may span lines
+    depth = 0   # nesting depth of /* */ comments
+    # open multi-line literals and the ${...} splices inside them:
+    # ["triple", interpolated] or ["splice", open braces]
+    stack = []
     for line in text.splitlines():
-        has_code = in_triple
+        has_code = any(ctx[0] == "triple" for ctx in stack)
         i, n = 0, len(line)
         while i < n:
-            if in_triple:
+            top = stack[-1] if stack else None
+            if top and top[0] == "triple":
                 end = line.find('"""', i)
+                splice = _splice_start(line, i, end) if top[1] else -1
+                if splice >= 0:
+                    stack.append(["splice", 0])
+                    i = splice + 2
+                    continue
                 if end < 0:
                     break
-                in_triple = False
+                stack.pop()
                 i = end + 3
                 continue
             if depth:
@@ -58,7 +68,8 @@ def code_line_flags(text):
                 continue
             has_code = True
             if line.startswith('"""', i):
-                in_triple = True
+                interp = i > 0 and (line[i - 1].isalnum() or line[i - 1] == "_")
+                stack.append(["triple", interp])
                 i += 3
             elif c == '"':
                 i += 1
@@ -70,9 +81,32 @@ def code_line_flags(text):
             elif c == "'" and line.startswith("\\", i + 1):
                 end = line.find("'", i + 2)
                 i = end + 1 if end > 0 else i + 1  # escaped char literal
+            elif top and c == "{":
+                top[1] += 1
+                i += 1
+            elif top and c == "}":
+                if top[1]:
+                    top[1] -= 1
+                else:
+                    stack.pop()  # the splice closes; back inside its literal
+                i += 1
             else:
                 i += 1
         yield has_code
+
+
+def _splice_start(line, i, end):
+    """Index of the first `${` in line[i:end] (end < 0: to the end of the
+    line), skipping `$$` escapes; -1 when there is none."""
+    stop = len(line) if end < 0 else end
+    while i < stop - 1:
+        if line[i] == "$":
+            if line[i + 1] == "{":
+                return i
+            i += 2
+        else:
+            i += 1
+    return -1
 
 
 def source_files(paths):
