@@ -1,8 +1,13 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.functions.GraftFunctions._
@@ -21,10 +26,15 @@ import graft.text.Bm25
   *    a per-partition top-n + driver merge, NO global sort/shuffle, so
   *    it scales linearly with executors.
   *  - sparse: query terms are a handful of literals, so the token
-  *    explode is filtered to them *before* any aggregation; doc-frequency
-  *    stats arrive via a broadcast join (dimension side is tiny).
-  *  - fusion: full-outer join of the two ranked branch results (both
-  *    ≤ 5k rows — driver-scale), RRF `Σ 1/(rrfK + rank)`.
+  *    explode is filtered to them *before* any aggregation. On the
+  *    pruned routes the terms' bounds and doc frequencies arrive in one
+  *    driver read and enter the plan as literals; the unpruned routes
+  *    broadcast-join the stats (dimension side is tiny).
+  *  - fusion: both ranked branch results (each ≤ 5k rows — driver
+  *    scale) are collected in one action and fused on the driver, RRF
+  *    `Σ 1/(rrfK + rank)` with the doubles the Spark expression
+  *    computes; the top-k hydrate by an id literal list into a
+  *    materialized local result.
   *
   * RRF constant k=60 (the published default the reference inherits
   * server-side) is explicit config here so results are self-contained.
@@ -189,34 +199,85 @@ object HybridSearch {
     * — it is reported unconditionally essential with the sentinel ub6
     * Long.MaxValue (and never joins the running sum), so stale-add
     * bounds degrade to LESS pruning, never to silently dropped
-    * documents. Driver-side cost is |queryTerms| rows of stats plus one
-    * n-row top list over ONE term's postings — request-scale, never
-    * corpus-scale. */
+    * documents. Driver-side cost is two reads: the query terms' bound
+    * and stats rows in one union scan, and one n-row top list over ONE
+    * term's postings — request-scale, never corpus-scale. */
   def maxScorePrune(postings: DataFrame, docStats: DataFrame,
       termBounds: DataFrame, corpusSize: Long, avgDocLen: Double,
       queryTerms: Seq[String], n: Int): (Long, Seq[(String, Long, Boolean)]) = {
-    val terms = queryTerms.distinct
-    val ubs = termBounds.filter(col("term").isin(terms: _*))
-      .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .select(col("term"),
-        (round(termScoreCol(corpusSize, avgDocLen,
-            col("max_tf").cast("double"), col("min_dl").cast("double"),
-            col("df")) * 1000000, 0).cast("long") + 1).as("ub6"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val p = prune(postings, docStats, termBounds.withColumn("block", lit(0L)),
+      corpusSize, avgDocLen, queryTerms.distinct, n)
+    (p.theta6, p.flags)
+  }
+
+  /** `round(termScore(max_tf, min_dl, df) · 10⁶) + 1` — the u6 upper
+    * bound of a (term or block) bound row, shared by the single-query
+    * and batched pruning decisions. */
+  private def ub6Col(corpusSize: Long, avgDocLen: Double): Column =
+    round(termScoreCol(corpusSize, avgDocLen,
+      col("max_tf").cast("double"), col("min_dl").cast("double"),
+      col("df")) * 1000000, 0).cast("long") + lit(1L)
+
+  /** A pruning decision ([[blockMaxPrune]]) with the query terms' df,
+    * which the scoring plan takes as a literal. `surviving` holds
+    * (term, block, ub6b) of the essential terms' blocks that can still
+    * admit a top-n document. */
+  private final case class Pruning(theta6: Long,
+      flags: Seq[(String, Long, Boolean)],
+      surviving: Seq[(String, Long, Long)], df: Map[String, Double])
+
+  /** The block-max pruning decision in two driver reads.
+    *
+    *  1. One union scan, no join, of the query terms' `blocks` rows and
+    *     their `docStats` rows. The term bounds (max of max_tf, min of
+    *     min_dl over a term's blocks — [[graft.index.IndexWriter
+    *     .termBoundsFromBlocks]]), the df, the unbounded terms and the
+    *     θ-term all derive from these rows on the driver. ub6 and ub6b
+    *     are [[ub6Col]] evaluated over a local relation of the collected
+    *     rows; Catalyst folds that projection, so it runs no job.
+    *  2. The θ-term's top-n postings scores, its df a literal.
+    *
+    * A term with bound rows but no df cannot score and drops out; a
+    * term with df but no bound rows is unbounded. */
+  private def prune(postings: DataFrame, docStats: DataFrame,
+      blocks: DataFrame, corpusSize: Long, avgDocLen: Double,
+      terms: Seq[String], n: Int): Pruning = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    def ofTerms(t: DataFrame) = t.filter(col("term").isin(terms: _*))
+    val none = lit(null).cast("long")
+    val rows = ofTerms(blocks).select(col("term"), col("block").cast("long"),
+        col("max_tf").cast("long"), col("min_dl").cast("long"),
+        lit(null).cast("double"))
+      .union(ofTerms(docStats).select(col("term"), none, none, none,
+        col("df").cast("double")))
+      .collect()
+    val df = rows.filterNot(_.isNullAt(4))
+      .map(r => r.getString(0) -> r.getDouble(4)).toMap
+    // bound rows of terms the stats know, per block and per term (max
+    // of max_tf, min of min_dl over its blocks — termBoundsFromBlocks)
+    val blockRows = rows.collect { case r if df.contains(r.getString(0)) &&
+        r.isNullAt(4) =>
+      (r.getString(0), Option(r.getLong(1)), r.getLong(2), r.getLong(3)) }
+    val termRows = blockRows.groupBy(_._1).map { case (t, bs) =>
+      (t, Option.empty[Long], bs.map(_._3).max, bs.map(_._4).min) }
+    val ubRows = (termRows ++ blockRows).toSeq
+      .map { case (t, b, tf, dl) => (t, b, tf, dl, df(t)) }
+      .toDF("term", "block", "max_tf", "min_dl", "df")
+      .select(col("term"), col("block"), ub6Col(corpusSize, avgDocLen))
+      .as[(String, Option[Long], Long)].collect()
+    val ubs = ubRows.collect { case (t, None, u) => (t, u) }
       .sortBy { case (t, u) => (u, t) }
     // terms the corpus KNOWS (df exists → postings may exist) but the
     // bounds table doesn't: no valid upper bound → forced essential
-    val known = ubs.map(_._1).toSet
-    val unbounded = docStats.filter(col("term").isin(terms: _*))
-      .select("term").collect().map(_.getString(0))
-      .filterNot(known).sorted
+    val unbounded = df.keys.toSeq.filterNot(ubs.map(_._1).toSet).sorted
       .map(t => (t, Long.MaxValue, true))
-    if (ubs.isEmpty) return (-1L, unbounded.toSeq)
+    if (ubs.isEmpty) return Pruning(-1L, unbounded, Nil, df)
     val thetaTerm = ubs.sortBy { case (t, u) => (-u, t) }.head._1
     val topTheta = postings.filter(col("term") === thetaTerm)
       .select((round(termScoreCol(corpusSize, avgDocLen,
           col("tf").cast("double"), col("dl").cast("double"),
-          lit(docStatsDf(docStats, thetaTerm))) * 1000000, 0).cast("long"))
+          lit(df(thetaTerm))) * 1000000, 0).cast("long"))
         .as("s6"), col("id"))
       .orderBy(desc("s6"), col("id"))
       .limit(n)
@@ -226,17 +287,23 @@ object HybridSearch {
     // non-essential flags form a prefix by construction; tθ's own ub6
     // exceeds θ6, so tθ is always essential
     var run = 0L
-    (theta6, ubs.map { case (t, u) =>
+    val flags = ubs.map { case (t, u) =>
       run += u
       (t, u, run >= theta6)
-    } ++ unbounded)
+    }
+    // Block survival (see [[blockMaxPrune]]): ub6b plus the other
+    // bounded terms' ub6 must reach θ6. The unbounded terms' sentinel
+    // stays OUT of this remainder — summing it overflows Long and would
+    // prune every bounded block; a top-n doc holding an unbounded term
+    // is admitted through that term's postings instead.
+    val ub = ubs.toMap
+    val totalUb = ubs.map(_._2).sum
+    val essential = flags.collect { case (t, _, true) => t }.toSet
+    val surviving = ubRows.collect { case (t, Some(b), u)
+        if essential(t) && u + (totalUb - ub(t)) >= theta6 => (t, b, u) }
+      .sortBy { case (t, b, _) => (t, b) }
+    Pruning(theta6, flags.toSeq ++ unbounded, surviving.toSeq, df)
   }
-
-  /** df of one term as a driver scalar (θ-term scoring needs it as a
-    * literal so the single-term plan is a pure postings filter). */
-  private def docStatsDf(docStats: DataFrame, term: String): Double =
-    docStats.filter(col("term") === term).select(col("df").cast("double"))
-      .collect().headOption.map(_.getDouble(0)).getOrElse(0.0)
 
   /** [[bm25TopKPostings]] results with MAXSCORE candidate pruning
     * (Turtle & Flood 1995): only the essential terms' postings
@@ -263,23 +330,23 @@ object HybridSearch {
       queryTerms, n, nBlocks = 1, idCol = idCol)
 
   /** The exact-scoring epilogue every pruned sparse path ends with:
-    * full BM25 over all query terms, restricted to the admitted
-    * candidate ids, top-n. */
-  private def scoreCandidates(postings: DataFrame, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, terms: Seq[String],
-      candidates: DataFrame, n: Int, idCol: String): DataFrame = {
+    * full BM25 over all query terms the stats know, restricted to the
+    * admitted candidate ids, top-n. The df enters as a literal map, so
+    * the plan reads only postings. (A left-semi join is set-valued, so
+    * a candidate admitted by two terms needs no `distinct`.) */
+  private def scoreCandidates(postings: DataFrame, df: Map[String, Double],
+      corpusSize: Long, avgDocLen: Double, candidates: DataFrame, n: Int,
+      idCol: String): DataFrame =
     postings
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(df.keys.toSeq.sorted: _*))
       .join(candidates, Seq("id"), "left_semi")
       .select(col("term"), col("id").as(idCol), col("tf"), col("dl"))
-      .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
       .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
-        col("tf"), col("dl"), col("df")))
+        col("tf"), col("dl"), element_at(typedlit(df), col("term"))))
       .groupBy(col(idCol))
       .agg(round(sum("term_score"), 6).as("bm25_score"))
       .orderBy(desc("bm25_score"), col(idCol))
       .limit(n)
-  }
 
   /** BLOCK-MAX pruning (Ding & Suel's BMW, relationally) — the block
     * refinement of [[maxScorePrune]]: even an ESSENTIAL term's
@@ -296,93 +363,58 @@ object HybridSearch {
     * tightens [[bm25TopKMaxScore]]'s candidate set; results stay
     * EXACT.
     *
+    * Add-side bound lag: a term the stats know but `blocks` doesn't
+    * carries the Long.MaxValue sentinel ub6 and stays out of totalUb.
+    * The bounded-only remainder stays sound: a top-n doc containing the
+    * lagged term is admitted unconditionally through its postings in
+    * [[bm25TopKBlockMax]], and one that doesn't contain it satisfies
+    * the pruning chain over bounded terms alone, whose true remainder
+    * the bounded-only sum still over-estimates.
+    *
     * Returns (θ6, term flags as in [[maxScorePrune]], the surviving
-    * (term, block, ub6b) frame over essential terms). */
+    * (term, block, ub6b) rows of essential terms as a local frame). */
   def blockMaxPrune(postings: DataFrame, docStats: DataFrame,
       blocks: DataFrame, corpusSize: Long, avgDocLen: Double,
       queryTerms: Seq[String], n: Int)
       : (Long, Seq[(String, Long, Boolean)], DataFrame) = {
-    val terms = queryTerms.distinct
-    val tb = graft.index.IndexWriter.termBoundsFromBlocks(
-      blocks.filter(col("term").isin(terms: _*)))
-    val (theta6, flags) = maxScorePrune(postings, docStats, tb,
-      corpusSize, avgDocLen, terms, n)
-    // Add-side bound lag: a term the stats know but `blocks` doesn't
-    // carries the Long.MaxValue sentinel ub6 from [[maxScorePrune]].
-    // It must stay OUT of totalUb/restCol — summing the sentinel
-    // overflows Long and the garbage restCol would prune every bounded
-    // term's blocks. The bounded-only remainder stays sound: a top-n
-    // doc containing the lagged term is admitted unconditionally
-    // through its postings in [[bm25TopKBlockMax]], and one that
-    // doesn't contain it satisfies the pruning chain over bounded
-    // terms alone, whose true remainder the bounded-only restCol still
-    // over-estimates. (A lagged term also has no rows in `blocks`, so
-    // it contributes no surviving-block rows here either way.)
-    val boundedFlags = flags.filter(_._2 != Long.MaxValue)
-    val essential = boundedFlags.collect { case (t, _, true) => t }
-    val totalUb = boundedFlags.map(_._2).sum
-    // per-term remainder Σ_{t'≠t} ub6(t') as a literal when-chain —
-    // query-vocabulary-sized, folded into codegen
-    val restCol = boundedFlags.foldLeft(lit(0L): Column) {
-      case (acc, (t, u, _)) =>
-        when(col("term") === t, lit(totalUb - u)).otherwise(acc)
-    }
-    val surviving = blocks
-      .filter(col("term").isin(essential: _*))
-      .join(broadcast(docStats.filter(col("term").isin(terms: _*))),
-        Seq("term"))
-      .withColumn("ub6b",
-        round(termScoreCol(corpusSize, avgDocLen,
-          col("max_tf").cast("double"), col("min_dl").cast("double"),
-          col("df")) * 1000000, 0).cast("long") + lit(1L))
-      .filter(col("ub6b") + restCol >= theta6)
-      .select(col("term"), col("block"), col("ub6b"))
-    (theta6, flags, surviving)
+    val spark = postings.sparkSession
+    import spark.implicits._
+    val p = prune(postings, docStats, blocks, corpusSize, avgDocLen,
+      queryTerms.distinct, n)
+    (p.theta6, p.flags, p.surviving.toDF("term", "block", "ub6b"))
   }
 
   /** [[bm25TopKMaxScore]] with BLOCK-MAX candidate generation: only
     * surviving (term, block) pairs of essential terms admit candidates
     * — with postings persisted bucketed by (term_bucket, block) the
     * skip is physical partition pruning, the score-aware analog of
-    * row-group min/max. Results are EXACTLY [[bm25TopKPostings]]'s
-    * (q373 oracles the replay; HybridSearchSpec asserts equality).
+    * row-group min/max. The pairs enter the plan as literals
+    * (`term = t AND block IN (…)`). Results are EXACTLY
+    * [[bm25TopKPostings]]'s (q373 oracles the replay; HybridSearchSpec
+    * asserts equality).
     *
     * @param nBlocks MUST equal the value `blocks` was built with
     *   ([[graft.index.IndexWriter.blockBounds]]) — the candidate pass
     *   re-derives each posting's block with the same
-    *   `pmod(xxhash64(id), nBlocks)`; a mismatch would mis-route
+    *   [[graft.index.IndexWriter.blockOf]]; a mismatch would mis-route
     *   postings past their surviving blocks. */
   def bm25TopKBlockMax(postings: DataFrame, docStats: DataFrame,
       blocks: DataFrame, corpusSize: Long, avgDocLen: Double,
       queryTerms: Seq[String], n: Int, nBlocks: Int = 64,
       idCol: String = "id"): DataFrame = {
-    val terms = queryTerms.distinct
-    val (_, flags, surviving) = blockMaxPrune(postings, docStats, blocks,
-      corpusSize, avgDocLen, terms, n)
-    if (flags.isEmpty)
-      return bm25TopKPostings(postings, docStats, corpusSize, avgDocLen,
-        terms, n, idCol)
-    // A term lagging behind `blocks` (sentinel ub6) has no block rows,
-    // so the surviving-blocks semi-join would silently drop every doc
-    // it admits; its postings enter the candidate set UNCONDITIONALLY —
-    // the block refinement degrades to MaxScore for that term, never
-    // to missing documents.
-    val essentialBounded =
-      flags.collect { case (t, u, true) if u != Long.MaxValue => t }
-    val essentialUnbounded =
-      flags.collect { case (t, u, true) if u == Long.MaxValue => t }
-    val blockCands = postings
-      .filter(col("term").isin(essentialBounded: _*))
-      .withColumn("block", graft.index.IndexWriter.blockOf("id", nBlocks))
-      .join(broadcast(surviving.select("term", "block")),
-        Seq("term", "block"), "left_semi")
-      .select(col("id"))
-    val candidates = (if (essentialUnbounded.isEmpty) blockCands
-      else blockCands.union(postings
-        .filter(col("term").isin(essentialUnbounded: _*))
-        .select(col("id")))).distinct()
-    scoreCandidates(postings, docStats, corpusSize, avgDocLen, terms,
-      candidates, n, idCol)
+    val p = prune(postings, docStats, blocks, corpusSize, avgDocLen,
+      queryTerms.distinct, n)
+    // A term lagging behind `blocks` (sentinel ub6) has no block rows;
+    // its postings admit candidates UNCONDITIONALLY — the block
+    // refinement degrades to MaxScore for that term, never to missing
+    // documents.
+    val block = graft.index.IndexWriter.blockOf("id", nBlocks)
+    val viaBlocks = p.surviving.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (t, bs) => col("term") === t && block.isin(bs.map(_._2): _*) }
+    val unbounded = p.flags.collect { case (t, u, true) if u == Long.MaxValue => t }
+    val admits = (viaBlocks :+ col("term").isin(unbounded: _*)).reduce(_ || _)
+    scoreCandidates(postings, p.df, corpusSize, avgDocLen,
+      postings.filter(admits).select(col("id")), n, idCol)
   }
 
   /** BATCHED [[maxScorePrune]] — the pruning decision for a whole
@@ -413,9 +445,7 @@ object HybridSearch {
         "left")
       .withColumn("ub6",
         when(col("max_tf").isNull, lit(null).cast("long"))
-          .otherwise(round(termScoreCol(corpusSize, avgDocLen,
-            col("max_tf").cast("double"), col("min_dl").cast("double"),
-            col("df")) * 1000000, 0).cast("long") + lit(1L)))
+          .otherwise(ub6Col(corpusSize, avgDocLen)))
       .select("query_id", "term", "ub6")
     val wTheta = Window.partitionBy("query_id").orderBy(desc("ub6"), col("term"))
     val thetaTerms = ub.withColumn("__rn", row_number().over(wTheta))
@@ -506,20 +536,65 @@ object HybridSearch {
     }
 
   /** J4 + A5 + T1 — RRF fusion of the two ranked branches, threshold,
-    * final top-k. */
+    * final top-k, on the driver. Both branches (≤ prefetch rows each)
+    * arrive in ONE tagged `unionByName` collect; each is ranked by
+    * (score desc, id asc) in Spark's sort order, and an id's RRF score
+    * is `1.0 / (rrfK + dense_rank) + 1.0 / (rrfK + bm25_rank)` with a
+    * missing branch adding 0.0 — the doubles the window + full-outer
+    * join form computed, summed dense-then-sparse in the same order.
+    * Each branch holds an id at most once (a top-n list over unique
+    * index ids). Returns a local frame (id, dense_score, dense_rank,
+    * bm25_score, bm25_rank, rrf_score) ordered (rrf_score desc, id). */
   def rrfFuse(dense: DataFrame, sparse: DataFrame, cfg: Config,
       idCol: String = "id"): DataFrame = {
-    val dw = Window.orderBy(desc("dense_score"), col(idCol))
-    val sw = Window.orderBy(desc("bm25_score"), col(idCol))
-    val d = dense.withColumn("dense_rank", row_number().over(dw))
-    val s = sparse.withColumn("bm25_rank", row_number().over(sw))
-    d.join(s, Seq(idCol), "full_outer")
-      .withColumn("rrf_score",
-        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("dense_rank")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("bm25_rank")), lit(0.0)))
-      .filter(col("rrf_score") >= cfg.rrfScoreThreshold) // P8
-      .orderBy(desc("rrf_score"), col(idCol))
-      .limit(cfg.k)
+    def tagged(df: DataFrame, score: String, tag: Int) = df.select(
+      lit(tag).as("__branch"), col(idCol), col(score).cast("double").as("__score"))
+    val both = tagged(dense, "dense_score", 0)
+      .unionByName(tagged(sparse, "bm25_score", 1))
+    val rows = both.collect()
+    def ranks(tag: Int): Map[Any, (Any, Int)] = rows.filter(_.getInt(0) == tag)
+      .sortWith((x, y) => before(x.get(2), x.get(1), y.get(2), y.get(1)))
+      .zipWithIndex.map { case (r, i) => r.get(1) -> (r.get(2), i + 1) }.toMap
+    val (d, s) = (ranks(0), ranks(1))
+    // (score, rank, RRF term) of one branch; a missing branch adds 0.0
+    def part(branch: Map[Any, (Any, Int)], id: Any): (Any, Any, Double) =
+      branch.get(id).fold[(Any, Any, Double)]((null, null, 0.0)) {
+        case (score, r) => (score, r, 1.0 / (cfg.rrfK + r)) }
+    val fused = rows.map(_.get(1)).distinct.map { id =>
+      val ((ds, dr, dx), (ss, sr, sx)) = (part(d, id), part(s, id))
+      Row(id, ds, dr, ss, sr, dx + sx)
+    }.filter(_.getDouble(5) >= cfg.rrfScoreThreshold) // P8
+      .sortWith((x, y) => before(x.get(5), x.get(0), y.get(5), y.get(0)))
+      .take(cfg.k)
+    // a full-outer join's merged key is nullable only when both sides are
+    val idField = both.schema(idCol).copy(nullable =
+      dense.schema(idCol).nullable && sparse.schema(idCol).nullable)
+    dense.sparkSession.createDataFrame(fused.toSeq.asJava, StructType(Seq(idField,
+      StructField("dense_score", DoubleType), StructField("dense_rank", IntegerType),
+      StructField("bm25_score", DoubleType), StructField("bm25_rank", IntegerType),
+      StructField("rrf_score", DoubleType, nullable = false))))
+  }
+
+  /** Whether (score a, id a) sorts before (score b, id b) under Spark's
+    * `desc(score), asc(id)`: score descending with nulls last, then id
+    * ascending with nulls first. */
+  private def before(scoreA: Any, idA: Any, scoreB: Any, idB: Any): Boolean = {
+    val c = sqlCompare(scoreB, scoreA)
+    if (c != 0) c < 0 else sqlCompare(idA, idB) < 0
+  }
+
+  /** Spark's ascending sort order on one collected value, nulls first:
+    * strings by their UTF-8 bytes, doubles with -0.0 = 0.0 and NaN
+    * largest, other ids by their natural order — so a driver-side rank
+    * equals a window's row_number. */
+  private def sqlCompare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
   }
 
   /** Batched dense branch: exact cosine prefetch-n per query ROW — the
@@ -723,7 +798,15 @@ object HybridSearch {
   /** Full §3.2 query lifecycle: embed query (V2, with BGE-style prefix)
     * → dense ∪ sparse prefetch (5×k each) → RRF → top-k, joined back to
     * payload columns. `dense` picks the dense prefetch's tier (exact
-    * scan by default); the sparse branch follows `cfg`'s routing. */
+    * scan by default); the sparse branch follows `cfg`'s routing.
+    *
+    * The result is MATERIALIZED: after the sparse route's own driver
+    * reads, one action collects both prefetch branches ([[rrfFuse]])
+    * and one more reads the top-k index rows by an `id IN (…)` literal.
+    * The rows come back as a local frame — (id, dense_score,
+    * dense_rank, bm25_score, bm25_rank, rrf_score, then the index's
+    * other columns) in (rrf_score desc, id) order — so a caller's
+    * collect, projection or rerank over it runs no search job again. */
   def search(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, query: String, cfg: Config = Config(),
       embedder: Embedder = HashingEmbedder.default,
@@ -733,10 +816,21 @@ object HybridSearch {
     val qTerms = Bm25.tokenize(query)
     val denseHits = dense.prefetch(index, qVec, prefetch)
     val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(denseHits, sparse, cfg)
-    // payload projection (P9): hydrate the top-k ids only
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
+    val fusedDf = rrfFuse(denseHits, sparse, cfg)
+    val fused = fusedDf.collect()
+    // payload projection (P9): hydrate the top-k ids only — a left
+    // join on id, done on the driver over the read rows
+    val payload = index.schema.filterNot(_.name == "id")
+    val byId = if (fused.isEmpty) Map.empty[Any, Array[Row]]
+      else index.filter(col("id").isin(fused.map(_.get(0)).distinct.toSeq: _*))
+        .select((col("id") +: payload.map(f => col(f.name))): _*)
+        .collect().groupBy(_.get(0))
+    val hits = fused.toSeq.flatMap { h =>
+      byId.get(h.get(0)).fold(Seq(h.toSeq ++ payload.map(_ => null)))(
+        _.toSeq.map(r => h.toSeq ++ r.toSeq.tail))
+    }.map(Row.fromSeq)
+    index.sparkSession.createDataFrame(hits.asJava,
+      StructType(fusedDf.schema ++ payload.map(_.copy(nullable = true))))
   }
 
   /** Prebuilt HNSW serving bundle over the chunk index's dense vectors.

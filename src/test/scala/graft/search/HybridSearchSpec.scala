@@ -1,5 +1,7 @@
 package graft.search
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -624,6 +626,115 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
     // return zero results.
     intercept[IllegalArgumentException] {
       HybridSearch.Config(k = 2, rrfScoreThreshold = 0.4)
+    }
+  }
+
+  /** RRF fusion as one Spark plan — two rank windows and a full-outer
+    * join: the reference [[HybridSearch.rrfFuse]]'s driver fusion must
+    * equal row for row. */
+  private def refFuse(dense: DataFrame, sparse: DataFrame,
+      cfg: HybridSearch.Config): DataFrame = {
+    val dw = Window.orderBy(desc("dense_score"), col("id"))
+    val sw = Window.orderBy(desc("bm25_score"), col("id"))
+    val d = dense.withColumn("dense_rank", row_number().over(dw))
+    val s = sparse.withColumn("bm25_rank", row_number().over(sw))
+    d.join(s, Seq("id"), "full_outer")
+      .withColumn("rrf_score",
+        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("dense_rank")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("bm25_rank")), lit(0.0)))
+      .filter(col("rrf_score") >= cfg.rrfScoreThreshold)
+      .orderBy(desc("rrf_score"), col("id"))
+      .limit(cfg.k)
+  }
+
+  /** [[HybridSearch.search]] as one lazy plan: the unpruned token-scan
+    * BM25 branch, [[refFuse]], and a left join back to the index. */
+  private def refSearch(idx: DataFrame, st: DataFrame, nn: Long,
+      al: Double, query: String, cfg: HybridSearch.Config,
+      dense: HybridSearch.Dense): DataFrame = {
+    val prefetch = cfg.k * cfg.prefetchMultiplier
+    val sparse = HybridSearch.bm25TopK(idx, st, nn, al,
+      graft.text.Bm25.tokenize(query), prefetch)
+    refFuse(dense.prefetch(idx, HashingEmbedder.default.embedQuery(query),
+        prefetch), sparse, cfg)
+      .join(idx, Seq("id"), "left")
+      .orderBy(desc("rrf_score"), col("id"))
+  }
+
+  private val fusedCols = Seq("id", "dense_score", "dense_rank",
+    "bm25_score", "bm25_rank", "rrf_score")
+
+  test("driver rrfFuse == the window + full-outer-join reference, " +
+      "ties broken on id, schema included") {
+    val dense = Seq(("b", 0.5), ("a", 0.5), ("c", 0.9), ("e", -0.0),
+      ("f", 0.0)).toDF("id", "dense_score")
+    val sparse = Seq(("c", 2.0), ("d", 2.0), ("a", 1.0), ("Z", 1.0))
+      .toDF("id", "bm25_score")
+    for (cfg <- Seq(HybridSearch.Config(k = 3), HybridSearch.Config(k = 10),
+        HybridSearch.Config(k = 10, rrfScoreThreshold = 1.0 / 61 + 1.0 / 64))) {
+      val got = HybridSearch.rrfFuse(dense, sparse, cfg)
+      val ref = refFuse(dense, sparse, cfg)
+      assert(got.schema == ref.schema)
+      assert(got.collect().toSeq == ref.collect().toSeq, s"$cfg")
+    }
+  }
+
+  // 48 docs over a small vocabulary: "scan"/"filter"/"join" are common,
+  // "rare" sits in short and long docs (so block bounds bind), and the
+  // dense vectors spread over the text
+  private lazy val routed = {
+    val docs = (0 until 48).map { i =>
+      val pad = if (i % 8 == 4) "join " * 120 else "join "
+      val rare = if (i % 8 == 0 || i % 8 == 4) "rare " else ""
+      val scan = if (i % 3 == 0) "scan scan " else if (i % 3 == 1) "scan " else ""
+      val filter = if (i % 4 < 2) "filter " else ""
+      (s"r$i", s"$rare$scan$filter${pad}topic${i % 6} f$i")
+    }.toDF("id", "chunk_text")
+      .withColumn("dense_vec", GraftFunctions.embedText($"chunk_text"))
+      .withColumn("tokens", GraftFunctions.bm25Tokenize($"chunk_text"))
+    docs.persist()
+  }
+
+  test("search == the one-plan reference (unpruned BM25, window RRF, " +
+      "left-join hydrate) on every sparse route and the Exact and Ivf " +
+      "dense tiers, full rows and schema") {
+    val W = graft.index.IndexWriter
+    val st = W.docFrequencies(routed)
+    val nn = routed.count()
+    val al = routed.select(avg(size($"tokens"))).head().getDouble(0)
+    val p = W.postings(routed)
+    val blocks = W.blockBounds(p, nBlocks = 8)
+    val routes = Seq(
+      "scan" -> HybridSearch.Config(),
+      "postings" -> HybridSearch.Config(postings = Some(p)),
+      "maxscore" -> HybridSearch.Config(postings = Some(p),
+        termBounds = Some(W.termBounds(p))),
+      "blockmax" -> HybridSearch.Config(postings = Some(p),
+        blockBounds = Some(blocks), nBlocks = 8),
+      // "rare" lags in `blocks`: sentinel ub6, admitted unconditionally
+      "blockmax-lagged" -> HybridSearch.Config(postings = Some(p),
+        blockBounds = Some(blocks.filter($"term" =!= "rare")), nBlocks = 8))
+    val ivf = new graft.ops.Similarity.IvfIndex(routed, nCentroids = 3,
+      vecCol = "dense_vec", idCol = "id")
+    val tiers = Seq[HybridSearch.Dense](HybridSearch.Dense.Exact,
+      HybridSearch.Dense.Ivf(ivf, nProbe = 1))
+    val ceiling = 2.0 / 61
+    // (query, k, threshold): empty, unknown-only, duplicated terms, the
+    // 2/61 ceiling, k above both prefetch lists, the lagging term
+    val cases = Seq(("", 3, 0.0), ("zzunknown qqabsent", 3, 0.0),
+      ("scan scan filter", 3, 0.0), ("scan filter", 3, ceiling),
+      ("rare topic1", 60, 0.0), ("rare join", 4, 0.0))
+    def rows(df: DataFrame) =
+      df.select((fusedCols :+ "chunk_text").map(col): _*).collect().toSeq
+    for ((route, base) <- routes; dense <- tiers; (q, k, th) <- cases) {
+      val cfg = base.copy(k = k, rrfScoreThreshold = th)
+      val got = HybridSearch.search(routed, st, nn, al, q, cfg, dense = dense)
+      val ref = refSearch(routed, st, nn, al, q, cfg, dense)
+      val what = s"$route / $dense / '$q' k=$k threshold=$th"
+      assert(got.schema == ref.schema, what)
+      val (g, r) = (rows(got), rows(ref))
+      assert(g == r, what)
+      if (q == "rare topic1") assert(g.size > 5 && g.size < k, what)
     }
   }
 
