@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Streams
+
 /** Streaming HNSW admission with history — the graph index's version of
   * the IVF generations story (q153) and the [[Snapshots
   * .streamUpsertVersioned]] discipline: every non-empty micro-batch of
@@ -152,47 +154,41 @@ object GraphStream {
   }
 
   /** Start the admission stream: `source` rows carry (idCol, vecCol).
-    * Checkpointed `AvailableNow` trigger, one snapshot version pair per
-    * non-empty micro-batch with genuinely new ids. */
+    * Drained through [[Streams.eachBatch]], one snapshot version pair
+    * per non-empty micro-batch with genuinely new ids. */
   def streamAdmit(spark: SparkSession, source: DataFrame,
       pointsPath: String, edgesPath: String, checkpoint: String,
       m: Int = 8, maxLevel: Int = 3, dim: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val pts = batch.toDF()
-          .select(col(idCol).as("id"), col(vecCol).as("vec"))
-          .dropDuplicates("id")
-        if (!pts.isEmpty) {
-          val havePoints = Snapshots.versions(spark, pointsPath).nonEmpty
-          if (!havePoints) {
-            val idx = new graft.ops.Similarity.HnswIndex(pts,
+    Streams.eachBatch(source, checkpoint) { (batch, _) =>
+      val pts = batch.select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .dropDuplicates("id")
+      if (!pts.isEmpty) {
+        val havePoints = Snapshots.versions(spark, pointsPath).nonEmpty
+        if (!havePoints) {
+          val idx = new graft.ops.Similarity.HnswIndex(pts,
+            m = m, maxLevel = maxLevel, vecCol = "vec", idCol = "id",
+            build = "nndescent", dim = dim)
+          Snapshots.upsertVersioned(spark, encodeEdges(idx.graph), edgesPath)
+          Snapshots.upsertVersioned(spark, pts, pointsPath)
+        } else {
+          val stored = Snapshots.readVersion(spark, pointsPath)
+          val fresh = pts
+            .join(stored.select("id"), Seq("id"), "left_anti")
+            .localCheckpoint()
+          if (!fresh.isEmpty) {
+            val storedEdges = decodeEdges(
+              Snapshots.readVersion(spark, edgesPath))
+            val idx = new graft.ops.Similarity.HnswIndex(stored,
               m = m, maxLevel = maxLevel, vecCol = "vec", idCol = "id",
-              build = "nndescent", dim = dim)
-            Snapshots.upsertVersioned(spark, encodeEdges(idx.graph), edgesPath)
-            Snapshots.upsertVersioned(spark, pts, pointsPath)
-          } else {
-            val stored = Snapshots.readVersion(spark, pointsPath)
-            val fresh = pts
-              .join(stored.select("id"), Seq("id"), "left_anti")
-              .localCheckpoint()
-            if (!fresh.isEmpty) {
-              val storedEdges = decodeEdges(
-                Snapshots.readVersion(spark, edgesPath))
-              val idx = new graft.ops.Similarity.HnswIndex(stored,
-                m = m, maxLevel = maxLevel, vecCol = "vec", idCol = "id",
-                build = "nndescent", dim = dim,
-                prebuiltGraph = Some(storedEdges))
-              val newEdges = idx.appendEdgesDistributed(fresh)
-              Snapshots.upsertVersioned(spark, encodeEdges(newEdges), edgesPath)
-              Snapshots.upsertVersioned(spark, fresh, pointsPath)
-            }
+              build = "nndescent", dim = dim,
+              prebuiltGraph = Some(storedEdges))
+            val newEdges = idx.appendEdgesDistributed(fresh)
+            Snapshots.upsertVersioned(spark, encodeEdges(newEdges), edgesPath)
+            Snapshots.upsertVersioned(spark, fresh, pointsPath)
           }
-          ()
         }
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 }

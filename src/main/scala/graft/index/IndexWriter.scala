@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Streams
+
 /** S7/ST3 — idempotent index-table sink + A7 corpus stats.
   *
   * The reference gets idempotence from deterministic uuid5 point ids +
@@ -399,75 +401,69 @@ object IndexWriter {
       positional: Boolean = false,
       autoCompact: Option[CompactionPolicy] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val pts0 = batch.toDF()
-        if (!pts0.isEmpty) {
-          val fs = fsFor(spark, s"$path/postings")
-          val have = fs.exists(new org.apache.hadoop.fs.Path(s"$path/postings"))
-          // an exactly repeated row is one document delivered twice:
-          // index it once, or its tf and positions count it twice
-          val pts = (if (have)
-              pts0.join(spark.read.parquet(s"$path/postings")
-                .filter(col("batch_id") =!= batchId)
-                .select("id").distinct(), Seq("id"), "left_anti")
-            else pts0).distinct().localCheckpoint()
-          if (!pts.isEmpty) {
-            // ONE tokenize pass per batch (r16): the positional table
-            // is the finest grain — the bag postings are its
-            // (term, id, dl) occurrence count and the df stats are the
-            // bag's per-term row count (the documented merge algebra:
-            // "the bag form is a groupBy(term, id, dl).count() away") —
-            // so the old separate postings() / docFrequencies() /
-            // positionalPostings() explodes over the batch text
-            // collapse into one posexplode (or one explode when the
-            // positional tier is off).
-            val posFrame =
-              if (positional) Some(positionalPostings(pts).localCheckpoint())
-              else None
-            val batchPostings = posFrame.fold(postings(pts)) { p =>
-              p.groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-                .select("term", "id", "tf", "dl")
-            }.localCheckpoint()
-            // per-WRITE dynamic-overwrite option (not session conf — a
-            // foreachBatch frame belongs to the stream's session CLONE,
-            // whose SQLConf snapshot would miss a driver-session set)
-            def overwriteBatch(df: DataFrame, sub: String,
-                parts: String*): Unit =
-              df.withColumn("batch_id", lit(batchId))
-                .write.mode(SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id" +: parts: _*)
-                .parquet(s"$path/$sub")
-            overwriteBatch(batchPostings
-                .withColumn("term_bucket",
-                  pmod(xxhash64(col("term")), lit(termBuckets.toLong))),
-              "postings", "term_bucket")
-            overwriteBatch(batchPostings.groupBy("term")
-              .agg(count(lit(1)).as("df")), "df")
-            // MaxScore bound stats ride the same discipline: max/min
-            // partials re-merge at read (vocabulary-sized)
-            overwriteBatch(termBounds(batchPostings), "bounds")
-            // block-max bounds too — same mergeable max/min algebra,
-            // one extra groupBy key
-            overwriteBatch(blockBounds(batchPostings, blockCount), "blocks")
-            // opt-in positional tier: per-occurrence rows are
-            // per-document facts like the bag rows — same term-bucket
-            // pruning for phrase/proximity reads
-            posFrame.foreach(p =>
-              overwriteBatch(p.withColumn("term_bucket",
-                  pmod(xxhash64(col("term")), lit(termBuckets.toLong))),
-                "positions", "term_bucket"))
-            resolvePolicy(autoCompact, sys.env).foreach(pol =>
-              maybeCompactPostingsStats(spark, path, pol,
-                excludeBatchId = Some(batchId)))
-            ()
-          }
+    Streams.eachBatch(source, checkpoint) { (pts0, batchId) =>
+      if (!pts0.isEmpty) {
+        val fs = fsFor(spark, s"$path/postings")
+        val have = fs.exists(new org.apache.hadoop.fs.Path(s"$path/postings"))
+        // an exactly repeated row is one document delivered twice:
+        // index it once, or its tf and positions count it twice
+        val pts = (if (have)
+            pts0.join(spark.read.parquet(s"$path/postings")
+              .filter(col("batch_id") =!= batchId)
+              .select("id").distinct(), Seq("id"), "left_anti")
+          else pts0).distinct().localCheckpoint()
+        if (!pts.isEmpty) {
+          // ONE tokenize pass per batch (r16): the positional table
+          // is the finest grain — the bag postings are its
+          // (term, id, dl) occurrence count and the df stats are the
+          // bag's per-term row count (the documented merge algebra:
+          // "the bag form is a groupBy(term, id, dl).count() away") —
+          // so the old separate postings() / docFrequencies() /
+          // positionalPostings() explodes over the batch text
+          // collapse into one posexplode (or one explode when the
+          // positional tier is off).
+          val posFrame =
+            if (positional) Some(positionalPostings(pts).localCheckpoint())
+            else None
+          val batchPostings = posFrame.fold(postings(pts)) { p =>
+            p.groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
+              .select("term", "id", "tf", "dl")
+          }.localCheckpoint()
+          // per-WRITE dynamic-overwrite option (not session conf — a
+          // foreachBatch frame belongs to the stream's session CLONE,
+          // whose SQLConf snapshot would miss a driver-session set)
+          def overwriteBatch(df: DataFrame, sub: String,
+              parts: String*): Unit =
+            df.withColumn("batch_id", lit(batchId))
+              .write.mode(SaveMode.Overwrite)
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id" +: parts: _*)
+              .parquet(s"$path/$sub")
+          overwriteBatch(batchPostings
+              .withColumn("term_bucket",
+                pmod(xxhash64(col("term")), lit(termBuckets.toLong))),
+            "postings", "term_bucket")
+          overwriteBatch(batchPostings.groupBy("term")
+            .agg(count(lit(1)).as("df")), "df")
+          // MaxScore bound stats ride the same discipline: max/min
+          // partials re-merge at read (vocabulary-sized)
+          overwriteBatch(termBounds(batchPostings), "bounds")
+          // block-max bounds too — same mergeable max/min algebra,
+          // one extra groupBy key
+          overwriteBatch(blockBounds(batchPostings, blockCount), "blocks")
+          // opt-in positional tier: per-occurrence rows are
+          // per-document facts like the bag rows — same term-bucket
+          // pruning for phrase/proximity reads
+          posFrame.foreach(p =>
+            overwriteBatch(p.withColumn("term_bucket",
+                pmod(xxhash64(col("term")), lit(termBuckets.toLong))),
+              "positions", "term_bucket"))
+          resolvePolicy(autoCompact, sys.env).foreach(pol =>
+            maybeCompactPostingsStats(spark, path, pol,
+              excludeBatchId = Some(batchId)))
         }
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** The streamed postings table in [[postings]]' column contract. */
   def readPostings(spark: SparkSession, path: String): DataFrame =
@@ -812,14 +808,10 @@ object IndexWriter {
       checkpoint: String, buckets: Int = 64,
       transform: DataFrame => DataFrame = identity)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val points = transform(batch.toDF())
-        if (!points.isEmpty) { upsertPartitioned(spark, points, indexPath, buckets); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    Streams.eachBatch(source, checkpoint) { (batch, _) =>
+      val points = transform(batch)
+      if (!points.isEmpty) upsertPartitioned(spark, points, indexPath, buckets)
+    }
 
   /** Replica diff — the anti-entropy primitive: compare two copies of an
     * id-keyed table by content digest and emit the repair worklist.

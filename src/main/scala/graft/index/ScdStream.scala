@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Streams
+
 /** Streaming SCD2 maintenance over versioned snapshots — the dimension
   * tier's streaming story next to [[GraphStream]] (graph index) and
   * [[Snapshots.streamUpsertVersioned]] (flat upserts): change
@@ -40,8 +42,8 @@ object ScdStream {
     Snapshots.readVersion(spark, dimPath, version).drop("id")
 
   /** Start the maintenance stream: `source` rows carry
-    * (keyCol, tsCol, seqCol, attrCols…). Checkpointed `AvailableNow`
-    * trigger; one (dim, log) version pair per micro-batch with
+    * (keyCol, tsCol, seqCol, attrCols…), drained through
+    * [[Streams.eachBatch]]; one (dim, log) version pair per micro-batch with
     * genuinely new observations. Batches must respect
     * [[graft.ops.Scd.scd2Apply]]'s ordering precondition (observations
     * strictly later than the touched keys' open rows) — the natural
@@ -50,36 +52,31 @@ object ScdStream {
       logPath: String, checkpoint: String, keyCol: String, tsCol: String,
       seqCol: String, attrCols: Seq[String])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cols = Seq(keyCol, tsCol, seqCol) ++ attrCols
-        val obs = batch.toDF().select(cols.map(col): _*)
-          .dropDuplicates(Seq(keyCol, tsCol, seqCol))
-        if (!obs.isEmpty) {
-          val haveLog = Snapshots.versions(spark, logPath).nonEmpty
-          val keyed = obs.withColumn("id", obsId(keyCol, tsCol, seqCol))
-          val fresh = (if (!haveLog) keyed else {
-            val logged = Snapshots.readVersion(spark, logPath).select("id")
-            keyed.join(logged, Seq("id"), "left_anti")
-          }).localCheckpoint()
-          if (!fresh.isEmpty) {
-            val haveDim = Snapshots.versions(spark, dimPath).nonEmpty
-            val applied =
-              if (!haveDim)
-                graft.ops.Scd.scd2Build(fresh.drop("id"), keyCol, tsCol,
-                  seqCol, attrCols)
-              else
-                graft.ops.Scd.scd2Apply(dimAt(spark, dimPath),
-                  fresh.drop("id"), keyCol, tsCol, seqCol, attrCols)
-            val encoded = applied.withColumn("id",
-              concat_ws("|", col(keyCol), unix_micros(col("effective_from"))))
-            Snapshots.replaceVersioned(spark, encoded, dimPath)
-            Snapshots.upsertVersioned(spark, fresh.select("id"), logPath)
-          }
-          ()
+    Streams.eachBatch(source, checkpoint) { (batch, _) =>
+      val cols = Seq(keyCol, tsCol, seqCol) ++ attrCols
+      val obs = batch.select(cols.map(col): _*)
+        .dropDuplicates(Seq(keyCol, tsCol, seqCol))
+      if (!obs.isEmpty) {
+        val haveLog = Snapshots.versions(spark, logPath).nonEmpty
+        val keyed = obs.withColumn("id", obsId(keyCol, tsCol, seqCol))
+        val fresh = (if (!haveLog) keyed else {
+          val logged = Snapshots.readVersion(spark, logPath).select("id")
+          keyed.join(logged, Seq("id"), "left_anti")
+        }).localCheckpoint()
+        if (!fresh.isEmpty) {
+          val haveDim = Snapshots.versions(spark, dimPath).nonEmpty
+          val applied =
+            if (!haveDim)
+              graft.ops.Scd.scd2Build(fresh.drop("id"), keyCol, tsCol,
+                seqCol, attrCols)
+            else
+              graft.ops.Scd.scd2Apply(dimAt(spark, dimPath),
+                fresh.drop("id"), keyCol, tsCol, seqCol, attrCols)
+          val encoded = applied.withColumn("id",
+            concat_ws("|", col(keyCol), unix_micros(col("effective_from"))))
+          Snapshots.replaceVersioned(spark, encoded, dimPath)
+          Snapshots.upsertVersioned(spark, fresh.select("id"), logPath)
         }
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 }

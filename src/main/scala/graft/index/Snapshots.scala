@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Streams
+
 /** Snapshot / read-at-version for the index table — the Delta/Iceberg
   * time-travel shape re-expressed over plain parquet and tiny manifest
   * files, for reproducible training runs: "read the index as of
@@ -309,20 +311,16 @@ object Snapshots {
     * batches re-merge idempotently: same ids, new-rows-win, converged
     * content) PLUS a pinned-readable version per batch, so a training
     * run can freeze "the index as the stream stood at batch N" while
-    * ingest keeps flowing. Checkpointed `AvailableNow` trigger, same as
-    * the unversioned sink. */
+    * ingest keeps flowing. Drained through
+    * [[Streams.eachBatch]], same as the unversioned sink. */
   def streamUpsertVersioned(spark: SparkSession, source: DataFrame,
       path: String, checkpoint: String,
       transform: DataFrame => DataFrame = identity)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val points = transform(batch.toDF())
-        if (!points.isEmpty) { upsertVersioned(spark, points, path); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    Streams.eachBatch(source, checkpoint) { (batch, _) =>
+      val points = transform(batch)
+      if (!points.isEmpty) upsertVersioned(spark, points, path)
+    }
 
   /** Takedown as a NEW snapshot: the latest version minus `ids` —
     * forward-looking removal (a blocklist landing, a licence

@@ -42,7 +42,7 @@ private[graft] object EventQueries extends QueryFamily {
     }),
 
     // ST1 — true Structured Streaming run of the tumbling-window agg
-    // (memory sink, AvailableNow trigger, complete mode), then read back.
+    // (Streams.memorySink drain, complete mode), then read back.
     "q34_stream_window" -> ((s, dir) => {
       EventsPipeline.drained(s) {
         EventsPipeline.streamWindowedCountsComplete(s, dir, "q34_sink")

@@ -27,14 +27,10 @@ private[graft] object QuerySupport {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** events.parquet has shipped as TIMESTAMP(NANOS) (unreadable natively
-    * by Spark → ns-as-long + integer divide) and as TIMESTAMP(MICROS)
-    * NTZ, depending on testdata generation; the shared normalizer in
-    * [[graft.streaming.EventsPipeline.tsToTimestamp]] handles both. */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.streaming.EventsPipeline.tsToTimestamp(t(s, dir, "events"))
-  }
+  /** The events table with `ts` normalized across its NANOS and MICROS
+    * layouts ([[graft.streaming.Streams.events]]). */
+  def events(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Streams.events(s, dir)
 
   def cents(c: Column): Column = round(c * 100, 0).cast("long")
 

@@ -393,7 +393,8 @@ private[graft] object SearchQueries extends QueryFamily {
       writeAux(queryTexts.zipWithIndex.map { case (q, i) =>
         (i.toLong, emb.embedQuery(q).toSeq, graft.text.Bm25.tokenize(q))
       }.toDF("qid", "qv", "terms"), dir, "q342_queries")
-      HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen, queries, cfg)
+      HybridSearch.searchAll(index, stats, n, avgLen, queries, cfg,
+          dense = HybridSearch.Dense.Hnsw(hs))
         .select("query_id", "id", "chunk_id", "rrf_score",
           "dense_score", "bm25_score")
         .orderBy("query_id", "id")

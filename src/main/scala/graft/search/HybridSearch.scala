@@ -635,34 +635,24 @@ object HybridSearch {
     * re-sort). Wide shuffles are keyed by query_id (+ id for the
     * fusion join); corpus text and vectors cross no exchange.
     *
+    * `dense` picks the batched dense tier ([[Dense.Batched]]: the
+    * exact scan or the HNSW walk); per-query results equal [[search]]
+    * with the same tier and query string.
+    *
     * Returns one [[search]]-shaped result set per query, keyed by
     * `query_id`, ordered (query_id, rrf_score desc, id). */
   def searchAll(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, queries: DataFrame, cfg: Config = Config(),
       embedder: Embedder = HashingEmbedder.default,
-      queryIdCol: String = "query_id", queryCol: String = "query"): DataFrame = {
+      queryIdCol: String = "query_id", queryCol: String = "query",
+      dense: Dense.Batched = Dense.Exact): DataFrame = {
     val prefetch = cfg.k * cfg.prefetchMultiplier
     val emb = embedder
     val embedQueryUdf = udf((q: String) => emb.embedQuery(q))
     val qs = queries
       .select(col(queryIdCol).as("query_id"), col(queryCol).as("__qtext"))
       .withColumn("__qvec", embedQueryUdf(col("__qtext")))
-
-    // dense prefetch: one scored pass + bounded per-query heaps
-    val dense = denseTopKAll(index, qs, prefetch,
-      queryVecCol = "__qvec")
-    fuseAllWithDense(index, docStats, corpusSize, avgDocLen, qs, dense, cfg)
-  }
-
-  /** The batched sparse branch + per-query fusion shared by
-    * [[searchAll]] (brute dense) and [[searchAllHnsw]] (graph-walk
-    * dense): `qs` is the embedded query table (query_id, __qtext),
-    * `dense` the per-query dense prefetch (query_id, id, dense_score).
-    * Scale shape as documented on [[searchAll]]. */
-  private def fuseAllWithDense(index: DataFrame, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, qs: DataFrame,
-      dense: DataFrame, cfg: Config): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
+    val denseHits = dense.prefetchAll(index, qs, prefetch)
     val tokenizeUdf = udf((q: String) => graft.text.Bm25.tokenize(q))
 
     // sparse prefetch: corpus tokens explode once; (doc, term) scores
@@ -678,7 +668,7 @@ object HybridSearch {
     if (cfg.postings.isDefined && tbOpt.isDefined) {
       val sparse = bm25TopKMaxScoreAll(cfg.postings.get, docStats,
         tbOpt.get, corpusSize, avgDocLen, qTerms, prefetch)
-      return fuseRanked(index, dense, sparse, cfg)
+      return fuseRanked(index, denseHits, sparse, cfg)
     }
     // hoisted: the same distinct term set prunes both the corpus-token
     // explode and docStats — one aggregation, not two per plan
@@ -710,7 +700,7 @@ object HybridSearch {
       .agg(round(sum("term_score"), 6).as("bm25_score"))
     val sparse = graft.plans.TopK.perKey(sparsePairs, Seq("query_id"),
       Seq(("bm25_score", false), ("id", true)), prefetch)
-    fuseRanked(index, dense, sparse, cfg)
+    fuseRanked(index, denseHits, sparse, cfg)
   }
 
   /** Per-query RRF fusion of the two batched prefetch branches —
@@ -742,10 +732,20 @@ object HybridSearch {
   }
 
   object Dense {
-    /** Exact cosine scan of every vector ([[denseTopK]]). */
-    case object Exact extends Dense {
+    /** A tier that also serves a whole query table in one plan
+      * ([[searchAll]]): `prefetchAll` returns the (query_id, id,
+      * dense_score) top-`n` per row of `qs` (query_id, __qvec). */
+    sealed trait Batched extends Dense {
+      def prefetchAll(index: DataFrame, qs: DataFrame, n: Int): DataFrame
+    }
+
+    /** Exact cosine scan of every vector ([[denseTopK]]; batched,
+      * [[denseTopKAll]]). */
+    case object Exact extends Batched {
       def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
         denseTopK(index, qVec, n)
+      def prefetchAll(index: DataFrame, qs: DataFrame, n: Int): DataFrame =
+        denseTopKAll(index, qs, n, queryVecCol = "__qvec")
     }
 
     /** A prebuilt [[graft.ops.Similarity.IvfIndex]] over the chunk
@@ -785,13 +785,21 @@ object HybridSearch {
       * the ANN tier next to [[Ivf]]: per request the walk touches
       * O(ef · hops · deg) graph rows instead of scanning the corpus (or
       * IVF's nProbe cells). `ef`/`hops` are the recall/cost dials; hits
-      * route back from the graph's surrogate keys through `idMap`. */
+      * route back from the graph's surrogate keys through `idMap`.
+      * Batched, every hop is one (query_id, id)-keyed frontier⋈graph
+      * join for the whole query table
+      * ([[graft.ops.Similarity.HnswIndex.searchBatch]]). */
     final case class Hnsw(hs: HnswServing, ef: Int = 16, hops: Int = 3)
-        extends Dense {
+        extends Batched {
       def prefetch(index: DataFrame, qVec: Array[Float], n: Int): DataFrame =
         hs.hnsw.search(qVec, n, ef = ef, hops = hops)
           .join(hs.idMap, "hid")
           .select(col("id"), col("cos").as("dense_score"))
+      def prefetchAll(index: DataFrame, qs: DataFrame, n: Int): DataFrame =
+        hs.hnsw.searchBatch(qs.select("query_id", "__qvec"), n, ef = ef,
+            hops = hops, queryIdCol = "query_id", queryVecCol = "__qvec")
+          .join(hs.idMap, "hid")
+          .select(col("query_id"), col("id"), col("cos").as("dense_score"))
     }
   }
 
@@ -817,20 +825,27 @@ object HybridSearch {
     val denseHits = dense.prefetch(index, qVec, prefetch)
     val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
     val fusedDf = rrfFuse(denseHits, sparse, cfg)
-    val fused = fusedDf.collect()
-    // payload projection (P9): hydrate the top-k ids only — a left
-    // join on id, done on the driver over the read rows
+    hydrateTopK(index, fusedDf.collect(), fusedDf.schema)
+  }
+
+  /** Payload projection (P9) of a collected top-k: `ranked` rows of
+    * `schema`, id first and in result order, each followed by the
+    * index's other columns. One action reads the index rows by an
+    * `id IN (…)` literal; the left join on id runs on the driver, so an
+    * id the index lacks keeps null payload. Returns a local frame. */
+  private[graft] def hydrateTopK(index: DataFrame, ranked: Array[Row],
+      schema: StructType): DataFrame = {
     val payload = index.schema.filterNot(_.name == "id")
-    val byId = if (fused.isEmpty) Map.empty[Any, Array[Row]]
-      else index.filter(col("id").isin(fused.map(_.get(0)).distinct.toSeq: _*))
+    val byId = if (ranked.isEmpty) Map.empty[Any, Array[Row]]
+      else index.filter(col("id").isin(ranked.map(_.get(0)).distinct.toSeq: _*))
         .select((col("id") +: payload.map(f => col(f.name))): _*)
         .collect().groupBy(_.get(0))
-    val hits = fused.toSeq.flatMap { h =>
+    val hits = ranked.toSeq.flatMap { h =>
       byId.get(h.get(0)).fold(Seq(h.toSeq ++ payload.map(_ => null)))(
         _.toSeq.map(r => h.toSeq ++ r.toSeq.tail))
     }.map(Row.fromSeq)
     index.sparkSession.createDataFrame(hits.asJava,
-      StructType(fusedDf.schema ++ payload.map(_.copy(nullable = true))))
+      StructType(schema ++ payload.map(_.copy(nullable = true))))
   }
 
   /** Prebuilt HNSW serving bundle over the chunk index's dense vectors.
@@ -860,35 +875,6 @@ object HybridSearch {
       // idMap (a projection of the index) is re-derived, never stored
       prebuiltGraph = prebuiltGraph)
     HnswServing(hnsw, mapped.select("hid", "id"))
-  }
-
-  /** BATCHED [[search]] over [[Dense.Hnsw]] — the multi-query graph walk
-    * ([[graft.ops.Similarity.HnswIndex.searchBatch]]: every hop one
-    * (query_id, id)-keyed frontier⋈graph join for the whole query
-    * table) feeding [[searchAll]]'s batched BM25 branch and per-query
-    * RRF fusion. With [[searchAll]] (batched brute) it is one of the
-    * two batched dense tiers: a thousand queries pay one plan's worth
-    * of Spark jobs instead of a thousand walks. Per-query results equal the
-    * single [[Dense.Hnsw]] search for the same query string (HybridSearchSpec
-    * asserts it); ordered (query_id, rrf_score desc, id). */
-  def searchAllHnsw(index: DataFrame, hs: HnswServing,
-      docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      queries: DataFrame, cfg: Config = Config(), ef: Int = 16,
-      hops: Int = 3, embedder: Embedder = HashingEmbedder.default,
-      queryIdCol: String = "query_id", queryCol: String = "query"):
-      DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val emb = embedder
-    val embedQueryUdf = udf((q: String) => emb.embedQuery(q))
-    val qs = queries
-      .select(col(queryIdCol).as("query_id"), col(queryCol).as("__qtext"))
-      .withColumn("__qvec", embedQueryUdf(col("__qtext")))
-    val dense = hs.hnsw.searchBatch(qs.select("query_id", "__qvec"),
-        prefetch, ef = ef, hops = hops,
-        queryIdCol = "query_id", queryVecCol = "__qvec")
-      .join(hs.idMap, "hid")
-      .select(col("query_id"), col("id"), col("cos").as("dense_score"))
-    fuseAllWithDense(index, docStats, corpusSize, avgDocLen, qs, dense, cfg)
   }
 
   /** PHRASE matching from the positional inverted index

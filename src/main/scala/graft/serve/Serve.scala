@@ -277,7 +277,8 @@ object Serve {
   /** The positional-index request body shared by [[queryPhrase]] and
     * [[queryProximity]]: read the positional postings (the in-memory
     * frame, or the store's buckets for `terms` only), rank documents by
-    * the count of `matches` rows (ties → id), top-k, hydrate. */
+    * the count of `matches` rows (ties → id), collect the top-k, and
+    * hydrate them like [[HybridSearch.search]] does. */
   private def positionalResponse(index: DataFrame, terms: Seq[String],
       k: Int, posPostings: Option[DataFrame], store: Option[String],
       question: String, t0: Long)(
@@ -287,13 +288,12 @@ object Serve {
         .readPositionsForTerms(index.sparkSession, path, terms)
       case None => posPostings.get
     }
-    val hits = matches(pp)
+    val ranked = matches(pp)
       .groupBy("id").agg(count(lit(1)).cast("double").as("rrf_score"))
       .orderBy(desc("rrf_score"), col("id"))
       .limit(k)
-      .join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-    collectResponse(hits, question, t0)
+    collectResponse(HybridSearch.hydrateTopK(index, ranked.collect(),
+      ranked.schema), question, t0)
   }
 
   /** [[query]] with an MMR diversification pass (no reference analog —

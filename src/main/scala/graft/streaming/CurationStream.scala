@@ -258,33 +258,25 @@ object CurationStream {
 
   /** Wire a streaming (doc_id, text) source through per-batch admission
     * into a versioned snapshot at `outPath`, with dedup state under
-    * `statePath`. AvailableNow trigger (the house micro-batch drain);
+    * `statePath`. Drains through [[Streams.eachBatch]];
     * state appends precede the snapshot commit, and both tolerate
     * at-least-once redelivery (see the object doc). */
   def run(spark: SparkSession, source: DataFrame, profile: DataFrame,
       outPath: String, statePath: String, checkpoint: String,
       cfg: Config = Config())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val batch = b.toDF()
-          if (!batch.isEmpty) {
-            val (digests, sigs) = readState(spark, statePath)
-            val flags = admitBatch(batch, digests, sigs, profile, cfg)
-              .localCheckpoint()
-            flags.select("doc_id", "digest")
-              .write.mode("append").parquet(s"$statePath/digests")
-            flags.filter(col("sig").isNotNull).select("doc_id", "sig")
-              .write.mode("append").parquet(s"$statePath/sigs")
-            graft.index.Snapshots.upsertVersioned(spark,
-              flags.drop("digest", "sig")
-                .withColumnRenamed("doc_id", "id"), outPath)
-            ()
-          }
+    Streams.eachBatch(source, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val (digests, sigs) = readState(spark, statePath)
+        val flags = admitBatch(batch, digests, sigs, profile, cfg)
+          .localCheckpoint()
+        flags.select("doc_id", "digest")
+          .write.mode("append").parquet(s"$statePath/digests")
+        flags.filter(col("sig").isNotNull).select("doc_id", "sig")
+          .write.mode("append").parquet(s"$statePath/sigs")
+        graft.index.Snapshots.upsertVersioned(spark,
+          flags.drop("digest", "sig")
+            .withColumnRenamed("doc_id", "id"), outPath)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 }

@@ -4,18 +4,28 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import Streams.{eventStream, memorySink}
+
 /** ST1-ST3 — incremental / streaming-shaped operators.
   *
   * The reference's ingestion is batch-with-checkpoint (driver page loop,
   * cursor persisted in payloads — broken in the reference, SURVEY.md Q1).
   * Ours keeps an explicit cursor/checkpoint table for batch resume and
   * offers true Structured Streaming for the events-shaped path.
+  *
+  * Source and sink policy: every stream here opens the events table
+  * through [[Streams.eventStream]] (`nanosAsLong`, the one-file glob,
+  * `ts` normalized) and drains through [[Streams.memorySink]], the
+  * house micro-batch drain. The exceptions: [[streamStreamLeftJoin]]
+  * streams a staged copy with flush rows, and the two sketch streams
+  * drain through an uncheckpointed `foreachBatch` that folds each batch
+  * into a driver-held sketch.
   */
 object EventsPipeline {
 
   /** `events.ts` has shipped in two physical parquet layouts across
     * testdata generations: TIMESTAMP(NANOS) — which Spark cannot read
-    * natively, so callers set `nanosAsLong` and the column arrives as a
+    * natively, so [[Streams]] sets `nanosAsLong` and the column arrives as a
     * BIGINT of nanoseconds — and plain TIMESTAMP(MICROS) without
     * timezone, which reads as TIMESTAMP_NTZ. Normalize either to the
     * session-zone TimestampType (sessions here run UTC, so wall-clock
@@ -60,24 +70,10 @@ object EventsPipeline {
     * tests. Source: the same parquet dir read as a stream. */
   def streamWindowedCounts(spark: SparkSession, dir: String,
       queryName: String = "events_windows"): org.apache.spark.sql.streaming.StreamingQuery = {
-    // events.parquet carries TIMESTAMP(NANOS): read ns-as-long, integer-
-    // divide to micros (same handling as the Complete/dedup variants —
-    // without it the schema read throws, and with a leaked conf the
-    // watermark would land on a LongType column).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // streaming file source needs a directory; select the one file by glob
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
-    stream
+    memorySink(eventStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n")), OutputMode.Append, queryName)
   }
 
   /** Streaming tumbling-window counts in COMPLETE mode (no watermark —
@@ -85,18 +81,9 @@ object EventsPipeline {
     * batch aggregation exactly, e.g. the t2 gate). */
   def streamWindowedCountsComplete(spark: SparkSession, dir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // streaming file source needs a directory; select the one file by glob
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
+    memorySink(eventStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n")), OutputMode.Complete, queryName)
   }
 
   /** Event-time SESSION windows on a real stream — the survey's
@@ -109,18 +96,10 @@ object EventsPipeline {
   def streamSessionCounts(spark: SparkSession, dir: String,
       queryName: String, gap: String = "30 minutes"):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
+    memorySink(eventStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n")), OutputMode.Append, queryName)
   }
 
   /** Session assignment in batch: a new session starts after `gapMin`
@@ -145,19 +124,11 @@ object EventsPipeline {
     * infinite stream). Memory sink for tests. */
   def streamDedupCounts(spark: SparkSession, dir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
+    memorySink(eventStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n")), OutputMode.Complete, queryName)
   }
 
   /** [[streamDedupCounts]] with PLANTED re-delivery: two file-source legs
@@ -168,20 +139,12 @@ object EventsPipeline {
     * discriminates). */
   def streamDedupPlantedCounts(spark: SparkSession, dir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def leg = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
-    leg.unionByName(leg)
+    def leg = eventStream(spark, dir)
+    memorySink(leg.unionByName(leg)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n")), OutputMode.Complete, queryName)
   }
 
   /** Stream-static enrichment join: the event stream joins a static
@@ -191,21 +154,15 @@ object EventsPipeline {
     * Complete mode for the stream==batch gate. */
   def streamEnrichedCounts(spark: SparkSession, dir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val customers = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_nationkey"))
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    memorySink(eventStream(spark, dir)
       .select(col("user_id"), col("value"))
       .join(customers, col("user_id") === col("c_custkey"))
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+        sum(round(col("value") * 100, 0).cast("long")).as("value_cents")),
+      OutputMode.Complete, queryName)
   }
 
   /** Stream-stream INNER join with an event-time range condition:
@@ -218,11 +175,7 @@ object EventsPipeline {
     * stream==batch gate asserts. */
   def streamStreamJoin(spark: SparkSession, dir: String,
       queryName: String, windowMin: Int = 10): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(tsToTimestamp(_))
+    def src = eventStream(spark, dir)
     val clicks = src.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("c_id"))
@@ -231,15 +184,12 @@ object EventsPipeline {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "1 hour")
-    clicks.join(purchases,
+    val pairs = clicks.join(purchases,
         col("c_user") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr(s"INTERVAL $windowMin MINUTES"))
       .select(col("c_user").as("user_id"), col("c_id"), col("p_id"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    memorySink(pairs, OutputMode.Append, queryName)
   }
 
   final case class UserCounts(nEvents: Long, nPurchases: Long)
@@ -280,9 +230,7 @@ object EventsPipeline {
     * watermark the query reaches). */
   def streamStreamLeftJoin(spark: SparkSession, dir: String,
       queryName: String, windowMin: Int = 10): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val ev = tsToTimestamp(raw)
+    val ev = Streams.events(spark, dir)
     val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
     val flushTs = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
     val staging = s"/tmp/graft_stream_left/$queryName"
@@ -305,16 +253,13 @@ object EventsPipeline {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "1 hour")
-    clicks.join(purchases,
+    memorySink(clicks.join(purchases,
         col("c_user") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr(s"INTERVAL $windowMin MINUTES"),
         "left_outer")
-      .select(col("c_user").as("user_id"), col("c_id"), col("p_id"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .select(col("c_user").as("user_id"), col("c_id"), col("p_id")),
+      OutputMode.Append, queryName)
   }
 
   /** Conversion attribution (first-touch / last-touch) — the marketing
@@ -1186,13 +1131,10 @@ object EventsPipeline {
       queryName: String, cap: Int): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     require(cap >= 1, "cap must be positive")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = tsToTimestamp(spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
+    val stream = eventStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[(Long, Long, Long)]
-    stream.groupByKey(_._1)
+    memorySink(stream.groupByKey(_._1)
       .flatMapGroupsWithState[Long, (Long, Long)](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (uid, rows, state: GroupState[Long]) =>
@@ -1202,11 +1144,7 @@ object EventsPipeline {
           state.update(used + admitted.size)
           admitted.map(r => (uid, r._3)).iterator
       }
-      .toDF("user_id", "event_id")
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .toDF("user_id", "event_id"), OutputMode.Append, queryName)
   }
 
   /** Streaming Count-Min maintenance — the frequency complement of the
@@ -1222,11 +1160,8 @@ object EventsPipeline {
   def streamCountMinMaintain(spark: SparkSession, dir: String,
       queryName: String, valueCol: String = "event_type",
       depth: Int = 4, width: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     var acc: Seq[(Int, Long, Long)] = Seq.empty
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    eventStream(spark, dir)
       .select(col(valueCol).cast("string").as("v"))
       .writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1267,11 +1202,8 @@ object EventsPipeline {
   def streamQuantileMaintain(spark: SparkSession, dir: String,
       queryName: String, valueCol: String = "value",
       k: Int = 256): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     var acc: Seq[(Int, Double)] = Seq.empty
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    eventStream(spark, dir)
       .select(round(col(valueCol) * 100, 0).cast("long")
         .cast("double").as("v"))
       .writeStream.outputMode(OutputMode.Append)
@@ -1292,13 +1224,10 @@ object EventsPipeline {
   def streamStatefulUserCounts(spark: SparkSession, dir: String,
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = eventStream(spark, dir)
       .select(col("user_id"), col("event_type"))
       .as[(Long, String)]
-    stream.groupByKey(_._1)
+    memorySink(stream.groupByKey(_._1)
       .flatMapGroupsWithState[UserCounts, (Long, Long, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         case (uid, rows, state: GroupState[UserCounts]) =>
@@ -1310,11 +1239,7 @@ object EventsPipeline {
           state.update(next)
           Iterator((uid, next.nEvents, next.nPurchases))
       }
-      .toDF("user_id", "n_events", "n_purchases")
-      .writeStream.outputMode(OutputMode.Update)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .toDF("user_id", "n_events", "n_purchases"), OutputMode.Update, queryName)
   }
 
   /** Difference-in-differences estimator — the experiment-analytics

@@ -520,8 +520,8 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
     val queries = queryTexts.zipWithIndex
       .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val cols = Seq("query_id", "id", "rrf_score", "dense_score", "bm25_score")
-    val batched = HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen,
-      queries, cfg)
+    val batched = HybridSearch.searchAll(index, stats, n, avgLen,
+      queries, cfg, dense = HybridSearch.Dense.Hnsw(hs))
     val loop = queryTexts.zipWithIndex.map { case (q, i) =>
       HybridSearch.search(index, stats, n, avgLen, q, cfg,
           dense = HybridSearch.Dense.Hnsw(hs))

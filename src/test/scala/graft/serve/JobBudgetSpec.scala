@@ -72,6 +72,27 @@ class JobBudgetSpec extends AnyFunSuite with SparkTestBase {
     assert(n <= 13, s"Serve.queryReranked ran $n jobs")
   }
 
+  test("Serve.queryPhrase (positional store) runs at most 9 jobs") {
+    Serve.queryPhrase(engine.index, engine.docStats, "order order",
+      k = 3, store = engine.posStore)  // first call plans, untimed
+    val (resp, n) = jobs(Serve.queryPhrase(engine.index, engine.docStats,
+      "court filing contract", k = 3, store = engine.posStore))
+    assert(resp.results.nonEmpty)
+    info(s"$n jobs")
+    assert(n <= 9, s"Serve.queryPhrase ran $n jobs")
+  }
+
+  test("Serve.queryProximity (positional store) runs at most 9 jobs") {
+    Serve.queryProximity(engine.index, engine.docStats,
+      Seq("appeal", "order"), 2, k = 3, store = engine.posStore)
+    val (resp, n) = jobs(Serve.queryProximity(engine.index,
+      engine.docStats, Seq("court", "contract"), 2, k = 3,
+      store = engine.posStore))
+    assert(resp.results.nonEmpty)
+    info(s"$n jobs")
+    assert(n <= 9, s"Serve.queryProximity ran $n jobs")
+  }
+
   test("maxScorePrune is two driver reads: at most 2 jobs") {
     val p = engine.postings.get
     val tb = graft.index.IndexWriter.termBounds(p).persist()
