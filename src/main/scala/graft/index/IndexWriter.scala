@@ -1,7 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streams
 
@@ -557,29 +559,19 @@ object IndexWriter {
     (np, npos)
   }
 
-  /** PARTITION-PRUNED postings read for one query's terms — the reason
-    * [[streamPostings]] lays the table out by `term_bucket`: the
-    * query's few terms map to their buckets (same pmod(xxhash64) as
-    * the write side, computed once driver-side), the bucket predicate
-    * prunes to those DIRECTORIES at planning time, and the residual
-    * term filter pushes into the surviving files' scans — so a
-    * request's sparse branch reads terms/termBuckets of the postings
-    * table's files, not all of them (PlanSpec asserts the pruned scan).
-    * Feed the result to [[graft.search.HybridSearch.Config.postings]]. */
+  /** PARTITION-PRUNED postings read for one query's terms — the
+    * reason [[streamPostings]] lays the table out by `term_bucket`: the
+    * query's few terms map to their buckets ([[termBucket]], the write
+    * side's pmod(xxhash64) computed on the driver), only those bucket
+    * DIRECTORIES are opened, and the residual term filter pushes into
+    * their scans — so a request's sparse branch reads terms/termBuckets
+    * of the postings table's files, not all of them (PlanSpec asserts
+    * the pruned scan). Feed the result to
+    * [[graft.search.HybridSearch.Config.postings]]. */
   def readPostingsForTerms(spark: SparkSession, path: String,
-      terms: Seq[String], termBuckets: Int = 64): DataFrame = {
-    val tseq = terms.distinct
-    val base = spark.read.parquet(s"$path/postings")
-    if (tseq.isEmpty) return base.select("term", "id", "tf", "dl").limit(0)
-    val buckets = spark.range(1)
-      .select(array(tseq.map(t =>
-        pmod(xxhash64(lit(t)), lit(termBuckets.toLong))): _*).as("b"))
-      .first().getSeq[Long](0).distinct
-    base
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(tseq: _*))
-      .select("term", "id", "tf", "dl")
-  }
+      terms: Seq[String], termBuckets: Int = 64): DataFrame =
+    readTermBuckets(spark, s"$path/postings", terms, termBuckets,
+      Seq("term", "id", "tf", "dl"))
 
   /** The streamed df stats: appended per-batch partials re-summed —
     * exactly [[mergeDocFrequencies]] folded over every batch. */
@@ -589,24 +581,60 @@ object IndexWriter {
 
   /** PARTITION-PRUNED positional read for one phrase's terms — the
     * [[readPostingsForTerms]] discipline on the positional tier: the
-    * phrase's terms map to their write-side buckets, the bucket
-    * predicate prunes directories, and the residual term filter pushes
-    * into the surviving scans. Feed the result to
+    * phrase's terms map to their write-side buckets, only those bucket
+    * directories are opened, and the residual term filter pushes into
+    * their scans. Feed the result to
     * [[graft.search.HybridSearch.phraseMatches]] /
     * [[graft.search.HybridSearch.proximityMatches]]. */
   def readPositionsForTerms(spark: SparkSession, path: String,
-      terms: Seq[String], termBuckets: Int = 64): DataFrame = {
+      terms: Seq[String], termBuckets: Int = 64): DataFrame =
+    readTermBuckets(spark, s"$path/positions", terms, termBuckets,
+      Seq("term", "id", "pos", "dl"))
+
+  /** The term bucket a term's postings and positions are written under,
+    * `pmod(xxhash64(term), buckets)`, computed on the driver: Spark's
+    * `xxhash64` of a string is XXH64 with seed 42 over its UTF-8 bytes
+    * (the hash `Dedup.simHashUdf` uses). */
+  def termBucket(term: String, buckets: Int): Long =
+    Math.floorMod(XXH64.hashUTF8String(UTF8String.fromString(term), 42L),
+      buckets.toLong)
+
+  /** `table`'s `cols` for `terms`, opening only the directories of the
+    * terms' buckets under `basePath` — so Spark neither lists every
+    * bucket (a parallel listing job past 32 directories) nor runs a job
+    * to hash the terms. The `term_bucket IN` filter stays as the plan's
+    * partition filter. With no such directory (or no term) the frame is
+    * the table's, empty. */
+  private def readTermBuckets(spark: SparkSession, table: String,
+      terms: Seq[String], termBuckets: Int, cols: Seq[String]): DataFrame = {
     val tseq = terms.distinct
-    val base = spark.read.parquet(s"$path/positions")
-    if (tseq.isEmpty) return base.select("term", "id", "pos", "dl").limit(0)
-    val buckets = spark.range(1)
-      .select(array(tseq.map(t =>
-        pmod(xxhash64(lit(t)), lit(termBuckets.toLong))): _*).as("b"))
-      .first().getSeq[Long](0).distinct
-    base
+    val buckets = tseq.map(termBucket(_, termBuckets)).distinct
+    val dirs = bucketDirs(spark, table, buckets)
+    if (dirs.isEmpty)
+      return spark.read.parquet(table).select(cols.map(col): _*).limit(0)
+    spark.read.option("basePath", table).parquet(dirs: _*)
       .filter(col("term_bucket").isin(buckets: _*) &&
         col("term").isin(tseq: _*))
-      .select("term", "id", "pos", "dl")
+      .select(cols.map(col): _*)
+  }
+
+  /** The existing `term_bucket=` directories of `buckets` in `table`:
+    * directly under it (the serving store) or under each `batch_id=`
+    * directory (the streamed layout). */
+  private def bucketDirs(spark: SparkSession, table: String,
+      buckets: Seq[Long]): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val want = buckets.map(b => s"term_bucket=$b").toSet
+    val fs = fsFor(spark, table)
+    def under(p: Path): Seq[String] = fs.listStatus(p).toSeq
+      .filter(_.isDirectory).flatMap { st =>
+        val name = st.getPath.getName
+        if (want(name)) Seq(st.getPath.toString)
+        else if (name.startsWith("batch_id=")) under(st.getPath)
+        else Nil
+      }
+    if (want.isEmpty || !fs.exists(new Path(table))) Nil
+    else under(new Path(table))
   }
 
   /** The streamed MaxScore bound stats: appended per-batch partials

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DriverEval
 import graft.functions.GraftFunctions.vecCosine
 
 /** Nearest-neighbor search over an embedding column: one exact scan
@@ -1303,15 +1304,19 @@ object Similarity {
     *    into it.
     *  - SEARCH: the fixed-hop beam walk — greedy descent through each
     *    upper layer, then `hops` beam rounds at layer 0 keeping a
-    *    top-`ef` frontier. Every hop is a frontier⋈graph join
-    *    (bucket-pruned lookup at scale) whose (≤ ef)-row result
-    *    materializes via `localCheckpoint` — the connected-components
-    *    lineage-truncation discipline: each hop's plan references the
-    *    frontier twice, so un-truncated lineage doubles per hop
-    *    (observed as a 2^hops analysis blow-up). Fixed hop counts keep
-    *    the walk data-independent (the q166 in-plan lesson); `ef` and
-    *    `hops` are the recall dials. round6 cosines + id tie-breaks
-    *    make every step engine-reproducible. */
+    *    top-`ef` frontier. A single query walks on the DRIVER
+    *    ([[search]]): the upper layers (≈ N/16 nodes) are held there
+    *    once per index ([[heldLayers]]), and each layer-0 hop reads its
+    *    frontier's edges and its new neighbours' vectors with `id IN
+    *    (…)` literal reads — at most two small jobs per hop, never a
+    *    corpus scan. Scores are Spark's own `round(vec_cosine(vec, q),
+    *    6)` evaluated in-process ([[graft.functions.DriverEval]]), so
+    *    nulls, rounding and (cos desc, id asc) tie-breaks are the plan
+    *    form's. A query TABLE walks in Spark ([[searchBatch]]): every
+    *    hop is one frontier⋈graph join for all queries. Fixed hop
+    *    counts keep the walk data-independent (the q166 in-plan
+    *    lesson), so the SQL oracle unrolls it; `ef` and `hops` are the
+    *    recall dials. */
   final class HnswIndex(df: DataFrame, m: Int = 8, maxLevel: Int = 3,
       vecCol: String = "embedding", idCol: String = "vec_id",
       build: String = "broadcast", dim: Int = 64,
@@ -1441,8 +1446,8 @@ object Similarity {
     /** The most planes a fine seed-bucket table uses. */
     private val seedBits = 16
 
-    /** Greedy steps the walk takes on each upper layer. Upper layers
-      * checkpoint once per layer, so the in-layer plan references the
+    /** Greedy steps the walk takes on each upper layer. [[searchBatch]]
+      * checkpoints once per layer, so its in-layer plan references the
       * layer-entry frontier at most 2^hopsPerLayer = 4 times. */
     private val hopsPerLayer = 2
 
@@ -1744,25 +1749,133 @@ object Similarity {
         .select("layer", "id", "nbr", "cos"))
     }
 
-    /** Entry node: max level, smallest id (one bounded driver read of
-      * one row — the IVF probe-ranking cost class). */
-    lazy val entryId: Long =
-      levels.orderBy(desc("level"), col("id")).limit(1).head.getLong(0)
+    /** Member count at or under which an upper layer is held on the
+      * driver for the walk ([[heldLayers]]): the build's
+      * [[smallLayerCap]]. Lowered only by tests, to walk an over-cap
+      * layer through per-hop reads on a small corpus. */
+    @volatile private[ops] var heldLayerCap: Int = smallLayerCap
+
+    /** The upper layers the single-query walk holds on the driver. */
+    private[graft] final class HeldLayers(val from: Int,
+        rows: Array[(Long, Array[Float], Int)],
+        edgeRows: Array[(Int, Long, Long)]) {
+      /** Each held member's vectors (a repeated id keeps every row). */
+      val vecs: Map[Long, Seq[Array[Float]]] =
+        rows.groupBy(_._1).map { case (id, rs) => id -> rs.toSeq.map(_._2) }
+      /** Out-edges per (layer, id), for every layer ≥ `from`. */
+      val edges: Map[(Int, Long), Seq[Long]] = edgeRows
+        .groupBy(e => (e._1, e._2)).map { case (k, es) => k -> es.toSeq.map(_._3) }
+      /** The entry node (max level, smallest id), if any node is held. */
+      val entry: Option[Long] = rows.sortBy(r => (-r._3, r._1)).headOption.map(_._1)
+    }
+
+    /** The members (id, vec, level) and edges of every upper layer from
+      * `from` up, read once per index: level ≥ ℓ is monotone, so the
+      * lowest layer whose member set fits under [[heldLayerCap]] holds
+      * every higher one (≈ N/16 nodes from layer 1 — the md5 level
+      * rule). One bounded member read per layer tried (one in
+      * practice) and one bounded edge read — a layer's out-degree is
+      * at most `m`, so its symmetric edges are at most 2·m per member.
+      * A layer below `from`, or all of them when the edges overflow
+      * that bound, is read per hop like layer 0 (`from` = maxLevel + 1
+      * holds nothing). Serving forces this at engine build. */
+    private[graft] lazy val heldLayers: HeldLayers = {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val cap = heldLayerCap
+      val members = vecs.select(col("id").cast("long"),
+        col("vec").cast("array<float>"), levelExpr.as("level"))
+      val (from, rows) = (1 to maxLevel).iterator
+        .map(l => l -> members.filter(col("level") >= l)
+          .orderBy("id").limit(cap + 1)
+          .as[(Long, Array[Float], Int)].collect())
+        .find(_._2.length <= cap)
+        .getOrElse(maxLevel + 1 -> Array.empty[(Long, Array[Float], Int)])
+      val edgeCap = 2 * m * cap
+      val edges = if (from > maxLevel) Array.empty[(Int, Long, Long)]
+        else graph.filter(col("layer") >= from)
+          .select(col("layer").cast("int"), col("id").cast("long"),
+            col("nbr").cast("long"))
+          .orderBy("layer", "id", "nbr").limit(edgeCap + 1)
+          .as[(Int, Long, Long)].collect()
+      if (edges.length > edgeCap) new HeldLayers(maxLevel + 1, Array.empty, Array.empty)
+      else new HeldLayers(from, rows, edges)
+    }
+
+    /** Entry node: max level, smallest id — from the held upper layers,
+      * or one bounded one-row read when no node sits above level 0. */
+    lazy val entryId: Long = heldLayers.entry.getOrElse(
+      levels.orderBy(desc("level"), col("id")).limit(1).head.getLong(0))
+
+    /** The walk's score, `round(vec_cosine(vec, q), 6)`, as Spark
+      * evaluates it: null on a zero norm or a length mismatch, HALF_UP
+      * rounding. */
+    private lazy val walkScore = new DriverEval.VectorExpr(
+      df.sparkSession, Seq("vec", "q"), round(vecCosine(col("vec"), col("q")), 6))
+
+    /** Spark's (cos desc nulls last, id asc) on (id, cos) pairs. */
+    private def byRank(a: (Long, Any), b: (Long, Any)): Boolean =
+      DriverEval.before(a._2, a._1, b._2, b._1)
+
+    /** One query's walk state: the scores and layer-0 (or over-cap)
+      * neighbour lists read so far, so no id is read or scored twice. */
+    private final class Walk(q: Array[Float]) {
+      private val held = heldLayers
+      private val cos = scala.collection.mutable.HashMap.empty[Long, Any]
+      private val absent = scala.collection.mutable.HashSet.empty[Long]
+      private val read = scala.collection.mutable.HashMap.empty[(Int, Long), Seq[Long]]
+
+      /** (id, cos) for the distinct `ids` found in the vectors — the
+        * plan's join drops the rest — with a repeated id keeping its
+        * max cos, as its groupBy did. Held members score in-process;
+        * the others arrive by one `id IN (…)` read. */
+      def scored(ids: Seq[Long]): Seq[(Long, Any)] = {
+        val distinct = ids.distinct
+        val (local, remote) = distinct
+          .filterNot(i => cos.contains(i) || absent(i))
+          .partition(held.vecs.contains)
+        val rows = local.flatMap(i => held.vecs(i).map(i -> _)) ++
+          (if (remote.isEmpty) Nil
+           else vecs.filter(col("id").isin(remote: _*))
+             .select(col("id").cast("long"), col("vec").cast("array<float>"))
+             .collect().toSeq
+             .map(r => r.getLong(0) -> Option(r.getSeq[Float](1)).map(_.toArray).orNull))
+        rows.groupBy(_._1).foreach { case (i, rs) =>
+          cos(i) = rs.map(r => walkScore(r._2, q))
+            .reduce(DriverEval.max)
+        }
+        remote.foreach(i => if (!cos.contains(i)) absent += i)
+        distinct.flatMap(i => cos.get(i).map(i -> _))
+      }
+
+      /** Layer-`l` out-neighbours of `ids`: a held layer answers
+        * in-process, any other by one `id IN (…)` read of the edge
+        * table per call. */
+      def neighbours(l: Int, ids: Seq[Long]): Seq[Long] =
+        if (l >= held.from) ids.flatMap(i => held.edges.getOrElse((l, i), Nil))
+        else {
+          val need = ids.distinct.filterNot(i => read.contains((l, i)))
+          if (need.nonEmpty) {
+            val got = graph.filter(col("layer") === l && col("id").isin(need: _*))
+              .select(col("id").cast("long"), col("nbr").cast("long"))
+              .collect().groupBy(_.getLong(0))
+            need.foreach(i => read((l, i)) = got.get(i).fold(Seq.empty[Long])(
+              _.toSeq.map(_.getLong(1))))
+          }
+          ids.flatMap(i => read((l, i)))
+        }
+    }
 
     /** Beam-search top-k: returns (vec_id, cos) for the best `k` of the
-      * visited set. Each upper layer takes a fixed `hopsPerLayer` = 2
-      * greedy steps (classic HNSW iterates to a local optimum —
-      * data-dependent; a fixed count keeps the plan static and the
-      * oracle unrollable). Upper layers checkpoint once per layer, so
-      * the in-layer plan references the layer-entry frontier at most
-      * 2² = 4 times. */
+      * visited set as a local frame, walked on the driver. Each upper
+      * layer takes a fixed `hopsPerLayer` = 2 greedy steps (classic
+      * HNSW iterates to a local optimum — data-dependent; a fixed count
+      * keeps the walk static and the oracle unrollable). */
     def search(queryVec: Array[Float], k: Int, ef: Int = 16,
         hops: Int = 3): DataFrame = {
       require(k >= 1 && ef >= 1 && hops >= 1,
         s"bad search shape k=$k ef=$ef hops=$hops")
-      visitedPool(queryVec, ef, hops)
-        .orderBy(desc("cos"), col("id")).limit(k)
-        .select(col("id").as(idCol), col("cos"))
+      topK(walk(queryVec, ef, hops), k)
     }
 
     /** [[search]] over a graph with TOMBSTONED nodes (deletes that have
@@ -1774,81 +1887,59 @@ object Similarity {
       * semantics. Permanent removal is [[Similarity.repairHnswGraph]],
       * after which a plain [[search]] over the repaired graph (via
       * `prebuiltGraph`) serves with no per-query tombstone cost.
-      * `tombstones` carries this index's `idCol`. */
+      * `tombstones` carries this index's `idCol`; only its rows among
+      * the visited ids are read. */
     def searchTombstoned(queryVec: Array[Float], k: Int,
         tombstones: DataFrame, ef: Int = 16, hops: Int = 3): DataFrame = {
       require(k >= 1 && ef >= 1 && hops >= 1,
         s"bad search shape k=$k ef=$ef hops=$hops")
-      val t = tombstones.select(col(idCol).cast("long").as("id")).distinct()
-      visitedPool(queryVec, ef, hops)
-        .join(t, Seq("id"), "left_anti")
-        .orderBy(desc("cos"), col("id")).limit(k)
-        .select(col("id").as(idCol), col("cos"))
+      val visited = walk(queryVec, ef, hops)
+      val dead = if (visited.isEmpty) Set.empty[Long]
+        else tombstones.select(col(idCol).cast("long").as("id"))
+          .filter(col("id").isin(visited.map(_._1): _*))
+          .collect().map(_.getLong(0)).toSet
+      topK(visited.filterNot(v => dead(v._1)), k)
     }
 
-    /** The beam walk's visited set (id, cos) — shared verbatim by
-      * [[search]] and [[searchTombstoned]], which differ only in the
-      * final filter.
-      *
-      * Scoring is CANDIDATE-ONLY (r15 verdict ask #1): each hop joins
-      * its ≤ frontier·deg candidate ids against the member table and
-      * computes the cosine AFTER the join, so a hop's cost is
-      * O(candidates), never a full-corpus distance projection — the
-      * old form joined every hop against a corpus-wide scored frame,
-      * re-running the cosine over the whole corpus once per hop. Same
-      * rows, same round-6 cosines, same tie-breaks (only the point at
-      * which the cosine expression evaluates moved). Upper layers
-      * checkpoint once per LAYER, not per hop: the in-layer plan
-      * references the layer-entry frontier ≤ 2^hopsPerLayer = 4 times
-      * (bounded — the lineage-doubling discipline holds), and the walk
-      * pays maxLevel jobs instead of maxLevel·hopsPerLayer. */
-    private def visitedPool(queryVec: Array[Float], ef: Int,
-        hops: Int): DataFrame = {
-      val g = graph
-      val qv = typedlit(queryVec)
-      def scoreIds(ids: DataFrame): DataFrame = ids
-        .join(vecs, "id")
-        .withColumn("cos", round(vecCosine(col("vec"), qv), 6))
-        .select("id", "cos")
-      // greedy descent: fixed hops per upper layer, statically
-      // maxLevel..1 (a layer above the entry's level has no edges for
-      // it — no-op), so the walk unrolls identically in the SQL oracle
-      var cur = scoreIds(vecs.select("id").filter(col("id") === entryId))
-        .localCheckpoint()
-      // No distinct() on candidate ids anywhere in the walk (each was a
-      // full exchange — an AQE stage job per hop): duplicate candidate
-      // rows cannot change a (cos desc, id) argmax, and the layer-0
-      // pool's groupBy(id) dedups exactly where dedup is semantic. The
-      // per-hop plans are then broadcast-join-only — no shuffle at all
-      // on the upper descent.
-      for (l <- maxLevel to 1 by -1) {
-        for (_ <- 1 to hopsPerLayer) {
-          val nbrs = cur.select("id")
-            .join(g.filter(col("layer") === l), "id")
-            .select(col("nbr").as("id"))
-          cur = scoreIds(cur.select("id").unionByName(nbrs))
-            .orderBy(desc("cos"), col("id")).limit(1)
-        }
-        cur = cur.localCheckpoint()
+    /** The best `k` of `visited` by (cos desc, id) as a local
+      * (idCol, cos) frame. */
+    private def topK(visited: Seq[(Long, Any)], k: Int): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+      val rows = visited.sortWith(byRank).take(k)
+        .map { case (id, c) => Row(id, c) }
+      df.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+        vecs.schema("id").copy(name = idCol), StructField("cos", DoubleType))))
+    }
+
+    /** The beam walk's visited set (id, cos) — shared by [[search]]
+      * and [[searchTombstoned]], which differ only in the final
+      * filter. Greedy descent: `hopsPerLayer` top-1 steps per upper
+      * layer, statically maxLevel..1 (a layer above the entry's level
+      * has no edges for it — a no-op), so the walk unrolls identically
+      * in the SQL oracle. Then `hops` layer-0 beam rounds: each pool is
+      * the frontier plus its neighbours, the next frontier its top
+      * `ef`; the visited set is the union of the pools. Held upper
+      * layers cost no job; each layer-0 hop costs at most two reads
+      * (the frontier's edges, the new neighbours' vectors). */
+    private def walk(queryVec: Array[Float], ef: Int,
+        hops: Int): Seq[(Long, Any)] = {
+      val w = new Walk(queryVec)
+      var cur = w.scored(Seq(entryId))
+      for (l <- maxLevel to 1 by -1; _ <- 1 to hopsPerLayer) {
+        val ids = cur.map(_._1)
+        cur = w.scored(ids ++ w.neighbours(l, ids)).sortWith(byRank).take(1)
       }
-      // layer-0 beam: frontier caps at ef; the visited set is the
-      // union of the (already-checkpointed) per-hop pools, deduped
-      // ONCE at the end — per-hop visited maintenance would add a
-      // checkpoint job per hop for no semantic difference
+      val visited = scala.collection.mutable.LinkedHashMap(cur: _*)
       var frontier = cur
-      val pools = scala.collection.mutable.ArrayBuffer(cur)
       for (_ <- 1 to hops) {
-        val nbrs = frontier.select("id")
-          .join(g.filter(col("layer") === 0), "id")
-          .select(col("nbr").as("id"))
-        val pool = frontier.unionByName(scoreIds(nbrs))
-          .groupBy("id").agg(max("cos").as("cos"))
-          .localCheckpoint()
-        pools += pool
-        frontier = pool.orderBy(desc("cos"), col("id")).limit(ef)
+        val ids = frontier.map(_._1)
+        val pool = w.scored(ids ++ w.neighbours(0, ids))
+        visited ++= pool
+        frontier = pool.sortWith(byRank).take(ef)
       }
-      pools.reduce(_ unionByName _)
-        .groupBy("id").agg(max("cos").as("cos"))
+      visited.toSeq
     }
 
     /** BATCHED multi-query beam search — [[search]] semantics for a
@@ -1864,8 +1955,8 @@ object Similarity {
       * plan instead of a LIMIT. Hop/ef/descent parameters and
       * tie-breaks replicate [[search]] exactly, so a batch row equals
       * the single-query walk for the same vector (HnswSpec asserts
-      * it). As in [[search]], the in-layer plan references the
-      * layer-entry frontier at most 2² = 4 times. Returns
+      * it). The in-layer plan references the layer-entry frontier at
+      * most 2² = 4 times. Returns
       * (queryIdCol, idCol, cos), top-k per query. */
     def searchBatch(queries: DataFrame, k: Int, ef: Int = 16,
         hops: Int = 3,
@@ -1887,8 +1978,9 @@ object Similarity {
       // one checkpoint per LAYER (was per hop): the in-layer plan
       // references the layer-entry frontier ≤ 2^hopsPerLayer = 4 times
       // — and the descent pays maxLevel jobs, not
-      // maxLevel·hopsPerLayer (the visitedPool discipline)
-      // no distinct() on candidate ids (the visitedPool rule): duplicate
+      // maxLevel·hopsPerLayer
+      // no distinct() on candidate ids (each was a full exchange — an
+      // AQE stage job per hop): duplicate
       // (qid, id) candidate rows cannot change a per-qid top-1, and the
       // layer-0 pool's groupBy(qid, id) dedups where dedup is semantic
       for (l <- maxLevel to 1 by -1) {

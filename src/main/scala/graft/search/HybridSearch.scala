@@ -3,13 +3,12 @@ package graft.search
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.embed.{Embedder, HashingEmbedder}
+import graft.functions.DriverEval.before
 import graft.functions.GraftFunctions._
 import graft.text.Bm25
 
@@ -573,28 +572,6 @@ object HybridSearch {
       StructField("dense_score", DoubleType), StructField("dense_rank", IntegerType),
       StructField("bm25_score", DoubleType), StructField("bm25_rank", IntegerType),
       StructField("rrf_score", DoubleType, nullable = false))))
-  }
-
-  /** Whether (score a, id a) sorts before (score b, id b) under Spark's
-    * `desc(score), asc(id)`: score descending with nulls last, then id
-    * ascending with nulls first. */
-  private def before(scoreA: Any, idA: Any, scoreB: Any, idB: Any): Boolean = {
-    val c = sqlCompare(scoreB, scoreA)
-    if (c != 0) c < 0 else sqlCompare(idA, idB) < 0
-  }
-
-  /** Spark's ascending sort order on one collected value, nulls first:
-    * strings by their UTF-8 bytes, doubles with -0.0 = 0.0 and NaN
-    * largest, other ids by their natural order — so a driver-side rank
-    * equals a window's row_number. */
-  private def sqlCompare(a: Any, b: Any): Int = (a, b) match {
-    case (null, null) => 0
-    case (null, _) => -1
-    case (_, null) => 1
-    case (x: String, y: String) =>
-      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
-    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
   }
 
   /** Batched dense branch: exact cosine prefetch-n per query ROW — the

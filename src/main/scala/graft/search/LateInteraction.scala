@@ -1,9 +1,13 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.embed.Embedder
+import graft.functions.DriverEval
 import graft.functions.GraftFunctions._
 
 /** LATE-INTERACTION reranking — the ColBERT MaxSim family (Khattab &
@@ -21,10 +25,12 @@ import graft.functions.GraftFunctions._
   * corpus would be |corpus|·|tokens|·dim floats, so only the k'-sized
   * candidate slice ever embeds.
   *
-  * Scale shape: candidates explode to their DISTINCT tokens once; the
-  * (token → vector) vocabulary embeds once per distinct token (vocab-
-  * sized, never positions-sized) and the query's few token vectors
-  * broadcast; the (vocab × query-token) cosine table is vocab-sized;
+  * Scale shape of the batched form ([[LateInteraction.maxsimRerankAll]];
+  * a single request's slice scores on the driver): candidates explode
+  * to their DISTINCT tokens once; the (token → vector) vocabulary
+  * embeds once per distinct token (vocab-sized, never positions-sized)
+  * and the query's few token vectors broadcast; the (vocab ×
+  * query-token) cosine table is vocab-sized;
   * per-doc scoring is two grouped aggregates with map-side combine
   * (max per (doc, query-token), then an exact integer sum). Cosines
   * micro-fix to ×10⁶ integers BEFORE the max/sum, so both engines
@@ -39,7 +45,17 @@ object LateInteraction {
     * doc tokens collapse (max is idempotent); duplicate query terms
     * collapse (a repeated term adds no information, only weight — the
     * published MaxSim dedupes neither, but deterministic weights beat
-    * accidental ones; pass pre-weighted terms if repetition is meant). */
+    * accidental ones; pass pre-weighted terms if repetition is meant).
+    *
+    * The candidate slice is request-scale (a serving prefetch), so it
+    * is collected and scored on the driver: each distinct non-empty
+    * token embeds once, and every (doc token, query token) pair takes
+    * [[maxsimRerankAll]]'s `round(vec_cosine · 10⁶)` long, evaluated by
+    * Spark's own expression in-process ([[graft.functions.DriverEval]])
+    * — a null cosine is skipped by the max and the sum, as the
+    * aggregates skip it. A repeated id pools its rows' tokens, as the
+    * groupBy did; a doc with no non-empty token drops out. Returns a
+    * local frame in (maxsim_u6 desc, id) order. */
   def maxsimRerank(candidates: DataFrame, queryTerms: Seq[String],
       embedder: Embedder, k: Int, idCol: String = "id",
       tokensCol: String = "tokens"): DataFrame = {
@@ -47,30 +63,28 @@ object LateInteraction {
     val terms = queryTerms.distinct.filter(_.nonEmpty)
     require(terms.nonEmpty, "need at least one non-empty query term")
     val spark = candidates.sparkSession
-    import spark.implicits._
-    val emb = embedder
-    val embUdf = udf((t: String) => emb.embedBatch(Seq(t)).head)
-    val qdf = terms.map(t => (t, emb.embedBatch(Seq(t)).head.toSeq))
-      .toDF("qtok", "qvec")
-    val docToks = candidates.select(col(idCol),
-        explode(array_distinct(col(tokensCol))).as("dtok"))
-      // an empty token (double-space splits) would embed to the zero
-      // vector and make the cosine undefined — it carries no signal
-      .filter(col("dtok") =!= "")
-    // vocabulary of the candidate slice: each distinct token embeds ONCE
-    val vocab = docToks.select("dtok").distinct()
-      .withColumn("dvec", embUdf(col("dtok")))
-    val pairCos = vocab.crossJoin(broadcast(qdf))
-      .select(col("dtok"), col("qtok"),
-        round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0)
-          .cast("long").as("cos_u6"))
-    docToks.join(pairCos, Seq("dtok"))
-      .groupBy(col(idCol), col("qtok"))
-      .agg(max("cos_u6").as("best_u6"))
-      .groupBy(col(idCol))
-      .agg(sum("best_u6").as("maxsim_u6"))
-      .orderBy(desc("maxsim_u6"), col(idCol))
-      .limit(k)
+    val slice = candidates.select(col(idCol), col(tokensCol)).collect()
+    // an empty token (double-space splits) would embed to the zero
+    // vector and make the cosine undefined — it carries no signal
+    val docToks = slice.groupBy(_.get(0)).map { case (id, rs) =>
+      id -> rs.toSeq.flatMap(r => Option(r.getSeq[String](1)).getOrElse(Nil))
+        .filter(t => t != null && t.nonEmpty).distinct
+    }.filter(_._2.nonEmpty)
+    def embed(t: String): Array[Float] = embedder.embedBatch(Seq(t)).head
+    val qvecs = terms.map(embed)
+    val cosU6 = new DriverEval.VectorExpr(spark, Seq("dvec", "qvec"),
+      round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0).cast("long"))
+    val pairU6 = docToks.values.flatten.toSeq.distinct
+      .map(t => t -> { val dv = embed(t); qvecs.map(cosU6(dv, _)) }).toMap
+    val scored = docToks.toSeq.map { case (id, toks) =>
+      val best = qvecs.indices.map(qi => toks.map(pairU6(_)(qi)).reduce(DriverEval.max))
+      id -> best.filter(_ != null).map(_.asInstanceOf[Long])
+        .reduceOption(_ + _).map(Long.box).orNull
+    }
+    val top = scored.sortWith((a, b) => DriverEval.before(a._2, a._1, b._2, b._1))
+      .take(k).map { case (id, s) => Row(id, s) }
+    spark.createDataFrame(top.asJava, StructType(Seq(
+      candidates.schema(idCol), StructField("maxsim_u6", LongType))))
   }
 
   /** BATCHED [[maxsimRerank]] — the serving-matrix rule applied to the

@@ -102,6 +102,8 @@ object ServeMain {
       val hnsw = graft.search.HybridSearch.buildHnswServing(index,
         prebuiltGraph =
           Some(persisted(spark.read.parquet(s"$store/hnsw_graph"))))
+      // the walk's upper layers, held on the driver for every request
+      hnsw.hnsw.heldLayers
       System.err.println(s"[serve] warm start from $store ($n points)")
       HttpApi.Engine(spark, index, stats, corpusSize = n,
         avgDocLen = avgLen, indexPath = indexPath,
@@ -138,6 +140,7 @@ object ServeMain {
       ivf.assigned.persist().count()
       val hnsw = graft.search.HybridSearch.buildHnswServing(index)
       hnsw.hnsw.graph.count()
+      hnsw.hnsw.heldLayers
 
       // persist the matrix for the next --warm start (marker LAST: a
       // crash mid-write leaves no marker, so the next warm falls back

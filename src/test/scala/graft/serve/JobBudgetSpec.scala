@@ -63,26 +63,37 @@ class JobBudgetSpec extends AnyFunSuite with SparkTestBase {
     assert(n <= 7, s"Serve.query ran $n jobs")
   }
 
-  test("Serve.queryReranked runs the search once: at most 13 jobs") {
+  test("Serve.queryHnsw walks the graph on the driver: at most 13 jobs") {
+    def hnsw(q: String) = Serve.queryHnsw(engine.index, engine.hnsw.get,
+      engine.docStats, engine.corpusSize, engine.avgDocLen, q, k = 3,
+      postings = engine.postings, blockBounds = engine.blockBounds)
+    hnsw("court filing review")  // first call plans, untimed
+    val (resp, n) = jobs(hnsw("the court reviewed the filing"))
+    assert(resp.results.nonEmpty)
+    info(s"$n jobs")
+    assert(n <= 13, s"Serve.queryHnsw ran $n jobs")
+  }
+
+  test("Serve.queryReranked runs the search once: at most 7 jobs") {
     val (resp, n) = jobs(Serve.queryReranked(engine.index, engine.docStats,
       engine.corpusSize, engine.avgDocLen, "the court reviewed the filing",
       k = 3, postings = engine.postings, blockBounds = engine.blockBounds))
     assert(resp.results.nonEmpty)
     info(s"$n jobs")
-    assert(n <= 13, s"Serve.queryReranked ran $n jobs")
+    assert(n <= 7, s"Serve.queryReranked ran $n jobs")
   }
 
-  test("Serve.queryPhrase (positional store) runs at most 9 jobs") {
+  test("Serve.queryPhrase (positional store) runs at most 8 jobs") {
     Serve.queryPhrase(engine.index, engine.docStats, "order order",
       k = 3, store = engine.posStore)  // first call plans, untimed
     val (resp, n) = jobs(Serve.queryPhrase(engine.index, engine.docStats,
       "court filing contract", k = 3, store = engine.posStore))
     assert(resp.results.nonEmpty)
     info(s"$n jobs")
-    assert(n <= 9, s"Serve.queryPhrase ran $n jobs")
+    assert(n <= 8, s"Serve.queryPhrase ran $n jobs")
   }
 
-  test("Serve.queryProximity (positional store) runs at most 9 jobs") {
+  test("Serve.queryProximity (positional store) runs at most 8 jobs") {
     Serve.queryProximity(engine.index, engine.docStats,
       Seq("appeal", "order"), 2, k = 3, store = engine.posStore)
     val (resp, n) = jobs(Serve.queryProximity(engine.index,
@@ -90,7 +101,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkTestBase {
       store = engine.posStore))
     assert(resp.results.nonEmpty)
     info(s"$n jobs")
-    assert(n <= 9, s"Serve.queryProximity ran $n jobs")
+    assert(n <= 8, s"Serve.queryProximity ran $n jobs")
   }
 
   test("maxScorePrune is two driver reads: at most 2 jobs") {
