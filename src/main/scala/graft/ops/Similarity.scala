@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.functions.DriverEval
 import graft.functions.GraftFunctions.vecCosine
@@ -960,7 +963,7 @@ object Similarity {
 
     /** BATCHED multi-query residual ADC — [[query]] for a whole query
       * TABLE in one plan (the serving-matrix rule applied to the PQ
-      * tier, like HnswIndex.searchBatch for the graph tier): probe
+      * tier): probe
       * cells assign map-side per query ([[IvfIndex.probeAssign]]), each
       * (query, cell) pair carries its per-cell residual LUT as a
       * flattened m·k array (|queries|·nProbe rows — broadcast-tiny),
@@ -1304,19 +1307,20 @@ object Similarity {
     *    into it.
     *  - SEARCH: the fixed-hop beam walk — greedy descent through each
     *    upper layer, then `hops` beam rounds at layer 0 keeping a
-    *    top-`ef` frontier. A single query walks on the DRIVER
-    *    ([[search]]): the upper layers (≈ N/16 nodes) are held there
-    *    once per index ([[heldLayers]]), and each layer-0 hop reads its
-    *    frontier's edges and its new neighbours' vectors with `id IN
-    *    (…)` literal reads — at most two small jobs per hop, never a
-    *    corpus scan. Scores are Spark's own `round(vec_cosine(vec, q),
-    *    6)` evaluated in-process ([[graft.functions.DriverEval]]), so
-    *    nulls, rounding and (cos desc, id asc) tie-breaks are the plan
-    *    form's. A query TABLE walks in Spark ([[searchBatch]]): every
-    *    hop is one frontier⋈graph join for all queries. Fixed hop
-    *    counts keep the walk data-independent (the q166 in-plan
-    *    lesson), so the SQL oracle unrolls it; `ef` and `hops` are the
-    *    recall dials. */
+    *    top-`ef` frontier. The walk runs on the DRIVER: the upper
+    *    layers (≈ N/16 nodes) are held there once per index
+    *    ([[heldLayers]]), and each layer-0 hop reads its frontier's
+    *    edges and its new neighbours' vectors with `id IN (…)` literal
+    *    reads — at most two small jobs per hop, never a corpus scan. A
+    *    query TABLE ([[searchBatch]]) walks in lockstep, so those two
+    *    reads per hop serve the union of its frontiers; a single query
+    *    ([[search]]) is a batch of one. Scores are Spark's own
+    *    `round(vec_cosine(vec, q), 6)` evaluated in-process
+    *    ([[graft.functions.DriverEval]]), so nulls, rounding and (cos
+    *    desc, id asc) tie-breaks are the plan form's. Fixed hop counts
+    *    keep the walk data-independent (the q166 in-plan lesson), so
+    *    the SQL oracle unrolls it; `ef` and `hops` are the recall
+    *    dials. */
   final class HnswIndex(df: DataFrame, m: Int = 8, maxLevel: Int = 3,
       vecCol: String = "embedding", idCol: String = "vec_id",
       build: String = "broadcast", dim: Int = 64,
@@ -1326,7 +1330,7 @@ object Similarity {
       s"build must be 'broadcast' or 'nndescent', got '$build'")
     import org.apache.spark.sql.expressions.Window
 
-    private val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    private[ops] val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
 
     /** The trailing-zero-nibble level rule as a column — exact
       * integers, identical for stored and appended nodes. */
@@ -1446,10 +1450,8 @@ object Similarity {
     /** The most planes a fine seed-bucket table uses. */
     private val seedBits = 16
 
-    /** Greedy steps the walk takes on each upper layer. [[searchBatch]]
-      * checkpoints once per layer, so its in-layer plan references the
-      * layer-entry frontier at most 2^hopsPerLayer = 4 times. */
-    private val hopsPerLayer = 2
+    /** Greedy steps the walk takes on each upper layer. */
+    private[ops] val hopsPerLayer = 2
 
     /** Seed-bucket width for a layer of `n` members: ≈64 members per
       * fine bucket, `seedBits` planes at most, 0 (one ring bucket —
@@ -1755,7 +1757,7 @@ object Similarity {
       * layer through per-hop reads on a small corpus. */
     @volatile private[ops] var heldLayerCap: Int = smallLayerCap
 
-    /** The upper layers the single-query walk holds on the driver. */
+    /** The upper layers the walk holds on the driver. */
     private[graft] final class HeldLayers(val from: Int,
         rows: Array[(Long, Array[Float], Int)],
         edgeRows: Array[(Int, Long, Long)]) {
@@ -1817,44 +1819,45 @@ object Similarity {
     private def byRank(a: (Long, Any), b: (Long, Any)): Boolean =
       DriverEval.before(a._2, a._1, b._2, b._1)
 
-    /** One query's walk state: the scores and layer-0 (or over-cap)
-      * neighbour lists read so far, so no id is read or scored twice. */
-    private final class Walk(q: Array[Float]) {
+    /** A batch's walk state, the batch walked in lockstep: the vectors
+      * and layer-0 (or over-cap) neighbour lists read so far and the
+      * ids found absent are shared, so no id is read twice across the
+      * batch; each query keeps its own cosines. */
+    private final class Walk(qs: IndexedSeq[Array[Float]]) {
+      import scala.collection.mutable
       private val held = heldLayers
-      private val cos = scala.collection.mutable.HashMap.empty[Long, Any]
-      private val absent = scala.collection.mutable.HashSet.empty[Long]
-      private val read = scala.collection.mutable.HashMap.empty[(Int, Long), Seq[Long]]
+      private val fetched = mutable.HashMap.empty[Long, Seq[Array[Float]]]
+      private val absent = mutable.HashSet.empty[Long]
+      private val read = mutable.HashMap.empty[(Int, Long), Seq[Long]]
+      private val cos = qs.map(_ => mutable.HashMap.empty[Long, Any])
 
-      /** (id, cos) for the distinct `ids` found in the vectors — the
-        * plan's join drops the rest — with a repeated id keeping its
-        * max cos, as its groupBy did. Held members score in-process;
-        * the others arrive by one `id IN (…)` read. */
-      def scored(ids: Seq[Long]): Seq[(Long, Any)] = {
-        val distinct = ids.distinct
-        val (local, remote) = distinct
-          .filterNot(i => cos.contains(i) || absent(i))
-          .partition(held.vecs.contains)
-        val rows = local.flatMap(i => held.vecs(i).map(i -> _)) ++
-          (if (remote.isEmpty) Nil
-           else vecs.filter(col("id").isin(remote: _*))
-             .select(col("id").cast("long"), col("vec").cast("array<float>"))
-             .collect().toSeq
-             .map(r => r.getLong(0) -> Option(r.getSeq[Float](1)).map(_.toArray).orNull))
-        rows.groupBy(_._1).foreach { case (i, rs) =>
-          cos(i) = rs.map(r => walkScore(r._2, q))
-            .reduce(DriverEval.max)
+      /** Per query, (id, cos) for its distinct `ids` found in the
+        * vectors — the plan's join drops the rest — with a repeated id
+        * keeping its max cos, as its groupBy did. Held members score
+        * in-process; the batch's other unread ids arrive by one
+        * `id IN (…)` read. */
+      def scored(ids: IndexedSeq[Seq[Long]]): IndexedSeq[Seq[(Long, Any)]] = {
+        val remote = ids.flatten.distinct
+          .filterNot(i => held.vecs.contains(i) || fetched.contains(i) || absent(i))
+        if (remote.nonEmpty) {
+          val got = vecs.filter(col("id").isin(remote: _*))
+            .select(col("id").cast("long"), col("vec").cast("array<float>"))
+            .collect().groupBy(_.getLong(0))
+          remote.foreach(i => got.get(i).fold[Unit](absent += i)(rs =>
+            fetched(i) = rs.toSeq.map(r => Option(r.getSeq[Float](1)).map(_.toArray).orNull)))
         }
-        remote.foreach(i => if (!cos.contains(i)) absent += i)
-        distinct.flatMap(i => cos.get(i).map(i -> _))
+        ids.indices.map(q => ids(q).distinct.flatMap(i =>
+          held.vecs.get(i).orElse(fetched.get(i)).map(vs => i -> cos(q).getOrElseUpdate(i,
+            vs.map(walkScore(_, qs(q))).reduce(DriverEval.max)))))
       }
 
-      /** Layer-`l` out-neighbours of `ids`: a held layer answers
-        * in-process, any other by one `id IN (…)` read of the edge
-        * table per call. */
-      def neighbours(l: Int, ids: Seq[Long]): Seq[Long] =
-        if (l >= held.from) ids.flatMap(i => held.edges.getOrElse((l, i), Nil))
+      /** Per query, the layer-`l` out-neighbours of its `ids`: a held
+        * layer answers in-process, any other by one `id IN (…)` read of
+        * the edge table for the batch's unread ids. */
+      def neighbours(l: Int, ids: IndexedSeq[Seq[Long]]): IndexedSeq[Seq[Long]] =
+        if (l >= held.from) ids.map(_.flatMap(i => held.edges.getOrElse((l, i), Nil)))
         else {
-          val need = ids.distinct.filterNot(i => read.contains((l, i)))
+          val need = ids.flatten.distinct.filterNot(i => read.contains((l, i)))
           if (need.nonEmpty) {
             val got = graph.filter(col("layer") === l && col("id").isin(need: _*))
               .select(col("id").cast("long"), col("nbr").cast("long"))
@@ -1862,7 +1865,7 @@ object Similarity {
             need.foreach(i => read((l, i)) = got.get(i).fold(Seq.empty[Long])(
               _.toSeq.map(_.getLong(1))))
           }
-          ids.flatMap(i => read((l, i)))
+          ids.map(_.flatMap(i => read((l, i))))
         }
     }
 
@@ -1872,11 +1875,7 @@ object Similarity {
       * HNSW iterates to a local optimum — data-dependent; a fixed count
       * keeps the walk static and the oracle unrollable). */
     def search(queryVec: Array[Float], k: Int, ef: Int = 16,
-        hops: Int = 3): DataFrame = {
-      require(k >= 1 && ef >= 1 && hops >= 1,
-        s"bad search shape k=$k ef=$ef hops=$hops")
-      topK(walk(queryVec, ef, hops), k)
-    }
+        hops: Int = 3): DataFrame = searchOne(queryVec, k, ef, hops, None)
 
     /** [[search]] over a graph with TOMBSTONED nodes (deletes that have
       * not been repaired out of the edge table yet — the
@@ -1890,136 +1889,93 @@ object Similarity {
       * `tombstones` carries this index's `idCol`; only its rows among
       * the visited ids are read. */
     def searchTombstoned(queryVec: Array[Float], k: Int,
-        tombstones: DataFrame, ef: Int = 16, hops: Int = 3): DataFrame = {
-      require(k >= 1 && ef >= 1 && hops >= 1,
-        s"bad search shape k=$k ef=$ef hops=$hops")
-      val visited = walk(queryVec, ef, hops)
-      val dead = if (visited.isEmpty) Set.empty[Long]
-        else tombstones.select(col(idCol).cast("long").as("id"))
-          .filter(col("id").isin(visited.map(_._1): _*))
-          .collect().map(_.getLong(0)).toSet
-      topK(visited.filterNot(v => dead(v._1)), k)
+        tombstones: DataFrame, ef: Int = 16, hops: Int = 3): DataFrame =
+      searchOne(queryVec, k, ef, hops, Some(tombstones))
+
+    /** One query's top-k as a batch of one, a local (idCol, cos) frame. */
+    private def searchOne(queryVec: Array[Float], k: Int, ef: Int, hops: Int,
+        tombstones: Option[DataFrame]): DataFrame = {
+      requireShape(k, ef, hops)
+      hitsFrame(topKAll(IndexedSeq(queryVec), k, ef, hops, tombstones).head
+        .map { case (id, c) => Row(id, c) })
     }
 
-    /** The best `k` of `visited` by (cos desc, id) as a local
-      * (idCol, cos) frame. */
-    private def topK(visited: Seq[(Long, Any)], k: Int): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-      val rows = visited.sortWith(byRank).take(k)
-        .map { case (id, c) => Row(id, c) }
-      df.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
-        vecs.schema("id").copy(name = idCol), StructField("cos", DoubleType))))
-    }
-
-    /** The beam walk's visited set (id, cos) — shared by [[search]]
-      * and [[searchTombstoned]], which differ only in the final
-      * filter. Greedy descent: `hopsPerLayer` top-1 steps per upper
-      * layer, statically maxLevel..1 (a layer above the entry's level
-      * has no edges for it — a no-op), so the walk unrolls identically
-      * in the SQL oracle. Then `hops` layer-0 beam rounds: each pool is
-      * the frontier plus its neighbours, the next frontier its top
-      * `ef`; the visited set is the union of the pools. Held upper
-      * layers cost no job; each layer-0 hop costs at most two reads
-      * (the frontier's edges, the new neighbours' vectors). */
-    private def walk(queryVec: Array[Float], ef: Int,
-        hops: Int): Seq[(Long, Any)] = {
-      val w = new Walk(queryVec)
-      var cur = w.scored(Seq(entryId))
-      for (l <- maxLevel to 1 by -1; _ <- 1 to hopsPerLayer) {
-        val ids = cur.map(_._1)
-        cur = w.scored(ids ++ w.neighbours(l, ids)).sortWith(byRank).take(1)
-      }
-      val visited = scala.collection.mutable.LinkedHashMap(cur: _*)
-      var frontier = cur
-      for (_ <- 1 to hops) {
-        val ids = frontier.map(_._1)
-        val pool = w.scored(ids ++ w.neighbours(0, ids))
-        visited ++= pool
-        frontier = pool.sortWith(byRank).take(ef)
-      }
-      visited.toSeq
-    }
-
-    /** BATCHED multi-query beam search — [[search]] semantics for a
-      * whole query TABLE in one plan (the r10 judge ask: the serving
-      * tier's batched path previously walked the graph only one query
-      * at a time): every hop is ONE frontier⋈graph join keyed by
-      * (query_id, id), so a thousand queries pay the same number of
-      * Spark jobs as one, and the per-hop exchange carries ≤
-      * |queries|·ef frontier rows — never the corpus. The query table
-      * rides a broadcast into the scoring join (serving-batch-sized by
-      * contract, the denseTopKAll discipline); per-query top-1/top-ef
-      * pruning runs through the bounded-heap [[graft.plans.TopK.perKey]]
-      * plan instead of a LIMIT. Hop/ef/descent parameters and
-      * tie-breaks replicate [[search]] exactly, so a batch row equals
-      * the single-query walk for the same vector (HnswSpec asserts
-      * it). The in-layer plan references the layer-entry frontier at
-      * most 2² = 4 times. Returns
-      * (queryIdCol, idCol, cos), top-k per query. */
+    /** BATCHED [[search]] / [[searchTombstoned]]: the query table
+      * (queryIdCol, queryVecCol) is collected — serving-batch-sized by
+      * contract — and its queries walk the graph on the driver in
+      * lockstep, so every hop makes one edge read and one vector read
+      * for the union of the batch's frontiers, and `tombstones` is read
+      * once among the union of the visited ids. Each query's rows are
+      * exactly its single walk's (OpsSpec and DriverKernelSpec assert
+      * it). Returns a local (queryIdCol, idCol, cos) frame, top-k per
+      * query in (cos desc, id) order, queries in table order. */
     def searchBatch(queries: DataFrame, k: Int, ef: Int = 16,
         hops: Int = 3,
         queryIdCol: String = "query_id",
         queryVecCol: String = "qv",
         tombstones: Option[DataFrame] = None): DataFrame = {
+      requireShape(k, ef, hops)
+      val qs = queries.select(col(queryIdCol),
+        col(queryVecCol).cast("array<float>")).collect()
+      val hits = topKAll(qs.map(r =>
+        Option(r.getSeq[Float](1)).map(_.toArray).orNull).toIndexedSeq,
+        k, ef, hops, tombstones)
+      hitsFrame(qs.indices.flatMap(q =>
+        hits(q).map { case (id, c) => Row(qs(q).get(0), id, c) }),
+        queries.schema(queryIdCol))
+    }
+
+    private def requireShape(k: Int, ef: Int, hops: Int): Unit =
       require(k >= 1 && ef >= 1 && hops >= 1,
         s"bad search shape k=$k ef=$ef hops=$hops")
-      val g = graph
-      val qs = queries.select(col(queryIdCol).as("qid"),
-        col(queryVecCol).as("__qv")).localCheckpoint()
-      def scoreOf(cand: DataFrame): DataFrame = cand
-        .join(vecs, "id")
-        .join(broadcast(qs), "qid")
-        .withColumn("cos", round(vecCosine(col("vec"), col("__qv")), 6))
-        .select("qid", "id", "cos")
-      var cur = scoreOf(qs.select(col("qid"), lit(entryId).as("id")))
-        .localCheckpoint()
-      // one checkpoint per LAYER (was per hop): the in-layer plan
-      // references the layer-entry frontier ≤ 2^hopsPerLayer = 4 times
-      // — and the descent pays maxLevel jobs, not
-      // maxLevel·hopsPerLayer
-      // no distinct() on candidate ids (each was a full exchange — an
-      // AQE stage job per hop): duplicate
-      // (qid, id) candidate rows cannot change a per-qid top-1, and the
-      // layer-0 pool's groupBy(qid, id) dedups where dedup is semantic
-      for (l <- maxLevel to 1 by -1) {
-        for (_ <- 1 to hopsPerLayer) {
-          val nbrs = cur.select("qid", "id")
-            .join(g.filter(col("layer") === l), "id")
-            .select(col("qid"), col("nbr").as("id"))
-          val pool = cur.select("qid", "id").unionByName(nbrs)
-          cur = graft.plans.TopK.perKey(scoreOf(pool), Seq("qid"),
-            Seq(("cos", false), ("id", true)), 1)
-        }
-        cur = cur.localCheckpoint()
+
+    /** Each query's best `k` visited (id, cos) by (cos desc, id), the
+      * tombstoned ids filtered out: one read of `tombstones` among the
+      * union of the visited ids. */
+    private def topKAll(qs: IndexedSeq[Array[Float]], k: Int, ef: Int,
+        hops: Int, tombstones: Option[DataFrame]): IndexedSeq[Seq[(Long, Any)]] = {
+      val visited = walk(qs, ef, hops)
+      val ids = visited.flatMap(_.map(_._1)).distinct
+      val dead = tombstones.filter(_ => ids.nonEmpty).fold(Set.empty[Long])(
+        _.select(col(idCol).cast("long").as("id"))
+          .filter(col("id").isin(ids: _*))
+          .collect().map(_.getLong(0)).toSet)
+      visited.map(_.filterNot(v => dead(v._1)).sortWith(byRank).take(k))
+    }
+
+    /** Hit rows as a local (`lead`…, idCol, cos) frame. */
+    private def hitsFrame(rows: Seq[Row], lead: StructField*): DataFrame =
+      df.sparkSession.createDataFrame(rows.asJava, StructType(lead ++ Seq(
+        vecs.schema("id").copy(name = idCol), StructField("cos", DoubleType))))
+
+    /** The beam walk's visited sets (id, cos), one per query of `qs`,
+      * walked in lockstep. Greedy descent: `hopsPerLayer` top-1 steps
+      * per upper layer, statically maxLevel..1 (a layer above the
+      * entry's level has no edges for it — a no-op), so the walk
+      * unrolls identically in the SQL oracle. Then `hops` layer-0 beam
+      * rounds: each pool is the frontier plus its neighbours, the next
+      * frontier its top `ef`; the visited set is the union of the
+      * pools. Held upper layers cost no job; each layer-0 hop costs at
+      * most two reads for the whole batch (the frontiers' edges, the
+      * new neighbours' vectors). */
+    private def walk(qs: IndexedSeq[Array[Float]], ef: Int,
+        hops: Int): IndexedSeq[Seq[(Long, Any)]] = {
+      val w = new Walk(qs)
+      def pools(l: Int, front: IndexedSeq[Seq[(Long, Any)]]) = {
+        val ids = front.map(_.map(_._1))
+        w.scored(ids.zip(w.neighbours(l, ids)).map { case (a, b) => a ++ b })
       }
+      var cur = w.scored(qs.map(_ => Seq(entryId)))
+      for (l <- maxLevel to 1 by -1; _ <- 1 to hopsPerLayer)
+        cur = pools(l, cur).map(_.sortWith(byRank).take(1))
+      val visited = cur.map(c => scala.collection.mutable.LinkedHashMap(c: _*))
       var frontier = cur
-      val pools = scala.collection.mutable.ArrayBuffer(cur)
       for (_ <- 1 to hops) {
-        val nbrs = frontier.select("qid", "id")
-          .join(g.filter(col("layer") === 0), "id")
-          .select(col("qid"), col("nbr").as("id"))
-        val pool = frontier.unionByName(scoreOf(nbrs))
-          .groupBy("qid", "id").agg(max("cos").as("cos"))
-          .localCheckpoint()
-        pools += pool
-        frontier = graft.plans.TopK.perKey(pool, Seq("qid"),
-          Seq(("cos", false), ("id", true)), ef)
+        val pool = pools(0, frontier)
+        visited.zip(pool).foreach { case (v, p) => v ++= p }
+        frontier = pool.map(_.sortWith(byRank).take(ef))
       }
-      val visited0 = pools.reduce(_ unionByName _)
-        .groupBy("qid", "id").agg(max("cos").as("cos"))
-      // tombstoned batch serving: deletes stay WALKABLE (the frontier
-      // above never filtered — severing them cuts the routes through
-      // them) and only the returned top-k excludes them — the
-      // [[searchTombstoned]] semantics applied per query
-      val visited = tombstones.fold(visited0) { t =>
-        visited0.join(t.select(col(idCol).cast("long").as("id"))
-          .distinct(), Seq("id"), "left_anti")
-      }
-      graft.plans.TopK.perKey(visited, Seq("qid"),
-          Seq(("cos", false), ("id", true)), k)
-        .select(col("qid").as(queryIdCol), col("id").as(idCol), col("cos"))
+      visited.map(_.toSeq)
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.embed.{Embedder, HashingEmbedder}
-import graft.functions.DriverEval.before
+import graft.functions.DriverEval.{before, sqlCompare}
 import graft.functions.GraftFunctions._
 import graft.text.Bm25
 
@@ -536,42 +536,67 @@ object HybridSearch {
 
   /** J4 + A5 + T1 — RRF fusion of the two ranked branches, threshold,
     * final top-k, on the driver. Both branches (≤ prefetch rows each)
-    * arrive in ONE tagged `unionByName` collect; each is ranked by
-    * (score desc, id asc) in Spark's sort order, and an id's RRF score
-    * is `1.0 / (rrfK + dense_rank) + 1.0 / (rrfK + bm25_rank)` with a
-    * missing branch adding 0.0 — the doubles the window + full-outer
-    * join form computed, summed dense-then-sparse in the same order.
-    * Each branch holds an id at most once (a top-n list over unique
-    * index ids). Returns a local frame (id, dense_score, dense_rank,
-    * bm25_score, bm25_rank, rrf_score) ordered (rrf_score desc, id). */
+    * arrive in one collect and fuse by [[fuse]] ([[fuseBranches]]).
+    * Returns a local frame (id, dense_score, dense_rank, bm25_score,
+    * bm25_rank, rrf_score) ordered (rrf_score desc, id). */
   def rrfFuse(dense: DataFrame, sparse: DataFrame, cfg: Config,
       idCol: String = "id"): DataFrame = {
-    def tagged(df: DataFrame, score: String, tag: Int) = df.select(
-      lit(tag).as("__branch"), col(idCol), col(score).cast("double").as("__score"))
-    val both = tagged(dense, "dense_score", 0)
-      .unionByName(tagged(sparse, "bm25_score", 1))
-    val rows = both.collect()
-    def ranks(tag: Int): Map[Any, (Any, Int)] = rows.filter(_.getInt(0) == tag)
-      .sortWith((x, y) => before(x.get(2), x.get(1), y.get(2), y.get(1)))
-      .zipWithIndex.map { case (r, i) => r.get(1) -> (r.get(2), i + 1) }.toMap
+    val (rows, schema) = fuseBranches(dense, sparse, idCol, None, cfg)
+    dense.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Both ranked branches collected in ONE tagged `unionByName` action
+    * — each score as a double, the id, and the query key if any — and
+    * fused per query by [[fuse]]. Returns the fused rows (id, query key,
+    * dense_score, dense_rank, bm25_score, bm25_rank, rrf_score), queries
+    * in ascending key order, and their schema. */
+  private def fuseBranches(dense: DataFrame, sparse: DataFrame, idCol: String,
+      queryKey: Option[String], cfg: Config): (Seq[Row], StructType) = {
+    val keys = idCol +: queryKey.toSeq
+    def branch(df: DataFrame, score: String, tag: Int) = df.select((lit(tag).as("__branch") +:
+      col(score).cast("double").as("__score") +: keys.map(col)): _*)
+    val both = branch(dense, "dense_score", 0).unionByName(branch(sparse, "bm25_score", 1))
+    val collected = both.collect().toSeq
+    val byQuery: Seq[(Seq[Any], Seq[Row])] = queryKey.fold(Seq(Seq.empty[Any] -> collected)) { _ =>
+      collected.groupBy(_.get(3)).toSeq.sortWith((a, b) => sqlCompare(a._1, b._1) < 0)
+        .map { case (q, rs) => Seq(q) -> rs } }
+    val rows = byQuery.flatMap { case (q, rs) =>
+      fuse(rs.map(r => (r.getInt(0), r.get(2), r.get(1))), cfg)
+        .map(f => Row.fromSeq(f.head +: (q ++ f.tail))) }
+    // a full-outer join's merged key is nullable only when both sides are
+    val keyFields = keys.map(k => both.schema(k).copy(nullable =
+      dense.schema(k).nullable && sparse.schema(k).nullable))
+    (rows, StructType(keyFields ++ Seq(
+      StructField("dense_score", DoubleType), StructField("dense_rank", IntegerType),
+      StructField("bm25_score", DoubleType), StructField("bm25_rank", IntegerType),
+      StructField("rrf_score", DoubleType, nullable = false))))
+  }
+
+  /** RRF over ONE query's collected branch rows (branch tag, id,
+    * score). Each branch is ranked by (score desc, id asc) in Spark's
+    * sort order, and an id's RRF score is `1.0 / (rrfK + dense_rank) +
+    * 1.0 / (rrfK + bm25_rank)` with a missing branch adding 0.0 — the
+    * doubles the window + full-outer join form computed, summed
+    * dense-then-sparse in the same order. Each branch holds an id at
+    * most once (a top-n list over unique index ids). Returns (id,
+    * dense_score, dense_rank, bm25_score, bm25_rank, rrf_score) rows
+    * at or above the threshold, the top `cfg.k` in (rrf_score desc, id)
+    * order. */
+  private def fuse(rows: Seq[(Int, Any, Any)], cfg: Config): Seq[Seq[Any]] = {
+    def ranks(tag: Int): Map[Any, (Any, Int)] = rows.filter(_._1 == tag)
+      .sortWith((x, y) => before(x._3, x._2, y._3, y._2))
+      .zipWithIndex.map { case (r, i) => r._2 -> (r._3, i + 1) }.toMap
     val (d, s) = (ranks(0), ranks(1))
     // (score, rank, RRF term) of one branch; a missing branch adds 0.0
     def part(branch: Map[Any, (Any, Int)], id: Any): (Any, Any, Double) =
       branch.get(id).fold[(Any, Any, Double)]((null, null, 0.0)) {
         case (score, r) => (score, r, 1.0 / (cfg.rrfK + r)) }
-    val fused = rows.map(_.get(1)).distinct.map { id =>
+    rows.map(_._2).distinct.map { id =>
       val ((ds, dr, dx), (ss, sr, sx)) = (part(d, id), part(s, id))
-      Row(id, ds, dr, ss, sr, dx + sx)
-    }.filter(_.getDouble(5) >= cfg.rrfScoreThreshold) // P8
-      .sortWith((x, y) => before(x.get(5), x.get(0), y.get(5), y.get(0)))
+      Seq(id, ds, dr, ss, sr, dx + sx)
+    }.filter(_(5).asInstanceOf[Double] >= cfg.rrfScoreThreshold) // P8
+      .sortWith((x, y) => before(x(5), x(0), y(5), y(0)))
       .take(cfg.k)
-    // a full-outer join's merged key is nullable only when both sides are
-    val idField = both.schema(idCol).copy(nullable =
-      dense.schema(idCol).nullable && sparse.schema(idCol).nullable)
-    dense.sparkSession.createDataFrame(fused.toSeq.asJava, StructType(Seq(idField,
-      StructField("dense_score", DoubleType), StructField("dense_rank", IntegerType),
-      StructField("bm25_score", DoubleType), StructField("bm25_rank", IntegerType),
-      StructField("rrf_score", DoubleType, nullable = false))))
   }
 
   /** Batched dense branch: exact cosine prefetch-n per query ROW — the
@@ -597,27 +622,28 @@ object HybridSearch {
       Seq(queryIdCol), Seq(("dense_score", false), (idCol, true)), n)
 
   /** Batched multi-query hybrid search: [[search]] semantics for a
-    * whole query TABLE in ONE plan — no driver loop, no per-query jobs.
+    * whole query TABLE, keyed by `query_id`.
     *
-    * Shape (the 100 TB story): queries embed/tokenize inside the plan
-    * and broadcast everywhere they're needed; the dense branch scores
-    * all pairs once and heap-prunes per query ([[denseTopKAll]]); the
-    * sparse branch explodes corpus tokens ONCE, semi-joins them to the
-    * union of all query terms (broadcast — bounded by total query
-    * vocabulary), computes each (doc, term) BM25 term score once, and
-    * only then fans out to the queries containing the term; fusion
-    * ranks with per-query_id windows over the already-pruned prefetch
-    * rows (≤ 5k per query — the window sorts almost nothing, and the
-    * TopKPerKey output ordering/partitioning feeds it without a
-    * re-sort). Wide shuffles are keyed by query_id (+ id for the
-    * fusion join); corpus text and vectors cross no exchange.
+    * Shape: queries embed/tokenize inside the prefetch plans and
+    * broadcast everywhere they're needed; the dense branch scores all
+    * pairs once and heap-prunes per query ([[denseTopKAll]], or the
+    * HNSW walk); the sparse branch explodes corpus tokens ONCE,
+    * semi-joins them to the union of all query terms (broadcast —
+    * bounded by total query vocabulary), computes each (doc, term)
+    * BM25 term score once, and only then fans out to the queries
+    * containing the term. From there the batch runs [[search]]'s
+    * driver epilogue: one collect of both branches (each ≤ prefetch
+    * rows per query — a batch is request-scale, ≤ 256 queries at the
+    * HTTP layer), [[fuse]] per query ([[fuseBranches]]), and one
+    * `id IN (…)` hydrate ([[hydrateTopK]]) over the union of hit ids.
     *
     * `dense` picks the batched dense tier ([[Dense.Batched]]: the
     * exact scan or the HNSW walk); per-query results equal [[search]]
     * with the same tier and query string.
     *
-    * Returns one [[search]]-shaped result set per query, keyed by
-    * `query_id`, ordered (query_id, rrf_score desc, id). */
+    * Returns a local frame (id, query_id, dense_score, dense_rank,
+    * bm25_score, bm25_rank, rrf_score, then the index's other
+    * columns), ordered (query_id, rrf_score desc, id). */
   def searchAll(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, queries: DataFrame, cfg: Config = Config(),
       embedder: Embedder = HashingEmbedder.default,
@@ -642,62 +668,43 @@ object HybridSearch {
     // — its term bounds are one groupBy away)
     val tbOpt = cfg.termBounds.orElse(cfg.blockBounds
       .map(graft.index.IndexWriter.termBoundsFromBlocks))
-    if (cfg.postings.isDefined && tbOpt.isDefined) {
-      val sparse = bm25TopKMaxScoreAll(cfg.postings.get, docStats,
+    val sparse = if (cfg.postings.isDefined && tbOpt.isDefined)
+      bm25TopKMaxScoreAll(cfg.postings.get, docStats,
         tbOpt.get, corpusSize, avgDocLen, qTerms, prefetch)
-      return fuseRanked(index, denseHits, sparse, cfg)
+    else {
+      // hoisted: the same distinct term set prunes both the corpus-token
+      // explode and docStats — one aggregation, not two per plan
+      val allTerms = qTerms.select("term").distinct()
+      // (term, id, tf, dl) rows for the union of all query terms: the
+      // postings table serves them by term lookup (no corpus token
+      // scan); the scan path explodes corpus tokens once
+      val tfRows = cfg.postings match {
+        case Some(p) => p
+          .join(broadcast(allTerms), Seq("term"), "left_semi")
+          .select(col("term"), col("id"), col("tf"), col("dl"))
+        case None => index
+          .select(col("id"), size(col("tokens")).as("dl"),
+            explode(col("tokens")).as("term"))
+          .join(broadcast(allTerms), Seq("term"), "left_semi")
+          .groupBy(col("id"), col("term"), col("dl"))
+          .agg(count(lit(1)).as("tf"))
+          .select(col("term"), col("id"), col("tf"), col("dl"))
+      }
+      val termScores = tfRows
+        .join(broadcast(docStats.join(
+          broadcast(allTerms), Seq("term"), "left_semi")),
+          Seq("term"))
+        .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+          col("tf"), col("dl"), col("df")))
+      val sparsePairs = termScores
+        .join(broadcast(qTerms), Seq("term"))
+        .groupBy(col("query_id"), col("id"))
+        .agg(round(sum("term_score"), 6).as("bm25_score"))
+      graft.plans.TopK.perKey(sparsePairs, Seq("query_id"),
+        Seq(("bm25_score", false), ("id", true)), prefetch)
     }
-    // hoisted: the same distinct term set prunes both the corpus-token
-    // explode and docStats — one aggregation, not two per plan
-    val allTerms = qTerms.select("term").distinct()
-    // (term, id, tf, dl) rows for the union of all query terms: the
-    // postings table serves them by term lookup (no corpus token scan);
-    // the scan path explodes corpus tokens once
-    val tfRows = cfg.postings match {
-      case Some(p) => p
-        .join(broadcast(allTerms), Seq("term"), "left_semi")
-        .select(col("term"), col("id"), col("tf"), col("dl"))
-      case None => index
-        .select(col("id"), size(col("tokens")).as("dl"),
-          explode(col("tokens")).as("term"))
-        .join(broadcast(allTerms), Seq("term"), "left_semi")
-        .groupBy(col("id"), col("term"), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-        .select(col("term"), col("id"), col("tf"), col("dl"))
-    }
-    val termScores = tfRows
-      .join(broadcast(docStats.join(
-        broadcast(allTerms), Seq("term"), "left_semi")),
-        Seq("term"))
-      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
-        col("tf"), col("dl"), col("df")))
-    val sparsePairs = termScores
-      .join(broadcast(qTerms), Seq("term"))
-      .groupBy(col("query_id"), col("id"))
-      .agg(round(sum("term_score"), 6).as("bm25_score"))
-    val sparse = graft.plans.TopK.perKey(sparsePairs, Seq("query_id"),
-      Seq(("bm25_score", false), ("id", true)), prefetch)
-    fuseRanked(index, denseHits, sparse, cfg)
-  }
-
-  /** Per-query RRF fusion of the two batched prefetch branches —
-    * identical arithmetic to [[rrfFuse]], per query_id, shared by the
-    * unpruned and MaxScore sparse routes. */
-  private def fuseRanked(index: DataFrame, dense: DataFrame,
-      sparse: DataFrame, cfg: Config): DataFrame = {
-    val dw = Window.partitionBy("query_id").orderBy(desc("dense_score"), col("id"))
-    val sw = Window.partitionBy("query_id").orderBy(desc("bm25_score"), col("id"))
-    val d = dense.withColumn("dense_rank", row_number().over(dw))
-    val s = sparse.withColumn("bm25_rank", row_number().over(sw))
-    val fused = d.join(s, Seq("query_id", "id"), "full_outer")
-      .withColumn("rrf_score",
-        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("dense_rank")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(cfg.rrfK) + col("bm25_rank")), lit(0.0)))
-      .filter(col("rrf_score") >= cfg.rrfScoreThreshold)
-    val topK = graft.plans.TopK.perKey(fused, Seq("query_id"),
-      Seq(("rrf_score", false), ("id", true)), cfg.k)
-    topK.join(index, Seq("id"), "left")
-      .orderBy(col("query_id"), desc("rrf_score"), col("id"))
+    val (fused, schema) = fuseBranches(denseHits, sparse, "id", Some("query_id"), cfg)
+    hydrateTopK(index, fused.toArray, schema)
   }
 
   /** Where the hybrid query's dense prefetch comes from — the one thing
@@ -709,7 +716,7 @@ object HybridSearch {
   }
 
   object Dense {
-    /** A tier that also serves a whole query table in one plan
+    /** A tier that also serves a whole query table
       * ([[searchAll]]): `prefetchAll` returns the (query_id, id,
       * dense_score) top-`n` per row of `qs` (query_id, __qvec). */
     sealed trait Batched extends Dense {
@@ -763,8 +770,8 @@ object HybridSearch {
       * O(ef · hops · deg) graph rows instead of scanning the corpus (or
       * IVF's nProbe cells). `ef`/`hops` are the recall/cost dials; hits
       * route back from the graph's surrogate keys through `idMap`.
-      * Batched, every hop is one (query_id, id)-keyed frontier⋈graph
-      * join for the whole query table
+      * Batched, the whole query table walks in lockstep, each hop one
+      * edge read and one vector read for the union of its frontiers
       * ([[graft.ops.Similarity.HnswIndex.searchBatch]]). */
     final case class Hnsw(hs: HnswServing, ef: Int = 16, hops: Int = 3)
         extends Batched {

@@ -1,8 +1,9 @@
 package graft.search
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -25,17 +26,15 @@ import graft.functions.GraftFunctions._
   * corpus would be |corpus|·|tokens|·dim floats, so only the k'-sized
   * candidate slice ever embeds.
   *
-  * Scale shape of the batched form ([[LateInteraction.maxsimRerankAll]];
-  * a single request's slice scores on the driver): candidates explode
-  * to their DISTINCT tokens once; the (token → vector) vocabulary
-  * embeds once per distinct token (vocab-sized, never positions-sized)
-  * and the query's few token vectors broadcast; the (vocab ×
-  * query-token) cosine table is vocab-sized;
-  * per-doc scoring is two grouped aggregates with map-side combine
-  * (max per (doc, query-token), then an exact integer sum). Cosines
-  * micro-fix to ×10⁶ integers BEFORE the max/sum, so both engines
-  * aggregate exact integers — no float accumulation order anywhere
-  * past the per-pair cosine.
+  * The candidate slice is request-scale (a serving prefetch, ≤ 256
+  * queries' worth in a batch), so it is collected and scored on the
+  * driver: each distinct non-empty token embeds once for the whole
+  * batch, and every (doc token, query token) pair takes Spark's own
+  * `round(vec_cosine · 10⁶)` long, evaluated in-process
+  * ([[graft.functions.DriverEval]]). Cosines micro-fix to ×10⁶
+  * integers BEFORE the max/sum, so the aggregation is exact integer
+  * arithmetic — no float accumulation order anywhere past the
+  * per-pair cosine.
   */
 object LateInteraction {
 
@@ -47,14 +46,9 @@ object LateInteraction {
     * published MaxSim dedupes neither, but deterministic weights beat
     * accidental ones; pass pre-weighted terms if repetition is meant).
     *
-    * The candidate slice is request-scale (a serving prefetch), so it
-    * is collected and scored on the driver: each distinct non-empty
-    * token embeds once, and every (doc token, query token) pair takes
-    * [[maxsimRerankAll]]'s `round(vec_cosine · 10⁶)` long, evaluated by
-    * Spark's own expression in-process ([[graft.functions.DriverEval]])
-    * — a null cosine is skipped by the max and the sum, as the
-    * aggregates skip it. A repeated id pools its rows' tokens, as the
-    * groupBy did; a doc with no non-empty token drops out. Returns a
+    * A null cosine is skipped by the max and the sum, as Spark's
+    * aggregates skip it. A repeated id pools its rows' tokens, as a
+    * groupBy would; a doc with no non-empty token drops out. Returns a
     * local frame in (maxsim_u6 desc, id) order. */
   def maxsimRerank(candidates: DataFrame, queryTerms: Seq[String],
       embedder: Embedder, k: Int, idCol: String = "id",
@@ -62,79 +56,73 @@ object LateInteraction {
     require(k >= 1, s"k must be >= 1, got $k")
     val terms = queryTerms.distinct.filter(_.nonEmpty)
     require(terms.nonEmpty, "need at least one non-empty query term")
-    val spark = candidates.sparkSession
     val slice = candidates.select(col(idCol), col(tokensCol)).collect()
-    // an empty token (double-space splits) would embed to the zero
-    // vector and make the cosine undefined — it carries no signal
-    val docToks = slice.groupBy(_.get(0)).map { case (id, rs) =>
-      id -> rs.toSeq.flatMap(r => Option(r.getSeq[String](1)).getOrElse(Nil))
-        .filter(t => t != null && t.nonEmpty).distinct
-    }.filter(_._2.nonEmpty)
-    def embed(t: String): Array[Float] = embedder.embedBatch(Seq(t)).head
-    val qvecs = terms.map(embed)
-    val cosU6 = new DriverEval.VectorExpr(spark, Seq("dvec", "qvec"),
-      round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0).cast("long"))
-    val pairU6 = docToks.values.flatten.toSeq.distinct
-      .map(t => t -> { val dv = embed(t); qvecs.map(cosU6(dv, _)) }).toMap
-    val scored = docToks.toSeq.map { case (id, toks) =>
-      val best = qvecs.indices.map(qi => toks.map(pairU6(_)(qi)).reduce(DriverEval.max))
-      id -> best.filter(_ != null).map(_.asInstanceOf[Long])
-        .reduceOption(_ + _).map(Long.box).orNull
-    }
-    val top = scored.sortWith((a, b) => DriverEval.before(a._2, a._1, b._2, b._1))
-      .take(k).map { case (id, s) => Row(id, s) }
-    spark.createDataFrame(top.asJava, StructType(Seq(
+      .map(r => (0, r.get(0), tokensOf(r, 1)))
+    val top = topByMaxSim(candidates.sparkSession, slice, Map(0 -> terms),
+      embedder, k).flatMap(_._2).map { case (id, s) => Row(id, s) }
+    candidates.sparkSession.createDataFrame(top.asJava, StructType(Seq(
       candidates.schema(idCol), StructField("maxsim_u6", LongType))))
   }
 
-  /** BATCHED [[maxsimRerank]] — the serving-matrix rule applied to the
-    * rerank tier: a whole query TABLE rescores its per-query candidate
-    * sets in ONE plan. `candidates` carries (queryIdCol, idCol,
+  /** BATCHED [[maxsimRerank]]: `candidates` carries (queryIdCol, idCol,
     * tokensCol) — each query's own prefetch rows; `queries` carries
-    * (queryIdCol, termsCol: array<string>). The shared vocabulary of
-    * ALL candidate slices embeds once per distinct token, every
-    * (doc-token, query-token) cosine computes once (query tokens
-    * broadcast — bounded by total query vocabulary), and the max/sum
-    * aggregates key by (query_id, id) with map-side combine; per-query
-    * top-k cuts through bounded heaps ([[graft.plans.TopK]]), so
-    * nothing global sorts. Per-query rows equal [[maxsimRerank]] on
-    * the same slice (LateInteractionSpec asserts it). Returns
-    * (queryIdCol, idCol, maxsim_u6), ordered per query. */
+    * (queryIdCol, termsCol: array<string>). Both are collected once and
+    * every query scores with [[maxsimRerank]]'s kernel, the embeddings
+    * and pair cosines shared across the batch. A query with no
+    * non-empty term has no rows. Per-query rows equal [[maxsimRerank]]
+    * on the same slice (LateInteractionSpec asserts it). Returns a
+    * local (queryIdCol, idCol, maxsim_u6) frame, queries in ascending
+    * id order, each in (maxsim_u6 desc, id) order. */
   def maxsimRerankAll(candidates: DataFrame, queries: DataFrame,
       embedder: Embedder, k: Int, idCol: String = "id",
       tokensCol: String = "tokens", queryIdCol: String = "query_id",
       termsCol: String = "terms"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val emb = embedder
-    val embUdf = udf((t: String) => emb.embedBatch(Seq(t)).head)
-    val qToks = queries
-      .select(col(queryIdCol), explode(col(termsCol)).as("qtok"))
-      .filter(col("qtok") =!= "").distinct()
-    val qVocab = qToks.select("qtok").distinct()
-      .withColumn("qvec", embUdf(col("qtok")))
-    val docToks = candidates.select(col(queryIdCol), col(idCol),
-        explode(array_distinct(col(tokensCol))).as("dtok"))
-      .filter(col("dtok") =!= "")
-    val vocab = docToks.select("dtok").distinct()
-      .withColumn("dvec", embUdf(col("dtok")))
-    val pairCos = vocab.crossJoin(broadcast(qVocab))
-      .select(col("dtok"), col("qtok"),
-        round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0)
-          .cast("long").as("cos_u6"))
-    // fan each doc token out to its query's OWN terms FIRST (broadcast
-    // — per-query-vocabulary-sized), and only then attach the cosine:
-    // joining pairCos before the restriction would form one row per
-    // (candidate doc token × EVERY query token in the batch), which at
-    // hundreds of concurrent queries multiplies the intermediate by
-    // the batch's total vocabulary instead of each query's own
-    val scored = docToks
-      .join(broadcast(qToks), Seq(queryIdCol))
-      .join(pairCos, Seq("dtok", "qtok"))
-      .groupBy(col(queryIdCol), col(idCol), col("qtok"))
-      .agg(max("cos_u6").as("best_u6"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum("best_u6").as("maxsim_u6"))
-    graft.plans.TopK.perKey(scored, Seq(queryIdCol),
-      Seq(("maxsim_u6", false), (idCol, true)), k)
+    val terms = queries.select(col(queryIdCol), col(termsCol)).collect()
+      .groupBy(_.get(0)).map { case (q, rs) => q -> rs.toSeq.flatMap(tokensOf(_, 1)).distinct }
+    val slice = candidates.select(col(queryIdCol), col(idCol), col(tokensCol))
+      .collect().map(r => (r.get(0), r.get(1), tokensOf(r, 2)))
+    val top = topByMaxSim(candidates.sparkSession, slice, terms, embedder, k)
+      .sortWith((a, b) => DriverEval.sqlCompare(a._1, b._1) < 0)
+      .flatMap { case (q, hits) => hits.map { case (id, s) => Row(q, id, s) } }
+    candidates.sparkSession.createDataFrame(top.asJava, StructType(Seq(
+      candidates.schema(queryIdCol), candidates.schema(idCol),
+      StructField("maxsim_u6", LongType))))
+  }
+
+  /** The non-empty tokens of an array<string> field — an empty token
+    * (double-space splits) would embed to the zero vector and make the
+    * cosine undefined; it carries no signal. */
+  private def tokensOf(r: Row, i: Int): Seq[String] =
+    Option(r.getSeq[String](i)).getOrElse(Nil).filter(t => t != null && t.nonEmpty)
+
+  /** The MaxSim kernel over collected (query key, id, doc tokens) rows
+    * and each query key's terms: each distinct token embeds once, each
+    * (doc token, query term) pair's `round(vec_cosine · 10⁶)` long is
+    * evaluated once, and per query each doc's score is the exact sum
+    * over terms of the max over its tokens, nulls skipped. Returns each
+    * query key with its top `k` (id, maxsim_u6) in (maxsim_u6 desc, id)
+    * order. */
+  private def topByMaxSim(spark: SparkSession, rows: Seq[(Any, Any, Seq[String])],
+      terms: Map[Any, Seq[String]], embedder: Embedder,
+      k: Int): Seq[(Any, Seq[(Any, Any)])] = {
+    val vec = mutable.HashMap.empty[String, Array[Float]]
+    def embed(t: String) = vec.getOrElseUpdate(t, embedder.embedBatch(Seq(t)).head)
+    val cosU6 = new DriverEval.VectorExpr(spark, Seq("dvec", "qvec"),
+      round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0).cast("long"))
+    val pair = mutable.HashMap.empty[(String, String), Any]
+    def u6(d: String, q: String) = pair.getOrElseUpdate((d, q), cosU6(embed(d), embed(q)))
+    rows.groupBy(_._1).toSeq.map { case (q, rs) =>
+      val qt = terms.getOrElse(q, Nil)
+      val scored = rs.groupBy(_._2).toSeq
+        .map { case (id, ds) => id -> ds.flatMap(_._3).distinct }
+        .filter(d => d._2.nonEmpty && qt.nonEmpty)
+        .map { case (id, toks) =>
+          val best = qt.map(t => toks.map(u6(_, t)).reduce(DriverEval.max))
+          id -> best.filter(_ != null).map(_.asInstanceOf[Long])
+            .reduceOption(_ + _).map(Long.box).orNull
+        }
+      q -> scored.sortWith((a, b) => DriverEval.before(a._2, a._1, b._2, b._1)).take(k)
+    }
   }
 }

@@ -346,8 +346,9 @@ object HttpApi {
     }
   }
 
-  // ---- /search/batch (no reference analog — the q154 batched plan
-  // exposed at the transport layer: N queries, ONE Spark job set) ------
+  // ---- /search/batch (no reference analog — the q154 batched search
+  // exposed at the transport layer: N queries whose Spark job count
+  // does not grow with N) ------------------------------------------------
 
   /** Requests above this fan-out get a loud 400 instead of an unbounded
     * broadcast query table; callers chunk. 256 queries × 5k prefetch
@@ -401,8 +402,9 @@ object HttpApi {
           (400, err(s"unknown batch rerank mode '${rerank.get}' " +
             "(the batch endpoint serves \"maxsim\")"))
         else if (rerank.contains("maxsim"))
-          // the whole batch's prefetch AND its MaxSim rescoring each
-          // run as ONE plan (searchAll + maxsimRerankAll)
+          // the whole batch's prefetch runs as one search and its
+          // MaxSim rescoring as one driver pass (searchAll +
+          // maxsimRerankAll)
           render(Serve.queryBatchReranked(engine.index, engine.docStats,
             engine.corpusSize, engine.avgDocLen, qs, k = k,
             rrfScoreThreshold = threshold, postings = engine.postings,

@@ -223,19 +223,27 @@ object Serve {
       question, HybridSearch.Config(k = k * candMultiplier,
         rrfScoreThreshold = rrfScoreThreshold, postings = postings,
         termBounds = termBounds, blockBounds = blockBounds))
-    val qTerms = graft.text.Bm25.tokenize(question)
-      .distinct.filter(_.nonEmpty)
-    if (qTerms.isEmpty) return collectResponse(hits.limit(k), question, t0)
+    val terms = rerankTerms(question)
+    val order = if (terms.isEmpty) Nil
+      else graft.search.LateInteraction.maxsimRerank(hits, terms, embedder, k)
+        .select("id").collect().map(_.getString(0)).toSeq
     val (rows, present) = hydrate(hits)
-    if (rows.isEmpty)
-      return QueryResponse(question, Seq.empty, (System.nanoTime() - t0) / 1e9)
-    val order = graft.search.LateInteraction
-      .maxsimRerank(hits, qTerms, embedder, k)
-      .select("id").collect().map(_.getString(0)).toSeq
-    val byId = rows.map(r => r.getAs[String]("id") -> r).toMap
-    val results = order.map(id => toResult(byId(id), present))
-    QueryResponse(question, results, (System.nanoTime() - t0) / 1e9)
+    QueryResponse(question, reranked(rows.toSeq, terms, order, k)
+      .map(toResult(_, present)), (System.nanoTime() - t0) / 1e9)
   }
+
+  /** A question's distinct non-empty tokens, the MaxSim query terms. */
+  private def rerankTerms(question: String): Seq[String] =
+    graft.text.Bm25.tokenize(question).distinct.filter(_.nonEmpty)
+
+  /** The rerank epilogue of [[queryReranked]] and [[queryBatchReranked]]:
+    * a question with no `terms` keeps its hybrid top-k; any other takes
+    * its candidate `rows` in MaxSim `order`, each keeping its RRF
+    * score. */
+  private def reranked(rows: Seq[Row], terms: Seq[String],
+      order: Seq[String], k: Int): Seq[Row] =
+    if (terms.isEmpty) rows.take(k)
+    else order.map(rows.map(r => r.getAs[String]("id") -> r).toMap)
 
   /** PHRASE search served from the positional inverted index
     * ([[HybridSearch.phraseMatches]]) — consecutive-token matching as
@@ -353,8 +361,8 @@ object Serve {
   /** The batched epilogue: hydrate a (query_id, …) hit frame in one
     * collect and answer each question `i` with the rows `pick(i, rows of
     * i)` selects, in encounter order. Every response carries the SHARED
-    * wall-clock (one plan ran; attributing slices per question would be
-    * fiction). */
+    * wall-clock (the batch ran as one request; attributing slices per
+    * question would be fiction). */
   private def batchResponses(hits: DataFrame, questions: Seq[String],
       t0: Long)(pick: (Long, Seq[Row]) => Seq[Row]): Seq[QueryResponse] = {
     val (rows, present) = hydrate(hits, lead = Seq("query_id"))
@@ -367,13 +375,14 @@ object Serve {
     }
   }
 
-  /** POST /search/batch — N questions through ONE Spark plan
-    * ([[HybridSearch.searchAll]], the q154-verified shape) instead of N
-    * sequential [[query]] calls. The corpus is scanned and scored once
-    * for the whole batch (queries broadcast; one shuffle keyed by
-    * query_id), so serving cost stops scaling with batch size. Result
-    * rows collect in one action — bounded at k × questions. Per-question
-    * hydration is [[toResult]], identical to the single-query endpoint. */
+  /** POST /search/batch — N questions through [[HybridSearch.searchAll]]
+    * (the q154-verified shape) instead of N sequential [[query]] calls.
+    * The corpus is scanned and scored once for the whole batch (queries
+    * broadcast into the prefetch plans), fusion runs per question on
+    * the driver, and one read hydrates every question's hits, so the
+    * number of Spark jobs does not grow with the batch. Per-question
+    * hydration is [[toResult]], identical to the single-query
+    * endpoint. */
   def queryBatch(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, questions: Seq[String], k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
@@ -382,25 +391,30 @@ object Serve {
       blockBounds: Option[DataFrame] = None): Seq[QueryResponse] = {
     if (questions.isEmpty) return Nil
     val t0 = System.nanoTime()
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qdf = questions.zipWithIndex
-      .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val hits = HybridSearch.searchAll(index, docStats, corpusSize, avgDocLen,
-      qdf, HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds))
+      questionTable(index, questions), HybridSearch.Config(k = k,
+        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
+        termBounds = termBounds, blockBounds = blockBounds))
     // searchAll orders (query_id, rrf_score desc, id)
     batchResponses(hits, questions, t0)((_, mine) => mine)
   }
 
-  /** BATCHED [[queryPhrase]] — N phrases through ONE plan
+  /** (query_id, query): question `i` keyed by `i`. */
+  private def questionTable(index: DataFrame, questions: Seq[String]): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    questions.zipWithIndex.map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
+  }
+
+  /** BATCHED [[queryPhrase]] — N phrases through one positional plan
     * ([[HybridSearch.phraseMatchesAll]], the q375 slot-count shape):
     * the positional store is read once for the union of all phrases'
     * vocabularies (bucket-pruned when `store` is supplied), every
     * occurrence keys by (query_id, id, start), and per-phrase doc
-    * rankings cut through bounded heaps. Per-phrase results equal
-    * [[queryPhrase]] (HttpApiSpec asserts the round-trip). */
+    * rankings cut through bounded heaps; the ranked rows are collected
+    * and hydrated by one `id IN (…)` read, as [[queryPhrase]] does.
+    * Per-phrase results equal [[queryPhrase]] (HttpApiSpec asserts the
+    * round-trip). */
   def queryPhraseBatch(index: DataFrame, phrases: Seq[String], k: Int = 3,
       posPostings: Option[DataFrame] = None,
       store: Option[String] = None): Seq[QueryResponse] = {
@@ -428,19 +442,19 @@ object Serve {
         .groupBy("query_id", "id")
         .agg(count(lit(1)).cast("double").as("rrf_score")),
       Seq("query_id"), Seq(("rrf_score", false), ("id", true)), k)
-    val hits = ranked.join(index, Seq("id"), "left")
+      .select("id", "query_id", "rrf_score")
+    val hits = HybridSearch.hydrateTopK(index, ranked.collect(), ranked.schema)
     batchResponses(hits, phrases, t0)((_, mine) => mine
       .sortBy(r => (-r.getAs[Double]("rrf_score"), r.getAs[String]("id"))))
   }
 
-  /** BATCHED [[queryReranked]] — the whole batch's hybrid prefetch in
-    * one plan ([[HybridSearch.searchAll]]) and the whole batch's
-    * MaxSim rescoring in one plan
-    * ([[graft.search.LateInteraction.maxsimRerankAll]] — candidate
-    * tokens fan out to each query's OWN terms only). Result rows keep
-    * their ORIGINAL RRF scores (the queryReranked/MMR ordering
-    * contract); a query whose text yields no tokens falls back to its
-    * hybrid top-k. */
+  /** BATCHED [[queryReranked]] — the whole batch's hybrid prefetch
+    * through [[HybridSearch.searchAll]] and the whole batch's MaxSim
+    * rescoring through [[graft.search.LateInteraction.maxsimRerankAll]]
+    * (one driver pass, embeddings shared across the batch), then
+    * [[queryReranked]]'s epilogue per question: result rows keep their
+    * ORIGINAL RRF scores, and a question whose text yields no tokens
+    * keeps its hybrid top-k. */
   def queryBatchReranked(index: DataFrame, docStats: DataFrame,
       corpusSize: Long, avgDocLen: Double, questions: Seq[String],
       k: Int = 3, candMultiplier: Int = 3, rrfScoreThreshold: Double = 0.0,
@@ -453,29 +467,20 @@ object Serve {
     val t0 = System.nanoTime()
     val spark = index.sparkSession
     import spark.implicits._
-    val qdf = questions.zipWithIndex
-      .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val hits = HybridSearch.searchAll(index, docStats, corpusSize,
-      avgDocLen, qdf, HybridSearch.Config(k = k * candMultiplier,
-        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
-        termBounds = termBounds, blockBounds = blockBounds),
-      embedder = embedder).localCheckpoint()
-    val qTerms = questions.zipWithIndex
-      .map { case (q, i) =>
-        (i.toLong, graft.text.Bm25.tokenize(q).distinct.filter(_.nonEmpty)) }
-      .toDF("query_id", "terms")
-    val order = graft.search.LateInteraction.maxsimRerankAll(
-        hits, qTerms, embedder, k)
+      avgDocLen, questionTable(index, questions), HybridSearch.Config(
+        k = k * candMultiplier, rrfScoreThreshold = rrfScoreThreshold,
+        postings = postings, termBounds = termBounds,
+        blockBounds = blockBounds), embedder = embedder)
+    val terms = questions.map(rerankTerms)
+    val order = graft.search.LateInteraction.maxsimRerankAll(hits,
+        terms.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+          .toDF("query_id", "terms"), embedder, k)
       .select("query_id", "id")
       .as[(Long, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    batchResponses(hits, questions, t0) { (i, mine) =>
-      val byId = mine.map(r => r.getAs[String]("id") -> r).toMap
-      order.get(i).filter(_.nonEmpty)
-        // tokenless query (or no scored candidates): hybrid top-k order
-        .getOrElse(mine.map(_.getAs[String]("id")).take(k))
-        .flatMap(byId.get)
-    }
+    batchResponses(hits, questions, t0)((i, mine) =>
+      reranked(mine, terms(i.toInt), order.getOrElse(i, Nil), k))
   }
 
   /** O(1) health from a count cached at engine build (round-6 review:

@@ -592,6 +592,26 @@ object EventsPipeline {
     approx.unionByName(top)
   }
 
+  /** The zero-filled (k, h, x) hourly count grid of [[acf]] and
+    * [[pettittChangePoint]]: x counts `keyCol` = k's events in hour h
+    * of `gridLen` hours from the GLOBAL min timestamp (so every key's
+    * series aligns), with a real zero for each missing hour of each key
+    * that has any event in the grid. */
+  private def hourGrid(events: DataFrame, tsCol: String, keyCol: String,
+      gridLen: Int): DataFrame = {
+    val m = events.agg(min(unix_timestamp(col(tsCol))).as("t0"))
+    val counts = events.crossJoin(broadcast(m))
+      .select(col(keyCol).as("k"),
+        expr(s"CAST((unix_timestamp($tsCol) - t0) div 3600 AS BIGINT)")
+          .as("h"))
+      .filter(col("h") >= 0 && col("h") < gridLen)
+      .groupBy("k", "h").agg(count(lit(1)).as("x"))
+    counts.select("k").distinct()
+      .crossJoin(events.sparkSession.range(gridLen).select(col("id").as("h")))
+      .join(counts, Seq("k", "h"), "left")
+      .select(col("k"), col("h"), coalesce(col("x"), lit(0L)).as("x"))
+  }
+
   /** Lag-k autocorrelation (ACF) of each key's hourly event-count
     * series — the seasonality/memory screen of the series tier
     * ([[seasonalDecompose]] explains a known period, this one FINDS
@@ -624,18 +644,7 @@ object EventsPipeline {
     require(lags.distinct.size == lags.size, s"duplicate lags in $lags")
     val spark = events.sparkSession
     import spark.implicits._
-    val m = events.agg(min(unix_timestamp(col(tsCol))).as("t0"))
-    val counts = events.crossJoin(broadcast(m))
-      .select(col(keyCol).as("k"),
-        expr(s"CAST((unix_timestamp($tsCol) - t0) div 3600 AS BIGINT)")
-          .as("h"))
-      .filter(col("h") >= 0 && col("h") < gridLen)
-      .groupBy("k", "h").agg(count(lit(1)).as("x"))
-    val keys = counts.select("k").distinct()
-    val grid = keys
-      .crossJoin(spark.range(gridLen).select(col("id").as("h")))
-      .join(counts, Seq("k", "h"), "left")
-      .select(col("k"), col("h"), coalesce(col("x"), lit(0L)).as("x"))
+    val grid = hourGrid(events, tsCol, keyCol, gridLen)
     val stats = grid.groupBy("k").agg(sum("x").as("s"))
     val cg = grid.join(stats, "k")
       .select(col("k"), col("h"),
@@ -677,20 +686,7 @@ object EventsPipeline {
       keyCol: String, gridLen: Int = 256): DataFrame = {
     require(gridLen >= 3, s"gridLen must be >= 3, got $gridLen")
     import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    import spark.implicits._
-    val m = events.agg(min(unix_timestamp(col(tsCol))).as("t0"))
-    val counts = events.crossJoin(broadcast(m))
-      .select(col(keyCol).as("k"),
-        expr(s"CAST((unix_timestamp($tsCol) - t0) div 3600 AS BIGINT)")
-          .as("h"))
-      .filter(col("h") >= 0 && col("h") < gridLen)
-      .groupBy("k", "h").agg(count(lit(1)).as("x"))
-    val keys = counts.select("k").distinct()
-    val grid = keys
-      .crossJoin(spark.range(gridLen).select(col("id").as("h")))
-      .join(counts, Seq("k", "h"), "left")
-      .select(col("k"), col("h"), coalesce(col("x"), lit(0L)).as("x"))
+    val grid = hourGrid(events, tsCol, keyCol, gridLen)
     val wRank = Window.partitionBy("k").orderBy(col("x"), col("h"))
     val wPre = Window.partitionBy("k").orderBy(col("h"))
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -12,10 +12,11 @@ import graft.functions.GraftFunctions.vecCosine
 
 /** Each driver-side serving kernel equals the Spark form it replaces:
   * the walk score and the MaxSim pair score against their columns, the
-  * term bucket against `pmod(xxhash64(term), n)`, the driver HNSW walk
-  * against the batched Spark walk — on generated inputs plus the
-  * degenerate ones (zero vectors, length mismatches, ±0.0, exact ties,
-  * `ef` over the corpus, tombstones, an upper layer over the hold cap). */
+  * term bucket against `pmod(xxhash64(term), n)`, the single and the
+  * lockstep batch HNSW walks against a Spark reference walk — on
+  * generated inputs plus the degenerate ones (zero vectors, length
+  * mismatches, ±0.0, exact ties, `ef` over the corpus, tombstones, an
+  * upper layer over the hold cap, a batch of one, a repeated query). */
 class DriverKernelSpec extends AnyFunSuite with SparkTestBase {
 
   private def sample[T](g: Gen[T], seed: Long): T =
@@ -89,6 +90,8 @@ class DriverKernelSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  private val maxLevel = 3
+
   /** An index over generated (id, vector) rows; `holdCap` set before
     * anything forces the held upper layers. */
   private def index(rows: Seq[(Long, Array[Float])], build: String = "broadcast",
@@ -96,30 +99,95 @@ class DriverKernelSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val df = rows.map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val idx = new Similarity.HnswIndex(df, m = 4, maxLevel = 3, build = build,
+    val idx = new Similarity.HnswIndex(df, m = 4, maxLevel = maxLevel, build = build,
       dim = rows.head._2.length)
     holdCap.foreach(idx.heldLayerCap = _)
     idx
   }
 
-  /** Every query's driver walk ([[Similarity.HnswIndex.search]], or
-    * `searchTombstoned`) returns exactly its [[searchBatch]] rows. */
+  /** Every query's single driver walk ([[Similarity.HnswIndex.search]],
+    * or `searchTombstoned`), its row of the lockstep batch walk
+    * ([[Similarity.HnswIndex.searchBatch]]) and its row of the Spark
+    * reference walk ([[sparkWalk]]) are the same rows. The batch runs
+    * as given and once more with its first query alone. */
   private def walksMatchBatch(idx: Similarity.HnswIndex,
       queries: Seq[Array[Float]], k: Int, ef: Int, hops: Int,
       tomb: Option[DataFrame] = None): Unit = {
     import spark.implicits._
-    val qdf = queries.zipWithIndex.map { case (v, q) => (q.toLong, v.toSeq) }
+    def table(qs: Seq[Array[Float]]) = qs.zipWithIndex
+      .map { case (v, q) => (q.toLong, v.toSeq) }
       .toDF("query_id", "qv").select($"query_id", $"qv".cast("array<float>").as("qv"))
-    val batch = idx.searchBatch(qdf, k, ef, hops, tombstones = tomb).collect()
+    def byQuery(df: DataFrame) = df.collect()
       .groupBy(_.getLong(0)).map { case (q, rs) =>
         q -> ranked(rs.toSeq.map(r => (r.getLong(1), r.get(2)))) }
-    queries.zipWithIndex.foreach { case (v, q) =>
-      val single = tomb.fold(idx.search(v, k, ef, hops))(
-          t => idx.searchTombstoned(v, k, t, ef, hops))
-        .collect().map(r => (r.getLong(0), r.get(1))).toSeq
-      assert(single == batch.getOrElse(q.toLong, Nil),
-        s"query ${v.toSeq} (k=$k ef=$ef hops=$hops): driver $single, batch ${batch.get(q.toLong)}")
+    for (qs <- Seq(queries, queries.take(1))) {
+      val qdf = table(qs)
+      val batch = byQuery(idx.searchBatch(qdf, k, ef, hops, tombstones = tomb))
+      val ref = byQuery(sparkWalk(idx, qdf, k, ef, hops, tomb))
+      qs.zipWithIndex.foreach { case (v, q) =>
+        val single = tomb.fold(idx.search(v, k, ef, hops))(
+            t => idx.searchTombstoned(v, k, t, ef, hops))
+          .collect().map(r => (r.getLong(0), r.get(1))).toSeq
+        assert(single == batch.getOrElse(q.toLong, Nil),
+          s"query ${v.toSeq} (k=$k ef=$ef hops=$hops): driver $single, batch ${batch.get(q.toLong)}")
+        assert(single == ref.getOrElse(q.toLong, Nil),
+          s"query ${v.toSeq} (k=$k ef=$ef hops=$hops): driver $single, Spark ${ref.get(q.toLong)}")
+      }
     }
+  }
+
+  /** The HNSW walk as Spark plans over a query table (qid, qv), every
+    * hop one frontier⋈graph join for all queries: the reference the
+    * driver walks must equal. Greedy top-1 steps per upper layer, then
+    * `hops` layer-0 pools whose top-`ef` is the next frontier; the
+    * visited set is the union of the pools, tombstoned ids are dropped
+    * only from the result. Returns (query_id, id, cos), top-k per
+    * query. */
+  private def sparkWalk(idx: Similarity.HnswIndex, queries: DataFrame,
+      k: Int, ef: Int, hops: Int, tombstones: Option[DataFrame]): DataFrame = {
+    val g = idx.graph
+    val qs = queries.select(col("query_id").as("qid"), col("qv").as("__qv"))
+      .localCheckpoint()
+    def scoreOf(cand: DataFrame): DataFrame = cand
+      .join(idx.vecs, "id")
+      .join(broadcast(qs), "qid")
+      .withColumn("cos", round(vecCosine(col("vec"), col("__qv")), 6))
+      .select("qid", "id", "cos")
+    var cur = scoreOf(qs.select(col("qid"), lit(idx.entryId).as("id")))
+      .localCheckpoint()
+    for (l <- maxLevel to 1 by -1) {
+      for (_ <- 1 to idx.hopsPerLayer) {
+        val nbrs = cur.select("qid", "id")
+          .join(g.filter(col("layer") === l), "id")
+          .select(col("qid"), col("nbr").as("id"))
+        val pool = cur.select("qid", "id").unionByName(nbrs)
+        cur = graft.plans.TopK.perKey(scoreOf(pool), Seq("qid"),
+          Seq(("cos", false), ("id", true)), 1)
+      }
+      cur = cur.localCheckpoint()
+    }
+    var frontier = cur
+    val pools = scala.collection.mutable.ArrayBuffer(cur)
+    for (_ <- 1 to hops) {
+      val nbrs = frontier.select("qid", "id")
+        .join(g.filter(col("layer") === 0), "id")
+        .select(col("qid"), col("nbr").as("id"))
+      val pool = frontier.unionByName(scoreOf(nbrs))
+        .groupBy("qid", "id").agg(max("cos").as("cos"))
+        .localCheckpoint()
+      pools += pool
+      frontier = graft.plans.TopK.perKey(pool, Seq("qid"),
+        Seq(("cos", false), ("id", true)), ef)
+    }
+    val visited0 = pools.reduce(_ unionByName _)
+      .groupBy("qid", "id").agg(max("cos").as("cos"))
+    val visited = tombstones.fold(visited0) { t =>
+      visited0.join(t.select(col("vec_id").cast("long").as("id"))
+        .distinct(), Seq("id"), "left_anti")
+    }
+    graft.plans.TopK.perKey(visited, Seq("qid"),
+        Seq(("cos", false), ("id", true)), k)
+      .select(col("qid").as("query_id"), col("id"), col("cos"))
   }
 
   private def corpus(n: Int, dim: Int, seed: Long): Seq[(Long, Array[Float])] =
@@ -128,8 +196,10 @@ class DriverKernelSpec extends AnyFunSuite with SparkTestBase {
 
   private def queriesFor(rows: Seq[(Long, Array[Float])], seed: Long): Seq[Array[Float]] = {
     val dim = rows.head._2.length
-    sample(Gen.listOfN(3, vecOf(dim)), seed) ++
-      Seq(Array.fill(dim)(0f), rows(rows.size / 2)._2)
+    val qs = sample(Gen.listOfN(3, vecOf(dim)), seed)
+    // a zero vector, a corpus vector, and the first query again under
+    // another query_id
+    qs ++ Seq(Array.fill(dim)(0f), rows(rows.size / 2)._2, qs.head)
   }
 
   test("driver HNSW walk = searchBatch on generated corpora, both builds") {

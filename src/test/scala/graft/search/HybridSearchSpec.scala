@@ -1,5 +1,7 @@
 package graft.search
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -413,21 +415,29 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("tokens", GraftFunctions.bm25Tokenize($"chunk_text"))
     val pp = graft.index.IndexWriter.positionalPostings(docs)
     val st = graft.index.IndexWriter.docFrequencies(docs)
+    // 5 repeats 0; 6 puts an unseen word next to the matching "cat sat"
     val phrases = Seq(0L -> Seq("cat", "sat"), 1L -> Seq("the", "cat", "the"),
       2L -> Seq("cat", "cat", "sat"), 3L -> Seq("cat"),
-      4L -> Seq("cat", "zzunseen"))
-    val qSlots = phrases.flatMap { case (q, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (q, i, t) }
-    }.toDF("query_id", "slot", "term")
-    val batched = HybridSearch.phraseMatchesAll(pp, qSlots)
-      .as[(Long, String, Int)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
-    val loop = phrases.flatMap { case (q, ts) =>
-      HybridSearch.phraseMatches(pp, st, ts)
-        .as[(String, Int)].collect().map { case (id, p) => (q, id, p) }
-    }.sortBy(t => (t._1, t._2, t._3))
-    assert(batched == loop)
+      4L -> Seq("cat", "zzunseen"), 5L -> Seq("cat", "sat"),
+      6L -> Seq("zzunseen", "cat", "sat"))
+    def matches(ps: Seq[(Long, Seq[String])]) = {
+      val qSlots = ps.flatMap { case (q, ts) =>
+        ts.zipWithIndex.map { case (t, i) => (q, i, t) }
+      }.toDF("query_id", "slot", "term")
+      val batched = HybridSearch.phraseMatchesAll(pp, qSlots)
+        .as[(Long, String, Int)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
+      val loop = ps.flatMap { case (q, ts) =>
+        HybridSearch.phraseMatches(pp, st, ts)
+          .as[(String, Int)].collect().map { case (id, p) => (q, id, p) }
+      }.sortBy(t => (t._1, t._2, t._3))
+      assert(batched == loop, s"batch of ${ps.size}")
+      batched
+    }
+    val batched = matches(phrases)
+    matches(phrases.take(1))
     assert(batched.exists(_._1 == 2L), "repeated-word phrase must match d6")
     assert(!batched.exists(_._1 == 4L), "unseen-term phrase matches nothing")
+    assert(!batched.exists(_._1 == 6L), "unseen-term phrase matches nothing")
   }
 
   test("proximityMatches: greedy ordered-window == naive greedy scan — " +
@@ -487,28 +497,58 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
 
   test("searchAll == per-query search loop, one plan, no per-query jobs") {
     val cfg = HybridSearch.Config(k = 2)
+    // query 5 repeats query 1's text; query 6 has no token
     val queryTexts = Seq("habeas corpus", "grain shipment contract",
-      "semiconductor patent", "vehicle search evidence", "payment terms")
-    val queries = queryTexts.zipWithIndex
+      "semiconductor patent", "vehicle search evidence", "payment terms",
+      "grain shipment contract", "?!")
+    def table(ts: Seq[String]) = ts.zipWithIndex
       .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val cols = Seq("query_id", "id", "rrf_score", "dense_score", "bm25_score")
-    val batched = HybridSearch.searchAll(index, stats, n, avgLen, queries, cfg)
-    val loop = queryTexts.zipWithIndex.map { case (q, i) =>
-      HybridSearch.search(index, stats, n, avgLen, q, cfg)
-        .select(lit(i.toLong).as("query_id"), col("id"),
-          col("rrf_score"), col("dense_score"), col("bm25_score"))
-    }.reduce(_ unionByName _)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(cols.map(col): _*).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-          Option(r.get(3)), Option(r.get(4)))).sortBy(t => (t._1, t._2))
-    assert(canon(batched).toSeq == canon(loop).toSeq)
-    // the batched plan is one job shape: bounded per-query heaps
-    // (TopKPerKey), no cartesian product, queries broadcast
-    val plan = batched.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"expected bounded heaps:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"query fan-out must broadcast, not cartesian:\n$plan")
+          Option(r.get(3)), Option(r.get(4)))).sortBy(t => (t._1, t._2)).toSeq
+    // the whole batch, and a batch of its first query alone
+    for (ts <- Seq(queryTexts, queryTexts.take(1))) {
+      val batched = HybridSearch.searchAll(index, stats, n, avgLen, table(ts), cfg)
+      val loop = ts.zipWithIndex.map { case (q, i) =>
+        HybridSearch.search(index, stats, n, avgLen, q, cfg)
+          .select(lit(i.toLong).as("query_id"), col("id"),
+            col("rrf_score"), col("dense_score"), col("bm25_score"))
+      }.reduce(_ unionByName _)
+      assert(canon(batched) == canon(loop), s"batch of ${ts.size}")
+    }
+    // the batched prefetch is one job shape: bounded per-query heaps
+    // (TopKPerKey), no cartesian product, queries broadcast — in the
+    // dense branch alone and in every plan searchAll executes
+    def assertHeaps(plan: String): Unit = {
+      assert(plan.contains("TopKPerKey"), s"expected bounded heaps:\n$plan")
+      assert(!plan.contains("CartesianProduct"),
+        s"query fan-out must broadcast, not cartesian:\n$plan")
+    }
+    val qv = table(queryTexts).withColumn("qv", GraftFunctions.embedText($"query"))
+    assertHeaps(HybridSearch.denseTopKAll(index, qv, 4)
+      .queryExecution.executedPlan.toString)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      HybridSearch.searchAll(index, stats, n, avgLen, table(queryTexts), cfg).collect()
+      org.apache.spark.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assertHeaps(plans.asScala.mkString("\n"))
+    // no per-query jobs: seven queries cost the Spark jobs of one (one
+    // more allowed for adaptive execution)
+    def jobs(ts: Seq[String]) = org.apache.spark.ListenerBus.countJobs(
+      spark.sparkContext)(HybridSearch.searchAll(index, stats, n, avgLen,
+        table(ts), cfg).collect())._2
+    val (one, all) = (jobs(queryTexts.take(1)), jobs(queryTexts))
+    assert(all <= one + 1, s"${queryTexts.size} queries ran $all jobs, one ran $one")
   }
 
   test("searchAllHnsw == per-query searchHnsw loop: the batched graph " +

@@ -1,9 +1,12 @@
 package graft.search
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.embed.HashingEmbedder
+import graft.functions.GraftFunctions.vecCosine
 
 class LateInteractionSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -60,26 +63,71 @@ class LateInteractionSpec extends AnyFunSuite with SparkTestBase {
       ("d3", Seq("patent", "semiconductor", "lithography")),
       ("d4", Seq("grain", "contract", "delivery")))
       .toDF("id", "tokens")
+    // query 3 repeats query 0's terms; query 4 has no non-empty term
     val qsets = Seq(0L -> Seq("court", "appeal"),
-      1L -> Seq("grain", "delivery"), 2L -> Seq("patent"))
+      1L -> Seq("grain", "delivery"), 2L -> Seq("patent"),
+      3L -> Seq("court", "appeal"), 4L -> Seq(""))
     // per-query candidate slices (different subsets per query)
     val cands = Seq(
       (0L, Seq("d1", "d2", "d3")),
       (1L, Seq("d2", "d4")),
-      (2L, Seq("d1", "d3", "d4")))
+      (2L, Seq("d1", "d3", "d4")),
+      (3L, Seq("d1", "d2", "d3")),
+      (4L, Seq("d1", "d2")))
       .toDF("query_id", "ids")
-      .select($"query_id", org.apache.spark.sql.functions.explode($"ids").as("id"))
+      .select($"query_id", explode($"ids").as("id"))
       .join(docs, Seq("id"))
-    val batched = LateInteraction.maxsimRerankAll(cands,
-        qsets.toDF("query_id", "terms"), emb, k = 2)
-      .select("query_id", "id", "maxsim_u6")
+    def rows(df: DataFrame) = df.select("query_id", "id", "maxsim_u6")
       .as[(Long, String, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val loop = qsets.flatMap { case (qid, terms) =>
-      val slice = cands.filter($"query_id" === qid).select("id", "tokens")
-      LateInteraction.maxsimRerank(slice, terms, emb, k = 2)
-        .as[(String, Long)].collect().map(r => (qid, r._1, r._2))
-    }.sortBy(r => (r._1, r._2))
-    assert(batched == loop, s"batched: $batched\nloop: $loop")
+    // the whole batch, and a batch of its first query alone
+    for (qs <- Seq(qsets, qsets.take(1))) {
+      val qdf = qs.toDF("query_id", "terms")
+      val slices = cands.join(qdf.select("query_id"), "query_id")
+      val batched = rows(LateInteraction.maxsimRerankAll(slices, qdf, emb, k = 2))
+      val loop = qs.filter(_._2.exists(_.nonEmpty)).flatMap { case (qid, terms) =>
+        val slice = cands.filter($"query_id" === qid).select("id", "tokens")
+        LateInteraction.maxsimRerank(slice, terms, emb, k = 2)
+          .as[(String, Long)].collect().map(r => (qid, r._1, r._2))
+      }.sortBy(r => (r._1, r._2))
+      assert(batched == loop, s"batched: $batched\nloop: $loop")
+      assert(batched == rows(sparkMaxsimAll(slices, qdf, k = 2)),
+        s"batched: $batched != the Spark reference")
+    }
+  }
+
+  /** [[LateInteraction.maxsimRerankAll]] as one Spark plan: candidate
+    * tokens explode once, the vocabulary embeds through a UDF, each doc
+    * token fans out to its own query's terms and meets the (doc token,
+    * query token) cosine table; max per query token, sum per doc,
+    * bounded per-query heaps. The reference the driver form must
+    * equal. */
+  private def sparkMaxsimAll(candidates: DataFrame, queries: DataFrame,
+      k: Int): DataFrame = {
+    val e = emb
+    val embUdf = udf((t: String) => e.embedBatch(Seq(t)).head)
+    val qToks = queries
+      .select(col("query_id"), explode(col("terms")).as("qtok"))
+      .filter(col("qtok") =!= "").distinct()
+    val qVocab = qToks.select("qtok").distinct()
+      .withColumn("qvec", embUdf(col("qtok")))
+    val docToks = candidates.select(col("query_id"), col("id"),
+        explode(array_distinct(col("tokens"))).as("dtok"))
+      .filter(col("dtok") =!= "")
+    val vocab = docToks.select("dtok").distinct()
+      .withColumn("dvec", embUdf(col("dtok")))
+    val pairCos = vocab.crossJoin(broadcast(qVocab))
+      .select(col("dtok"), col("qtok"),
+        round(vecCosine(col("dvec"), col("qvec")) * 1000000, 0)
+          .cast("long").as("cos_u6"))
+    val scored = docToks
+      .join(broadcast(qToks), Seq("query_id"))
+      .join(pairCos, Seq("dtok", "qtok"))
+      .groupBy(col("query_id"), col("id"), col("qtok"))
+      .agg(max("cos_u6").as("best_u6"))
+      .groupBy(col("query_id"), col("id"))
+      .agg(sum("best_u6").as("maxsim_u6"))
+    graft.plans.TopK.perKey(scored, Seq("query_id"),
+      Seq(("maxsim_u6", false), ("id", true)), k)
   }
 
   test("maxsimRerank: the vocabulary embeds once per DISTINCT token — " +
@@ -89,8 +137,7 @@ class LateInteractionSpec extends AnyFunSuite with SparkTestBase {
     // 50 docs × 3 tokens = 150 positions but only 52 distinct tokens;
     // count the embed UDF's input by reproducing the vocab frame
     val vocab = docs
-      .select(org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.col("tokens")).as("dtok"))
+      .select(explode(col("tokens")).as("dtok"))
       .distinct().count()
     assert(vocab == 52)
     val got = LateInteraction.maxsimRerank(docs, Seq("alpha"), emb, k = 5)

@@ -1,9 +1,6 @@
 package graft.serve
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -33,23 +30,8 @@ class JobBudgetSpec extends AnyFunSuite with SparkTestBase {
     ServeMain.buildEngine(spark, sfDir, storeRoot = root)
   }
 
-  /** `body`'s result and the Spark jobs it started: the listener bus
-    * is drained before the listener goes on and after `body` returns. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBus.drain(sc)
-      (out, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobs[T](body: => T): (T, Int) =
+    ListenerBus.countJobs(spark.sparkContext)(body)
 
   private def query(q: String) = Serve.query(engine.index, engine.docStats,
     engine.corpusSize, engine.avgDocLen, q, k = 3, postings = engine.postings,
@@ -102,6 +84,49 @@ class JobBudgetSpec extends AnyFunSuite with SparkTestBase {
     assert(resp.results.nonEmpty)
     info(s"$n jobs")
     assert(n <= 8, s"Serve.queryProximity ran $n jobs")
+  }
+
+  private val questions = Seq("the court reviewed the filing",
+    "appeal order", "contract claim evidence", "statute judge",
+    "motion held by the court", "court filing review", "order order",
+    "claim")
+
+  private def batch(qs: Seq[String]) = Serve.queryBatch(engine.index,
+    engine.docStats, engine.corpusSize, engine.avgDocLen, qs, k = 3,
+    postings = engine.postings, blockBounds = engine.blockBounds)
+
+  test("Serve.queryBatch of 1 and of 8 questions: at most 42 jobs " +
+      "each, and 8 questions cost at most one job more than 1") {
+    batch(questions.take(2))  // first call plans, untimed
+    val (one, n1) = jobs(batch(questions.take(1)))
+    val (eight, n8) = jobs(batch(questions))
+    assert(one.head.results.nonEmpty && eight.forall(_.results.nonEmpty))
+    info(s"1 question: $n1 jobs, 8 questions: $n8 jobs")
+    assert(n1 <= 42, s"Serve.queryBatch of 1 ran $n1 jobs")
+    assert(n8 <= 42, s"Serve.queryBatch of 8 ran $n8 jobs")
+    assert(n8 <= n1 + 1, s"8 questions ran $n8 jobs, 1 ran $n1")
+  }
+
+  test("Serve.queryBatchReranked of 8 questions: at most 42 jobs") {
+    def reranked(qs: Seq[String]) = Serve.queryBatchReranked(engine.index,
+      engine.docStats, engine.corpusSize, engine.avgDocLen, qs,
+      k = 3, postings = engine.postings, blockBounds = engine.blockBounds)
+    reranked(questions.take(2))  // first call plans, untimed
+    val (resps, n) = jobs(reranked(questions))
+    assert(resps.forall(_.results.nonEmpty))
+    info(s"$n jobs")
+    assert(n <= 42, s"Serve.queryBatchReranked ran $n jobs")
+  }
+
+  test("Serve.queryPhraseBatch (positional store) of 8 phrases: at most " +
+      "12 jobs") {
+    def phrases(ps: Seq[String]) = Serve.queryPhraseBatch(engine.index, ps,
+      k = 3, store = engine.posStore)
+    phrases(questions.take(2))  // first call plans, untimed
+    val (resps, n) = jobs(phrases(questions))
+    assert(resps.exists(_.results.nonEmpty))
+    info(s"$n jobs")
+    assert(n <= 12, s"Serve.queryPhraseBatch ran $n jobs")
   }
 
   test("maxScorePrune is two driver reads: at most 2 jobs") {

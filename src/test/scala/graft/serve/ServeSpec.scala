@@ -41,6 +41,23 @@ class ServeSpec extends AnyFunSuite with SparkTestBase {
     assert(r.dateFiled == "2020-01-01" && r.judges == "Stone")
   }
 
+  test("maxsim rerank, single and batch alike: a question with tokens " +
+      "whose candidates carry no token returns no hits; a tokenless " +
+      "question keeps its hybrid top-k") {
+    // every candidate's tokens are empty strings: MaxSim scores none
+    val blank = index.withColumn("tokens", array(lit("")))
+    def single(q: String) = Serve.queryReranked(blank, stats, 3, avgLen, q, k = 2)
+      .results.map(r => (r.id, r.score))
+    val qs = Seq("habeas corpus", "?!")
+    val batch = Serve.queryBatchReranked(blank, stats, 3, avgLen, qs, k = 2)
+      .map(_.results.map(r => (r.id, r.score)))
+    assert(batch == qs.map(single))
+    assert(batch.head.isEmpty, s"no candidate has a token: ${batch.head}")
+    assert(batch(1).map(_._1) == Serve.query(blank, stats, 3, avgLen, "?!", k = 2)
+      .results.map(_.id))
+    assert(batch(1).nonEmpty)
+  }
+
   test("F15 context block: numbered documents in rank order") {
     val hits = index.limit(2)
       .withColumn("rrf_score", when($"id" === "d1", 0.03).otherwise(0.01))
